@@ -292,12 +292,6 @@ def main():
     if not args.skip_battery:
         from shapely_spark.queries import QUERIES
 
-        def timed(name, fn):
-            t0 = time.time()
-            out = fn()
-            times[name] = round(time.time() - t0, 3)
-            return out
-
         # steady-state methodology (see BENCH/BASELINE.md): warm each plan
         # shape once at sf0.01 — sf0.001 proved too small to push the big
         # generated methods through C2 tiered compilation (minhash's
@@ -316,26 +310,24 @@ def main():
                 except Exception:
                     pass
 
-        for name, fn in QUERIES.items():
-            try:
-                timed(name, lambda fn=fn: fn(spark, args.sf_dir).count())
-            except Exception as ex:  # keep the bench alive
-                times[name] = -1.0
-                extras[f"{name}_error"] = str(ex)[:100]
-        # second pass over the slowest entries, keep the min: the biggest
-        # generated methods sometimes finish C2 compilation only DURING
-        # their first at-scale run (minhash measured 22-37 s first pass vs
-        # 7-8 s steady-state even after the sf0.01 warmup), and a single
-        # sample is also where host-steal spikes land
-        slowest = sorted((n for n in QUERIES if times.get(n, -1) > 0),
-                         key=lambda n: -times[n])[:5]
-        for name in slowest:
-            t0 = time.time()
-            try:
-                QUERIES[name](spark, args.sf_dir).count()
-                times[name] = min(times[name], round(time.time() - t0, 3))
-            except Exception:
-                pass
+        # two interleaved passes over the whole battery, min per query:
+        # the biggest generated methods sometimes finish C2 compilation
+        # only DURING their first at-scale run (minhash measured 22-37 s
+        # first pass vs 7-8 s steady-state even after the sf0.01 warmup),
+        # and a single sample is also where host-steal spikes land
+        for _ in range(2):
+            for name, fn in QUERIES.items():
+                if times.get(name) == -1.0:
+                    continue
+                t0 = time.time()
+                try:
+                    fn(spark, args.sf_dir).count()
+                except Exception as ex:  # keep the bench alive
+                    times[name] = -1.0
+                    extras[f"{name}_error"] = str(ex)[:100]
+                    continue
+                dt = round(time.time() - t0, 3)
+                times[name] = min(times.get(name, dt), dt)
 
     total = round(sum(v for v in times.values() if v > 0), 3)
     payload = {
@@ -345,6 +337,12 @@ def main():
         "queries": times,
         "sf": sf,
         "cpus": args.cpus,
+        "host": {
+            "nproc": len(os.sched_getaffinity(0)),
+            "mem_total_gb": round(os.sysconf("SC_PAGE_SIZE")
+                                  * os.sysconf("SC_PHYS_PAGES") / 2**30, 1),
+            "date": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        },
         "extras": extras,
     }
     # The driver records only the LAST 2000 chars of stdout — a 90-query

@@ -30,10 +30,12 @@ test (tests/test_group_predicates.py). The decomposition:
   supported paths (per-left work remains only for hole probes of holed
   lefts and the rare island-in-hole exact check).
 
-Supported batch shape: areal right (Polygon/MultiPolygon); lefts of any
-point/line/polygon type. GeometryCollection lefts and non-areal rights
-fall back to the scalar kernel (``group_predicate`` returns None for the
-latter so the caller can dispatch).
+Batched shape: areal right (Polygon/MultiPolygon); lefts of any
+point/line/polygon type. Every other shape is still answered here, by
+the exact scalar kernel per left: GeometryCollection lefts, and rights
+that are non-areal or have no edges (``intersects`` is batched for every
+right via kernels.group_intersects). This module is the only place that
+decides how a left batch is evaluated against one right geometry.
 
 Invalid-input note: predicates on INVALID geometry are undefined in the
 reference (GEOS requires valid input). For a zero-area polygon part the
@@ -311,24 +313,26 @@ def _contains_family_batched(predicate, lgeoms, ids, rgeom, eb) -> np.ndarray:
     return res
 
 
-def group_predicate(predicate: str, lgeoms: list, rgeom) -> np.ndarray | None:
-    """Evaluate ``predicate(lgeoms[i], rgeom)`` for a whole left batch.
-    Returns a bool array, or None when the batch shape is unsupported
-    (non-areal right, degenerate right, unknown predicate) — the caller
-    falls back to the scalar kernel per pair."""
-    n = len(lgeoms)
+def group_predicate(predicate: str, lgeoms: list, rgeom) -> np.ndarray:
+    """Evaluate ``predicate(lgeoms[i], rgeom)`` for a whole left batch;
+    None lefts are False. Batch shapes without a batched path (non-areal
+    or edgeless right) run the exact scalar kernel per left. Raises
+    ValueError for a predicate outside the supported set."""
+    if predicate not in _SUPPORTED:
+        raise ValueError(
+            f"predicate {predicate!r} is not supported by group_predicate; "
+            f"valid: {sorted(_SUPPORTED)}")
     if predicate == "intersects":
         return group_intersects(lgeoms, rgeom)
-    if predicate not in _SUPPORTED:
-        return None
+    n = len(lgeoms)
     out = np.zeros(n, dtype=bool)
     if rgeom is None or rgeom.is_empty or n == 0:
         return out
-    if rgeom.type_id not in (POLYGON, MULTIPOLYGON):
-        return None
-    eb = _edges(rgeom)
-    if not len(eb):
-        return None
+    eb = _edges(rgeom) if rgeom.type_id in (POLYGON, MULTIPOLYGON) else []
+    if not len(eb):  # no batched path: exact scalar kernel per left
+        fn = getattr(K, predicate)
+        return np.fromiter((g is not None and bool(fn(g, rgeom)) for g in lgeoms),
+                           dtype=bool, count=n)
     rb = bounds(rgeom)
 
     dims = np.full(n, -2, dtype=np.int64)
@@ -441,34 +445,31 @@ def group_predicate(predicate: str, lgeoms: list, rgeom) -> np.ndarray | None:
             out[ids] = inter & ~ii
         return out
 
-    if predicate == "overlaps":
-        # kernels.overlaps:971 — same-dim only; R areal ⇒ dim-2 lefts
-        if len(i2):
-            ii = _areal_ii(lgeoms, i2, rgeom, eb)
-            und = np.flatnonzero(ii)
-            if len(und):
-                # ¬covers(R,L): direction 1, batched over the candidates
-                sub = i2[und]
-                vext, _vi, _vb = _vertex_facts(lgeoms, sub, rgeom)
-                ef = _edge_facts(lgeoms, sub, rgeom, eb)
-                crl = ~vext & ~ef.any_fext  # covers(R, L) so far
-                holes_r = _hole_rings(rgeom)
-                for k in np.flatnonzero(crl):
-                    if holes_r and not _holes_clear_of(rgeom, lgeoms[sub[k]]):
-                        crl[k] = False
-                res = ~crl
-                # ¬covers(L,R): bbox gate, then the batched family check
-                cand = np.flatnonzero(
-                    res & (LB[sub, 0] <= rb[0]) & (LB[sub, 1] <= rb[1])
-                    & (LB[sub, 2] >= rb[2]) & (LB[sub, 3] >= rb[3]))
-                if len(cand):
-                    clr = _contains_family_batched(
-                        "covers", lgeoms, sub[cand], rgeom, eb)
-                    res[cand[clr]] = False
-                out[sub] = res
-        return out
-
-    return None
+    # overlaps (kernels.overlaps:971) — same-dim only; R areal ⇒ dim-2 lefts
+    if len(i2):
+        ii = _areal_ii(lgeoms, i2, rgeom, eb)
+        und = np.flatnonzero(ii)
+        if len(und):
+            # ¬covers(R,L): direction 1, batched over the candidates
+            sub = i2[und]
+            vext, _vi, _vb = _vertex_facts(lgeoms, sub, rgeom)
+            ef = _edge_facts(lgeoms, sub, rgeom, eb)
+            crl = ~vext & ~ef.any_fext  # covers(R, L) so far
+            holes_r = _hole_rings(rgeom)
+            for k in np.flatnonzero(crl):
+                if holes_r and not _holes_clear_of(rgeom, lgeoms[sub[k]]):
+                    crl[k] = False
+            res = ~crl
+            # ¬covers(L,R): bbox gate, then the batched family check
+            cand = np.flatnonzero(
+                res & (LB[sub, 0] <= rb[0]) & (LB[sub, 1] <= rb[1])
+                & (LB[sub, 2] >= rb[2]) & (LB[sub, 3] >= rb[3]))
+            if len(cand):
+                clr = _contains_family_batched(
+                    "covers", lgeoms, sub[cand], rgeom, eb)
+                res[cand[clr]] = False
+            out[sub] = res
+    return out
 
 
 def _areal_ii(lgeoms, ids, rgeom, eb) -> np.ndarray:

@@ -4,9 +4,9 @@ reference: shapely/vectorized/__init__.py — ``contains(geometry, x, y)``
 and ``touches(geometry, x, y)`` evaluate one geometry against arrays of
 point coordinates, emitting the reference's DeprecationWarning that
 points at the 2.0 ``contains_xy``/``intersects_xy`` replacements. The
-polygonal path rides the same PreparedPolygons classifier the engine's
-spatial join uses (kernels.py): one ring extraction per call, one
-vectorized crossing-parity pass per batch. Non-polygonal geometries
+polygonal path rides the PreparedPolygons classifier (kernels.py; the
+same crossing-parity test as the spatial join's RaggedPolygonLayer): one
+ring extraction per call, one vectorized crossing-parity pass per batch. Non-polygonal geometries
 (points/lines) fall back to the scalar DE-9IM kernels per point — the
 reference delegates those to per-point GEOS prepared ops too.
 """

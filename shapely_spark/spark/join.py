@@ -12,18 +12,21 @@ The Spark plan (SURVEY.md §3.3):
                                                                  broadcast or shuffle]
   full cells ──▶ emit directly (cell entirely inside the polygon —
                  the broadcast-side analog of prepared-containment)
-  partial cells ──▶ pandas-UDF refine: exact point-in-polygon kernel;
-                    region geometries ride an sc.broadcast dict and are
-                    parsed + prepared ONCE per executor (the Spark analog of
-                    GEOS prepared geometries, shapely/creation.py:735) —
-                    the join itself moves only (region_id, cell_id, full)
-                    ints, never geometry bytes.
+  partial cells ──▶ ONE pandas-UDF refine: one vectorized point-in-polygon
+                    ray-cast per Arrow batch (RaggedPolygonLayer.classify_many);
+                    the region layer is built ONCE driver-side and rides one
+                    sc.broadcast (the Spark analog of GEOS prepared
+                    geometries, shapely/creation.py:735) — the join itself
+                    moves only (region_id, cell_id, full) ints, never
+                    geometry bytes.
 
 At scale: the covers table is tiny relative to pages (|regions| × avg-cover),
 so Catalyst picks a broadcast hash join — the pages side is never shuffled.
 For region layers too big to broadcast, pass broadcast=False: the covers
 table (with WKB inlined for partial cells) shuffles both sides on cell_id
-with AQE skew splitting; the refine caches prepared polygons by WKB bytes.
+with AQE skew splitting; the refine builds the same RaggedPolygonLayer per
+Arrow batch from the batch's distinct partial-cell WKBs (parsed once per
+executor through _geom_from_wkb_cached).
 """
 
 from __future__ import annotations
@@ -91,24 +94,21 @@ def covers_df(regions: DataFrame, res: int = DEFAULT_RES, with_wkb: bool = False
     return regions.select("region_id", "wkb").mapInPandas(gen, schema)
 
 
-# executor-local prepared-polygon cache (reference: prepared geometries,
-# shapely/creation.py:735 — build once, reuse across batches/tasks). Used by
-# the shuffle-join path, whose covers rows inline WKB; the broadcast path
-# ships a prebuilt RaggedPolygonLayer instead and needs no executor cache.
-_PREP_BY_WKB: dict[bytes, object] = {}
+_GEOM_BY_WKB: dict[bytes, object] = {}
 
 
-def _prepared_from_wkb(wkb: bytes):
-    prep = _PREP_BY_WKB.get(wkb)
-    if prep is None:
-        from ..geo.kernels import PreparedPolygons
+def _geom_from_wkb_cached(wkb: bytes):
+    """Executor-local parsed-geometry cache: a geometry that appears in
+    many candidate pairs (or across batches/tasks) is decoded once."""
+    g = _GEOM_BY_WKB.get(wkb)
+    if g is None:
         from ..geo.wkb import from_wkb
 
-        if len(_PREP_BY_WKB) > 4096:
-            _PREP_BY_WKB.clear()
-        prep = PreparedPolygons([from_wkb(wkb)])
-        _PREP_BY_WKB[wkb] = prep
-    return prep
+        if len(_GEOM_BY_WKB) > 65536:
+            _GEOM_BY_WKB.clear()
+        g = from_wkb(wkb, on_invalid="ignore")
+        _GEOM_BY_WKB[wkb] = g
+    return g
 
 
 def _group_ranges(codes: np.ndarray):
@@ -158,80 +158,63 @@ def spatial_join(
     if drop_cell:
         points = points.withColumn(cell_col_name, cell_col(F.col(lat_c), F.col(lon_c), res))
 
+    from ..geo.kernels import RaggedPolygonLayer
+
     if broadcast:
         # the whole region layer rides ONE torrent broadcast as a prebuilt
         # ragged edge structure (flat arrays + per-region offsets), built
         # driver-side from the rows we must collect anyway: workers pay zero
         # per-region construction, and the refine is one vectorized ray-cast
         # over every (candidate, edge) pair — no per-region Python dispatch.
-        # (The old per-(bc,rid) prepared cache cost ~20 µs of dispatch per
-        # distinct region per Arrow batch: fine at 1k regions where groups
-        # are large, 100× the kernel cost at a 100k-region layer where each
-        # batch holds ~1 candidate per region.)
-        from ..geo.kernels import RaggedPolygonLayer
-        from ..geo.wkb import from_wkb as _from_wkb
+        from ..geo.wkb import from_wkb
 
         geo_rows = regions.select("region_id", "wkb").collect()
-        layer = RaggedPolygonLayer({
-            int(r.region_id): _from_wkb(bytes(r.wkb))
+        bc = points.sparkSession.sparkContext.broadcast(RaggedPolygonLayer({
+            int(r.region_id): from_wkb(bytes(r.wkb))
             for r in geo_rows if r.wkb is not None and r.region_id >= 0
-        })
-        bc = points.sparkSession.sparkContext.broadcast(layer)
-        covers = F.broadcast(
-            covers_df(regions, res).select(
-                F.col("region_id"),
-                F.col("cell_id").alias("__cover_cell"),
-                F.col("full").alias("__full"),
-            )
-        )
+        }))
+        covers = F.broadcast(covers_df(regions, res).select(
+            "region_id", F.col("cell_id").alias("__cover_cell"),
+            F.col("full").alias("__full")))
+        key_col = "region_id"
 
-        @F.pandas_udf("boolean")
-        def refine(rid: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-            # full-cell rows arrive with rid NULL-masked JVM-side (see the
-            # single-plan filter below): first move is one vectorized null
-            # mask, so bypass rows cost no kernel work and no dispatch.
-            mask = rid.notna().to_numpy()
-            out = np.zeros(len(rid), dtype=bool)
-            if mask.any():
-                cls = bc.value.classify_many(
-                    rid[mask].to_numpy(dtype=np.int64),
-                    lon[mask].to_numpy(dtype=np.float64),
-                    lat[mask].to_numpy(dtype=np.float64),
-                )
-                out[mask] = _classify_to_bool(cls, predicate)
-            return pd.Series(out)
-
-        j = points.join(covers, points[cell_col_name] == covers["__cover_cell"], "inner")
-        refine_call = refine(
-            F.when(~F.col("__full"), F.col("region_id")), F.col(lon_c), F.col(lat_c))
+        def layer_of(keys: pd.Series):
+            return bc.value, keys.to_numpy(dtype=np.int64)
     else:
+        # no driver collect: partial cells carry their region WKB through
+        # the shuffle, and each Arrow batch builds a layer over its own
+        # distinct WKBs (each parsed once per executor)
         covers = covers_df(regions, res, with_wkb=True).select(
-            F.col("region_id"),
-            F.col("cell_id").alias("__cover_cell"),
-            F.col("full").alias("__full"),
-            F.col("wkb").alias("__wkb"),
-        )
+            "region_id", F.col("cell_id").alias("__cover_cell"),
+            F.col("full").alias("__full"), F.col("wkb").alias("__wkb"))
+        key_col = "__wkb"
 
-        @F.pandas_udf("boolean")
-        def refine_wkb(wkb: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-            x = lon.to_numpy(dtype=np.float64)
-            y = lat.to_numpy(dtype=np.float64)
-            out = np.zeros(len(wkb), dtype=bool)
-            codes, uniques = pd.factorize(wkb)
-            for u_idx, idx in _group_ranges(codes):
-                if u_idx < 0:  # factorize maps None/NaN to code -1
-                    continue
-                u_wkb = uniques[u_idx]
-                if u_wkb is None:
-                    continue
-                prep = _prepared_from_wkb(bytes(u_wkb))
-                out[idx] = _classify_to_bool(prep.classify(0, x[idx], y[idx]), predicate)
-            return pd.Series(out)
+        def layer_of(keys: pd.Series):
+            codes, uniq = pd.factorize(keys)
+            return RaggedPolygonLayer({
+                i: _geom_from_wkb_cached(bytes(w)) for i, w in enumerate(uniq)
+            }), codes
 
-        j = points.join(covers, points[cell_col_name] == covers["__cover_cell"], "inner")
-        # covers_df inlines wkb=None on full cells, so __wkb is already the
-        # NULL-mask: refine_wkb's factorize maps it to code -1 → False.
-        refine_call = refine_wkb(F.col("__wkb"), F.col(lon_c), F.col(lat_c))
+    @F.pandas_udf("boolean")
+    def refine(key: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
+        # full-cell rows arrive with key NULL-masked JVM-side (see the
+        # single-plan filter below): first move is one vectorized null
+        # mask, so bypass rows cost no kernel work and no dispatch.
+        mask = key.notna().to_numpy()
+        out = np.zeros(len(key), dtype=bool)
+        if mask.any():
+            layer, rids = layer_of(key[mask])
+            cls = layer.classify_many(
+                rids,
+                lon[mask].to_numpy(dtype=np.float64),
+                lat[mask].to_numpy(dtype=np.float64),
+            )
+            out[mask] = _classify_to_bool(cls, predicate)
+        return pd.Series(out)
+
+    j = points.join(covers, points[cell_col_name] == covers["__cover_cell"], "inner")
+    refine_call = refine(
+        F.when(~F.col("__full"), F.col(key_col)), F.col(lon_c), F.col(lat_c))
 
     # ONE plan, ONE pages scan. An earlier two-branch full/partial Union
     # re-ran the pages scan + geotag extraction once PER BRANCH (the
@@ -259,183 +242,38 @@ def spatial_join(
     return j.where(cond).select(*out_cols)
 
 
-_GEOM_BY_WKB: dict[bytes, object] = {}
-
-
-def _geom_from_wkb_cached(wkb: bytes):
-    """Executor-local parsed-geometry cache: a geometry that appears in
-    many candidate pairs (or across batches/tasks) is decoded once."""
-    g = _GEOM_BY_WKB.get(wkb)
-    if g is None:
-        from ..geo.wkb import from_wkb
-
-        if len(_GEOM_BY_WKB) > 65536:
-            _GEOM_BY_WKB.clear()
-        g = from_wkb(wkb, on_invalid="ignore")
-        _GEOM_BY_WKB[wkb] = g
-    return g
-
-
-# rect×rect predicates evaluable in closed form (exact — rectangle DE-9IM
-# reduces to interval arithmetic; covers collinear-edge and corner touches
-# that vertex/crossing heuristics miss). A/B are (n,4) [x0,y0,x1,y1] arrays.
-def _rect_pair_eval(predicate: str, A: np.ndarray, B: np.ndarray) -> np.ndarray | None:
-    closed = (
-        (A[:, 0] <= B[:, 2]) & (B[:, 0] <= A[:, 2])
-        & (A[:, 1] <= B[:, 3]) & (B[:, 1] <= A[:, 3])
-    )
-    interiors = (
-        (A[:, 0] < B[:, 2]) & (B[:, 0] < A[:, 2])
-        & (A[:, 1] < B[:, 3]) & (B[:, 1] < A[:, 3])
-    )
-    a_in_b = (
-        (A[:, 0] >= B[:, 0]) & (A[:, 2] <= B[:, 2])
-        & (A[:, 1] >= B[:, 1]) & (A[:, 3] <= B[:, 3])
-    )
-    b_in_a = (
-        (B[:, 0] >= A[:, 0]) & (B[:, 2] <= A[:, 2])
-        & (B[:, 1] >= A[:, 1]) & (B[:, 3] <= A[:, 3])
-    )
-    if predicate == "intersects":
-        return closed
-    if predicate == "disjoint":
-        return ~closed
-    if predicate in ("within", "covered_by"):
-        return a_in_b  # positive-extent rects: containment ⇒ interior overlap
-    if predicate in ("contains", "covers"):
-        return b_in_a
-    if predicate == "contains_properly":
-        return (
-            (B[:, 0] > A[:, 0]) & (B[:, 2] < A[:, 2])
-            & (B[:, 1] > A[:, 1]) & (B[:, 3] < A[:, 3])
-        )
-    if predicate == "touches":
-        return closed & ~interiors
-    if predicate == "equals":
-        return (A == B).all(axis=1)
-    if predicate == "overlaps":
-        return interiors & ~a_in_b & ~b_in_a
-    return None
-
-
 def _pair_refine_batch(
     predicate: str, lwkb: pd.Series, rcodes: np.ndarray, runiq_geoms: list
 ) -> np.ndarray:
     """Batch refine for candidate (left_geom, right_geom) pairs. Both sides
-    factorized; each unique geometry is parsed ONCE per batch (and cached
-    per executor across batches). Stages, in decreasing vectorization:
-
-    1. one-shot NumPy bbox mask over the whole batch (bbox-disjoint ⇒ every
-       supported predicate is False — no per-pair Python);
-    2. point-left × polygon-right: prepared point-in-polygon classify per
-       right group (one vectorized call per right geometry);
-    3. rect×rect pairs: closed-form interval arithmetic for the whole
-       sub-batch at once (exact, incl. collinear-edge/corner touches);
-    4. remainder: exact scalar kernel per pair, iterated grouped by right
-       code so each right geometry's derived state stays cache-hot.
+    are factorized and each unique geometry is parsed ONCE per batch (and
+    cached per executor across batches); then ONE group_predicate call per
+    right geometry decides its whole left group (geo/group_predicates.py
+    owns every evaluation choice, scalar fallbacks included). Rows with a
+    NULL side (code -1: rect×rect pairs the JVM already decided) are False.
+    No bbox mask here: the JVM bbox-overlap filter ran before the UDF and
+    group_predicate gates on bboxes itself.
 
     runiq_geoms: parsed Geometry (or None) per unique right code;
     rcodes: per-row right code (-1 = null)."""
-    from ..geo import kernels as K
-    from ..geo.geom import MULTIPOLYGON, POINT, POLYGON
-
-    fn = getattr(K, predicate)
-    n = len(lwkb)
-    out = np.zeros(n, dtype=bool)
-    lcodes, luniq = pd.factorize(lwkb)
-    lgeoms = [None if w is None else _geom_from_wkb_cached(bytes(w)) for w in luniq]
-
-    def _bounds_arr(geoms) -> np.ndarray:
-        arr = np.full((max(len(geoms), 1), 4), np.nan)
-        for i, g in enumerate(geoms):
-            if g is not None and not g.is_empty:
-                arr[i] = K.bounds(g)
-        return arr
-
-    LB, RB = _bounds_arr(lgeoms), _bounds_arr(runiq_geoms)
-    lc = np.asarray(lcodes, dtype=np.int64)
-    rc = np.asarray(rcodes, dtype=np.int64)
-    valid = (lc >= 0) & (rc >= 0)
-    lci, rci = np.where(valid, lc, 0), np.where(valid, rc, 0)
-    lb, rb = LB[lci], RB[rci]
-    alive = (
-        valid
-        & ~np.isnan(lb[:, 0]) & ~np.isnan(rb[:, 0])
-        & ~((lb[:, 0] > rb[:, 2]) | (lb[:, 2] < rb[:, 0])
-            | (lb[:, 1] > rb[:, 3]) | (lb[:, 3] < rb[:, 1]))
-    )
-    if not alive.any():
-        return out
-
-    all_points = bool(len(lgeoms)) and all(
-        g is not None and g.type_id == POINT and not g.is_empty for g in lgeoms
-    )
-    all_rpoly = all(
-        g is None or g.type_id in (POLYGON, MULTIPOLYGON) for g in runiq_geoms
-    )
-    if all_points and all_rpoly and predicate in _PREDICATES:
-        px = np.array([g.coords[0][0] for g in lgeoms])[lc]
-        py = np.array([g.coords[0][1] for g in lgeoms])[lc]
-        alive_idx = np.flatnonzero(alive)
-        for u, gi in _group_ranges(rc[alive_idx]):
-            if runiq_geoms[u] is None:
-                continue
-            sel = alive_idx[gi]
-            prep = K.PreparedPolygons([runiq_geoms[u]])
-            out[sel] = _classify_to_bool(prep.classify(0, px[sel], py[sel]), predicate)
-        return out
-
-    # rect×rect sub-batch, closed form
-    lrect = np.full((len(lgeoms), 4), np.nan)
-    for i, g in enumerate(lgeoms):
-        r = K._axis_rect(g) if g is not None and g.type_id == POLYGON else None
-        if r is not None:
-            lrect[i] = r
-    rrect = np.full((max(len(runiq_geoms), 1), 4), np.nan)
-    for i, g in enumerate(runiq_geoms):
-        r = K._axis_rect(g) if g is not None and g.type_id == POLYGON else None
-        if r is not None:
-            rrect[i] = r
-    A, B = lrect[lci], rrect[rci]
-    rect_rows = alive & ~np.isnan(A[:, 0]) & ~np.isnan(B[:, 0])
-    remainder = alive & ~rect_rows
-    if rect_rows.any():
-        res = _rect_pair_eval(predicate, A[rect_rows], B[rect_rows])
-        if res is not None:
-            out[rect_rows] = res
-        else:
-            remainder = alive  # predicate has no closed form; scalar everything
-
-    # group-vectorized kernel for the rest, grouped by right code — ONE
-    # stacked NumPy cascade per right geometry for every supported
-    # predicate (geo/group_predicates.py, r5; intersects was the first,
-    # kernels.group_intersects r4). Per-pair scalar dispatch remains only
-    # for batch shapes the group kernel declines (non-areal right,
-    # GeometryCollection lefts handled inside it).
     from ..geo.group_predicates import group_predicate
 
-    idx = np.nonzero(remainder)[0]
-    if len(idx):
-        for u, gi in _group_ranges(rc[idx]):
-            rg = runiq_geoms[u]
-            if rg is None:
-                continue
-            sel = idx[gi]
-            batch = [lgeoms[lc[i]] for i in sel]
-            res = group_predicate(predicate, batch, rg)
-            if res is None:
-                res = np.fromiter(
-                    (g is not None and bool(fn(g, rg)) for g in batch),
-                    dtype=bool, count=len(batch))
-            out[sel] = res
+    out = np.zeros(len(lwkb), dtype=bool)
+    lcodes, luniq = pd.factorize(lwkb)
+    lgeoms = [_geom_from_wkb_cached(bytes(w)) for w in luniq]
+    idx = np.flatnonzero((lcodes >= 0) & (rcodes >= 0))
+    for u, gi in _group_ranges(rcodes[idx]):
+        sel = idx[gi]
+        out[sel] = group_predicate(
+            predicate, [lgeoms[i] for i in lcodes[sel]], runiq_geoms[u])
     return out
 
 
 def _rect_pred_col(predicate: str):
     """Closed-form rect×rect predicate as a pure Catalyst expression over
-    the two bbox column sets — the JVM twin of _rect_pair_eval (an
-    axis-aligned rectangle IS its bbox). Returns None when the predicate
-    has no closed form (those rows route to the Python refine)."""
+    the two bbox column sets (an axis-aligned rectangle IS its bbox; exact
+    — rectangle DE-9IM reduces to interval arithmetic, incl. collinear-edge
+    and corner touches)."""
     lx, ly, lx2, ly2 = (F.col(c) for c in ("__lx", "__ly", "__lx2", "__ly2"))
     rx, ry, rx2, ry2 = (F.col(c) for c in ("__rx", "__ry", "__rx2", "__ry2"))
     closed = (lx <= rx2) & (rx <= lx2) & (ly <= ry2) & (ry <= ly2)
@@ -456,7 +294,8 @@ def _rect_pred_col(predicate: str):
         return (lx == rx) & (ly == ry) & (lx2 == rx2) & (ly2 == ry2)
     if predicate == "overlaps":
         return interiors & ~a_in_b & ~b_in_a
-    return None  # e.g. crosses (always False rect×rect but dim-dependent)
+    # crosses: False for every areal×areal pair (kernels.crosses)
+    return F.lit(False)
 
 
 # predicates spatial_join_geom supports: every one implies the pair shares
@@ -490,8 +329,12 @@ def spatial_join_geom(
     on cell. A pair that shares k cells would appear k times, so each
     candidate is emitted only in ONE deterministic cell — the cell of the
     lower-left corner of the bbox intersection (computable from the two
-    bbox columns JVM-side, no dedup shuffle). Refine runs the exact
-    DE-9IM kernel per pair with the right-side geometries broadcast.
+    bbox columns JVM-side, no dedup shuffle). Refine: rect×rect pairs are
+    decided JVM-side in closed form (_rect_pred_col); every other candidate
+    goes through ONE pandas UDF that makes one group_predicate call per
+    right geometry per Arrow batch. The right geometry comes from a
+    broadcast dict (broadcast=True) or rides the shuffle as inline WKB
+    (broadcast=False).
     """
     from ..index.cells import cover_bbox_batch, grid_n
 
@@ -562,16 +405,24 @@ def spatial_join_geom(
         F.col("bxmax").alias("__rx2"), F.col("bymax").alias("__ry2"),
         F.col("is_rect").alias("__rrect"),
     ]
-    if not broadcast:
-        rcols.append(F.col("wkb").alias("__rwkb"))
-    rcov = rcov.select(*rcols)
     if broadcast:
-        rcov = F.broadcast(rcov)
         # geometry dict rides a torrent broadcast; the join moves only ints
         geo_rows = right.select(right_id, "wkb").collect()
         bc = left.sparkSession.sparkContext.broadcast(
             {int(r[0]): bytes(r[1]) for r in geo_rows if r[1] is not None}
         )
+        rcov = F.broadcast(rcov.select(*rcols))
+        rkey = F.col(right_id)
+
+        def right_geom(rid):
+            w = bc.value.get(int(rid))
+            return None if w is None else _geom_from_wkb_cached(w)
+    else:
+        rcov = rcov.select(*rcols, F.col("wkb").alias("__rwkb"))
+        rkey = F.col("__rwkb")
+
+        def right_geom(w):
+            return _geom_from_wkb_cached(bytes(w))
 
     j = lcov.join(rcov, F.col("__lc") == F.col("__rc"), "inner")
     # emit each candidate pair exactly once: in the cell holding the
@@ -589,29 +440,11 @@ def spatial_join_geom(
         & (F.col("__ly") <= F.col("__ry2")) & (F.col("__ry") <= F.col("__ly2"))
     )
 
-    if broadcast:
-
-        @F.pandas_udf("boolean")
-        def refine(rid: pd.Series, lwkb: pd.Series) -> pd.Series:
-            rcodes, runiq = pd.factorize(rid)
-            runiq_geoms = []
-            for u in runiq:
-                w = bc.value.get(int(u))
-                runiq_geoms.append(None if w is None else _geom_from_wkb_cached(w))
-            return pd.Series(_pair_refine_batch(predicate, lwkb, rcodes, runiq_geoms))
-
-        refine_call = refine(F.col(right_id), F.col("__lwkb"))
-    else:
-
-        @F.pandas_udf("boolean")
-        def refine_wkb(rwkb: pd.Series, lwkb: pd.Series) -> pd.Series:
-            rcodes, runiq = pd.factorize(rwkb)
-            runiq_geoms = [
-                None if w is None else _geom_from_wkb_cached(bytes(w)) for w in runiq
-            ]
-            return pd.Series(_pair_refine_batch(predicate, lwkb, rcodes, runiq_geoms))
-
-        refine_call = refine_wkb(F.col("__rwkb"), F.col("__lwkb"))
+    @F.pandas_udf("boolean")
+    def refine(right_key: pd.Series, lwkb: pd.Series) -> pd.Series:
+        rcodes, runiq = pd.factorize(right_key)
+        return pd.Series(_pair_refine_batch(
+            predicate, lwkb, rcodes, [right_geom(u) for u in runiq]))
 
     # rect×rect rows are decided by pure-JVM interval arithmetic and ship
     # NULL into the refine UDF (no geometry bytes over Arrow, no kernel
@@ -620,18 +453,8 @@ def spatial_join_geom(
     # the whole cover fan-out per branch, which at 100 TB doubles the
     # dominant cost (measured 6.6 s → 3.7 s on the all-non-rect n-gon
     # battery query, and strictly less work for mixed layers).
-    rect_expr = _rect_pred_col(predicate)
-    if rect_expr is not None:
-        both_rect = F.col("__lrect") & F.col("__rrect")
-        if broadcast:
-            py_call = refine(
-                F.when(~both_rect, F.col(right_id)),
-                F.when(~both_rect, F.col("__lwkb")))
-        else:
-            py_call = refine_wkb(
-                F.when(~both_rect, F.col("__rwkb")),
-                F.when(~both_rect, F.col("__lwkb")))
-        return j.where(
-            (both_rect & rect_expr) | (~both_rect & py_call)
-        ).select(left_id, right_id)
-    return j.where(refine_call).select(left_id, right_id)
+    both_rect = F.col("__lrect") & F.col("__rrect")
+    py_call = refine(F.when(~both_rect, rkey), F.when(~both_rect, F.col("__lwkb")))
+    return j.where(
+        (both_rect & _rect_pred_col(predicate)) | (~both_rect & py_call)
+    ).select(left_id, right_id)

@@ -343,6 +343,17 @@ def stratified_sample(
             .drop("__k", "__s", "__r"))
 
 
+def _lm_total(total_df: DataFrame) -> int:
+    """The LM corpus token total from a one-row aggregate. An empty
+    corpus (SUM over no rows is NULL) or a zero total has no
+    probabilities to offer, so it raises instead of failing later on
+    float(None) or log(0)."""
+    total = total_df.collect()[0][0]
+    if not total:
+        raise ValueError("empty LM corpus")
+    return total
+
+
 def unigram_logprob(
     docs: DataFrame,
     lm_corpus: DataFrame | None = None,
@@ -375,8 +386,8 @@ def unigram_logprob(
              .groupBy("word").agg(F.count("*").cast("long").alias("cnt")))
     if min_count > 1:
         vocab = vocab.where(F.col("cnt") >= min_count)
-    total = lm.select(F.sum(F.size(F.split(F.col(text_col), " ")))
-                      .cast("long").alias("t")).collect()[0]["t"]
+    total = _lm_total(lm.select(F.sum(F.size(F.split(F.col(text_col), " ")))
+                                .cast("long").alias("t")))
     # identical op order to the SQL oracle: ln(cnt / total)
     vocab = vocab.select("word", F.log(F.col("cnt") / F.lit(float(total)))
                          .alias("logp"))
@@ -431,8 +442,7 @@ def bigram_logprob(
              .groupBy("word").agg(F.count("*").cast("long").alias("cnt")))
     if min_count > 1:
         vocab = vocab.where(F.col("cnt") >= min_count)
-    total = lm.select(F.sum(F.size(lm_toks)).cast("long").alias("t")) \
-        .collect()[0]["t"]
+    total = _lm_total(lm.select(F.sum(F.size(lm_toks)).cast("long").alias("t")))
     uni = vocab.select(
         "word", F.col("cnt").alias("w_cnt"),
         F.log(F.col("cnt") / F.lit(float(total))).alias("w_logp"))
@@ -526,16 +536,18 @@ def ngram_logprob(
         chain over k shifted slices, separator-joined."""
         if k == 1:
             return toks
-        acc = F.slice(toks, 1, F.size(toks) - (k - 1))
+        # a document shorter than k tokens has no k-grams; clamp, since a
+        # negative slice length throws under ANSI mode
+        m = F.greatest(F.size(toks) - (k - 1), F.lit(0))
+        acc = F.slice(toks, 1, m)
         for j in range(1, k):
-            nxt = F.slice(toks, 1 + j, F.size(toks) - (k - 1))
+            nxt = F.slice(toks, 1 + j, m)
             acc = F.zip_with(
                 acc, nxt,
                 lambda a, b: F.concat(a, F.lit(_NGRAM_SEP), b))
         return acc
 
-    total = lm.select(F.sum(F.size(lm_toks)).cast("long").alias("t")) \
-        .collect()[0]["t"]
+    total = _lm_total(lm.select(F.sum(F.size(lm_toks)).cast("long").alias("t")))
     lm_t = lm.select(lm_toks.alias("__toks"))
     rels = {}
     for k in range(1, order + 1):
@@ -558,10 +570,12 @@ def ngram_logprob(
 
     def pad(arr, k):
         """align the k-gram key array to positions: NULL for the first
-        k-1 positions."""
+        k-1 positions, trimmed to the token count (a document shorter
+        than k-1 tokens would otherwise gain phantom positions)."""
         if k == 1:
             return arr
-        return F.concat(F.array_repeat(null_s, k - 1), arr)
+        return F.slice(F.concat(F.array_repeat(null_s, k - 1), arr),
+                       1, F.size(toks))
 
     fields = [pad(keys[1], 1).alias("k1")]
     for k in range(2, order + 1):

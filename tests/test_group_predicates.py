@@ -189,3 +189,57 @@ def test_zero_area_right_part_has_empty_interior():
     assert got_i.tolist() == [True, True, False]
     got_o = group_predicate("overlaps", [box, crossed, away], deg)
     assert got_o.tolist() == [False, False, False]
+
+
+def test_lineal_right_runs_scalar_kernel_per_left():
+    right = _line([(0, 0), (4, 4), (6, 0)])
+    lefts = [
+        _point(2, 2),                # on the line's interior
+        _point(0, 0),                # on an endpoint (boundary)
+        _point(1, 3),                # off the line
+        _line([(0, 4), (4, 0)]),     # proper crossing
+        _line([(4, 4), (5, 6)]),     # shares the bend vertex only
+        _line([(1, 1), (3, 3)]),     # collinear, inside the line
+        _box(1, 0, 3, 2),            # line crosses the box
+        _box(4, 4, 5, 5),            # corner on the bend vertex
+        _box(-1, -1, 7, 5),          # contains the whole line
+        _diamond(6, 0, 1),           # endpoint inside the diamond
+        None,
+    ]
+    _check_batch(lefts, right)
+
+
+def test_point_right_runs_scalar_kernel_per_left():
+    right = _point(2, 2)
+    lefts = [
+        _point(2, 2),                # equal
+        _point(3, 3),                # elsewhere
+        _line([(0, 0), (4, 4)]),     # point on line interior
+        _line([(2, 2), (4, 0)]),     # point on line endpoint
+        _box(0, 0, 4, 4),            # point in polygon interior
+        _box(2, 0, 4, 4),            # point on polygon edge
+        _box(2, 2, 3, 3),            # point on polygon corner
+        _box(5, 5, 6, 6),            # far
+    ]
+    _check_batch(lefts, right)
+
+
+def test_geometrycollection_left_runs_scalar_kernel():
+    from shapely_spark.geo.geom import geometrycollection
+
+    right = _box(0, 0, 4, 4)
+    lefts = [
+        geometrycollection([_point(1, 1), _box(2, 2, 3, 3)]),    # inside
+        geometrycollection([_point(5, 5), _box(2, 2, 3, 3)]),    # part outside
+        geometrycollection([_point(4, 2)]),                      # on edge
+        geometrycollection([_line([(-1, 2), (5, 2)])]),          # crosses
+        _box(1, 1, 2, 2),            # ordinary left in the same batch
+    ]
+    _check_batch(lefts, right)
+
+
+def test_unknown_predicate_raises():
+    with pytest.raises(ValueError, match="disjoint"):
+        group_predicate("disjoint", [_box(0, 0, 1, 1)], _box(0, 0, 2, 2))
+    with pytest.raises(ValueError, match="nope"):
+        group_predicate("nope", [_point(0, 0)], _line([(0, 0), (1, 1)]))

@@ -284,21 +284,49 @@ def test_coverage_simplify_grouped(spark):
         assert len(s1.rings[0]) < len(p1.rings[0])
 
 
-def test_rect_pair_eval_matches_scalar_kernels():
-    """The closed-form rect×rect vectorized refine must agree with the
-    exact scalar kernels on every adversarial configuration: corner touch,
-    collinear edge overlap, shared-edge containment, equality, interior
-    containment, partial overlap, disjoint."""
-    import numpy as np
+def _geom_df(spark, id_col, geoms):
+    from shapely_spark.geo.wkb import to_wkb
 
+    return spark.createDataFrame(
+        [(i, to_wkb(g)) for i, g in enumerate(geoms)], f"{id_col} long, wkb binary")
+
+
+def _geom_join_pairs(spark, lefts, rights, predicate, broadcast=True):
+    from shapely_spark.spark.join import spatial_join_geom
+
+    out = spatial_join_geom(_geom_df(spark, "left_id", lefts),
+                            _geom_df(spark, "region_id", rights),
+                            predicate=predicate, broadcast=broadcast)
+    return {(r.left_id, r.region_id) for r in out.collect()}
+
+
+def _brute_pairs(lefts, rights, predicate):
     from shapely_spark.geo import kernels as K
+
+    fn = getattr(K, predicate)
+    return {(i, j) for i, a in enumerate(lefts) for j, b in enumerate(rights)
+            if fn(a, b)}
+
+
+GEOM_JOIN_PREDICATES = [
+    "intersects", "within", "covered_by", "contains", "covers",
+    "contains_properly", "touches", "equals", "overlaps", "crosses",
+]
+
+
+def test_geom_join_rect_pairs_match_scalar_kernels(spark):
+    """The JVM closed-form rect×rect tier (_rect_pred_col) must agree with
+    the exact scalar kernels on every adversarial configuration, for every
+    predicate spatial_join_geom supports: corner touch, shared edge,
+    partial collinear edge, containment sharing a boundary, equality,
+    interior containment, partial overlap, disjoint. `crosses` is False
+    for every areal pair."""
     from shapely_spark.geo.geom import box
-    from shapely_spark.spark.join import _rect_pair_eval
 
     rects = [
         (0, 0, 2, 2), (2, 2, 4, 4),      # corner touch
         (0, 0, 2, 2), (2, 0, 4, 2),      # full shared edge
-        (0, 0, 4, 2), (2, 0, 6, 2),      # partial collinear edge overlap? no — interiors overlap
+        (0, 0, 4, 2), (2, 0, 6, 2),      # interiors overlap along the strip
         (0, 0, 4, 1), (4, 0.5, 6, 2),    # partial shared-edge segment
         (0, 0, 4, 4), (1, 1, 3, 3),      # interior containment
         (0, 0, 4, 4), (0, 0, 2, 4),      # containment sharing boundary
@@ -306,23 +334,76 @@ def test_rect_pair_eval_matches_scalar_kernels():
         (0, 0, 1, 1), (3, 3, 4, 4),      # disjoint
         (0, 0, 3, 3), (2, 2, 5, 5),      # partial overlap
     ]
-    A = np.array(rects[0::2], dtype=float)
-    B = np.array(rects[1::2], dtype=float)
-    geoms_a = [box(*r) for r in rects[0::2]]
-    geoms_b = [box(*r) for r in rects[1::2]]
-    for pred in ["intersects", "disjoint", "within", "covered_by", "contains",
-                 "covers", "contains_properly", "touches", "equals", "overlaps"]:
-        got = _rect_pair_eval(pred, A, B)
-        fn = getattr(K, pred)
-        want = np.array([bool(fn(a, b)) for a, b in zip(geoms_a, geoms_b)])
-        assert got is not None and (got == want).all(), (
-            pred, got.tolist(), want.tolist())
+    # pair k sits 10 units east of pair k-1: only (k, k) is bbox-near
+    lefts = [box(x0 + 10 * k, y0, x1 + 10 * k, y1)
+             for k, (x0, y0, x1, y1) in enumerate(rects[0::2])]
+    rights = [box(x0 + 10 * k, y0, x1 + 10 * k, y1)
+              for k, (x0, y0, x1, y1) in enumerate(rects[1::2])]
+    for pred in GEOM_JOIN_PREDICATES:
+        got = _geom_join_pairs(spark, lefts, rights, pred)
+        assert got == _brute_pairs(lefts, rights, pred), pred
+    assert _geom_join_pairs(spark, lefts, rights, "crosses") == set()
+
+
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_geom_join_point_lefts_match_bruteforce(spark, broadcast):
+    """POINT lefts against polygon rights take the group-kernel refine
+    (no separate point stage). Points sit exactly on region vertices and
+    edge midpoints as well as inside, outside and in a hole, so every
+    point predicate, touches included, has pairs to find."""
+    from shapely_spark.geo.geom import box, point, polygon
+
+    rights = [
+        box(0, 0, 4, 4),
+        polygon([(10, 0), (12, 2), (10, 4), (8, 2), (10, 0)]),   # diamond
+        polygon([(20, 0), (26, 0), (26, 6), (20, 6), (20, 0)],
+                holes=[[(22, 2), (24, 2), (24, 4), (22, 4), (22, 2)]]),
+    ]
+    pts = [
+        (2, 2), (0, 0), (4, 4), (2, 0), (4, 1.5), (5, 5), (-1, 2),  # box
+        (10, 2), (12, 2), (10, 4), (9, 1), (11, 3), (12.5, 2),      # diamond
+        (21, 1), (23, 3), (22, 3), (24, 4), (20, 6), (26, 3), (27, 3),
+    ]
+    lefts = [point(x, y) for x, y in pts]
+    for pred in ("intersects", "within", "covered_by", "touches"):
+        got = _geom_join_pairs(spark, lefts, rights, pred, broadcast)
+        want = _brute_pairs(lefts, rights, pred)
+        assert got == want, pred
+        assert want, pred
+
+
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_geom_join_line_rights_match_bruteforce(spark, broadcast):
+    """A LINESTRING right layer has no batched group path: group_predicate
+    answers it with the exact scalar kernel per left. Lines cross, touch
+    at a vertex, run along an edge, end on a boundary and lie inside."""
+    from shapely_spark.geo.geom import box, linestring, point
+
+    lefts = [
+        box(0, 0, 4, 4), box(10, 0, 14, 4), box(20, 0, 24, 4),
+        box(30, 0, 34, 4), point(41, 1), linestring([(40, 0), (44, 4)]),
+    ]
+    rights = [
+        linestring([(-1, 2), (5, 2)]),      # crosses box 0
+        linestring([(14, 4), (16, 6)]),     # touches box 1 at a corner
+        linestring([(20, 0), (24, 0)]),     # along box 2's bottom edge
+        linestring([(32, 2), (36, 2)]),     # starts inside box 3, leaves it
+        linestring([(30, 5), (32, 4)]),     # ends on box 3's top edge
+        linestring([(1, 1), (3, 3)]),       # inside box 0
+        linestring([(40, 4), (44, 0)]),     # crosses the left line
+        linestring([(41, 0), (41, 2)]),     # through the left point
+    ]
+    for pred in ("crosses", "intersects", "touches"):
+        got = _geom_join_pairs(spark, lefts, rights, pred, broadcast)
+        want = _brute_pairs(lefts, rights, pred)
+        assert got == want, pred
+        assert want, pred
 
 
 def test_spatial_join_geom_mixed_rects_and_ngons(spark):
-    """Mixed batch: rect lefts ride the closed-form path while n-gons fall
-    to the grouped scalar path — output must equal the O(n²) oracle for
-    both, and for a non-closed-form predicate (touches)."""
+    """Mixed batch: rect×rect pairs ride the JVM closed-form path while
+    every pair with an n-gon or irregular region goes to the group-kernel
+    refine — output must equal the O(n²) oracle for both."""
     import pandas as pd
 
     from shapely_spark.geo import kernels as K
@@ -442,10 +523,10 @@ def test_group_intersects_matches_scalar_fuzz():
 
 
 def test_geom_join_rect_branch_has_no_udf(spark):
-    """r3 verdict item 3: when both sides are axis-aligned rectangles the
-    pair predicate evaluates JVM-side — the rect branch of the union plan
-    contains no ArrowEvalPython node, and the whole-plan answer still
-    matches brute force."""
+    """When both sides are axis-aligned rectangles the pair predicate
+    evaluates JVM-side: those rows feed NULLs to the ONE refine UDF, the
+    single-scan plan holds exactly one ArrowEvalPython node, and the
+    whole-plan answer still matches brute force."""
     from shapely_spark.geo.geom import box
     from shapely_spark.geo.wkb import to_wkb
     from shapely_spark.spark.join import spatial_join_geom
@@ -459,7 +540,7 @@ def test_geom_join_rect_branch_has_no_udf(spark):
     out = spatial_join_geom(left, right, predicate="intersects",
                             left_id="left_id")
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # union of two branches: exactly the non-rect branch carries the UDF
+    # one filter over one scan: the UDF appears once, not once per branch
     assert plan.count("ArrowEvalPython") == 1
     got = {(r.left_id, r.region_id) for r in out.collect()}
     want = {

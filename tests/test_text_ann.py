@@ -1079,3 +1079,35 @@ def test_ngram_logprob_backoff_chain(spark):
              + (2 * math.log(0.4) + math.log(0.5 / 6))) / 3
     assert abs(got[1] - round(want1, 6)) < 1e-9
     assert abs(got[2] - round(want2, 6)) < 1e-9
+
+
+def test_ngram_logprob_short_docs(spark):
+    """Documents shorter than order-1 tokens have no trigram keys: the
+    key slices must clamp at length 0 (a negative slice length throws
+    under ANSI mode) and score only the levels they can attempt.
+    Self-LM over 'a' and 'a b': uni a:2 b:1 total 3; bi ab:1."""
+    import math
+
+    from shapely_spark.text.quality import ccnet_bucket, ngram_logprob
+
+    docs = spark.createDataFrame([(1, "en", "a"), (2, "en", "a b")],
+                                 "doc_id long, lang string, text string")
+    got = {r.doc_id: (r.n_tokens, r.avg_logp)
+           for r in ngram_logprob(docs, order=3).collect()}
+    assert got[1] == (1, round(math.log(2 / 3), 6))
+    assert got[2][0] == 2
+    assert abs(got[2][1] - round((math.log(2 / 3) + math.log(1 / 2)) / 2, 6)) < 1e-9
+    out = ccnet_bucket(docs, model="trigram").collect()
+    assert sorted(r.doc_id for r in out) == [1, 2]
+
+
+def test_lm_builders_reject_empty_corpus(spark):
+    from shapely_spark.text.quality import (
+        bigram_logprob, ngram_logprob, unigram_logprob,
+    )
+
+    docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    for fn in (unigram_logprob, bigram_logprob, ngram_logprob):
+        with pytest.raises(ValueError, match="empty LM corpus"):
+            fn(docs, lm_corpus=empty)
