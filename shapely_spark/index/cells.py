@@ -137,6 +137,38 @@ def cover_bbox(xmin, ymin, xmax, ymax, res: int = DEFAULT_RES) -> np.ndarray:
     return (gy.ravel() * n + gx.ravel()).astype(np.int64)
 
 
+_ORIGIN = np.array([180.0, 90.0, 180.0, 90.0])
+_SPAN = np.array([360.0, 180.0, 360.0, 180.0])
+
+
+def _grid_index(b, n: int):
+    """Clamped cell indices (ix0, iy0, ix1, iy1) of (m, 4) bounds rows,
+    with cell_of's arithmetic (a bound on a grid line maps exactly)."""
+    i = np.floor((b + _ORIGIN) / _SPAN * n)
+    return np.minimum(np.maximum(i, 0), n - 1).astype(np.int64).T
+
+
+def _expand_ranges(x0, nx, y0, ny):
+    """Every grid index (x, y) of each [x0, x0+nx) × [y0, y0+ny) range,
+    row-major within a range: flat (x, y, range_index) arrays."""
+    counts = nx * ny
+    row = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
+    t = np.arange(int(counts.sum()), dtype=np.int64) - np.repeat(np.cumsum(counts) - counts, counts)
+    return x0[row] + t % nx[row], y0[row] + t // nx[row], row
+
+
+def _chunks(weight: np.ndarray, limit: int = 1 << 20):
+    """Slices of consecutive items whose weights sum to at most `limit`
+    (a heavier item gets a slice of its own): bounds the memory of a
+    ragged pair expansion whatever the size of one geometry."""
+    cum = np.cumsum(weight)
+    s = 0
+    while s < len(cum):
+        e = max(int(np.searchsorted(cum, (cum[s - 1] if s else 0) + limit, "right")), s + 1)
+        yield slice(s, e)
+        s = e
+
+
 def cover_bbox_batch(bounds: np.ndarray, res: int = DEFAULT_RES):
     """Vectorized cover_bbox over a (m, 4) bounds matrix: returns
     (cells, row_index) flat arrays — cells[k] belongs to input row
@@ -147,98 +179,84 @@ def cover_bbox_batch(bounds: np.ndarray, res: int = DEFAULT_RES):
     b = np.asarray(bounds, dtype=np.float64)
     if not len(b):
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    ix0 = np.clip(np.floor((b[:, 0] + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-    ix1 = np.clip(np.floor((b[:, 2] + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-    iy0 = np.clip(np.floor((b[:, 1] + 90.0) / 180.0 * n), 0, n - 1).astype(np.int64)
-    iy1 = np.clip(np.floor((b[:, 3] + 90.0) / 180.0 * n), 0, n - 1).astype(np.int64)
-    nx = ix1 - ix0 + 1
-    counts = nx * (iy1 - iy0 + 1)
-    total = int(counts.sum())
-    row = np.repeat(np.arange(len(b), dtype=np.int64), counts)
-    starts = np.zeros(len(b), dtype=np.int64)
-    np.cumsum(counts[:-1], out=starts[1:])
-    t = np.arange(total, dtype=np.int64) - starts[row]
-    nx_r = nx[row]
-    cells = (iy0[row] + t // nx_r) * n + ix0[row] + t % nx_r
-    return cells, row
+    ix0, iy0, ix1, iy1 = _grid_index(b, n)
+    ix, iy, row = _expand_ranges(ix0, ix1 - ix0 + 1, iy0, iy1 - iy0 + 1)
+    return iy * n + ix, row
 
 
 def polygon_cover(geom, res: int = DEFAULT_RES):
-    """Polygon → [(cell_id, full)] cover. ``full=True`` cells are entirely
-    inside the polygon (join refine can be skipped — the broadcast-side
-    analog of GEOS prepared containment short-circuit); ``full=False`` cells
-    intersect the boundary and need the exact point-in-polygon refine.
+    """Polygon → (cells, full) cover: polygon_cover_batch of one geometry."""
+    cells, full, _ = polygon_cover_batch([geom], res)
+    return cells, full
 
-    Cells whose rectangle doesn't intersect the polygon at all are dropped.
-    """
-    from ..geo import kernels as K
-    from ..geo.constructive import clip_ring_by_rect
-    from ..geo.geom import POLYGON, Geometry
 
-    if geom is None or geom.is_empty:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=bool)
-    bb = K.bounds(geom)
-    cells = cover_bbox(bb[0], bb[1], bb[2], bb[3], res)
-    rings_ = K._rings_of(geom)
-    if not rings_:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=bool)
-    segs = K._edges(geom)
-    xmin, ymin, xmax, ymax = cell_bounds(cells, res)
-    keep = np.zeros(len(cells), dtype=bool)
-    full = np.zeros(len(cells), dtype=bool)
-    # corner classification for all cells at once
-    corners_x = np.stack([xmin, xmax, xmax, xmin], axis=1).ravel()
-    corners_y = np.stack([ymin, ymin, ymax, ymax], axis=1).ravel()
-    cls = K.points_in_rings_class(corners_x, corners_y, rings_).reshape(-1, 4)
-    all_inside = (cls == K.INTERIOR).all(axis=1)
-    any_closure = (cls >= K.BOUNDARY).any(axis=1)
-    # does any polygon edge intersect the cell rect?
-    x1, y1, x2, y2 = segs[:, 0], segs[:, 1], segs[:, 2], segs[:, 3]
-    exmin, exmax = np.minimum(x1, x2), np.maximum(x1, x2)
-    eymin, eymax = np.minimum(y1, y2), np.maximum(y1, y2)
-    edge_bbox_hit = (
-        (exmin[None, :] <= xmax[:, None])
-        & (exmax[None, :] >= xmin[:, None])
-        & (eymin[None, :] <= ymax[:, None])
-        & (eymax[None, :] >= ymin[:, None])
-    )
-    edge_near = edge_bbox_hit.any(axis=1)
-    full = all_inside & ~edge_near
-    keep = full | any_closure | edge_near
-    # cells not touched by corners/edges may still contain the whole
-    # polygon (polygon smaller than one cell) — check polygon vertex cell
-    vc = cell_of(geom.all_coords()[:1, 1], geom.all_coords()[:1, 0], res)
-    keep |= np.isin(cells, vc)
-    # refine edge_near cells: exact rect-vs-polygon intersection test
-    amb = np.nonzero(edge_near & ~any_closure)[0]
-    for i in amb:
-        clipped = any(
-            clip_ring_by_rect(r, xmin[i], ymin[i], xmax[i], ymax[i]) is not None for r in rings_
-        )
-        # also boundary-only pass-through (line clip) counts as intersecting
-        if not clipped:
-            g = Geometry(POLYGON, rings=rings_)
-            inter = K.intersects(
-                g,
-                Geometry(
-                    POLYGON,
-                    rings=[
-                        np.array(
-                            [
-                                [xmin[i], ymin[i]],
-                                [xmax[i], ymin[i]],
-                                [xmax[i], ymax[i]],
-                                [xmin[i], ymax[i]],
-                                [xmin[i], ymin[i]],
-                            ]
-                        )
-                    ],
-                ),
-            )
-            keep[i] = inter
-        else:
-            keep[i] = True
-    return cells[keep], full[keep]
+def polygon_cover_batch(geoms, res: int = DEFAULT_RES):
+    """Exact cell covers of a batch of polygonal geometries: flat (cells,
+    full, row) arrays, row[k] the index in `geoms` of cells[k] (as in
+    cover_bbox_batch), each geometry's cells in cover_bbox order. A cell is
+    kept iff its closed rectangle meets the polygon; ``full=True`` cells lie
+    inside it (the join skips their refine — the broadcast-side analog of
+    GEOS prepared containment). None, empty and non-polygonal geometries
+    get no cells. No per-cell Python, two ragged passes:
+    - each bbox's grid vertices get their ray-cast parity (bit for bit as
+      points_in_rings_class). An odd corner keeps its cell; four odd
+      corners and no edge bbox touching the cell make it full;
+    - each ring edge expands to the cells of its bbox range (one cell of
+      slack absorbs index rounding; the exact closed-rect bbox test
+      filters). Such a cell meets the polygon iff its corners are not all
+      strictly on one side of the edge's line (segment-vs-rect separating
+      axes), so a cell strictly inside a hole is dropped.
+    Both expansions run in bounded chunks: a continent-sized polygon never
+    allocates a dense cells × edges matrix."""
+    from ..geo.kernels import RaggedPolygonLayer
+
+    n = grid_n(res)
+    w, h = 360.0 / n, 180.0 / n
+    layer = RaggedPolygonLayer(dict(enumerate(geoms)))
+    n_bnd = layer.bnd_start[1:] - layer.bnd_start[:-1]
+    ok = ~np.isnan(layer.bbox[:, 0]) & (n_bnd > 0)
+    live = np.flatnonzero(ok)
+    ix0, iy0, ix1, iy1 = _grid_index(layer.bbox[live], n)
+    nx, ny = ix1 - ix0 + 1, iy1 - iy0 + 1
+    # pass 1: ray-cast parity of every vertex of each bbox's cell grid
+    vx, vy, vrow = _expand_ranges(ix0, nx + 1, iy0, ny + 1)
+    vx, vy, rid = -180.0 + vx * w, -90.0 + vy * h, live[vrow]
+    odd = np.zeros(len(vx), dtype=bool)
+    for s in _chunks((layer.cross_start[1:] - layer.cross_start[:-1])[rid]):
+        p, e = layer._expand(layer.cross_start, rid[s])
+        seg, y = layer.cross_seg[e], vy[s][p]
+        c = (seg[:, 1] > y) != (seg[:, 3] > y)
+        p, (x1, y1, x2, y2), y = p[c], seg[c].T, y[c]
+        hit = vx[s][p] < x1 + (y - y1) * (x2 - x1) / (y2 - y1)
+        odd[s] = np.bincount(p[hit], minlength=s.stop - s.start) % 2 == 1
+    cx, cy, crow = _expand_ranges(ix0, nx, iy0, ny)
+    v = (np.cumsum((nx + 1) * (ny + 1)) - (nx + 1) * (ny + 1))[crow] + (
+        cy - iy0[crow]) * (nx[crow] + 1) + cx - ix0[crow]
+    corner = odd[np.stack([v, v + 1, v + nx[crow] + 1, v + nx[crow] + 2])]
+    keep, full = corner.any(axis=0), corner.all(axis=0)
+    # pass 2: (cell, edge) pairs over each edge's own cell range
+    seg = layer.bnd_seg[np.repeat(ok, n_bnd)]
+    eg = np.repeat(np.arange(len(live), dtype=np.int64), n_bnd[live])
+    eb = np.hstack([np.minimum(seg[:, :2], seg[:, 2:]), np.maximum(seg[:, :2], seg[:, 2:])])
+    ex0, ey0, ex1, ey1 = _grid_index(eb, n)
+    ex0, ey0 = np.maximum(ex0 - 1, ix0[eg]), np.maximum(ey0 - 1, iy0[eg])
+    cstart = np.cumsum(nx * ny) - nx * ny
+    near = np.zeros(len(cx), dtype=bool)
+    for s in _chunks((ex1 - ex0 + 1) * (ey1 - ey0 + 1)):
+        px, py, e = _expand_ranges(ex0[s], ex1[s] - ex0[s] + 1, ey0[s], ey1[s] - ey0[s] + 1)
+        e += s.start
+        x = -180.0 + np.stack([px, px + 1]) * w  # cell sides, as cell_bounds
+        y = -90.0 + np.stack([py, py + 1]) * h
+        b, g = eb[e], eg[e]
+        hit = (b[:, 0] <= x[1]) & (b[:, 2] >= x[0]) & (b[:, 1] <= y[1]) & (b[:, 3] >= y[0])
+        pos = cstart[g] + (py - iy0[g]) * nx[g] + px - ix0[g]
+        near[pos[hit]] = True
+        t = hit & ~keep[pos]
+        (sx, sy, sx2, sy2), x, y = seg[e[t]].T, x[:, t], y[:, t]
+        # points_on_segments' cross product at the four corners
+        side = (sx2 - sx) * (y[[0, 0, 1, 1]] - sy) - (sy2 - sy) * (x[[0, 1, 1, 0]] - sx)
+        keep[pos[t][~((side > 0).all(axis=0) | (side < 0).all(axis=0))]] = True
+    return (cy * n + cx)[keep], (full & ~near)[keep], live[crow][keep]
 
 
 # ---------------------------------------------------------------------------

@@ -52,12 +52,15 @@ def latest_snapshot(
 ) -> DataFrame:
     """One row per url: the fetch with the greatest `ts_col`.
 
-    Tie semantics: pass `content_col` to break equal-(url, ts) fetches
-    deterministically by the content digest (lowest xxhash64 wins — a
-    row-distinguishing key, so the pick is stable under retries and AQE
-    re-planning). Without it, equal-(url, ts) duplicates are picked
-    ARBITRARILY (whichever row the window scans first) — fine when the
-    archive's (url, ts) is unique, which CDX capture keys are.
+    Tie semantics: pass `content_col` to break equal-(url, ts) fetches by
+    the content digest (lowest xxhash64 wins, so the pick is stable under
+    retries and AQE re-planning). That is deterministic only up to the
+    64-bit digest: equal-(url, ts) rows whose payloads share an xxhash64
+    (identical content with different other columns, or a hash
+    collision) still tie and are picked arbitrarily. Without it, every
+    equal-(url, ts) duplicate is picked ARBITRARILY (whichever row the
+    window scans first) — fine when the archive's (url, ts) is unique,
+    which CDX capture keys are.
 
     This is the "current web" view of a crawl archive. One hash shuffle
     on url; the window computes row_number over (url) ordered by ts desc

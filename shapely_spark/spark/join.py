@@ -38,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index.cells import DEFAULT_RES, polygon_cover
+from ..index.cells import DEFAULT_RES, polygon_cover_batch
 from .columns import cell_col
 
 # Map engine predicates (evaluated as predicate(point, region), matching
@@ -53,15 +53,17 @@ _FULL_OK = {"intersects", "within", "covered_by"}  # full cell ⊂ interior
 # at res 11 (0.18°×0.09° cells) 54% of cover cells are fully interior for
 # the synthetic region mix vs 13% at res 9, so most candidate rows take the
 # full-cell fast path and never reach the Python refine. The cover stays
-# broadcastable (~60k rows per 1000 regions). Result set is res-invariant —
-# res only moves work between prune and refine.
+# broadcastable (~60k rows per 1000 regions) and cheap to build: one
+# polygon_cover_batch pass per Arrow batch, no per-cell Python. Result set
+# is res-invariant — res only moves work between prune and refine.
 JOIN_RES = DEFAULT_RES + 2
 
 
 def covers_df(regions: DataFrame, res: int = DEFAULT_RES, with_wkb: bool = False) -> DataFrame:
     """regions(region_id, wkb) → exploded cell cover. Distributed fan-out
-    (mapInPandas). with_wkb=True inlines the region WKB on partial cells
-    (shuffle-join mode, where no driver broadcast of geometry exists)."""
+    (mapInPandas): one polygon_cover_batch call per Arrow batch.
+    with_wkb=True inlines the region WKB on partial cells (shuffle-join
+    mode, where no driver broadcast of geometry exists)."""
     schema = "region_id long, cell_id long, full boolean" + (
         ", wkb binary" if with_wkb else ""
     )
@@ -70,25 +72,16 @@ def covers_df(regions: DataFrame, res: int = DEFAULT_RES, with_wkb: bool = False
         from ..geo.wkb import from_wkb
 
         for pdf in batches:
-            rids, cids, fulls, wkbs = [], [], [], []
-            for rid, wkb in zip(pdf["region_id"], pdf["wkb"]):
-                g = from_wkb(bytes(wkb)) if wkb is not None else None
-                if g is None or g.is_empty:
-                    continue
-                cells_, full_ = polygon_cover(g, res)
-                for c, f in zip(cells_.tolist(), full_.tolist()):
-                    rids.append(rid)
-                    cids.append(c)
-                    fulls.append(bool(f))
-                    if with_wkb:
-                        wkbs.append(None if f else bytes(wkb))
+            wkbs = pdf["wkb"].to_numpy(dtype=object)
+            cells, full, row = polygon_cover_batch(
+                [None if w is None else from_wkb(bytes(w)) for w in wkbs], res)
             data = {
-                "region_id": pd.Series(rids, dtype="int64"),
-                "cell_id": pd.Series(cids, dtype="int64"),
-                "full": pd.Series(fulls, dtype="bool"),
+                "region_id": pd.Series(pdf["region_id"].to_numpy()[row], dtype="int64"),
+                "cell_id": cells,
+                "full": full,
             }
             if with_wkb:
-                data["wkb"] = pd.Series(wkbs, dtype="object")
+                data["wkb"] = np.where(full, None, wkbs[row])
             yield pd.DataFrame(data)
 
     return regions.select("region_id", "wkb").mapInPandas(gen, schema)

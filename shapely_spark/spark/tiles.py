@@ -17,11 +17,12 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index.cells import DEFAULT_RES, cell_bounds, polygon_cover
+from ..index.cells import DEFAULT_RES, cell_bounds, polygon_cover_batch
 
 _WEIGHTS_SCHEMA = (
     "region_id long, cell_id long, full boolean, clip_area double, area_frac double"
@@ -39,8 +40,9 @@ def tile_counts(pages_geo: DataFrame, res: int = DEFAULT_RES, value_col: str | N
 
 def region_tile_weights(regions: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """regions(region_id, wkb) → per-tile clipped areas: (region_id, cell_id,
-    full, clip_area, area_frac). Distributed via mapInPandas; clip kernel is
-    Sutherland–Hodgman (constructive.py:380 parity)."""
+    full, clip_area, area_frac). Distributed via mapInPandas: one
+    polygon_cover_batch call per Arrow batch, then a clip per partial cell
+    (Sutherland–Hodgman, constructive.py:380 parity)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..geo import kernels as K
@@ -48,36 +50,23 @@ def region_tile_weights(regions: DataFrame, res: int = DEFAULT_RES) -> DataFrame
         from ..geo.wkb import from_wkb
 
         for pdf in batches:
-            rows = {k: [] for k in ("region_id", "cell_id", "full", "clip_area", "area_frac")}
-            for rid, wkb in zip(pdf["region_id"], pdf["wkb"]):
-                g = from_wkb(bytes(wkb)) if wkb is not None else None
-                if g is None or g.is_empty:
-                    continue
-                total = K.area(g)
-                cells_, full_ = polygon_cover(g, res)
-                xmin, ymin, xmax, ymax = cell_bounds(cells_, res)
-                for i, (c, f) in enumerate(zip(cells_.tolist(), full_.tolist())):
-                    if f:
-                        a = (xmax[i] - xmin[i]) * (ymax[i] - ymin[i])
-                    else:
-                        clipped = clip_by_rect(g, xmin[i], ymin[i], xmax[i], ymax[i])
-                        a = K.area(clipped) if clipped is not None else 0.0
-                    if a <= 0.0 and not f:
-                        continue  # boundary-graze cell contributes no area
-                    rows["region_id"].append(rid)
-                    rows["cell_id"].append(c)
-                    rows["full"].append(bool(f))
-                    rows["clip_area"].append(float(a))
-                    rows["area_frac"].append(float(a / total) if total > 0 else 0.0)
-            yield pd.DataFrame(
-                {
-                    "region_id": pd.Series(rows["region_id"], dtype="int64"),
-                    "cell_id": pd.Series(rows["cell_id"], dtype="int64"),
-                    "full": pd.Series(rows["full"], dtype="bool"),
-                    "clip_area": pd.Series(rows["clip_area"], dtype="float64"),
-                    "area_frac": pd.Series(rows["area_frac"], dtype="float64"),
-                }
-            )
+            geoms = [None if w is None else from_wkb(bytes(w)) for w in pdf["wkb"]]
+            cells, full, row = polygon_cover_batch(geoms, res)
+            xmin, ymin, xmax, ymax = cell_bounds(cells, res)
+            area = (xmax - xmin) * (ymax - ymin)
+            for i in np.flatnonzero(~full):
+                clipped = clip_by_rect(geoms[row[i]], xmin[i], ymin[i], xmax[i], ymax[i])
+                area[i] = K.area(clipped) if clipped is not None else 0.0
+            total = np.array([K.area(g) for g in geoms])[row]
+            k = full | (area > 0.0)  # a boundary-graze cell contributes no area
+            yield pd.DataFrame({
+                "region_id": pd.Series(pdf["region_id"].to_numpy()[row][k], dtype="int64"),
+                "cell_id": cells[k],
+                "full": full[k],
+                "clip_area": area[k],
+                "area_frac": np.divide(area[k], total[k], out=np.zeros(int(k.sum())),
+                                       where=total[k] > 0),
+            })
 
     return regions.select("region_id", "wkb").mapInPandas(gen, _WEIGHTS_SCHEMA)
 

@@ -490,9 +490,6 @@ def bigram_logprob(
                  F.round(F.avg(logp), 6).alias("avg_logp")))
 
 
-_NGRAM_SEP = "\x1f"
-
-
 def ngram_logprob(
     docs: DataFrame,
     lm_corpus: DataFrame | None = None,
@@ -532,19 +529,20 @@ def ngram_logprob(
     lm_toks = F.split(F.col(text_col), " ")
 
     def kgram_keys(toks, k):
-        """array of k-gram key strings (size - k + 1 entries): zip_with
-        chain over k shifted slices, separator-joined."""
+        """array of k-gram keys (size - k + 1 entries): the tokens for
+        k = 1, else array<string> keys from a zip_with chain over k
+        shifted slices (an array key, like bigram_logprob's struct key,
+        cannot collide the way a separator-joined string can)."""
         if k == 1:
             return toks
         # a document shorter than k tokens has no k-grams; clamp, since a
         # negative slice length throws under ANSI mode
         m = F.greatest(F.size(toks) - (k - 1), F.lit(0))
-        acc = F.slice(toks, 1, m)
-        for j in range(1, k):
-            nxt = F.slice(toks, 1 + j, m)
-            acc = F.zip_with(
-                acc, nxt,
-                lambda a, b: F.concat(a, F.lit(_NGRAM_SEP), b))
+        acc = F.zip_with(F.slice(toks, 1, m), F.slice(toks, 2, m),
+                         lambda a, b: F.array(a, b))
+        for j in range(2, k):
+            acc = F.zip_with(acc, F.slice(toks, 1 + j, m),
+                             lambda a, b: F.concat(a, F.array(b)))
         return acc
 
     total = _lm_total(lm.select(F.sum(F.size(lm_toks)).cast("long").alias("t")))
@@ -566,7 +564,9 @@ def ngram_logprob(
                       F.split(F.col(text_col), " ").alias("__toks"))
     toks = F.col("__toks")
     keys = {k: kgram_keys(toks, k) for k in range(1, order + 1)}
-    null_s = F.lit(None).cast("string")
+
+    def null_key(k):
+        return F.lit(None).cast("string" if k == 1 else "array<string>")
 
     def pad(arr, k):
         """align the k-gram key array to positions: NULL for the first
@@ -574,7 +574,7 @@ def ngram_logprob(
         than k-1 tokens would otherwise gain phantom positions)."""
         if k == 1:
             return arr
-        return F.slice(F.concat(F.array_repeat(null_s, k - 1), arr),
+        return F.slice(F.concat(F.array_repeat(null_key(k), k - 1), arr),
                        1, F.size(toks))
 
     fields = [pad(keys[1], 1).alias("k1")]
@@ -585,7 +585,7 @@ def ngram_logprob(
         # position-aligned (arrays_zip NULL-pads ragged inputs)
         prev = pad(keys[k - 1], k - 1)
         fields.append(F.concat(
-            F.array(null_s),
+            F.array(null_key(k - 1)),
             F.slice(prev, 1, F.size(prev) - 1)).alias(f"p{k}"))
     zipped = F.arrays_zip(*fields)
     ev = (d_t.select(F.col(id_col), F.explode(zipped).alias("z"))

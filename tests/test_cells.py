@@ -4,7 +4,7 @@ import duckdb
 import numpy as np
 import pytest
 
-from shapely_spark.geo import box, point, polygon
+from shapely_spark.geo import box, linestring, multipolygon, point, polygon
 from shapely_spark.geo import kernels as K
 from shapely_spark.index import cells
 
@@ -97,6 +97,96 @@ def test_polygon_cover_small_polygon_within_one_cell():
     cover, full = cells.polygon_cover(tiny, res)
     assert int(cells.cell_of(1.05, 1.05, res)) in cover.tolist()
     assert not full.any()
+
+
+def _assert_cover_exact(g, res):
+    """Every cell of the bbox cover: kept ⇔ its closed box intersects g
+    (scalar kernel); full ⇒ four INTERIOR corners and no edge bbox near."""
+    cover, full = cells.polygon_cover(g, res)
+    got = dict(zip(cover.tolist(), full.tolist()))
+    segs = K._edges(g)
+    exmin, exmax = np.minimum(segs[:, 0], segs[:, 2]), np.maximum(segs[:, 0], segs[:, 2])
+    eymin, eymax = np.minimum(segs[:, 1], segs[:, 3]), np.maximum(segs[:, 1], segs[:, 3])
+    bb = K.bounds(g)
+    for c in cells.cover_bbox(*bb, res).tolist():
+        xmin, ymin, xmax, ymax = cells.cell_bounds(c, res)
+        assert (c in got) == K.intersects(g, box(xmin, ymin, xmax, ymax)), (c, res)
+        if got.get(c):
+            cls = K.points_in_rings_class([xmin, xmax, xmax, xmin], [ymin, ymin, ymax, ymax],
+                                          K._rings_of(g))
+            assert (cls == K.INTERIOR).all()
+            assert not ((exmin <= xmax) & (exmax >= xmin) & (eymin <= ymax) & (eymax >= ymin)).any()
+
+
+@pytest.mark.parametrize("seed", [2, 3])  # both layers hold a cell inside a hole
+def test_polygon_cover_exact_on_synth_regions(seed):
+    from shapely_spark.spark.join import JOIN_RES
+    from shapely_spark.spark.pages import synth_regions
+
+    for _rid, _name, g, _kind in synth_regions(200, seed):
+        if not g.is_empty:
+            _assert_cover_exact(g, JOIN_RES)
+
+
+@pytest.mark.parametrize("g", [
+    box(-22.5, 0.0, 22.5, 11.25),                                # edges on grid lines
+    polygon([(0.0, 0.0), (30.0, 5.0), (5.0, 20.0)]),              # vertex on a cell corner
+    polygon([(0.0, 0.0), (22.5, 11.25), (0.0, 22.5)]),            # diagonal through corners
+    polygon([(1.0, 1.0), (3.0, 1.5), (2.0, 4.0)]),                # inside one cell
+    multipolygon([box(-60.0, -30.0, -30.0, -10.0),
+                  polygon([(101.0, 51.0), (103.0, 52.0), (102.0, 53.0)])]),  # part in one cell
+    polygon([(0.0, 0.0), (30.0, 0.0), (30.0, 0.0), (30.0, 30.0), (0.0, 30.0)]),  # zero-length edge
+    box(170.0, 80.0, 180.0, 90.0),                                 # clamped at +180 / +90
+    polygon([(-180.0, -90.0), (-150.0, -90.0), (-180.0, -60.0)]),  # clamped at -180 / -90
+    polygon([(160.0, 70.0), (200.0, 75.0), (170.0, 100.0)]),       # beyond the grid
+], ids=["grid_lines", "corner_vertex", "diagonal", "one_cell", "multi_part_one_cell",
+        "repeated_vertex", "clamp_max", "clamp_min", "beyond_grid"])
+@pytest.mark.parametrize("res", [4, 6])
+def test_polygon_cover_exact_hand_built(g, res):
+    _assert_cover_exact(g, res)
+
+
+def test_polygon_cover_drops_cells_inside_hole():
+    # diamond hole |x| + |y| < 20: the hole edge (20,0)-(0,20) has a bbox
+    # that covers cell [0, 5.625] × [0, 2.8125], which lies strictly inside
+    # the hole and so does not meet the polygon
+    res = 6
+    g = polygon([(-40, -40), (40, -40), (40, 40), (-40, 40)],
+                [[(20, 0), (0, 20), (-20, 0), (0, -20)]])
+    inner = int(cells.cell_of(1.0, 1.0, res))
+    cover, full = cells.polygon_cover(g, res)
+    assert inner not in cover.tolist()
+    assert not K.intersects(g, box(*cells.cell_bounds(inner, res)))
+    _assert_cover_exact(g, res)
+
+
+def test_polygon_cover_batch_matches_per_geometry(monkeypatch):
+    from shapely_spark.geo.geom import POLYGON, empty
+    from shapely_spark.spark.join import JOIN_RES
+    from shapely_spark.spark.pages import synth_regions
+
+    geoms = [g for _, _, g, _ in synth_regions(200, 1)]
+    geoms[5:5] = [None, empty(POLYGON), linestring([(0, 0), (1, 1)])]
+
+    parts = [cells.polygon_cover(g, JOIN_RES) for g in geoms]
+    want = (np.concatenate([c for c, _ in parts]), np.concatenate([f for _, f in parts]),
+            np.repeat(np.arange(len(geoms)), [len(c) for c, _ in parts]))
+    for a, b in zip(cells.polygon_cover_batch(geoms, JOIN_RES), want):
+        np.testing.assert_array_equal(a, b)
+    assert not np.isin(want[2], [5, 6, 7]).any()
+    # tiny chunk limit: the bounded pair expansions give the same covers
+    chunks = cells._chunks
+    monkeypatch.setattr(cells, "_chunks", lambda w, limit=0: chunks(w, 7))
+    for a, b in zip(cells.polygon_cover_batch(geoms, JOIN_RES), want):
+        np.testing.assert_array_equal(a, b)
+    assert [len(c) for c in cells.polygon_cover_batch([], JOIN_RES)] == [0, 0, 0]
+
+
+def test_chunks_bound_the_weight_sum():
+    w = np.array([3, 1, 9, 2, 2, 0, 5])
+    sl = list(cells._chunks(w, 4))
+    assert [(s.start, s.stop) for s in sl] == [(0, 2), (2, 3), (3, 6), (6, 7)]
+    assert list(cells._chunks(np.zeros(0, dtype=np.int64))) == []
 
 
 def test_hilbert_key_locality():

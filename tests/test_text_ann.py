@@ -1101,6 +1101,24 @@ def test_ngram_logprob_short_docs(spark):
     assert sorted(r.doc_id for r in out) == [1, 2]
 
 
+def test_ngram_logprob_token_with_separator_byte(spark):
+    """Tokens may contain \x1f: the LM bigram ('a\x1fb', 'c') must not
+    match the doc bigram ('a', 'b\x1fc'). LM uni a\x1fb:1 c:1 a:1 z:1,
+    total 4. Doc 'a b\x1fc': a: ln(1/4); b\x1fc|a: bigram unseen →
+    α·OOV floor ln(.4)+ln(0.5/4)."""
+    import math
+
+    from shapely_spark.text.quality import ngram_logprob
+
+    lm = spark.createDataFrame([(0, "a\x1fb c"), (1, "a z")], "doc_id long, text string")
+    docs = spark.createDataFrame([(2, "a b\x1fc")], "doc_id long, text string")
+    for order in (2, 3):
+        r = ngram_logprob(docs, lm_corpus=lm, order=order).collect()[0]
+        want = (math.log(1 / 4) + math.log(0.4) + math.log(0.5 / 4)) / 2
+        assert r.n_tokens == 2
+        assert abs(r.avg_logp - round(want, 6)) < 1e-9, order
+
+
 def test_lm_builders_reject_empty_corpus(spark):
     from shapely_spark.text.quality import (
         bigram_logprob, ngram_logprob, unigram_logprob,
