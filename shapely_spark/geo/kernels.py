@@ -407,17 +407,24 @@ class RaggedPolygonLayer:
         return out
 
 
-def contains_xy(geom: Geometry, x, y) -> np.ndarray:
-    """reference: shapely/predicates.py:1311 — vectorized point fast path,
-    auto-prepares (here: rings extracted once per call)."""
-    prep = PreparedPolygons([geom])
-    return prep.test(0, np.atleast_1d(x), np.atleast_1d(y), "contains")
+def _predicate_xy(geom: Geometry | None, x, y, predicate: str, scalar) -> np.ndarray:
+    """Polygons classify the whole point batch (rings extracted once per
+    call); any other type runs the scalar DE-9IM kernel per point."""
+    x, y = np.atleast_1d(x).astype(np.float64), np.atleast_1d(y).astype(np.float64)
+    if geom is None or geom.type_id in (POLYGON, MULTIPOLYGON):
+        return PreparedPolygons([geom]).test(0, x, y, predicate)
+    return np.array([scalar(geom, point(px, py)) for px, py in zip(x.ravel(), y.ravel())],
+                    dtype=bool).reshape(x.shape)
 
 
-def intersects_xy(geom: Geometry, x, y) -> np.ndarray:
+def contains_xy(geom: Geometry | None, x, y) -> np.ndarray:
+    """reference: shapely/predicates.py:1311 — vectorized point fast path."""
+    return _predicate_xy(geom, x, y, "contains", contains)
+
+
+def intersects_xy(geom: Geometry | None, x, y) -> np.ndarray:
     """reference: shapely/predicates.py:1367."""
-    prep = PreparedPolygons([geom])
-    return prep.test(0, np.atleast_1d(x), np.atleast_1d(y), "intersects")
+    return _predicate_xy(geom, x, y, "intersects", intersects)
 
 
 # ---------------------------------------------------------------------------

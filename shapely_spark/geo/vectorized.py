@@ -64,11 +64,8 @@ def contains(geometry, x, y) -> np.ndarray:
         DeprecationWarning,
         stacklevel=2,
     )
-    geom = _unwrap(geometry)
     x, y = _xy(x, y)
-    if geom.type_id in _POLYGONAL:
-        return K.contains_xy(geom, x.ravel(), y.ravel()).reshape(x.shape)
-    return _pointwise(geom, x, y, K.contains)
+    return K.contains_xy(_unwrap(geometry), x, y)
 
 
 def touches(geometry, x, y) -> np.ndarray:

@@ -2,16 +2,12 @@
 
 Media ride as opaque `binary` columns with a typed metadata struct; every
 transform is an Arrow-batched mapInPandas whose schema, partitioning and
-batch shape are real and tested. Decoding is REAL — baseline JPEG, PNG,
-GIF, lossless WebP (VP8L), binary PPM/PGM, 24/32-bit BMP images; WAV
-audio in PCM, IEEE-float, G.711 A-law/mu-law and IMA ADPCM flavors, plus
-FLAC — via pure stdlib+numpy codecs (jpeg.py, codecs.py, webp.py,
-flac.py; `decode_image`, `decode_audio`, with encode_* roundtrip
-fixtures). Only formats whose entropy coding genuinely
-requires an external library (AVIF, lossy-VP8 WebP, mp3/aac/opus) raise
-NotImplementedError in the same dispatcher, so swapping in PIL/ffmpeg
-changes one function body, not the pipeline. The deterministic MM01
-fake payloads used by the synthetic tables route to stub decoders.
+batch shape are real and tested. `decode_image` reads the uncompressed
+formats (binary PPM/PGM, 24/32-bit BMP); every compressed image format
+and every real audio payload raises NotImplementedError in the same
+dispatcher, so swapping in PIL/ffmpeg changes one function body, not the
+pipeline. The deterministic MM01 fake payloads used by the synthetic
+tables route to stub decoders.
 
 Schema convention:
   media(url string, kind string, payload binary,
@@ -58,43 +54,21 @@ def synth_media(spark: SparkSession, n: int = 100) -> DataFrame:
 
 
 def decode_image(payload: bytes) -> np.ndarray:
-    """REAL image decode, pure stdlib+numpy: binary PPM (P6) / PGM (P5),
-    uncompressed 24/32-bit BMP, and — via codecs.py / jpeg.py — PNG
-    (zlib inflate + all five scanline filters, every color type), GIF
-    (variable-width LZW, interlace), baseline JPEG (canonical
-    Huffman + IDCT, 4:4:4/4:2:2/4:2:0), and lossless WebP (VP8L:
-    prefix codes + LZ77 + color cache + all four transforms, webp.py).
-    The synthetic MM01 fake-header payloads route to the deterministic
-    stub. Formats whose entropy coding genuinely needs a codec library
-    (AVIF/HEIC, lossy-VP8 WebP) raise NotImplementedError — swapping in
-    PIL changes this dispatcher only, not the pipeline."""
+    """Image decode, pure stdlib+numpy: binary PPM (P6) / PGM (P5) and
+    uncompressed 24/32-bit BMP. The synthetic MM01 fake-header payloads
+    route to the deterministic stub. Compressed formats (PNG, GIF, JPEG,
+    WebP, AVIF/HEIC) raise NotImplementedError — swapping in PIL changes
+    this dispatcher only, not the pipeline."""
     b = bytes(payload)
     if b[:5] == b"MM01:":
         return decode_image_stub(b)
     if b[:2] in (b"P6", b"P5"):
         return _decode_pnm(b)
-    if b[:8] == b"\x89PNG\r\n\x1a\n":
-        from .codecs import decode_png
-
-        return decode_png(b)
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        from .codecs import decode_gif
-
-        return decode_gif(b)
-    if b[:2] == b"\xff\xd8":
-        from .jpeg import decode_jpeg
-
-        return decode_jpeg(b)
     if b[:2] == b"BM":
         return _decode_bmp(b)
-    if b[:4] == b"RIFF" and b[8:12] == b"WEBP":
-        from .webp import decode_webp
-
-        return decode_webp(b)
     raise NotImplementedError(
-        "AVIF/HEIC (and lossy-VP8 WebP) need codec libraries not present "
-        "in this container; supported here: JPEG(baseline)/PNG/GIF/"
-        "WebP(lossless VP8L)/PPM/PGM/BMP"
+        "compressed image formats need a codec library; supported here: "
+        "PPM/PGM/BMP"
     )
 
 
@@ -152,45 +126,15 @@ def encode_ppm(img: np.ndarray) -> bytes:
 
 
 def decode_audio(payload: bytes, sample_rate: int | None = None) -> np.ndarray:
-    """REAL audio decode → float32 mono in [-1, 1]: WAV in PCM 8/16/24/32,
-    IEEE float, G.711 A-law/mu-law, and IMA ADPCM flavors (codecs.py —
-    stdlib `wave` only reads PCM, so the RIFF walk is hand-rolled). MM01
-    fake payloads route to the stub; perceptual codecs (mp3/aac/opus)
-    raise NotImplementedError (need ffmpeg/soundfile)."""
+    """Audio decode → float32 mono in [-1, 1]. MM01 fake payloads route to
+    the stub; real audio codecs (WAV, FLAC, mp3/aac/opus) raise
+    NotImplementedError (need ffmpeg/soundfile)."""
     b = bytes(payload)
     if b[:5] == b"MM01:":
         return decode_audio_stub(b, sample_rate or 16000)
-    if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-        from .codecs import decode_wav
-
-        return decode_wav(b)
-    if b[:4] == b"fLaC":
-        from .flac import decode_flac
-
-        return decode_flac(b)
     raise NotImplementedError(
-        "perceptual audio codecs (mp3/aac/opus) need ffmpeg/soundfile; "
-        "supported here: WAV PCM/float/A-law/mu-law/IMA-ADPCM, FLAC"
+        "audio codecs need ffmpeg/soundfile; only MM01 stub payloads decode"
     )
-
-
-def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
-    """float mono [-1,1] → 16-bit PCM WAV bytes (roundtrip fixture)."""
-    import io
-    import wave
-
-    pcm = np.clip(np.asarray(samples, dtype=np.float64), -1.0, 1.0)
-    # rint, not truncation: k/32767.0 * 32767.0 must round back to k
-    # exactly for integer-valued inputs (the decode-contract oracle
-    # feeds integer PCM scaled to [-1,1])
-    pcm16 = np.rint(pcm * 32767.0).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(sample_rate)
-        wf.writeframes(pcm16.tobytes())
-    return buf.getvalue()
 
 
 def decode_image_stub(payload: bytes) -> np.ndarray:
@@ -240,10 +184,7 @@ def image_features(media: DataFrame, out_dim: int = 16) -> DataFrame:
 
 def resize_plan(media: DataFrame, max_side: int = 224) -> DataFrame:
     """Resize *planning* is pure column math (JVM): target dims preserving
-    aspect ratio. The REAL pixel resample lives in transform.resize_images
-    (bilinear over the decoded pixels; transform.target_dims is the exact
-    JVM twin of its integer dimension rule — this rounding variant is kept
-    for the metadata-only estimate path)."""
+    aspect ratio, from the metadata alone."""
     w = F.col("meta.width").cast("double")
     h = F.col("meta.height").cast("double")
     scale = F.least(F.lit(float(max_side)) / w, F.lit(float(max_side)) / h, F.lit(1.0))
@@ -254,9 +195,7 @@ def resize_plan(media: DataFrame, max_side: int = 224) -> DataFrame:
 
 def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame sampling plan: explode one row per sampled timestamp
-    (JVM sequence/explode — the fan-out shape is what matters at scale).
-    The REAL frame grab is transform.sample_frames, which seeks the MJPG
-    frame table and decodes only the kept frames."""
+    (JVM sequence/explode — the fan-out shape is what matters at scale)."""
     v = media.where(F.col("kind") == "video")
     ts = F.sequence(F.lit(0), F.col("meta.duration_ms").cast("long"), F.lit(int(every_ms)))
     return v.select("url", F.explode(ts).alias("frame_ms"))

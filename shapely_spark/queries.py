@@ -1704,12 +1704,20 @@ def bigram_logprob_filter(spark, sf_dir):
             .repartition(1).sortWithinPartitions("doc_id"))
 
 
+# 1- and 2-token documents (negative ids, corpus vocabulary): positions
+# that can attempt only the unigram / bigram level of the trigram chain.
+_LM_SHORT_DOCS = [(-1, "join"), (-2, "join hash")]
+
+
 @q(
     "trigram_logprob_filter",
-    """
-    WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-                      unnest(range(0, len(string_split(text, ' ')))) AS pos
-               FROM documents),
+    f"""
+    WITH docs AS (SELECT doc_id, text FROM documents UNION ALL
+                  SELECT * FROM (VALUES {", ".join(f"({i}::BIGINT, '{t}')" for i, t in _LM_SHORT_DOCS)})
+                  v(doc_id, text)),
+    t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word,
+                 unnest(range(0, len(string_split(text, ' ')))) AS pos
+          FROM docs),
     t2 AS (SELECT doc_id, pos, word,
                   lag(word) OVER w AS p1, lag(word, 2) OVER w AS p2
            FROM t WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
@@ -1754,10 +1762,12 @@ def trigram_logprob_filter(spark, sf_dir):
     min_count=100 / ngram_min_count=3 exercise every branch of the
     chain on the synthetic corpus. The oracle replays the full backoff
     CASE via two lag() windows and separator-joined keys — identical
-    arithmetic op order, round-6 means."""
+    arithmetic op order, round-6 means. The corpus carries the
+    `_LM_SHORT_DOCS` on both sides."""
     from .text.quality import ngram_logprob
 
-    d = _spread(_t(spark, sf_dir, "documents"))
+    short = spark.createDataFrame(_LM_SHORT_DOCS, "doc_id long, text string")
+    d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text").unionByName(short))
     out = ngram_logprob(d, order=3, min_count=100, ngram_min_count=3)
     return (out.select("doc_id", "n_tokens", "avg_logp")
             .repartition(1).sortWithinPartitions("doc_id"))
@@ -5682,101 +5692,6 @@ def skew_area_box(spark, sf_dir):
 
 
 @q(
-    "image_decode_px_sum",
-    """
-    WITH g AS (SELECT p_partkey AS gid,
-                      8 + p_partkey % 5 AS w, 6 + p_partkey % 4 AS h
-               FROM part),
-    px AS (
-      SELECT g.gid,
-             sum((x.x*7 + y.y*11 + c.c*13 + g.gid*17) % 256) AS px_sum
-      FROM g, range(0, 12) x(x), range(0, 9) y(y), range(0, 3) c(c)
-      WHERE x.x < g.w AND y.y < g.h
-      GROUP BY g.gid
-    )
-    SELECT gid, px_sum::BIGINT AS px_sum FROM px ORDER BY gid
-    """,
-)
-def image_decode_px_sum(spark, sf_dir):
-    """Contract oracle for the REAL image codec path (multimodal/media.py
-    encode_ppm → decode_image): per row build a w×h×3 image with pixel
-    (x,y,c) = (7x+11y+13c+17·gid) mod 256, serialize to binary PPM bytes,
-    decode through the production decoder, and sum the DECODED pixels.
-    DuckDB computes the same sum closed-form — any header-parse, layout,
-    or channel-order bug shifts the sum."""
-    p = _t(spark, sf_dir, "part")
-    k = F.col("p_partkey")
-    params = _spread(p.select(
-        k.alias("gid"),
-        (8 + k % 5).cast("int").alias("w"),
-        (6 + k % 4).cast("int").alias("h"),
-    ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal.media import decode_image, encode_ppm
-
-        for pdf in batches:
-            sums = []
-            for gid, w, h in zip(pdf.gid, pdf.w, pdf.h):
-                y, x, c = np.mgrid[0:h, 0:w, 0:3]
-                img = ((7 * x + 11 * y + 13 * c + 17 * int(gid)) % 256).astype(np.uint8)
-                dec = decode_image(encode_ppm(img))
-                assert dec.shape == (h, w, 3), (dec.shape, (h, w))
-                sums.append(int(dec.astype(np.int64).sum()))
-            yield pd.DataFrame({"gid": pdf.gid, "px_sum": sums})
-
-    return params.mapInPandas(gen, "gid long, px_sum long").repartition(1).sortWithinPartitions("gid")
-
-
-@q(
-    "audio_decode_abs_sum",
-    """
-    WITH g AS (SELECT p_partkey AS gid,
-                      400 + (p_partkey % 10) * 50 AS n
-               FROM part),
-    s AS (
-      SELECT g.gid,
-             sum(abs((i.i*37 + g.gid*101) % 2001 - 1000)) AS abs_sum
-      FROM g, range(0, 850) i(i)
-      WHERE i.i < g.n
-      GROUP BY g.gid
-    )
-    SELECT gid, abs_sum::BIGINT AS abs_sum FROM s ORDER BY gid
-    """,
-)
-def audio_decode_abs_sum(spark, sf_dir):
-    """Contract oracle for the REAL audio codec path (multimodal/media.py
-    encode_wav → decode_audio, 16-bit PCM WAV): per row synthesize n
-    integer samples s_i = (37i+101·gid) mod 2001 − 1000, scale to [-1,1],
-    write WAV bytes, decode through the production decoder, recover the
-    integer PCM and sum |s_i|. encode_wav rints (k/32767·32767 → k), and
-    |s_i| ≤ 1000 is exact in the decoder's float32, so the roundtrip is
-    bit-exact and DuckDB's closed-form sum must match."""
-    p = _t(spark, sf_dir, "part")
-    k = F.col("p_partkey")
-    params = _spread(p.select(
-        k.alias("gid"),
-        (400 + (k % 10) * 50).cast("int").alias("n"),
-    ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal.media import decode_audio, encode_wav
-
-        for pdf in batches:
-            sums = []
-            for gid, n in zip(pdf.gid, pdf.n):
-                i = np.arange(int(n), dtype=np.int64)
-                s_int = (i * 37 + int(gid) * 101) % 2001 - 1000
-                wav = encode_wav(s_int / 32767.0, sample_rate=16000)
-                dec = decode_audio(wav)
-                rec = np.rint(dec.astype(np.float64) * 32768.0).astype(np.int64)
-                sums.append(int(np.abs(rec).sum()))
-            yield pd.DataFrame({"gid": pdf.gid, "abs_sum": sums})
-
-    return params.mapInPandas(gen, "gid long, abs_sum long").repartition(1).sortWithinPartitions("gid")
-
-
-@q(
     "offset_curve_lengths",
     """
     SELECT p_partkey AS gid,
@@ -5813,535 +5728,6 @@ def offset_curve_lengths(spark, sf_dir):
     return params.mapInPandas(
         gen, "gid long, inner_len double, outer_len double"
     ).repartition(1).sortWithinPartitions("gid")
-
-
-# ---- round-3 widening: compressed-codec decode contracts -------------------
-
-@q(
-    "image_decode_png_px_sum",
-    f"""
-    WITH g AS (SELECT p_partkey AS gid,
-                      8 + p_partkey % 5 AS w, 6 + p_partkey % 4 AS h
-               FROM part),
-    px AS (
-      SELECT g.gid,
-             sum((x.x*7 + y.y*11 + c.c*13 + g.gid*17) % 256) AS px_sum
-      FROM g, range(0, 12) x(x), range(0, 9) y(y), range(0, 3) c(c)
-      WHERE x.x < g.w AND y.y < g.h
-      GROUP BY g.gid
-    )
-    SELECT gid, px_sum::BIGINT AS px_sum FROM px ORDER BY gid
-    """,
-)
-def image_decode_png_px_sum(spark, sf_dir):
-    """Contract oracle for the REAL PNG codec (multimodal/codecs.py
-    encode_png → decode_image): same closed-form pixel field as
-    image_decode_px_sum, but serialized as PNG — chunk walk + CRC, zlib
-    inflate, and (encode_png cycles filter = row % 5, h ≥ 6) every one
-    of the five scanline unfilters. Any chunk-parse, inflate, filter, or
-    channel-order bug shifts the sum."""
-    p = _t(spark, sf_dir, "part")
-    k = F.col("p_partkey")
-    params = _spread(p.select(
-        k.alias("gid"),
-        (8 + k % 5).cast("int").alias("w"),
-        (6 + k % 4).cast("int").alias("h"),
-    ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal.codecs import encode_png
-        from .multimodal.media import decode_image
-
-        for pdf in batches:
-            sums = []
-            for gid, w, h in zip(pdf.gid, pdf.w, pdf.h):
-                y, x, c = np.mgrid[0:h, 0:w, 0:3]
-                img = ((7 * x + 11 * y + 13 * c + 17 * int(gid)) % 256).astype(np.uint8)
-                dec = decode_image(encode_png(img))
-                assert dec.shape == (h, w, 3), (dec.shape, (h, w))
-                sums.append(int(dec.astype(np.int64).sum()))
-            yield pd.DataFrame({"gid": pdf.gid, "px_sum": sums})
-
-    return params.mapInPandas(gen, "gid long, px_sum long").repartition(1).sortWithinPartitions("gid")
-
-
-@q(
-    "image_decode_gif_px_sum",
-    """
-    WITH g AS (SELECT p_partkey AS gid,
-                      8 + p_partkey % 5 AS w, 6 + p_partkey % 4 AS h
-               FROM part),
-    px AS (
-      SELECT g.gid,
-             sum(((p.p*3 + 5) % 256) + ((p.p*7 + 11) % 256) + ((p.p*13 + 17) % 256)) AS px_sum
-      FROM (
-        SELECT g2.gid AS gid2, g2.w, g2.h,
-               (x.x*7 + y.y*11 + g2.gid) % 64 AS p
-        FROM g g2, range(0, 12) x(x), range(0, 9) y(y)
-        WHERE x.x < g2.w AND y.y < g2.h
-      ) p JOIN g ON g.gid = p.gid2
-      GROUP BY g.gid
-    )
-    SELECT gid, px_sum::BIGINT AS px_sum FROM px ORDER BY gid
-    """,
-)
-def image_decode_gif_px_sum(spark, sf_dir):
-    """Contract oracle for the REAL GIF codec (multimodal/codecs.py
-    encode_gif → decode_image, variable-width LZW): palette entry k =
-    ((3k+5)%256, (7k+11)%256, (13k+17)%256), pixel index (x,y) =
-    (7x+11y+gid) mod 64; decode through the production dispatcher and
-    sum all decoded channels. DuckDB recomputes the sum closed-form —
-    an LZW width/reset bug, palette-order bug, or row-layout bug shifts
-    it."""
-    p = _t(spark, sf_dir, "part")
-    k = F.col("p_partkey")
-    params = _spread(p.select(
-        k.alias("gid"),
-        (8 + k % 5).cast("int").alias("w"),
-        (6 + k % 4).cast("int").alias("h"),
-    ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal.codecs import encode_gif
-        from .multimodal.media import decode_image
-
-        pal = np.stack([(np.arange(64) * 3 + 5) % 256,
-                        (np.arange(64) * 7 + 11) % 256,
-                        (np.arange(64) * 13 + 17) % 256], axis=-1).astype(np.uint8)
-        for pdf in batches:
-            sums = []
-            for gid, w, h in zip(pdf.gid, pdf.w, pdf.h):
-                y, x = np.mgrid[0:h, 0:w]
-                idx = ((7 * x + 11 * y + int(gid)) % 64).astype(np.uint8)
-                dec = decode_image(encode_gif(pal[idx]))
-                assert dec.shape == (h, w, 3), (dec.shape, (h, w))
-                sums.append(int(dec.astype(np.int64).sum()))
-            yield pd.DataFrame({"gid": pdf.gid, "px_sum": sums})
-
-    return params.mapInPandas(gen, "gid long, px_sum long").repartition(1).sortWithinPartitions("gid")
-
-
-@q(
-    "audio_decode_ulaw_abs_sum",
-    """
-    WITH g AS (SELECT p_partkey AS gid, 200 + (p_partkey % 10) * 40 AS n
-               FROM part),
-    s AS (
-      SELECT g.gid,
-             -- G.711 mu-law expansion of code c = (37i+101*gid)%256:
-             -- u = ~c & 255; e = (u>>4)&7; m = u&15;
-             -- |x| = ((8m+132) << e) - 132  (sign = bit 7 of u)
-             sum((((255 - (i.i*37 + g.gid*101) % 256) % 16) * 8 + 132)
-                 * power(2, ((255 - (i.i*37 + g.gid*101) % 256) // 16) % 8) - 132) AS abs_sum
-      FROM g, range(0, 560) i(i)
-      WHERE i.i < g.n
-      GROUP BY g.gid
-    )
-    SELECT gid, abs_sum::BIGINT AS abs_sum FROM s ORDER BY gid
-    """,
-)
-def audio_decode_ulaw_abs_sum(spark, sf_dir):
-    """Contract oracle for the G.711 mu-law WAV path (multimodal/codecs.py
-    decode_wav, format tag 7): the payload is the raw CODE bytes
-    c_i = (37i+101·gid) mod 256 written into a WAV container
-    (encode_wav_codes — no companding encoder in the loop), decoded
-    through the production dispatcher, and |PCM| summed. DuckDB applies
-    the CCITT expansion closed-form: |x| = ((8m+132)·2^e) − 132 with
-    e/m unpacked from the complemented code byte. A table, sign, or
-    container-parse bug shifts the sum."""
-    p = _t(spark, sf_dir, "part")
-    k = F.col("p_partkey")
-    params = _spread(p.select(
-        k.alias("gid"),
-        (200 + (k % 10) * 40).cast("int").alias("n"),
-    ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal.codecs import encode_wav_codes
-        from .multimodal.media import decode_audio
-
-        for pdf in batches:
-            sums = []
-            for gid, n in zip(pdf.gid, pdf.n):
-                i = np.arange(int(n), dtype=np.int64)
-                codes = ((i * 37 + int(gid) * 101) % 256).astype(np.uint8)
-                dec = decode_audio(encode_wav_codes(codes, "ulaw"))
-                rec = np.rint(dec.astype(np.float64) * 32768.0).astype(np.int64)
-                sums.append(int(np.abs(rec).sum()))
-            yield pd.DataFrame({"gid": pdf.gid, "abs_sum": sums})
-
-    return params.mapInPandas(gen, "gid long, abs_sum long").repartition(1).sortWithinPartitions("gid")
-
-
-@q(
-    "image_decode_jpeg_px_sum",
-    """
-    WITH g AS (SELECT p_partkey AS gid,
-                      16 + p_partkey % 5 AS w, 8 + p_partkey % 3 AS h,
-                      (17 * p_partkey + 23) % 256 AS v1,
-                      (29 * p_partkey + 101) % 256 AS v2
-               FROM part)
-    SELECT gid,
-           CAST(3 * h * (8 * v1 + (w - 8) * v2) AS BIGINT) AS px_sum
-    FROM g ORDER BY gid
-    """,
-)
-def image_decode_jpeg_px_sum(spark, sf_dir):
-    """Contract oracle for the baseline JPEG codec (multimodal/jpeg.py):
-    a two-level grayscale image (first 8-pixel block column = v1, rest =
-    v2) encoded at quality 87, where the luma quantizer q[0,0] is 4 so
-    the DC-only blocks roundtrip BIT-EXACT (2(v−128)·4/8 = v−128 — no
-    rounding anywhere), making a lossy codec oracle-checkable: decoded
-    px_sum = 3·h·(8·v1 + (w−8)·v2). Exercises marker walk, DQT/DHT
-    canonical-Huffman parse, DC diff coding across blocks, EOB, IDCT,
-    and gray→RGB replication; AC paths are pinned by unit goldens."""
-    p = _t(spark, sf_dir, "part")
-    k = F.col("p_partkey")
-    params = _spread(p.select(
-        k.alias("gid"),
-        (16 + k % 5).cast("int").alias("w"),
-        (8 + k % 3).cast("int").alias("h"),
-        ((17 * k + 23) % 256).cast("int").alias("v1"),
-        ((29 * k + 101) % 256).cast("int").alias("v2"),
-    ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal.jpeg import encode_jpeg
-        from .multimodal.media import decode_image
-
-        for pdf in batches:
-            sums = []
-            for gid, w, h, v1, v2 in zip(pdf.gid, pdf.w, pdf.h, pdf.v1, pdf.v2):
-                img = np.full((int(h), int(w)), int(v1), np.uint8)
-                img[:, 8:] = int(v2)
-                dec = decode_image(encode_jpeg(img, quality=87))
-                assert dec.shape == (h, w, 3), (dec.shape, (h, w))
-                sums.append(int(dec.astype(np.int64).sum()))
-            yield pd.DataFrame({"gid": pdf.gid, "px_sum": sums})
-
-    return params.mapInPandas(gen, "gid long, px_sum long").repartition(1).sortWithinPartitions("gid")
-
-
-@q(
-    "image_resize_px_sum",
-    """
-    WITH g AS (SELECT p_partkey AS gid,
-                      8 + p_partkey % 29 AS w, 9 + p_partkey % 23 AS h,
-                      (13 * p_partkey + 7) % 256 AS v FROM part),
-    d AS (SELECT gid, v, w, h, greatest(w, h) AS m FROM g)
-    SELECT gid,
-           CAST(CASE WHEN m <= 16 THEN w ELSE greatest(1, (w*16) // m) END
-                AS INT) AS width,
-           CAST(CASE WHEN m <= 16 THEN h ELSE greatest(1, (h*16) // m) END
-                AS INT) AS height,
-           CAST(3 * v
-                * (CASE WHEN m <= 16 THEN w ELSE greatest(1, (w*16) // m) END)
-                * (CASE WHEN m <= 16 THEN h ELSE greatest(1, (h*16) // m) END)
-                AS BIGINT) AS px_sum
-    FROM d ORDER BY gid
-    """,
-)
-def image_resize_px_sum(spark, sf_dir):
-    """Contract oracle for the REAL bilinear resize
-    (multimodal/transform.py resize_image — no stub left in the resize
-    path): solid-color PPMs are decoded through the production
-    dispatcher and aspect-capped to max_side=16; bilinear weights sum
-    to 1 so a constant image resamples to exactly itself and the
-    decoded sum is 3·v·rw·rh with the integer-floor dimension rule the
-    SQL twin replays. w spans 8..36 so both the shrink branch and the
-    pass-through (m<=16) branch are exercised."""
-    p = _t(spark, sf_dir, "part")
-    k = F.col("p_partkey")
-    params = _spread(p.select(
-        k.alias("gid"),
-        (8 + k % 29).cast("int").alias("w"),
-        (9 + k % 23).cast("int").alias("h"),
-        ((13 * k + 7) % 256).cast("int").alias("v"),
-    ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal.media import decode_image, encode_ppm
-        from .multimodal.transform import resize_image
-
-        for pdf in batches:
-            ws, hs, sums = [], [], []
-            for w, h, v in zip(pdf.w, pdf.h, pdf.v):
-                img = np.full((int(h), int(w), 3), int(v), np.uint8)
-                out = resize_image(decode_image(encode_ppm(img)), 16)
-                hs.append(out.shape[0])
-                ws.append(out.shape[1])
-                sums.append(int(out.astype(np.int64).sum()))
-            yield pd.DataFrame({
-                "gid": pdf.gid,
-                "width": pd.Series(ws, dtype="int32"),
-                "height": pd.Series(hs, dtype="int32"),
-                "px_sum": pd.Series(sums, dtype="int64"),
-            })
-
-    return params.mapInPandas(
-        gen, "gid long, width int, height int, px_sum long"
-    ).repartition(1).sortWithinPartitions("gid")
-
-
-@q(
-    "audio_resample_abs_sum",
-    """
-    WITH g AS (SELECT p_partkey AS gid, 120 + (p_partkey % 7) * 30 AS n
-               FROM part),
-    c AS (SELECT gid, n, i.i AS i,
-                 ((i.i * 37 + gid * 53) % 400 - 200) * 64 AS c
-          FROM g, range(0, 300) i(i) WHERE i.i < n),
-    cc AS (SELECT gid, n, i, c,
-                  lead(c) OVER (PARTITION BY gid ORDER BY i) AS cn
-           FROM c)
-    SELECT gid,
-           CAST(sum(CASE WHEN i % 2 = 0 THEN abs(c) ELSE 0 END) AS BIGINT)
-               AS abs_dn,
-           CAST(sum(abs(c) + CASE WHEN i < n - 1 THEN abs((c + cn) // 2)
-                                  ELSE abs(c) END) AS BIGINT) AS abs_up
-    FROM cc GROUP BY gid ORDER BY gid
-    """,
-)
-def audio_resample_abs_sum(spark, sf_dir):
-    """Contract oracle for the REAL linear resampler
-    (multimodal/transform.py resample_audio): even integer PCM16 codes
-    survive the WAV roundtrip bit-exactly, 2× decimation keeps exactly
-    the even samples, and 2× upsampling inserts exactly the integer
-    midpoints plus the edge clamp — so both legs have closed forms
-    DuckDB replays with a lead() window. A phase-offset, length-rule,
-    or clamp bug shifts either sum."""
-    p = _t(spark, sf_dir, "part")
-    k = F.col("p_partkey")
-    params = _spread(p.select(
-        k.alias("gid"),
-        (120 + (k % 7) * 30).cast("int").alias("n"),
-    ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal.media import decode_audio, encode_wav
-        from .multimodal.transform import resample_audio
-
-        for pdf in batches:
-            dns, ups = [], []
-            for gid, n in zip(pdf.gid, pdf.n):
-                i = np.arange(int(n), dtype=np.int64)
-                c = ((i * 37 + int(gid) * 53) % 400 - 200) * 64
-                x = decode_audio(encode_wav(c / 32768.0, 16000))
-                dn = resample_audio(x, 16000, 8000)
-                up = resample_audio(x, 16000, 32000)
-                dns.append(int(np.abs(np.rint(dn.astype(np.float64) * 32768.0)).sum()))
-                ups.append(int(np.abs(np.rint(up.astype(np.float64) * 32768.0)).sum()))
-            yield pd.DataFrame({"gid": pdf.gid,
-                                "abs_dn": pd.Series(dns, dtype="int64"),
-                                "abs_up": pd.Series(ups, dtype="int64")})
-
-    return params.mapInPandas(
-        gen, "gid long, abs_dn long, abs_up long"
-    ).repartition(1).sortWithinPartitions("gid")
-
-
-@q(
-    "video_frame_sample_px_sum",
-    """
-    WITH g AS (SELECT p_partkey AS gid, 16 + p_partkey % 5 AS w,
-                      8 + p_partkey % 3 AS h, 4 + p_partkey % 5 AS n
-               FROM part),
-    f AS (SELECT gid, w, h, unnest(range(0, n)) AS fi FROM g)
-    SELECT gid, CAST(fi AS INT) AS frame_idx,
-           CAST(3 * h * (8 * ((17*gid + 23 + 31*fi) % 256)
-                         + (w - 8) * ((29*gid + 101 + 57*fi) % 256))
-                AS BIGINT) AS px_sum
-    FROM f WHERE fi % 2 = 0 ORDER BY gid, frame_idx
-    """,
-)
-def video_frame_sample_px_sum(spark, sf_dir):
-    """Contract oracle for REAL video frame sampling
-    (multimodal/transform.py sample_frames over the MJPG container):
-    each gid's payload holds 4..8 independent baseline JPEGs (the
-    bit-exact-DC two-level construction of image_decode_jpeg_px_sum,
-    per-frame values rotated by the frame index); the production
-    sampler seeks to every 2nd frame, decodes only those, and the
-    per-frame pixel sums must equal the closed form. A frame-table
-    seek bug, an off-by-one in the stride, or any decode drift breaks
-    the hash."""
-    from .multimodal.transform import sample_frames
-
-    p = _t(spark, sf_dir, "part")
-    k = F.col("p_partkey")
-    params = _spread(p.select(
-        k.alias("gid"),
-        (16 + k % 5).cast("int").alias("w"),
-        (8 + k % 3).cast("int").alias("h"),
-        (4 + k % 5).cast("int").alias("n"),
-    ))
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal.jpeg import encode_jpeg
-        from .multimodal.transform import encode_mjpeg
-
-        for pdf in batches:
-            urls, blobs = [], []
-            for gid, w, h, n in zip(pdf.gid, pdf.w, pdf.h, pdf.n):
-                frames = []
-                for fi in range(int(n)):
-                    img = np.full((int(h), int(w)),
-                                  (17 * int(gid) + 23 + 31 * fi) % 256, np.uint8)
-                    img[:, 8:] = (29 * int(gid) + 101 + 57 * fi) % 256
-                    frames.append(encode_jpeg(img, quality=87))
-                urls.append(str(int(gid)))
-                blobs.append(encode_mjpeg(frames))
-            yield pd.DataFrame({"url": urls, "payload": blobs})
-
-    videos = params.mapInPandas(build, "url string, payload binary")
-    out = sample_frames(videos, every=2)
-    return (
-        out.select(F.col("url").cast("long").alias("gid"), "frame_idx", "px_sum")
-        .repartition(1).sortWithinPartitions("gid", "frame_idx")
-    )
-
-
-@q(
-    "image_decode_jpeg_prog_px_sum",
-    """
-    WITH g AS (SELECT p_partkey AS gid,
-                      16 + p_partkey % 5 AS w, 8 + p_partkey % 3 AS h,
-                      (17 * p_partkey + 23) % 256 AS v1,
-                      (29 * p_partkey + 101) % 256 AS v2
-               FROM part)
-    SELECT gid,
-           CAST(3 * h * (8 * v1 + (w - 8) * v2) AS BIGINT) AS px_sum
-    FROM g ORDER BY gid
-    """,
-)
-def image_decode_jpeg_prog_px_sum(spark, sf_dir):
-    """Contract oracle for the PROGRESSIVE JPEG decode path (r4,
-    multimodal/jpeg.py Annex G): same two-level bit-exact-DC
-    construction as image_decode_jpeg_px_sum, serialized as an SOF2
-    scan script (DC first+refine, banded AC first, AC refinement). The
-    progressive reordering of identical coefficients must reproduce the
-    identical closed-form sum."""
-    p = _t(spark, sf_dir, "part")
-    k = F.col("p_partkey")
-    params = _spread(p.select(
-        k.alias("gid"),
-        (16 + k % 5).cast("int").alias("w"),
-        (8 + k % 3).cast("int").alias("h"),
-        ((17 * k + 23) % 256).cast("int").alias("v1"),
-        ((29 * k + 101) % 256).cast("int").alias("v2"),
-    ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal.jpeg import encode_jpeg_progressive
-        from .multimodal.media import decode_image
-
-        for pdf in batches:
-            sums = []
-            for gid, w, h, v1, v2 in zip(pdf.gid, pdf.w, pdf.h, pdf.v1, pdf.v2):
-                img = np.full((int(h), int(w)), int(v1), np.uint8)
-                img[:, 8:] = int(v2)
-                dec = decode_image(encode_jpeg_progressive(img, quality=87))
-                assert dec.shape == (h, w, 3), (dec.shape, (h, w))
-                sums.append(int(dec.astype(np.int64).sum()))
-            yield pd.DataFrame({"gid": pdf.gid, "px_sum": sums})
-
-    return params.mapInPandas(gen, "gid long, px_sum long").repartition(1).sortWithinPartitions("gid")
-
-
-@q(
-    "image_decode_webp_px_sum",
-    """
-    WITH g AS (SELECT p_partkey AS gid,
-                      8 + p_partkey % 5 AS w, 6 + p_partkey % 4 AS h
-               FROM part),
-    px AS (
-      SELECT g.gid,
-             sum((x.x*7 + y.y*11 + c.c*13 + g.gid*17) % 256) AS px_sum
-      FROM g, range(0, 12) x(x), range(0, 9) y(y), range(0, 3) c(c)
-      WHERE x.x < g.w AND y.y < g.h
-      GROUP BY g.gid
-    )
-    SELECT gid, px_sum::BIGINT AS px_sum FROM px ORDER BY gid
-    """,
-)
-def image_decode_webp_px_sum(spark, sf_dir):
-    """Contract oracle for the lossless WebP codec (multimodal/webp.py,
-    new in r4): the PNG query's closed-form pixel field, serialized as
-    VP8L. gid cycles the encoder mode — plain literals+run-LZ77,
-    SUBTRACT_GREEN transform, literal-only, and color-cache — so the
-    battery exercises prefix-code reading (simple AND code-length-coded),
-    both LZ77 distance encodings, the transform inverse, and the cache
-    hash, all against one mode-independent sum."""
-    p = _t(spark, sf_dir, "part")
-    k = F.col("p_partkey")
-    params = _spread(p.select(
-        k.alias("gid"),
-        (8 + k % 5).cast("int").alias("w"),
-        (6 + k % 4).cast("int").alias("h"),
-    ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal.media import decode_image
-        from .multimodal.webp import encode_webp_lossless
-
-        modes = ({}, {"subtract_green": True}, {"use_lz77": False},
-                 {"cache_bits": 5})
-        for pdf in batches:
-            sums = []
-            for gid, w, h in zip(pdf.gid, pdf.w, pdf.h):
-                y, x, c = np.mgrid[0:h, 0:w, 0:3]
-                img = ((7 * x + 11 * y + 13 * c + 17 * int(gid)) % 256).astype(np.uint8)
-                dec = decode_image(encode_webp_lossless(img, **modes[int(gid) % 4]))
-                assert dec.shape == (h, w, 3), (dec.shape, (h, w))
-                sums.append(int(dec.astype(np.int64).sum()))
-            yield pd.DataFrame({"gid": pdf.gid, "px_sum": sums})
-
-    return params.mapInPandas(gen, "gid long, px_sum long").repartition(1).sortWithinPartitions("gid")
-
-
-@q(
-    "audio_decode_flac_abs_sum",
-    """
-    WITH g AS (SELECT p_partkey AS gid, 300 + (p_partkey % 10) * 30 AS n
-               FROM part),
-    s AS (
-      SELECT g.gid,
-             sum(abs((i.i*53 + g.gid*71) % 4001 - 2000)) AS abs_sum
-      FROM g, range(0, 570) i(i)
-      WHERE i.i < g.n
-      GROUP BY g.gid
-    )
-    SELECT gid, abs_sum::BIGINT AS abs_sum FROM s ORDER BY gid
-    """,
-)
-def audio_decode_flac_abs_sum(spark, sf_dir):
-    """Contract oracle for the FLAC codec (multimodal/flac.py): FLAC is
-    LOSSLESS, so decode(encode(s)) recovers the integer PCM exactly —
-    samples s_i = (53i+71·gid) mod 4001 − 2000 go through the order-2
-    fixed predictor + Rice residual path (auto mode; non-uniform input)
-    and |s_i| is summed from the decoded floats. DuckDB recomputes the
-    sum closed-form. Any Rice/predictor/CRC/bit-packing bug shifts it."""
-    p = _t(spark, sf_dir, "part")
-    k = F.col("p_partkey")
-    params = _spread(p.select(
-        k.alias("gid"),
-        (300 + (k % 10) * 30).cast("int").alias("n"),
-    ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal.flac import encode_flac
-        from .multimodal.media import decode_audio
-
-        for pdf in batches:
-            sums = []
-            for gid, n in zip(pdf.gid, pdf.n):
-                i = np.arange(int(n), dtype=np.int64)
-                s_int = ((i * 53 + int(gid) * 71) % 4001 - 2000).astype(np.int16)
-                dec = decode_audio(encode_flac(s_int, mode="auto", block_size=256))
-                rec = np.rint(dec.astype(np.float64) * 32768.0).astype(np.int64)
-                sums.append(int(np.abs(rec).sum()))
-            yield pd.DataFrame({"gid": pdf.gid, "abs_sum": sums})
-
-    return params.mapInPandas(gen, "gid long, abs_sum long").repartition(1).sortWithinPartitions("gid")
 
 
 @q(
@@ -7040,29 +6426,22 @@ _DRIVER_WINDOW = [
     "tile_agg_regions", "training_pipeline_summary",
     # r5 rotation (r4 verdict item 5): the r4 driver sampled 50
     # previously-never-sampled queries, all green; this window rotates
-    # 45 of the remaining never-driver-sampled queries in. Exclusions
-    # (never sampled but left in the local-gate-only pool, each with a
-    # stronger driver-green sibling): sequence_pack_chunks /
-    # bpe_token_count (bpe_pack_pipeline + pack_chunk_occupancy),
-    # corpus_shuffle_head (mixture/hash-split family r4),
-    # url_canonical_dedup (pure-JVM, crawl family r4),
-    # decontaminate_eval_overlap (bloom_decontaminate_counts r4),
-    # pagerank_personalized_seeds (pagerank_doc_graph r4),
-    # duplicate_spans_counts (remove_duplicate_spans_clean r4).
+    # the remaining never-driver-sampled queries in.
     # verdict-named never-sampled set:
     "robots_filter_flags", "sitemap_parse_stats", "lpa_communities",
     "hits_doc_graph", "clustering_coeff_graph", "gopher_flags_counts",
     "gopher_repetition_flags", "stratified_sample_langs",
     "warc_revisit_roundtrip", "kmv_distinct_users",
     "range_join_error_windows", "pack_chunk_occupancy",
-    "image_resize_px_sum",
     # new in r5 (bigram backoff LM; touches/contains group-predicate
     # joins over non-rect layers):
     "bigram_logprob_filter", "spatial_join_touches_pairs",
     "spatial_join_contains_pairs",
     # remaining never-sampled text/crawl/graph/temporal:
     "c4_clean_lines_counts", "bfs_crawl_depths", "latest_snapshot_urls",
-    "audio_resample_abs_sum",
+    "bpe_token_count", "corpus_shuffle_head", "decontaminate_eval_overlap",
+    "duplicate_spans_counts", "pagerank_personalized_seeds",
+    "sequence_pack_chunks", "trigram_logprob_filter", "url_canonical_dedup",
     # never-sampled SQL + geometry singles (r2/r3 era):
     "tpch_q5", "tpch_q10_variant", "crosses_segments", "hausdorff_boxes",
     "frechet_segments", "oriented_envelope_area",
@@ -7070,11 +6449,7 @@ _DRIVER_WINDOW = [
     "split_segment_pieces", "substring_frac_length",
     "geojson_roundtrip_area", "mbc_radius_ngon", "touches_overlaps_boxes",
     "inscribed_circle_box", "coverage_valid_grid", "skew_area_box",
-    # never-sampled codec singles:
-    "image_decode_px_sum", "audio_decode_abs_sum", "offset_curve_lengths",
-    "image_decode_png_px_sum", "image_decode_gif_px_sum",
-    "audio_decode_ulaw_abs_sum", "image_decode_jpeg_px_sum",
-    "image_decode_webp_px_sum",
+    "offset_curve_lengths", "spatial_join_within",
 ]
 
 assert len(_DRIVER_WINDOW) == 50, len(_DRIVER_WINDOW)

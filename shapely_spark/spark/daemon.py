@@ -35,11 +35,6 @@ try:  # noqa: SIM105
     import shapely_spark.geo.coverage  # noqa: F401
     import shapely_spark.geo.geojson  # noqa: F401
     import shapely_spark.index.cells  # noqa: F401
-    import shapely_spark.multimodal.media  # noqa: F401
-    import shapely_spark.multimodal.codecs  # noqa: F401
-    import shapely_spark.multimodal.flac  # noqa: F401
-    import shapely_spark.multimodal.jpeg  # noqa: F401
-    import shapely_spark.multimodal.webp  # noqa: F401
 except Exception:  # pragma: no cover - diagnostic only
     import traceback
 

@@ -110,14 +110,6 @@ def _build() -> dict:
         return pred
 
 
-    @F.pandas_udf("string")
-    def st_relate(a: pd.Series, b: pd.Series) -> pd.Series:
-        """reference: shapely/predicates.py:1194 — full DE-9IM matrix."""
-        return pd.Series([
-            None if (g is None or h is None) else K.relate(g, h)
-            for g, h in zip(_geoms(a), _geoms(b))
-        ])
-
     @F.pandas_udf("long")
     def st_cell(lat: pd.Series, lon: pd.Series, res: pd.Series) -> pd.Series:
         """Grid cell id at resolution `res` (engine-owned index; mirrors
@@ -141,13 +133,6 @@ def _build() -> dict:
                         int(parent_res.iloc[0])),
             dtype="int64")
 
-    @F.pandas_udf("boolean")
-    def st_dwithin(a: pd.Series, b: pd.Series, dist: pd.Series) -> pd.Series:
-        """reference: shapely/predicates.py:1269 dwithin."""
-        return pd.Series(
-            [K.dwithin(g, h, float(d))
-             for g, h, d in zip(_geoms(a), _geoms(b), dist)], dtype="bool")
-
     st_intersects = _binary_pred(K.intersects)
     st_contains = _binary_pred(K.contains)
     st_within = _binary_pred(K.within)
@@ -161,8 +146,8 @@ def _build() -> dict:
 
     @F.pandas_udf("boolean")
     def st_contains_xy(wkb: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-        """reference: shapely/predicates.py:1311 — prepared point fast path,
-        vectorized over the batch grouped by distinct polygon."""
+        """reference: shapely/predicates.py:1311 — K.contains_xy once per
+        distinct geometry of the batch."""
         out = np.zeros(len(wkb), dtype=bool)
         xs = x.to_numpy(np.float64)
         ys = y.to_numpy(np.float64)
@@ -172,10 +157,7 @@ def _build() -> dict:
                 continue
             sel = codes == u_idx
             g = from_wkb(bytes(u), on_invalid="ignore")
-            if g is None:
-                continue
-            prep = K.PreparedPolygons([g])
-            out[sel] = prep.classify(0, xs[sel], ys[sel]) == K.INTERIOR
+            out[sel] = K.contains_xy(g, xs[sel], ys[sel])
         return pd.Series(out)
 
 
@@ -511,8 +493,6 @@ def _build() -> dict:
         "st_m": st_m,
         "st_numgeometries": st_numgeometries,
         "st_geometryn": st_geometryn,
-        "st_relate": st_relate,
-        "st_dwithin": st_dwithin,
         "st_hausdorffdistance": st_hausdorffdistance,
         "st_lineinterpolatepoint": st_lineinterpolatepoint,
         "st_linelocatepoint": st_linelocatepoint,

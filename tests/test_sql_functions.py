@@ -3,6 +3,7 @@ geometry ops from plain Spark SQL over WKB columns."""
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -64,6 +65,35 @@ def test_sql_contains_xy_and_buffer(spark, shapes):
     """).first()
     assert r.inside is True and r.outside is False
     assert r.buf_area == pytest.approx(0.5 * 32 * 4.0 * math.sin(2 * math.pi / 32))
+
+
+# (wkt, probe points): on-vertex, interior and exterior probes per type.
+_XY_CASES = [
+    ("LINESTRING (0 0, 2 0)", [(1, 0), (0, 0), (1, 1)]),
+    ("POINT (1 0)", [(1, 0), (1, 1)]),
+    ("MULTIPOINT ((1 0), (3 3))", [(1, 0), (3, 3), (2, 2)]),
+    ("POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))", [(1, 1), (0, 1), (3, 3)]),
+]
+
+
+@pytest.mark.parametrize("wkt,pts", _XY_CASES, ids=[c[0].split(" ")[0] for c in _XY_CASES])
+def test_contains_xy_matches_scalar_kernel_for_every_type(spark, wkt, pts):
+    """contains_xy / intersects_xy / st_contains_xy agree with the scalar
+    kernels on polygonal AND non-polygonal geometries."""
+    from shapely_spark.geo import contains_xy, from_wkt, intersects_xy, point
+    from shapely_spark.geo import kernels as K
+
+    g = from_wkt(wkt)
+    xs, ys = (np.array(c, dtype=float) for c in zip(*pts))
+    want_c = [K.contains(g, point(x, y)) for x, y in pts]
+    want_i = [K.intersects(g, point(x, y)) for x, y in pts]
+    assert True in want_c and False in want_i
+    assert contains_xy(g, xs, ys).tolist() == want_c
+    assert intersects_xy(g, xs, ys).tolist() == want_i
+    df = spark.createDataFrame([(i, wkt, float(x), float(y)) for i, (x, y) in enumerate(pts)],
+                               "i int, wkt string, x double, y double")
+    got = df.selectExpr("i", "st_contains_xy(st_geomfromtext(wkt), x, y) AS c").collect()
+    assert [r.c for r in sorted(got)] == want_c
 
 
 def test_sql_constructive_roundtrip(spark, shapes):
