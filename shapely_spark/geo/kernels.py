@@ -234,57 +234,16 @@ def points_in_rings_class(px, py, rings) -> np.ndarray:
     return out
 
 
-class PreparedPolygons:
-    """Executor-local prepared polygon layer (reference semantics:
-    shapely/creation.py:735 prepare — a cached edge structure reused across
-    many predicate calls; here also STRtree-style bbox prune,
-    shapely/strtree.py:30).
-
-    Holds N polygons (polygon or multipolygon Geometry); classifies large
-    point batches against each. Built once per executor from a broadcast
-    variable — never per row (SURVEY.md §2.2).
-    """
-
-    def __init__(self, geoms: list[Geometry | None]):
-        self.geoms = geoms
-        self.ring_sets: list[list[np.ndarray]] = []
-        self.bboxes = np.full((len(geoms), 4), np.nan)
-        for i, g in enumerate(geoms):
-            rings: list[np.ndarray] = []
-            if g is not None and not g.is_empty:
-                if g.type_id == POLYGON:
-                    rings = [np.asarray(r)[:, :2] for r in g.rings]
-                elif g.type_id in (MULTIPOLYGON, GEOMETRYCOLLECTION):
-                    for p in g.parts or []:
-                        if p.type_id == POLYGON:
-                            rings.extend(np.asarray(r)[:, :2] for r in p.rings)
-                self.bboxes[i] = bounds(g)
-            self.ring_sets.append(rings)
-
-    def classify(self, idx: int, px, py) -> np.ndarray:
-        """0/1/2 classification of points vs polygon idx, bbox-pruned."""
-        px = np.asarray(px, dtype=np.float64)
-        py = np.asarray(py, dtype=np.float64)
-        out = np.zeros(px.shape, dtype=np.int8)
-        bb = self.bboxes[idx]
-        if np.isnan(bb[0]):
-            return out
-        mask = (px >= bb[0]) & (px <= bb[2]) & (py >= bb[1]) & (py <= bb[3])
-        if mask.any():
-            out[mask] = points_in_rings_class(px[mask], py[mask], self.ring_sets[idx])
-        return out
-
-    def test(self, idx: int, px, py, predicate: str) -> np.ndarray:
-        cls = self.classify(idx, px, py)
-        if predicate in ("intersects", "covers", "covered_by"):
-            return cls >= BOUNDARY
-        if predicate in ("contains", "within", "contains_properly"):
-            return cls == INTERIOR
-        if predicate == "touches":
-            return cls == BOUNDARY
-        if predicate == "disjoint":
-            return cls == EXTERIOR
-        raise ValueError(f"unsupported point-vs-polygon predicate {predicate!r}")
+def _chunks(weight: np.ndarray, limit: int = 1 << 20):
+    """Slices of consecutive items whose weights sum to at most `limit`
+    (a heavier item gets a slice of its own): bounds the memory of a
+    ragged pair expansion whatever the size of one geometry."""
+    cum = np.cumsum(weight)
+    s = 0
+    while s < len(cum):
+        e = max(int(np.searchsorted(cum, (cum[s - 1] if s else 0) + limit, "right")), s + 1)
+        yield slice(s, e)
+        s = e
 
 
 class RaggedPolygonLayer:
@@ -295,12 +254,12 @@ class RaggedPolygonLayer:
     'vectorized ray-casting' form; reference per-geometry analog:
     shapely/creation.py:735 prepare).
 
-    Why it exists: PreparedPolygons.classify costs ~20 µs of Python
-    dispatch per distinct region per batch. At a 100k-region layer each
-    Arrow batch holds ~1 candidate per region, so the per-group path
-    degenerates to per-row Python. Here the work per batch is a fixed
-    handful of NumPy ops over the expanded (candidate, edge) pairs —
-    identical FLOPs, no per-region dispatch.
+    Why it exists: a per-region classify costs ~20 µs of Python dispatch
+    per distinct region per batch. At a 100k-region layer each Arrow
+    batch holds ~1 candidate per region, so a per-group path degenerates
+    to per-row Python. Here the work per batch is a fixed handful of
+    NumPy ops over the expanded (candidate, edge) pairs, in chunks of
+    bounded size — identical FLOPs, no per-region dispatch.
 
     Built ONCE (driver side, then broadcast as plain arrays): workers
     pay zero per-region construction. Semantics are bit-identical to
@@ -363,9 +322,24 @@ class RaggedPolygonLayer:
             np.cumsum(cnt) - cnt, cnt)
         return row_idx, start[rids][row_idx] + offs
 
+    def odd_crossings(self, rids, px, py) -> np.ndarray:
+        """Half-open even-odd ray-cast parity of point i vs region rids[i]
+        (True = odd crossing count), bit for bit as points_in_rings_class;
+        the (point, edge) expansion runs in _chunks-bounded slices."""
+        odd = np.zeros(len(rids), dtype=bool)
+        for s in _chunks((self.cross_start[1:] - self.cross_start[:-1])[rids]):
+            p, e = self._expand(self.cross_start, rids[s])
+            seg, y = self.cross_seg[e], py[s][p]
+            c = (seg[:, 1] > y) != (seg[:, 3] > y)
+            p, (x1, y1, x2, y2), y = p[c], seg[c].T, y[c]
+            hit = px[s][p] < x1 + (y - y1) * (x2 - x1) / (y2 - y1)
+            odd[s] = np.bincount(p[hit], minlength=s.stop - s.start) % 2 == 1
+        return odd
+
     def classify_many(self, rids, px, py) -> np.ndarray:
         """0 exterior / 1 boundary / 2 interior of point i vs region
-        rids[i] — one vectorized pass for the whole heterogeneous batch."""
+        rids[i] — one vectorized pass for the whole heterogeneous batch;
+        points outside their region's bbox are EXTERIOR unexamined."""
         rids = np.asarray(rids, dtype=np.int64)
         px = np.asarray(px, dtype=np.float64)
         py = np.asarray(py, dtype=np.float64)
@@ -378,32 +352,17 @@ class RaggedPolygonLayer:
             return out
         li = np.nonzero(live)[0]
         r, x, y = rids[li], px[li], py[li]
-        # even-odd crossing parity over the region's own edges
-        row, eidx = self._expand(self.cross_start, r)
-        if len(row):
-            s = self.cross_seg[eidx]
-            x1, y1, x2, y2 = s[:, 0], s[:, 1], s[:, 2], s[:, 3]
-            PX, PY = x[row], y[row]
-            cond = (y1 > PY) != (y2 > PY)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                xint = x1 + (PY - y1) * (x2 - x1) / (y2 - y1)
-            hits = cond & (PX < xint)
-            crossings = np.bincount(row[hits], minlength=len(li))
-            inside = (crossings % 2).astype(bool)
-            out[li[inside]] = INTERIOR
+        out[li[self.odd_crossings(r, x, y)]] = INTERIOR
         # exact on-boundary test overrides (eps = 0, as points_on_segments)
-        row, eidx = self._expand(self.bnd_start, r)
-        if len(row):
-            s = self.bnd_seg[eidx]
-            x1, y1, x2, y2 = s[:, 0], s[:, 1], s[:, 2], s[:, 3]
-            PX, PY = x[row], y[row]
+        for s in _chunks((self.bnd_start[1:] - self.bnd_start[:-1])[r]):
+            row, eidx = self._expand(self.bnd_start, r[s])
+            x1, y1, x2, y2 = self.bnd_seg[eidx].T
+            PX, PY = x[s][row], y[s][row]
             cross = (x2 - x1) * (PY - y1) - (y2 - y1) * (PX - x1)
             onb = ((cross == 0.0)
                    & (PX >= np.minimum(x1, x2)) & (PX <= np.maximum(x1, x2))
                    & (PY >= np.minimum(y1, y2)) & (PY <= np.maximum(y1, y2)))
-            if onb.any():
-                hit = np.unique(row[onb])
-                out[li[hit]] = BOUNDARY
+            out[li[s][row[onb]]] = BOUNDARY
         return out
 
 
@@ -412,7 +371,9 @@ def _predicate_xy(geom: Geometry | None, x, y, predicate: str, scalar) -> np.nda
     call); any other type runs the scalar DE-9IM kernel per point."""
     x, y = np.atleast_1d(x).astype(np.float64), np.atleast_1d(y).astype(np.float64)
     if geom is None or geom.type_id in (POLYGON, MULTIPOLYGON):
-        return PreparedPolygons([geom]).test(0, x, y, predicate)
+        cls = RaggedPolygonLayer({0: geom}).classify_many(
+            np.zeros(x.size, dtype=np.int64), x.ravel(), y.ravel()).reshape(x.shape)
+        return cls == INTERIOR if predicate == "contains" else cls >= BOUNDARY
     return np.array([scalar(geom, point(px, py)) for px, py in zip(x.ravel(), y.ravel())],
                     dtype=bool).reshape(x.shape)
 
@@ -506,6 +467,12 @@ def intersects(a: Geometry | None, b: Geometry | None) -> bool:
         return False
     if _bbox_disjoint(a, b):
         return False
+    if b.type_id == GEOMETRYCOLLECTION:
+        a, b = b, a
+    if a.type_id == GEOMETRYCOLLECTION:
+        # exact member by member: the dim dispatch below would read a mixed
+        # collection as areal and drop its lines and points
+        return any(intersects(m, b) for m in a.parts or [])
     da, db = _dim(a), _dim(b)
     if da > db:
         return intersects(b, a)
@@ -1457,144 +1424,3 @@ def validate(geom: Geometry | None) -> str | None:
     """reference: shapely/ops.py:211 ops.validate — returns the validity
     reason string (the reference delegates to is_valid_reason)."""
     return is_valid_reason(geom)
-
-
-# ---------------------------------------------------------------------------
-# Group-vectorized intersects: one right geometry vs a batch of lefts
-# (the spatial_join_geom refine hot path — r3 verdict item 2: the non-rect
-# remainder ran the scalar kernel per pair)
-# ---------------------------------------------------------------------------
-
-_EDGE_CHUNK = 1 << 22  # cap the (left-edge × right-edge) outer product rows
-
-
-def _ragged_stack(arrays: list[np.ndarray], width: int):
-    """Concatenate per-owner arrays; return (stacked, owner_index)."""
-    keep = [(i, a) for i, a in enumerate(arrays) if len(a)]
-    if not keep:
-        return np.zeros((0, width)), np.zeros(0, np.int64)
-    stacked = np.concatenate([a for _, a in keep], axis=0)
-    owner = np.repeat(np.fromiter((i for i, _ in keep), np.int64,
-                                  count=len(keep)),
-                      [len(a) for _, a in keep])
-    return stacked, owner
-
-
-def _any_by_owner(hits: np.ndarray, owner: np.ndarray, n: int) -> np.ndarray:
-    out = np.zeros(n, dtype=bool)
-    if hits.any():
-        out[np.unique(owner[hits])] = True
-    return out
-
-
-def _points_on_closure(px, py, geom: Geometry) -> np.ndarray:
-    """Boolean: each point lies on the CLOSURE of geom (the intersects
-    point test — points_in_rings_class >= BOUNDARY for areas,
-    points_on_segments for lines, coordinate equality for points)."""
-    d = _dim(geom)
-    if d == 2:
-        return points_in_rings_class(px, py, _rings_of(geom)) >= BOUNDARY
-    if d == 1:
-        return points_on_segments(px, py, _edges(geom))
-    rp = _points_of(geom)
-    return np.any((px[:, None] == rp[None, :, 0])
-                  & (py[:, None] == rp[None, :, 1]), axis=1)
-
-
-def _segments_intersect_pairs(sa: np.ndarray, owner: np.ndarray,
-                              sb: np.ndarray, n: int) -> np.ndarray:
-    """Per-owner any-intersection between owner-tagged segments sa and the
-    shared segment set sb — same proper/touch maths as
-    _segments_intersect_any, chunked so the outer product stays in cache."""
-    out = np.zeros(n, dtype=bool)
-    if len(sa) == 0 or len(sb) == 0:
-        return out
-    rows_per_chunk = max(1, _EDGE_CHUNK // max(len(sb), 1))
-    for s in range(0, len(sa), rows_per_chunk):
-        a = sa[s:s + rows_per_chunk]
-        own = owner[s:s + rows_per_chunk]
-        ax1, ay1, ax2, ay2 = (a[:, i][:, None] for i in range(4))
-        bx1, by1, bx2, by2 = (sb[:, i][None, :] for i in range(4))
-        d1 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
-        d2 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
-        d3 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)
-        d4 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)
-        hit = (((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
-               & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0))
-
-        def on(d, px, py, x1, y1, x2, y2):
-            return ((d == 0)
-                    & (px >= np.minimum(x1, x2)) & (px <= np.maximum(x1, x2))
-                    & (py >= np.minimum(y1, y2)) & (py <= np.maximum(y1, y2)))
-
-        hit |= (on(d1, bx1, by1, ax1, ay1, ax2, ay2)
-                | on(d2, bx2, by2, ax1, ay1, ax2, ay2)
-                | on(d3, ax1, ay1, bx1, by1, bx2, by2)
-                | on(d4, ax2, ay2, bx1, by1, bx2, by2))
-        rows = hit.any(axis=1)
-        if rows.any():
-            out[np.unique(own[rows])] = True
-    return out
-
-
-def group_intersects(lgeoms: list, rgeom: Geometry | None) -> np.ndarray:
-    """Vectorized intersects(lgeoms[i], rgeom) over a whole left batch.
-
-    Exactly the scalar dispatch's three-way union (kernels.intersects):
-    a pair intersects iff (1) some left vertex lies on the right's
-    closure, or (2) some right vertex lies on the left's closure, or
-    (3) some left edge meets some right edge (proper or touching).
-    Each stage is one NumPy pass over owner-tagged stacked arrays —
-    no per-pair Python. Agreement with the scalar kernel is pinned by a
-    fuzz test (tests/test_join.py)."""
-    n = len(lgeoms)
-    out = np.zeros(n, dtype=bool)
-    if rgeom is None or rgeom.is_empty:
-        return out
-    rb = bounds(rgeom)
-
-    alive_idx = []
-    for i, g in enumerate(lgeoms):
-        if g is None or g.is_empty:
-            continue
-        lb = bounds(g)
-        if np.isnan(lb[0]) or lb[0] > rb[2] or rb[0] > lb[2] \
-                or lb[1] > rb[3] or rb[1] > lb[3]:
-            continue
-        alive_idx.append(i)
-    if not alive_idx:
-        return out
-    alive_idx = np.asarray(alive_idx, dtype=np.int64)
-    alive = [lgeoms[i] for i in alive_idx]
-    m = len(alive)
-
-    # stage 1: left vertices on closure(right)
-    pts, owner = _ragged_stack([_points_of(g) for g in alive], 2)
-    dec = _any_by_owner(_points_on_closure(pts[:, 0], pts[:, 1], rgeom),
-                        owner, m)
-
-    # stage 2: right vertices on closure(left), undecided lefts only
-    und = np.flatnonzero(~dec)
-    if len(und):
-        rpts = _points_of(rgeom)
-        rx, ry = rpts[:, 0], rpts[:, 1]
-        for k in und:
-            g = alive[k]
-            # per-left call, but each is ONE vectorized pass over all
-            # right vertices (right vertex counts dwarf left counts in
-            # the admin-boundary regime this path serves)
-            if _points_on_closure(rx, ry, g).any():
-                dec[k] = True
-
-    # stage 3: edge × edge, still-undecided lefts
-    und = np.flatnonzero(~dec)
-    if len(und):
-        redges = _edges(rgeom)
-        if len(redges):
-            ledges, eowner = _ragged_stack(
-                [_edges(alive[k]) for k in und], 4)
-            hit = _segments_intersect_pairs(ledges, eowner, redges, len(und))
-            dec[und[hit]] = True
-
-    out[alive_idx[dec]] = True
-    return out

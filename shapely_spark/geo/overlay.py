@@ -352,9 +352,15 @@ def _assemble(rings: list[np.ndarray], tol: float) -> Geometry:
     shells.sort(key=lambda t: t[1])  # smallest first → innermost shell wins
     polys = [[s] for s, _ in shells]
     for h, _ in holes:
-        hx, hy = h[0, 0], h[0, 1]
+        # A hole may touch its shell at a node whose two fp-computed copies
+        # differ by ulps, so its first vertex can classify as EXTERIOR by
+        # 1e-16. Probe every vertex and edge midpoint: the hole nests in the
+        # first shell that holds one of them in its interior (or, for a hole
+        # lying wholly on shell boundaries, none of them outside).
+        probe = np.vstack([h[:-1], (h[:-1] + h[1:]) * 0.5])
         for i, (s, _) in enumerate(shells):
-            if K.points_in_rings_class(np.array([hx]), np.array([hy]), [s])[0] >= BOUNDARY:
+            cls = K.points_in_rings_class(probe[:, 0], probe[:, 1], [s])
+            if (cls == INTERIOR).any() or (cls >= BOUNDARY).all():
                 polys[i].append(h)
                 break
     if len(polys) == 1:

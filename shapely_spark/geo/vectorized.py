@@ -4,9 +4,9 @@ reference: shapely/vectorized/__init__.py — ``contains(geometry, x, y)``
 and ``touches(geometry, x, y)`` evaluate one geometry against arrays of
 point coordinates, emitting the reference's DeprecationWarning that
 points at the 2.0 ``contains_xy``/``intersects_xy`` replacements. The
-polygonal path rides the PreparedPolygons classifier (kernels.py; the
-same crossing-parity test as the spatial join's RaggedPolygonLayer): one
-ring extraction per call, one vectorized crossing-parity pass per batch. Non-polygonal geometries
+polygonal path rides the spatial join's RaggedPolygonLayer classifier
+(kernels.py): one ring extraction per call, one bbox-masked,
+vectorized crossing-parity pass per batch. Non-polygonal geometries
 (points/lines) fall back to the scalar DE-9IM kernels per point — the
 reference delegates those to per-point GEOS prepared ops too.
 """
@@ -81,6 +81,7 @@ def touches(geometry, x, y) -> np.ndarray:
     geom = _unwrap(geometry)
     x, y = _xy(x, y)
     if geom.type_id in _POLYGONAL:
-        prep = K.PreparedPolygons([geom])
-        return prep.test(0, x.ravel(), y.ravel(), "touches").reshape(x.shape)
+        cls = K.RaggedPolygonLayer({0: geom}).classify_many(
+            np.zeros(x.size, dtype=np.int64), x.ravel(), y.ravel())
+        return (cls == K.BOUNDARY).reshape(x.shape)
     return _pointwise(geom, x, y, K.touches)

@@ -21,6 +21,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..geo.kernels import RaggedPolygonLayer, _chunks
+
 DEFAULT_RES = 9  # 512×512 grid → cell ≈ 0.70° lon × 0.35° lat
 
 
@@ -157,18 +159,6 @@ def _expand_ranges(x0, nx, y0, ny):
     return x0[row] + t % nx[row], y0[row] + t // nx[row], row
 
 
-def _chunks(weight: np.ndarray, limit: int = 1 << 20):
-    """Slices of consecutive items whose weights sum to at most `limit`
-    (a heavier item gets a slice of its own): bounds the memory of a
-    ragged pair expansion whatever the size of one geometry."""
-    cum = np.cumsum(weight)
-    s = 0
-    while s < len(cum):
-        e = max(int(np.searchsorted(cum, (cum[s - 1] if s else 0) + limit, "right")), s + 1)
-        yield slice(s, e)
-        s = e
-
-
 def cover_bbox_batch(bounds: np.ndarray, res: int = DEFAULT_RES):
     """Vectorized cover_bbox over a (m, 4) bounds matrix: returns
     (cells, row_index) flat arrays — cells[k] belongs to input row
@@ -208,8 +198,6 @@ def polygon_cover_batch(geoms, res: int = DEFAULT_RES):
       axes), so a cell strictly inside a hole is dropped.
     Both expansions run in bounded chunks: a continent-sized polygon never
     allocates a dense cells × edges matrix."""
-    from ..geo.kernels import RaggedPolygonLayer
-
     n = grid_n(res)
     w, h = 360.0 / n, 180.0 / n
     layer = RaggedPolygonLayer(dict(enumerate(geoms)))
@@ -220,15 +208,7 @@ def polygon_cover_batch(geoms, res: int = DEFAULT_RES):
     nx, ny = ix1 - ix0 + 1, iy1 - iy0 + 1
     # pass 1: ray-cast parity of every vertex of each bbox's cell grid
     vx, vy, vrow = _expand_ranges(ix0, nx + 1, iy0, ny + 1)
-    vx, vy, rid = -180.0 + vx * w, -90.0 + vy * h, live[vrow]
-    odd = np.zeros(len(vx), dtype=bool)
-    for s in _chunks((layer.cross_start[1:] - layer.cross_start[:-1])[rid]):
-        p, e = layer._expand(layer.cross_start, rid[s])
-        seg, y = layer.cross_seg[e], vy[s][p]
-        c = (seg[:, 1] > y) != (seg[:, 3] > y)
-        p, (x1, y1, x2, y2), y = p[c], seg[c].T, y[c]
-        hit = vx[s][p] < x1 + (y - y1) * (x2 - x1) / (y2 - y1)
-        odd[s] = np.bincount(p[hit], minlength=s.stop - s.start) % 2 == 1
+    odd = layer.odd_crossings(live[vrow], -180.0 + vx * w, -90.0 + vy * h)
     cx, cy, crow = _expand_ranges(ix0, nx, iy0, ny)
     v = (np.cumsum((nx + 1) * (ny + 1)) - (nx + 1) * (ny + 1))[crow] + (
         cy - iy0[crow]) * (nx[crow] + 1) + cx - ix0[crow]

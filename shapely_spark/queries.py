@@ -6003,8 +6003,8 @@ def xyzm_line_interpolate(spark, sf_dir):
 def spatial_join_ngon_pairs(spark, sf_dir):
     """Geometry×geometry join with NON-rectangular polygons on BOTH sides
     (r3 verdict item 2's gate: the rect closed form must not fire; every
-    candidate runs the group-vectorized intersects kernel,
-    kernels.group_intersects). Both layers are rotated regular n-gons on
+    candidate runs the group-vectorized intersects branch of
+    group_predicates.group_predicate). Both layers are rotated regular n-gons on
     a 24-unit lattice built so the answer is closed-form: a left n-gon
     (circumradius ≤ 3, center ≤ √10 from its lattice point) always
     intersects its own lattice cell's right n-gon (incircle radii sum

@@ -27,6 +27,17 @@ table (with WKB inlined for partial cells) shuffles both sides on cell_id
 with AQE skew splitting; the refine builds the same RaggedPolygonLayer per
 Arrow batch from the batch's distinct partial-cell WKBs (parsed once per
 executor through _geom_from_wkb_cached).
+
+Geometry×geometry (spatial_join_geom) is one plan in both modes:
+
+  left, right ──mapInPandas──▶ bbox covers(id, cell_id, bbox, is_rect)
+  lcov (+ left WKB) ⋈ rcov ON cell_id, owner-cell + bbox filters
+      ⋈ right(right_id, wkb) ON right_id        [each right WKB once]
+  rect×rect ──▶ closed form, JVM-side; the rest ──▶ ONE pandas-UDF refine
+      (one group_predicate call per right geometry per Arrow batch)
+
+broadcast=True only hints both right-side joins as broadcast; nothing is
+collected to the driver, so building the plan starts no Spark job.
 """
 
 from __future__ import annotations
@@ -235,30 +246,27 @@ def spatial_join(
     return j.where(cond).select(*out_cols)
 
 
-def _pair_refine_batch(
-    predicate: str, lwkb: pd.Series, rcodes: np.ndarray, runiq_geoms: list
-) -> np.ndarray:
-    """Batch refine for candidate (left_geom, right_geom) pairs. Both sides
+def _pair_refine_batch(predicate: str, lwkb: pd.Series, rwkb: pd.Series) -> np.ndarray:
+    """Batch refine for candidate (left WKB, right WKB) pairs. Both sides
     are factorized and each unique geometry is parsed ONCE per batch (and
     cached per executor across batches); then ONE group_predicate call per
     right geometry decides its whole left group (geo/group_predicates.py
     owns every evaluation choice, scalar fallbacks included). Rows with a
-    NULL side (code -1: rect×rect pairs the JVM already decided) are False.
-    No bbox mask here: the JVM bbox-overlap filter ran before the UDF and
-    group_predicate gates on bboxes itself.
-
-    runiq_geoms: parsed Geometry (or None) per unique right code;
-    rcodes: per-row right code (-1 = null)."""
+    NULL side (rect×rect pairs the JVM already decided) are False. No bbox
+    mask here: the JVM bbox-overlap filter ran before the UDF and
+    group_predicate gates on bboxes itself."""
     from ..geo.group_predicates import group_predicate
 
     out = np.zeros(len(lwkb), dtype=bool)
     lcodes, luniq = pd.factorize(lwkb)
+    rcodes, runiq = pd.factorize(rwkb)
     lgeoms = [_geom_from_wkb_cached(bytes(w)) for w in luniq]
+    rgeoms = [_geom_from_wkb_cached(bytes(w)) for w in runiq]
     idx = np.flatnonzero((lcodes >= 0) & (rcodes >= 0))
     for u, gi in _group_ranges(rcodes[idx]):
         sel = idx[gi]
         out[sel] = group_predicate(
-            predicate, [lgeoms[i] for i in lcodes[sel]], runiq_geoms[u])
+            predicate, [lgeoms[i] for i in lcodes[sel]], rgeoms[u])
     return out
 
 
@@ -312,7 +320,9 @@ def spatial_join_geom(
     broadcast: bool = True,
 ) -> DataFrame:
     """Geometry×geometry spatial join: left(left_id, wkb) ⋈ right(right_id,
-    wkb) → (left_id, right_id) pairs satisfying the predicate.
+    wkb) → (left_id, right_id) pairs satisfying the predicate. Right ids
+    must be unique: a repeated id joins every candidate of that id once
+    per right row.
 
     Semantics: STRtree.query(geoms, predicate) pair semantics generalized
     to arbitrary geometry on BOTH sides (shapely/strtree.py:229-266) —
@@ -322,26 +332,26 @@ def spatial_join_geom(
     on cell. A pair that shares k cells would appear k times, so each
     candidate is emitted only in ONE deterministic cell — the cell of the
     lower-left corner of the bbox intersection (computable from the two
-    bbox columns JVM-side, no dedup shuffle). Refine: rect×rect pairs are
-    decided JVM-side in closed form (_rect_pred_col); every other candidate
-    goes through ONE pandas UDF that makes one group_predicate call per
-    right geometry per Arrow batch. The right geometry comes from a
-    broadcast dict (broadcast=True) or rides the shuffle as inline WKB
-    (broadcast=False).
+    bbox columns JVM-side, no dedup shuffle). The surviving candidates
+    join the right side's (right_id, wkb) on right_id, so each right WKB
+    enters the plan once, not once per cover cell; the left WKB rides the
+    left cover rows. Refine: rect×rect pairs are decided JVM-side in
+    closed form (_rect_pred_col); every other candidate goes through ONE
+    pandas UDF that makes one group_predicate call per right geometry per
+    Arrow batch. broadcast=True only adds a broadcast hint to the right
+    cover rows and to the right_id join; nothing is collected to the
+    driver.
     """
-    from ..index.cells import cover_bbox_batch, grid_n
+    from ..index.cells import cover_bbox_batch
 
     if predicate not in _GEOM_JOIN_PREDICATES:
         raise ValueError(
             f"predicate {predicate!r} is not supported by spatial_join_geom; "
             f"valid: {sorted(_GEOM_JOIN_PREDICATES)}")
-    n = grid_n(res)
 
-    def covers(df: DataFrame, id_col: str, with_wkb: bool) -> DataFrame:
+    def covers(df: DataFrame, id_col: str) -> DataFrame:
         schema = (f"{id_col} long, cell_id long, bxmin double, bymin double,"
-                  " bxmax double, bymax double, is_rect boolean")
-        if with_wkb:
-            schema += ", wkb binary"
+                  " bxmax double, bymax double, is_rect boolean, wkb binary")
 
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from ..geo import kernels as K
@@ -367,7 +377,7 @@ def spatial_join_geom(
                 ok = ~np.isnan(bnds[:, 0])
                 cells, row = cover_bbox_batch(bnds[ok], res)
                 src = np.nonzero(ok)[0][row]
-                data = {
+                yield pd.DataFrame({
                     id_col: pd.Series(
                         pdf[id_col].to_numpy(dtype=np.int64)[src], dtype="int64"),
                     "cell_id": pd.Series(cells, dtype="int64"),
@@ -376,68 +386,44 @@ def spatial_join_geom(
                     "bxmax": pd.Series(bnds[src, 2], dtype="float64"),
                     "bymax": pd.Series(bnds[src, 3], dtype="float64"),
                     "is_rect": pd.Series(rect[src], dtype="bool"),
-                }
-                if with_wkb:
-                    data["wkb"] = pd.Series(
-                        [bytes(wkbs.iloc[k]) for k in src], dtype="object")
-                yield pd.DataFrame(data)
+                    "wkb": pd.Series(
+                        [bytes(wkbs.iloc[k]) for k in src], dtype="object"),
+                })
 
         return df.select(id_col, "wkb").mapInPandas(gen, schema)
 
-    lcov = covers(left, left_id, with_wkb=True).select(
+    lcov = covers(left, left_id).select(
         F.col(left_id), F.col("cell_id").alias("__lc"),
         F.col("bxmin").alias("__lx"), F.col("bymin").alias("__ly"),
         F.col("bxmax").alias("__lx2"), F.col("bymax").alias("__ly2"),
         F.col("is_rect").alias("__lrect"),
         F.col("wkb").alias("__lwkb"),
     )
-    rcov = covers(right, right_id, with_wkb=not broadcast)
-    rcols = [
+    rcov = covers(right, right_id).select(
         F.col(right_id), F.col("cell_id").alias("__rc"),
         F.col("bxmin").alias("__rx"), F.col("bymin").alias("__ry"),
         F.col("bxmax").alias("__rx2"), F.col("bymax").alias("__ry2"),
         F.col("is_rect").alias("__rrect"),
-    ]
+    )
+    rgeo = right.select(F.col(right_id), F.col("wkb").alias("__rwkb"))
     if broadcast:
-        # geometry dict rides a torrent broadcast; the join moves only ints
-        geo_rows = right.select(right_id, "wkb").collect()
-        bc = left.sparkSession.sparkContext.broadcast(
-            {int(r[0]): bytes(r[1]) for r in geo_rows if r[1] is not None}
-        )
-        rcov = F.broadcast(rcov.select(*rcols))
-        rkey = F.col(right_id)
-
-        def right_geom(rid):
-            w = bc.value.get(int(rid))
-            return None if w is None else _geom_from_wkb_cached(w)
-    else:
-        rcov = rcov.select(*rcols, F.col("wkb").alias("__rwkb"))
-        rkey = F.col("__rwkb")
-
-        def right_geom(w):
-            return _geom_from_wkb_cached(bytes(w))
+        rcov, rgeo = F.broadcast(rcov), F.broadcast(rgeo)
 
     j = lcov.join(rcov, F.col("__lc") == F.col("__rc"), "inner")
     # emit each candidate pair exactly once: in the cell holding the
-    # lower-left corner of the bbox intersection (cell arithmetic mirrors
-    # columns.cell_col)
-    ix = F.least(F.lit(n - 1), F.greatest(F.lit(0), F.floor(
-        (F.greatest("__lx", "__rx") + 180.0) / 360.0 * n)))
-    iy = F.least(F.lit(n - 1), F.greatest(F.lit(0), F.floor(
-        (F.greatest("__ly", "__ry") + 90.0) / 180.0 * n)))
-    j = j.where(F.col("__lc") == (iy * n + ix).cast("bigint"))
+    # lower-left corner of the bbox intersection
+    j = j.where(F.col("__lc") == cell_col(
+        F.greatest("__ly", "__ry"), F.greatest("__lx", "__rx"), res))
     # JVM bbox-overlap prefilter: bbox-disjoint candidates are False under
     # every supported predicate — they never reach the Python refine
     j = j.where(
         (F.col("__lx") <= F.col("__rx2")) & (F.col("__rx") <= F.col("__lx2"))
         & (F.col("__ly") <= F.col("__ry2")) & (F.col("__ry") <= F.col("__ly2"))
-    )
+    ).join(rgeo, right_id, "inner")
 
     @F.pandas_udf("boolean")
-    def refine(right_key: pd.Series, lwkb: pd.Series) -> pd.Series:
-        rcodes, runiq = pd.factorize(right_key)
-        return pd.Series(_pair_refine_batch(
-            predicate, lwkb, rcodes, [right_geom(u) for u in runiq]))
+    def refine(lwkb: pd.Series, rwkb: pd.Series) -> pd.Series:
+        return pd.Series(_pair_refine_batch(predicate, lwkb, rwkb))
 
     # rect×rect rows are decided by pure-JVM interval arithmetic and ship
     # NULL into the refine UDF (no geometry bytes over Arrow, no kernel
@@ -447,7 +433,8 @@ def spatial_join_geom(
     # dominant cost (measured 6.6 s → 3.7 s on the all-non-rect n-gon
     # battery query, and strictly less work for mixed layers).
     both_rect = F.col("__lrect") & F.col("__rrect")
-    py_call = refine(F.when(~both_rect, rkey), F.when(~both_rect, F.col("__lwkb")))
+    py_call = refine(F.when(~both_rect, F.col("__lwkb")),
+                     F.when(~both_rect, F.col("__rwkb")))
     return j.where(
         (both_rect & _rect_pred_col(predicate)) | (~both_rect & py_call)
     ).select(left_id, right_id)

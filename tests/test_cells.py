@@ -176,7 +176,8 @@ def test_polygon_cover_batch_matches_per_geometry(monkeypatch):
     assert not np.isin(want[2], [5, 6, 7]).any()
     # tiny chunk limit: the bounded pair expansions give the same covers
     chunks = cells._chunks
-    monkeypatch.setattr(cells, "_chunks", lambda w, limit=0: chunks(w, 7))
+    for mod in (cells, K):
+        monkeypatch.setattr(mod, "_chunks", lambda w, limit=0: chunks(w, 7))
     for a, b in zip(cells.polygon_cover_batch(geoms, JOIN_RES), want):
         np.testing.assert_array_equal(a, b)
     assert [len(c) for c in cells.polygon_cover_batch([], JOIN_RES)] == [0, 0, 0]

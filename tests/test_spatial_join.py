@@ -224,8 +224,9 @@ def test_salted_join_pattern_matches_plain_join(spark):
 
 
 def test_spatial_join_geom_shuffle_mode_matches_broadcast(spark):
-    """broadcast=False (right WKB rides the cell-cover join, no driver
-    collect) must produce identical pairs to the broadcast path."""
+    """broadcast=False (no broadcast hints on the right cover rows and
+    the right-geometry join) must produce identical pairs to the
+    broadcast path."""
     import pandas as pd
 
     from shapely_spark.geo.geom import regular_ngon
@@ -442,10 +443,12 @@ def test_spatial_join_geom_mixed_rects_and_ngons(spark):
 
 def test_ragged_layer_matches_prepared_classify():
     """RaggedPolygonLayer.classify_many (the broadcast-join refine kernel)
-    must be bit-identical to per-region PreparedPolygons.classify over the
-    full region zoo — interior/boundary/exterior, exact corner and edge
-    hits, empties, holed and multi polygons, both layer layouts."""
-    from shapely_spark.geo.kernels import PreparedPolygons, RaggedPolygonLayer
+    must be bit-identical to a per-region bbox-masked
+    points_in_rings_class over the full region zoo — interior/boundary/
+    exterior, exact corner and edge hits, empties, holed and multi
+    polygons, both layer layouts."""
+    from shapely_spark.geo import kernels as K
+    from shapely_spark.geo.kernels import RaggedPolygonLayer, points_in_rings_class
 
     for layout in ("hotspot", "uniform"):
         regions = synth_regions(600, seed=7, layout=layout)
@@ -470,32 +473,43 @@ def test_ragged_layer_matches_prepared_classify():
         got = layer.classify_many(rids, px, py)
         exp = np.zeros(len(rids), dtype=np.int8)
         for r in np.unique(rids):
-            m = rids == r
-            exp[m] = PreparedPolygons([geoms[r]]).classify(0, px[m], py[m])
+            g = geoms[r]
+            if g is None or g.is_empty:
+                continue
+            bb = K.bounds(g)
+            m = np.flatnonzero(rids == r)
+            m = m[(px[m] >= bb[0]) & (px[m] <= bb[2])
+                  & (py[m] >= bb[1]) & (py[m] <= bb[3])]
+            exp[m] = points_in_rings_class(px[m], py[m], K._rings_of(g))
         assert (got == exp).all()
         # all three classes must actually occur for the test to mean anything
         assert set(np.unique(got)) == {0, 1, 2}
 
 
 def test_group_intersects_matches_scalar_fuzz():
-    """kernels.group_intersects (the r4 vectorized non-rect pair refine)
-    agrees with the scalar intersects kernel over a mixed fuzz batch:
-    rotated n-gons, segments, points, gapped multipolygons, None, plus
-    exact vertex-touch constructions."""
+    """group_predicate("intersects") (the vectorized non-rect pair
+    refine) agrees with the scalar intersects kernel over a mixed fuzz
+    batch: rotated n-gons, segments, points, gapped multipolygons, mixed
+    GeometryCollections, None, plus exact vertex-touch constructions;
+    rights include a line and a mixed GeometryCollection."""
     from shapely_spark.geo import kernels as K
     from shapely_spark.geo.geom import (
-        box, linestring, multipolygon, point, polygon, regular_ngon,
+        box, geometrycollection, linestring, multipolygon, point, polygon,
+        regular_ngon,
     )
+    from shapely_spark.geo.group_predicates import group_predicate
 
     rng = np.random.RandomState(7)
     for rgeom in (
         regular_ngon(0, 0, 3.0, 7, 0.3),
         linestring([[-4, -4], [4, 4], [6, -2]]),
         multipolygon([box(-3, -3, -1, -1), box(1, 1, 3, 3)]),
+        geometrycollection([box(-3, -3, -1, -1), linestring([[2, -5], [2, 5]]),
+                            point(5, 5)]),
     ):
         lefts = []
         for i in range(300):
-            kind = i % 4
+            kind = i % 5
             cx, cy = rng.uniform(-8, 8, 2)
             if kind == 0:
                 lefts.append(regular_ngon(cx, cy, rng.uniform(0.2, 4),
@@ -506,20 +520,76 @@ def test_group_intersects_matches_scalar_fuzz():
                 lefts.append(linestring([[cx, cy], [cx + dx, cy + dy]]))
             elif kind == 2:
                 lefts.append(point(cx, cy))
-            else:
+            elif kind == 3:
                 lefts.append(multipolygon([
                     box(cx, cy, cx + 1, cy + 1),
                     box(cx + 6, cy + 6, cx + 7, cy + 7)]))
+            else:
+                dx, dy = rng.uniform(-5, 5, 2)
+                lefts.append(geometrycollection([
+                    box(cx, cy, cx + 0.5, cy + 0.5),
+                    linestring([[cx + 1, cy + 1], [cx + dx, cy + dy]])]))
         lefts[7] = None
         # exact touch: a triangle sharing exactly one right vertex
         rv = rgeom.all_coords()[0]
         lefts.append(polygon([[rv[0], rv[1]], [rv[0] + 9, rv[1] + 9],
                               [rv[0] + 10, rv[1] + 8], [rv[0], rv[1]]]))
-        got = K.group_intersects(lefts, rgeom)
+        got = group_predicate("intersects", lefts, rgeom)
         want = np.array([False if g is None else K.intersects(g, rgeom)
                          for g in lefts])
         assert (got == want).all(), np.flatnonzero(got != want)[:5]
         assert want.any() and not want.all()
+
+
+def test_intersects_mixed_geometrycollection_every_path(spark):
+    """A GeometryCollection whose line member, not its polygon, meets the
+    other side: the scalar kernel (both argument orders), disjoint, the
+    group refine (both orientations), intersects_xy and the geometry join
+    all see the line."""
+    from shapely_spark.geo import from_wkt
+    from shapely_spark.geo import kernels as K
+    from shapely_spark.geo.group_predicates import group_predicate
+
+    gc = from_wkt("GEOMETRYCOLLECTION (POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0)), "
+                  "LINESTRING (5 5, 7 5))")
+    pt = from_wkt("POINT (6 5)")
+    assert K.intersects(gc, pt) and K.intersects(pt, gc)
+    assert not K.disjoint(gc, pt)
+    assert group_predicate("intersects", [gc], pt).tolist() == [True]
+    assert group_predicate("intersects", [pt], gc).tolist() == [True]
+    assert K.intersects_xy(gc, 6, 5).tolist() == [True]
+    far = from_wkt("POINT (6 6)")
+    assert _geom_join_pairs(spark, [gc, far], [pt], "intersects") == {(0, 0)}
+    assert _geom_join_pairs(spark, [pt, far], [gc], "intersects") == {(0, 0)}
+
+
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_geom_join_starts_no_job_until_an_action(spark, broadcast):
+    """Building the geometry-join plan runs nothing: the right layer's
+    geometry joins in-plan on its id, so no driver collect starts a Spark
+    job at call time. The pairs still match brute force with a NULL-WKB
+    right row in the layer."""
+    from shapely_spark.geo.geom import box, regular_ngon
+    from shapely_spark.geo.wkb import to_wkb
+    from shapely_spark.spark.join import spatial_join_geom
+
+    lefts = [regular_ngon(i * 1.5, 0.0, 1.0, 5 + i % 3, i * 0.4) for i in range(12)]
+    rights = [box(j * 4.0, -0.5, j * 4.0 + 2.0, 0.5) for j in range(5)]
+    left = _geom_df(spark, "left_id", lefts)
+    right = spark.createDataFrame(
+        [(j, to_wkb(g)) for j, g in enumerate(rights)] + [(len(rights), None)],
+        "region_id long, wkb binary")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"geom_join_no_job_{broadcast}"
+    sc.setJobGroup(group, "spatial_join_geom call")
+    try:
+        out = spatial_join_geom(left, right, broadcast=broadcast)
+        assert tracker.getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got = {(r.left_id, r.region_id) for r in out.collect()}
+    assert got == _brute_pairs(lefts, rights, "intersects") and got
 
 
 def test_geom_join_rect_branch_has_no_udf(spark):

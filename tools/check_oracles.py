@@ -73,7 +73,9 @@ def main():
     import __spark_entry__ as E
     from shapely_spark.spark.session import get_spark
 
-    spark = get_spark(app="check_oracles", master="local[8]", shuffle_partitions=16)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    spark = get_spark(app="check_oracles", master=f"local[{cpus}]",
+                      shuffle_partitions=max(8, cpus))
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
