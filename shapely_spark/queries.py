@@ -299,7 +299,7 @@ def tpch_q6(spark, sf_dir):
     """,
 )
 def cell_assign(spark, sf_dir):
-    pts = _pts(spark, sf_dir).withColumn("cell_id", cell_col(F.col("lat"), F.col("lon"), RES))
+    pts = _pts(spark, sf_dir).withColumn("cell_id", cell_col("lat", "lon", RES))
     return (
         pts.groupBy("cell_id")
         .agg(F.count("*").alias("n_points"), _dec_sum("value"))
@@ -383,7 +383,7 @@ def spatial_join_within(spark, sf_dir):
 def tile_agg_regions(spark, sf_dir):
     from .spark.tiles import region_tile_weights, tile_counts
 
-    pts = _pts(spark, sf_dir).withColumn("cell_id", cell_col(F.col("lat"), F.col("lon"), RES))
+    pts = _pts(spark, sf_dir).withColumn("cell_id", cell_col("lat", "lon", RES))
     counts = pts.groupBy("cell_id").agg(F.count("*").alias("n_points"))
     regions = _nation_regions_df(spark, sf_dir)
     weights = region_tile_weights(regions, RES).where(F.col("full"))
@@ -421,7 +421,7 @@ def tile_rollup_pyramid(spark, sf_dir):
     scanned once, at the base resolution only)."""
     from .spark.tiles import tile_rollup
 
-    pts = _pts(spark, sf_dir).withColumn("cell_id", cell_col(F.col("lat"), F.col("lon"), RES))
+    pts = _pts(spark, sf_dir).withColumn("cell_id", cell_col("lat", "lon", RES))
     counts = (
         pts.where(F.col("cell_id") >= 0)
         .groupBy("cell_id").agg(F.count("*").alias("n_points"))

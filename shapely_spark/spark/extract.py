@@ -107,7 +107,7 @@ def with_geo(pages: DataFrame, res: int = DEFAULT_RES, pin_extract: bool = True)
         .withColumn("__geo_content", content)
         .withColumn("lat", F.substring_index(F.col("__geo_content"), ";", 1).try_cast("double"))
         .withColumn("lon", F.substring_index(F.col("__geo_content"), ";", -1).try_cast("double"))
-        .withColumn("cell_id", cell_col(F.col("lat"), F.col("lon"), res))
+        .withColumn("cell_id", cell_col("lat", "lon", res))
         .drop("__geo_content")
     )
 

@@ -160,7 +160,7 @@ def spatial_join(
     lat_c, lon_c = point_cols
     drop_cell = cell_col_name not in points.columns
     if drop_cell:
-        points = points.withColumn(cell_col_name, cell_col(F.col(lat_c), F.col(lon_c), res))
+        points = points.withColumn(cell_col_name, cell_col(lat_c, lon_c, res))
 
     from ..geo.kernels import RaggedPolygonLayer
 
@@ -270,33 +270,35 @@ def _pair_refine_batch(predicate: str, lwkb: pd.Series, rwkb: pd.Series) -> np.n
     return out
 
 
+# bbox interval tests over the two bbox column sets, as SQL
+_BBOX_CLOSED = "__lx <= __rx2 AND __rx <= __lx2 AND __ly <= __ry2 AND __ry <= __ly2"
+_BBOX_INTERIORS = "__lx < __rx2 AND __rx < __lx2 AND __ly < __ry2 AND __ry < __ly2"
+_A_IN_B = "__lx >= __rx AND __lx2 <= __rx2 AND __ly >= __ry AND __ly2 <= __ry2"
+_B_IN_A = "__rx >= __lx AND __rx2 <= __lx2 AND __ry >= __ly AND __ry2 <= __ly2"
+_RECT_PRED_SQL = {
+    "intersects": _BBOX_CLOSED,
+    "within": _A_IN_B,
+    "covered_by": _A_IN_B,
+    "contains": _B_IN_A,
+    "covers": _B_IN_A,
+    "contains_properly":
+        "__rx > __lx AND __rx2 < __lx2 AND __ry > __ly AND __ry2 < __ly2",
+    "touches": f"({_BBOX_CLOSED}) AND NOT ({_BBOX_INTERIORS})",
+    "equals": "__lx = __rx AND __ly = __ry AND __lx2 = __rx2 AND __ly2 = __ry2",
+    "overlaps":
+        f"({_BBOX_INTERIORS}) AND NOT ({_A_IN_B}) AND NOT ({_B_IN_A})",
+    # False for every areal×areal pair (kernels.crosses)
+    "crosses": "false",
+}
+
+
 def _rect_pred_col(predicate: str):
     """Closed-form rect×rect predicate as a pure Catalyst expression over
     the two bbox column sets (an axis-aligned rectangle IS its bbox; exact
     — rectangle DE-9IM reduces to interval arithmetic, incl. collinear-edge
-    and corner touches)."""
-    lx, ly, lx2, ly2 = (F.col(c) for c in ("__lx", "__ly", "__lx2", "__ly2"))
-    rx, ry, rx2, ry2 = (F.col(c) for c in ("__rx", "__ry", "__rx2", "__ry2"))
-    closed = (lx <= rx2) & (rx <= lx2) & (ly <= ry2) & (ry <= ly2)
-    interiors = (lx < rx2) & (rx < lx2) & (ly < ry2) & (ry < ly2)
-    a_in_b = (lx >= rx) & (lx2 <= rx2) & (ly >= ry) & (ly2 <= ry2)
-    b_in_a = (rx >= lx) & (rx2 <= lx2) & (ry >= ly) & (ry2 <= ly2)
-    if predicate == "intersects":
-        return closed
-    if predicate in ("within", "covered_by"):
-        return a_in_b
-    if predicate in ("contains", "covers"):
-        return b_in_a
-    if predicate == "contains_properly":
-        return (rx > lx) & (rx2 < lx2) & (ry > ly) & (ry2 < ly2)
-    if predicate == "touches":
-        return closed & ~interiors
-    if predicate == "equals":
-        return (lx == rx) & (ly == ry) & (lx2 == rx2) & (ly2 == ry2)
-    if predicate == "overlaps":
-        return interiors & ~a_in_b & ~b_in_a
-    # crosses: False for every areal×areal pair (kernels.crosses)
-    return F.lit(False)
+    and corner touches). One SQL string for the chosen predicate only: a
+    py4j Column chain over every family cost 0.1-0.15 s per call."""
+    return F.expr(_RECT_PRED_SQL[predicate])
 
 
 # predicates spatial_join_geom supports: every one implies the pair shares
@@ -413,13 +415,10 @@ def spatial_join_geom(
     # emit each candidate pair exactly once: in the cell holding the
     # lower-left corner of the bbox intersection
     j = j.where(F.col("__lc") == cell_col(
-        F.greatest("__ly", "__ry"), F.greatest("__lx", "__rx"), res))
+        "greatest(__ly, __ry)", "greatest(__lx, __rx)", res))
     # JVM bbox-overlap prefilter: bbox-disjoint candidates are False under
     # every supported predicate — they never reach the Python refine
-    j = j.where(
-        (F.col("__lx") <= F.col("__rx2")) & (F.col("__rx") <= F.col("__lx2"))
-        & (F.col("__ly") <= F.col("__ry2")) & (F.col("__ry") <= F.col("__ly2"))
-    ).join(rgeo, right_id, "inner")
+    j = j.where(F.expr(_BBOX_CLOSED)).join(rgeo, right_id, "inner")
 
     @F.pandas_udf("boolean")
     def refine(lwkb: pd.Series, rwkb: pd.Series) -> pd.Series:

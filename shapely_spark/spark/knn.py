@@ -131,10 +131,10 @@ def knn_join(
     n = grid_n(res)
     cell_h_deg = 180.0 / n
 
-    tgt = targets.withColumn("__tcell", cell_col(F.col(tlat), F.col(tlon), res))
+    tgt = targets.withColumn("__tcell", cell_col(tlat, tlon, res))
     base_pts = (
         points.where(F.col(plat).isNotNull() & F.col(plon).isNotNull())
-        .withColumn("__pcell", cell_col(F.col(plat), F.col(plon), res))
+        .withColumn("__pcell", cell_col(plat, plon, res))
     )
 
     dist = haversine_col(F.col(plat), F.col(plon), F.col(tlat), F.col(tlon))
@@ -315,7 +315,7 @@ def dwithin_join(
                  (dlon_deg / F.lit(cell_w)).cast("int") + F.lit(1))
 
     tgt = (targets
-           .withColumn("__tcell", cell_col(F.col(tlat), F.col(tlon), res))
+           .withColumn("__tcell", cell_col(tlat, tlon, res))
            .where(F.col("__tcell") >= 0))
     tgt_cells = (
         tgt.withColumn("__ty", (F.col("__tcell") / n).cast("bigint"))
@@ -334,7 +334,7 @@ def dwithin_join(
 
     pts = (
         points.where(F.col(plat).isNotNull() & F.col(plon).isNotNull())
-        .withColumn("__pcell", cell_col(F.col(plat), F.col(plon), res))
+        .withColumn("__pcell", cell_col(plat, plon, res))
     )
     dist = haversine_col(F.col(plat), F.col(plon), F.col(tlat), F.col(tlon))
     return (

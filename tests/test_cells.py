@@ -41,6 +41,34 @@ def test_sql_cell_expr_matches_numpy():
     np.testing.assert_array_equal(want, got)
 
 
+
+@pytest.mark.parametrize("res", [9, 11])
+def test_cell_col_matches_cell_of(spark, res):
+    """The Catalyst cell_col (one SQL string) equals cell_of: NULL/NaN map
+    to -1, the grid edges and points beyond them clamp, and points on cell
+    lines fall in the same cell on both sides."""
+    n = cells.grid_n(res)
+    k = np.array([0, 1, n // 3, n // 2, n - 1, n])
+    on_lines = [(-90.0 + i * 180.0 / n, -180.0 + j * 360.0 / n)
+                for i in k for j in k]
+    rng = np.random.RandomState(res)
+    pts = [(None, 0.0), (0.0, None), (None, None), (float("nan"), 0.0),
+           (0.0, float("nan")), (90.0, 180.0), (-90.0, -180.0),
+           (90.0, -180.0), (-90.0, 180.0), (95.0, 200.0), (-95.0, -200.0),
+           (1e6, -1e6), (0.0, 0.0)] + on_lines + list(
+        zip(rng.uniform(-90, 90, 200), rng.uniform(-180, 180, 200)))
+    pts = [(i, None if a is None else float(a), None if b is None else float(b))
+           for i, (a, b) in enumerate(pts)]
+    from shapely_spark.spark.columns import cell_col
+
+    df = spark.createDataFrame(pts, "i long, lat double, lon double")
+    got = {r.i: r.c for r in
+           df.select("i", cell_col("lat", "lon", res).alias("c")).collect()}
+    lat = np.array([np.nan if a is None else a for _, a, _ in pts])
+    lon = np.array([np.nan if b is None else b for _, _, b in pts])
+    want = cells.cell_of(lat, lon, res)
+    assert [got[i] for i in range(len(pts))] == want.tolist()
+
 def test_disk_and_ring():
     c = int(cells.cell_of(0.0, 0.0, 6))
     d0 = cells.disk(c, 0, 6)

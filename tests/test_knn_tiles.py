@@ -242,7 +242,7 @@ def test_tile_rollup_equals_direct_coarse_counts(spark, pages):
     rolled = tile_rollup(fine, res=RES, parent_res=RES - 2)
     direct = (
         pages.where(F.col("cell_id") >= 0)
-        .withColumn("pcell", cell_col(F.col("lat"), F.col("lon"), RES - 2))
+        .withColumn("pcell", cell_col("lat", "lon", RES - 2))
         .groupBy("pcell").agg(F.count("*").alias("n_pages"))
     )
     got = {r.cell_id: r.n_pages for r in rolled.collect()}
