@@ -18,21 +18,26 @@ test (tests/test_group_predicates.py). The decomposition:
 - **Batched gates**: bbox containment/overlap/equality prefilters decide
   most candidates with zero Python-per-pair work (containment joins:
   candidates whose bbox cannot contain R's bbox die here).
-- **Batched direction 2 by topology** (int∩int): once direction 1
-  proves ∂L never enters int(R), each connected component of int(R)
-  (one per polygon part) lies wholly inside or wholly outside every
-  such left — ONE representative interior point per R part, classified
-  against all undecided lefts in one owner-tagged parity pass, decides
-  the rest (no per-left noding of ∂R at all). The containment family
+- **Direction 2 through one point locator**: R-side probes (R's
+  vertices, R's part representative points, over-noded ∂R fragment
+  midpoints) classify against the lefts as (left, probe) pairs in one
+  ``kernels.RaggedPolygonLayer.classify_many`` pass over a layer of the
+  lefts built once per call (``_pair_hits``): closure membership is
+  ``cls >= BOUNDARY``, strict interiority ``cls == INTERIOR``.
+- **int∩int by topology**: once direction 1 proves ∂L never enters
+  int(R), each connected component of int(R) (one per polygon part)
+  lies wholly inside or wholly outside every such left — ONE
+  representative interior point per R part decides the rest (no
+  per-left noding of ∂R at all). The containment family
   (contains/covers/contains_properly/equals) over-nodes ∂R ONCE at the
-  union of all survivors' edges and classifies the shared fragments via
-  the same transpose pass — never a per-pair scalar-kernel dispatch on
-  supported paths (per-left work remains only for hole probes of holed
-  lefts and the rare island-in-hole exact check).
+  union of all survivors' edges and classifies the shared fragments
+  the same way — never a per-pair scalar-kernel dispatch on supported
+  paths (per-left work remains only for hole probes of holed lefts and
+  the rare island-in-hole exact check).
 - **intersects** is three batched stages over the still-undecided
   lefts: left vertices on closure(R) (``_vertex_facts``), R's vertices
-  on each left's closure (one ``_points_vs_many`` transpose pass), and
-  left edges meeting R's edges (chunked ``_segments_intersect_pairs``).
+  on each left's closure (one layer pass), and left edges meeting R's
+  edges (chunked ``kernels._segments_intersect_pairs``).
 
 Batched shape: areal right (Polygon/MultiPolygon), and for
 ``intersects`` also a lineal or puntal right; lefts of any
@@ -59,8 +64,9 @@ import numpy as np
 from . import kernels as K
 from .geom import GEOMETRYCOLLECTION, MULTIPOLYGON, POLYGON, Geometry
 from .kernels import (
-    BOUNDARY, EXTERIOR, INTERIOR, _all_class, _dim, _edges, _hole_rings,
-    _holes_clear_of, _points_of, _rings_of, bounds, points_in_rings_class,
+    _EDGE_CHUNK, BOUNDARY, EXTERIOR, INTERIOR, RaggedPolygonLayer, _all_class,
+    _dim, _edges, _hole_rings, _holes_clear_of, _points_of, _rings_of,
+    _segments_intersect_pairs, bounds, points_in_rings_class,
     points_on_segments,
 )
 
@@ -68,8 +74,6 @@ _SUPPORTED = {
     "intersects", "within", "covered_by", "touches", "overlaps", "crosses",
     "contains", "covers", "contains_properly", "equals",
 }
-
-_EDGE_CHUNK = 1 << 22  # cap the (left-edge × right-edge) outer product rows
 
 
 def _ragged_stack(arrays: list[np.ndarray], width: int):
@@ -103,41 +107,6 @@ def _vertex_facts(lgeoms, ids, rgeom):
 
 def _stacked_edges(lgeoms, ids):
     return _ragged_stack([_edges(lgeoms[i]) for i in ids], 4)
-
-
-def _segments_intersect_pairs(sa: np.ndarray, owner: np.ndarray,
-                              sb: np.ndarray, n: int) -> np.ndarray:
-    """Per-owner any-intersection (proper or touching) between
-    owner-tagged segments sa and the shared segment set sb — the maths
-    of kernels._segments_intersect_any, chunked so the outer product
-    stays in cache."""
-    out = np.zeros(n, dtype=bool)
-    if len(sa) == 0 or len(sb) == 0:
-        return out
-    rows_per_chunk = max(1, _EDGE_CHUNK // len(sb))
-    for s in range(0, len(sa), rows_per_chunk):
-        a = sa[s:s + rows_per_chunk]
-        own = owner[s:s + rows_per_chunk]
-        ax1, ay1, ax2, ay2 = (a[:, i][:, None] for i in range(4))
-        bx1, by1, bx2, by2 = (sb[:, i][None, :] for i in range(4))
-        d1 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
-        d2 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
-        d3 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)
-        d4 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)
-        hit = (((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
-               & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0))
-
-        def on(d, px, py, x1, y1, x2, y2):
-            return ((d == 0)
-                    & (px >= np.minimum(x1, x2)) & (px <= np.maximum(x1, x2))
-                    & (py >= np.minimum(y1, y2)) & (py <= np.maximum(y1, y2)))
-
-        hit |= (on(d1, bx1, by1, ax1, ay1, ax2, ay2)
-                | on(d2, bx2, by2, ax1, ay1, ax2, ay2)
-                | on(d3, ax1, ay1, bx1, by1, bx2, by2)
-                | on(d4, ax2, ay2, bx1, by1, bx2, by2))
-        out[np.unique(own[hit.any(axis=1)])] = True
-    return out
 
 
 class _EdgeFacts:
@@ -227,106 +196,27 @@ def _part_rep_points(rgeom: Geometry) -> np.ndarray:
     return np.asarray(out, dtype=np.float64).reshape(-1, 2)
 
 
-def _points_vs_many(pts: np.ndarray, geoms: list, eps: float = 0.0):
-    """(inside, onclos): two (k, n) bool arrays — pts[j] strictly inside
-    geoms[i]'s even-odd interior / on geoms[i]'s closure-boundary. The
-    TRANSPOSE of points_in_rings_class: few points vs MANY geometries in
-    chunked owner-tagged passes over the stacked edges (XOR-across-rings
-    equals total-crossing parity, the RaggedPolygonLayer equivalence).
-    Areal geoms contribute crossing+boundary segments; lineal geoms
-    boundary segments only (on-segment ⇒ on closure); puntal geoms exact
-    vertex equality. `inside & ~onclos` is strict interiority for areal
-    geoms; `inside | onclos` is closure membership. `eps` loosens the
-    on-boundary test exactly as points_on_segments(eps=) — needed when
-    the probes are fp-noded fragment midpoints."""
-    from .geom import LINEARRING, LINESTRING, MULTILINESTRING, MULTIPOINT, POINT
-
-    n = len(geoms)
-    k = len(pts)
-    inside = np.zeros((k, n), dtype=bool)
-    onclos = np.zeros((k, n), dtype=bool)
-    if not k or not n:
-        return inside, onclos
-    cross_seg, cross_own, bnd_seg, bnd_own, vtx, vtx_own = [], [], [], [], [], []
-    for i, g in enumerate(geoms):
-        if g is None or g.is_empty:
-            continue
-        tid = g.type_id
-        if tid in (POINT, MULTIPOINT):
-            v = _points_of(g)
-            vtx.append(v)
-            vtx_own.append(np.full(len(v), i, dtype=np.int64))
-            continue
-        if tid in (LINESTRING, LINEARRING, MULTILINESTRING):
-            e = _edges(g)
-            if len(e):
-                bnd_seg.append(e)
-                bnd_own.append(np.full(len(e), i, dtype=np.int64))
-            continue
-        for ring in _rings_of(g):
-            c = np.asarray(ring)[:, :2]
-            if len(c) < 2:
-                continue
-            seg = np.column_stack([c[:-1], c[1:]])
-            bnd_seg.append(seg)
-            bnd_own.append(np.full(len(seg), i, dtype=np.int64))
-            if len(c) >= 4:
-                cross_seg.append(seg)
-                cross_own.append(np.full(len(seg), i, dtype=np.int64))
-
-    def _stack(parts, owns, w):
-        if not parts:
-            return np.zeros((0, w)), np.zeros(0, np.int64)
-        return np.concatenate(parts, axis=0), np.concatenate(owns)
-
-    cs, co = _stack(cross_seg, cross_own, 4)
-    bs, bo = _stack(bnd_seg, bnd_own, 4)
-    vx, vo = _stack(vtx, vtx_own, 2)
-    blk = max(1, _EDGE_CHUNK // max(len(cs) + len(bs) + len(vx), 1))
-    for s in range(0, k, blk):
-        P = pts[s:s + blk]
-        PX, PY = P[:, 0][:, None], P[:, 1][:, None]
-        if len(cs):
-            y1, y2 = cs[None, :, 1], cs[None, :, 3]
-            cond = (y1 > PY) != (y2 > PY)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                xint = cs[None, :, 0] + (PY - y1) \
-                    * (cs[None, :, 2] - cs[None, :, 0]) / (y2 - y1)
-            rows, cols = np.nonzero(cond & (PX < xint))
-            if len(rows):
-                acc = np.zeros((len(P), n), dtype=np.int64)
-                np.add.at(acc, (rows, co[cols]), 1)
-                inside[s:s + blk] = (acc % 2).astype(bool)
-        if len(bs):
-            cr = ((bs[None, :, 2] - bs[None, :, 0]) * (PY - bs[None, :, 1])
-                  - (bs[None, :, 3] - bs[None, :, 1]) * (PX - bs[None, :, 0]))
-            onb = ((np.abs(cr) <= eps)
-                   & (PX >= np.minimum(bs[None, :, 0], bs[None, :, 2]) - eps)
-                   & (PX <= np.maximum(bs[None, :, 0], bs[None, :, 2]) + eps)
-                   & (PY >= np.minimum(bs[None, :, 1], bs[None, :, 3]) - eps)
-                   & (PY <= np.maximum(bs[None, :, 1], bs[None, :, 3]) + eps))
-            rows, cols = np.nonzero(onb)
-            if len(rows):
-                onclos[s + rows, bo[cols]] = True
-        if len(vx):
-            eq = (PX == vx[None, :, 0]) & (PY == vx[None, :, 1])
-            rows, cols = np.nonzero(eq)
-            if len(rows):
-                onclos[s + rows, vo[cols]] = True
-    return inside, onclos
+def _layer(lgeoms, ids) -> RaggedPolygonLayer:
+    """One point locator over the lefts lgeoms[ids], keyed by left index."""
+    return RaggedPolygonLayer({int(i): lgeoms[i] for i in ids})
 
 
-def _points_interior_many(pts: np.ndarray, geoms: list) -> np.ndarray:
-    """(k, n) bool: pts[j] strictly INTERIOR to areal geoms[i]."""
-    inside, onclos = _points_vs_many(pts, geoms)
-    return inside & ~onclos
+def _pair_hits(layer, ids, pts, interior=False, eps=0.0) -> np.ndarray:
+    """(len(pts), len(ids)) bool: pts[j] on the closure of left ids[k]
+    (interior=True: strictly inside it) — every (probe, left) pair in one
+    classify_many pass; `eps` as there (fp-noded probes need it)."""
+    m = len(ids)
+    cls = layer.classify_many(np.tile(ids, len(pts)), np.repeat(pts[:, 0], m),
+                              np.repeat(pts[:, 1], m), eps)
+    return (cls == INTERIOR if interior else cls >= BOUNDARY).reshape(-1, m)
 
 
-def _contains_family_batched(predicate, lgeoms, ids, rgeom, eb) -> np.ndarray:
+def _contains_family_batched(predicate, lgeoms, ids, rgeom, eb,
+                             layer) -> np.ndarray:
     """Batched contains/covers/contains_properly/equals for AREAL lefts
     (direction-2 heavy — R's samples vs each left), with no per-pair
     scalar dispatch: R's vertices classify against every left in one
-    transpose pass; ∂R is OVER-NODED once at the union of all lefts'
+    layer pass; ∂R is OVER-NODED once at the union of all lefts'
     edges (a sub-fragment of a per-left fragment still sits in a single
     class vs that left, so finer noding is harmless) and the shared
     fragment midpoints classify the same way; per-left hole probes run
@@ -336,10 +226,8 @@ def _contains_family_batched(predicate, lgeoms, ids, rgeom, eb) -> np.ndarray:
     from .overlay import _fragments, _overlay_tol, _split_params
 
     lefts = [lgeoms[i] for i in ids]
-    rpts = _points_of(rgeom)
-    rin, ron = _points_vs_many(rpts, lefts)
     proper = predicate == "contains_properly"
-    res = ((rin & ~ron) if proper else (rin | ron)).all(axis=0)
+    res = _pair_hits(layer, ids, _points_of(rgeom), proper).all(axis=0)
     if res.any():
         se, _ow = _stacked_edges(lgeoms, ids)
         if len(se):
@@ -348,8 +236,7 @@ def _contains_family_batched(predicate, lgeoms, ids, rgeom, eb) -> np.ndarray:
             if len(frs):
                 M = np.column_stack([(frs[:, 0] + frs[:, 2]) / 2.0,
                                      (frs[:, 1] + frs[:, 3]) / 2.0])
-                fin, fon = _points_vs_many(M, lefts, eps=tol)
-                res &= ((fin & ~fon) if proper else (fin | fon)).all(axis=0)
+                res &= _pair_hits(layer, ids, M, proper, tol).all(axis=0)
         for k in np.flatnonzero(res):
             if _hole_rings(lefts[k]) and not _holes_clear_of(lefts[k], rgeom):
                 res[k] = False
@@ -430,13 +317,12 @@ def group_predicate(predicate: str, lgeoms: list, rgeom) -> np.ndarray:
         hit = vint | vbnd
         und = np.flatnonzero(~hit)
         if len(und):
-            rin, ron = _points_vs_many(_points_of(rgeom),
-                                       [lgeoms[i] for i in ids[und]])
-            hit[und[(rin | ron).any(axis=0)]] = True
+            hit[und[_pair_hits(_layer(lgeoms, ids[und]), ids[und],
+                               _points_of(rgeom)).any(axis=0)]] = True
         und = np.flatnonzero(~hit)
         if len(und):
             se, owner = _stacked_edges(lgeoms, ids[und])
-            hit[und[_segments_intersect_pairs(se, owner, _edges(rgeom),
+            hit[und[_segments_intersect_pairs(se, _edges(rgeom), owner,
                                               len(und))]] = True
         out[ids] = hit
         return out
@@ -475,7 +361,7 @@ def group_predicate(predicate: str, lgeoms: list, rgeom) -> np.ndarray:
         # bbox gate evaluate fully batched — no per-pair dispatch
         if len(i2):
             out[i2] = _contains_family_batched(predicate, lgeoms, i2,
-                                               rgeom, eb)
+                                               rgeom, eb, _layer(lgeoms, i2))
         return out
 
     if predicate == "crosses":
@@ -504,18 +390,17 @@ def group_predicate(predicate: str, lgeoms: list, rgeom) -> np.ndarray:
             out[i0] = vbnd & ~vint
         rpts = _points_of(rgeom)
         reps = _part_rep_points(rgeom)
+        layer = _layer(lgeoms, np.concatenate([i1, i2]))
         for ids in (i1, i2):
             if not len(ids):
                 continue
-            lefts = [lgeoms[i] for i in ids]
             _ve, vint, vbnd = _vertex_facts(lgeoms, ids, rgeom)
             ef = _edge_facts(lgeoms, ids, rgeom, eb)
-            rin, ron = _points_vs_many(rpts, lefts)
-            rv_closure = (rin | ron).any(axis=0)
+            rv_closure = _pair_hits(layer, ids, rpts).any(axis=0)
             inter = vbnd | vint | ef.any_fint | ef.any_fbnd | rv_closure
             ii = vint | ef.any_fint
             if ids is i2 and len(reps):
-                rep_int = _points_interior_many(reps, lefts).any(axis=0)
+                rep_int = _pair_hits(layer, ids, reps, True).any(axis=0)
                 inter |= rep_int
                 ii |= rep_int
             out[ids] = inter & ~ii
@@ -523,7 +408,8 @@ def group_predicate(predicate: str, lgeoms: list, rgeom) -> np.ndarray:
 
     # overlaps (kernels.overlaps:971) — same-dim only; R areal ⇒ dim-2 lefts
     if len(i2):
-        ii = _areal_ii(lgeoms, i2, rgeom, eb)
+        layer = _layer(lgeoms, i2)
+        ii = _areal_ii(lgeoms, i2, rgeom, eb, layer)
         und = np.flatnonzero(ii)
         if len(und):
             # ¬covers(R,L): direction 1, batched over the candidates
@@ -542,13 +428,13 @@ def group_predicate(predicate: str, lgeoms: list, rgeom) -> np.ndarray:
                 & (LB[sub, 2] >= rb[2]) & (LB[sub, 3] >= rb[3]))
             if len(cand):
                 clr = _contains_family_batched(
-                    "covers", lgeoms, sub[cand], rgeom, eb)
+                    "covers", lgeoms, sub[cand], rgeom, eb, layer)
                 res[cand[clr]] = False
             out[sub] = res
     return out
 
 
-def _areal_ii(lgeoms, ids, rgeom, eb) -> np.ndarray:
+def _areal_ii(lgeoms, ids, rgeom, eb, layer) -> np.ndarray:
     """Batched int∩int for areal lefts vs areal R, EXACT and with no
     per-left noding loop (r5 — the first cut ran a per-undecided-left
     (∂R vs L) noding pass, which dominated touch-heavy joins):
@@ -564,8 +450,8 @@ def _areal_ii(lgeoms, ids, rgeom, eb) -> np.ndarray:
        wholly inside or wholly outside L, and ONE representative
        interior point per part decides int(L) ∩ C ≠ ∅ for the whole
        component. The rep points (point_on_surface per part, computed
-       once per R) classify against every undecided left in one
-       owner-tagged parity pass — no noding of ∂R at all."""
+       once per R) classify against every undecided left in one layer
+       pass — no noding of ∂R at all."""
     _ve, vint, _vb = _vertex_facts(lgeoms, ids, rgeom)
     ef = _edge_facts(lgeoms, ids, rgeom, eb)
     ii = vint | ef.any_fint
@@ -573,7 +459,5 @@ def _areal_ii(lgeoms, ids, rgeom, eb) -> np.ndarray:
     if len(und):
         reps = _part_rep_points(rgeom)
         if len(reps):
-            inside = _points_interior_many(
-                reps, [lgeoms[ids[k]] for k in und])
-            ii[und[inside.any(axis=0)]] = True
+            ii[und[_pair_hits(layer, ids[und], reps, True).any(axis=0)]] = True
     return ii

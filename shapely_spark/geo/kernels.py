@@ -183,17 +183,25 @@ def distance(a: Geometry | None, b: Geometry | None) -> float:
 EXTERIOR, BOUNDARY, INTERIOR = 0, 1, 2
 
 
+def _on_segment(px, py, x1, y1, x2, y2, eps=0.0, cross=None):
+    """Elementwise (broadcasting): point on segment within eps, i.e. a
+    |cross product| <= eps (pass `cross` if already computed) and the
+    point inside the segment's bbox widened by eps. At eps=0 a
+    zero-length segment is exact equality."""
+    if cross is None:
+        cross = (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)
+    return ((np.abs(cross) <= eps)
+            & (px >= np.minimum(x1, x2) - eps) & (px <= np.maximum(x1, x2) + eps)
+            & (py >= np.minimum(y1, y2) - eps) & (py <= np.maximum(y1, y2) + eps))
+
+
 def points_on_segments(px, py, segs, eps=0.0):
-    """Boolean: is each point exactly on any segment (collinear + in range)."""
+    """Boolean: is each point on any segment (collinear + in range)."""
     if len(segs) == 0:
         return np.zeros(np.shape(px), dtype=bool)
-    x1, y1, x2, y2 = segs[:, 0], segs[:, 1], segs[:, 2], segs[:, 3]
     px = np.asarray(px, dtype=np.float64)[:, None]
     py = np.asarray(py, dtype=np.float64)[:, None]
-    cross = (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)
-    within_x = (px >= np.minimum(x1, x2) - eps) & (px <= np.maximum(x1, x2) + eps)
-    within_y = (py >= np.minimum(y1, y2) - eps) & (py <= np.maximum(y1, y2) + eps)
-    return np.any((np.abs(cross) <= eps) & within_x & within_y, axis=1)
+    return _on_segment(px, py, *segs.T, eps).any(axis=1)
 
 
 def points_in_rings_class(px, py, rings) -> np.ndarray:
@@ -247,26 +255,37 @@ def _chunks(weight: np.ndarray, limit: int = 1 << 20):
 
 
 class RaggedPolygonLayer:
-    """Whole-layer prepared structure for region-heterogeneous point
-    batches: all regions' edges concatenated into flat arrays with
-    per-region offsets, so classify_many vectorizes the ray-cast across
-    EVERY (point, its-region) pair in one shot (the north-star
+    """Whole-layer prepared structure for owner-heterogeneous point
+    batches: all owners' segments concatenated into flat arrays with
+    per-owner offsets, so classify_many vectorizes the ray-cast across
+    EVERY (point, its-owner) pair in one shot (the north-star
     'vectorized ray-casting' form; reference per-geometry analog:
-    shapely/creation.py:735 prepare).
+    shapely/creation.py:735 prepare). It is the engine's one owner-tagged
+    point locator: the point join, the cell cover and the group
+    predicates' (probe, left) passes all classify through it.
 
     Why it exists: a per-region classify costs ~20 µs of Python dispatch
     per distinct region per batch. At a 100k-region layer each Arrow
     batch holds ~1 candidate per region, so a per-group path degenerates
     to per-row Python. Here the work per batch is a fixed handful of
-    NumPy ops over the expanded (candidate, edge) pairs, in chunks of
+    NumPy ops over the expanded (candidate, segment) pairs, in chunks of
     bounded size — identical FLOPs, no per-region dispatch.
 
-    Built ONCE (driver side, then broadcast as plain arrays): workers
-    pay zero per-region construction. Semantics are bit-identical to
-    points_in_rings_class: half-open even-odd crossing parity XOR-ed
-    across rings == parity of total crossings over all non-degenerate
-    ring edges; exact (eps=0) on-segment boundary test overrides;
-    degenerate rings (<4 pts) contribute boundary segments only."""
+    Owners of any type:
+    - areal (Polygon, MultiPolygon; a GeometryCollection counts its
+      polygon members only, the cell cover's rule) give crossing and
+      boundary segments. Semantics are bit-identical to
+      points_in_rings_class: half-open even-odd crossing parity XOR-ed
+      across rings == parity of total crossings over all non-degenerate
+      ring edges; the on-segment boundary test overrides; degenerate
+      rings (<4 pts) give boundary segments only;
+    - lineal owners give boundary segments only, and puntal owners
+      zero-length segments, so at eps=0 their on-segment test is exact
+      vertex equality. They answer closure membership only: BOUNDARY
+      means on the geometry, never INTERIOR.
+
+    Built ONCE per layer (the broadcast join builds it driver side and
+    ships plain arrays): workers pay zero per-owner construction."""
 
     __slots__ = ("n", "bbox", "cross_start", "cross_seg",
                  "bnd_start", "bnd_seg")
@@ -274,33 +293,15 @@ class RaggedPolygonLayer:
     def __init__(self, geoms_by_id: dict[int, "Geometry"]):
         n = (max(geoms_by_id) + 1) if geoms_by_id else 0
         self.n = n
-        self.bbox = np.full((n, 4), np.nan)
         cross_cnt = np.zeros(n, dtype=np.int64)
         bnd_cnt = np.zeros(n, dtype=np.int64)
         cross_parts: list[np.ndarray] = []
         bnd_parts: list[np.ndarray] = []
         for rid in sorted(geoms_by_id):
-            g = geoms_by_id[rid]
-            rings: list[np.ndarray] = []
-            if g is not None and not g.is_empty:
-                if g.type_id == POLYGON:
-                    rings = [np.asarray(r)[:, :2] for r in g.rings]
-                elif g.type_id in (MULTIPOLYGON, GEOMETRYCOLLECTION):
-                    for p in g.parts or []:
-                        if p.type_id == POLYGON:
-                            rings.extend(np.asarray(r)[:, :2] for r in p.rings)
-                self.bbox[rid] = bounds(g)
-            ce, be = 0, 0
-            for c in rings:
-                if len(c) >= 2:
-                    seg = np.column_stack([c[:-1], c[1:]])
-                    bnd_parts.append(seg)
-                    be += len(seg)
-                    if len(c) >= 4:
-                        cross_parts.append(seg)
-                        ce += len(seg)
-            cross_cnt[rid] = ce
-            bnd_cnt[rid] = be
+            nc, nb = len(cross_parts), len(bnd_parts)
+            _owner_segments(geoms_by_id[rid], cross_parts, bnd_parts)
+            cross_cnt[rid] = sum(len(s) for s in cross_parts[nc:])
+            bnd_cnt[rid] = sum(len(s) for s in bnd_parts[nb:])
         self.cross_start = np.zeros(n + 1, dtype=np.int64)
         np.cumsum(cross_cnt, out=self.cross_start[1:])
         self.bnd_start = np.zeros(n + 1, dtype=np.int64)
@@ -309,6 +310,14 @@ class RaggedPolygonLayer:
                           if cross_parts else np.zeros((0, 4)))
         self.bnd_seg = (np.concatenate(bnd_parts, axis=0)
                         if bnd_parts else np.zeros((0, 4)))
+        # per-owner bbox of its boundary segments (every crossing segment
+        # is one too); owners without segments keep NaN: nothing is on them
+        self.bbox = np.full((n, 4), np.nan)
+        has = bnd_cnt > 0
+        if len(self.bnd_seg):
+            s, at = self.bnd_seg, self.bnd_start[:-1][has]
+            self.bbox[has, :2] = np.minimum.reduceat(np.minimum(s[:, :2], s[:, 2:]), at)
+            self.bbox[has, 2:] = np.maximum.reduceat(np.maximum(s[:, :2], s[:, 2:]), at)
 
     @staticmethod
     def _expand(start: np.ndarray, rids: np.ndarray):
@@ -336,34 +345,59 @@ class RaggedPolygonLayer:
             odd[s] = np.bincount(p[hit], minlength=s.stop - s.start) % 2 == 1
         return odd
 
-    def classify_many(self, rids, px, py) -> np.ndarray:
-        """0 exterior / 1 boundary / 2 interior of point i vs region
-        rids[i] — one vectorized pass for the whole heterogeneous batch;
-        points outside their region's bbox are EXTERIOR unexamined."""
+    def classify_many(self, rids, px, py, eps: float = 0.0) -> np.ndarray:
+        """0 exterior / 1 boundary / 2 interior of point i vs owner
+        rids[i] — one vectorized pass for the whole heterogeneous batch.
+        `eps` loosens the on-boundary test exactly as
+        points_on_segments(eps=) (fp-noded probes need it); points outside
+        their owner's bbox widened by eps are EXTERIOR unexamined."""
         rids = np.asarray(rids, dtype=np.int64)
         px = np.asarray(px, dtype=np.float64)
         py = np.asarray(py, dtype=np.float64)
         out = np.zeros(len(rids), dtype=np.int8)
         ok = (rids >= 0) & (rids < self.n)
         bb = self.bbox[np.where(ok, rids, 0)]
-        live = (ok & (px >= bb[:, 0]) & (px <= bb[:, 2])
-                & (py >= bb[:, 1]) & (py <= bb[:, 3]))
+        live = (ok & (px >= bb[:, 0] - eps) & (px <= bb[:, 2] + eps)
+                & (py >= bb[:, 1] - eps) & (py <= bb[:, 3] + eps))
         if not live.any():
             return out
         li = np.nonzero(live)[0]
         r, x, y = rids[li], px[li], py[li]
         out[li[self.odd_crossings(r, x, y)]] = INTERIOR
-        # exact on-boundary test overrides (eps = 0, as points_on_segments)
         for s in _chunks((self.bnd_start[1:] - self.bnd_start[:-1])[r]):
             row, eidx = self._expand(self.bnd_start, r[s])
             x1, y1, x2, y2 = self.bnd_seg[eidx].T
-            PX, PY = x[s][row], y[s][row]
-            cross = (x2 - x1) * (PY - y1) - (y2 - y1) * (PX - x1)
-            onb = ((cross == 0.0)
-                   & (PX >= np.minimum(x1, x2)) & (PX <= np.maximum(x1, x2))
-                   & (PY >= np.minimum(y1, y2)) & (PY <= np.maximum(y1, y2)))
+            onb = _on_segment(x[s][row], y[s][row], x1, y1, x2, y2, eps)
             out[li[s][row[onb]]] = BOUNDARY
         return out
+
+
+def _owner_segments(g, cross: list, bnd: list, areal_only: bool = False) -> None:
+    """Append g's crossing and boundary segments for RaggedPolygonLayer:
+    polygon rings to both (rings of <4 points to bnd only), lineal edges
+    and puntal zero-length segments to bnd. Members of a multi or a
+    collection count only if areal."""
+    if g is None or g.is_empty:
+        return
+    tid = g.type_id
+    if tid == POLYGON:
+        for r in g.rings or []:
+            c = np.asarray(r)[:, :2]
+            if len(c) >= 2:
+                seg = np.column_stack([c[:-1], c[1:]])
+                bnd.append(seg)
+                if len(c) >= 4:
+                    cross.append(seg)
+    elif tid in (MULTIPOLYGON, GEOMETRYCOLLECTION):
+        for p in g.parts or []:
+            _owner_segments(p, cross, bnd, True)
+    elif areal_only:
+        return
+    elif tid in (POINT, MULTIPOINT):
+        p = _points_of(g)
+        bnd.append(np.hstack([p, p]))
+    else:
+        bnd.append(_edges(g))
 
 
 def _predicate_xy(geom: Geometry | None, x, y, predicate: str, scalar) -> np.ndarray:
@@ -392,36 +426,37 @@ def intersects_xy(geom: Geometry | None, x, y) -> np.ndarray:
 # Segment-segment intersection (for line/polygon predicates)
 # ---------------------------------------------------------------------------
 
-def _segments_intersect_any(sa: np.ndarray, sb: np.ndarray) -> bool:
-    """True if any segment of sa properly or improperly intersects any of sb."""
+_EDGE_CHUNK = 1 << 22  # cap the (segment × segment) outer product rows
+
+
+def _segments_intersect_pairs(sa: np.ndarray, sb: np.ndarray, owner=None,
+                              n: int = 1, proper: bool = False) -> np.ndarray:
+    """Per owner: does any segment of sa (owner[i] owns sa[i]; None = one
+    owner, 0) meet any segment of sb? Met = a proper crossing or, unless
+    `proper`, a touch (an endpoint of one on the other, collinear overlap
+    included). Chunked so the outer product stays bounded."""
+    out = np.zeros(n, dtype=bool)
     if len(sa) == 0 or len(sb) == 0:
-        return False
-    ax1, ay1, ax2, ay2 = (sa[:, i][:, None] for i in range(4))
+        return out
+    if owner is None:
+        owner = np.zeros(len(sa), dtype=np.int64)
     bx1, by1, bx2, by2 = (sb[:, i][None, :] for i in range(4))
-
-    d1 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
-    d2 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
-    d3 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)
-    d4 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)
-    proper = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0)) & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0)
-    if proper.any():
-        return True
-
-    # collinear / endpoint-touch cases: any endpoint of one on the other
-    def on(d, px, py, x1, y1, x2, y2):
-        return (
-            (d == 0)
-            & (px >= np.minimum(x1, x2)) & (px <= np.maximum(x1, x2))
-            & (py >= np.minimum(y1, y2)) & (py <= np.maximum(y1, y2))
-        )
-
-    touch = (
-        on(d1, bx1, by1, ax1, ay1, ax2, ay2)
-        | on(d2, bx2, by2, ax1, ay1, ax2, ay2)
-        | on(d3, ax1, ay1, bx1, by1, bx2, by2)
-        | on(d4, ax2, ay2, bx1, by1, bx2, by2)
-    )
-    return bool(touch.any())
+    rows = max(1, _EDGE_CHUNK // len(sb))
+    for s in range(0, len(sa), rows):
+        ax1, ay1, ax2, ay2 = (sa[s:s + rows, i][:, None] for i in range(4))
+        d1 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
+        d2 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
+        d3 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)
+        d4 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)
+        hit = (((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
+               & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0))
+        if not proper:
+            hit |= (_on_segment(bx1, by1, ax1, ay1, ax2, ay2, cross=d1)
+                    | _on_segment(bx2, by2, ax1, ay1, ax2, ay2, cross=d2)
+                    | _on_segment(ax1, ay1, bx1, by1, bx2, by2, cross=d3)
+                    | _on_segment(ax2, ay2, bx1, by1, bx2, by2, cross=d4))
+        out[np.unique(owner[s:s + rows][hit.any(axis=1)])] = True
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -489,9 +524,9 @@ def intersects(a: Geometry | None, b: Geometry | None) -> bool:
     ea, eb = _edges(a), _edges(b)
     if da == 1:
         if db == 1:
-            return _segments_intersect_any(ea, eb)
+            return bool(_segments_intersect_pairs(ea, eb)[0])
         # line vs polygon: edge crossing or any line vertex inside
-        if _segments_intersect_any(ea, eb):
+        if _segments_intersect_pairs(ea, eb)[0]:
             return True
         return bool((points_in_rings_class(pa[:, 0], pa[:, 1], _rings_of(b)) >= BOUNDARY).any())
     # polygon vs polygon: with no boundary crossing, every CONNECTED
@@ -499,7 +534,7 @@ def intersects(a: Geometry | None, b: Geometry | None) -> bool:
     # but a multipolygon has several components, so EVERY part must be
     # probed (the r3 fuzz caught a one-vertex probe missing a multipolygon
     # whose first part lies outside while the second sits inside)
-    if _segments_intersect_any(ea, eb):
+    if _segments_intersect_pairs(ea, eb)[0]:
         return True
     pb = _points_of(b)
     if (points_in_rings_class(pb[:, 0], pb[:, 1], _rings_of(a)) >= BOUNDARY).any():
@@ -726,21 +761,6 @@ def touches(a: Geometry | None, b: Geometry | None) -> bool:
     return not _interiors_intersect(a, b)
 
 
-def _proper_crossing(ea: np.ndarray, eb: np.ndarray) -> bool:
-    """Any strictly-proper segment crossing between the two edge sets."""
-    if not len(ea) or not len(eb):
-        return False
-    ax1, ay1, ax2, ay2 = (ea[:, i][:, None] for i in range(4))
-    bx1, by1, bx2, by2 = (eb[:, i][None, :] for i in range(4))
-    d1 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
-    d2 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
-    d3 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)
-    d4 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)
-    proper = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0)) \
-        & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0)
-    return bool(proper.any())
-
-
 def _axis_rect(g: Geometry):
     """(xmin, ymin, xmax, ymax) if g is a single axis-aligned rectangle
     ring (hole-free), else None."""
@@ -818,7 +838,7 @@ def _interiors_intersect(a: Geometry, b: Geometry) -> bool:
             pg = _points_of(g)
             if (points_in_rings_class(pg[:, 0], pg[:, 1], _rings_of(h)) == INTERIOR).any():
                 return True
-        if _proper_crossing(_edges(a), _edges(b)):
+        if _segments_intersect_pairs(_edges(a), _edges(b), proper=True)[0]:
             return True
         # collinear-boundary overlaps: node ∂g against ∂h; a fragment of ∂g
         # strictly inside h witnesses the overlap (every neighbourhood of
@@ -1269,18 +1289,17 @@ def is_simple(geom: Geometry | None) -> bool:
     segs = _edges(geom)
     n = len(segs)
     closed = is_closed(geom)
-    for i in range(n):
-        for j in range(i + 1, n):
-            adjacent = j == i + 1 or (closed and i == 0 and j == n - 1)
-            a, b = segs[i : i + 1], segs[j : j + 1]
-            if _segments_intersect_any(a, b):
-                if adjacent:
-                    # sharing one endpoint is fine; overlap is not
-                    mx = np.array([(b[0, 0] + b[0, 2]) / 2.0])
-                    my = np.array([(b[0, 1] + b[0, 3]) / 2.0])
-                    if points_on_segments(mx, my, a).any():
-                        return False
-                    continue
+    for i in range(n - 1):
+        # which later segments meet segment i (each its own owner)
+        a, rest = segs[i : i + 1], segs[i + 1 :]
+        hit = _segments_intersect_pairs(rest, a, np.arange(len(rest)), len(rest))
+        for j in i + 1 + np.flatnonzero(hit):
+            if not (j == i + 1 or (closed and i == 0 and j == n - 1)):
+                return False
+            # adjacent: sharing one endpoint is fine; overlap is not
+            b = segs[j]
+            if points_on_segments(np.array([(b[0] + b[2]) / 2.0]),
+                                  np.array([(b[1] + b[3]) / 2.0]), a).any():
                 return False
     return True
 

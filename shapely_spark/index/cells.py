@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..geo.geom import GEOMETRYCOLLECTION, MULTIPOLYGON, POLYGON
 from ..geo.kernels import RaggedPolygonLayer, _chunks
 
 DEFAULT_RES = 9  # 512×512 grid → cell ≈ 0.70° lon × 0.35° lat
@@ -200,7 +201,11 @@ def polygon_cover_batch(geoms, res: int = DEFAULT_RES):
     allocates a dense cells × edges matrix."""
     n = grid_n(res)
     w, h = 360.0 / n, 180.0 / n
-    layer = RaggedPolygonLayer(dict(enumerate(geoms)))
+    # the layer takes owners of any type: hand it the polygonal ones only
+    # (of a collection it keeps the polygon members)
+    layer = RaggedPolygonLayer({
+        i: g for i, g in enumerate(geoms) if g is not None
+        and g.type_id in (POLYGON, MULTIPOLYGON, GEOMETRYCOLLECTION)})
     n_bnd = layer.bnd_start[1:] - layer.bnd_start[:-1]
     ok = ~np.isnan(layer.bbox[:, 0]) & (n_bnd > 0)
     live = np.flatnonzero(ok)

@@ -351,9 +351,12 @@ def spatial_join_geom(
             f"predicate {predicate!r} is not supported by spatial_join_geom; "
             f"valid: {sorted(_GEOM_JOIN_PREDICATES)}")
 
-    def covers(df: DataFrame, id_col: str) -> DataFrame:
-        schema = (f"{id_col} long, cell_id long, bxmin double, bymin double,"
-                  " bxmax double, bymax double, is_rect boolean, wkb binary")
+    def covers(df: DataFrame, id_col: str, side: str) -> DataFrame:
+        # the UDF emits the plan's final column names: no aliasing select
+        col = {k: f"__{side}{k}" for k in ("c", "x", "y", "x2", "y2", "rect", "wkb")}
+        schema = (f"{id_col} long, {col['c']} long, {col['x']} double,"
+                  f" {col['y']} double, {col['x2']} double, {col['y2']} double,"
+                  f" {col['rect']} boolean, {col['wkb']} binary")
 
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from ..geo import kernels as K
@@ -382,31 +385,20 @@ def spatial_join_geom(
                 yield pd.DataFrame({
                     id_col: pd.Series(
                         pdf[id_col].to_numpy(dtype=np.int64)[src], dtype="int64"),
-                    "cell_id": pd.Series(cells, dtype="int64"),
-                    "bxmin": pd.Series(bnds[src, 0], dtype="float64"),
-                    "bymin": pd.Series(bnds[src, 1], dtype="float64"),
-                    "bxmax": pd.Series(bnds[src, 2], dtype="float64"),
-                    "bymax": pd.Series(bnds[src, 3], dtype="float64"),
-                    "is_rect": pd.Series(rect[src], dtype="bool"),
-                    "wkb": pd.Series(
+                    col["c"]: pd.Series(cells, dtype="int64"),
+                    col["x"]: pd.Series(bnds[src, 0], dtype="float64"),
+                    col["y"]: pd.Series(bnds[src, 1], dtype="float64"),
+                    col["x2"]: pd.Series(bnds[src, 2], dtype="float64"),
+                    col["y2"]: pd.Series(bnds[src, 3], dtype="float64"),
+                    col["rect"]: pd.Series(rect[src], dtype="bool"),
+                    col["wkb"]: pd.Series(
                         [bytes(wkbs.iloc[k]) for k in src], dtype="object"),
                 })
 
         return df.select(id_col, "wkb").mapInPandas(gen, schema)
 
-    lcov = covers(left, left_id).select(
-        F.col(left_id), F.col("cell_id").alias("__lc"),
-        F.col("bxmin").alias("__lx"), F.col("bymin").alias("__ly"),
-        F.col("bxmax").alias("__lx2"), F.col("bymax").alias("__ly2"),
-        F.col("is_rect").alias("__lrect"),
-        F.col("wkb").alias("__lwkb"),
-    )
-    rcov = covers(right, right_id).select(
-        F.col(right_id), F.col("cell_id").alias("__rc"),
-        F.col("bxmin").alias("__rx"), F.col("bymin").alias("__ry"),
-        F.col("bxmax").alias("__rx2"), F.col("bymax").alias("__ry2"),
-        F.col("is_rect").alias("__rrect"),
-    )
+    lcov = covers(left, left_id, "l")
+    rcov = covers(right, right_id, "r").drop("__rwkb")
     rgeo = right.select(F.col(right_id), F.col("wkb").alias("__rwkb"))
     if broadcast:
         rcov, rgeo = F.broadcast(rcov), F.broadcast(rgeo)

@@ -486,6 +486,78 @@ def test_ragged_layer_matches_prepared_classify():
         assert set(np.unique(got)) == {0, 1, 2}
 
 
+@pytest.mark.parametrize("eps", [0.0, 1e-3])
+def test_ragged_layer_owners_of_any_type(eps):
+    """One layer mixes polygons with lineal and puntal owners: a polygon
+    classifies as points_in_rings_class with the boundary test at eps
+    (points_on_segments(eps=)); a line or a point answers closure
+    membership only (BOUNDARY on it, else EXTERIOR), a point by exact
+    vertex equality at eps=0 and within eps per axis otherwise."""
+    from shapely_spark.geo import kernels as K
+    from shapely_spark.geo.geom import (
+        box, empty, linestring, multilinestring, multipoint, polygon,
+    )
+    from shapely_spark.geo.kernels import (
+        BOUNDARY, EXTERIOR, INTERIOR, RaggedPolygonLayer, points_in_rings_class,
+        points_on_segments,
+    )
+
+    geoms = {
+        0: polygon([(0, 0), (4, 0), (4, 4), (0, 4)], [[(1, 1), (1, 3), (3, 3), (3, 1)]]),
+        1: linestring([(0, 0), (2, 1), (2, 3), (5, 3)]),
+        3: point(1.5, 2.5),
+        4: multipoint([(0, 0), (1.25, -0.5), (3, 3)]),
+        5: box(-1, -1, 2, 1),
+        6: multilinestring([[(0, 0), (0, 4)], [(-1, 2), (3, 2)]]),
+        7: empty(),
+        8: None,
+    }
+    layer = RaggedPolygonLayer(geoms)
+    rng = np.random.RandomState(3)
+    rids, px, py = [], [], []
+    for rid, g in geoms.items():
+        v = (np.zeros((0, 2)) if g is None or g.is_empty
+             else g.all_coords()[:, :2])
+        probes = [v, (v[:-1] + v[1:]) / 2 if len(v) > 1 else v,
+                  v + [eps / 2, -eps / 2], v + [2 * eps, 0],
+                  rng.uniform(-1.5, 5.5, (80, 2)), rng.randint(-1, 6, (40, 2))]
+        pts = np.concatenate(probes, axis=0)
+        rids += [rid] * len(pts)
+        px.append(pts[:, 0])
+        py.append(pts[:, 1])
+    rids, px, py = np.array(rids), np.concatenate(px), np.concatenate(py)
+    got = layer.classify_many(rids, px, py, eps)
+
+    want = np.zeros(len(rids), dtype=np.int8)
+    for rid, g in geoms.items():
+        if g is None or g.is_empty:
+            continue
+        m = np.flatnonzero(rids == rid)
+        x, y = px[m], py[m]
+        if K._dim(g) == 2:
+            bb = K.bounds(g)
+            m = m[(x >= bb[0] - eps) & (x <= bb[2] + eps)
+                  & (y >= bb[1] - eps) & (y <= bb[3] + eps)]
+            x, y = px[m], py[m]
+            cls = points_in_rings_class(x, y, K._rings_of(g))
+            cls[points_on_segments(x, y, K._edges(g), eps=eps)] = BOUNDARY
+        elif K._dim(g) == 1:
+            cls = np.where(points_on_segments(x, y, K._edges(g), eps=eps),
+                           BOUNDARY, EXTERIOR)
+        else:
+            v = K._points_of(g)
+            near = ((np.abs(x[:, None] - v[None, :, 0]) <= eps)
+                    & (np.abs(y[:, None] - v[None, :, 1]) <= eps))
+            cls = np.where(near.any(axis=1), BOUNDARY, EXTERIOR)
+        want[m] = cls
+    np.testing.assert_array_equal(got, want)
+    for rid in (0, 5):
+        assert set(got[rids == rid]) == {EXTERIOR, BOUNDARY, INTERIOR}
+    for rid in (1, 3, 4, 6):
+        assert set(got[rids == rid]) == {EXTERIOR, BOUNDARY}
+    assert not got[np.isin(rids, [7, 8])].any()
+
+
 def test_group_intersects_matches_scalar_fuzz():
     """group_predicate("intersects") (the vectorized non-rect pair
     refine) agrees with the scalar intersects kernel over a mixed fuzz

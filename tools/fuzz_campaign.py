@@ -28,7 +28,9 @@ def main() -> int:
     args = ap.parse_args()
 
     from hypothesis import HealthCheck, given, seed, settings
+    from hypothesis import strategies as st
 
+    import tests.test_group_predicates as gp
     import tests.test_overlay_consistency as ov
     import tests.test_predicate_consistency as pr
 
@@ -40,22 +42,29 @@ def main() -> int:
         print_blob=True,
     )
     rnd = int.from_bytes(os.urandom(4), "big")
+    def inner(test):
+        return test.hypothesis.inner_test
+
     campaigns = [
         ("relate/named-predicates", pr.geoms(), pr.geoms(),
-         pr.test_relate_transpose_and_named_predicates),
+         inner(pr.test_relate_transpose_and_named_predicates)),
         ("predicate lattice", pr.geoms(), pr.geoms(),
-         pr.test_predicate_lattice),
+         inner(pr.test_predicate_lattice)),
         ("distance/dwithin", pr.geoms(), pr.geoms(),
-         pr.test_distance_dwithin_consistency),
+         inner(pr.test_distance_dwithin_consistency)),
         ("overlay inclusion-exclusion", ov.polys(), ov.polys(),
-         ov.test_overlay_inclusion_exclusion),
+         inner(ov.test_overlay_inclusion_exclusion)),
         ("overlay vs relate", ov.polys(), ov.polys(),
-         ov.test_overlay_agrees_with_relate),
+         inner(ov.test_overlay_agrees_with_relate)),
+        # a batch of point/line/polygon/multipolygon/holed lefts against
+        # one areal, lineal or point right: every predicate of
+        # group_predicate must equal the scalar kernel per left
+        ("group≡scalar", st.lists(pr.geoms(), min_size=1, max_size=12),
+         pr.geoms(), gp._check_batch),
     ]
     failures = 0
-    for name, sa, sb, test in campaigns:
-        inner = test.hypothesis.inner_test
-        runner = seed(rnd)(cfg(given(sa, sb)(inner)))
+    for name, sa, sb, body in campaigns:
+        runner = seed(rnd)(cfg(given(sa, sb)(body)))
         t0 = time.time()
         try:
             runner()
