@@ -1,57 +1,52 @@
-"""Group-vectorized binary predicates: a batch of left geometries vs ONE
-right geometry — the spatial_join_geom refine hot path for every
-supported predicate (r4 verdict item: the non-rect remainder ran the
-scalar kernel per candidate pair).
+"""Pair-vectorized binary predicates: every candidate (left, right) pair
+of an Arrow batch decided in ONE call — the spatial_join_geom refine hot
+path for every supported predicate. ``pair_predicate`` is the engine;
+``group_predicate`` (a left batch against one right) is its one-right
+case.
 
 Semantics are pinned to the scalar kernels (geo/kernels.py), which pin
 the reference (shapely/predicates.py:556 contains, :729 covers, :905
-overlaps, :968 touches, :500 crosses) — agreement is enforced by a fuzz
-test (tests/test_group_predicates.py). The decomposition:
+overlaps, :968 touches, :500 crosses) — agreement is enforced by fuzz
+tests (tests/test_group_predicates.py). The decomposition:
 
-- **Batched direction 1** (left samples vs the one right container):
-  every left's vertices stack into ONE ``_all_class`` pass; every left's
-  edges stack and node against ∂R in ONE chunked ``_split_params`` sweep,
-  fragment midpoints classify against R's rings in one pass (noding first
-  is what makes each fragment sit in a single DE-9IM class — the
-  "sampling needs noding" rule; a proper crossing splits the edge and
-  its inner sub-fragment classifies INTERIOR, so no separate detector).
-- **Batched gates**: bbox containment/overlap/equality prefilters decide
-  most candidates with zero Python-per-pair work (containment joins:
-  candidates whose bbox cannot contain R's bbox die here).
-- **Direction 2 through one point locator**: R-side probes (R's
-  vertices, R's part representative points, over-noded ∂R fragment
-  midpoints) classify against the lefts as (left, probe) pairs in one
-  ``kernels.RaggedPolygonLayer.classify_many`` pass over a layer of the
-  lefts built once per call (``_pair_hits``): closure membership is
-  ``cls >= BOUNDARY``, strict interiority ``cls == INTERIOR``.
-- **int∩int by topology**: once direction 1 proves ∂L never enters
-  int(R), each connected component of int(R) (one per polygon part)
-  lies wholly inside or wholly outside every such left — ONE
-  representative interior point per R part decides the rest (no
-  per-left noding of ∂R at all). The containment family
-  (contains/covers/contains_properly/equals) over-nodes ∂R ONCE at the
-  union of all survivors' edges and classifies the shared fragments
-  the same way — never a per-pair scalar-kernel dispatch on supported
-  paths (per-left work remains only for hole probes of holed lefts and
-  the rare island-in-hole exact check).
-- **intersects** is three batched stages over the still-undecided
-  lefts: left vertices on closure(R) (``_vertex_facts``), R's vertices
-  on each left's closure (one layer pass), and left edges meeting R's
-  edges (chunked ``kernels._segments_intersect_pairs``).
+- **Extract once per distinct geometry** (``_Pool``): each distinct left
+  and right of the call gives its dim, bounds, vertices and edges once,
+  as ragged arrays keyed by pool code; one ``RaggedPolygonLayer`` over
+  the pool is the point locator of every stage. Pairs read all of it by
+  gather, so a left met by many rights pays its extraction once.
+- **Pair-tagged stages**, each one pass over the pairs still undecided:
+  the bbox gate; vertex facts (one side's vertices classified against
+  the other side in one layer pass, ``_vertex_facts``); edge facts (one
+  side's edges noded against ONLY its own pair's other edges, by ragged
+  expansion, at the pair's own ``_overlay_tol`` as the scalar kernels
+  do, fragment midpoints classified in one layer pass — noding first is
+  what puts each fragment in a single DE-9IM class, and a proper
+  crossing splits the edge so its inner sub-fragment reads INTERIOR);
+  edge-meets-edge for ``intersects``; part representative points.
+- **int∩int by topology**: once the edge and vertex facts prove ∂A never
+  enters int(B), each connected component of int(B) (one per polygon
+  part) lies wholly inside or wholly outside A — ONE representative
+  interior point per B part decides the rest (``_ii_and_contact``).
+- **One covers kernel** (``_covers``): covers / contains /
+  contains_properly of an areal P over any Q from Q's vertices and Q's
+  edges noded at ∂P, then the hole probe of a holed P per survivor. The
+  within family, the contains family, equals and overlaps compose it.
 
-Batched shape: areal right (Polygon/MultiPolygon), and for
-``intersects`` also a lineal or puntal right; lefts of any
-point/line/polygon type. Every other shape is still answered here, by
-the exact scalar kernel per left: GeometryCollection lefts and rights,
-and (beyond ``intersects``) rights that are non-areal or have no edges.
-This module is the only place that decides how a left batch is
-evaluated against one right geometry.
+Batched shape: beyond ``intersects`` (batched for any point/line/polygon
+pair), one side must be areal. A pair whose areal side is the left is
+answered through the converse predicate with the roles swapped
+(``crosses``/``touches`` are symmetric; ``contains``/``covers`` map to
+``within``/``covered_by``), so a lineal right such as ``line_crosses``'s
+rides the batched path. Pairs with a GeometryCollection side, and
+(beyond ``intersects``) pairs with no areal side, run the exact scalar
+kernel per pair. This module is the only place that decides how a
+candidate pair is evaluated.
 
 Invalid-input note: predicates on INVALID geometry are undefined in the
 reference (GEOS requires valid input). For a zero-area polygon part the
-group path takes the principled reading — its interior is EMPTY, so it
-can witness no int∩int (``_part_rep_points`` verifies each
-representative point is strictly interior and skips degenerate parts);
+pair path takes the principled reading — its interior is EMPTY, so it
+can witness no int∩int (``_rep_points`` gives it no representative
+point, and every one it gives is verified strictly interior);
 the scalar kernel's collinear-nudge heuristic can disagree there
 because a zero-area ring has no defined orientation. Valid inputs agree
 exactly (fuzz-pinned).
@@ -62,402 +57,354 @@ from __future__ import annotations
 import numpy as np
 
 from . import kernels as K
-from .geom import GEOMETRYCOLLECTION, MULTIPOLYGON, POLYGON, Geometry
+from .geom import GEOMETRYCOLLECTION, POLYGON
 from .kernels import (
-    _EDGE_CHUNK, BOUNDARY, EXTERIOR, INTERIOR, RaggedPolygonLayer, _all_class,
-    _dim, _edges, _hole_rings, _holes_clear_of, _points_of, _rings_of,
-    _segments_intersect_pairs, bounds, points_in_rings_class,
-    points_on_segments,
+    BOUNDARY, EXTERIOR, INTERIOR, RaggedPolygonLayer, _chunks, _dim, _edges,
+    _expand, _hole_rings, _holes_clear_of, _points_of, _ragged,
+    _ragged_bounds, _segments_meet,
 )
+from .overlay import _edge_fragments, _event_hits, _merge_params, _split_events
 
 _SUPPORTED = {
     "intersects", "within", "covered_by", "touches", "overlaps", "crosses",
     "contains", "covers", "contains_properly", "equals",
 }
+# pred(a, b) == _CONVERSE[pred](b, a); "within_properly" is internal
+_CONVERSE = {
+    "within": "contains", "contains": "within", "covered_by": "covers",
+    "covers": "covered_by", "contains_properly": "within_properly",
+}
+# the within family as the covers kernel with the roles swapped
+_WITHIN = {"within": "contains", "covered_by": "covers",
+           "within_properly": "contains_properly"}
 
 
-def _ragged_stack(arrays: list[np.ndarray], width: int):
-    """Concatenate per-owner arrays; return (stacked, owner_index)."""
-    keep = [(i, a) for i, a in enumerate(arrays) if len(a)]
-    if not keep:
-        return np.zeros((0, width)), np.zeros(0, np.int64)
-    stacked = np.concatenate([a for _, a in keep], axis=0)
-    owner = np.repeat(np.fromiter((i for i, _ in keep), np.int64,
-                                  count=len(keep)),
-                      [len(a) for _, a in keep])
-    return stacked, owner
+class _Pool:
+    """Per-geometry facts of a call's distinct geometries, each extracted
+    once: dim (-1 for None/EMPTY), collection flag, bounds, hole flag,
+    noding span, and vertices and edges as ragged arrays keyed by pool
+    code. The point locator over the pool is built on first use."""
+
+    def __init__(self, geoms: list):
+        self.geoms = geoms
+        n = len(geoms)
+        self.dim = np.full(n, -1, dtype=np.int64)
+        self.gc = np.zeros(n, dtype=bool)
+        self.holed = np.zeros(n, dtype=bool)
+        verts, edges = [np.zeros((0, 2))] * n, [np.zeros((0, 4))] * n
+        for k, g in enumerate(geoms):
+            if g is None or g.is_empty:
+                continue
+            self.gc[k] = g.type_id == GEOMETRYCOLLECTION
+            self.dim[k] = _dim(g)
+            self.holed[k] = bool(_hole_rings(g))
+            verts[k], edges[k] = _points_of(g), _edges(g)
+        self.vstart, self.vxy = _ragged(verts, 2)
+        self.estart, self.eseg = _ragged(edges, 4)
+        self.ecount = np.diff(self.estart)
+        self.bbox = _ragged_bounds(self.vstart, self.vxy)
+        # _overlay_tol's span of the geometry's edges
+        self.span = np.ones(n)
+        has = self.ecount > 0
+        if has.any():
+            self.span[has] = np.maximum(1.0, np.maximum.reduceat(
+                np.abs(self.eseg).max(axis=1), self.estart[:-1][has]))
+        self._layer = None
+
+    @property
+    def layer(self) -> RaggedPolygonLayer:
+        if self._layer is None:
+            self._layer = RaggedPolygonLayer(dict(enumerate(self.geoms)))
+        return self._layer
+
+    def reps(self, codes: np.ndarray):
+        """(pair, x, y) rows: the part rep points of areal geoms[codes[pair]]
+        that are strictly inside it, for every distinct code in one pass."""
+        uniq, inv = np.unique(codes, return_inverse=True)
+        owner, x, y = _rep_points([self.geoms[c] for c in uniq])
+        ok = self.layer.classify_many(uniq[owner], x, y) == INTERIOR
+        start = np.searchsorted(owner[ok], np.arange(len(uniq) + 1))
+        row, at = _expand(start, inv)
+        return row, x[ok][at], y[ok][at]
 
 
-def _any_by(owner: np.ndarray, mask: np.ndarray, n: int) -> np.ndarray:
-    out = np.zeros(n, dtype=bool)
-    if len(mask) and mask.any():
-        out[np.unique(owner[mask])] = True
-    return out
+def _any_by(row: np.ndarray, mask: np.ndarray, m: int) -> np.ndarray:
+    return np.bincount(row[mask], minlength=m) > 0
 
 
-def _vertex_facts(lgeoms, ids, rgeom):
-    """(any_vext, any_vint, any_vbnd) per id: left vertices vs R."""
-    m = len(ids)
-    pts, owner = _ragged_stack([_points_of(lgeoms[i]) for i in ids], 2)
-    cls = _all_class(pts, rgeom) if len(pts) else np.zeros(0, np.int8)
-    return (_any_by(owner, cls == EXTERIOR, m),
-            _any_by(owner, cls == INTERIOR, m),
-            _any_by(owner, cls == BOUNDARY, m))
+def _vertex_facts(pool: _Pool, src, dst):
+    """(any EXTERIOR, any INTERIOR, any BOUNDARY) per pair k: src[k]'s
+    vertices against dst[k], every pair in one layer pass (closure only,
+    as BOUNDARY, for a non-areal dst)."""
+    row, v = _expand(pool.vstart, src)
+    cls = pool.layer.classify_many(dst[row], pool.vxy[v, 0], pool.vxy[v, 1])
+    m = len(src)
+    return (_any_by(row, cls == EXTERIOR, m), _any_by(row, cls == INTERIOR, m),
+            _any_by(row, cls == BOUNDARY, m))
 
 
-def _stacked_edges(lgeoms, ids):
-    return _ragged_stack([_edges(lgeoms[i]) for i in ids], 4)
+def _edge_pairs(pool: _Pool, src, dst):
+    """Chunks (pair, src edges E, row, dst edge) of the ragged expansion
+    of every src[k] edge against every dst[k] edge: triple i is edge
+    E[row[i]] of pair[row[i]] against edge eseg[dst_edge[i]]."""
+    er, ei = _expand(pool.estart, src)
+    for s in _chunks(pool.ecount[dst[er]], 1 << 18):
+        row, oj = _expand(pool.estart, dst[er[s]])
+        yield er[s], pool.eseg[ei[s]], row, oj
 
 
-class _EdgeFacts:
-    __slots__ = ("any_fext", "any_fint", "any_fbnd", "tol")
-
-
-def _edge_facts(lgeoms, ids, rgeom, eb) -> _EdgeFacts:
-    """Noded-fragment facts per id, one chunked sweep over the stacked
-    left edges: fragment-midpoint class vs R (EXTERIOR/INTERIOR witnesses
-    exactly as kernels._noded_midpoint_class — on-∂R midpoints override
-    to BOUNDARY). A proper edge crossing needs no separate detector: the
-    crossing splits the left edge and its inner sub-fragment classifies
-    INTERIOR."""
-    from .overlay import _overlay_tol, _split_params
-
-    m = len(ids)
-    f = _EdgeFacts()
-    f.any_fext = np.zeros(m, dtype=bool)
-    f.any_fint = np.zeros(m, dtype=bool)
-    f.any_fbnd = np.zeros(m, dtype=bool)
-    se, owner = _stacked_edges(lgeoms, ids)
-    f.tol = _overlay_tol(se, eb)
-    if not len(se) or not len(eb):
-        return f
-    rr = _rings_of(rgeom)
-    rows = max(1, _EDGE_CHUNK // len(eb))
-    for s in range(0, len(se), rows):
-        E, O = se[s:s + rows], owner[s:s + rows]
-        params = _split_params(E, eb, f.tol)
-        nsplit = np.fromiter((len(p) for p in params), np.int64, len(E))
-        plain = nsplit == 0
-        frs, ows = [E[plain]], [O[plain]]
-        for k in np.flatnonzero(~plain):
-            # endpoint params reuse exact vertices (overlay._fragments rule)
-            x1, y1, x2, y2 = E[k]
-            ts = np.concatenate(([0.0], params[k], [1.0]))
-            xs = x1 + ts * (x2 - x1)
-            ys = y1 + ts * (y2 - y1)
-            xs[0], ys[0] = x1, y1
-            xs[-1], ys[-1] = x2, y2
-            frs.append(np.column_stack([xs[:-1], ys[:-1], xs[1:], ys[1:]]))
-            ows.append(np.full(nsplit[k] + 1, O[k], dtype=np.int64))
-        fr = np.concatenate(frs, axis=0)
-        ow = np.concatenate(ows)
-        keep = ((fr[:, 2] - fr[:, 0]) ** 2 + (fr[:, 3] - fr[:, 1]) ** 2) > 0
-        fr, ow = fr[keep], ow[keep]
-        if not len(fr):
-            continue
-        mx, my = (fr[:, 0] + fr[:, 2]) / 2.0, (fr[:, 1] + fr[:, 3]) / 2.0
-        cls = points_in_rings_class(mx, my, rr)
-        onb = points_on_segments(mx, my, eb, eps=f.tol)
-        ext = (cls == EXTERIOR) & ~onb
-        if ext.any():
-            f.any_fext[np.unique(ow[ext])] = True
-        itr = (cls == INTERIOR) & ~onb
-        if itr.any():
-            f.any_fint[np.unique(ow[itr])] = True
-        bnd = onb | (cls == BOUNDARY)
-        if bnd.any():
-            f.any_fbnd[np.unique(ow[bnd])] = True
+def _edge_facts(pool: _Pool, src, dst):
+    """(any EXTERIOR, any INTERIOR, any BOUNDARY) fragment per pair k:
+    src[k]'s edges noded at dst[k]'s edges with the pair's own
+    _overlay_tol, fragment midpoints classified against areal dst[k]
+    with on-∂ at that tolerance overriding (kernels._noded_midpoint_class)."""
+    m = len(src)
+    f = np.zeros((3, m), dtype=bool)
+    tol = np.maximum(pool.span[src], pool.span[dst]) * 1e-10
+    for pair, E, row, oj in _edge_pairs(pool, src, dst):
+        tr = tol[pair][row]
+        h, t = _event_hits(_split_events(E[row].T, pool.eseg[oj].T, tr))
+        fr, fe = _edge_fragments(E, *_merge_params(row[h], t))
+        p = pair[fe]
+        cls = pool.layer.classify_many(dst[p], (fr[:, 0] + fr[:, 2]) / 2.0,
+                                       (fr[:, 1] + fr[:, 3]) / 2.0, tol[p])
+        for i, c in enumerate((EXTERIOR, INTERIOR, BOUNDARY)):
+            f[i] |= _any_by(p, cls == c, m)
     return f
 
 
-def _part_rep_points(rgeom: Geometry) -> np.ndarray:
-    """One strictly-interior representative point per polygon part of R
-    (point_on_surface — the same witness generator _holes_clear_of uses).
-    A polygon-with-holes interior is connected, so one point represents
-    the whole component."""
-    from .constructive import point_on_surface
-
-    parts = ([rgeom] if rgeom.type_id == POLYGON
-             else [p for p in (rgeom.parts or []) if p.type_id == POLYGON])
-    out = []
-    for p in parts:
-        if p.is_empty:
-            continue
-        rp = point_on_surface(p)
-        if rp is None or rp.is_empty:
-            continue
-        px, py = float(rp.coords[0, 0]), float(rp.coords[0, 1])
-        # verify strict interiority: a zero-area part has NO interior —
-        # point_on_surface's vertex fallback must not fabricate an
-        # int∩int witness for it (int(∅-area part) contributes nothing)
-        if points_in_rings_class(np.array([px]), np.array([py]),
-                                 _rings_of(p))[0] == INTERIOR:
-            out.append((px, py))
-    return np.asarray(out, dtype=np.float64).reshape(-1, 2)
+def _edges_meet(pool: _Pool, src, dst, proper: bool = False) -> np.ndarray:
+    """Per pair: does an edge of src[k] meet an edge of dst[k] (cross
+    properly or, unless `proper`, touch)? Exact, as
+    kernels._segments_intersect_pairs."""
+    hit = np.zeros(len(src), dtype=bool)
+    for pair, E, row, oj in _edge_pairs(pool, src, dst):
+        hit[pair[row[_segments_meet(E[row].T, pool.eseg[oj].T, proper)]]] = True
+    return hit
 
 
-def _layer(lgeoms, ids) -> RaggedPolygonLayer:
-    """One point locator over the lefts lgeoms[ids], keyed by left index."""
-    return RaggedPolygonLayer({int(i): lgeoms[i] for i in ids})
+def _rep_points(geoms: list):
+    """(owner, x, y): one representative point per polygon part of each
+    geometry, all parts in one scanline pass. A part's scanline is the
+    horizontal line halfway between the two vertex ys nearest its bbox's
+    mid-height, so it passes through no vertex; its point is the midpoint
+    of the widest interval the line cuts inside the part (even-odd). A
+    polygon-with-holes interior is connected, so one point represents the
+    whole component. A zero-area part has NO interior and gives none (its
+    scanline meets nothing); the caller keeps only points it verifies
+    strictly interior, so fp can never fabricate an int∩int witness."""
+    owner, edges = [], []
+    for k, g in enumerate(geoms):
+        for p in [g] if g.type_id == POLYGON else (g.parts or []):
+            e = _edges(p) if p.type_id == POLYGON else ()
+            if len(e):
+                owner.append(k)
+                edges.append(e)
+    start, E = _ragged(edges, 4)
+    n = len(edges)
+    if not n:
+        return np.zeros(0, np.int64), np.zeros(0), np.zeros(0)
+    pe = np.repeat(np.arange(n), np.diff(start))
+    ys, at = E[:, 1], start[:-1]
+    mid = ((np.minimum.reduceat(ys, at) + np.maximum.reduceat(ys, at)) / 2)[pe]
+    line = (np.minimum.reduceat(np.where(ys > mid, ys, np.inf), at)
+            + np.maximum.reduceat(np.where(ys <= mid, ys, -np.inf), at)) / 2
+    c = (E[:, 1] > line[pe]) != (E[:, 3] > line[pe])
+    x1, y1, x2, y2 = E[c].T
+    xs = x1 + (line[pe[c]] - y1) * (x2 - x1) / (y2 - y1)
+    part = pe[c]
+    o = np.lexsort((xs, part))
+    xs, part = xs[o], part[o]
+    cnt = np.bincount(part, minlength=n)
+    j = np.arange(len(part)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    i = np.flatnonzero((j % 2 == 0) & (j + 1 < cnt[part]))
+    w = xs[i + 1] - xs[i]
+    i, w = i[w > 0], w[w > 0]
+    o = np.lexsort((-w, part[i]))
+    first = np.ones(len(o), dtype=bool)
+    first[1:] = part[i][o][1:] != part[i][o][:-1]
+    i = i[o[first]]
+    return (np.asarray(owner, dtype=np.int64)[part[i]], (xs[i] + xs[i + 1]) / 2,
+            line[part[i]])
 
 
-def _pair_hits(layer, ids, pts, interior=False, eps=0.0) -> np.ndarray:
-    """(len(pts), len(ids)) bool: pts[j] on the closure of left ids[k]
-    (interior=True: strictly inside it) — every (probe, left) pair in one
-    classify_many pass; `eps` as there (fp-noded probes need it)."""
-    m = len(ids)
-    cls = layer.classify_many(np.tile(ids, len(pts)), np.repeat(pts[:, 0], m),
-                              np.repeat(pts[:, 1], m), eps)
-    return (cls == INTERIOR if interior else cls >= BOUNDARY).reshape(-1, m)
-
-
-def _contains_family_batched(predicate, lgeoms, ids, rgeom, eb,
-                             layer) -> np.ndarray:
-    """Batched contains/covers/contains_properly/equals for AREAL lefts
-    (direction-2 heavy — R's samples vs each left), with no per-pair
-    scalar dispatch: R's vertices classify against every left in one
-    layer pass; ∂R is OVER-NODED once at the union of all lefts'
-    edges (a sub-fragment of a per-left fragment still sits in a single
-    class vs that left, so finer noding is harmless) and the shared
-    fragment midpoints classify the same way; per-left hole probes run
-    only for surviving holed lefts (and the rare island-in-hole case
-    falls to the exact scalar check). Mirrors kernels.covers:674 /
-    contains:632 / contains_properly:718 / equals:990."""
-    from .overlay import _fragments, _overlay_tol, _split_params
-
-    lefts = [lgeoms[i] for i in ids]
-    proper = predicate == "contains_properly"
-    res = _pair_hits(layer, ids, _points_of(rgeom), proper).all(axis=0)
-    if res.any():
-        se, _ow = _stacked_edges(lgeoms, ids)
-        if len(se):
-            tol = _overlay_tol(eb, se)
-            frs = _fragments(eb, _split_params(eb, se, tol))
-            if len(frs):
-                M = np.column_stack([(frs[:, 0] + frs[:, 2]) / 2.0,
-                                     (frs[:, 1] + frs[:, 3]) / 2.0])
-                res &= _pair_hits(layer, ids, M, proper, tol).all(axis=0)
-        for k in np.flatnonzero(res):
-            if _hole_rings(lefts[k]) and not _holes_clear_of(lefts[k], rgeom):
-                res[k] = False
-    if predicate == "equals" and res.any():
-        # topological equality additionally needs covers(R, L): pure
-        # direction 1 (kernels.equals:990 = covers both ways)
-        vext, _vi, _vb = _vertex_facts(lgeoms, ids, rgeom)
-        ef = _edge_facts(lgeoms, ids, rgeom, eb)
-        crl = ~vext & ~ef.any_fext
-        if _hole_rings(rgeom):
-            for k in np.flatnonzero(crl & res):
-                if not _holes_clear_of(rgeom, lefts[k]):
-                    crl[k] = False
-        res &= crl
+def _covers(pool: _Pool, P, Q, kernel: str = "covers") -> np.ndarray:
+    """kernels.covers(P[k], Q[k]) per pair for areal P and Q of any dim;
+    kernel "contains" adds the interior witness a Q of dim < 2 needs,
+    "contains_properly" asks for Q in int(P). Direction 1 only: Q's
+    vertices, then Q's edges noded at ∂P, then a holed P's hole probe
+    (kernels._holes_clear_of), each over the pairs still alive."""
+    proper = kernel == "contains_properly"
+    dq = pool.dim[Q]
+    ve, wit, vb = _vertex_facts(pool, Q, P)
+    res = ~ve & ~vb if proper else ~ve
+    k = np.flatnonzero(res & (dq >= 1))
+    if len(k):
+        fe, fi, fb = _edge_facts(pool, Q[k], P[k])
+        res[k] = ~fe & ~fb if proper else ~fe
+        wit[k] |= fi
+    if kernel == "contains":
+        res &= wit | (dq == 2)
+    for k in np.flatnonzero(res & (dq == 2) & pool.holed[P]):
+        res[k] = _holes_clear_of(pool.geoms[P[k]], pool.geoms[Q[k]])
     return res
 
 
-def group_predicate(predicate: str, lgeoms: list, rgeom) -> np.ndarray:
-    """Evaluate ``predicate(lgeoms[i], rgeom)`` for a whole left batch;
-    None lefts are False. Batch shapes without a batched path (a
-    GeometryCollection right; beyond ``intersects``, a non-areal or
-    edgeless right) run the exact scalar kernel per left. Raises
-    ValueError for a predicate outside the supported set."""
-    if predicate not in _SUPPORTED:
-        raise ValueError(
-            f"predicate {predicate!r} is not supported by group_predicate; "
-            f"valid: {sorted(_SUPPORTED)}")
-    n = len(lgeoms)
-    out = np.zeros(n, dtype=bool)
-    if rgeom is None or rgeom.is_empty or n == 0:
+def _ii_and_contact(pool: _Pool, A, B):
+    """(int∩int, A ∩ B ≠ ∅ so far) per pair, A of dim >= 1, B areal, from
+    the scalar kernels' witnesses. int∩int (kernels._interiors_intersect):
+    a vertex or noded fragment of A strictly inside B; for areal A also
+    B's part rep points strictly inside A (exact by topology once ∂A ∩
+    int(B) = ∅), and, exactly, a vertex of B strictly inside A or a
+    proper edge crossing — those two only where B has a rep point at all
+    (a zero-area B has no interior to meet). Contact: a vertex of either
+    on the other's closure (kernels.intersects' first two stages)."""
+    m = len(A)
+    _ve, vi, vb = _vertex_facts(pool, A, B)
+    _fe, fi, _fb = _edge_facts(pool, A, B)
+    ii, hit, rvi = vi | fi, vi | vb, np.zeros(m, dtype=bool)
+    u = np.flatnonzero(~ii | ~hit)
+    if len(u):
+        _ve, rvi[u], rvb = _vertex_facts(pool, B[u], A[u])
+        hit[u] |= rvi[u] | rvb
+    u = np.flatnonzero(~ii & (pool.dim[A] == 2))
+    if len(u):
+        row, x, y = pool.reps(B[u])
+        solid = np.bincount(row, minlength=len(u)) > 0
+        cls = pool.layer.classify_many(A[u][row], x, y)
+        ii[u] = _any_by(row, cls == INTERIOR, len(u)) | (solid & rvi[u])
+        u = u[~ii[u] & solid]
+        if len(u):
+            ii[u] = _edges_meet(pool, A[u], B[u], proper=True)
+    return ii, hit | ii
+
+
+def _bbox_gate(pred: str, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """A necessary condition per predicate family on the pairs' bboxes."""
+    if pred in _WITHIN:
+        return ((a[:, 0] >= b[:, 0]) & (a[:, 1] >= b[:, 1])
+                & (a[:, 2] <= b[:, 2]) & (a[:, 3] <= b[:, 3]))
+    if pred in ("contains", "covers", "contains_properly"):
+        return _bbox_gate("within", b, a)
+    if pred == "equals":
+        return (a == b).all(axis=1)
+    # intersects / touches / overlaps / crosses: bboxes must meet
+    return (~np.isnan(a[:, 0]) & ~np.isnan(b[:, 0])
+            & (a[:, 0] <= b[:, 2]) & (b[:, 0] <= a[:, 2])
+            & (a[:, 1] <= b[:, 3]) & (b[:, 1] <= a[:, 3]))
+
+
+def _decide(pool: _Pool, pred: str, A, B) -> np.ndarray:
+    """pred(A[k], B[k]) per pair, both sides non-empty and no collection;
+    B areal unless pred is intersects."""
+    out = np.zeros(len(A), dtype=bool)
+    ids = np.flatnonzero(_bbox_gate(pred, pool.bbox[A], pool.bbox[B]))
+    if not len(ids):
         return out
-    eb = _edges(rgeom) if rgeom.type_id in (POLYGON, MULTIPOLYGON) else []
-    if rgeom.type_id == GEOMETRYCOLLECTION or not (
-            len(eb) or predicate == "intersects"):
-        # no batched path: exact scalar kernel per left
-        fn = getattr(K, predicate)
-        return np.fromiter((g is not None and bool(fn(g, rgeom)) for g in lgeoms),
-                           dtype=bool, count=n)
-    rb = bounds(rgeom)
-
-    dims = np.full(n, -2, dtype=np.int64)
-    LB = np.full((n, 4), np.nan)
-    for i, g in enumerate(lgeoms):
-        if g is None or g.is_empty:
-            continue
-        if g.type_id == GEOMETRYCOLLECTION:
-            out[i] = bool(getattr(K, predicate)(g, rgeom))
-            dims[i] = -3  # decided via scalar fallback
-            continue
-        dims[i] = _dim(g)
-        LB[i] = bounds(g)
-
-    # batched bbox gate — a necessary condition per predicate family
-    valid = (dims >= 0) & ~np.isnan(LB[:, 0])
-    lb = np.where(valid[:, None], LB, 0.0)
-    if predicate in ("within", "covered_by"):
-        alive = valid & ((lb[:, 0] >= rb[0]) & (lb[:, 1] >= rb[1])
-                         & (lb[:, 2] <= rb[2]) & (lb[:, 3] <= rb[3]))
-    elif predicate in ("contains", "covers", "contains_properly"):
-        alive = valid & ((lb[:, 0] <= rb[0]) & (lb[:, 1] <= rb[1])
-                         & (lb[:, 2] >= rb[2]) & (lb[:, 3] >= rb[3]))
-    elif predicate == "equals":
-        alive = valid & ((lb[:, 0] == rb[0]) & (lb[:, 1] == rb[1])
-                         & (lb[:, 2] == rb[2]) & (lb[:, 3] == rb[3]))
-    else:  # intersects / touches / overlaps / crosses: bboxes must meet
-        alive = valid & ~((lb[:, 0] > rb[2]) | (rb[0] > lb[:, 2])
-                          | (lb[:, 1] > rb[3]) | (rb[1] > lb[:, 3]))
-    if not alive.any():
-        return out
-
-    if predicate == "intersects":
-        # kernels.intersects as three batched stages, each only over the
-        # lefts still undecided: a left vertex on closure(R); an R vertex
-        # on closure(L) (one transpose pass over every such left); a left
-        # edge meeting an R edge, proper or touching
-        ids = np.flatnonzero(alive)
-        _ve, vint, vbnd = _vertex_facts(lgeoms, ids, rgeom)
-        hit = vint | vbnd
-        und = np.flatnonzero(~hit)
-        if len(und):
-            hit[und[_pair_hits(_layer(lgeoms, ids[und]), ids[und],
-                               _points_of(rgeom)).any(axis=0)]] = True
-        und = np.flatnonzero(~hit)
-        if len(und):
-            se, owner = _stacked_edges(lgeoms, ids[und])
-            hit[und[_segments_intersect_pairs(se, _edges(rgeom), owner,
-                                              len(und))]] = True
-        out[ids] = hit
-        return out
-
-    i0 = np.flatnonzero(alive & (dims == 0))
-    i1 = np.flatnonzero(alive & (dims == 1))
-    i2 = np.flatnonzero(alive & (dims == 2))
-
-    if predicate in ("within", "covered_by"):
-        # contains(R, L) / covers(R, L) — direction 1 only, fully batched
-        # (kernels.contains:632 / covers:674 with a=R, b=L)
-        holes_r = _hole_rings(rgeom)
-        if len(i0):
-            vext, vint, _vb = _vertex_facts(lgeoms, i0, rgeom)
-            out[i0] = ~vext if predicate == "covered_by" else (~vext & vint)
-        for ids in (i1, i2):
-            if not len(ids):
-                continue
-            vext, vint, _vb = _vertex_facts(lgeoms, ids, rgeom)
-            ef = _edge_facts(lgeoms, ids, rgeom, eb)
-            res = ~vext & ~ef.any_fext
-            if predicate == "within" and ids is i1:
-                # line in areal R additionally needs an interior witness
-                res &= vint | ef.any_fint
-            if ids is i2 and holes_r:
-                # a hole of R admitting L into R's exterior breaks it
-                for k in np.flatnonzero(res):
-                    if not _holes_clear_of(rgeom, lgeoms[ids[k]]):
-                        res[k] = False
-            out[ids] = res
-        return out
-
-    if predicate in ("contains", "covers", "contains_properly", "equals"):
-        # only areal lefts can contain/cover/equal an areal R (db > da
-        # fails in the scalar kernels too); survivors of the batched
-        # bbox gate evaluate fully batched — no per-pair dispatch
-        if len(i2):
-            out[i2] = _contains_family_batched(predicate, lgeoms, i2,
-                                               rgeom, eb, _layer(lgeoms, i2))
-        return out
-
-    if predicate == "crosses":
-        # kernels.crosses:922 — vs areal R only dim<2 lefts can cross
-        if len(i0):
-            vext, vint, _vb = _vertex_facts(lgeoms, i0, rgeom)
-            out[i0] = vint & vext
-        if len(i1):
-            ef = _edge_facts(lgeoms, i1, rgeom, eb)
-            out[i1] = ef.any_fint & ef.any_fext
-        return out
-
-    if predicate == "touches":
-        # touches = intersects ∧ ¬(int∩int), both derived from the SAME
-        # batched fact set:
-        # closure contact = a left sample on closure(R) (vertices +
-        # noded fragments cover ∂L exactly) ∨ an R vertex on closure(L)
-        # (the transpose pass — catches an R vertex kissing a left edge
-        # interior, where noding leaves both midpoints exterior) ∨ R's
-        # interior rep point inside L (R strictly inside L, no contact
-        # elsewhere). Two segments meeting at one interior-interior
-        # point must cross properly, which noding turns into an INTERIOR
-        # fragment, so no separate edge-touch detector is needed.
-        if len(i0):
-            vext, vint, vbnd = _vertex_facts(lgeoms, i0, rgeom)
-            out[i0] = vbnd & ~vint
-        rpts = _points_of(rgeom)
-        reps = _part_rep_points(rgeom)
-        layer = _layer(lgeoms, np.concatenate([i1, i2]))
-        for ids in (i1, i2):
-            if not len(ids):
-                continue
-            _ve, vint, vbnd = _vertex_facts(lgeoms, ids, rgeom)
-            ef = _edge_facts(lgeoms, ids, rgeom, eb)
-            rv_closure = _pair_hits(layer, ids, rpts).any(axis=0)
-            inter = vbnd | vint | ef.any_fint | ef.any_fbnd | rv_closure
-            ii = vint | ef.any_fint
-            if ids is i2 and len(reps):
-                rep_int = _pair_hits(layer, ids, reps, True).any(axis=0)
-                inter |= rep_int
-                ii |= rep_int
-            out[ids] = inter & ~ii
-        return out
-
-    # overlaps (kernels.overlaps:971) — same-dim only; R areal ⇒ dim-2 lefts
-    if len(i2):
-        layer = _layer(lgeoms, i2)
-        ii = _areal_ii(lgeoms, i2, rgeom, eb, layer)
-        und = np.flatnonzero(ii)
-        if len(und):
-            # ¬covers(R,L): direction 1, batched over the candidates
-            sub = i2[und]
-            vext, _vi, _vb = _vertex_facts(lgeoms, sub, rgeom)
-            ef = _edge_facts(lgeoms, sub, rgeom, eb)
-            crl = ~vext & ~ef.any_fext  # covers(R, L) so far
-            holes_r = _hole_rings(rgeom)
-            for k in np.flatnonzero(crl):
-                if holes_r and not _holes_clear_of(rgeom, lgeoms[sub[k]]):
-                    crl[k] = False
-            res = ~crl
-            # ¬covers(L,R): bbox gate, then the batched family check
-            cand = np.flatnonzero(
-                res & (LB[sub, 0] <= rb[0]) & (LB[sub, 1] <= rb[1])
-                & (LB[sub, 2] >= rb[2]) & (LB[sub, 3] >= rb[3]))
-            if len(cand):
-                clr = _contains_family_batched(
-                    "covers", lgeoms, sub[cand], rgeom, eb, layer)
-                res[cand[clr]] = False
-            out[sub] = res
+    A, B = A[ids], B[ids]
+    da = pool.dim[A]
+    if pred == "intersects":
+        # kernels.intersects as three stages, each over the pairs still
+        # undecided: an A vertex on closure(B); a B vertex on closure(A);
+        # an A edge meeting a B edge, proper or touching
+        _ve, vi, vb = _vertex_facts(pool, A, B)
+        res = vi | vb
+        u = np.flatnonzero(~res)
+        if len(u):
+            _ve, vi, vb = _vertex_facts(pool, B[u], A[u])
+            res[u] = vi | vb
+        u = np.flatnonzero(~res)
+        if len(u):
+            res[u] = _edges_meet(pool, A[u], B[u])
+    elif pred in _WITHIN:
+        res = _covers(pool, B, A, _WITHIN[pred])
+    elif pred == "crosses":
+        # kernels.crosses:922 — vs areal B only dim < 2 sides can cross
+        res = np.zeros(len(A), dtype=bool)
+        k = np.flatnonzero(da == 0)
+        if len(k):
+            ve, vi, _vb = _vertex_facts(pool, A[k], B[k])
+            res[k] = vi & ve
+        k = np.flatnonzero(da == 1)
+        if len(k):
+            fe, fi, _fb = _edge_facts(pool, A[k], B[k])
+            res[k] = fi & fe
+    elif pred == "touches":
+        # kernels.touches: intersects ∧ ¬(int∩int), the last intersects
+        # stage (an edge meeting an edge) only where still undecided
+        res = np.zeros(len(A), dtype=bool)
+        k = np.flatnonzero(da == 0)
+        if len(k):
+            _ve, vi, vb = _vertex_facts(pool, A[k], B[k])
+            res[k] = vb & ~vi
+        k = np.flatnonzero(da >= 1)
+        if len(k):
+            ii, hit = _ii_and_contact(pool, A[k], B[k])
+            u = np.flatnonzero(~hit)
+            if len(u):
+                hit[u] = _edges_meet(pool, A[k[u]], B[k[u]])
+            res[k] = hit & ~ii
+    else:
+        # contains family, equals, overlaps: only an areal A qualifies
+        # (db > da fails in the scalar kernels too)
+        res = da == 2
+        k = np.flatnonzero(res)
+        if pred == "overlaps":
+            # kernels.overlaps:971 — int∩int, ¬covers(B, A), ¬covers(A, B)
+            res[k] = _ii_and_contact(pool, A[k], B[k])[0]
+            k = np.flatnonzero(res)
+            res[k] = ~_covers(pool, B[k], A[k])
+            k = np.flatnonzero(res & _bbox_gate("covers", pool.bbox[A], pool.bbox[B]))
+            res[k] = ~_covers(pool, A[k], B[k])
+        else:
+            res[k] = _covers(pool, A[k], B[k], "covers" if pred == "equals" else pred)
+            if pred == "equals":
+                k = np.flatnonzero(res)
+                res[k] = _covers(pool, B[k], A[k])
+    out[ids] = res
     return out
 
 
-def _areal_ii(lgeoms, ids, rgeom, eb, layer) -> np.ndarray:
-    """Batched int∩int for areal lefts vs areal R, EXACT and with no
-    per-left noding loop (r5 — the first cut ran a per-undecided-left
-    (∂R vs L) noding pass, which dominated touch-heavy joins):
+def pair_predicate(predicate: str, lgeoms: list, rgeoms: list, li, ri) -> np.ndarray:
+    """Evaluate ``predicate(lgeoms[li[k]], rgeoms[ri[k]])`` for every
+    candidate pair k in one call; pairs with a None or EMPTY side are
+    False. Pairs without a batched path (a GeometryCollection side;
+    beyond ``intersects``, no areal side) run the exact scalar kernel.
+    Raises ValueError for a predicate outside the supported set."""
+    if predicate not in _SUPPORTED:
+        raise ValueError(
+            f"predicate {predicate!r} is not supported by pair_predicate; "
+            f"valid: {sorted(_SUPPORTED)}")
+    a = np.asarray(li, dtype=np.int64)
+    b = np.asarray(ri, dtype=np.int64) + len(lgeoms)
+    out = np.zeros(len(a), dtype=bool)
+    if not len(a):
+        return out
+    pool = _Pool(list(lgeoms) + list(rgeoms))
+    da, db = pool.dim[a], pool.dim[b]
+    live = (da >= 0) & (db >= 0) & ~pool.gc[a] & ~pool.gc[b]
+    if predicate == "intersects":
+        swap, batched = np.zeros(len(a), dtype=bool), live
+    else:
+        swap = live & (da == 2) & (db < 2)
+        batched = live & ((db == 2) | swap)
+    fn = getattr(K, predicate)
+    for k in np.flatnonzero((da >= 0) & (db >= 0) & ~batched):
+        out[k] = fn(pool.geoms[a[k]], pool.geoms[b[k]])
+    A, B = np.where(swap, b, a), np.where(swap, a, b)
+    conv = _CONVERSE.get(predicate, predicate)
+    groups = {predicate: batched & ~swap}
+    groups[conv] = groups.get(conv, False) | (batched & swap)
+    for pred, sel in groups.items():
+        k = np.flatnonzero(sel)
+        if len(k):
+            out[k] = _decide(pool, pred, A[k], B[k])
+    return out
 
-    1. ∂L-side witnesses, batched: a left vertex strictly inside R, or a
-       noded-∂L fragment strictly inside R (noding at ∂R makes fragment
-       midpoints classify the WHOLE fragment, so this step is exact; a
-       proper edge crossing is subsumed — the crossing splits the left
-       edge and its inner sub-fragment classifies INTERIOR).
-    2. Lefts with no such witness have ∂L ∩ int(R) = ∅ exactly. Then,
-       per connected component C of int(R) (one per polygon part — a
-       holed polygon's interior is connected): C ∩ ∂L = ∅, so C lies
-       wholly inside or wholly outside L, and ONE representative
-       interior point per part decides int(L) ∩ C ≠ ∅ for the whole
-       component. The rep points (point_on_surface per part, computed
-       once per R) classify against every undecided left in one layer
-       pass — no noding of ∂R at all."""
-    _ve, vint, _vb = _vertex_facts(lgeoms, ids, rgeom)
-    ef = _edge_facts(lgeoms, ids, rgeom, eb)
-    ii = vint | ef.any_fint
-    und = np.flatnonzero(~ii)
-    if len(und):
-        reps = _part_rep_points(rgeom)
-        if len(reps):
-            ii[und[_pair_hits(layer, ids[und], reps, True).any(axis=0)]] = True
-    return ii
+
+def group_predicate(predicate: str, lgeoms: list, rgeom) -> np.ndarray:
+    """``predicate(lgeoms[i], rgeom)`` for a whole left batch: the
+    one-right case of pair_predicate."""
+    n = len(lgeoms)
+    return pair_predicate(predicate, lgeoms, [rgeom], np.arange(n),
+                          np.zeros(n, dtype=np.int64))

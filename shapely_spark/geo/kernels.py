@@ -254,6 +254,37 @@ def _chunks(weight: np.ndarray, limit: int = 1 << 20):
         s = e
 
 
+def _expand(start: np.ndarray, ids: np.ndarray):
+    """(row, item): the ragged range start[ids[row]]:start[ids[row] + 1]
+    of every row, concatenated in row order."""
+    cnt = start[ids + 1] - start[ids]
+    total = int(cnt.sum())
+    if total == 0:
+        return np.zeros(0, np.int64), np.zeros(0, np.int64)
+    row = np.repeat(np.arange(len(ids), dtype=np.int64), cnt)
+    offs = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    return row, start[ids][row] + offs
+
+
+def _ragged(arrays: list, width: int):
+    """Stack per-owner (k, width) arrays: (offsets of n + 1, stacked)."""
+    start = np.zeros(len(arrays) + 1, dtype=np.int64)
+    np.cumsum([len(a) for a in arrays], out=start[1:])
+    keep = [a for a in arrays if len(a)]
+    return start, (np.concatenate(keep) if keep else np.zeros((0, width)))
+
+
+def _ragged_bounds(start: np.ndarray, xy: np.ndarray) -> np.ndarray:
+    """Per-owner bounds of ragged (x, y) points, bit for bit as bounds();
+    NaN for an owner with no points."""
+    out = np.full((len(start) - 1, 4), np.nan)
+    has = start[1:] > start[:-1]
+    if has.any():
+        out[has, :2] = np.minimum.reduceat(xy, start[:-1][has])
+        out[has, 2:] = np.maximum.reduceat(xy, start[:-1][has])
+    return out
+
+
 class RaggedPolygonLayer:
     """Whole-layer prepared structure for owner-heterogeneous point
     batches: all owners' segments concatenated into flat arrays with
@@ -261,8 +292,8 @@ class RaggedPolygonLayer:
     EVERY (point, its-owner) pair in one shot (the north-star
     'vectorized ray-casting' form; reference per-geometry analog:
     shapely/creation.py:735 prepare). It is the engine's one owner-tagged
-    point locator: the point join, the cell cover and the group
-    predicates' (probe, left) passes all classify through it.
+    point locator: the point join, the cell cover and every stage of the
+    pair predicates (geo/group_predicates.py) classify through it.
 
     Why it exists: a per-region classify costs ~20 µs of Python dispatch
     per distinct region per batch. At a 100k-region layer each Arrow
@@ -319,25 +350,13 @@ class RaggedPolygonLayer:
             self.bbox[has, :2] = np.minimum.reduceat(np.minimum(s[:, :2], s[:, 2:]), at)
             self.bbox[has, 2:] = np.maximum.reduceat(np.maximum(s[:, :2], s[:, 2:]), at)
 
-    @staticmethod
-    def _expand(start: np.ndarray, rids: np.ndarray):
-        """(row_idx, edge_idx) for the ragged ranges of each row's region."""
-        cnt = start[rids + 1] - start[rids]
-        total = int(cnt.sum())
-        if total == 0:
-            return np.zeros(0, np.int64), np.zeros(0, np.int64)
-        row_idx = np.repeat(np.arange(len(rids), dtype=np.int64), cnt)
-        offs = np.arange(total, dtype=np.int64) - np.repeat(
-            np.cumsum(cnt) - cnt, cnt)
-        return row_idx, start[rids][row_idx] + offs
-
     def odd_crossings(self, rids, px, py) -> np.ndarray:
         """Half-open even-odd ray-cast parity of point i vs region rids[i]
         (True = odd crossing count), bit for bit as points_in_rings_class;
         the (point, edge) expansion runs in _chunks-bounded slices."""
         odd = np.zeros(len(rids), dtype=bool)
         for s in _chunks((self.cross_start[1:] - self.cross_start[:-1])[rids]):
-            p, e = self._expand(self.cross_start, rids[s])
+            p, e = _expand(self.cross_start, rids[s])
             seg, y = self.cross_seg[e], py[s][p]
             c = (seg[:, 1] > y) != (seg[:, 3] > y)
             p, (x1, y1, x2, y2), y = p[c], seg[c].T, y[c]
@@ -348,14 +367,18 @@ class RaggedPolygonLayer:
     def classify_many(self, rids, px, py, eps: float = 0.0) -> np.ndarray:
         """0 exterior / 1 boundary / 2 interior of point i vs owner
         rids[i] — one vectorized pass for the whole heterogeneous batch.
-        `eps` loosens the on-boundary test exactly as
-        points_on_segments(eps=) (fp-noded probes need it); points outside
-        their owner's bbox widened by eps are EXTERIOR unexamined."""
+        `eps` (a scalar, or one per point) loosens the on-boundary test
+        exactly as points_on_segments(eps=) (fp-noded probes need it);
+        points outside their owner's bbox widened by eps are EXTERIOR
+        unexamined, and so is every point of an owner not in the layer."""
         rids = np.asarray(rids, dtype=np.int64)
         px = np.asarray(px, dtype=np.float64)
         py = np.asarray(py, dtype=np.float64)
+        eps = np.asarray(eps, dtype=np.float64)
         out = np.zeros(len(rids), dtype=np.int8)
         ok = (rids >= 0) & (rids < self.n)
+        if not ok.any():
+            return out
         bb = self.bbox[np.where(ok, rids, 0)]
         live = (ok & (px >= bb[:, 0] - eps) & (px <= bb[:, 2] + eps)
                 & (py >= bb[:, 1] - eps) & (py <= bb[:, 3] + eps))
@@ -363,11 +386,14 @@ class RaggedPolygonLayer:
             return out
         li = np.nonzero(live)[0]
         r, x, y = rids[li], px[li], py[li]
+        if eps.ndim:
+            eps = eps[li]
         out[li[self.odd_crossings(r, x, y)]] = INTERIOR
         for s in _chunks((self.bnd_start[1:] - self.bnd_start[:-1])[r]):
-            row, eidx = self._expand(self.bnd_start, r[s])
+            row, eidx = _expand(self.bnd_start, r[s])
             x1, y1, x2, y2 = self.bnd_seg[eidx].T
-            onb = _on_segment(x[s][row], y[s][row], x1, y1, x2, y2, eps)
+            onb = _on_segment(x[s][row], y[s][row], x1, y1, x2, y2,
+                              eps[s][row] if eps.ndim else eps)
             out[li[s][row[onb]]] = BOUNDARY
         return out
 
@@ -440,23 +466,33 @@ def _segments_intersect_pairs(sa: np.ndarray, sb: np.ndarray, owner=None,
         return out
     if owner is None:
         owner = np.zeros(len(sa), dtype=np.int64)
-    bx1, by1, bx2, by2 = (sb[:, i][None, :] for i in range(4))
+    b = tuple(sb[:, i][None, :] for i in range(4))
     rows = max(1, _EDGE_CHUNK // len(sb))
     for s in range(0, len(sa), rows):
-        ax1, ay1, ax2, ay2 = (sa[s:s + rows, i][:, None] for i in range(4))
-        d1 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
-        d2 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
-        d3 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)
-        d4 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)
-        hit = (((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
-               & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0))
-        if not proper:
-            hit |= (_on_segment(bx1, by1, ax1, ay1, ax2, ay2, cross=d1)
-                    | _on_segment(bx2, by2, ax1, ay1, ax2, ay2, cross=d2)
-                    | _on_segment(ax1, ay1, bx1, by1, bx2, by2, cross=d3)
-                    | _on_segment(ax2, ay2, bx1, by1, bx2, by2, cross=d4))
+        hit = _segments_meet(tuple(sa[s:s + rows, i][:, None] for i in range(4)),
+                             b, proper)
         out[np.unique(owner[s:s + rows][hit.any(axis=1)])] = True
     return out
+
+
+def _segments_meet(a, b, proper: bool = False) -> np.ndarray:
+    """Elementwise (broadcasting) over the coordinate columns a = (x1, y1,
+    x2, y2) and b: does segment a meet segment b? Met is as in
+    _segments_intersect_pairs."""
+    ax1, ay1, ax2, ay2 = a
+    bx1, by1, bx2, by2 = b
+    d1 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
+    d2 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
+    d3 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)
+    d4 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)
+    hit = (((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
+           & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0))
+    if not proper:
+        hit |= (_on_segment(bx1, by1, ax1, ay1, ax2, ay2, cross=d1)
+                | _on_segment(bx2, by2, ax1, ay1, ax2, ay2, cross=d2)
+                | _on_segment(ax1, ay1, bx1, by1, bx2, by2, cross=d3)
+                | _on_segment(ax2, ay2, bx1, by1, bx2, by2, cross=d4))
+    return hit
 
 
 # ---------------------------------------------------------------------------

@@ -101,14 +101,31 @@ def _split_params(edges: np.ndarray, other: np.ndarray, tol: float) -> list[np.n
     crosses/touches any edge of `other` (collinear overlaps contribute the
     projections of the other edge's endpoints)."""
     n = len(edges)
-    out = [None] * n
     if n == 0 or len(other) == 0:
         return [np.zeros(0)] * n
-    x1, y1, x2, y2 = edges[:, 0], edges[:, 1], edges[:, 2], edges[:, 3]
-    x3, y3, x4, y4 = other[:, 0], other[:, 1], other[:, 2], other[:, 3]
-    dx1, dy1 = (x2 - x1)[:, None], (y2 - y1)[:, None]
-    dx2, dy2 = (x4 - x3)[None, :], (y4 - y3)[None, :]
-    ex, ey = x3[None, :] - x1[:, None], y3[None, :] - y1[:, None]
+    h, t = _merge_params(*_event_hits(
+        _split_events(edges.T[:, :, None], other.T[:, None, :], tol)))
+    return np.split(t, np.cumsum(np.bincount(h, minlength=n))[:-1])
+
+
+def _inner(a):
+    c = np.clip(a, 0.0, 1.0)
+    return (c > 1e-12) & (c < 1 - 1e-12)
+
+
+def _split_events(e, o, tol):
+    """Noding events of segment e against segment o, elementwise
+    (broadcasting) over the coordinate columns e = (x1, y1, x2, y2) and o,
+    with `tol` a scalar or one per element: ((param, mask), ...) for a
+    crossing or touch at parameter t of e, and for a collinear overlap the
+    projections t3, t4 of o's endpoints. Only parameters strictly inside
+    (0, 1) are marked: endpoint touches and full-span overlaps split
+    nothing."""
+    x1, y1, x2, y2 = e
+    x3, y3, x4, y4 = o
+    dx1, dy1 = x2 - x1, y2 - y1
+    dx2, dy2 = x4 - x3, y4 - y3
+    ex, ey = x3 - x1, y3 - y1
     denom = dx1 * dy2 - dy1 * dx2
     with np.errstate(divide="ignore", invalid="ignore"):
         t = (ex * dy2 - ey * dx2) / denom
@@ -116,72 +133,70 @@ def _split_params(edges: np.ndarray, other: np.ndarray, tol: float) -> list[np.n
     crossing = (np.abs(denom) > tol) & (t >= -tol) & (t <= 1 + tol) & (u >= -tol) & (u <= 1 + tol)
     # collinear overlap: parallel and other's endpoints on this line
     par = np.abs(denom) <= tol
-    cross3 = dx1 * (y3[None, :] - y1[:, None]) - dy1 * (x3[None, :] - x1[:, None])
+    cross3 = dx1 * (y3 - y1) - dy1 * (x3 - x1)
     collinear = par & (np.abs(cross3) <= tol * np.maximum(1.0, np.abs(dx1) + np.abs(dy1)))
     len2 = dx1 * dx1 + dy1 * dy1
     with np.errstate(divide="ignore", invalid="ignore"):
-        t3 = ((x3[None, :] - x1[:, None]) * dx1 + (y3[None, :] - y1[:, None]) * dy1) / len2
-        t4 = ((x4[None, :] - x1[:, None]) * dx1 + (y4[None, :] - y1[:, None]) * dy1) / len2
-    # loop only the edges with an event that can yield an INTERIOR split
-    # param (endpoint touches at t≈0/1 and full-span collinear overlaps
-    # project outside (0,1) and would be dropped below anyway): the
-    # per-edge Python body costs ~25 µs even when it produces nothing,
-    # and in group-vectorized predicate batches (tens of thousands of
-    # stacked edges, few real splits) the empty iterations dominated the
-    # whole noding sweep
-    def _inner(a):
-        c = np.clip(a, 0.0, 1.0)
-        return (c > 1e-12) & (c < 1 - 1e-12)
+        t3 = ((x3 - x1) * dx1 + (y3 - y1) * dy1) / len2
+        t4 = ((x4 - x1) * dx1 + (y4 - y1) * dy1) / len2
+    return ((t, crossing & _inner(t)), (t3, collinear & _inner(t3)),
+            (t4, collinear & _inner(t4)))
 
-    crossing &= _inner(t)
-    collinear &= _inner(t3) | _inner(t4)
-    empty = np.zeros(0)
-    for i in range(n):
-        out[i] = empty
-    active = crossing.any(axis=1) | collinear.any(axis=1)
-    for i in np.flatnonzero(active):
-        ts = []
-        ci = np.nonzero(crossing[i])[0]
-        if len(ci):
-            ts.append(np.clip(t[i, ci], 0.0, 1.0))
-        li = np.nonzero(collinear[i])[0]
-        if len(li):
-            ts.append(np.clip(t3[i, li], 0.0, 1.0))
-            ts.append(np.clip(t4[i, li], 0.0, 1.0))
-        if ts:
-            tt = np.unique(np.concatenate(ts))
-            tt = tt[(tt > 1e-12) & (tt < 1 - 1e-12)]
-            if len(tt) > 1:
-                # merge fp-noise twins (e.g. a crossing AND a collinear
-                # projection of the same touch point differing by ~1e-16):
-                # they otherwise yield degenerate fragments whose midpoint
-                # sits exactly ON the noding point
-                tt = tt[np.concatenate(([True], np.diff(tt) > 1e-12))]
-            out[i] = tt
-    return out
+
+def _event_hits(events):
+    """(h, t) of every marked event: h its first index (the edge of a
+    dense event matrix, the element of an elementwise one), t its param."""
+    idx = [np.nonzero(m) for _, m in events]
+    return (np.concatenate([i[0] for i in idx]),
+            np.concatenate([p[i] for (p, _), i in zip(events, idx)]))
+
+
+def _merge_params(h, t):
+    """Split params (owner h, param t) sorted by owner then t, exact
+    repeats dropped, and fp-noise twins merged (e.g. a crossing AND a
+    collinear projection of the same touch point differing by ~1e-16):
+    they otherwise yield degenerate fragments whose midpoint sits exactly
+    ON the noding point."""
+    o = np.lexsort((t, h))
+    h, t = h[o], t[o]
+    keep = np.ones(len(h), dtype=bool)
+    keep[1:] = (h[1:] != h[:-1]) | (t[1:] != t[:-1])
+    h, t = h[keep], t[keep]
+    keep = np.ones(len(h), dtype=bool)
+    keep[1:] = (h[1:] != h[:-1]) | (np.diff(t) > 1e-12)
+    return h[keep], t[keep]
 
 
 def _fragments(edges: np.ndarray, params: list[np.ndarray]) -> np.ndarray:
-    """Split each edge at its params → (m,4) fragment segments. Endpoint
-    params (0/1) reuse the edge's EXACT vertices: x1 + 1.0·(x2−x1) can be
-    off by an ulp, and an ulp landing on a stitch-key quantization
-    boundary severs the ring walk (r3 fuzz: pentagon∖box came back
-    empty because a reversed fragment end differed from the shared ring
-    vertex by 2e-17 across a bucket edge)."""
-    frags = []
-    for i in range(len(edges)):
-        x1, y1, x2, y2 = edges[i]
-        ts = np.concatenate([[0.0], params[i], [1.0]])
-        xs = x1 + ts * (x2 - x1)
-        ys = y1 + ts * (y2 - y1)
-        xs[0], ys[0] = x1, y1
-        xs[-1], ys[-1] = x2, y2
-        frags.append(np.column_stack([xs[:-1], ys[:-1], xs[1:], ys[1:]]))
-    if not frags:
-        return np.zeros((0, 4))
-    fr = np.concatenate(frags, axis=0)
+    """Split each edge at its params → (m,4) fragment segments."""
+    h = np.repeat(np.arange(len(edges)), [len(p) for p in params])
+    t = np.concatenate(params) if len(params) else np.zeros(0)
+    return _edge_fragments(edges, h, t)[0]
+
+
+def _edge_fragments(edges: np.ndarray, h: np.ndarray, t: np.ndarray):
+    """Split edges[i] at its params t[h == i] (h sorted, t sorted per
+    edge) → (fragments (m, 4), source edge of each), zero-length
+    fragments dropped. Endpoint params (0/1) reuse the edge's EXACT
+    vertices: x1 + 1.0·(x2−x1) can be off by an ulp, and an ulp landing
+    on a stitch-key quantization boundary severs the ring walk (r3 fuzz:
+    pentagon∖box came back empty because a reversed fragment end differed
+    from the shared ring vertex by 2e-17 across a bucket edge)."""
+    k = np.bincount(h, minlength=len(edges))
+    src = np.repeat(np.arange(len(edges)), k + 1)
+    edges = np.asarray(edges, dtype=np.float64)
+    fr = edges[src]
+    if len(h):
+        e = edges[h]
+        px = e[:, 0] + t * (e[:, 2] - e[:, 0])
+        py = e[:, 1] + t * (e[:, 3] - e[:, 1])
+        # split j of edge i ends its fragment j and starts fragment j + 1
+        at = (np.cumsum(k + 1) - k - 1)[h] + np.arange(len(h)) - (np.cumsum(k) - k)[h]
+        fr[at, 2], fr[at, 3] = px, py
+        fr[at + 1, 0], fr[at + 1, 1] = px, py
     dx, dy = fr[:, 2] - fr[:, 0], fr[:, 3] - fr[:, 1]
-    return fr[dx * dx + dy * dy > 0]
+    keep = dx * dx + dy * dy > 0
+    return fr[keep], src[keep]
 
 
 # ---------------------------------------------------------------------------

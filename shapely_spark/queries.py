@@ -6003,8 +6003,8 @@ def xyzm_line_interpolate(spark, sf_dir):
 def spatial_join_ngon_pairs(spark, sf_dir):
     """Geometry×geometry join with NON-rectangular polygons on BOTH sides
     (r3 verdict item 2's gate: the rect closed form must not fire; every
-    candidate runs the group-vectorized intersects branch of
-    group_predicates.group_predicate). Both layers are rotated regular n-gons on
+    candidate runs the pair-vectorized intersects branch of
+    group_predicates.pair_predicate). Both layers are rotated regular n-gons on
     a 24-unit lattice built so the answer is closed-form: a left n-gon
     (circumradius ≤ 3, center ≤ √10 from its lattice point) always
     intersects its own lattice cell's right n-gon (incircle radii sum
@@ -6105,7 +6105,7 @@ def _diamond_lattice_left(spark, sf_dir, r_expr):
 def spatial_join_touches_pairs(spark, sf_dir):
     """`touches` geometry×geometry join over two NON-rectangular layers
     (r4 verdict item 4's gate: every candidate must take the
-    group-vectorized classify, geo/group_predicates.py — no per-pair
+    pair-vectorized classify, geo/group_predicates.py — no per-pair
     scalar kernel on the path). Both layers are half-diagonal-12 diamonds
     on the same spacing-24 5×5 lattice: a diamond touches each in-grid
     4-neighbor at exactly one bit-identical corner point (12 + 12 = 24

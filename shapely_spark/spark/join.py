@@ -34,7 +34,7 @@ Geometry×geometry (spatial_join_geom) is one plan in both modes:
   lcov (+ left WKB) ⋈ rcov ON cell_id, owner-cell + bbox filters
       ⋈ right(right_id, wkb) ON right_id        [each right WKB once]
   rect×rect ──▶ closed form, JVM-side; the rest ──▶ ONE pandas-UDF refine
-      (one group_predicate call per right geometry per Arrow batch)
+      (one pair_predicate call per Arrow batch decides all its pairs)
 
 broadcast=True only hints both right-side joins as broadcast; nothing is
 collected to the driver, so building the plan starts no Spark job.
@@ -49,7 +49,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index.cells import DEFAULT_RES, polygon_cover_batch
+from ..index.cells import DEFAULT_RES, cover_bbox_batch, polygon_cover_batch
 from .columns import cell_col
 
 # Map engine predicates (evaluated as predicate(point, region), matching
@@ -115,22 +115,6 @@ def _geom_from_wkb_cached(wkb: bytes):
     return g
 
 
-def _group_ranges(codes: np.ndarray):
-    """Yield (code, index_array) per distinct code via ONE stable argsort.
-    A per-distinct-code boolean mask (`codes == u` in a loop) is
-    O(batch × n_distinct) — with hundreds of regions touched per Arrow
-    batch that scan dominated the refine kernel, not the geometry math."""
-    if len(codes) == 0:
-        return
-    order = np.argsort(codes, kind="stable")
-    sc = codes[order]
-    cuts = np.flatnonzero(sc[1:] != sc[:-1]) + 1
-    starts = np.concatenate(([0], cuts))
-    ends = np.concatenate((cuts, [len(sc)]))
-    for s, e in zip(starts, ends):
-        yield sc[s], order[s:e]
-
-
 def _classify_to_bool(cls: np.ndarray, predicate: str) -> np.ndarray:
     if predicate in ("intersects", "covered_by"):
         return cls >= 1
@@ -170,20 +154,25 @@ def spatial_join(
         # driver-side from the rows we must collect anyway: workers pay zero
         # per-region construction, and the refine is one vectorized ray-cast
         # over every (candidate, edge) pair — no per-region Python dispatch.
+        # The layer is keyed by dense code, so a region id of any value
+        # (negative, or 2^40) sizes nothing; the refine finds an id's code
+        # by binary search over the sorted ids.
         from ..geo.wkb import from_wkb
 
-        geo_rows = regions.select("region_id", "wkb").collect()
-        bc = points.sparkSession.sparkContext.broadcast(RaggedPolygonLayer({
-            int(r.region_id): from_wkb(bytes(r.wkb))
-            for r in geo_rows if r.wkb is not None and r.region_id >= 0
-        }))
+        by_id = {int(r.region_id): r.wkb
+                 for r in regions.select("region_id", "wkb").collect()
+                 if r.wkb is not None}
+        ids = np.array(sorted(by_id), dtype=np.int64)
+        bc = points.sparkSession.sparkContext.broadcast((ids, RaggedPolygonLayer({
+            k: from_wkb(bytes(by_id[i])) for k, i in enumerate(ids.tolist())})))
         covers = F.broadcast(covers_df(regions, res).select(
             "region_id", F.col("cell_id").alias("__cover_cell"),
             F.col("full").alias("__full")))
         key_col = "region_id"
 
         def layer_of(keys: pd.Series):
-            return bc.value, keys.to_numpy(dtype=np.int64)
+            ids, layer = bc.value
+            return layer, np.searchsorted(ids, keys.to_numpy(dtype=np.int64))
     else:
         # no driver collect: partial cells carry their region WKB through
         # the shuffle, and each Arrow batch builds a layer over its own
@@ -249,24 +238,21 @@ def spatial_join(
 def _pair_refine_batch(predicate: str, lwkb: pd.Series, rwkb: pd.Series) -> np.ndarray:
     """Batch refine for candidate (left WKB, right WKB) pairs. Both sides
     are factorized and each unique geometry is parsed ONCE per batch (and
-    cached per executor across batches); then ONE group_predicate call per
-    right geometry decides its whole left group (geo/group_predicates.py
+    cached per executor across batches); then ONE pair_predicate call
+    decides every candidate pair of the batch (geo/group_predicates.py
     owns every evaluation choice, scalar fallbacks included). Rows with a
     NULL side (rect×rect pairs the JVM already decided) are False. No bbox
     mask here: the JVM bbox-overlap filter ran before the UDF and
-    group_predicate gates on bboxes itself."""
-    from ..geo.group_predicates import group_predicate
+    pair_predicate gates on bboxes itself."""
+    from ..geo.group_predicates import pair_predicate
 
     out = np.zeros(len(lwkb), dtype=bool)
     lcodes, luniq = pd.factorize(lwkb)
     rcodes, runiq = pd.factorize(rwkb)
-    lgeoms = [_geom_from_wkb_cached(bytes(w)) for w in luniq]
-    rgeoms = [_geom_from_wkb_cached(bytes(w)) for w in runiq]
     idx = np.flatnonzero((lcodes >= 0) & (rcodes >= 0))
-    for u, gi in _group_ranges(rcodes[idx]):
-        sel = idx[gi]
-        out[sel] = group_predicate(
-            predicate, [lgeoms[i] for i in lcodes[sel]], rgeoms[u])
+    out[idx] = pair_predicate(
+        predicate, [_geom_from_wkb_cached(bytes(w)) for w in luniq],
+        [_geom_from_wkb_cached(bytes(w)) for w in runiq], lcodes[idx], rcodes[idx])
     return out
 
 
@@ -312,6 +298,49 @@ _GEOM_JOIN_PREDICATES = {
 }
 
 
+def _bbox_cover_rows(pdf: pd.DataFrame, id_col: str, side: str, res: int) -> pd.DataFrame:
+    """One Arrow batch of the spatial_join_geom cover under the plan's
+    column names (__<side>c, __<side>x ...): every geometry's bbox cells
+    with its bounds and axis-rectangle flag, and on the left side its WKB.
+    NULL, EMPTY and unparsable WKB give no rows. Per geometry only the
+    parse and a coordinate gather run; bounds (bit for bit as
+    kernels.bounds) and the rect flag (as kernels._axis_rect) come from
+    one ragged pass over the batch's coordinates, the cover and fan-out
+    from one cover_bbox_batch pass."""
+    from ..geo.geom import POLYGON
+    from ..geo.kernels import _ragged, _ragged_bounds
+    from ..geo.wkb import from_wkb
+
+    wkbs = pdf["wkb"].to_numpy(dtype=object)
+    coords, five = [np.zeros((0, 2))] * len(wkbs), np.zeros(len(wkbs), dtype=bool)
+    for i, b in enumerate(wkbs):
+        g = None if b is None else from_wkb(bytes(b), on_invalid="ignore")
+        if g is not None and not g.is_empty:
+            coords[i] = g.all_coords()[:, :2]
+            five[i] = g.type_id == POLYGON and len(g.rings) == 1 and len(coords[i]) == 5
+    start, xy = _ragged(coords, 2)
+    bnds = _ragged_bounds(start, xy)
+    # an axis-aligned rectangle IS its bbox, so the bbox columns drive the
+    # closed-form JVM predicate: one 5-point ring of axis-parallel edges
+    # with positive width and height
+    rect = five.copy()
+    if five.any():
+        d = np.diff(xy[start[:-1][five, None] + np.arange(5)], axis=1)
+        rect[five] = (((d[..., 0] == 0) | (d[..., 1] == 0)).all(axis=1)
+                      & (bnds[five, 2] > bnds[five, 0]) & (bnds[five, 3] > bnds[five, 1]))
+    src = np.flatnonzero(~np.isnan(bnds[:, 0]))
+    cells, row = cover_bbox_batch(bnds[src], res)
+    src = src[row]
+    out = {id_col: pd.Series(pdf[id_col].to_numpy(dtype=np.int64)[src], dtype="int64"),
+           f"__{side}c": pd.Series(cells, dtype="int64")}
+    for k, c in enumerate(("x", "y", "x2", "y2")):
+        out[f"__{side}{c}"] = pd.Series(bnds[src, k], dtype="float64")
+    out[f"__{side}rect"] = pd.Series(rect[src], dtype="bool")
+    if side == "l":
+        out["__lwkb"] = pd.Series(wkbs[src], dtype="object")
+    return pd.DataFrame(out)
+
+
 def spatial_join_geom(
     left: DataFrame,
     right: DataFrame,
@@ -339,13 +368,10 @@ def spatial_join_geom(
     enters the plan once, not once per cover cell; the left WKB rides the
     left cover rows. Refine: rect×rect pairs are decided JVM-side in
     closed form (_rect_pred_col); every other candidate goes through ONE
-    pandas UDF that makes one group_predicate call per right geometry per
-    Arrow batch. broadcast=True only adds a broadcast hint to the right
-    cover rows and to the right_id join; nothing is collected to the
-    driver.
+    pandas UDF that makes one pair_predicate call per Arrow batch.
+    broadcast=True only adds a broadcast hint to the right cover rows and
+    to the right_id join; nothing is collected to the driver.
     """
-    from ..index.cells import cover_bbox_batch
-
     if predicate not in _GEOM_JOIN_PREDICATES:
         raise ValueError(
             f"predicate {predicate!r} is not supported by spatial_join_geom; "
@@ -353,52 +379,18 @@ def spatial_join_geom(
 
     def covers(df: DataFrame, id_col: str, side: str) -> DataFrame:
         # the UDF emits the plan's final column names: no aliasing select
-        col = {k: f"__{side}{k}" for k in ("c", "x", "y", "x2", "y2", "rect", "wkb")}
-        schema = (f"{id_col} long, {col['c']} long, {col['x']} double,"
-                  f" {col['y']} double, {col['x2']} double, {col['y2']} double,"
-                  f" {col['rect']} boolean, {col['wkb']} binary")
+        schema = (f"{id_col} long, __{side}c long, __{side}x double,"
+                  f" __{side}y double, __{side}x2 double, __{side}y2 double,"
+                  f" __{side}rect boolean" + (", __lwkb binary" if side == "l" else ""))
 
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from ..geo import kernels as K
-            from ..geo.wkb import from_wkb
-
             for pdf in batches:
-                # per-geometry work: parse + bounds + axis-rect flag only;
-                # the cell cover and the fan-out are one vectorized pass
-                m = len(pdf)
-                bnds = np.full((m, 4), np.nan)
-                rect = np.zeros(m, dtype=bool)
-                wkbs = pdf["wkb"]
-                for i, b in enumerate(wkbs):
-                    if b is None:
-                        continue
-                    g = from_wkb(bytes(b), on_invalid="ignore")
-                    if g is not None and not g.is_empty:
-                        bnds[i] = K.bounds(g)
-                        # an axis-aligned rectangle IS its bbox, so the
-                        # bbox columns drive the closed-form JVM predicate
-                        rect[i] = (g.type_id == 3
-                                   and K._axis_rect(g) is not None)
-                ok = ~np.isnan(bnds[:, 0])
-                cells, row = cover_bbox_batch(bnds[ok], res)
-                src = np.nonzero(ok)[0][row]
-                yield pd.DataFrame({
-                    id_col: pd.Series(
-                        pdf[id_col].to_numpy(dtype=np.int64)[src], dtype="int64"),
-                    col["c"]: pd.Series(cells, dtype="int64"),
-                    col["x"]: pd.Series(bnds[src, 0], dtype="float64"),
-                    col["y"]: pd.Series(bnds[src, 1], dtype="float64"),
-                    col["x2"]: pd.Series(bnds[src, 2], dtype="float64"),
-                    col["y2"]: pd.Series(bnds[src, 3], dtype="float64"),
-                    col["rect"]: pd.Series(rect[src], dtype="bool"),
-                    col["wkb"]: pd.Series(
-                        [bytes(wkbs.iloc[k]) for k in src], dtype="object"),
-                })
+                yield _bbox_cover_rows(pdf, id_col, side, res)
 
         return df.select(id_col, "wkb").mapInPandas(gen, schema)
 
     lcov = covers(left, left_id, "l")
-    rcov = covers(right, right_id, "r").drop("__rwkb")
+    rcov = covers(right, right_id, "r")
     rgeo = right.select(F.col(right_id), F.col("wkb").alias("__rwkb"))
     if broadcast:
         rcov, rgeo = F.broadcast(rcov), F.broadcast(rgeo)

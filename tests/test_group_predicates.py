@@ -6,13 +6,16 @@ collinear-boundary configurations."""
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from shapely_spark.geo import kernels as K
 from shapely_spark.geo.geom import (
-    LINESTRING, MULTIPOLYGON, POINT, POLYGON, Geometry,
+    LINESTRING, MULTIPOLYGON, POINT, POLYGON, Geometry, geometrycollection,
+    regular_ngon,
 )
-from shapely_spark.geo.group_predicates import group_predicate
+from shapely_spark.geo.group_predicates import group_predicate, pair_predicate
 from shapely_spark.geo.wkt import from_wkt
+from tests import test_predicate_consistency as pr
 
 PREDICATES = [
     "intersects", "within", "covered_by", "touches", "overlaps",
@@ -243,3 +246,117 @@ def test_unknown_predicate_raises():
         group_predicate("disjoint", [_box(0, 0, 1, 1)], _box(0, 0, 2, 2))
     with pytest.raises(ValueError, match="nope"):
         group_predicate("nope", [_point(0, 0)], _line([(0, 0), (1, 1)]))
+
+
+# ---------------------------------------------------------------------------
+# pair_predicate: many rights per call
+
+@st.composite
+def pair_geoms(draw):
+    """The predicate zoo (tests.test_predicate_consistency.geoms: point,
+    segment, polyline, box, holed box, n-gon, multipoint, multiline,
+    multipolygon, rotated n-gon, corner-touching multipolygon) plus mixed
+    GeometryCollections and a holed diamond whose triangular hole touches
+    the shell at one node through ulp-noisy fp vertices."""
+    kind = draw(st.sampled_from(["zoo", "zoo", "zoo", "zoo", "gc", "node_hole"]))
+    if kind == "zoo":
+        return draw(pr.geoms())
+    if kind == "gc":
+        return geometrycollection(draw(st.lists(pr.geoms(), min_size=1, max_size=2)))
+    x, y = draw(pr.coord), draw(pr.coord)
+    return _node_touching_hole(x, y)
+
+
+def _node_touching_hole(x, y):
+    shell = regular_ngon(x - 0.5, y - 1, 2.5, 4).rings[0]
+    hole = regular_ngon(x, y, 1, 3).rings[0]
+    return Geometry(POLYGON, rings=[shell, hole[::-1]])
+
+
+def _check_pairs(lefts, rights):
+    """Every (left, right) pair, shuffled into ONE pair_predicate call per
+    predicate, equals the scalar kernel, and equals the same pair
+    evaluated alone: no answer depends on the batch it rides in."""
+    li, ri = (a.ravel() for a in np.meshgrid(
+        np.arange(len(lefts)), np.arange(len(rights)), indexing="ij"))
+    order = np.random.default_rng(len(lefts) * 31 + len(rights)).permutation(len(li))
+    li, ri = li[order], ri[order]
+    for pred in PREDICATES:
+        fn = getattr(K, pred)
+        got = pair_predicate(pred, lefts, rights, li, ri)
+        want = np.array([lefts[i] is not None and rights[j] is not None
+                         and bool(fn(lefts[i], rights[j])) for i, j in zip(li, ri)],
+                        dtype=bool)
+        alone = np.array([pair_predicate(pred, [lefts[i]], [rights[j]], [0], [0])[0]
+                          for i, j in zip(li, ri)], dtype=bool)
+        mism = np.flatnonzero((got != want) | (alone != want))
+        assert not len(mism), (pred, [(int(li[k]), int(ri[k]), bool(got[k]),
+                                       bool(alone[k]), bool(want[k])) for k in mism])
+
+
+def _rand_right(rng):
+    kind = rng.integers(0, 7)
+    cx, cy = rng.uniform(-4, 4, 2)
+    if kind == 0:
+        return _point(cx, cy)
+    if kind == 1:
+        return _line([(cx, cy), (cx + 3, cy + 1), (cx + 1, cy + 4)])
+    if kind == 2:
+        return Geometry(MULTIPOLYGON, parts=[_box(cx, cy, cx + 1, cy + 1),
+                                             _box(cx + 1, cy + 1, cx + 3, cy + 2)])
+    if kind == 3:
+        return geometrycollection([_box(cx, cy, cx + 2, cy + 2),
+                                   _line([(cx + 3, cy), (cx + 5, cy + 1)])])
+    if kind == 4:
+        return _node_touching_hole(round(cx * 2) / 2, round(cy * 2) / 2)
+    return _rand_poly(rng)
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_pair_batches_equal_scalar_and_alone(seed):
+    """Batches mixing many rights of every type — areal, lineal, puntal,
+    holed, multi, GeometryCollection and node-touching holes — against
+    point, line, polygon and holed lefts, plus None on both sides."""
+    rng = np.random.default_rng(seed)
+    lefts = [_rand_left(rng) for _ in range(9)] + [None]
+    rights = [_rand_right(rng) for _ in range(9)] + [None]
+    lefts.append(rights[0])
+    _check_pairs(lefts, rights)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(pair_geoms(), min_size=1, max_size=4),
+       st.lists(pair_geoms(), min_size=1, max_size=4))
+def test_pair_predicate_fuzz(lefts, rights):
+    _check_pairs(lefts, rights)
+
+
+def test_areal_lineal_pairs_reach_no_scalar_kernel(monkeypatch):
+    """line_crosses-shaped pairs (areal left, lineal right) and their
+    converse shapes ride the batched path by role swap: with every scalar
+    predicate kernel disabled the answers still equal the scalar ones."""
+    rng = np.random.default_rng(5)
+    lefts = [_box(0, 0, 4, 4), _diamond(2, 2, 2), from_wkt(
+        "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (3 3, 7 3, 7 7, 3 7, 3 3))")]
+    lefts += [_rand_poly(rng) for _ in range(8)] + [_point(0, 0), _line([(-5, 0), (5, 1)])]
+    rights = [_line([(1, 1), (3, 2)]),    # inside the box
+              _line([(0, 2), (2, 3)]),    # inside, one end on its boundary
+              _line([(4, 0), (4, 4)]),    # along the box's right edge
+              _line([(-1, 2), (5, 2)]),   # through the box
+              _point(2, 2), _point(4, 2), _box(-1, -1, 1, 1)]
+    rights += [_line([(x - 6, y), (x + 6, y + 0.5)]) for x, y in rng.uniform(-4, 4, (6, 2))]
+    li, ri = (a.ravel() for a in np.meshgrid(
+        np.arange(len(lefts)), np.arange(len(rights)), indexing="ij"))
+    want = {p: np.array([bool(getattr(K, p)(lefts[i], rights[j])) for i, j in zip(li, ri)])
+            for p in PREDICATES}
+    # the pairs with no areal side still need the scalar kernel
+    scalar = np.array([K._dim(lefts[i]) < 2 and K._dim(rights[j]) < 2
+                       for i, j in zip(li, ri)])
+    for p in PREDICATES:
+        monkeypatch.setattr(K, p, lambda a, b, p=p: pytest.fail(f"scalar {p}"))
+    for p in PREDICATES:
+        keep = ~scalar if p != "intersects" else np.ones(len(li), dtype=bool)
+        got = pair_predicate(p, lefts, rights, li[keep], ri[keep])
+        assert (got == want[p][keep]).all(), p
+    assert want["crosses"].any() and want["touches"].any()
+    assert (want["contains"] & ~want["contains_properly"]).any()

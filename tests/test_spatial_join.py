@@ -700,3 +700,120 @@ def test_geom_join_rejects_disjoint_predicate(spark):
     df = spark.createDataFrame([(0, None)], "left_id long, wkb binary")
     with pytest.raises(ValueError, match="disjoint"):
         spatial_join_geom(df, df, predicate="disjoint")
+
+
+def test_pair_refine_batch_makes_one_pair_predicate_call(monkeypatch):
+    """The geometry-join refine decides a whole Arrow batch in ONE
+    pair_predicate call over its factorized sides; rows with a NULL side
+    (rect×rect pairs the JVM decided) stay False without reaching it."""
+    import pandas as pd
+
+    from shapely_spark.geo import group_predicates as gp
+    from shapely_spark.geo import kernels as K
+    from shapely_spark.geo.geom import box, linestring, regular_ngon
+    from shapely_spark.geo.wkb import to_wkb
+    from shapely_spark.spark.join import _pair_refine_batch
+
+    lefts = [regular_ngon(x, 0, 1.5, 6) for x in range(0, 12, 2)]
+    rights = [box(1, -1, 3, 1), box(5, 0, 6, 3), linestring([(-1, 0.5), (12, 0.5)])]
+    li = [0, 1, 2, 3, 4, 5, 0, 1, 2, 3, 4, 5, 0, 1, 2, 3]
+    ri = [0, 0, 1, 1, 2, 2, 2, 2, 0, 1, 0, 1, 1, 2, 2, 0]
+    lw = [to_wkb(lefts[i]) for i in li]
+    rw = [to_wkb(rights[j]) for j in ri]
+    lw[3], rw[7], lw[11], rw[11] = None, None, None, None
+    calls, real = [], gp.pair_predicate
+
+    def counting(*args):
+        calls.append(len(args[3]))
+        return real(*args)
+
+    monkeypatch.setattr(gp, "pair_predicate", counting)
+    for pred in ("intersects", "touches", "crosses", "covers"):
+        calls.clear()
+        got = _pair_refine_batch(pred, pd.Series(lw, dtype=object), pd.Series(rw, dtype=object))
+        want = [lw[k] is not None and rw[k] is not None
+                and bool(getattr(K, pred)(lefts[li[k]], rights[ri[k]]))
+                for k in range(len(li))]
+        assert got.tolist() == want, pred
+        assert calls == [len(li) - 3], pred
+        assert not got[[3, 7, 11]].any()
+
+
+def test_bbox_cover_rows_match_per_geometry_rule():
+    """The geometry-join cover batch (one ragged pass for bounds and the
+    rect flag) emits the rows of the per-geometry rule — from_wkb,
+    kernels.bounds, kernels._axis_rect, cover_bbox_batch — with bit-equal
+    bounds, the same rect flag and, on the left side, the row's WKB."""
+    import pandas as pd
+
+    from shapely_spark.geo import from_wkt, to_wkb
+    from shapely_spark.geo import kernels as K
+    from shapely_spark.geo.wkb import from_wkb
+    from shapely_spark.index.cells import cover_bbox_batch
+    from shapely_spark.spark.join import _bbox_cover_rows
+
+    wkbs = [None, to_wkb(from_wkt("POLYGON EMPTY")), b"\x01\x03garbage"] + [
+        to_wkb(from_wkt(w)) for w in (
+            "POLYGON ((0 0, 4 0, 4 3, 0 3, 0 0), (1 1, 2 1, 2 2, 1 2, 1 1))",
+            "POLYGON ((0.1 0.3, 2.7 0.3, 0.1 1.9, 0.1 0.3))",
+            "POLYGON ((1 0, 1 0, 1 2, 1 2, 1 0))",
+            "POLYGON ((-3.3 1.1, 0.7 1.1, 0.7 2.6, -3.3 2.6, -3.3 1.1))",
+            "POLYGON ((0 1, 1 0, 2 1, 1 2, 0 1))",
+            "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)), ((5 5, 7 5, 7 6, 5 6, 5 5)))",
+            "GEOMETRYCOLLECTION (POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0)), POINT (3 4))",
+            "LINESTRING (-10.5 3, 20.25 7.125)", "POINT (2.5 2.5)")]
+    pdf = pd.DataFrame({"left_id": pd.Series(np.arange(len(wkbs)) * 7 - 3, dtype="int64"),
+                        "wkb": pd.Series(wkbs, dtype=object)})
+    for side, res in (("l", 9), ("r", 5)):
+        got = _bbox_cover_rows(pdf, "left_id", side, res)
+        bnds = np.full((len(wkbs), 4), np.nan)
+        rect = np.zeros(len(wkbs), dtype=bool)
+        for i, b in enumerate(wkbs):
+            g = None if b is None else from_wkb(bytes(b), on_invalid="ignore")
+            if g is not None and not g.is_empty:
+                bnds[i] = K.bounds(g)
+                rect[i] = g.type_id == 3 and K._axis_rect(g) is not None
+        ok = ~np.isnan(bnds[:, 0])
+        cells, row = cover_bbox_batch(bnds[ok], res)
+        src = np.flatnonzero(ok)[row]
+        cols = [f"__{side}{c}" for c in ("x", "y", "x2", "y2")]
+        assert got["left_id"].tolist() == pdf["left_id"].to_numpy()[src].tolist()
+        assert got[f"__{side}c"].tolist() == cells.tolist()
+        assert got[cols].to_numpy().tobytes() == bnds[src].tobytes()
+        assert got[f"__{side}rect"].tolist() == rect[src].tolist()
+        assert (f"__{side}wkb" in got) == (side == "l")
+        if side == "l":
+            assert got["__lwkb"].tolist() == [wkbs[k] for k in src]
+    assert rect.tolist() == [False] * 6 + [True] + [False] * 5
+
+
+def test_ragged_layer_empty_classifies_exterior():
+    from shapely_spark.geo.kernels import EXTERIOR, RaggedPolygonLayer
+
+    assert RaggedPolygonLayer({}).classify_many([0, -1], [0.0, 1.0], [0.0, 1.0]).tolist() \
+        == [EXTERIOR, EXTERIOR]
+
+
+@pytest.mark.parametrize("ids", [[-1, 0, 5, 2 ** 40], [-7, -2]])
+def test_spatial_join_region_ids_of_any_value(spark, ids):
+    """Both spatial_join modes give the same (point, region) pairs
+    whatever the region ids: negative, zero, sparse or 2^40, and a layer
+    of negative ids only. Boundary points take the refine path."""
+    import pandas as pd
+
+    from shapely_spark.geo import box
+    from shapely_spark.geo import kernels as K
+    from shapely_spark.geo.wkb import to_wkb
+
+    boxes = [box(10 * k, 0, 10 * k + 10, 10) for k in range(len(ids))]
+    regions = spark.createDataFrame(pd.DataFrame({
+        "region_id": pd.Series(ids, dtype="int64"), "wkb": [to_wkb(b) for b in boxes]}))
+    pts = [(0, 5.0, 5.0), (1, 5.0, 10.0), (2, 0.0, 10.0), (3, 3.0, 20.0)]
+    pts += [(4 + k, 5.0, 10.0 * k + 5.0) for k in range(len(ids))]
+    points = spark.createDataFrame(pd.DataFrame(pts, columns=["pid", "lat", "lon"]))
+    want = {(p, r) for p, lat, lon in pts for r, b in zip(ids, boxes)
+            if K.intersects(point(lon, lat), b)}
+    assert (1, ids[1]) in want and (2, ids[0]) in want
+    for broadcast in (True, False):
+        got = spatial_join(points, regions, "intersects", broadcast=broadcast)
+        assert {(r.pid, r.region_id) for r in got.collect()} == want, broadcast

@@ -4,7 +4,10 @@ Runs every queries() entry on Spark and its oracle_sql() twin on DuckDB at
 sf0.01 (or --sf), compares row count, schema width, and an order-insensitive
 value hash (columns sorted by name, rows sorted, values canonicalized).
 
-Usage: python tools/check_oracles.py [--sf 0.01] [--only name1,name2]
+Usage: python tools/check_oracles.py [--sf 0.01] [--only name1,name2] [--write-times]
+
+--write-times (full runs only) records each query's Spark wall time in
+BENCH/ORACLE_TIMES.json; without it the run writes no file.
 """
 
 from __future__ import annotations
@@ -67,6 +70,8 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="0.01")
     ap.add_argument("--only", default=None)
+    ap.add_argument("--write-times", action="store_true",
+                    help="full runs: record per-query Spark walls in BENCH/ORACLE_TIMES.json")
     args = ap.parse_args()
     sf_dir = f"/root/testdata/sf{args.sf}"
 
@@ -130,7 +135,7 @@ def main():
         else:
             print(f"OK    {name}: {len(spdf)} rows, hash {hs} [{time.time()-t0:.1f}s]")
     print(f"\n{len(names) - len(fails)}/{len(names)} passed")
-    if not args.only:
+    if args.write_times and not args.only:
         # record per-query Spark wall times so oracle-gate cost regressions
         # are visible round-over-round without a full bench (r3 verdict
         # item 8; the driver's PROGRESS file is driver-owned, so this

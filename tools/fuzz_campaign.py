@@ -61,6 +61,12 @@ def main() -> int:
         # group_predicate must equal the scalar kernel per left
         ("group≡scalar", st.lists(pr.geoms(), min_size=1, max_size=12),
          pr.geoms(), gp._check_batch),
+        # many lefts x many rights of every type (the zoo plus mixed
+        # collections and node-touching holes), all pairs shuffled into
+        # one pair_predicate call: each must equal the scalar kernel and
+        # the same pair evaluated alone
+        ("pair≡scalar", st.lists(gp.pair_geoms(), min_size=1, max_size=6),
+         st.lists(gp.pair_geoms(), min_size=1, max_size=6), gp._check_pairs),
     ]
     failures = 0
     for name, sa, sb, body in campaigns:
