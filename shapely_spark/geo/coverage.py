@@ -28,11 +28,11 @@ from .geom import (
     GEOMETRYCOLLECTION, LINESTRING, MULTILINESTRING, MULTIPOLYGON, POLYGON,
     Geometry, empty,
 )
-from .kernels import INTERIOR
+from .kernels import BOUNDARY, INTERIOR
 
 
 def _rings_of_all(geoms: list[Geometry]) -> list[list[np.ndarray]]:
-    from .overlay import _poly_rings_oriented
+    from .arrangement import _poly_rings_oriented
 
     return [_poly_rings_oriented(g) if g is not None and not g.is_empty else []
             for g in geoms]
@@ -58,9 +58,7 @@ def _invalid_fragments(geoms: list[Geometry]) -> list[list[np.ndarray]]:
     (inside a neighbor's interior, crossing a neighbor's boundary, or
     collinear with a neighbor's boundary without being an exactly-matched
     segment)."""
-    from .overlay import (
-        _edges_of, _fragments, _overlay_tol, _split_params,
-    )
+    from .arrangement import _edges_of, _overlay_tol, label
 
     rings_per = _rings_of_all(geoms)
     scale = _coverage_scale(rings_per)
@@ -83,14 +81,9 @@ def _invalid_fragments(geoms: list[Geometry]) -> list[list[np.ndarray]]:
             if bi[0] > bj[2] or bj[0] > bi[2] or bi[1] > bj[3] or bj[1] > bi[3]:
                 continue
             tol = _overlay_tol(edge_sets[i], edge_sets[j])
-            fa = _fragments(edge_sets[i], _split_params(edge_sets[i], edge_sets[j], tol))
-            if not len(fa):
-                continue
-            mx, my = (fa[:, 0] + fa[:, 2]) / 2, (fa[:, 1] + fa[:, 3]) / 2
-            cls = K.points_in_rings_class(mx, my, rings_per[j])
-            onb = K.points_on_segments(mx, my, edge_sets[j], eps=tol)
+            fa, cls = label(edge_sets[i], edge_sets[j], tol, rings_per[j])
             for k in range(len(fa)):
-                if onb[k]:
+                if cls[k] == BOUNDARY:
                     # collinear with j's boundary: valid only if this
                     # fragment comes from an exactly-matched segment
                     key = _seg_key(fa[k, :2], fa[k, 2:], scale)

@@ -59,11 +59,11 @@ import numpy as np
 from . import kernels as K
 from .geom import GEOMETRYCOLLECTION, POLYGON
 from .kernels import (
-    BOUNDARY, EXTERIOR, INTERIOR, RaggedPolygonLayer, _chunks, _dim, _edges,
-    _expand, _hole_rings, _holes_clear_of, _points_of, _ragged,
-    _ragged_bounds, _segments_meet,
+    _NO_SEGS, BOUNDARY, EXTERIOR, INTERIOR, RaggedPolygonLayer, _chunks, _dim,
+    _edges, _expand, _hole_rings, _holes_clear_of, _owner_segments, _points_of,
+    _ragged, _ragged_bounds, _segments_meet,
 )
-from .overlay import _edge_fragments, _event_hits, _merge_params, _split_events
+from .arrangement import _edge_fragments, _event_hits, _merge_params, _split_events
 
 _SUPPORTED = {
     "intersects", "within", "covered_by", "touches", "overlaps", "crosses",
@@ -83,7 +83,8 @@ class _Pool:
     """Per-geometry facts of a call's distinct geometries, each extracted
     once: dim (-1 for None/EMPTY), collection flag, bounds, hole flag,
     noding span, and vertices and edges as ragged arrays keyed by pool
-    code. The point locator over the pool is built on first use."""
+    code. The point locator over the pool is built on first use from the
+    layer segments taken in the same walk."""
 
     def __init__(self, geoms: list):
         self.geoms = geoms
@@ -92,13 +93,19 @@ class _Pool:
         self.gc = np.zeros(n, dtype=bool)
         self.holed = np.zeros(n, dtype=bool)
         verts, edges = [np.zeros((0, 2))] * n, [np.zeros((0, 4))] * n
+        self._segs = [(_NO_SEGS, _NO_SEGS)] * n
         for k, g in enumerate(geoms):
             if g is None or g.is_empty:
                 continue
             self.gc[k] = g.type_id == GEOMETRYCOLLECTION
             self.dim[k] = _dim(g)
             self.holed[k] = bool(_hole_rings(g))
-            verts[k], edges[k] = _points_of(g), _edges(g)
+            verts[k] = _points_of(g)
+            # the layer's boundary segments of a polygon or a line are its
+            # edges; a point's are zero-length and a collection's areal only
+            self._segs[k] = _owner_segments(g)
+            edges[k] = (self._segs[k][1] if self.dim[k] >= 1 and not self.gc[k]
+                        else _edges(g))
         self.vstart, self.vxy = _ragged(verts, 2)
         self.estart, self.eseg = _ragged(edges, 4)
         self.ecount = np.diff(self.estart)
@@ -114,7 +121,7 @@ class _Pool:
     @property
     def layer(self) -> RaggedPolygonLayer:
         if self._layer is None:
-            self._layer = RaggedPolygonLayer(dict(enumerate(self.geoms)))
+            self._layer = RaggedPolygonLayer.from_owner_segments(self._segs)
         return self._layer
 
     def reps(self, codes: np.ndarray):
@@ -157,7 +164,7 @@ def _edge_facts(pool: _Pool, src, dst):
     """(any EXTERIOR, any INTERIOR, any BOUNDARY) fragment per pair k:
     src[k]'s edges noded at dst[k]'s edges with the pair's own
     _overlay_tol, fragment midpoints classified against areal dst[k]
-    with on-∂ at that tolerance overriding (kernels._noded_midpoint_class)."""
+    with on-∂ at that tolerance overriding (kernels._noded_class)."""
     m = len(src)
     f = np.zeros((3, m), dtype=bool)
     tol = np.maximum(pool.span[src], pool.span[dst]) * 1e-10

@@ -266,6 +266,9 @@ def _expand(start: np.ndarray, ids: np.ndarray):
     return row, start[ids][row] + offs
 
 
+_NO_SEGS = np.zeros((0, 4))
+
+
 def _ragged(arrays: list, width: int):
     """Stack per-owner (k, width) arrays: (offsets of n + 1, stacked)."""
     start = np.zeros(len(arrays) + 1, dtype=np.int64)
@@ -323,28 +326,27 @@ class RaggedPolygonLayer:
 
     def __init__(self, geoms_by_id: dict[int, "Geometry"]):
         n = (max(geoms_by_id) + 1) if geoms_by_id else 0
-        self.n = n
-        cross_cnt = np.zeros(n, dtype=np.int64)
-        bnd_cnt = np.zeros(n, dtype=np.int64)
-        cross_parts: list[np.ndarray] = []
-        bnd_parts: list[np.ndarray] = []
-        for rid in sorted(geoms_by_id):
-            nc, nb = len(cross_parts), len(bnd_parts)
-            _owner_segments(geoms_by_id[rid], cross_parts, bnd_parts)
-            cross_cnt[rid] = sum(len(s) for s in cross_parts[nc:])
-            bnd_cnt[rid] = sum(len(s) for s in bnd_parts[nb:])
-        self.cross_start = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(cross_cnt, out=self.cross_start[1:])
-        self.bnd_start = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(bnd_cnt, out=self.bnd_start[1:])
-        self.cross_seg = (np.concatenate(cross_parts, axis=0)
-                          if cross_parts else np.zeros((0, 4)))
-        self.bnd_seg = (np.concatenate(bnd_parts, axis=0)
-                        if bnd_parts else np.zeros((0, 4)))
+        segs = [(_NO_SEGS, _NO_SEGS)] * n
+        for rid, g in geoms_by_id.items():
+            segs[rid] = _owner_segments(g)
+        self._build(segs)
+
+    @classmethod
+    def from_owner_segments(cls, segs: list) -> "RaggedPolygonLayer":
+        """The layer of owners 0..n-1 from each one's (crossing, boundary)
+        segment arrays, as _owner_segments gives them."""
+        layer = cls.__new__(cls)
+        layer._build(segs)
+        return layer
+
+    def _build(self, segs: list) -> None:
+        self.n = n = len(segs)
+        self.cross_start, self.cross_seg = _ragged([c for c, _ in segs], 4)
+        self.bnd_start, self.bnd_seg = _ragged([b for _, b in segs], 4)
         # per-owner bbox of its boundary segments (every crossing segment
         # is one too); owners without segments keep NaN: nothing is on them
         self.bbox = np.full((n, 4), np.nan)
-        has = bnd_cnt > 0
+        has = np.diff(self.bnd_start) > 0
         if len(self.bnd_seg):
             s, at = self.bnd_seg, self.bnd_start[:-1][has]
             self.bbox[has, :2] = np.minimum.reduceat(np.minimum(s[:, :2], s[:, 2:]), at)
@@ -398,11 +400,19 @@ class RaggedPolygonLayer:
         return out
 
 
-def _owner_segments(g, cross: list, bnd: list, areal_only: bool = False) -> None:
-    """Append g's crossing and boundary segments for RaggedPolygonLayer:
-    polygon rings to both (rings of <4 points to bnd only), lineal edges
-    and puntal zero-length segments to bnd. Members of a multi or a
+def _owner_segments(g) -> tuple:
+    """(crossing, boundary) segments of g for RaggedPolygonLayer: polygon
+    rings give both (rings of <4 points boundary only), lineal edges and
+    puntal zero-length segments boundary only. Members of a multi or a
     collection count only if areal."""
+    cross: list[np.ndarray] = []
+    bnd: list[np.ndarray] = []
+    _append_segments(g, cross, bnd)
+    return (np.concatenate(cross) if cross else _NO_SEGS,
+            np.concatenate(bnd) if bnd else _NO_SEGS)
+
+
+def _append_segments(g, cross: list, bnd: list, areal_only: bool = False) -> None:
     if g is None or g.is_empty:
         return
     tid = g.type_id
@@ -416,7 +426,7 @@ def _owner_segments(g, cross: list, bnd: list, areal_only: bool = False) -> None
                     cross.append(seg)
     elif tid in (MULTIPOLYGON, GEOMETRYCOLLECTION):
         for p in g.parts or []:
-            _owner_segments(p, cross, bnd, True)
+            _append_segments(p, cross, bnd, True)
     elif areal_only:
         return
     elif tid in (POINT, MULTIPOINT):
@@ -586,28 +596,13 @@ def disjoint(a, b) -> bool:
 
 
 def _all_class(points: np.ndarray, container: Geometry) -> np.ndarray:
-    """Classify each point of `points` against container (any dim)."""
-    px, py = points[:, 0], points[:, 1]
-    d = _dim(container)
-    if d == 2:
-        return points_in_rings_class(px, py, _rings_of(container))
-    if d == 1:
-        onb = points_on_segments(px, py, _edges(container))
-        # interior of a line: on segment but not a mod-2 boundary point
-        # (endpoints occurring an odd number of times; shared endpoints of
-        # a connected multiline are interior — reference boundary-node rule)
-        cls = np.where(onb, INTERIOR, EXTERIOR).astype(np.int8)
-        ends = _line_boundary_points(container)
-        if len(ends):
-            isend = np.any(
-                (px[:, None] == ends[None, :, 0]) & (py[:, None] == ends[None, :, 1]),
-                axis=1,
-            )
-            cls[onb & isend] = BOUNDARY
-        return cls
-    cc = _points_of(container)
-    eq = np.any((px[:, None] == cc[None, :, 0]) & (py[:, None] == cc[None, :, 1]), axis=1)
-    return np.where(eq, INTERIOR, EXTERIOR).astype(np.int8)
+    """Exact class of each point of `points` in container (any dim): a
+    line's interior excludes its mod-2 boundary points (shared endpoints
+    of a connected multiline are interior — reference boundary-node rule),
+    a point set's interior is its points."""
+    from .arrangement import _Side
+
+    return _Side(container).locate(points[:, 0], points[:, 1], 0.0)
 
 
 def _hole_rings(geom: Geometry) -> list[np.ndarray]:
@@ -620,27 +615,21 @@ def _hole_rings(geom: Geometry) -> list[np.ndarray]:
     return holes
 
 
-def _noded_midpoint_class(b_edges: np.ndarray, a: Geometry) -> np.ndarray:
-    """Class (vs areal A) of every midpoint of ∂B's edges NODED at ∂A.
-    Raw edge midpoints are not enough: an edge of B bridging the gap
-    between two parts of A can have BOTH endpoints and its midpoint on
-    A's closure while its interior crosses A's exterior (the r3 fuzz
-    counterexample: two abutting boxes vs two boxes with a gap). After
-    noding, each fragment lies in a single DE-9IM class, so midpoints
-    classify exactly."""
-    from .overlay import _fragments, _overlay_tol, _split_params
+def _noded_class(g: Geometry, areal: Geometry) -> np.ndarray:
+    """Class in `areal` of every fragment of g's edges NODED at ∂areal.
+    Raw edge midpoints are not enough: an edge of g bridging the gap
+    between two parts of `areal` can have BOTH endpoints and its midpoint
+    on the closure while its interior crosses the exterior (the r3 fuzz
+    counterexample: two abutting boxes vs two boxes with a gap), and the
+    un-noded midpoint of a corner-to-corner transit lands back on the
+    boundary. After noding, each fragment lies in a single DE-9IM class,
+    so midpoints classify exactly."""
+    from .arrangement import _overlay_tol, label
 
-    ea = _edges(a)
-    if not len(b_edges) or not len(ea):
+    eg, ea = _edges(g), _edges(areal)
+    if not len(eg) or not len(ea):
         return np.zeros(0, dtype=np.int8)
-    tol = _overlay_tol(ea, b_edges)
-    fb = _fragments(b_edges, _split_params(b_edges, ea, tol))
-    if not len(fb):
-        return np.zeros(0, dtype=np.int8)
-    mx, my = (fb[:, 0] + fb[:, 2]) / 2.0, (fb[:, 1] + fb[:, 3]) / 2.0
-    cls = points_in_rings_class(mx, my, _rings_of(a))
-    onb = points_on_segments(mx, my, ea, eps=tol)
-    return np.where(onb, np.int8(BOUNDARY), cls)
+    return label(eg, ea, _overlay_tol(ea, eg), _rings_of(areal))[1]
 
 
 def _holes_clear_of(a: Geometry, b: Geometry) -> bool:
@@ -683,6 +672,8 @@ def contains(a: Geometry | None, b: Geometry | None) -> bool:
         return False
     if _bbox_disjoint(a, b):
         return False
+    if _has_gc(a, b):
+        return _by_matrix("contains", a, b)
     da, db = _dim(a), _dim(b)
     if db > da:
         return False
@@ -703,7 +694,7 @@ def contains(a: Geometry | None, b: Geometry | None) -> bool:
         # line in polygon: need a witness of b in int(a)
         if (cls == INTERIOR).any():
             return True
-        mcls = _noded_midpoint_class(_edges(b), a)
+        mcls = _noded_class(b, a)
         return bool((mcls == INTERIOR).any())
     # line-in-line: vertex sampling misses collinear spans (equal lines have
     # all vertices on ∂) — require closure containment plus interior witness
@@ -722,6 +713,8 @@ def covers(a: Geometry | None, b: Geometry | None) -> bool:
         return False
     if _bbox_disjoint(a, b):
         return False
+    if _has_gc(a, b):
+        return _by_matrix("covers", a, b)
     da, db = _dim(a), _dim(b)
     if db > da:
         return False
@@ -733,25 +726,20 @@ def covers(a: Geometry | None, b: Geometry | None) -> bool:
         # exact: node ∂B at ∂A so every fragment sits in one class — raw
         # midpoints miss an edge of B bridging a gap between parts of A
         # through A's exterior with all samples on A's closure
-        if (_noded_midpoint_class(_edges(b), a) == EXTERIOR).any():
+        if (_noded_class(b, a) == EXTERIOR).any():
             return False
         if db == 2 and not _holes_clear_of(a, b):
             return False
     if da == 1 and db == 1:
         # vertex sampling misses spans of b that leave a between a-vertices:
         # node b's edges at a's, then EVERY fragment midpoint must lie on a
-        from .overlay import _fragments, _overlay_tol, _split_params
+        from .arrangement import _overlay_tol, label
 
         ea, eb = _edges(a), _edges(b)
         if not len(ea):
             return False
-        if len(eb):
-            tol = _overlay_tol(ea, eb)
-            fr = _fragments(eb, _split_params(eb, ea, tol))
-            if len(fr):
-                mx, my = (fr[:, 0] + fr[:, 2]) / 2.0, (fr[:, 1] + fr[:, 3]) / 2.0
-                if not points_on_segments(mx, my, ea, eps=tol).all():
-                    return False
+        if len(eb) and (label(eb, ea, _overlay_tol(ea, eb))[1] != BOUNDARY).any():
+            return False
     return True
 
 
@@ -765,12 +753,14 @@ def contains_properly(a: Geometry | None, b: Geometry | None) -> bool:
     reference: shapely/predicates.py:619."""
     if a is None or b is None or a.is_empty or b.is_empty:
         return False
+    if _has_gc(a, b):
+        return _by_matrix("contains_properly", a, b)
     pb = _points_of(b)
     cls = _all_class(pb, a)
     if not (cls == INTERIOR).all():
         return False
     if _dim(b) >= 1 and _dim(a) == 2:
-        mcls = _noded_midpoint_class(_edges(b), a)
+        mcls = _noded_class(b, a)
         if not (mcls == INTERIOR).all():
             return False
         if _dim(b) == 2 and not _holes_clear_of(a, b):
@@ -784,6 +774,8 @@ def touches(a: Geometry | None, b: Geometry | None) -> bool:
     point-vs-(line|polygon) and polygon-vs-polygon edge-touch cases."""
     if a is None or b is None or a.is_empty or b.is_empty:
         return False
+    if _has_gc(a, b):
+        return _by_matrix("touches", a, b)
     da, db = _dim(a), _dim(b)
     if da > db:
         return touches(b, a)
@@ -815,33 +807,6 @@ def _axis_rect(g: Geometry):
     return float(xmin), float(ymin), float(xmax), float(ymax)
 
 
-def _noded_line_classes(a: Geometry, b: Geometry) -> np.ndarray:
-    """Classify line a's boundary-noded fragment midpoints vs polygon b:
-    INTERIOR/BOUNDARY/EXTERIOR per fragment. Noding the line at ∂b first is
-    what makes corner-to-corner transits classify correctly — the un-noded
-    midpoint of such a segment lands back on ∂b."""
-    from .overlay import (
-        _edges_of, _fragments, _overlay_tol, _poly_rings_oriented,
-        _split_params,
-    )
-
-    ea = _edges(a)
-    if not len(ea):
-        return np.zeros(0, dtype=np.int8)
-    rb = _poly_rings_oriented(b)
-    ebnd = _edges_of(rb)
-    if not len(ebnd):
-        return np.zeros(0, dtype=np.int8)
-    tol = _overlay_tol(ea, ebnd)
-    fr = _fragments(ea, _split_params(ea, ebnd, tol))
-    if not len(fr):
-        return np.zeros(0, dtype=np.int8)
-    mx, my = (fr[:, 0] + fr[:, 2]) / 2.0, (fr[:, 1] + fr[:, 3]) / 2.0
-    cls = points_in_rings_class(mx, my, rb)
-    onb = points_on_segments(mx, my, ebnd, eps=tol)
-    return np.where(onb, np.int8(BOUNDARY), cls)
-
-
 def _interiors_intersect(a: Geometry, b: Geometry) -> bool:
     """int(a) ∩ int(b) ≠ ∅ — the DE-9IM II cell as a boolean. Witnesses are
     found by noding each boundary against the other (same fragment machinery
@@ -849,9 +814,9 @@ def _interiors_intersect(a: Geometry, b: Geometry) -> bool:
     congruent offset boxes, containment sharing an edge, a line through a
     polygon corner-to-corner) classify correctly — vertex/midpoint sampling
     alone misses them."""
-    from .overlay import (
-        _crossing_touch_points, _edges_of, _fragments, _overlay_tol,
-        _poly_rings_oriented, _split_params,
+    from .arrangement import (
+        _crossing_touch_points, _edges_of, _overlay_tol, _poly_rings_oriented,
+        label, sides,
     )
 
     da, db = _dim(a), _dim(b)
@@ -880,60 +845,36 @@ def _interiors_intersect(a: Geometry, b: Geometry) -> bool:
         # strictly inside h witnesses the overlap (every neighbourhood of
         # ∂g meets int(g), and int(h) is open); a fragment ON ∂h witnesses
         # it iff g's interior side (left of the oriented fragment) is
-        # inside h — that nudge separates equal/contained-sharing-an-edge
-        # (overlap) from edge-adjacent (touch).
+        # inside h — the side probe separates equal/contained-sharing-an-
+        # edge (overlap) from edge-adjacent (touch).
         ra, rb = _poly_rings_oriented(a), _poly_rings_oriented(b)
         eao, ebo = _edges_of(ra), _edges_of(rb)
         if not len(eao) or not len(ebo):
             return False
         tol = _overlay_tol(eao, ebo)
         for eg, eh, rh in ((eao, ebo, rb), (ebo, eao, ra)):
-            fr = _fragments(eg, _split_params(eg, eh, tol))
-            if not len(fr):
-                continue
-            mx, my = (fr[:, 0] + fr[:, 2]) / 2.0, (fr[:, 1] + fr[:, 3]) / 2.0
-            cls = points_in_rings_class(mx, my, rh)
-            onb = points_on_segments(mx, my, eh, eps=tol)
-            if ((cls == INTERIOR) & ~onb).any():
+            fr, cls = label(eg, eh, tol, rh)
+            if (cls == INTERIOR).any():
                 return True
-            idx = np.nonzero(onb)[0]
-            if len(idx):
-                dx, dy = fr[idx, 2] - fr[idx, 0], fr[idx, 3] - fr[idx, 1]
-                ln = np.hypot(dx, dy)
-                ok = ln > 0
-                if ok.any():
-                    # oriented rings carry interior on the LEFT; nudge well
-                    # above the noding tol, well below feature sizes
-                    delta = tol * 1e3
-                    px = mx[idx][ok] - dy[ok] / ln[ok] * delta
-                    py = my[idx][ok] + dx[ok] / ln[ok] * delta
-                    if (points_in_rings_class(px, py, rh) == INTERIOR).any():
-                        return True
+            on = cls == BOUNDARY
+            if on.any() and (sides(fr[on], rh, tol)[0] == INTERIOR).any():
+                return True
         return False
     if db == 2:  # line or point vs polygon
         pa = _points_of(a)
         if (points_in_rings_class(pa[:, 0], pa[:, 1], _rings_of(b)) == INTERIOR).any():
             return True
-        cls = _noded_line_classes(a, b)
+        cls = _noded_class(a, b)
         return bool((cls == INTERIOR).any())
     # line vs line: collinear overlap, proper crossing, or a crossing pinned
     # at a vertex that is interior (non-endpoint) to both lines. Overlap
     # witnesses come from NODED fragment midpoints: an un-noded midpoint can
     # land exactly on the other line's endpoint (T-junction → int∩∂, not
     # int∩int), and can miss partial collinear spans entirely.
+    if _lines_overlap(a, b):
+        return True
     ea, eb = _edges(a), _edges(b)
-    if not len(ea) or not len(eb):
-        return False
     tol = _overlay_tol(ea, eb)
-    for eg, eh in ((ea, eb), (eb, ea)):
-        fr = _fragments(eg, _split_params(eg, eh, tol))
-        if not len(fr):
-            continue
-        mx, my = (fr[:, 0] + fr[:, 2]) / 2.0, (fr[:, 1] + fr[:, 3]) / 2.0
-        # post-noding, a fragment midpoint on the other line is strictly
-        # between nodes, so it is interior to BOTH lines
-        if points_on_segments(mx, my, eh, eps=tol).any():
-            return True
     # 0-dim witnesses: every crossing/touch point that is a boundary point
     # of NEITHER line (a proper edge crossing can still land exactly on the
     # other line's mod-2 endpoint — e.g. a self-crossing polyline — so a
@@ -955,6 +896,8 @@ def crosses(a: Geometry | None, b: Geometry | None) -> bool:
     (proper crossing), line-polygon, point(s)-line/polygon."""
     if a is None or b is None or a.is_empty or b.is_empty:
         return False
+    if _has_gc(a, b):
+        return _by_matrix("crosses", a, b)
     da, db = _dim(a), _dim(b)
     if da > db:
         return crosses(b, a)
@@ -966,36 +909,25 @@ def crosses(a: Geometry | None, b: Geometry | None) -> bool:
         if not _interiors_intersect(a, b):
             return False
         # crossing (dim 0 intersection): not collinear-overlapping
-        return not (contains(a, b) or contains(b, a) or _collinear_overlap(a, b))
+        return not (contains(a, b) or contains(b, a) or _lines_overlap(a, b))
     if da == 1 and db == 2:
         # 'T*T******': the line must meet both int(b) and ext(b); classify
         # boundary-noded fragments so corner transits count
-        cls = _noded_line_classes(a, b)
+        cls = _noded_class(a, b)
         return bool((cls == INTERIOR).any() and (cls == EXTERIOR).any())
     return False
 
 
-def _collinear_overlap(a: Geometry, b: Geometry) -> bool:
-    """True if any segment pair is collinear AND overlaps in >1 point."""
+def _lines_overlap(a: Geometry, b: Geometry) -> bool:
+    """Do lineal a and b share a segment of positive length? Post-noding,
+    a fragment of a lying on b is strictly between nodes, so it is
+    interior to BOTH lines."""
+    from .arrangement import _overlay_tol, label
+
     ea, eb = _edges(a), _edges(b)
     if not len(ea) or not len(eb):
         return False
-    ax1, ay1, ax2, ay2 = (ea[:, i][:, None] for i in range(4))
-    bx1, by1, bx2, by2 = (eb[:, i][None, :] for i in range(4))
-    # both endpoints of b on the infinite line of a → collinear
-    c1 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
-    c2 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
-    collinear = (c1 == 0) & (c2 == 0)
-    if not collinear.any():
-        return False
-    # overlap length > 0: project onto the dominant axis of a
-    ovx = np.minimum(np.maximum(ax1, ax2), np.maximum(bx1, bx2)) - np.maximum(
-        np.minimum(ax1, ax2), np.minimum(bx1, bx2)
-    )
-    ovy = np.minimum(np.maximum(ay1, ay2), np.maximum(by1, by2)) - np.maximum(
-        np.minimum(ay1, ay2), np.minimum(by1, by2)
-    )
-    return bool((collinear & ((ovx > 0) | (ovy > 0))).any())
+    return bool((label(ea, eb, _overlay_tol(ea, eb))[1] == BOUNDARY).any())
 
 
 def overlaps(a: Geometry | None, b: Geometry | None) -> bool:
@@ -1005,12 +937,14 @@ def overlaps(a: Geometry | None, b: Geometry | None) -> bool:
         return False
     if _dim(a) != _dim(b):
         return False
+    if _has_gc(a, b):
+        return _by_matrix("overlaps", a, b)
     if _dim(a) == 1:
         # lineal pattern is '1*T***T**': the interior intersection must be
         # 1-dimensional — segments crossing at a point are crosses, not
         # overlaps. A dim-1 intersection of polylines forces some edge pair
         # collinear with positive overlap.
-        if not _collinear_overlap(a, b):
+        if not _lines_overlap(a, b):
             return False
     elif not _interiors_intersect(a, b):
         return False
@@ -1024,6 +958,8 @@ def equals(a: Geometry | None, b: Geometry | None) -> bool:
         return False
     if a.is_empty and b.is_empty:
         return True
+    if not (a.is_empty or b.is_empty) and _has_gc(a, b):
+        return _by_matrix("equals", a, b)
     return covers(a, b) and covers(b, a)
 
 
@@ -1063,224 +999,84 @@ def _line_boundary_points(g: Geometry) -> np.ndarray:
     from collections import Counter
 
     cnt: Counter = Counter()
+    at: dict = {}
     stack = [g]
     while stack:
         x = stack.pop()
         if x.type_id in (LINESTRING, LINEARRING) and x.coords is not None and len(x.coords) >= 2:
-            cnt[tuple(np.round(x.coords[0, :2], 12))] += 1
-            cnt[tuple(np.round(x.coords[-1, :2], 12))] += 1
+            for c in (x.coords[0, :2], x.coords[-1, :2]):
+                k = tuple(np.round(c, 12))
+                cnt[k] += 1
+                at.setdefault(k, c)  # the exact coordinates of its first copy
         for p in x.parts or []:
             stack.append(p)
-    pts = [p for p, k in cnt.items() if k % 2 == 1]
+    pts = [at[p] for p, k in cnt.items() if k % 2 == 1]
     return np.array(pts, dtype=np.float64) if pts else np.zeros((0, 2))
 
 
-def _transpose9(m: list[int]) -> list[int]:
-    return [m[0], m[3], m[6], m[1], m[4], m[7], m[2], m[5], m[8]]
-
-
-def _relate_matrix(a: Geometry, b: Geometry) -> list[int]:
-    """Full DE-9IM as 9 ints (-1=F) in row-major I/B/E(a) × I/B/E(b) order
-    (reference: shapely/predicates.py:1194 computes this via GEOS
-    RelateOp; here from the engine's noding + classification kernels)."""
-    from .overlay import (
-        _crossing_touch_points, _edges_of, _fragments, _line_edges,
-        _overlay_tol, _poly_rings_oriented, _split_params,
-    )
-
-    F = -1
-    if a.is_empty or b.is_empty:
-        m = [F] * 9
-        m[8] = 2
-        if not b.is_empty:
-            m[6] = _dim(b)
-            m[7] = _boundary_dim(b)
-        if not a.is_empty:
-            m[2] = _dim(a)
-            m[5] = _boundary_dim(a)
-        return m
-    da, db = _dim(a), _dim(b)
-    if da > db:
-        return _transpose9(_relate_matrix(b, a))
-
-    m = [F] * 9
-    m[8] = 2
-
-    def _pt_class_vs_line(pts: np.ndarray, g: Geometry, eg: np.ndarray, tol: float) -> np.ndarray:
-        """0=exterior, 1=boundary, 2=interior of a lineal geometry."""
-        out = np.zeros(len(pts), dtype=np.int8)
-        if len(pts) == 0:
-            return out
-        on = points_on_segments(pts[:, 0], pts[:, 1], eg, eps=tol)
-        bnd = _line_boundary_points(g)
-        for i in np.nonzero(on)[0]:
-            isb = len(bnd) and (np.abs(bnd - pts[i]).max(axis=1) < tol * 10).any()
-            out[i] = BOUNDARY if isb else INTERIOR
-        return out
-
-    if da == 0 and db == 0:
-        pa, pb = _points_of(a), _points_of(b)
-        shared = np.array([(np.abs(pb - p).max(axis=1) < 1e-12).any() for p in pa])
-        m[0] = 0 if shared.any() else F
-        m[2] = 0 if (~shared).any() else F
-        sharedb = np.array([(np.abs(pa - p).max(axis=1) < 1e-12).any() for p in pb])
-        m[6] = 0 if (~sharedb).any() else F
-        return m
-
-    if da == 0:  # point × line/polygon
-        pa = _points_of(a)
-        cls = _all_class(pa, b)
-        m[0] = 0 if (cls == INTERIOR).any() else F
-        m[1] = 0 if (cls == BOUNDARY).any() else F
-        m[2] = 0 if (cls == EXTERIOR).any() else F
-        m[6] = db  # a point set can never cover a 1-/2-dim interior
-        bd = _boundary_dim(b)
-        if bd >= 0:
-            if db == 2:
-                m[7] = 1
-            else:  # line boundary: finite points; exterior unless all covered
-                bnd = _line_boundary_points(b)
-                covered = np.array(
-                    [(np.abs(pa - p).max(axis=1) < 1e-12).any() for p in bnd]
-                ) if len(bnd) else np.zeros(0, dtype=bool)
-                m[7] = 0 if (~covered).any() else F
-        return m
-
-    if da == 1 and db == 1:
-        ea, eb = _line_edges(a), _line_edges(b)
-        tol = _overlay_tol(ea, eb)
-        fa = _fragments(ea, _split_params(ea, eb, tol))
-        fb = _fragments(eb, _split_params(eb, ea, tol))
-        amx, amy = (fa[:, 0] + fa[:, 2]) / 2, (fa[:, 1] + fa[:, 3]) / 2
-        bmx, bmy = (fb[:, 0] + fb[:, 2]) / 2, (fb[:, 1] + fb[:, 3]) / 2
-        a_on_b = points_on_segments(amx, amy, eb, eps=tol) if len(fa) else np.zeros(0, bool)
-        b_on_a = points_on_segments(bmx, bmy, ea, eps=tol) if len(fb) else np.zeros(0, bool)
-        ba, bb_ = _line_boundary_points(a), _line_boundary_points(b)
-        if a_on_b.any():
-            m[0] = 1
-        else:
-            pts = _crossing_touch_points(ea, eb, tol)
-            ca = _pt_class_vs_line(pts, a, ea, tol)
-            cb = _pt_class_vs_line(pts, b, eb, tol)
-            m[0] = 0 if ((ca == INTERIOR) & (cb == INTERIOR)).any() else F
-        cbb = _pt_class_vs_line(bb_, a, ea, tol)
-        m[1] = 0 if (cbb == INTERIOR).any() else F
-        m[2] = 1 if (~a_on_b).any() else F
-        cba = _pt_class_vs_line(ba, b, eb, tol)
-        m[3] = 0 if (cba == INTERIOR).any() else F
-        m[4] = 0 if (len(ba) and len(bb_) and (cba == BOUNDARY).any()) else F
-        m[5] = 0 if (cba == EXTERIOR).any() else F
-        m[6] = 1 if (~b_on_a).any() else F
-        m[7] = 0 if (cbb == EXTERIOR).any() else F
-        return m
-
-    if da == 1 and db == 2:
-        ea = _line_edges(a)
-        rings = _poly_rings_oriented(b)
-        ebnd = _edges_of(rings)
-        tol = _overlay_tol(ea, ebnd)
-        fa = _fragments(ea, _split_params(ea, ebnd, tol))
-        if len(fa):
-            mx, my = (fa[:, 0] + fa[:, 2]) / 2, (fa[:, 1] + fa[:, 3]) / 2
-            cls = points_in_rings_class(mx, my, rings)
-            onb = points_on_segments(mx, my, ebnd, eps=tol)
-            cls = np.where(onb, np.int8(BOUNDARY), cls)
-        else:
-            cls = np.zeros(0, dtype=np.int8)
-        m[0] = 1 if (cls == INTERIOR).any() else F
-        if (cls == BOUNDARY).any():
-            m[1] = 1
-        else:
-            pts = _crossing_touch_points(ea, ebnd, tol)
-            ca = _pt_class_vs_line(pts, a, ea, tol)
-            m[1] = 0 if (ca == INTERIOR).any() else F
-        m[2] = 1 if (cls == EXTERIOR).any() else F
-        ba = _line_boundary_points(a)
-        if len(ba):
-            cb = points_in_rings_class(ba[:, 0], ba[:, 1], rings)
-            onb2 = points_on_segments(ba[:, 0], ba[:, 1], ebnd, eps=tol)
-            cb = np.where(onb2, np.int8(BOUNDARY), cb)
-            m[3] = 0 if (cb == INTERIOR).any() else F
-            m[4] = 0 if (cb == BOUNDARY).any() else F
-            m[5] = 0 if (cb == EXTERIOR).any() else F
-        m[6] = 2  # a line never covers a polygon interior
-        fbnd = _fragments(ebnd, _split_params(ebnd, ea, tol))
-        if len(fbnd):
-            bx, by = (fbnd[:, 0] + fbnd[:, 2]) / 2, (fbnd[:, 1] + fbnd[:, 3]) / 2
-            off = ~points_on_segments(bx, by, ea, eps=tol)
-            m[7] = 1 if off.any() else F
-        else:
-            m[7] = 1
-        return m
-
-    # polygon × polygon
-    ra, rb = _poly_rings_oriented(a), _poly_rings_oriented(b)
-    ea, eb = _edges_of(ra), _edges_of(rb)
-    tol = _overlay_tol(ea, eb)
-    fa = _fragments(ea, _split_params(ea, eb, tol))
-    fb = _fragments(eb, _split_params(eb, ea, tol))
-
-    def classify(frags, rings, edges):
-        if not len(frags):
-            return np.zeros(0, dtype=np.int8)
-        mx, my = (frags[:, 0] + frags[:, 2]) / 2, (frags[:, 1] + frags[:, 3]) / 2
-        cls = points_in_rings_class(mx, my, rings)
-        onb = points_on_segments(mx, my, edges, eps=tol)
-        return np.where(onb, np.int8(BOUNDARY), cls)
-
-    ca = classify(fa, rb, eb)  # ∂A vs B
-    cb = classify(fb, ra, ea)  # ∂B vs A
-    ii = _interiors_intersect(a, b)
-    if not ii:
-        # equal/nested-with-shared-boundary cases have no boundary fragment
-        # in the other's interior — probe an interior representative point
-        from .constructive import point_on_surface
-
-        for g, rings in ((a, rb), (b, ra)):
-            rp = point_on_surface(g)
-            if rp is not None and not rp.is_empty:
-                if points_in_rings_class(
-                    np.array([rp.coords[0, 0]]), np.array([rp.coords[0, 1]]), rings
-                )[0] == INTERIOR:
-                    ii = True
-                    break
-    m[0] = 2 if ii else F
-    m[1] = 1 if (cb == INTERIOR).any() else F
-    m[2] = F if covered_by(a, b) else 2
-    m[3] = 1 if (ca == INTERIOR).any() else F
-    if (ca == BOUNDARY).any():
-        m[4] = 1
-    else:
-        pts = _crossing_touch_points(ea, eb, tol)
-        m[4] = 0 if len(pts) else F
-    m[5] = 1 if (ca == EXTERIOR).any() else F
-    m[6] = F if covers(a, b) else 2
-    m[7] = 1 if (cb == EXTERIOR).any() else F
-    return m
-
-
 def relate(a: Geometry | None, b: Geometry | None) -> str | None:
-    """DE-9IM matrix string for any point/line/polygon combination.
-    reference: shapely/predicates.py:1194."""
+    """DE-9IM matrix string for any pair, collections included (each the
+    union of its members). reference: shapely/predicates.py:1194. Every
+    cell is read from one labelled arrangement (geo/arrangement.py)."""
     if a is None or b is None:
         return None
-    return "".join("F" if v < 0 else str(v) for v in _relate_matrix(a, b))
+    if a.is_empty or b.is_empty:
+        m = np.full((3, 3), -1)
+        m[2, 2] = 2
+        if not b.is_empty:
+            m[2, :2] = _dim(b), _boundary_dim(b)
+        if not a.is_empty:
+            m[:2, 2] = _dim(a), _boundary_dim(a)
+    else:
+        from .arrangement import Arrangement
+
+        m = Arrangement(a, b).matrix()
+    return "".join("F" if v < 0 else str(v) for v in m.ravel())
+
+
+def _matches(matrix: str, pattern: str) -> bool:
+    return all(p == "*" or (m != "F" if p == "T" else m == p)
+               for m, p in zip(matrix, pattern))
 
 
 def relate_pattern(a, b, pattern: str) -> bool:
-    """reference: shapely/predicates.py:1226 — T/F/0/1/2/* matching."""
+    """reference: shapely/predicates.py:1226 — T/F/0/1/2/* matching; the
+    pattern is 9 symbols of TtFf*012 (GEOS raises otherwise)."""
+    from .errors import GEOSException
+
+    if len(pattern) != 9 or any(c not in "TtFf*012" for c in pattern):
+        raise GEOSException(f"IllegalArgumentException: Invalid DE-9IM pattern: {pattern!r}")
     m = relate(a, b)
-    if m is None:
-        return False
-    for got, want in zip(m, pattern):
-        if want == "*":
-            continue
-        if want == "T":
-            if got == "F":
-                return False
-        elif got != want:
-            return False
-    return True
+    return m is not None and _matches(m, pattern.upper())
+
+
+# Named predicates as DE-9IM patterns (reference: shapely/predicates.py);
+# a collection side answers from relate: its members' union has no
+# single-dimension decision logic.
+_PATTERNS = {
+    "contains": ("T*****FF*",),
+    "covers": ("T*****FF*", "*T****FF*", "***T**FF*", "****T*FF*"),
+    "contains_properly": ("T**FF*FF*",),
+    "touches": ("FT*******", "F**T*****", "F***T****"),
+    "equals": ("T*F**FFF*",),
+}
+
+
+def _by_matrix(pred: str, a: Geometry, b: Geometry) -> bool:
+    da, db = _dim(a), _dim(b)
+    if pred == "crosses":
+        pats = (("0********",) if da == db == 1 else () if da == db
+                else ("T*T******",) if da < db else ("T*****T**",))
+    elif pred == "overlaps":
+        pats = () if da != db else ("1*T***T**",) if da == 1 else ("T*T***T**",)
+    else:
+        pats = _PATTERNS[pred]
+    m = relate(a, b)
+    return any(_matches(m, p) for p in pats)
+
+
+def _has_gc(a: Geometry, b: Geometry) -> bool:
+    return GEOMETRYCOLLECTION in (a.type_id, b.type_id)
 
 
 # ---------------------------------------------------------------------------
@@ -1368,11 +1164,22 @@ def is_valid_reason(geom: Geometry | None) -> str | None:
                     return "Hole Lies Outside Shell"
         return "Valid Geometry"
     if geom.type_id in (MULTIPOLYGON, GEOMETRYCOLLECTION):
-        for p in geom.parts or []:
+        parts = [p for p in geom.parts or [] if not p.is_empty]
+        for p in parts:
             r = is_valid_reason(p)
             if r != "Valid Geometry":
                 return r
-        return "Valid Geometry"
+        if geom.type_id == MULTIPOLYGON:
+            # parts may meet at points only: interiors disjoint, and
+            # boundaries sharing no segment
+            from .arrangement import Arrangement
+
+            for i, p in enumerate(parts):
+                for q in parts[i + 1:]:
+                    if not _bbox_disjoint(p, q):
+                        m = Arrangement(p, q).matrix()
+                        if m[0, 0] >= 0 or m[1, 1] >= 1:
+                            return "Self-intersection"
     return "Valid Geometry"
 
 

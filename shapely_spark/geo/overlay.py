@@ -1,30 +1,29 @@
-"""Boolean overlay (set operations) on polygons — pure NumPy.
+"""Boolean overlay (set operations) and planar faces — pure NumPy.
 
 Reference semantics: shapely/set_operations.py:114 intersection, :41
 difference, :247 symmetric_difference, :395 union, :465 union_all. The
 reference delegates to GEOS overlayng; this is an independent
 implementation for the engine (SURVEY.md §2.5): boundary-fragment
-classification + face-left stitching.
+selection + face-left stitching.
 
 Algorithm (polygon × polygon, holes and multi-parts included):
-  1. normalize rings: shells CCW, holes CW → every directed edge has the
-     polygon interior on its LEFT
-  2. node: split every edge of A at its intersections with edges of B (and
-     vice versa), including collinear-overlap endpoints
-  3. classify each fragment midpoint against the OTHER polygon: interior /
-     exterior / boundary (even-odd kernel, kernels.points_in_rings_class);
-     boundary fragments get a left/right offset probe to decide whether the
-     two boundaries run in the same direction ("same transition")
-  4. select fragments per op (standard boundary-algebra rules):
-       intersection: A-frags in int(B) + B-frags in int(A) + shared sameT
-       union:        A-frags in ext(B) + B-frags in ext(A) + shared sameT
-       difference:   A-frags in ext(B) + reversed B-frags in int(A)
-                     + shared frags with opposite transition
-  5. stitch selected fragments into rings by walking most-clockwise turns
+  1. node and label (geo/arrangement.py): rings oriented so every
+     directed edge has its interior on the LEFT, each side's edges
+     split at the other's, each fragment classed in the other polygon
+     (interior / exterior / boundary), a shared boundary fragment also
+     on its left and right;
+  2. select fragments per op (Arrangement.select, the standard
+     boundary-algebra rules), e.g. intersection = A-frags in int(B) +
+     B-frags in int(A) + shared fragments with both interiors on the
+     same side; symmetric_difference is ONE selection over the same
+     arrangement (fragments in the other's interior reversed, shared
+     fragments dropped);
+  3. stitch selected fragments into rings by walking most-clockwise turns
      (face-to-the-left traversal); split pinch nodes; CCW rings are shells,
-     CW rings are holes; assign holes to containing shells
+     CW rings are holes; assign holes to containing shells.
 
-symmetric_difference = difference(A,B) ⊎ difference(B,A) (disjoint faces).
+Line×line and line×polygon ops select line fragments from the same
+arrangement; mixed GeometryCollections overlay per dimension pair.
 """
 
 from __future__ import annotations
@@ -34,6 +33,10 @@ import math
 import numpy as np
 
 from . import kernels as K
+from .arrangement import (
+    Arrangement, _edges_of, _line_edges, _noded,
+    _overlay_tol, _poly_rings_oriented, _split_params,
+)
 from .geom import (
     GEOMETRYCOLLECTION,
     MULTIPOINT,
@@ -46,207 +49,6 @@ from .geom import (
     point,
 )
 from .kernels import BOUNDARY, EXTERIOR, INTERIOR, signed_ring_area
-
-
-# ---------------------------------------------------------------------------
-# ring normalization
-# ---------------------------------------------------------------------------
-
-def _poly_rings_oriented(geom: Geometry) -> list[np.ndarray]:
-    """All rings of a (multi)polygon, shells CCW and holes CW, closed,
-    consecutive duplicate vertices dropped."""
-    out = []
-    if geom.type_id == POLYGON:
-        ring_sets = [geom.rings or []]
-    elif geom.type_id in (MULTIPOLYGON, GEOMETRYCOLLECTION):
-        ring_sets = [p.rings or [] for p in (geom.parts or []) if p.type_id == POLYGON]
-    else:
-        return []
-    for rings in ring_sets:
-        for i, r in enumerate(rings):
-            c = np.asarray(r, dtype=np.float64)[:, :2]
-            if len(c) < 4:
-                continue
-            keep = np.ones(len(c), dtype=bool)
-            keep[1:] = np.any(c[1:] != c[:-1], axis=1)
-            c = c[keep]
-            if len(c) < 4 or np.any(c[0] != c[-1]):
-                if len(c) >= 3 and np.any(c[0] != c[-1]):
-                    c = np.vstack([c, c[:1]])
-                if len(c) < 4:
-                    continue
-            a = signed_ring_area(c)
-            want_ccw = i == 0  # shell first, holes after (geom.py Polygon layout)
-            if (a > 0) != want_ccw and a != 0:
-                c = c[::-1]
-            out.append(c)
-    return out
-
-
-def _edges_of(rings: list[np.ndarray]) -> np.ndarray:
-    """(n,4) directed segments following ring orientation."""
-    if not rings:
-        return np.zeros((0, 4))
-    return np.concatenate(
-        [np.column_stack([c[:-1], c[1:]]) for c in rings], axis=0
-    )
-
-
-# ---------------------------------------------------------------------------
-# noding: split edges at intersections
-# ---------------------------------------------------------------------------
-
-def _split_params(edges: np.ndarray, other: np.ndarray, tol: float) -> list[np.ndarray]:
-    """For each directed edge, sorted parameter values t∈(0,1) where it
-    crosses/touches any edge of `other` (collinear overlaps contribute the
-    projections of the other edge's endpoints)."""
-    n = len(edges)
-    if n == 0 or len(other) == 0:
-        return [np.zeros(0)] * n
-    h, t = _merge_params(*_event_hits(
-        _split_events(edges.T[:, :, None], other.T[:, None, :], tol)))
-    return np.split(t, np.cumsum(np.bincount(h, minlength=n))[:-1])
-
-
-def _inner(a):
-    c = np.clip(a, 0.0, 1.0)
-    return (c > 1e-12) & (c < 1 - 1e-12)
-
-
-def _split_events(e, o, tol):
-    """Noding events of segment e against segment o, elementwise
-    (broadcasting) over the coordinate columns e = (x1, y1, x2, y2) and o,
-    with `tol` a scalar or one per element: ((param, mask), ...) for a
-    crossing or touch at parameter t of e, and for a collinear overlap the
-    projections t3, t4 of o's endpoints. Only parameters strictly inside
-    (0, 1) are marked: endpoint touches and full-span overlaps split
-    nothing."""
-    x1, y1, x2, y2 = e
-    x3, y3, x4, y4 = o
-    dx1, dy1 = x2 - x1, y2 - y1
-    dx2, dy2 = x4 - x3, y4 - y3
-    ex, ey = x3 - x1, y3 - y1
-    denom = dx1 * dy2 - dy1 * dx2
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = (ex * dy2 - ey * dx2) / denom
-        u = (ex * dy1 - ey * dx1) / denom
-    crossing = (np.abs(denom) > tol) & (t >= -tol) & (t <= 1 + tol) & (u >= -tol) & (u <= 1 + tol)
-    # collinear overlap: parallel and other's endpoints on this line
-    par = np.abs(denom) <= tol
-    cross3 = dx1 * (y3 - y1) - dy1 * (x3 - x1)
-    collinear = par & (np.abs(cross3) <= tol * np.maximum(1.0, np.abs(dx1) + np.abs(dy1)))
-    len2 = dx1 * dx1 + dy1 * dy1
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t3 = ((x3 - x1) * dx1 + (y3 - y1) * dy1) / len2
-        t4 = ((x4 - x1) * dx1 + (y4 - y1) * dy1) / len2
-    return ((t, crossing & _inner(t)), (t3, collinear & _inner(t3)),
-            (t4, collinear & _inner(t4)))
-
-
-def _event_hits(events):
-    """(h, t) of every marked event: h its first index (the edge of a
-    dense event matrix, the element of an elementwise one), t its param."""
-    idx = [np.nonzero(m) for _, m in events]
-    return (np.concatenate([i[0] for i in idx]),
-            np.concatenate([p[i] for (p, _), i in zip(events, idx)]))
-
-
-def _merge_params(h, t):
-    """Split params (owner h, param t) sorted by owner then t, exact
-    repeats dropped, and fp-noise twins merged (e.g. a crossing AND a
-    collinear projection of the same touch point differing by ~1e-16):
-    they otherwise yield degenerate fragments whose midpoint sits exactly
-    ON the noding point."""
-    o = np.lexsort((t, h))
-    h, t = h[o], t[o]
-    keep = np.ones(len(h), dtype=bool)
-    keep[1:] = (h[1:] != h[:-1]) | (t[1:] != t[:-1])
-    h, t = h[keep], t[keep]
-    keep = np.ones(len(h), dtype=bool)
-    keep[1:] = (h[1:] != h[:-1]) | (np.diff(t) > 1e-12)
-    return h[keep], t[keep]
-
-
-def _fragments(edges: np.ndarray, params: list[np.ndarray]) -> np.ndarray:
-    """Split each edge at its params → (m,4) fragment segments."""
-    h = np.repeat(np.arange(len(edges)), [len(p) for p in params])
-    t = np.concatenate(params) if len(params) else np.zeros(0)
-    return _edge_fragments(edges, h, t)[0]
-
-
-def _edge_fragments(edges: np.ndarray, h: np.ndarray, t: np.ndarray):
-    """Split edges[i] at its params t[h == i] (h sorted, t sorted per
-    edge) → (fragments (m, 4), source edge of each), zero-length
-    fragments dropped. Endpoint params (0/1) reuse the edge's EXACT
-    vertices: x1 + 1.0·(x2−x1) can be off by an ulp, and an ulp landing
-    on a stitch-key quantization boundary severs the ring walk (r3 fuzz:
-    pentagon∖box came back empty because a reversed fragment end differed
-    from the shared ring vertex by 2e-17 across a bucket edge)."""
-    k = np.bincount(h, minlength=len(edges))
-    src = np.repeat(np.arange(len(edges)), k + 1)
-    edges = np.asarray(edges, dtype=np.float64)
-    fr = edges[src]
-    if len(h):
-        e = edges[h]
-        px = e[:, 0] + t * (e[:, 2] - e[:, 0])
-        py = e[:, 1] + t * (e[:, 3] - e[:, 1])
-        # split j of edge i ends its fragment j and starts fragment j + 1
-        at = (np.cumsum(k + 1) - k - 1)[h] + np.arange(len(h)) - (np.cumsum(k) - k)[h]
-        fr[at, 2], fr[at, 3] = px, py
-        fr[at + 1, 0], fr[at + 1, 1] = px, py
-    dx, dy = fr[:, 2] - fr[:, 0], fr[:, 3] - fr[:, 1]
-    keep = dx * dx + dy * dy > 0
-    return fr[keep], src[keep]
-
-
-# ---------------------------------------------------------------------------
-# classification + selection
-# ---------------------------------------------------------------------------
-
-def _classify(frags: np.ndarray, other_rings: list[np.ndarray], tol: float):
-    """(cls, sameT): midpoint class vs other polygon; for boundary
-    fragments, sameT = other's interior is also on the left."""
-    if len(frags) == 0:
-        return np.zeros(0, dtype=np.int8), np.zeros(0, dtype=bool)
-    mx = (frags[:, 0] + frags[:, 2]) / 2.0
-    my = (frags[:, 1] + frags[:, 3]) / 2.0
-    cls = K.points_in_rings_class(mx, my, other_rings)
-    # exact-boundary detection with tolerance (fp-noded midpoints)
-    segs = _edges_of(other_rings)
-    onb = K.points_on_segments(mx, my, segs, eps=tol)
-    cls = np.where(onb, np.int8(BOUNDARY), cls)
-    sameT = np.zeros(len(frags), dtype=bool)
-    bidx = np.nonzero(cls == BOUNDARY)[0]
-    if len(bidx):
-        dx = frags[bidx, 2] - frags[bidx, 0]
-        dy = frags[bidx, 3] - frags[bidx, 1]
-        ln = np.hypot(dx, dy)
-        ln[ln == 0] = 1.0
-        # left normal, offset by a fraction of fragment length
-        off = np.maximum(ln * 1e-7, tol * 10)
-        nx, ny = -dy / ln * off, dx / ln * off
-        lcls = K.points_in_rings_class(mx[bidx] + nx, my[bidx] + ny, other_rings)
-        rcls = K.points_in_rings_class(mx[bidx] - nx, my[bidx] - ny, other_rings)
-        sameT[bidx] = (lcls == INTERIOR) & (rcls != INTERIOR)
-    return cls, sameT
-
-
-def _select(op: str, a_frags, a_cls, a_sameT, b_frags, b_cls, b_sameT) -> np.ndarray:
-    keep = []
-    if op == "intersection":
-        keep.append(a_frags[(a_cls == INTERIOR) | ((a_cls == BOUNDARY) & a_sameT)])
-        keep.append(b_frags[b_cls == INTERIOR])
-    elif op == "union":
-        keep.append(a_frags[(a_cls == EXTERIOR) | ((a_cls == BOUNDARY) & a_sameT)])
-        keep.append(b_frags[b_cls == EXTERIOR])
-    elif op == "difference":
-        keep.append(a_frags[(a_cls == EXTERIOR) | ((a_cls == BOUNDARY) & ~a_sameT)])
-        rev = b_frags[b_cls == INTERIOR]
-        keep.append(rev[:, [2, 3, 0, 1]])  # reversed: carve as hole boundary
-    else:  # pragma: no cover
-        raise ValueError(op)
-    keep = [k for k in keep if len(k)]
-    return np.concatenate(keep, axis=0) if keep else np.zeros((0, 4))
 
 
 # ---------------------------------------------------------------------------
@@ -398,24 +200,25 @@ def _tolerance(a: Geometry, b: Geometry) -> float:
 
 
 def _is_polygonal(g: Geometry) -> bool:
-    if g.type_id == POLYGON:
-        return True
-    if g.type_id == MULTIPOLYGON:
-        return True
     if g.type_id == GEOMETRYCOLLECTION:
         return all(_is_polygonal(p) for p in (g.parts or []))
-    return False
+    return g.type_id in (POLYGON, MULTIPOLYGON)
 
 
 def _is_pointish(g: Geometry) -> bool:
     return g.type_id in (POINT, MULTIPOINT)
 
 
-def _points_of(g: Geometry) -> np.ndarray:
-    if g.type_id == POINT:
-        return g.coords if g.coords is not None else np.zeros((0, 2))
-    return np.concatenate([p.coords for p in (g.parts or [])], axis=0) if g.parts \
-        else np.zeros((0, 2))
+def _points_on(pc: np.ndarray, g: Geometry) -> np.ndarray:
+    """Is each point of pc on g: in the closure of a polygonal g, on a
+    lineal g within the noding tolerance, equal to a point of a puntal g."""
+    if _is_polygonal(g):
+        return K.points_in_rings_class(pc[:, 0], pc[:, 1], _poly_rings_oriented(g)) >= BOUNDARY
+    if _is_lineal(g):
+        el = _line_edges(g)
+        return K.points_on_segments(pc[:, 0], pc[:, 1], el, eps=_overlay_tol(el))
+    pb = K._points_of(g)
+    return ((pc[:, None, 0] == pb[None, :, 0]) & (pc[:, None, 1] == pb[None, :, 1])).any(axis=1)
 
 
 def _combine_parts(a: Geometry, b: Geometry) -> Geometry:
@@ -441,18 +244,12 @@ def _overlay(a: Geometry, b: Geometry, op: str) -> Geometry:
             return a
         return _combine_parts(a, b)
     tol = _tolerance(a, b)
-    ra, rb = _poly_rings_oriented(a), _poly_rings_oriented(b)
-    if not ra:
+    arr = Arrangement(a, b, tol)
+    if not arr.a.rings:
         return empty(POLYGON) if op in ("intersection", "difference") else b
-    if not rb:
+    if not arr.b.rings:
         return empty(POLYGON) if op == "intersection" else a
-    ea, eb = _edges_of(ra), _edges_of(rb)
-    fa = _fragments(ea, _split_params(ea, eb, tol))
-    fb = _fragments(eb, _split_params(eb, ea, tol))
-    a_cls, a_sameT = _classify(fa, rb, tol)
-    b_cls, b_sameT = _classify(fb, ra, tol)
-    sel = _select(op, fa, a_cls, a_sameT, fb, b_cls, b_sameT)
-    rings = _stitch(sel, max(tol, 1e-11))
+    rings = _stitch(arr.select(op), max(tol, 1e-11))
     return _assemble(rings, max(tol, 1e-11))
 
 
@@ -472,24 +269,6 @@ def _is_lineal(g: Geometry) -> bool:
     return False
 
 
-def _line_edges(g: Geometry) -> np.ndarray:
-    """(n,4) directed segments of all constituent lines."""
-    segs = []
-    for c in g.coord_seqs():
-        c2 = np.asarray(c, dtype=np.float64)[:, :2]
-        if len(c2) >= 2:
-            segs.append(np.column_stack([c2[:-1], c2[1:]]))
-    return np.concatenate(segs, axis=0) if segs else np.zeros((0, 4))
-
-
-def _overlay_tol(*edge_sets) -> float:
-    span = 1.0
-    for e in edge_sets:
-        if len(e):
-            span = max(span, float(np.abs(e).max()))
-    return span * 1e-10
-
-
 def _lines_from_frags(frags: np.ndarray) -> Geometry:
     """Fragment segments → merged (Multi)LineString via line_merge."""
     from .constructive import line_merge
@@ -500,42 +279,6 @@ def _lines_from_frags(frags: np.ndarray) -> Geometry:
     parts = [Geometry(LINESTRING, coords=f.reshape(2, 2)) for f in frags]
     merged = line_merge(Geometry(MULTILINESTRING, parts=parts))
     return merged
-
-
-def _crossing_touch_points(ea: np.ndarray, eb: np.ndarray, tol: float) -> np.ndarray:
-    """0-D intersection candidates between two noded-independent segment
-    sets: proper/endpoint crossings plus endpoint-on-segment touches
-    (covers collinear end-to-end touches, which have no crossing param)."""
-    pts = []
-    if len(ea) and len(eb):
-        x1, y1 = ea[:, 0][:, None], ea[:, 1][:, None]
-        dx1, dy1 = (ea[:, 2] - ea[:, 0])[:, None], (ea[:, 3] - ea[:, 1])[:, None]
-        x3, y3 = eb[:, 0][None, :], eb[:, 1][None, :]
-        dx2, dy2 = (eb[:, 2] - eb[:, 0])[None, :], (eb[:, 3] - eb[:, 1])[None, :]
-        ex, ey = x3 - x1, y3 - y1
-        denom = dx1 * dy2 - dy1 * dx2
-        with np.errstate(divide="ignore", invalid="ignore"):
-            t = (ex * dy2 - ey * dx2) / denom
-            u = (ex * dy1 - ey * dx1) / denom
-        hit = (np.abs(denom) > tol) & (t >= -1e-9) & (t <= 1 + 1e-9) \
-            & (u >= -1e-9) & (u <= 1 + 1e-9)
-        ii, jj = np.nonzero(hit)
-        if len(ii):
-            px = ea[ii, 0] + t[ii, jj] * (ea[ii, 2] - ea[ii, 0])
-            py = ea[ii, 1] + t[ii, jj] * (ea[ii, 3] - ea[ii, 1])
-            pts.append(np.column_stack([px, py]))
-    for src, tgt in ((ea, eb), (eb, ea)):
-        if len(src) and len(tgt):
-            ends = np.concatenate([src[:, :2], src[:, 2:]], axis=0)
-            on = K.points_on_segments(ends[:, 0], ends[:, 1], tgt, eps=tol)
-            if on.any():
-                pts.append(ends[on])
-    if not pts:
-        return np.zeros((0, 2))
-    allp = np.concatenate(pts, axis=0)
-    _, idx = np.unique(np.round(allp / max(tol, 1e-12)).astype(np.int64),
-                       axis=0, return_index=True)
-    return allp[np.sort(idx)]
 
 
 def _points_geom(pts: np.ndarray) -> Geometry:
@@ -573,78 +316,39 @@ def _as_parts(g: Geometry) -> list[Geometry]:
 def _line_line_intersection(a: Geometry, b: Geometry) -> Geometry:
     from .geom import LINESTRING
 
-    ea, eb = _line_edges(a), _line_edges(b)
-    tol = _overlay_tol(ea, eb)
-    fa = _fragments(ea, _split_params(ea, eb, tol))
-    shared = np.zeros((0, 4))
-    if len(fa) and len(eb):
-        mx, my = (fa[:, 0] + fa[:, 2]) / 2.0, (fa[:, 1] + fa[:, 3]) / 2.0
-        on_b = K.points_on_segments(mx, my, eb, eps=tol)
-        shared = fa[on_b]
-    pts = _crossing_touch_points(ea, eb, tol)
+    arr = Arrangement(a, b)
+    shared = arr.fa.frags[arr.fa.loc != EXTERIOR]
+    pts = arr.nodes()
     if len(pts) and len(shared):
-        on_shared = K.points_on_segments(pts[:, 0], pts[:, 1], shared, eps=tol)
-        pts = pts[~on_shared]
+        pts = pts[~K.points_on_segments(pts[:, 0], pts[:, 1], shared, eps=arr.tol)]
     return _mixed_result(_lines_from_frags(shared), pts, LINESTRING)
-
-
-def _line_line_difference(a: Geometry, b: Geometry) -> Geometry:
-    ea, eb = _line_edges(a), _line_edges(b)
-    tol = _overlay_tol(ea, eb)
-    fa = _fragments(ea, _split_params(ea, eb, tol))
-    if len(fa) and len(eb):
-        mx, my = (fa[:, 0] + fa[:, 2]) / 2.0, (fa[:, 1] + fa[:, 3]) / 2.0
-        fa = fa[~K.points_on_segments(mx, my, eb, eps=tol)]
-    return _lines_from_frags(fa)
 
 
 def _line_union(a: Geometry, b: Geometry) -> Geometry:
     """Noded union of the combined linework (GEOS union of lines)."""
     from .geom import MULTILINESTRING
 
-    merged = node(Geometry(GEOMETRYCOLLECTION, parts=[a, b]))
-    out = _lines_from_frags(_line_edges(merged))
+    out = _lines_from_frags(_self_noded([a, b])[0])
     if out.is_empty:
         return Geometry(MULTILINESTRING, parts=[])
     return out
 
 
-def _line_poly_frags(line: Geometry, poly: Geometry, tol: float):
-    """Fragments of `line` noded at the polygon boundary + midpoint class."""
-    el = _line_edges(line)
-    rings = _poly_rings_oriented(poly)
-    ebnd = _edges_of(rings)
-    fa = _fragments(el, _split_params(el, ebnd, tol))
-    if len(fa) == 0:
-        return fa, np.zeros(0, dtype=np.int8), el, ebnd
-    mx, my = (fa[:, 0] + fa[:, 2]) / 2.0, (fa[:, 1] + fa[:, 3]) / 2.0
-    cls = K.points_in_rings_class(mx, my, rings)
-    onb = K.points_on_segments(mx, my, ebnd, eps=tol)
-    cls = np.where(onb, np.int8(BOUNDARY), cls)
-    return fa, cls, el, ebnd
-
-
 def _line_poly_intersection(line: Geometry, poly: Geometry) -> Geometry:
     from .geom import LINESTRING
 
-    el = _line_edges(line)
-    tol = _overlay_tol(el, _edges_of(_poly_rings_oriented(poly)))
-    fa, cls, el, ebnd = _line_poly_frags(line, poly, tol)
-    keep = fa[cls >= BOUNDARY] if len(fa) else fa
-    lines = _lines_from_frags(keep)
+    arr = Arrangement(line, poly)
+    lines = _lines_from_frags(arr.fa.frags[arr.fa.loc != EXTERIOR])
     if not lines.is_empty:
         return lines
     # isolated boundary touches only (no 1-D part)
-    pts = _crossing_touch_points(el, ebnd, tol)
-    return _mixed_result(lines, pts, LINESTRING)
+    return _mixed_result(lines, arr.nodes(), LINESTRING)
 
 
-def _line_poly_difference(line: Geometry, poly: Geometry) -> Geometry:
-    el = _line_edges(line)
-    tol = _overlay_tol(el, _edges_of(_poly_rings_oriented(poly)))
-    fa, cls, _, _ = _line_poly_frags(line, poly, tol)
-    keep = fa[cls == EXTERIOR] if len(fa) else fa
-    return _lines_from_frags(keep)
+def _line_difference(line: Geometry, other: Geometry) -> Geometry:
+    """Line fragments in the exterior of a lineal or areal `other`."""
+    arr = Arrangement(line, other)
+    return _lines_from_frags(arr.fa.frags[arr.fa.loc == EXTERIOR])
 
 
 def _convex_single_ring(g: Geometry) -> np.ndarray | None:
@@ -774,20 +478,27 @@ def _split_dims(g: Geometry | None):
     return P, L, G
 
 
-def _dissolve_mixed(pieces: list[Geometry | None]) -> Geometry:
-    """Combine overlay pieces of mixed dimension into the canonical closed
-    point-set result: polygonal parts unioned, linework noded-unioned then
-    reduced by the polygonal area, points kept only where covered by
-    neither. Output ordered highest dimension first; homogeneous results
-    collapse to a single (multi)geometry like GEOS overlayng."""
-    P, L, G = _split_dims(_collection([p for p in pieces if p is not None]))
-    # _split_dims already dissolved within each dimension group
-    if L is not None and G is not None and not G.is_empty:
+def _canonical_dims(g: Geometry):
+    """(points, lines, polys) of g as one closed point set: each
+    dimension group dissolved (_split_dims), line parts in the area
+    dropped, points on a line or in the area dropped; each None when
+    absent."""
+    P, L, G = _split_dims(g)
+    if L is not None and G is not None and not K._bbox_disjoint(L, G):
         L = difference(L, G)
     if P is not None:
         for higher in (G, L):
-            if higher is not None and not higher.is_empty and not P.is_empty:
+            if higher is not None and not P.is_empty and not K._bbox_disjoint(P, higher):
                 P = difference(P, higher)
+    return P, L, G
+
+
+def _dissolve_mixed(pieces: list[Geometry | None]) -> Geometry:
+    """Combine overlay pieces of mixed dimension into the canonical closed
+    point-set result (_canonical_dims). Output ordered highest dimension
+    first; homogeneous results collapse to a single (multi)geometry like
+    GEOS overlayng."""
+    P, L, G = _canonical_dims(_collection([p for p in pieces if p is not None]))
     present = [g for g in (G, L, P) if g is not None and not g.is_empty]
     if not present:
         return empty(GEOMETRYCOLLECTION)
@@ -886,20 +597,8 @@ def intersection(a: Geometry, b: Geometry, grid_size: float = 0.0) -> Geometry:
         return _gc_overlay(a, b, "intersection")
     if _is_pointish(a) or _is_pointish(b):
         pts_g, other = (a, b) if _is_pointish(a) else (b, a)
-        pc = _points_of(pts_g)
-        if _is_polygonal(other):
-            cls = K.points_in_rings_class(pc[:, 0], pc[:, 1], _poly_rings_oriented(other))
-            keep = pc[cls >= BOUNDARY]
-        elif _is_lineal(other):
-            el = _line_edges(other)
-            tol = _overlay_tol(el)
-            keep = pc[K.points_on_segments(pc[:, 0], pc[:, 1], el, eps=tol)] \
-                if len(pc) and len(el) else np.zeros((0, 2))
-        else:  # point × point
-            pb = _points_of(other)
-            keep = np.array([p for p in pc if (np.abs(pb - p).max(axis=1) < 1e-12).any()]) \
-                if len(pc) and len(pb) else np.zeros((0, 2))
-        return _points_geom(keep)
+        pc = K._points_of(pts_g)
+        return _points_geom(pc[_points_on(pc, other)])
     if _is_polygonal(a) and _is_polygonal(b):
         ra_c = _convex_single_ring(a)
         rb_c = _convex_single_ring(b)
@@ -915,14 +614,11 @@ def intersection(a: Geometry, b: Geometry, grid_size: float = 0.0) -> Geometry:
         # bbox-disjoint pairs can't touch — skip the boundary noding.
         if K._bbox_disjoint(a, b):
             return out if out is not None else empty(POLYGON)
-        from .geom import LINESTRING
+        from .geom import LINESTRING, MULTILINESTRING
 
-        ba = Geometry(GEOMETRYCOLLECTION, parts=[
-            Geometry(LINESTRING, coords=r) for r in _poly_rings_oriented(a)
-        ])
-        bb = Geometry(GEOMETRYCOLLECTION, parts=[
-            Geometry(LINESTRING, coords=r) for r in _poly_rings_oriented(b)
-        ])
+        ba, bb = (Geometry(MULTILINESTRING, parts=[
+            Geometry(LINESTRING, coords=r) for r in _poly_rings_oriented(g)])
+            for g in (a, b))
         deg = _line_line_intersection(ba, bb)
         return deg if not deg.is_empty else out
     if _is_lineal(a) and _is_lineal(b):
@@ -957,15 +653,15 @@ def union(a: Geometry, b: Geometry, grid_size: float = 0.0) -> Geometry:
     if _is_polygonal(a) and _is_polygonal(b):
         return _overlay(a, b, "union")
     if _is_pointish(a) and _is_pointish(b):
-        pts = np.vstack([_points_of(a), _points_of(b)])
+        pts = np.vstack([K._points_of(a), K._points_of(b)])
         pts = np.unique(pts, axis=0)
         return Geometry(MULTIPOINT, parts=[point(x, y) for x, y in pts])
     if _is_lineal(a) and _is_lineal(b):
         return _line_union(a, b)
     if _is_lineal(a) and _is_polygonal(b):
-        return _collection([b, _line_poly_difference(a, b)])
+        return _collection([b, _line_difference(a, b)])
     if _is_polygonal(a) and _is_lineal(b):
-        return _collection([a, _line_poly_difference(b, a)])
+        return _collection([a, _line_difference(b, a)])
     if _is_pointish(a) and not _is_pointish(b):
         return union(b, a)
     if _is_pointish(b):
@@ -995,24 +691,10 @@ def difference(a: Geometry, b: Geometry, grid_size: float = 0.0) -> Geometry:
     if _is_polygonal(a) and _is_polygonal(b):
         return _overlay(a, b, "difference")
     if _is_pointish(a):
-        pc = _points_of(a)
-        if _is_polygonal(b):
-            cls = K.points_in_rings_class(pc[:, 0], pc[:, 1], _poly_rings_oriented(b))
-            keep = pc[cls == EXTERIOR]
-        elif _is_lineal(b):
-            el = _line_edges(b)
-            tol = _overlay_tol(el)
-            keep = pc[~K.points_on_segments(pc[:, 0], pc[:, 1], el, eps=tol)] \
-                if len(pc) and len(el) else pc
-        else:  # point − point
-            pb = _points_of(b)
-            keep = np.array([p for p in pc if not (np.abs(pb - p).max(axis=1) < 1e-12).any()]) \
-                if len(pc) and len(pb) else pc
-        return _points_geom(keep)
-    if _is_lineal(a) and _is_lineal(b):
-        return _line_line_difference(a, b)
-    if _is_lineal(a) and _is_polygonal(b):
-        return _line_poly_difference(a, b)
+        pc = K._points_of(a)
+        return _points_geom(pc[~_points_on(pc, b)])
+    if _is_lineal(a) and (_is_lineal(b) or _is_polygonal(b)):
+        return _line_difference(a, b)
     if _is_polygonal(a) and (_is_lineal(b) or _is_pointish(b)):
         return a  # lower-dimensional subtrahend removes no area
     if _is_lineal(a) and _is_pointish(b):
@@ -1031,33 +713,21 @@ def symmetric_difference(a: Geometry, b: Geometry, grid_size: float = 0.0) -> Ge
         b = set_precision(b, grid_size)
     if a is None or b is None:
         return None
+    if not (_is_hetero(a) or _is_hetero(b)):
+        if a.is_empty or b.is_empty:
+            return b if a.is_empty else a
+        # two areal or two lineal inputs: one selection over one arrangement
+        if _is_polygonal(a) and _is_polygonal(b):
+            return _overlay(a, b, "symmetric_difference")
+        if _is_lineal(a) and _is_lineal(b):
+            arr = Arrangement(a, b)
+            return _lines_from_frags(np.concatenate([
+                arr.fa.frags[arr.fa.loc == EXTERIOR], arr.fb.frags[arr.fb.loc == EXTERIOR]]))
     d1 = difference(a, b)
     d2 = difference(b, a)
     if _is_hetero(a) or _is_hetero(b):
         # (A−B) and (B−A) are disjoint point sets; flatten + canonicalize
         return _dissolve_mixed([d1, d2])
-    if _is_polygonal(a) and _is_polygonal(b):
-        parts = []
-        for d in (d1, d2):
-            if d is None or d.is_empty:
-                continue
-            if d.type_id == POLYGON:
-                parts.append(d)
-            elif d.type_id == MULTIPOLYGON:
-                parts.extend(d.parts or [])
-        if not parts:
-            return empty(POLYGON)
-        if len(parts) == 1:
-            return parts[0]
-        return multipolygon(parts)
-    if _is_lineal(a) and _is_lineal(b):
-        from .geom import LINESTRING, MULTILINESTRING
-
-        segs = [f for d in (d1, d2) if d is not None and not d.is_empty
-                for f in _line_edges(d)]
-        if not segs:
-            return empty(LINESTRING)
-        return _lines_from_frags(np.asarray(segs))
     # mixed dimension: disjoint pieces, grouped as a collection
     return _collection([d1, d2])
 
@@ -1084,25 +754,21 @@ def union_all(geoms) -> Geometry:
 # planar face extraction: polygonize / build_area / make_valid
 # ---------------------------------------------------------------------------
 
-def _face_rings(segments: np.ndarray, tol: float) -> list[np.ndarray]:
-    """Node a soup of undirected segments against itself, emit each as two
-    directed half-edges, and walk faces to the left. Every bounded face
-    comes out exactly once as a CCW ring (the unbounded face walks CW and
-    is dropped by the caller)."""
-    if len(segments) == 0:
-        return []
-    params = _split_params(segments, segments, tol)
-    frags = _fragments(segments, params)
-    # dedupe identical fragments (shared boundaries contribute twice)
+def _self_noded(geoms) -> tuple[np.ndarray, float]:
+    """(fragments, tol): the linework of `geoms` noded against itself,
+    each undirected fragment once (shared boundaries contribute twice)."""
+    segs = [_line_edges(g) for g in geoms if g is not None and not g.is_empty]
+    segments = np.concatenate(segs) if segs else np.zeros((0, 4))
+    tol = _overlay_tol(segments)
+    frags = _noded(segments, segments, tol)[0]
+    if not len(frags):
+        return frags, tol
     key = np.round(frags / max(tol, 1e-12)).astype(np.int64)
     swap = (key[:, 0] > key[:, 2]) | ((key[:, 0] == key[:, 2]) & (key[:, 1] > key[:, 3]))
     a = np.where(swap[:, None], key[:, 2:], key[:, :2])
     b = np.where(swap[:, None], key[:, :2], key[:, 2:])
-    undirected = np.concatenate([a, b], axis=1)
-    _, uniq_idx = np.unique(undirected, axis=0, return_index=True)
-    frags = frags[np.sort(uniq_idx)]
-    both = np.concatenate([frags, frags[:, [2, 3, 0, 1]]], axis=0)
-    return _stitch(both, max(tol, 1e-11))
+    _, uniq = np.unique(np.concatenate([a, b], axis=1), axis=0, return_index=True)
+    return frags[np.sort(uniq)], tol
 
 
 def _ring_strictly_contains(shell: np.ndarray, ring: np.ndarray) -> bool:
@@ -1149,21 +815,14 @@ def polygonize(lines) -> Geometry:
     ops.py:44 polygonize). Returns a GeometryCollection of polygons, like
     the reference's collection output. Nested (non-crossing) rings nest as
     holes of their immediate parent face — two concentric squares yield an
-    annulus face plus the inner face, not two overlapping filled faces."""
-    segs = []
-    for g in lines:
-        if g is None or g.is_empty:
-            continue
-        for c in g.coord_seqs():
-            c2 = np.asarray(c)[:, :2]
-            if len(c2) >= 2:
-                segs.append(np.column_stack([c2[:-1], c2[1:]]))
-    if not segs:
+    annulus face plus the inner face, not two overlapping filled faces.
+    Each noded fragment is walked as two directed half-edges, faces to the
+    left: every bounded face comes out once as a CCW ring (the unbounded
+    face walks CW)."""
+    frags, tol = _self_noded(lines)
+    if not len(frags):
         return empty(GEOMETRYCOLLECTION)
-    segments = np.concatenate(segs, axis=0)
-    span = max(1.0, float(np.abs(segments).max()))
-    tol = span * 1e-10
-    rings = _face_rings(segments, tol)
+    rings = _stitch(np.concatenate([frags, frags[:, [2, 3, 0, 1]]]), max(tol, 1e-11))
     return Geometry(GEOMETRYCOLLECTION, parts=_nest_faces(rings, tol))
 
 
@@ -1198,9 +857,9 @@ def build_area(geom: Geometry) -> Geometry:
             out.append(p)
     if not out:
         return empty(POLYGON)
-    if len(out) == 1:
-        return out[0]
-    return multipolygon(out)
+    # kept faces may share edges (a multipolygon whose parts overlap or
+    # abut): dissolve them, as GEOS BuildArea ends with a union
+    return out[0] if len(out) == 1 else union_all(out)
 
 
 def make_valid(geom: Geometry) -> Geometry:
@@ -1296,33 +955,18 @@ def shared_paths(a: Geometry, b: Geometry) -> Geometry:
     MULTILINESTRING same-direction, MULTILINESTRING opposite)."""
     from .geom import LINESTRING, MULTILINESTRING
 
-    ea = _edges_of([np.asarray(s)[:, :2] for s in a.coord_seqs()])
-    eb = _edges_of([np.asarray(s)[:, :2] for s in b.coord_seqs()])
-    span = max(1.0, float(np.abs(ea).max()) if len(ea) else 1.0)
-    tol = span * 1e-10
-    fa = _fragments(ea, _split_params(ea, eb, tol))
+    arr = Arrangement(a, b)
+    shared = arr.fa.frags[arr.fa.loc != EXTERIOR]
     same, opp = [], []
-    if len(fa) and len(eb):
-        mx = (fa[:, 0] + fa[:, 2]) / 2.0
-        my = (fa[:, 1] + fa[:, 3]) / 2.0
-        onb = K.points_on_segments(mx, my, eb, eps=tol)
-        dxa = fa[:, 2] - fa[:, 0]
-        dya = fa[:, 3] - fa[:, 1]
-        for i in np.nonzero(onb)[0]:
-            # find a collinear b-edge containing the midpoint to compare
-            # direction
-            for j in range(len(eb)):
-                x1, y1, x2, y2 = eb[j]
-                cross = (x2 - x1) * (my[i] - y1) - (y2 - y1) * (mx[i] - x1)
-                within = (
-                    min(x1, x2) - tol <= mx[i] <= max(x1, x2) + tol
-                    and min(y1, y2) - tol <= my[i] <= max(y1, y2) + tol
-                )
-                if abs(cross) <= tol * span and within:
-                    dot = dxa[i] * (x2 - x1) + dya[i] * (y2 - y1)
-                    seg = Geometry(LINESTRING, coords=fa[i].reshape(2, 2))
-                    (same if dot > 0 else opp).append(seg)
-                    break
+    if len(shared):
+        # the direction of b's first edge under each shared fragment's midpoint
+        eb = arr.b.edges
+        mx, my = (shared[:, 0] + shared[:, 2]) / 2.0, (shared[:, 1] + shared[:, 3]) / 2.0
+        j = K._on_segment(mx[:, None], my[:, None], *eb.T[:, None, :], arr.tol).argmax(axis=1)
+        dot = ((shared[:, 2] - shared[:, 0]) * (eb[j, 2] - eb[j, 0])
+               + (shared[:, 3] - shared[:, 1]) * (eb[j, 3] - eb[j, 1]))
+        for f, d in zip(shared, dot):
+            (same if d > 0 else opp).append(Geometry(LINESTRING, coords=f.reshape(2, 2)))
     return Geometry(
         GEOMETRYCOLLECTION,
         parts=[
@@ -1338,25 +982,7 @@ def node(geom: Geometry) -> Geometry:
     shapely/constructive.py:850 GEOSNode)."""
     from .geom import LINESTRING, MULTILINESTRING
 
-    if geom is None or geom.is_empty:
-        return Geometry(MULTILINESTRING, parts=[])
-    segs = []
-    for c in geom.coord_seqs():
-        c2 = np.asarray(c)[:, :2]
-        if len(c2) >= 2:
-            segs.append(np.column_stack([c2[:-1], c2[1:]]))
-    if not segs:
-        return Geometry(MULTILINESTRING, parts=[])
-    segments = np.concatenate(segs, axis=0)
-    span = max(1.0, float(np.abs(segments).max()))
-    tol = span * 1e-10
-    frags = _fragments(segments, _split_params(segments, segments, tol))
-    key = np.round(frags / max(tol, 1e-12)).astype(np.int64)
-    swap = (key[:, 0] > key[:, 2]) | ((key[:, 0] == key[:, 2]) & (key[:, 1] > key[:, 3]))
-    a = np.where(swap[:, None], key[:, 2:], key[:, :2])
-    b = np.where(swap[:, None], key[:, :2], key[:, 2:])
-    _, uniq = np.unique(np.concatenate([a, b], axis=1), axis=0, return_index=True)
-    frags = frags[np.sort(uniq)]
+    frags, _ = _self_noded([geom])
     return Geometry(
         MULTILINESTRING,
         parts=[Geometry(LINESTRING, coords=f.reshape(2, 2)) for f in frags],
@@ -1455,22 +1081,11 @@ def polygonize_full(lines):
     from .geom import LINESTRING, MULTILINESTRING
 
     faces = polygonize(lines)
-    # re-node the input to the same fragment set polygonize used
-    segs = []
-    for g in lines:
-        if g is None or g.is_empty:
-            continue
-        for c in g.coord_seqs():
-            c2 = np.asarray(c)[:, :2]
-            if len(c2) >= 2:
-                segs.append(np.column_stack([c2[:-1], c2[1:]]))
-    if not segs:
+    # the same fragment set polygonize walked
+    frags, tol = _self_noded(lines)
+    if not len(frags):
         return faces, Geometry(MULTILINESTRING, parts=[]), \
             Geometry(MULTILINESTRING, parts=[]), Geometry(MULTILINESTRING, parts=[])
-    segments = np.concatenate(segs, axis=0)
-    span = max(1.0, float(np.abs(segments).max()))
-    tol = span * 1e-10
-    frags = _fragments(segments, _split_params(segments, segments, tol))
 
     def ekey(x1, y1, x2, y2):
         a = (round(x1 / tol), round(y1 / tol))

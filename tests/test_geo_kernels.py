@@ -669,3 +669,80 @@ class TestPolygonRoundBuffer:
         a0 = K.area(g)
         grown = K.area(buffer(g, 0.25))
         assert grown > a0 + 0.25 * 1.9  # at least ~P·d growth on most of ∂
+
+
+class TestArrangementRelate:
+    """relate reads every DE-9IM cell from one labelled arrangement
+    (geo/arrangement.py); a GeometryCollection relates as the union of
+    its members (reference: shapely/predicates.py:1194, GEOS RelateNG:
+    area before line before point at a shared location)."""
+
+    GC = "GEOMETRYCOLLECTION (POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0)), LINESTRING (5 5, 7 5))"
+
+    def test_mixed_collection_matrices(self):
+        from shapely_spark.geo import from_wkt
+
+        gc, pt = from_wkt(self.GC), from_wkt("POINT (6 5)")
+        assert K.relate(gc, pt) == "0F2FF1FF2"
+        assert K.relate(pt, gc) == "0FFFFF212"
+        # a point member on the polygon member's boundary adds nothing
+        on_bnd = from_wkt("GEOMETRYCOLLECTION (POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0)),"
+                          " POINT (2 1))")
+        assert K.relate(on_bnd, from_wkt("POINT (2 1)")) == "FF20F1FF2"
+        assert K.relate(on_bnd, from_wkt(
+            "POLYGON ((2 0, 4 0, 4 2, 2 2, 2 0))")) == "FF2F11212"
+        # a line member crossing the polygon member: inside the area it is
+        # area interior, where it crosses the ring it is area boundary
+        cross = from_wkt("GEOMETRYCOLLECTION (POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0)),"
+                         " LINESTRING (1 1, 3 1))")
+        assert K.relate(cross, from_wkt("POINT (2 1)")) == "FF20F1FF2"
+        assert K.relate(cross, from_wkt("POINT (2.5 1)")) == "0F2FF1FF2"
+        assert K.relate(cross, from_wkt("LINESTRING (3 0, 3 2)")) == "FF20F1102"
+
+    def test_named_predicates_on_collections(self):
+        from shapely_spark.geo import from_wkt
+
+        gc, pt = from_wkt(self.GC), from_wkt("POINT (6 5)")
+        assert K.contains(gc, pt) and K.covers(gc, pt)
+        assert K.within(pt, gc) and K.covered_by(pt, gc)
+        assert not K.contains_properly(gc, from_wkt("POINT (5 5)"))
+        assert K.touches(gc, from_wkt("POINT (5 5)"))
+        assert K.contains_xy(gc, [6.0, 1.0, 9.0], [5.0, 1.0, 9.0]).tolist() == [True, True, False]
+
+    def test_points_compare_exactly(self):
+        from shapely_spark.geo.overlay import intersection
+
+        a, b = point(0, 0), point(1e-13, 0)
+        assert K.relate(a, b) == "FF0FFF0F2"
+        assert not K.intersects(a, b) and not K.equals(a, b)
+        assert intersection(a, b).is_empty
+        assert K.relate(a, point(0, 0)) == "0FFFFFFF2"
+
+    def test_relate_pattern_validates(self):
+        from shapely_spark.geo.errors import GEOSException
+
+        a, b = box(0, 0, 2, 2), box(1, 1, 3, 3)
+        for bad in ("", "F", "FFxxxxxxx", "T*T***T***"):
+            with pytest.raises(GEOSException):
+                K.relate_pattern(a, b, bad)
+        assert K.relate_pattern(a, b, "t*t***t**")
+        assert not K.relate_pattern(a, b, "ff*ff****")
+
+    def test_multipolygon_parts_meet_at_points_only(self):
+        from shapely_spark.geo import from_wkt
+        from shapely_spark.geo.overlay import make_valid
+
+        shared_edge = from_wkt("MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)),"
+                               " ((1 0, 2 0, 2 1, 1 1, 1 0)))")
+        overlapping = from_wkt("MULTIPOLYGON (((0 0, 2 0, 2 2, 0 2, 0 0)),"
+                               " ((1 1, 3 1, 3 3, 1 3, 1 1)))")
+        corner = from_wkt("MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)),"
+                          " ((1 1, 2 1, 2 2, 1 2, 1 1)))")
+        assert K.is_valid_reason(shared_edge) == "Self-intersection"
+        assert K.is_valid_reason(overlapping) == "Self-intersection"
+        assert K.is_valid(corner)
+        # make_valid rebuilds them as one dissolved area
+        for g, want in ((shared_edge, 2.0), (overlapping, 7.0)):
+            fixed = make_valid(g)
+            assert K.is_valid(fixed) and abs(K.area(fixed) - want) < 1e-12
+        assert make_valid(corner) is corner

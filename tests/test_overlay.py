@@ -13,7 +13,7 @@ from shapely_spark.geo import constructive as C
 from shapely_spark.geo import kernels as K
 from shapely_spark.geo import overlay as O
 from shapely_spark.geo.geom import MULTILINESTRING
-from shapely_spark.geo.geom import MULTIPOLYGON, POLYGON, Geometry, box, point, polygon
+from shapely_spark.geo.geom import MULTIPOLYGON, POLYGON, Geometry, box, linestring, point, polygon
 
 
 def A(g):
@@ -34,6 +34,20 @@ class TestOverlayKernel:
         assert A(O.union(a, a)) == pytest.approx(4.0)
         assert O.difference(a, a).is_empty
         assert O.symmetric_difference(a, a).is_empty
+
+    def test_symmetric_difference_is_one_selection(self):
+        """Edge-adjacent boxes: their shared edge bounds no part of the
+        symmetric difference, so the result is ONE polygon (GEOS), not two
+        parts sharing an edge; a nested box becomes a hole."""
+        sd = O.symmetric_difference(box(0, 0, 1, 1), box(1, 0, 2, 1))
+        assert sd.type_id == POLYGON and K.is_valid(sd)
+        assert A(sd) == pytest.approx(2.0)
+        ring = O.symmetric_difference(box(0, 0, 4, 4), box(1, 1, 2, 2))
+        assert ring.type_id == POLYGON and len(ring.rings) == 2
+        assert A(ring) == pytest.approx(15.0)
+        lines = O.symmetric_difference(linestring([(0, 0), (3, 0)]),
+                                       linestring([(1, 0), (5, 0)]))
+        assert K.length(lines) == pytest.approx(3.0)
 
     def test_disjoint(self):
         a, c = box(0, 0, 2, 2), box(10, 10, 11, 11)

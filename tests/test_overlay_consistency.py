@@ -3,10 +3,13 @@ relate kernels (reference semantics: shapely/set_operations.py — the four
 overlays must satisfy inclusion-exclusion on area, and a positive-area
 intersection must agree with relate's interior∩interior == 2).
 
-Overlay (noded-fragment selection, geo/overlay.py) and relate
-(classification kernels) are INDEPENDENT paths over the same geometry
-zoo as tests/test_predicate_consistency.py, so the invariants below are
-a self-contained oracle: no external engine needed."""
+Overlay (fragment selection + stitching, geo/overlay.py) and relate
+(the DE-9IM read-out) both start from the labelled arrangement of
+geo/arrangement.py, but areas come from stitched rings and the shoelace
+measure, and convex pairs intersect by half-plane clipping without any
+arrangement, so the invariants below over the same geometry zoo as
+tests/test_predicate_consistency.py still cross-check the selection
+rules against the matrix rules: no external engine needed."""
 
 import numpy as np
 from hypothesis import given, settings, strategies as st

@@ -4,12 +4,19 @@ named predicate must agree with its DE-9IM pattern, relate(a,b) must be
 the transpose of relate(b,a), and the standard implication lattice
 contains ⇒ covers ⇒ intersects must hold).
 
-The named predicates (kernels.intersects/contains/touches/...) and the
-general relate matrix (kernels._relate_matrix) are INDEPENDENT code
-paths, so agreement between them over a fuzzed geometry zoo is a strong
-internal-consistency oracle that needs no external engine. Coordinates
-snap to a half-unit grid on purpose: shared edges, corner contacts and
-collinear overlaps are where predicate semantics diverge."""
+For point, line and polygon inputs (and their multis) the named
+predicates (kernels.intersects/contains/touches/...) decide with their
+own logic — vertex classes, witnesses, hole probes — and share with
+relate only the noding and fragment labelling primitives of
+geo/arrangement.py; relate reads every cell from the general labelled
+arrangement. Agreement between the two over a fuzzed geometry zoo is a
+strong internal-consistency oracle that needs no external engine. A
+GeometryCollection side is the exception: there every named predicate
+except intersects answers FROM relate, so for collections the checks
+below pin intersects (member by member) against relate, and relate's
+transpose symmetry and the implication lattice. Coordinates snap to a
+half-unit grid on purpose: shared edges, corner contacts and collinear
+overlaps are where predicate semantics diverge."""
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
@@ -17,6 +24,7 @@ from hypothesis import given, settings, strategies as st
 from shapely_spark.geo import kernels as K
 from shapely_spark.geo.geom import (
     box,
+    geometrycollection,
     linestring,
     multilinestring,
     multipoint,
@@ -33,9 +41,25 @@ coord = st.integers(min_value=-6, max_value=6).map(lambda v: v * 0.5)
 def geoms(draw):
     kind = draw(st.sampled_from(
         ["point", "segment", "polyline", "box", "holed_box", "ngon", "multipoint",
-         "multiline", "multipolygon", "rot_ngon", "touch_multipolygon"]
+         "multiline", "multipolygon", "rot_ngon", "touch_multipolygon",
+         "gc_poly_line", "gc_poly_point", "gc_line_point", "gc_nested"]
     ))
     x, y = draw(coord), draw(coord)
+    if kind.startswith("gc_"):
+        # mixed collections whose members do not meet: a box, a segment
+        # starting right of it, a point left of both
+        w = draw(st.integers(1, 3)) * 0.5
+        poly = box(x, y, x + w, y + w)
+        x2 = x + w + 0.5
+        line = linestring([(x2, y), (x2 + draw(st.integers(1, 4)) * 0.5, draw(coord))])
+        pt = point(x - 0.5, draw(coord))
+        if kind == "gc_poly_line":
+            return geometrycollection([poly, line])
+        if kind == "gc_poly_point":
+            return geometrycollection([poly, pt])
+        if kind == "gc_line_point":
+            return geometrycollection([line, pt])
+        return geometrycollection([geometrycollection([poly, pt]), line])
     if kind == "point":
         return point(x, y)
     if kind == "segment":

@@ -636,6 +636,33 @@ def test_intersects_mixed_geometrycollection_every_path(spark):
 
 
 @pytest.mark.parametrize("broadcast", [True, False])
+def test_contains_mixed_geometrycollection_every_path(spark, broadcast):
+    """A GeometryCollection contains a point on its line member: the
+    scalar kernels (contains, covers, within reversed), contains_xy, SQL
+    st_contains and the geometry join all answer from the collection's
+    DE-9IM matrix, its members' union."""
+    from shapely_spark.geo import from_wkt
+    from shapely_spark.geo import kernels as K
+    from shapely_spark.geo.group_predicates import group_predicate
+    from shapely_spark.spark.geometry_cols import register_sql_functions
+
+    wkt = ("GEOMETRYCOLLECTION (POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0)), "
+           "LINESTRING (5 5, 7 5))")
+    gc, pt = from_wkt(wkt), from_wkt("POINT (6 5)")
+    assert K.contains(gc, pt) and K.covers(gc, pt) and K.within(pt, gc)
+    assert group_predicate("contains", [gc], pt).tolist() == [True]
+    assert group_predicate("within", [pt], gc).tolist() == [True]
+    assert K.contains_xy(gc, 6, 5).tolist() == [True]
+    register_sql_functions(spark)
+    row = spark.createDataFrame([(wkt, "POINT (6 5)")], "a string, b string").selectExpr(
+        "st_contains(st_geomfromtext(a), st_geomfromtext(b)) AS c").first()
+    assert row.c is True
+    far = from_wkt("POINT (6 6)")
+    assert _geom_join_pairs(spark, [gc, far], [pt], "contains", broadcast) == {(0, 0)}
+    assert _geom_join_pairs(spark, [pt, far], [gc], "within", broadcast) == {(0, 0)}
+
+
+@pytest.mark.parametrize("broadcast", [True, False])
 def test_geom_join_starts_no_job_until_an_action(spark, broadcast):
     """Building the geometry-join plan runs nothing: the right layer's
     geometry joins in-plan on its id, so no driver collect starts a Spark
