@@ -35,6 +35,9 @@ labelling (``label``) and the side probe.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from contextvars import ContextVar
+
 import numpy as np
 
 from .geom import (
@@ -299,6 +302,34 @@ def _near(x, y, pts: np.ndarray, eps: float) -> np.ndarray:
             & (np.abs(y[:, None] - pts[None, :, 1]) <= eps)).any(axis=1)
 
 
+# id(geometry) -> (geometry, its _Side) inside a shared_sides() block
+_SIDES: ContextVar[dict | None] = ContextVar("_SIDES", default=None)
+
+
+@contextmanager
+def shared_sides():
+    """Within the block, every Arrangement of one geometry object reuses
+    one _Side of it. A GeometryCollection's canonical form (union_all,
+    node + line_merge, a difference per dimension pair) and any input's
+    oriented rings and linework are then built once per geometry, not
+    once per pair. The geometries must not change inside the block."""
+    token = _SIDES.set({})
+    try:
+        yield
+    finally:
+        _SIDES.reset(token)
+
+
+def _side(g: Geometry) -> "_Side":
+    memo = _SIDES.get()
+    if memo is None:
+        return _Side(g)
+    hit = memo.get(id(g))
+    if hit is None or hit[0] is not g:  # the stored object pins its id
+        hit = memo[id(g)] = (g, _Side(g))
+    return hit[1]
+
+
 class _Side:
     """One input as the union of its members: oriented rings, linework
     (ring edges first, then line edges), line boundary points, points."""
@@ -408,7 +439,7 @@ class Arrangement:
     __slots__ = ("a", "b", "tol", "fa", "_fb")
 
     def __init__(self, a: Geometry, b: Geometry, tol: float | None = None):
-        self.a, self.b = _Side(a), _Side(b)
+        self.a, self.b = _side(a), _side(b)
         self.tol = _overlay_tol(self.a.edges, self.b.edges) if tol is None else tol
         self.fa = _Labels(self.a, self.b, self.tol)
         self._fb = None

@@ -63,7 +63,9 @@ from .kernels import (
     _edges, _expand, _hole_rings, _holes_clear_of, _owner_segments, _points_of,
     _ragged, _ragged_bounds, _segments_meet,
 )
-from .arrangement import _edge_fragments, _event_hits, _merge_params, _split_events
+from .arrangement import (
+    _edge_fragments, _event_hits, _merge_params, _split_events, shared_sides,
+)
 
 _SUPPORTED = {
     "intersects", "within", "covered_by", "touches", "overlaps", "crosses",
@@ -396,8 +398,9 @@ def pair_predicate(predicate: str, lgeoms: list, rgeoms: list, li, ri) -> np.nda
         swap = live & (da == 2) & (db < 2)
         batched = live & ((db == 2) | swap)
     fn = getattr(K, predicate)
-    for k in np.flatnonzero((da >= 0) & (db >= 0) & ~batched):
-        out[k] = fn(pool.geoms[a[k]], pool.geoms[b[k]])
+    with shared_sides():  # each geometry's relate side built once per call
+        for k in np.flatnonzero((da >= 0) & (db >= 0) & ~batched):
+            out[k] = fn(pool.geoms[a[k]], pool.geoms[b[k]])
     A, B = np.where(swap, b, a), np.where(swap, a, b)
     conv = _CONVERSE.get(predicate, predicate)
     groups = {predicate: batched & ~swap}

@@ -325,6 +325,11 @@ class RaggedPolygonLayer:
                  "bnd_start", "bnd_seg")
 
     def __init__(self, geoms_by_id: dict[int, "Geometry"]):
+        """Owner ids index the layer's arrays: each must be >= 0, and ids
+        missing below the largest are owners without segments."""
+        if geoms_by_id and min(geoms_by_id) < 0:
+            raise ValueError(f"RaggedPolygonLayer owner ids must be >= 0, "
+                             f"got {min(geoms_by_id)}")
         n = (max(geoms_by_id) + 1) if geoms_by_id else 0
         segs = [(_NO_SEGS, _NO_SEGS)] * n
         for rid, g in geoms_by_id.items():

@@ -20,24 +20,28 @@ from ..index.cells import DEFAULT_RES, grid_n
 EARTH_RADIUS_KM = 6371.0088
 
 
-def cell_col(lat: str, lon: str, res: int = DEFAULT_RES) -> Column:
-    """Cell id as a pure Catalyst expression. Mirrors
+def cell_sql(lat: str, lon: str, res: int = DEFAULT_RES) -> str:
+    """Cell id as one Spark SQL expression string. Mirrors
     shapely_spark.index.cells.cell_of (and its SQL twin sql_cell_expr)
     exactly, including the -1 NULL-island convention for NULL/NaN coords.
 
     lat, lon: SQL expressions over the frame, e.g. a column name
     (backquoted if it is not a plain identifier) or
-    ``greatest(__ly, __ry)``. The whole expression is ONE SQL string
-    parsed JVM-side (0.5 ms) instead of a py4j Column chain (~0.1 s per
-    call). Double literals carry the D suffix: a bare 180.0 is a DECIMAL
-    in Spark SQL."""
+    ``greatest(__ly, __ry)``. Double literals carry the D suffix: a bare
+    180.0 is a DECIMAL in Spark SQL."""
     n = grid_n(res)
     lat, lon = f"({lat})", f"({lon})"
     ix = f"least({n - 1}, greatest(0, floor(({lon} + 180.0D) / 360.0D * {n})))"
     iy = f"least({n - 1}, greatest(0, floor(({lat} + 90.0D) / 180.0D * {n})))"
     bad = f"{lat} IS NULL OR {lon} IS NULL OR isnan({lat}) OR isnan({lon})"
-    return F.expr(f"CASE WHEN {bad} THEN CAST(-1 AS BIGINT)"
-                  f" ELSE CAST({iy} * {n} + {ix} AS BIGINT) END")
+    return (f"CASE WHEN {bad} THEN CAST(-1 AS BIGINT)"
+            f" ELSE CAST({iy} * {n} + {ix} AS BIGINT) END")
+
+
+def cell_col(lat: str, lon: str, res: int = DEFAULT_RES) -> Column:
+    """cell_sql as a Catalyst Column: ONE SQL string parsed JVM-side
+    (0.5 ms) instead of a py4j Column chain (~0.1 s per call)."""
+    return F.expr(cell_sql(lat, lon, res))
 
 
 def cell_parent_col(cell: Column, res: int = DEFAULT_RES,

@@ -42,6 +42,7 @@ collected to the driver, so building the plan starts no Spark job.
 
 from __future__ import annotations
 
+import weakref
 from typing import Iterator
 
 import numpy as np
@@ -50,7 +51,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.cells import DEFAULT_RES, cover_bbox_batch, polygon_cover_batch
-from .columns import cell_col
+from .columns import cell_col, cell_sql
 
 # Map engine predicates (evaluated as predicate(point, region), matching
 # STRtree.query(points, predicate)) to the point-classification test:
@@ -287,6 +288,25 @@ def _rect_pred_col(predicate: str):
     return F.expr(_RECT_PRED_SQL[predicate])
 
 
+# SparkContext -> {predicate: refine pandas UDF}: a UDF pickles its function
+# and creates a JVM UserDefinedPythonFunction on first use, so each call
+# reuses one. That JVM object belongs to one context (and its JVM), so a
+# UDF serves only the context it was made for; a stopped context's entry
+# goes with the context.
+_REFINE_UDFS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _refine_udf(sc, predicate: str):
+    udfs = _REFINE_UDFS.setdefault(sc, {})
+    if predicate not in udfs:
+        @F.pandas_udf("boolean")
+        def refine(lwkb: pd.Series, rwkb: pd.Series) -> pd.Series:
+            return pd.Series(_pair_refine_batch(predicate, lwkb, rwkb))
+
+        udfs[predicate] = refine
+    return udfs[predicate]
+
+
 # predicates spatial_join_geom supports: every one implies the pair shares
 # a point (or, for touches/equals/overlaps, overlapping bboxes), so the
 # JVM bbox-overlap prefilter below is semantics-preserving. `disjoint` is
@@ -395,18 +415,14 @@ def spatial_join_geom(
     if broadcast:
         rcov, rgeo = F.broadcast(rcov), F.broadcast(rgeo)
 
-    j = lcov.join(rcov, F.col("__lc") == F.col("__rc"), "inner")
-    # emit each candidate pair exactly once: in the cell holding the
-    # lower-left corner of the bbox intersection
-    j = j.where(F.col("__lc") == cell_col(
-        "greatest(__ly, __ry)", "greatest(__lx, __rx)", res))
-    # JVM bbox-overlap prefilter: bbox-disjoint candidates are False under
-    # every supported predicate — they never reach the Python refine
-    j = j.where(F.expr(_BBOX_CLOSED)).join(rgeo, right_id, "inner")
-
-    @F.pandas_udf("boolean")
-    def refine(lwkb: pd.Series, rwkb: pd.Series) -> pd.Series:
-        return pd.Series(_pair_refine_batch(predicate, lwkb, rwkb))
+    # one join condition: the cell equi-key, then emit each candidate pair
+    # exactly once (in the cell holding the lower-left corner of the bbox
+    # intersection), then the JVM bbox-overlap prefilter: bbox-disjoint
+    # candidates are False under every supported predicate, so they never
+    # reach the Python refine
+    owner = cell_sql("greatest(__ly, __ry)", "greatest(__lx, __rx)", res)
+    j = lcov.join(rcov, F.expr(f"__lc = __rc AND __lc = {owner} AND {_BBOX_CLOSED}"),
+                  "inner").join(rgeo, right_id, "inner")
 
     # rect×rect rows are decided by pure-JVM interval arithmetic and ship
     # NULL into the refine UDF (no geometry bytes over Arrow, no kernel
@@ -415,9 +431,13 @@ def spatial_join_geom(
     # the whole cover fan-out per branch, which at 100 TB doubles the
     # dominant cost (measured 6.6 s → 3.7 s on the all-non-rect n-gon
     # battery query, and strictly less work for mixed layers).
-    both_rect = F.col("__lrect") & F.col("__rrect")
-    py_call = refine(F.when(~both_rect, F.col("__lwkb")),
-                     F.when(~both_rect, F.col("__rwkb")))
+    both_rect = "__lrect AND __rrect"
+    py_call = _refine_udf(left.sparkSession.sparkContext, predicate)(
+        F.expr(f"IF({both_rect}, NULL, __lwkb)"), F.expr(f"IF({both_rect}, NULL, __rwkb)"))
+    # an OR, not a CASE: Catalyst copies its JVM-only half into the cell
+    # join's condition, so rect×rect pairs the closed form rejects are
+    # dropped before the Python node
     return j.where(
-        (both_rect & _rect_pred_col(predicate)) | (~both_rect & py_call)
+        (F.expr(both_rect) & _rect_pred_col(predicate))
+        | (F.expr(f"NOT ({both_rect})") & py_call)
     ).select(left_id, right_id)

@@ -4,13 +4,41 @@ Tuned for correctness-first local runs that mirror cluster behavior:
 AQE on (skew-join splitting + partition coalescing — the runtime half of
 the engine's hot-cell skew strategy), Arrow on (every kernel crosses the
 JVM→Python boundary as Arrow batches), UTC timestamps.
+
+The JVM talks to the Python worker daemon, the accumulator server and the
+driver's data servers over Unix domain sockets, not loopback TCP. Over
+TCP every Python task stalled ~40 ms (the length of Linux's minimum
+delayed-ACK timeout) before its first Arrow batch. An identity ``mapInPandas`` task of 1,000 rows ran a median 55-57 ms on
+TCP against 20 ms on a socket file (local[4], 4-core host). The
+socket files live in one short private directory per driver process
+(``_socket_dir``), so their paths fit ``sun_path`` wherever the checkout
+or ``TMPDIR`` is.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+
+@functools.cache
+def _socket_dir() -> str:
+    """The directory of this process's Spark socket files: private (0700)
+    and removed at exit. Spark names each socket ``<dir>/.<uuid4>.sock``,
+    the directory plus 43 bytes, and ``sun_path`` holds at most 107; the
+    default directory, ``java.io.tmpdir``, can be longer than 64 bytes
+    (a per-run directory inside the checkout), and SparkContext then fails
+    at start with ``OSError: AF_UNIX path too long``. Under /tmp the
+    socket path is 66 bytes whatever TMPDIR is. Spark removes the socket
+    files themselves when the context stops."""
+    d = tempfile.mkdtemp(prefix="spark-uds-", dir="/tmp")
+    atexit.register(shutil.rmtree, d, True)
+    return d
 
 
 def get_spark(
@@ -63,6 +91,11 @@ def get_spark(
         # scales WITH parallelism and caps scaling efficiency.
         .config("spark.python.daemon.module", "shapely_spark.spark.daemon")
         .config("spark.executorEnv.PYTHONPATH", worker_pp)
+        # socket files instead of loopback TCP between the JVM and Python:
+        # removes a ~40 ms delayed-ACK stall from every Python task (module
+        # docstring); the short directory keeps each path inside sun_path
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", _socket_dir())
     )
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -331,6 +331,25 @@ def test_pair_predicate_fuzz(lefts, rights):
     _check_pairs(lefts, rights)
 
 
+def test_pair_predicate_canonicalises_each_collection_once(monkeypatch):
+    """Pairs with a GeometryCollection side run the scalar kernel, which
+    relates the collection as its canonical form: one pair_predicate call
+    builds that form once per distinct collection, not once per pair, and
+    the answers stay the scalar ones."""
+    import shapely_spark.geo.overlay as ov
+
+    built = []
+    canonical = ov._canonical_dims
+    monkeypatch.setattr(ov, "_canonical_dims", lambda g: built.append(g) or canonical(g))
+    gc = geometrycollection([_box(0, 0, 2, 2), _line([(3, 0), (5, 1)])])
+    rights = [_point(1, 1), _point(4, 0.5), _box(0.5, 0.5, 1, 1), _box(5, 5, 6, 6)]
+    for pred in ("covers", "touches"):
+        built.clear()
+        got = pair_predicate(pred, [gc], rights, np.zeros(4, dtype=np.int64), np.arange(4))
+        assert len(built) == 1, pred
+        assert got.tolist() == [bool(getattr(K, pred)(gc, r)) for r in rights], pred
+
+
 def test_areal_lineal_pairs_reach_no_scalar_kernel(monkeypatch):
     """line_crosses-shaped pairs (areal left, lineal right) and their
     converse shapes ride the batched path by role swap: with every scalar

@@ -821,6 +821,16 @@ def test_ragged_layer_empty_classifies_exterior():
         == [EXTERIOR, EXTERIOR]
 
 
+def test_ragged_layer_rejects_negative_owner_id():
+    """A negative id would index the owner list from its end and overwrite
+    a real owner's segments: owner 0 read (0.5, 0.5) as EXTERIOR."""
+    from shapely_spark.geo.geom import box
+    from shapely_spark.geo.kernels import RaggedPolygonLayer
+
+    with pytest.raises(ValueError, match="owner ids must be >= 0"):
+        RaggedPolygonLayer({0: box(0, 0, 1, 1), -1: box(10, 10, 11, 11)})
+
+
 @pytest.mark.parametrize("ids", [[-1, 0, 5, 2 ** 40], [-7, -2]])
 def test_spatial_join_region_ids_of_any_value(spark, ids):
     """Both spatial_join modes give the same (point, region) pairs

@@ -57,7 +57,11 @@ def _ensure_importable() -> None:
 
 def build_session(app: str, shuffle_partitions: int | None):
     """Session config mirrors shapely_spark.spark.session.get_spark but
-    leaves the master to spark-submit."""
+    leaves the master to spark-submit. It does not copy get_spark's Unix
+    domain socket transport: that setting names a driver-local socket
+    directory, which does not exist on a cluster's executors, and the
+    transport is unmeasured on a cluster. Here the JVM and its Python
+    workers talk over loopback TCP, as stock Spark does."""
     from pyspark.sql import SparkSession
 
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
