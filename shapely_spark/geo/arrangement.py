@@ -144,30 +144,44 @@ def _split_events(e, o, tol):
     """Noding events of segment e against segment o, elementwise
     (broadcasting) over the coordinate columns e = (x1, y1, x2, y2) and o,
     with `tol` a scalar or one per element: ((param, mask), ...) for a
-    crossing or touch at parameter t of e, and for a collinear overlap the
-    projections t3, t4 of o's endpoints. Only parameters strictly inside
-    (0, 1) are marked: endpoint touches and full-span overlaps split
-    nothing."""
+    proper crossing at parameter t of e, and for each endpoint of o lying
+    on e (a touch, or a collinear overlap) its projection t3 or t4. Only
+    parameters strictly inside (0, 1) are marked: endpoint touches and
+    full-span overlaps split nothing.
+
+    "On" is the collinear rule |cross| <= tol·max(1, |d|₁) against the
+    other segment's direction d. Two non-parallel segments meet once, so
+    where an endpoint of either is on the other, that endpoint is where
+    they meet and the line-line solve is dropped: its error grows as
+    1/denom, and two near-parallel edges into one shared vertex solve to
+    a point ~1e-8 short of it, which would split one side only. An
+    endpoint of o splits e wherever it is on e, parallel or not: two
+    near-collinear edges from one shared vertex, the shorter ending on
+    the longer within tol but |denom| > tol, must split the longer at
+    that end."""
     x1, y1, x2, y2 = e
     x3, y3, x4, y4 = o
     dx1, dy1 = x2 - x1, y2 - y1
     dx2, dy2 = x4 - x3, y4 - y3
     ex, ey = x3 - x1, y3 - y1
     denom = dx1 * dy2 - dy1 * dx2
+    tn = ex * dy2 - ey * dx2  # cross of o with p1 - p3; with p2: tn - denom
+    un = ex * dy1 - ey * dx1  # cross of e with p3 - p1, negated; p4: denom - un
     with np.errstate(divide="ignore", invalid="ignore"):
-        t = (ex * dy2 - ey * dx2) / denom
-        u = (ex * dy1 - ey * dx1) / denom
+        t = tn / denom
+        u = un / denom
     crossing = (np.abs(denom) > tol) & (t >= -tol) & (t <= 1 + tol) & (u >= -tol) & (u <= 1 + tol)
-    # collinear overlap: parallel and other's endpoints on this line
-    par = np.abs(denom) <= tol
-    cross3 = dx1 * (y3 - y1) - dy1 * (x3 - x1)
-    collinear = par & (np.abs(cross3) <= tol * np.maximum(1.0, np.abs(dx1) + np.abs(dy1)))
+    tol_e = tol * np.maximum(1.0, np.abs(dx1) + np.abs(dy1))
+    tol_o = tol * np.maximum(1.0, np.abs(dx2) + np.abs(dy2))
+    on3 = np.abs(un) <= tol_e
+    on4 = np.abs(denom - un) <= tol_e
+    ends_on = on3 | on4 | (np.abs(tn) <= tol_o) | (np.abs(tn - denom) <= tol_o)
     len2 = dx1 * dx1 + dy1 * dy1
     with np.errstate(divide="ignore", invalid="ignore"):
-        t3 = ((x3 - x1) * dx1 + (y3 - y1) * dy1) / len2
+        t3 = (ex * dx1 + ey * dy1) / len2
         t4 = ((x4 - x1) * dx1 + (y4 - y1) * dy1) / len2
-    return ((t, crossing & _inner(t)), (t3, collinear & _inner(t3)),
-            (t4, collinear & _inner(t4)))
+    return ((t, crossing & ~ends_on & _inner(t)), (t3, on3 & _inner(t3)),
+            (t4, on4 & _inner(t4)))
 
 
 def _event_hits(events):

@@ -952,262 +952,6 @@ def ngram_jaccard_pairs(spark, sf_dir):
     )
 
 
-# ---- embeddings / similarity search -----------------------------------------
-
-@q(
-    "ann_cosine_top1",
-    """
-    WITH e AS (SELECT vec_id, embedding FROM embeddings),
-    c AS (SELECT q.vec_id, e.vec_id AS target_id,
-                 list_cosine_similarity(q.embedding, e.embedding) AS s
-          FROM e q CROSS JOIN e WHERE q.vec_id != e.vec_id)
-    SELECT vec_id, target_id, 1 AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, target_id) rn FROM c)
-    WHERE rn = 1 ORDER BY vec_id
-    """,
-)
-def ann_cosine_top1(spark, sf_dir):
-    """Brute-force cosine top-1 (the ANN baseline): scores not emitted —
-    DuckDB computes float32, numpy float64; neighbor IDs agree."""
-    from .ann.search import cosine_topk_bruteforce
-
-    e = _spread(_t(spark, sf_dir, "embeddings"))
-    return cosine_topk_bruteforce(e, e, k=1, exclude_self=True).repartition(1).sortWithinPartitions("vec_id")
-
-
-@q(
-    "ann_cosine_lsh_top1",
-    """
-    SELECT 0.4::DOUBLE AS floor, count(*)::BIGINT AS n_queries, true AS recall_ok
-    FROM embeddings
-    """,
-)
-def ann_cosine_lsh_top1(spark, sf_dir):
-    """LSH-pruned cosine top-1 recall contract, run through the
-    DISTRIBUTED refine (bucket posting lists as DataFrames, cogrouped
-    chunk matmul, salted groups — NO O(|targets|) driver collect; the r2
-    verdict flagged the broadcast variant's full-target collect). The
-    sketch (deterministic seed, 32 tables × 8 bits, ~14% candidate
-    fraction) prunes; Spark computes BOTH the LSH result and the exact
-    brute-force top-1 and asserts recall@1 ≥ the pinned floor. The oracle
-    predicts the contract row exactly — a recall regression flips
-    recall_ok and fails the hash. Floor 0.4 is the measured value on the
-    gate embeddings, which are isotropic (median top-1 cosine 0.37 —
-    ANN's worst case; clustered real-world embeddings concentrate far
-    higher; see tests for the clustered-fixture recall ≥ 0.8 check).
-    tests/test_ann.py pins distributed == broadcast LSH top-1."""
-    from .ann.search import (
-        cosine_topk_bruteforce, cosine_topk_lsh_distributed, topk_recall_contract,
-    )
-
-    e = _spread(_t(spark, sf_dir, "embeddings"))
-    lsh = cosine_topk_lsh_distributed(e, e, k=1, n_tables=32, n_bits=8, query_salt=2)
-    brute = cosine_topk_bruteforce(e, e, k=1)
-    return topk_recall_contract(lsh, brute, floor=0.4)
-
-
-@q(
-    "ann_cosine_pq_top1",
-    """
-    SELECT 0.55::DOUBLE AS floor,
-           (SELECT count(*) FROM embeddings)::BIGINT AS n_queries,
-           TRUE AS recall_ok
-    """,
-)
-def ann_cosine_pq_top1(spark, sf_dir):
-    """Product-quantization cosine top-1 recall contract
-    (ann/search.py cosine_topk_pq, Jégou et al. TPAMI 2011): targets
-    compress to m=8 one-byte codes (64× smaller than the float64
-    vectors — the representation that extends the broadcast tier into
-    the multi-million-target range), ADC scores every target with 8
-    uint8 gathers, and only refine·k=64 candidates per query are
-    exact-rescored. Floor 0.55 is the measured recall@1 on the
-    isotropic gate embeddings (ANN's worst case — the clustered-fixture
-    pytest pins ≥0.8); tests also pin refine=∞ == brute force exactly."""
-    from .ann.search import (
-        cosine_topk_bruteforce, cosine_topk_pq, topk_recall_contract,
-    )
-
-    e = _spread(_t(spark, sf_dir, "embeddings"))
-    pq = cosine_topk_pq(e, e, k=1, m=8, n_codes=16, refine=64)
-    brute = cosine_topk_bruteforce(e, e, k=1)
-    return topk_recall_contract(pq, brute, floor=0.55)
-
-
-@q(
-    "embedding_label_centroids",
-    """
-    WITH e AS (SELECT label, unnest(embedding) AS v,
-                      generate_subscripts(embedding, 1) AS dim FROM embeddings)
-    SELECT label, dim, round(avg(v), 4) AS mean_v
-    FROM e GROUP BY label, dim ORDER BY label, dim
-    """,
-)
-def embedding_label_centroids(spark, sf_dir):
-    """Per-label embedding centroids (the IVF coarse-quantizer training
-    step) via posexplode + groupBy — partial aggregation JVM-side."""
-    e = _spread(_t(spark, sf_dir, "embeddings"))
-    return (
-        e.select("label", F.posexplode("embedding").alias("dim0", "v"))
-        .withColumn("dim", F.col("dim0") + 1)  # 1-based like DuckDB subscripts
-        .groupBy("label", "dim")
-        .agg(F.round(F.avg(F.col("v").cast("double")), 4).alias("mean_v"))
-        .repartition(1).sortWithinPartitions("label", "dim")
-    )
-
-
-# ---- distributed k-means + SemDeDup (ann/cluster.py) ------------------------
-# The oracle replays Lloyd's algorithm EXACTLY (unrolled iterations in SQL):
-# both engines quantize centroids to 6 dp between iterations and squared
-# distances to 9 dp before the argmin (ties -> lowest cluster index), so the
-# centroid sequences and every assignment are identical — fp noise from
-# differing summation orders (~1e-14) sits far below both guards.
-
-def _kmeans_cte(k: int, iters: int, source_cte: str) -> str:
-    """DuckDB CTE chain mirroring ann/cluster.kmeans_fit: `source_cte`
-    must define e(vec_id, emb DOUBLE[]); produces x (unit-sphere dims),
-    c0..c{iters} centroids (c, dim, cv) and a{iters+1}, the assignment
-    under the final model."""
-    parts = [source_cte]
-    parts.append("""
-x AS (
-  SELECT vec_id, dim, v / nrm AS v
-  FROM (SELECT vec_id,
-               generate_subscripts(emb, 1) AS dim,
-               unnest(emb) AS v,
-               sqrt(list_sum(list_transform(emb, y -> y * y))) AS nrm
-        FROM e))""")
-    parts.append(f"""
-c0 AS (
-  SELECT dense_rank() OVER (ORDER BY vec_id) - 1 AS c, dim, round(v, 6) AS cv
-  FROM x
-  WHERE vec_id IN (SELECT vec_id FROM e ORDER BY vec_id LIMIT {k}))""")
-    for i in range(1, iters + 2):
-        prev = f"c{i - 1}"
-        parts.append(f"""
-a{i} AS (
-  SELECT vec_id, c FROM (
-    SELECT vec_id, c,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d2, c) AS rn
-    FROM (SELECT x.vec_id, cp.c,
-                 round(sum((x.v - cp.cv) * (x.v - cp.cv)), 9) AS d2
-          FROM x JOIN {prev} cp ON x.dim = cp.dim
-          GROUP BY x.vec_id, cp.c))
-  WHERE rn = 1)""")
-        if i <= iters:
-            parts.append(f"""
-c{i} AS (
-  SELECT p.c, p.dim, coalesce(round(u.mv, 6), p.cv) AS cv
-  FROM {prev} p LEFT JOIN (
-    SELECT a{i}.c AS c, x.dim, avg(x.v) AS mv
-    FROM a{i} JOIN x USING (vec_id) GROUP BY a{i}.c, x.dim) u
-  ON u.c = p.c AND u.dim = p.dim)""")
-    return ",".join(parts)
-
-
-_KM_K, _KM_ITERS = 8, 3
-_KMEANS_STATS_SQL = "WITH " + _kmeans_cte(_KM_K, _KM_ITERS, """
-e AS (SELECT vec_id, list_transform(embedding, y -> y::DOUBLE) AS emb
-      FROM embeddings)""") + f"""
-SELECT a{_KM_ITERS + 1}.c::INTEGER AS cluster_id,
-       count(*)::BIGINT AS n_members,
-       min(vec_id)::BIGINT AS min_vec_id,
-       max(cn.nrm) AS centroid_norm
-FROM a{_KM_ITERS + 1} JOIN (SELECT c, round(sqrt(sum(cv * cv)), 4) AS nrm
-                            FROM c{_KM_ITERS} GROUP BY c) cn
-  ON cn.c = a{_KM_ITERS + 1}.c
-GROUP BY a{_KM_ITERS + 1}.c
-ORDER BY cluster_id"""
-
-
-@q("kmeans_cluster_stats", _KMEANS_STATS_SQL)
-def kmeans_cluster_stats(spark, sf_dir):
-    """Distributed spherical k-means (ann/cluster.kmeans_fit): Lloyd's
-    over the FULL embedding table — unlike the IVF trainer's driver-side
-    collect, each iteration is one fused mapInPandas pass (assignment +
-    per-batch partial centroid sums, k*d cells/batch) + one (cluster,
-    dim) partial-agg shuffle; the driver holds k*d doubles, never the
-    vectors. The oracle unrolls the identical 3 Lloyd's iterations in
-    SQL (6-dp centroid / 9-dp distance quantization on both engines
-    makes every assignment bit-reproducible); this gate hash-matches an
-    ITERATIVE algorithm end-to-end."""
-    import numpy as np
-
-    from .ann.cluster import kmeans_assign, kmeans_fit
-
-    e = _spread(_t(spark, sf_dir, "embeddings"))
-    C = kmeans_fit(e, k=_KM_K, iters=_KM_ITERS)
-    a = kmeans_assign(e, C)
-    norms = spark.createDataFrame(
-        [(int(i), float(np.round(np.sqrt((C[i] ** 2).sum()), 4)))
-         for i in range(_KM_K)],
-        "cluster int, centroid_norm double")
-    return (a.groupBy("cluster")
-            .agg(F.count("*").cast("long").alias("n_members"),
-                 F.min("vec_id").cast("long").alias("min_vec_id"))
-            .join(norms, "cluster")
-            .select(F.col("cluster").alias("cluster_id"), "n_members",
-                    "min_vec_id", "centroid_norm")
-            .repartition(1).sortWithinPartitions("cluster_id"))
-
-
-_SD_K, _SD_ITERS, _SD_TAU = 8, 2, 0.9
-_SD_AUG_CTE = """
-e AS (
-  SELECT vec_id, list_transform(embedding, y -> y::DOUBLE) AS emb
-  FROM embeddings
-  UNION ALL
-  SELECT vec_id + 1000000, list_transform(embedding, y -> y::DOUBLE * 1.5)
-  FROM embeddings WHERE vec_id % 10 = 0)"""
-_SD_FA = f"a{_SD_ITERS + 1}"
-_SEMDEDUP_SQL = "WITH " + _kmeans_cte(_SD_K, _SD_ITERS, _SD_AUG_CTE) + f""",
-en AS (SELECT vec_id, emb,
-              sqrt(list_sum(list_transform(emb, y -> y * y))) AS nrm FROM e),
-dropids AS (
-  SELECT DISTINCT b.vec_id
-  FROM {_SD_FA} a JOIN {_SD_FA} b ON a.c = b.c AND a.vec_id < b.vec_id
-  JOIN en ea ON ea.vec_id = a.vec_id
-  JOIN en eb ON eb.vec_id = b.vec_id
-  WHERE round(list_dot_product(ea.emb, eb.emb) / (ea.nrm * eb.nrm), 6)
-        >= {_SD_TAU})
-SELECT {_SD_FA}.c::INTEGER AS cluster_id,
-       count(*)::BIGINT AS n_members,
-       sum(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_kept
-FROM {_SD_FA} LEFT JOIN dropids d USING (vec_id)
-GROUP BY {_SD_FA}.c ORDER BY cluster_id"""
-
-
-@q("semantic_dedup_keep", _SEMDEDUP_SQL)
-def semantic_dedup_keep(spark, sf_dir):
-    """SemDeDup (ann/cluster.semantic_dedup, Abbas et al. 2303.09540):
-    embedding-level near-duplicate removal with the quadratic search
-    confined to k-means clusters. The gate corpus is the embeddings
-    table plus a planted scaled copy (x1.5, cosine exactly ~1.0) of
-    every 10th vector — scaling is norm-invariant, so the copy lands in
-    its source's cluster under the unit-sphere k-means and MUST be
-    dropped at tau=0.9 (natural max cosine in the isotropic gate data
-    is 0.513 — a 0.39 margin on both sides of the threshold). Output:
-    per-cluster member/kept counts; at sf0.01 exactly the 50 planted
-    copies drop. Both branches of the augmentation union scan the tiny
-    parquet twice (persist upstream at scale)."""
-    from .ann.cluster import semantic_dedup
-
-    e0 = _t(spark, sf_dir, "embeddings")
-    base = e0.select(
-        "vec_id", F.transform("embedding", lambda y: y.cast("double")).alias("embedding"))
-    dup = (e0.where(F.col("vec_id") % 10 == 0)
-           .select((F.col("vec_id") + 1000000).alias("vec_id"),
-                   F.transform("embedding",
-                               lambda y: y.cast("double") * F.lit(1.5)).alias("embedding")))
-    aug = _spread(base.unionByName(dup))
-    dd = semantic_dedup(aug, k=_SD_K, iters=_SD_ITERS, tau=_SD_TAU)
-    return (dd.groupBy("cluster")
-            .agg(F.count("*").cast("long").alias("n_members"),
-                 F.sum(F.col("keep").cast("long")).alias("n_kept"))
-            .select(F.col("cluster").alias("cluster_id"), "n_members", "n_kept")
-            .repartition(1).sortWithinPartitions("cluster_id"))
-
-
 # ---- dedup scale paths (sketch → verify, oracle = exact pairs) --------------
 # Contract oracle for the sketch paths: the sketch (MinHash-LSH / SimHash
 # bands) only PRUNES; an exact-Jaccard verify filters the candidates, so the
@@ -1814,160 +1558,6 @@ def ccnet_bucket_tertiles(spark, sf_dir):
             .repartition(1).sortWithinPartitions("doc_id"))
 
 
-def _pagerank_oracle_sql(iters: int = 10) -> str:
-    """DuckDB twin of spark/graph.pagerank over the deterministic doc
-    graph: the same k synchronous iterations unrolled as chained CTEs,
-    identical arithmetic order ((1-0.85)/n + 0.85*(contrib + dang/n))."""
-    # every CTE is MATERIALIZED: DuckDB inlines CTEs by default, and
-    # r_k is referenced three times by round k+1 — inlining would expand
-    # the base scan 3^k times (measured: fd exhaustion at k=10)
-    head = """
-    WITH nn AS MATERIALIZED (SELECT count(*)::BIGINT AS n FROM documents),
-    e AS MATERIALIZED (SELECT DISTINCT doc_id AS src,
-                 (doc_id * 1103515245 + (j + 1) * 12345) % n AS tgt
-          FROM documents, nn, unnest(range(0, 3)) t(j)
-          WHERE j < doc_id % 4),
-    odeg AS MATERIALIZED (SELECT src, count(*)::DOUBLE AS deg FROM e GROUP BY src),
-    r0 AS MATERIALIZED (SELECT doc_id AS node, 1.0 / n AS rank FROM documents, nn)"""
-    steps = []
-    for k in range(1, iters + 1):
-        p = f"r{k - 1}"
-        steps.append(f""",
-    d{k} AS MATERIALIZED (SELECT coalesce(sum(r.rank), 0.0) AS m FROM {p} r
-             LEFT JOIN odeg o ON r.node = o.src WHERE o.src IS NULL),
-    c{k} AS MATERIALIZED (SELECT e.tgt AS node, sum(r.rank / o.deg) AS contrib
-             FROM e JOIN {p} r ON e.src = r.node
-             JOIN odeg o ON e.src = o.src GROUP BY e.tgt),
-    r{k} AS MATERIALIZED (SELECT p.node,
-                    (1 - 0.85) / nn.n
-                    + 0.85 * (coalesce(c.contrib, 0.0) + d{k}.m / nn.n)
-                        AS rank
-             FROM {p} p LEFT JOIN c{k} c ON p.node = c.node, nn, d{k})""")
-    tail = f"""
-    SELECT node, round(rank, 6) AS rank
-    FROM r{iters} ORDER BY node"""
-    return head + "".join(steps) + tail
-
-
-@q(
-    "triangle_counts_graph",
-    """
-    WITH nn AS MATERIALIZED (SELECT count(*)::BIGINT AS n FROM documents),
-    raw AS (SELECT doc_id AS x, (doc_id + 1) % n AS y FROM documents, nn
-            UNION ALL
-            SELECT doc_id, (doc_id + 2) % n FROM documents, nn
-            UNION ALL
-            SELECT doc_id, (doc_id * 1103515245 + 12345) % n
-            FROM documents, nn WHERE doc_id % 3 = 0),
-    und AS MATERIALIZED (
-        SELECT DISTINCT least(x, y) AS u, greatest(x, y) AS v
-        FROM raw WHERE x <> y),
-    tri AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
-            FROM und e1
-            JOIN und e2 ON e1.u = e2.u AND e1.v < e2.v
-            JOIN und e3 ON e3.u = e1.v AND e3.v = e2.v)
-    SELECT node, count(*)::BIGINT AS n_triangles
-    FROM (SELECT unnest([a, b, c]) AS node FROM tri) t
-    GROUP BY node ORDER BY node
-    """,
-)
-def triangle_counts_graph(spark, sf_dir):
-    """Exact per-node triangle counts (spark/graph.triangles, r4) over a
-    deterministic ring+chord graph (i→i+1, i→i+2 rings guarantee n
-    triangles; LCG chords on every third node add irregular closures).
-    The Spark side lists triangles via DEGREE-ordered orientation (wedge
-    fan-out bounded by degeneracy — the celebrity-node skew fix); the
-    oracle lists them via plain id-ordered joins. Both enumerate the
-    identical triangle SET (orientation changes the counting vertex,
-    never the set), and counts are integers — engine-exact, no float
-    concerns."""
-    from .spark.graph import node_triangle_counts
-
-    d = _t(spark, sf_dir, "documents")
-    n = d.count()
-    docs = _spread(d.select("doc_id"))
-    ring1 = docs.select(F.col("doc_id").alias("src"),
-                        ((F.col("doc_id") + 1) % n).alias("tgt"))
-    ring2 = docs.select(F.col("doc_id").alias("src"),
-                        ((F.col("doc_id") + 2) % n).alias("tgt"))
-    chords = (docs.where(F.col("doc_id") % 3 == 0)
-              .select(F.col("doc_id").alias("src"),
-                      ((F.col("doc_id") * 1103515245 + 12345) % n)
-                      .alias("tgt")))
-    ed = ring1.unionByName(ring2).unionByName(chords)
-    out = node_triangle_counts(ed)
-    return (out.select("node", "n_triangles")
-            .repartition(1).sortWithinPartitions("node"))
-
-
-def _ppr_oracle_sql(iters: int = 6) -> str:
-    """DuckDB twin of the PERSONALIZED walk (teleport to doc_id%10==0
-    seeds): same unrolled-CTE shape as _pagerank_oracle_sql with the
-    update (1-0.85)*tele + 0.85*(contrib + dang*tele)."""
-    head = """
-    WITH nn AS MATERIALIZED (SELECT count(*)::BIGINT AS n FROM documents),
-    e AS MATERIALIZED (SELECT DISTINCT doc_id AS src,
-                 (doc_id * 1103515245 + (j + 1) * 12345) % n AS tgt
-          FROM documents, nn, unnest(range(0, 3)) t(j)
-          WHERE j < doc_id % 4),
-    odeg AS MATERIALIZED (SELECT src, count(*)::DOUBLE AS deg FROM e GROUP BY src),
-    ns AS MATERIALIZED (SELECT sum(CASE WHEN doc_id % 10 = 0 THEN 1.0
-                                   ELSE 0.0 END) AS s FROM documents),
-    tl AS MATERIALIZED (SELECT doc_id AS node,
-                 CASE WHEN doc_id % 10 = 0 THEN 1.0 / ns.s
-                      ELSE 0.0 END AS t
-          FROM documents, ns),
-    r0 AS MATERIALIZED (SELECT node, t AS rank FROM tl)"""
-    steps = []
-    for k in range(1, iters + 1):
-        p = f"r{k - 1}"
-        steps.append(f""",
-    d{k} AS MATERIALIZED (SELECT coalesce(sum(r.rank), 0.0) AS m FROM {p} r
-             LEFT JOIN odeg o ON r.node = o.src WHERE o.src IS NULL),
-    c{k} AS MATERIALIZED (SELECT e.tgt AS node, sum(r.rank / o.deg) AS contrib
-             FROM e JOIN {p} r ON e.src = r.node
-             JOIN odeg o ON e.src = o.src GROUP BY e.tgt),
-    r{k} AS MATERIALIZED (SELECT p.node,
-                    (1 - 0.85) * tl.t
-                    + 0.85 * (coalesce(c.contrib, 0.0) + d{k}.m * tl.t)
-                        AS rank
-             FROM {p} p LEFT JOIN c{k} c ON p.node = c.node
-             JOIN tl ON p.node = tl.node, d{k})""")
-    tail = f"""
-    SELECT node, round(rank, 6) AS rank
-    FROM r{iters} ORDER BY node"""
-    return head + "".join(steps) + tail
-
-
-@q("pagerank_personalized_seeds", _ppr_oracle_sql(6))
-def pagerank_personalized_seeds(spark, sf_dir):
-    """Personalized PageRank gate (spark/graph.pagerank(teleport=), r4):
-    the random surfer restarts at the doc_id%10==0 seed set (uniform
-    over seeds), and dangling mass lands on the seeds too — the crawl
-    seeding / topic-authority variant. Six iterations over the same
-    deterministic LCG doc graph as pagerank_doc_graph; oracle = the
-    unrolled CTEs with the personalized update, round-6 hash-match.
-    Non-seed nodes with no in-links provably decay to rank 0."""
-    from .spark.graph import pagerank
-
-    d = _t(spark, sf_dir, "documents")
-    n = d.count()
-    docs = _spread(d.select("doc_id"))
-    j = F.explode(F.sequence(F.lit(0), F.lit(2))).alias("j")
-    ed = (docs.select("doc_id", j)
-          .where(F.col("j") < F.col("doc_id") % 4)
-          .select(F.col("doc_id").alias("src"),
-                  ((F.col("doc_id") * 1103515245
-                    + (F.col("j") + 1) * 12345) % n).alias("tgt"))
-          .distinct())
-    seeds = (docs.where(F.col("doc_id") % 10 == 0)
-             .select("doc_id", F.lit(1.0).alias("w")))
-    ranks = pagerank(ed, num_iters=6, damping=0.85,
-                     nodes=docs.select("doc_id"), teleport=seeds)
-    return (ranks.select(F.col("node"), F.round("rank", 6).alias("rank"))
-            .repartition(1).sortWithinPartitions("node"))
-
-
 @q(
     "warc_revisit_roundtrip",
     f"""
@@ -2111,277 +1701,6 @@ def sitemap_parse_stats(spark, sf_dir):
                                   F.col("changefreq").asc_nulls_first()))
 
 
-def _lpa_oracle_sql(iters: int = 4) -> str:
-    """Unrolled synchronous label propagation (min-label tie-break) over
-    the block-chain doc graph: blocks of 10 chained by +1 edges plus +2
-    chords every third node — each round is a neighbor-label count and
-    a per-node deterministic top-1."""
-    head = """
-    WITH e0 AS MATERIALIZED (
-      SELECT doc_id AS a, doc_id + 1 AS b FROM documents
-      WHERE doc_id % 10 <> 9
-      UNION
-      SELECT doc_id, doc_id + 2 FROM documents
-      WHERE doc_id % 10 < 8 AND doc_id % 3 = 0),
-    sym AS MATERIALIZED (
-      SELECT a, b FROM e0 UNION SELECT b, a FROM e0),
-    l0 AS (SELECT DISTINCT a AS node, a AS lab FROM sym)"""
-    steps = []
-    for k in range(1, iters + 1):
-        steps.append(f""",
-    c{k} AS MATERIALIZED (
-      SELECT s.a AS ctr, l.lab, count(*)::BIGINT AS c
-      FROM sym s JOIN l{k - 1} l ON s.b = l.node GROUP BY s.a, l.lab),
-    t{k} AS (SELECT ctr, lab FROM c{k}
-             QUALIFY row_number() OVER (PARTITION BY ctr
-                                        ORDER BY c DESC, lab) = 1),
-    l{k} AS MATERIALIZED (
-      SELECT p.node, coalesce(t.lab, p.lab) AS lab
-      FROM l{k - 1} p LEFT JOIN t{k} t ON p.node = t.ctr)""")
-    tail = f"""
-    SELECT node, lab AS label FROM l{iters} ORDER BY node"""
-    return head + "".join(steps) + tail
-
-
-@q("lpa_communities", _lpa_oracle_sql(4))
-def lpa_communities(spark, sf_dir):
-    """Community-detection gate (spark/graph.label_propagation, r4):
-    four synchronous LPA rounds with the smallest-label tie-break over
-    a block-structured doc graph (chains of 10 with +2 chords — real
-    community structure, the mirror/site-family signal a crawl corpus
-    diversifies on). The oracle unrolls the identical rounds; a visit-
-    order dependence, a wrong tie-break, or an asynchronous update all
-    break the hash."""
-    from .spark.graph import label_propagation
-
-    d = _spread(_t(spark, sf_dir, "documents")).select("doc_id")
-    e1 = (d.where(F.col("doc_id") % 10 != 9)
-          .select(F.col("doc_id").alias("src"),
-                  (F.col("doc_id") + 1).alias("tgt")))
-    e2 = (d.where((F.col("doc_id") % 10 < 8) & (F.col("doc_id") % 3 == 0))
-          .select(F.col("doc_id").alias("src"),
-                  (F.col("doc_id") + 2).alias("tgt")))
-    out = label_propagation(e1.union(e2), num_iters=4)
-    return (out.select("node", "label")
-            .repartition(1).sortWithinPartitions("node"))
-
-
-def _bfs_oracle_sql(rounds: int = 6) -> str:
-    """Unrolled level-synchronous BFS over the LCG doc graph: round k's
-    frontier = targets of round k-1 minus everything already visited."""
-    head = """
-    WITH nn AS MATERIALIZED (SELECT count(*)::BIGINT AS n FROM documents),
-    e AS MATERIALIZED (
-      SELECT DISTINCT doc_id AS src,
-             (doc_id * 1103515245 + (j + 1) * 12345) % n AS tgt
-      FROM documents, nn, unnest(range(0, 3)) t(j)
-      WHERE j < doc_id % 4
-      UNION
-      SELECT doc_id, (doc_id + 7) % n FROM documents, nn),
-    d0 AS (SELECT doc_id AS node, 0 AS depth FROM documents
-           WHERE doc_id % 50 = 0),
-    v0 AS (SELECT * FROM d0)"""
-    steps = []
-    for k in range(1, rounds + 1):
-        steps.append(f""",
-    d{k} AS MATERIALIZED (SELECT DISTINCT e.tgt AS node, {k} AS depth
-             FROM e JOIN d{k - 1} p ON e.src = p.node
-             WHERE e.tgt NOT IN (SELECT node FROM v{k - 1})),
-    v{k} AS (SELECT * FROM v{k - 1} UNION ALL SELECT * FROM d{k})""")
-    tail = f"""
-    SELECT node, depth::BIGINT AS depth FROM v{rounds} ORDER BY node"""
-    return head + "".join(steps) + tail
-
-
-@q("bfs_crawl_depths", _bfs_oracle_sql(6))
-def bfs_crawl_depths(spark, sf_dir):
-    """Crawl-depth gate (spark/graph.bfs_depths, r4): level-synchronous
-    BFS from the doc_id%50 seed set over the PageRank gates' LCG doc
-    graph AUGMENTED with a +7 ring edge per node (the bare LCG's
-    multiplier shares gcd 5 with n, collapsing every target onto
-    multiples of 5 — the ring restores depth diversity: the sf0.01
-    fixture populates every depth 0..6) — fewest hops within 6 rounds,
-    the depth signal shallow-crawl corpora cut on. Each round is one
-    frontier⋈edges join + one visited anti-join + a distinct, frontier
-    checkpointed; the oracle unrolls the identical rounds as chained
-    CTEs, so a missed anti-join (re-discovering a node deeper), a
-    non-minimal depth, or an extra round all break the hash."""
-    from .spark.graph import bfs_depths
-
-    d = _t(spark, sf_dir, "documents")
-    n = d.count()
-    docs = _spread(d.select("doc_id"))
-    j = F.explode(F.sequence(F.lit(0), F.lit(2))).alias("j")
-    ed = (docs.select("doc_id", j)
-          .where(F.col("j") < F.col("doc_id") % 4)
-          .select(F.col("doc_id").alias("src"),
-                  ((F.col("doc_id") * 1103515245
-                    + (F.col("j") + 1) * 12345) % n).alias("tgt"))
-          .union(docs.select(F.col("doc_id").alias("src"),
-                             ((F.col("doc_id") + 7) % n).alias("tgt")))
-          .distinct())
-    seeds = docs.where(F.col("doc_id") % 50 == 0).select("doc_id")
-    out = bfs_depths(ed, seeds, max_depth=6)
-    return (out.select(F.col("node"), F.col("depth").cast("long"))
-            .repartition(1).sortWithinPartitions("node"))
-
-
-@q("pagerank_doc_graph", _pagerank_oracle_sql(10))
-def pagerank_doc_graph(spark, sf_dir):
-    """Distributed PageRank gate (spark/graph.py, r4): 10 synchronous
-    power iterations with damping 0.85 and dangling-mass redistribution
-    over a deterministic doc-level link graph (out-degree doc_id % 4 —
-    a quarter of the nodes DANGLING — targets by LCG arithmetic both
-    engines reproduce exactly). One contribution join + partial-agg
-    shuffle per iteration, one scalar (dangling mass) to the driver,
-    localCheckpoint lineage truncation — the k-means/components
-    iteration pattern. Oracle: the same 10 iterations unrolled as
-    chained DuckDB CTEs with identical arithmetic order; round-6 ranks
-    hash-match."""
-    from .spark.graph import pagerank
-
-    d = _t(spark, sf_dir, "documents")
-    n = d.count()
-    docs = _spread(d.select("doc_id"))
-    j = F.explode(F.sequence(F.lit(0), F.lit(2))).alias("j")
-    ed = (docs.select("doc_id", j)
-          .where(F.col("j") < F.col("doc_id") % 4)
-          .select(F.col("doc_id").alias("src"),
-                  ((F.col("doc_id") * 1103515245
-                    + (F.col("j") + 1) * 12345) % n).alias("tgt"))
-          .distinct())
-    ranks = pagerank(ed, num_iters=10, damping=0.85,
-                     nodes=docs.select("doc_id"))
-    return (ranks.select(F.col("node"), F.round("rank", 6).alias("rank"))
-            .repartition(1).sortWithinPartitions("node"))
-
-
-@q(
-    "clustering_coeff_graph",
-    """
-    WITH nn AS MATERIALIZED (SELECT count(*)::BIGINT AS n FROM documents),
-    raw AS (SELECT doc_id AS x, (doc_id + 1) % n AS y FROM documents, nn
-            UNION ALL
-            SELECT doc_id, (doc_id + 2) % n FROM documents, nn
-            UNION ALL
-            SELECT doc_id, (doc_id * 1103515245 + 12345) % n
-            FROM documents, nn WHERE doc_id % 3 = 0),
-    und AS MATERIALIZED (
-        SELECT DISTINCT least(x, y) AS u, greatest(x, y) AS v
-        FROM raw WHERE x <> y),
-    deg AS MATERIALIZED (
-        SELECT node, count(*)::BIGINT AS degree
-        FROM (SELECT u AS node FROM und UNION ALL SELECT v FROM und) q
-        GROUP BY node),
-    tri AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
-            FROM und e1
-            JOIN und e2 ON e1.u = e2.u AND e1.v < e2.v
-            JOIN und e3 ON e3.u = e1.v AND e3.v = e2.v),
-    tcnt AS (SELECT node, count(*)::BIGINT AS n_triangles
-             FROM (SELECT unnest([a, b, c]) AS node FROM tri) t
-             GROUP BY node)
-    SELECT d.node, d.degree,
-           coalesce(t.n_triangles, 0)::BIGINT AS n_triangles,
-           round(CASE WHEN d.degree >= 2
-                      THEN 2.0 * coalesce(t.n_triangles, 0)::DOUBLE
-                           / (d.degree::DOUBLE * (d.degree::DOUBLE - 1.0))
-                      ELSE 0.0 END, 6) AS coeff
-    FROM deg d LEFT JOIN tcnt t ON d.node = t.node
-    ORDER BY d.node
-    """,
-)
-def clustering_coeff_graph(spark, sf_dir):
-    """Local clustering coefficient gate (spark/graph.
-    clustering_coefficients, r4): 2T/(d(d−1)) per node over the same
-    ring+chord graph as triangle_counts_graph — degree joins the
-    degree-oriented triangle counts, division is map-side. The oracle
-    recomputes degree + triangles via plain id-ordered joins; identical
-    division order, round-6 hash-match (the ratios are small-integer
-    quotients, exact in doubles)."""
-    from .spark.graph import clustering_coefficients
-
-    d = _t(spark, sf_dir, "documents")
-    n = d.count()
-    docs = _spread(d.select("doc_id"))
-    ring1 = docs.select(F.col("doc_id").alias("src"),
-                        ((F.col("doc_id") + 1) % n).alias("tgt"))
-    ring2 = docs.select(F.col("doc_id").alias("src"),
-                        ((F.col("doc_id") + 2) % n).alias("tgt"))
-    chords = (docs.where(F.col("doc_id") % 3 == 0)
-              .select(F.col("doc_id").alias("src"),
-                      ((F.col("doc_id") * 1103515245 + 12345) % n)
-                      .alias("tgt")))
-    ed = ring1.unionByName(ring2).unionByName(chords)
-    out = clustering_coefficients(ed)
-    return (out.select("node", "degree", "n_triangles",
-                       F.round("coeff", 6).alias("coeff"))
-            .repartition(1).sortWithinPartitions("node"))
-
-
-def _hits_oracle_sql(iters: int = 5) -> str:
-    """DuckDB twin of spark/graph.hits over the deterministic LCG doc
-    graph: each iteration unrolls to four CTEs (auth raw/total, hub
-    raw/total), identical L1-normalization arithmetic."""
-    head = """
-    WITH nn AS MATERIALIZED (SELECT count(*)::BIGINT AS n FROM documents),
-    e AS MATERIALIZED (SELECT DISTINCT doc_id AS src,
-                 (doc_id * 1103515245 + (j + 1) * 12345) % n AS tgt
-          FROM documents, nn, unnest(range(0, 3)) t(j)
-          WHERE j < doc_id % 4
-            AND doc_id <> (doc_id * 1103515245 + (j + 1) * 12345) % n),
-    h0 AS MATERIALIZED (SELECT doc_id AS node, 1.0 / n AS hub
-                        FROM documents, nn)"""
-    steps = []
-    for k in range(1, iters + 1):
-        p = f"h{k - 1}"
-        steps.append(f""",
-    ar{k} AS MATERIALIZED (SELECT d.doc_id AS node, coalesce(s.c, 0.0) AS raw
-             FROM documents d LEFT JOIN
-               (SELECT e.tgt AS t, sum(h.hub) AS c FROM e
-                JOIN {p} h ON e.src = h.node GROUP BY e.tgt) s
-             ON d.doc_id = s.t),
-    at{k} AS MATERIALIZED (SELECT sum(raw) AS tot FROM ar{k}),
-    a{k} AS MATERIALIZED (SELECT node, raw / t.tot AS auth
-                          FROM ar{k}, at{k} t),
-    hr{k} AS MATERIALIZED (SELECT d.doc_id AS node, coalesce(s.c, 0.0) AS raw
-             FROM documents d LEFT JOIN
-               (SELECT e.src AS s, sum(a.auth) AS c FROM e
-                JOIN a{k} a ON e.tgt = a.node GROUP BY e.src) s
-             ON d.doc_id = s.s),
-    ht{k} AS MATERIALIZED (SELECT sum(raw) AS tot FROM hr{k}),
-    h{k} AS MATERIALIZED (SELECT node, raw / t.tot AS hub
-                          FROM hr{k}, ht{k} t)""")
-    tail = f"""
-    SELECT a.node, round(a.auth, 6) AS auth, round(h.hub, 6) AS hub
-    FROM a{iters} a JOIN h{iters} h ON a.node = h.node
-    ORDER BY a.node"""
-    return head + "".join(steps) + tail
-
-
-@q("hits_doc_graph", _hits_oracle_sql(5))
-def hits_doc_graph(spark, sf_dir):
-    """HITS hubs-and-authorities gate (spark/graph.hits, r4): 5
-    L1-normalized iterations over the LCG doc graph (self-loops
-    dropped on both engines). One contribution join + partial-agg
-    shuffle per half-step, norms as broadcast 1-row relations. Oracle:
-    the same iterations unrolled four CTEs each, round-6 hash-match."""
-    from .spark.graph import hits
-
-    d = _t(spark, sf_dir, "documents")
-    n = d.count()
-    docs = _spread(d.select("doc_id"))
-    j = F.explode(F.sequence(F.lit(0), F.lit(2))).alias("j")
-    ed = (docs.select("doc_id", j)
-          .where(F.col("j") < F.col("doc_id") % 4)
-          .select(F.col("doc_id").alias("src"),
-                  ((F.col("doc_id") * 1103515245
-                    + (F.col("j") + 1) * 12345) % n).alias("tgt")))
-    out = hits(ed, num_iters=5, nodes=docs.select("doc_id"))
-    return (out.select("node", F.round("auth", 6).alias("auth"),
-                       F.round("hub", 6).alias("hub"))
-            .repartition(1).sortWithinPartitions("node"))
-
-
 _HOST_EDGE_SQL = """
     SELECT 'h' || (doc_id % 16) || '.example.org' AS src,
            'h' || (((doc_id * 1103515245 + (j + 1) * 12345) % n) % 16)
@@ -2494,67 +1813,6 @@ def robots_filter_flags(spark, sf_dir):
     out = robots_filter(pages, robots)
     return (out.select("doc_id", "robots_allowed")
             .repartition(1).sortWithinPartitions("doc_id"))
-
-
-def _host_pr_oracle_sql(iters: int = 6) -> str:
-    """DuckDB twin of the host-graph PageRank: closed-form host edges
-    (DISTINCT — the graph grain), then the same unrolled-CTE iteration
-    shape as _pagerank_oracle_sql over string host nodes."""
-    head = f"""
-    WITH nn AS MATERIALIZED (SELECT count(*)::BIGINT AS n FROM documents),
-    he AS MATERIALIZED (SELECT DISTINCT src, tgt FROM ({_HOST_EDGE_SQL}) q),
-    hn AS MATERIALIZED (SELECT DISTINCT 'h' || (doc_id % 16)
-                 || '.example.org' AS node FROM documents),
-    hc AS MATERIALIZED (SELECT count(*)::BIGINT AS c FROM hn),
-    odeg AS MATERIALIZED (SELECT src, count(*)::DOUBLE AS deg
-                          FROM he GROUP BY src),
-    r0 AS MATERIALIZED (SELECT node, 1.0 / c AS rank FROM hn, hc)"""
-    steps = []
-    for k in range(1, iters + 1):
-        p = f"r{k - 1}"
-        steps.append(f""",
-    d{k} AS MATERIALIZED (SELECT coalesce(sum(r.rank), 0.0) AS m FROM {p} r
-             LEFT JOIN odeg o ON r.node = o.src WHERE o.src IS NULL),
-    c{k} AS MATERIALIZED (SELECT he.tgt AS node, sum(r.rank / o.deg) AS contrib
-             FROM he JOIN {p} r ON he.src = r.node
-             JOIN odeg o ON he.src = o.src GROUP BY he.tgt),
-    r{k} AS MATERIALIZED (SELECT p.node,
-                    (1 - 0.85) / hc.c
-                    + 0.85 * (coalesce(c.contrib, 0.0) + d{k}.m / hc.c)
-                        AS rank
-             FROM {p} p LEFT JOIN c{k} c ON p.node = c.node, hc, d{k})""")
-    tail = f"""
-    SELECT node AS host, round(rank, 6) AS rank
-    FROM r{iters} ORDER BY host"""
-    return head + "".join(steps) + tail
-
-
-@q("host_graph_pagerank", _host_pr_oracle_sql(6))
-def host_graph_pagerank(spark, sf_dir):
-    """The composed Common-Crawl authority pipeline as ONE plan: html →
-    href extraction → host parse → DISTINCT host graph → 6 distributed
-    PageRank iterations (spark/extract.py + spark/graph.py, r4). This
-    is exactly how CC's public host-level ranks are produced at 10^12
-    pages: the page table is read once, hosts reduce the graph ~10^4×
-    before the iterative stage, and each iteration is one join + one
-    partial-agg shuffle. Oracle: closed-form host edges + the unrolled
-    CTE iterations, round-6 hash-match."""
-    from .spark.extract import outlink_host_edges
-    from .spark.graph import pagerank
-
-    pages = _synth_linked_pages(spark, sf_dir)
-    edges = (outlink_host_edges(pages)
-             .select(F.col("src_host").alias("src"),
-                     F.col("dst_host").alias("tgt")).distinct())
-    d = _spread(_t(spark, sf_dir, "documents"))
-    hosts = (d.select(F.concat(F.lit("h"),
-                               (F.col("doc_id") % 16).cast("string"),
-                               F.lit(".example.org")).alias("node"))
-             .distinct())
-    ranks = pagerank(edges, num_iters=6, damping=0.85, nodes=hosts)
-    return (ranks.select(F.col("node").alias("host"),
-                         F.round("rank", 6).alias("rank"))
-            .repartition(1).sortWithinPartitions("host"))
 
 
 # static BPE merge table for the tokenizer gate: topologically ordered
@@ -3411,8 +2669,8 @@ def logreg_quality_weights(spark, sf_dir):
     iterations where each gradient is ONE partial-agg shuffle with
     per-row terms rounded to 9 decimals and summed on a DECIMAL(28,9)
     carrier. The weight trajectory is therefore partition-order-free
-    and bit-identical to the DuckDB CTE-chain twin (same recipe as
-    kmeans_cluster_stats). Output: the fitted weights, round-6."""
+    and bit-identical to the DuckDB CTE-chain twin. Output: the fitted
+    weights, round-6."""
     from .text.classifier import (QUALITY_FEATURES, logreg_fit,
                                   quality_classifier_features)
 
@@ -3924,40 +3182,6 @@ def range_join_error_windows(spark, sf_dir):
         j.groupBy("event_id")
         .agg(F.count("*").alias("n_clicks"), _dec_sum("value"))
         .repartition(1).sortWithinPartitions("event_id")
-    )
-
-
-@q(
-    "kmv_distinct_users",
-    """
-    WITH h AS (SELECT DISTINCT event_type,
-           CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
-                AS BIGINT) AS h
-           FROM events WHERE user_id IS NOT NULL),
-    r AS (SELECT event_type, h,
-                 row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
-          FROM h)
-    SELECT event_type, count(*) AS n_kept, max(h) AS kth_min,
-           CASE WHEN count(*) < 64 THEN CAST(count(*) AS DOUBLE)
-                ELSE round(63.0 * 1152921504606846976.0 / max(h), 4)
-           END AS est_distinct
-    FROM r WHERE rn <= 64
-    GROUP BY event_type ORDER BY event_type
-    """,
-)
-def kmv_distinct_users(spark, sf_dir):
-    """KMV distinct-count sketch (spark/sketch.py kmv_distinct):
-    per-event-type distinct-user estimate from the k=64 smallest 60-bit
-    md5 hashes. Unlike HLL, the sketch is engine-reproducible — DuckDB
-    rebuilds the identical k-minimum set and the identical estimator
-    double, so this gate hash-matches an APPROXIMATE algorithm
-    exactly."""
-    from .spark.sketch import kmv_distinct
-
-    e = _t(spark, sf_dir, "events")
-    return (
-        kmv_distinct(e, key="user_id", group_by="event_type", k=64)
-        .repartition(1).sortWithinPartitions("event_type")
     )
 
 
@@ -4881,101 +4105,6 @@ def spatial_join_geom_boxes(spark, sf_dir):
         spatial_join_geom(left, right, predicate="intersects", left_id="gid")
         .repartition(1).sortWithinPartitions("gid", "region_id")
     )
-
-
-@q(
-    "ann_cosine_ivf_top1",
-    """
-    WITH e AS (SELECT vec_id, embedding FROM embeddings),
-    c AS (SELECT q.vec_id, e.vec_id AS target_id,
-                 list_cosine_similarity(q.embedding, e.embedding) AS s
-          FROM e q CROSS JOIN e WHERE q.vec_id != e.vec_id)
-    SELECT vec_id, target_id, 1 AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, target_id) rn FROM c)
-    WHERE rn = 1 ORDER BY vec_id
-    """,
-)
-def ann_cosine_ivf_top1(spark, sf_dir):
-    """IVF ANN probed with nprobe=n_lists — exact by construction, so the
-    brute-force DuckDB oracle verifies the full IVF plumbing (index build,
-    list assignment, probe, refine). Production recall mode = nprobe <
-    n_lists (ann_cosine_ivf_probe2)."""
-    from .ann.search import cosine_topk_ivf
-
-    e = _spread(_t(spark, sf_dir, "embeddings"))
-    return cosine_topk_ivf(e, e, k=1, n_lists=8, nprobe=8,
-                           exclude_self=True).repartition(1).sortWithinPartitions("vec_id")
-
-
-@q(
-    "embedding_neardup_pairs",
-    """
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b
-    FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.5
-    ORDER BY id_a, id_b
-    """,
-)
-def embedding_neardup_pairs(spark, sf_dir):
-    """Embedding-cosine near-duplicate pairs (the embedding-space member
-    of the dedup suite) vs DuckDB's exact pairwise cosine — run through
-    the BUCKETED scale plan (sign-LSH candidates → exact verify, no O(n²)
-    stage, no driver collect). The exact oracle stays valid because every
-    gate-corpus true pair collides in ≥3 of the 48 sketch tables (measured
-    at sf0.01 and sf0.1; seeds are fixed, so the candidate set is
-    deterministic). Threshold 0.5 sits ≥1e-3 from every pair's score on
-    the gate data, so float accumulation order cannot flip membership.
-    tests/test_ann.py pins bucketed == brute on the gate corpus."""
-    from .ann.search import cosine_neardup_pairs_bucketed
-
-    e = _spread(_t(spark, sf_dir, "embeddings"))
-    return (
-        cosine_neardup_pairs_bucketed(e, threshold=0.5)
-        .repartition(1).sortWithinPartitions("id_a", "id_b")
-    )
-
-
-@q(
-    "ann_cosine_ivf_dist_top1",
-    """
-    WITH e AS (SELECT vec_id, embedding FROM embeddings),
-    c AS (SELECT q.vec_id, e.vec_id AS target_id,
-                 list_cosine_similarity(q.embedding, e.embedding) AS s
-          FROM e q CROSS JOIN e WHERE q.vec_id != e.vec_id)
-    SELECT vec_id, target_id, 1 AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, target_id) rn FROM c)
-    WHERE rn = 1 ORDER BY vec_id
-    """,
-)
-def ann_cosine_ivf_dist_top1(spark, sf_dir):
-    """Distributed-index IVF in exact mode (nprobe = n_lists): inverted
-    lists live as a DataFrame, probe is a list_id equi-join, refine is a
-    vectorized per-batch pair dot — no O(|targets|) driver collect. The
-    brute-force oracle proves the whole distributed plumbing exactly."""
-    from .ann.search import cosine_topk_ivf_distributed
-
-    e = _spread(_t(spark, sf_dir, "embeddings"))
-    return cosine_topk_ivf_distributed(e, e, k=1, n_lists=8, nprobe=8).repartition(1).sortWithinPartitions("vec_id")
-
-
-@q(
-    "ann_cosine_ivf_probe2",
-    """
-    SELECT 0.5::DOUBLE AS floor, count(*)::BIGINT AS n_queries, true AS recall_ok
-    FROM embeddings
-    """,
-)
-def ann_cosine_ivf_probe2(spark, sf_dir):
-    """IVF recall mode (nprobe=2 of 8 lists, ~25% scan) under the same
-    recall-contract oracle as ann_cosine_lsh_top1: Spark computes probe-2
-    and exact top-1 and asserts recall@1 ≥ 0.5 (measured on the isotropic
-    gate embeddings; deterministic k-means init → reproducible)."""
-    from .ann.search import cosine_topk_bruteforce, cosine_topk_ivf, topk_recall_contract
-
-    e = _spread(_t(spark, sf_dir, "embeddings"))
-    ivf = cosine_topk_ivf(e, e, k=1, n_lists=8, nprobe=2, exclude_self=True)
-    brute = cosine_topk_bruteforce(e, e, k=1)
-    return topk_recall_contract(ivf, brute, floor=0.5)
 
 
 @q(
@@ -5990,8 +5119,6 @@ def xyzm_line_interpolate(spark, sf_dir):
     ).repartition(1).sortWithinPartitions("gid")
 
 
-
-
 @q(
     "spatial_join_ngon_pairs",
     """
@@ -6284,7 +5411,6 @@ def inverted_index_topdf(spark, sf_dir):
 # (moved to the shared-derivations section near the top)
 
 
-
 def _synth_recrawl_pages(spark, sf_dir):
     """documents → a multi-snapshot pages frame: ~3 fetches per url
     (url_id = doc_id mod ⌈n/3⌉, version ordinal v = doc_id div that),
@@ -6428,20 +5554,23 @@ _DRIVER_WINDOW = [
     # previously-never-sampled queries, all green; this window rotates
     # the remaining never-driver-sampled queries in.
     # verdict-named never-sampled set:
-    "robots_filter_flags", "sitemap_parse_stats", "lpa_communities",
-    "hits_doc_graph", "clustering_coeff_graph", "gopher_flags_counts",
+    "robots_filter_flags", "sitemap_parse_stats", "gopher_flags_counts",
     "gopher_repetition_flags", "stratified_sample_langs",
-    "warc_revisit_roundtrip", "kmv_distinct_users",
-    "range_join_error_windows", "pack_chunk_occupancy",
+    "warc_revisit_roundtrip", "range_join_error_windows",
+    "pack_chunk_occupancy",
     # new in r5 (bigram backoff LM; touches/contains group-predicate
     # joins over non-rect layers):
     "bigram_logprob_filter", "spatial_join_touches_pairs",
     "spatial_join_contains_pairs",
-    # remaining never-sampled text/crawl/graph/temporal:
-    "c4_clean_lines_counts", "bfs_crawl_depths", "latest_snapshot_urls",
+    # remaining never-sampled text/crawl/temporal:
+    "c4_clean_lines_counts", "latest_snapshot_urls",
     "bpe_token_count", "corpus_shuffle_head", "decontaminate_eval_overlap",
-    "duplicate_spans_counts", "pagerank_personalized_seeds",
+    "duplicate_spans_counts",
     "sequence_pack_chunks", "trigram_logprob_filter", "url_canonical_dedup",
+    # geometry joins and overlay over the labelled arrangement:
+    "spatial_join_ngon_pairs", "spatial_join_geom_boxes",
+    "overlay_gc_intersection", "overlay_gc_difference", "relate_point_box",
+    "dissolve_union_by_key",
     # never-sampled SQL + geometry singles (r2/r3 era):
     "tpch_q5", "tpch_q10_variant", "crosses_segments", "hausdorff_boxes",
     "frechet_segments", "oriented_envelope_area",
@@ -6453,6 +5582,8 @@ _DRIVER_WINDOW = [
 ]
 
 assert len(_DRIVER_WINDOW) == 50, len(_DRIVER_WINDOW)
+assert len(set(_DRIVER_WINDOW)) == 50, sorted(
+    k for k in _DRIVER_WINDOW if _DRIVER_WINDOW.count(k) > 1)
 assert set(_DRIVER_WINDOW) <= set(QUERIES), sorted(set(_DRIVER_WINDOW) - set(QUERIES))
 QUERIES = {k: QUERIES[k] for k in
            _DRIVER_WINDOW + [k for k in QUERIES if k not in _DRIVER_WINDOW]}

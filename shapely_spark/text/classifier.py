@@ -12,9 +12,8 @@ At 10^12 documents each GD iteration is one scan of the (persisted)
 feature frame — the classical distributed full-batch GD layout; swap in
 deterministic hash mini-batches (hash_split-style) if scans dominate.
 
-Cross-engine reproducibility (the oracle-gate contract, same recipe as
-ann/cluster.kmeans_fit): every per-row gradient contribution is rounded
-to 9 decimals and summed on a DECIMAL(28,9) carrier, so the gradient —
+Cross-engine reproducibility (the oracle-gate contract): every per-row
+gradient contribution is rounded to 9 decimals and summed on a DECIMAL(28,9) carrier, so the gradient —
 and therefore the whole weight trajectory — is independent of partition
 count and summation order and bit-identical between Spark and DuckDB
 (libm exp() ulp differences are quantized away before the sum; the

@@ -104,10 +104,17 @@ def test_knn_broadcast_equals_cell_path(spark, pages, targets):
     from shapely_spark.spark.knn import knn_join_broadcast
 
     a = knn_join_broadcast(pages, targets, k=1, point_id="url")
-    b = knn_join(pages, targets, k=1, k_ring=2, point_id="url", ties="break")
+    # small_layer_max=None keeps the 10-target layer off the broadcast
+    # dispatch, so b runs the cell-disk passes
+    stats = {}
+    b = knn_join(pages, targets, k=1, k_ring=2, point_id="url", ties="break",
+                 small_layer_max=None, stats=stats)
     pa = {(r.url, r.target_id, round(r.dist_km, 9)) for r in a.collect()}
     pb = {(r.url, r.target_id, round(r.dist_km, 9)) for r in b.collect()}
     assert pa == pb
+    assert "dispatch" not in stats
+    assert stats["unsafe_after_pass_2"] < stats["points"]  # pass 2 certified some
+    assert "unsafe_after_pass_8" in stats  # and the yield gate escalated
 
 
 def test_knn_exclusive_self_join(spark):
@@ -135,19 +142,25 @@ def test_knn_exclusive_self_join(spark):
     inc = {r.pid: r.target_id for r in knn_join_broadcast(
         pts, tgts, k=1, exclusive=False, point_id="pid").collect()}
     assert all(inc[p] == p for p in inc)
-    # cell-ring variant agrees
+    # cell-ring variant agrees: at res 7 (cells ~155 km tall) the first
+    # disk pass certifies the five clustered points, so their answers come
+    # through the disk pass's own dist_km > 0 filter
+    stats = {}
     got2 = {r.pid: r.target_id for r in knn_join(
-        pts, tgts, k=1, exclusive=True, point_id="pid").collect()}
+        pts, tgts, k=1, res=7, exclusive=True, point_id="pid",
+        small_layer_max=None, stats=stats).collect()}
     assert got2 == {r.pid: r.target_id for r in knn_join_broadcast(
         pts, tgts, k=1, exclusive=True, point_id="pid").collect()}
+    assert "dispatch" not in stats
+    assert stats["unsafe_after_pass_2"] < stats["points"]
 
 
 def test_knn_polar_cluster(spark):
     """Adversarial density (r3 verdict item 7): a target layer clustered at
-    the pole makes the longitude guarantee collapse for MOST points, so
-    nearly every point is 'unsafe' after pass 1. The bounded ring-expansion
-    retries must still produce exact results (vs brute force) without the
-    old straight-to-crossJoin behavior."""
+    the pole makes the longitude guarantee collapse, so the first disk
+    pass certifies no point. The yield gate must then skip the wider ring
+    and send the whole remainder straight to the brute-force pass, whose
+    answer must match brute force exactly."""
     rng = np.random.default_rng(11)
     n = 400
     pdf = pd.DataFrame({
@@ -162,8 +175,12 @@ def test_knn_polar_cluster(spark):
         pd.DataFrame({"target_id": list(range(40)), "t_lat": tl, "t_lon": tn}),
         "target_id long, t_lat double, t_lon double",
     )
+    stats = {}
     got = knn_join(pts, tgts, k=2, res=RES, k_ring=2, point_id="pid",
-                   ties="break").collect()
+                   ties="break", small_layer_max=None, stats=stats).collect()
+    assert "dispatch" not in stats
+    assert stats["unsafe_after_pass_2"] == stats["points"] == n
+    assert "unsafe_after_pass_8" not in stats  # no escalation
     by_pid: dict[int, list] = {}
     for r in got:
         by_pid.setdefault(r.pid, []).append((r.knn_rank, r.target_id, r.dist_km))

@@ -24,7 +24,7 @@ import pytest
 import __spark_entry__ as E
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+TABLES = "region nation customer supplier part orders lineitem events documents".split()
 
 # Oracles whose round(sum(...)) argument is exact by construction (DuckDB
 # types the arithmetic DECIMAL via its decimal literals, or the summands are
@@ -34,15 +34,6 @@ _EXACT_SUM_OK = {
     "dissolve_union_by_key",   # (2+k%5)*(2.0+k%4): DECIMAL literal arithmetic
     "collect_multipoint_bounds",  # closed-form n·cx sums of sub-unit terms, round 6
     "explode_coordinates_ngon",   # same closed-form coordinate identity
-    # k-means gates: the round(sum(...)) is the 32-dim squared distance /
-    # centroid mean inside the Lloyd's CTE. The Spark side sums these in
-    # float64 BY DESIGN (numpy partial sums inside mapInPandas — the
-    # distributed algorithm cannot ride a decimal), so the contract is the
-    # documented 6-dp centroid / 9-dp distance quantization with measured
-    # assignment margins (see kmeans_cluster_stats docstring), not an
-    # exact carrier. Output columns themselves are BIGINT/4-dp constants.
-    "kmeans_cluster_stats",
-    "semantic_dedup_keep",
     # round(sum(CASE..0/1..)::DOUBLE / nullif(sum(...),0), 6): both sums
     # are exact BIGINT 0/1 counts (partition-order free); only the final
     # single division is floating — deterministic for any partitioning.
@@ -67,6 +58,13 @@ def test_no_hugeint_or_decimal_output(con):
             if "HUGEINT" in typ or "DECIMAL" in typ:
                 bad.append((name, cname, typ))
     assert not bad, f"oracles emit pandas-float64-prone types: {bad}"
+
+
+def test_exact_sum_exemptions_are_registered():
+    """A stale exemption would silently exempt a later query that reuses
+    the name, so every exempted name must be a registered oracle."""
+    stale = sorted(_EXACT_SUM_OK - set(E.oracle_sql()))
+    assert not stale, f"_EXACT_SUM_OK names no registered oracle: {stale}"
 
 
 def test_rounded_sums_ride_a_decimal_carrier():

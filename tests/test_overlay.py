@@ -135,6 +135,20 @@ class TestOverlayKernel:
         # box [1,3]² clipped by x+y<=4: area = 4 - 2 = 2
         assert A(i2) == pytest.approx(2.0)
 
+    def test_union_shared_vertex_near_parallel_edges(self):
+        """Two pentagons sharing the vertex (0.5, 0), their edges into it
+        nearly parallel: the line-line solve of those two edges lands
+        ~1e-8 short of the shared vertex, so the noding split only one
+        side there and union(b, a) came back POLYGON EMPTY."""
+        a = from_wkt("POLYGON ((0.5 0, 0.1545085 0.47552826, -0.4045085 0.29389263, "
+                     "-0.4045085 -0.29389263, 0.1545085 -0.47552826, 0.5 0))")
+        b = from_wkt("POLYGON ((0.5 0, -0.53647451 1.42658477, -2.21352549 0.88167788, "
+                     "-2.21352549 -0.88167788, -0.53647451 -1.42658477, 0.5 0))")
+        want = A(a) + A(b) - A(O.intersection(a, b))
+        assert A(O.union(a, b)) == pytest.approx(want, abs=1e-9)
+        assert A(O.union(b, a)) == pytest.approx(want, abs=1e-9)
+        assert A(O.union(b, a)) == pytest.approx(A(O.union(a, b)), abs=1e-9)
+
 
 class TestOverlaySpark:
     def test_st_overlay_functions(self, spark):

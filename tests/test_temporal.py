@@ -1,15 +1,13 @@
-"""asof_join / range_join / kmv_distinct — the temporal-join and sketch
-operators (spark/temporal.py, spark/sketch.py). asof semantics are
-cross-checked against pandas.merge_asof (an independent implementation);
-range_join against a brute-force quadratic join; KMV against exact
-distinct counts."""
+"""asof_join / range_join — the temporal-join operators
+(spark/temporal.py). asof semantics are cross-checked against
+pandas.merge_asof (an independent implementation); range_join against a
+brute-force quadratic join."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from shapely_spark.spark.sketch import kmv_distinct
 from shapely_spark.spark.temporal import asof_join, range_join
 
 
@@ -114,29 +112,6 @@ def test_range_join_no_key_emits_each_pair_once(spark):
     i = spark.createDataFrame([(0, 0, 10_000)], "iid int, s long, e long")
     out = range_join(p, i, point_ts="t", start="s", end="e", bucket=16)
     assert out.count() == 50
-
-
-def test_kmv_exact_below_k_and_estimate_above(spark):
-    df = spark.createDataFrame(
-        [(i % 500, "big") for i in range(3000)] + [(i, "small") for i in range(20)],
-        "uid long, g string",
-    )
-    rows = {r.g: r for r in kmv_distinct(df, key="uid", group_by="g", k=64).collect()}
-    assert rows["small"].n_kept == 20 and rows["small"].est_distinct == 20.0
-    big = rows["big"]
-    assert big.n_kept == 64
-    # KMV relative error ~ 1/sqrt(k-1) ≈ 12.6%; allow 4 sigma
-    assert big.est_distinct == pytest.approx(500, rel=0.5)
-    # deterministic: same input -> identical sketch
-    again = {r.g: r for r in kmv_distinct(df, key="uid", group_by="g", k=64).collect()}
-    assert again["big"].kth_min == big.kth_min
-    assert again["big"].est_distinct == big.est_distinct
-
-
-def test_kmv_ungrouped_and_null_keys(spark):
-    df = spark.createDataFrame([(i,) for i in range(200)] + [(None,)], "uid long")
-    r = kmv_distinct(df, key="uid", k=32).collect()[0]
-    assert r.n_kept == 32 and r.est_distinct == pytest.approx(200, rel=0.6)
 
 
 def test_range_join_negative_domain(spark):

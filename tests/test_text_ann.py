@@ -1,4 +1,4 @@
-"""Tests for dedup (minhash/simhash), quality/langid, and ANN search."""
+"""Tests for dedup (minhash/simhash), quality/langid and the text stack."""
 
 import numpy as np
 import pytest
@@ -80,72 +80,6 @@ def test_quality_and_langid(spark):
     assert l[2] == "en"  # fallback
 
 
-@pytest.fixture(scope="module")
-def vectors(spark):
-    rng = np.random.RandomState(11)
-    V = rng.normal(size=(300, 32))
-    rows = [(i, [float(x) for x in V[i]]) for i in range(300)]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-def test_ann_bruteforce_matches_numpy(spark, vectors):
-    from shapely_spark.ann.search import cosine_topk_bruteforce
-
-    got = {r.vec_id: r.target_id for r in cosine_topk_bruteforce(vectors, vectors, k=1).collect()}
-    rows = vectors.orderBy("vec_id").collect()
-    V = np.array([r.embedding for r in rows])
-    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-    S = Vn @ Vn.T
-    np.fill_diagonal(S, -2)
-    want = S.argmax(axis=1)
-    assert all(got[i] == int(want[i]) for i in range(300))
-
-
-def test_ann_bruteforce_k3_rank_order(spark, vectors):
-    from shapely_spark.ann.search import cosine_topk_bruteforce
-
-    out = cosine_topk_bruteforce(vectors, vectors, k=3).collect()
-    per = {}
-    for r in out:
-        per.setdefault(r.vec_id, []).append((r.rank, r.target_id))
-    assert all(len(v) == 3 for v in per.values())
-    assert all(sorted(v)[0][0] == 1 for v in per.values())
-
-
-def test_ann_lsh_recall(spark, vectors):
-    from shapely_spark.ann.search import cosine_topk_bruteforce, cosine_topk_lsh
-
-    brute = {r.vec_id: r.target_id for r in cosine_topk_bruteforce(vectors, vectors, k=1).collect()}
-    lsh = {r.vec_id: r.target_id for r in cosine_topk_lsh(vectors, vectors, k=1, n_tables=16, n_bits=4).collect()}
-    hits = sum(1 for i, t in lsh.items() if brute.get(i) == t)
-    recall = hits / len(brute)
-    assert recall >= 0.8, f"LSH top-1 recall {recall:.2f}"
-
-
-def test_ivf_exact_mode_matches_bruteforce(spark):
-    """nprobe=n_lists probes every list → identical result to brute force."""
-    from shapely_spark.ann.search import cosine_topk_bruteforce, cosine_topk_ivf
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    bf = {(r.vec_id, r.target_id) for r in
-          cosine_topk_bruteforce(e, e, k=1).collect()}
-    ivf = {(r.vec_id, r.target_id) for r in
-           cosine_topk_ivf(e, e, k=1, n_lists=8, nprobe=8).collect()}
-    assert ivf == bf
-
-
-def test_ivf_probe_recall(spark):
-    """nprobe=2/8 keeps most true top-1 neighbors (clustered embeddings)."""
-    from shapely_spark.ann.search import cosine_topk_bruteforce, cosine_topk_ivf
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    bf = {r.vec_id: r.target_id for r in cosine_topk_bruteforce(e, e, k=1).collect()}
-    ivf = {r.vec_id: r.target_id for r in
-           cosine_topk_ivf(e, e, k=1, n_lists=8, nprobe=2).collect()}
-    hits = sum(1 for q, t in bf.items() if ivf.get(q) == t)
-    assert hits / len(bf) >= 0.5
-
-
 def test_minhash_signature_family_independence(docs):
     """Regression for the r1 salt bug (a 2-arg transform lambda binds the
     array INDEX, collapsing all 64 positions to one hash function): two
@@ -203,44 +137,6 @@ def test_simhash_dedup_pairs_matches_exact(docs):
     assert pairs == planted
 
 
-def test_ann_recall_contract_row(spark, vectors):
-    from shapely_spark.ann.search import (
-        cosine_topk_bruteforce, cosine_topk_lsh, topk_recall_contract,
-    )
-
-    lsh = cosine_topk_lsh(vectors, vectors, k=1, n_tables=16, n_bits=4)
-    brute = cosine_topk_bruteforce(vectors, vectors, k=1)
-    row = topk_recall_contract(lsh, brute, floor=0.8).first()
-    assert row.recall_ok and row.n_queries == vectors.count() and row.floor == 0.8
-
-
-def test_ivf_distributed_exact_mode_matches_bruteforce(spark):
-    """Distributed inverted-list IVF (no driver collect of targets) with
-    nprobe=n_lists must equal brute force exactly."""
-    from shapely_spark.ann.search import (
-        cosine_topk_bruteforce, cosine_topk_ivf_distributed,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    bf = {(r.vec_id, r.target_id) for r in cosine_topk_bruteforce(e, e, k=1).collect()}
-    dd = {(r.vec_id, r.target_id) for r in
-          cosine_topk_ivf_distributed(e, e, k=1, n_lists=8, nprobe=8).collect()}
-    assert dd == bf
-
-
-def test_ivf_distributed_probe_recall(spark):
-    from shapely_spark.ann.search import (
-        cosine_topk_bruteforce, cosine_topk_ivf_distributed,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    bf = {r.vec_id: r.target_id for r in cosine_topk_bruteforce(e, e, k=1).collect()}
-    d2 = {r.vec_id: r.target_id for r in
-          cosine_topk_ivf_distributed(e, e, k=1, n_lists=8, nprobe=2).collect()}
-    hits = sum(1 for q, t in bf.items() if d2.get(q) == t)
-    assert hits / len(bf) >= 0.4
-
-
 def test_bucket_pairs_no_self_pairs_on_duplicate_rows(spark):
     """A doc landing in the same bucket twice (band-digest collision across
     bands) must not emit a (x, x) pair or duplicate (a, b) rows."""
@@ -268,108 +164,6 @@ def test_bucket_pairs_pair_filter_prunes_inside_emission(spark):
         ).collect()
     )
     assert got == [(1, 2)]
-
-
-def test_neardup_bucketed_matches_bruteforce_gate(spark):
-    """The bucketed (LSH-candidates → exact-verify) near-dup plan must
-    reproduce the exact all-pairs result on the gate corpus — this is the
-    contract that lets the driver's exact DuckDB oracle stay valid for the
-    scale plan (queries.py: embedding_neardup_pairs)."""
-    from shapely_spark.ann.search import (
-        cosine_neardup_pairs, cosine_neardup_pairs_bucketed,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    brute = {(r.id_a, r.id_b) for r in cosine_neardup_pairs(e, threshold=0.5).collect()}
-    bucketed = {(r.id_a, r.id_b)
-                for r in cosine_neardup_pairs_bucketed(e, threshold=0.5).collect()}
-    assert bucketed == brute and len(brute) >= 1
-
-
-def test_neardup_blocked_matches_bruteforce_multichunk(spark):
-    """cosine_neardup_pairs_blocked (distributed symmetric block matmul —
-    no driver collect, no full-matrix broadcast) is EXACT: equal to the
-    broadcast brute force with chunk_rows small enough to force many
-    diagonal and off-diagonal block tasks."""
-    from shapely_spark.ann.search import (
-        cosine_neardup_pairs, cosine_neardup_pairs_blocked,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    brute = {(r.id_a, r.id_b) for r in cosine_neardup_pairs(e, threshold=0.45).collect()}
-    blocked = {(r.id_a, r.id_b)
-               for r in cosine_neardup_pairs_blocked(
-                   e, threshold=0.45, chunk_rows=64).collect()}
-    assert blocked == brute and len(brute) >= 1
-
-
-def test_neardup_bucketed_noprune_dispatch(spark):
-    """With parameters whose random-pair collision probability exceeds the
-    dispatch cutoff (defaults: 48 tables × 4 bits → 95% of ALL pairs are
-    candidates), the bucketed plan routes to the blocked exact verify —
-    generating a ~full candidate list would cost more than verifying
-    everything. Result must still be exact."""
-    import numpy as np
-
-    from shapely_spark.ann.search import (
-        cosine_neardup_pairs, cosine_neardup_pairs_bucketed,
-    )
-
-    rng = np.random.RandomState(11)
-    V = rng.normal(size=(300, 16))
-    V[250:] = V[:50] + 0.3 * rng.normal(size=(50, 16))  # moderate-cos pairs
-    rows = [(i, [float(x) for x in V[i]]) for i in range(len(V))]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    brute = {(r.id_a, r.id_b) for r in cosine_neardup_pairs(df, threshold=0.5).collect()}
-    got = {(r.id_a, r.id_b)
-           for r in cosine_neardup_pairs_bucketed(df, threshold=0.5).collect()}
-    assert got == brute and len(brute) >= 10
-
-
-def test_neardup_bucketed_selective_on_clustered_vectors(spark):
-    """On clustered data (the realistic regime) the sketch is SELECTIVE:
-    planted duplicate pairs are all found while the candidate set stays
-    far below C(n,2) — the property that makes the plan scale-safe."""
-    import numpy as np
-
-    from shapely_spark.ann.search import (
-        cosine_lsh_candidate_pairs, cosine_neardup_pairs_bucketed,
-    )
-
-    rng = np.random.RandomState(3)
-    base = rng.normal(size=(200, 32))
-    # plant 20 near-duplicate partners: ids 200..219 ≈ ids 0..19 + tiny noise
-    dups = base[:20] + 0.02 * rng.normal(size=(20, 32))
-    V = np.vstack([base, dups])
-    rows = [(i, [float(x) for x in V[i]]) for i in range(len(V))]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    got = {(r.id_a, r.id_b)
-           for r in cosine_neardup_pairs_bucketed(
-               df, threshold=0.9, n_tables=24, n_bits=8).collect()}
-    want = {(i, 200 + i) for i in range(20)}
-    assert want <= got
-    # selectivity: high-bit sketch candidates ≪ all pairs (C(220,2) = 24090)
-    n_cand = cosine_lsh_candidate_pairs(df, n_tables=24, n_bits=8).count()
-    assert n_cand < 24090 * 0.25, n_cand
-
-
-def test_lsh_distributed_matches_broadcast_lsh(spark, vectors):
-    """The distributed LSH refine (posting-list chunks, cogroup, salted
-    groups, no driver collect) must produce the same top-1 as the
-    broadcast-refine variant wherever the query has candidates, with and
-    without query salting."""
-    from shapely_spark.ann.search import cosine_topk_lsh, cosine_topk_lsh_distributed
-
-    bl = {r.vec_id: r.target_id
-          for r in cosine_topk_lsh(vectors, vectors, k=1, n_tables=16, n_bits=4).collect()}
-    for salt in (1, 3):
-        dl = {r.vec_id: r.target_id
-              for r in cosine_topk_lsh_distributed(
-                  vectors, vectors, k=1, n_tables=16, n_bits=4, query_salt=salt).collect()}
-        # broadcast variant brute-falls-back on empty-candidate queries;
-        # distributed does not — compare on the distributed key set
-        assert dl and all(bl[q] == t for q, t in dl.items()), f"salt={salt}"
 
 
 def test_bucket_pairs_hard_ceiling_with_none_cap(spark):
@@ -681,60 +475,6 @@ def test_remove_duplicate_spans_short_docs_untouched(spark):
     out = remove_duplicate_spans(df, window=8, stride=4, min_docs=2).collect()
     assert all(r.n_removed == 0 for r in out)
     assert {r.clean_text for r in out} == {"tiny doc"}
-
-
-# ---------------------------------------------------------------------------
-# product quantization (ann/search.py PQ tier)
-# ---------------------------------------------------------------------------
-
-def test_pq_roundtrip_shapes_and_determinism():
-    from shapely_spark.ann.search import pq_encode, pq_reconstruct, pq_train
-
-    rng = np.random.RandomState(4)
-    T = rng.normal(size=(200, 32))
-    T /= np.linalg.norm(T, axis=1, keepdims=True)
-    books = pq_train(T, m=8, n_codes=16)
-    codes = pq_encode(T, books)
-    assert books.shape == (8, 16, 4) and codes.shape == (200, 8)
-    assert codes.dtype == np.uint8
-    assert np.array_equal(codes, pq_encode(T, pq_train(T, m=8, n_codes=16)))
-    # finer quantization strictly reduces mean distortion
-    coarse = np.linalg.norm(T - pq_reconstruct(codes, books), axis=1).mean()
-    b2 = pq_train(T, m=16, n_codes=32)
-    fine = np.linalg.norm(T - pq_reconstruct(pq_encode(T, b2), b2), axis=1).mean()
-    assert fine < coarse
-    with pytest.raises(ValueError):
-        pq_train(T, m=5)
-
-
-def test_pq_full_refine_matches_bruteforce(spark, vectors):
-    """refine >= n_targets exact-rescoring every candidate must reproduce
-    brute force exactly (the ADC stage only orders candidates)."""
-    from shapely_spark.ann.search import cosine_topk_bruteforce, cosine_topk_pq
-
-    bf = {(r.vec_id, r.target_id, r.rank) for r in
-          cosine_topk_bruteforce(vectors, vectors, k=2).collect()}
-    pq = {(r.vec_id, r.target_id, r.rank) for r in
-          cosine_topk_pq(vectors, vectors, k=2, m=8, n_codes=16,
-                         refine=1000).collect()}
-    assert pq == bf
-
-
-def test_pq_clustered_recall_and_self_exclusion(spark):
-    from shapely_spark.ann.search import cosine_topk_bruteforce, cosine_topk_pq
-
-    rng = np.random.RandomState(9)
-    centers = rng.normal(size=(12, 32)) * 4.0
-    V = np.concatenate([c + rng.normal(size=(25, 32)) * 0.3 for c in centers])
-    rows = [(i, [float(x) for x in V[i]]) for i in range(len(V))]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    brute = {r.vec_id: r.target_id for r in
-             cosine_topk_bruteforce(df, df, k=1).collect()}
-    pq = {r.vec_id: r.target_id for r in
-          cosine_topk_pq(df, df, k=1, m=8, n_codes=16, refine=32).collect()}
-    assert all(t != q for q, t in pq.items())          # self excluded
-    recall = sum(1 for q, t in pq.items() if brute[q] == t) / len(brute)
-    assert recall >= 0.8, f"PQ clustered top-1 recall {recall:.2f}"
 
 
 def test_verify_prefilter_respects_rounded_threshold(spark):
