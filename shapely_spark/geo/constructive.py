@@ -1270,67 +1270,6 @@ def minimum_bounding_circle(geom: Geometry | None, return_center: bool = False):
     return Geometry(POLYGON, rings=[np.vstack([ring, ring[:1]])])
 
 
-# ---------------------------------------------------------------------------
-# intersection — internal fast paths for point/line vs polygon and
-# polygon vs CONVEX polygon (the tiling path only needs rect/convex
-# clips); everything else delegates to the general overlay machinery in
-# overlay.py, which is also the public `geo.intersection`.
-# (reference: shapely/set_operations.py:114)
-# ---------------------------------------------------------------------------
-
-def intersection(a: Geometry | None, b: Geometry | None) -> Geometry | None:
-    from . import kernels as K
-
-    if a is None or b is None:
-        return None
-    if a.is_empty or b.is_empty:
-        return empty(GEOMETRYCOLLECTION)
-    da = K._dim(a)
-    db = K._dim(b)
-    if da > db:
-        return intersection(b, a)
-    if da == 0:
-        pts = a.all_coords()[:, :2]
-        cls = K._all_class(pts, b)
-        keep = pts[cls >= 1]
-        if len(keep) == 0:
-            return empty(POINT if a.type_id == POINT else MULTIPOINT)
-        if len(keep) == 1:
-            return make_point(*keep[0])
-        return multipoint([tuple(p) for p in keep])
-    if db == 2 and _is_convex(b):
-        ring = _convex_ring(b)
-        if da == 1:
-            return _clip_line_convex(a, ring)
-        if _is_convex(a):
-            out = np.asarray(_convex_ring(a))
-            for i in range(len(ring) - 1):
-                out = _clip_halfplane(out, ring[i], ring[i + 1])
-                if out is None:
-                    return empty(POLYGON)
-            return Geometry(POLYGON, rings=[np.vstack([out, out[:1]])])
-    from . import overlay as O
-
-    return O.intersection(a, b)
-
-
-def _convex_ring(g: Geometry) -> np.ndarray:
-    ring = np.asarray(g.rings[0])[:, :2]
-    if signed_ring_area(ring) < 0:
-        ring = ring[::-1]
-    return ring
-
-
-def _is_convex(g: Geometry) -> bool:
-    if g.type_id != POLYGON or len(g.rings or []) != 1:
-        return False
-    r = _convex_ring(g)[:-1]
-    nxt = np.roll(r, -1, axis=0)
-    prv = np.roll(r, 1, axis=0)
-    cross = np.cross(r - prv, nxt - r)
-    return bool((cross >= -1e-12).all())
-
-
 def _clip_halfplane(poly_pts: np.ndarray, e0, e1):
     """Sutherland–Hodgman single edge clip; poly_pts open ring (CCW)."""
     if poly_pts is None or len(poly_pts) == 0:
@@ -1357,64 +1296,6 @@ def _clip_halfplane(poly_pts: np.ndarray, e0, e1):
     if len(out) < 3:
         return None
     return np.array(out)
-
-
-def _clip_line_convex(line_geom: Geometry, ring: np.ndarray) -> Geometry:
-    from . import kernels as K
-
-    pieces = []
-    stack = [line_geom]
-    coords_list = []
-    while stack:
-        g = stack.pop()
-        if g.type_id in (LINESTRING, LINEARRING) and g.coords is not None:
-            coords_list.append(np.asarray(g.coords)[:, :2])
-        for p in g.parts or []:
-            stack.append(p)
-    for c in coords_list:
-        cur = []
-        for i in range(len(c) - 1):
-            p0, p1 = c[i].copy(), c[i + 1].copy()
-            t0, t1 = 0.0, 1.0
-            d = p1 - p0
-            ok = True
-            for j in range(len(ring) - 1):
-                e0, e1 = ring[j], ring[j + 1]
-                ex, ey = e1[0] - e0[0], e1[1] - e0[1]
-                f0 = ex * (p0[1] - e0[1]) - ey * (p0[0] - e0[0])
-                fd = ex * d[1] - ey * d[0]
-                if fd == 0:
-                    if f0 < 0:
-                        ok = False
-                        break
-                    continue
-                t = -f0 / fd
-                if fd > 0:
-                    t0 = max(t0, t)
-                else:
-                    t1 = min(t1, t)
-                if t0 > t1:
-                    ok = False
-                    break
-            if not ok:
-                if len(cur) >= 2:
-                    pieces.append(np.array(cur))
-                cur = []
-                continue
-            q0, q1 = p0 + t0 * d, p0 + t1 * d
-            if cur and np.allclose(cur[-1], q0):
-                cur.append(q1)
-            else:
-                if len(cur) >= 2:
-                    pieces.append(np.array(cur))
-                cur = [q0, q1]
-        if len(cur) >= 2:
-            pieces.append(np.array(cur))
-    if not pieces:
-        return empty(LINESTRING)
-    if len(pieces) == 1:
-        return Geometry(LINESTRING, coords=pieces[0])
-    return Geometry(MULTILINESTRING, parts=[Geometry(LINESTRING, coords=p) for p in pieces])
 
 
 def point_on_surface(geom: Geometry | None) -> Geometry | None:

@@ -819,11 +819,59 @@ def polygonize(lines) -> Geometry:
     Each noded fragment is walked as two directed half-edges, faces to the
     left: every bounded face comes out once as a CCW ring (the unbounded
     face walks CW)."""
+    faces, _ = _faces(lines)
+    if not faces:
+        return empty(GEOMETRYCOLLECTION)
+    return Geometry(GEOMETRYCOLLECTION, parts=faces)
+
+
+def _faces(lines) -> tuple[list[Geometry], float]:
+    """(faces, tol): polygonize's faces and the noding tolerance."""
     frags, tol = _self_noded(lines)
     if not len(frags):
-        return empty(GEOMETRYCOLLECTION)
+        return [], tol
     rings = _stitch(np.concatenate([frags, frags[:, [2, 3, 0, 1]]]), max(tol, 1e-11))
-    return Geometry(GEOMETRYCOLLECTION, parts=_nest_faces(rings, tol))
+    return _nest_faces(rings, tol), tol
+
+
+def _edge_groups(faces: list[Geometry], tol: float) -> list[list[int]]:
+    """Indices of `faces` grouped into edge-connected components. Faces
+    of one noded arrangement share an edge only as one whole fragment,
+    walked once by each, so a shared edge is a ring edge of one face
+    whose endpoints match a ring edge of the other within 2·tol (split
+    nodes computed from different segments differ by ulps). Faces that
+    meet at a vertex only stay apart."""
+    tol2 = 2 * max(tol, 1e-11)
+    cell = 2 * tol2  # matching midpoints lie in the same or adjacent cells
+    parent = list(range(len(faces)))
+
+    def find(i):
+        while parent[i] != i:
+            parent[i] = parent[parent[i]]
+            i = parent[i]
+        return i
+
+    seen: dict[tuple, list[tuple]] = {}
+    for i, f in enumerate(faces):
+        for r in f.rings:
+            pts = np.asarray(r)[:, :2].tolist()
+            for (x1, y1), (x2, y2) in zip(pts, pts[1:]):
+                kx = math.floor((x1 + x2) / (2 * cell))
+                ky = math.floor((y1 + y2) / (2 * cell))
+                for dx in (-1, 0, 1):
+                    for dy in (-1, 0, 1):
+                        for j, a1, b1, a2, b2 in seen.get((kx + dx, ky + dy), ()):
+                            if j != i and (
+                                    max(abs(a1 - x2), abs(b1 - y2),
+                                        abs(a2 - x1), abs(b2 - y1)) <= tol2
+                                    or max(abs(a1 - x1), abs(b1 - y1),
+                                           abs(a2 - x2), abs(b2 - y2)) <= tol2):
+                                parent[find(j)] = find(i)
+                seen.setdefault((kx, ky), []).append((i, x1, y1, x2, y2))
+    groups: dict[int, list[int]] = {}
+    for i in range(len(faces)):
+        groups.setdefault(find(i), []).append(i)
+    return list(groups.values())
 
 
 def build_area(geom: Geometry) -> Geometry:
@@ -834,32 +882,51 @@ def build_area(geom: Geometry) -> Geometry:
     concentric squares → the holed annulus; three → annulus + filled core."""
     if geom is None or geom.is_empty:
         return empty(POLYGON)
-    faces = [p for p in (polygonize([geom]).parts or [])]
+    faces, tol = _faces([geom])
     if not faces:
         return empty(POLYGON)
     from .constructive import point_on_surface
 
-    reps = [point_on_surface(p).coords[0] for p in faces]
+    # a shell that contains p's rep point contains p, so its bbox covers
+    # p's: faces no other shell bbox covers sit at depth 0 untested
+    box = np.array([[r[:, 0].min(), r[:, 1].min(), r[:, 0].max(), r[:, 1].max()]
+                    for r in (np.asarray(f.rings[0]) for f in faces)])
+    slack = 2 * max(tol, 1e-11)
+    covers = ((box[None, :, :2] <= box[:, None, :2] + slack).all(axis=2)
+              & (box[:, None, 2:] <= box[None, :, 2:] + slack).all(axis=2))
+    np.fill_diagonal(covers, False)
     out = []
     for i, p in enumerate(faces):
         depth = 0
-        for j, q in enumerate(faces):
-            if i == j:
-                continue
-            # depth counts SHELL containment only (the hole regions of q
-            # still nest p's rep point inside q's shell ring)
-            cls = K.points_in_rings_class(
-                np.array([reps[i][0]]), np.array([reps[i][1]]), [q.rings[0]]
-            )[0]
-            if cls == INTERIOR:
-                depth += 1
+        cand = np.flatnonzero(covers[i])
+        if len(cand):
+            x, y = point_on_surface(p).coords[0][:2]
+            for j in cand:
+                # depth counts SHELL containment only (the hole regions of
+                # q still nest p's rep point inside q's shell ring)
+                cls = K.points_in_rings_class(
+                    np.array([x]), np.array([y]), [faces[j].rings[0]]
+                )[0]
+                if cls == INTERIOR:
+                    depth += 1
         if depth % 2 == 0:
             out.append(p)
     if not out:
         return empty(POLYGON)
+    if len(out) == 1:
+        return out[0]
     # kept faces may share edges (a multipolygon whose parts overlap or
-    # abut): dissolve them, as GEOS BuildArea ends with a union
-    return out[0] if len(out) == 1 else union_all(out)
+    # abut): dissolve each edge-connected group, as GEOS BuildArea ends
+    # with a union; faces that touch the rest at vertices only (a
+    # bowtie's two triangles) are already the parts
+    parts = []
+    for grp in _edge_groups(out, tol):
+        if len(grp) == 1:
+            parts.append(out[grp[0]])
+            continue
+        u = union_all([out[i] for i in grp])
+        parts.extend(u.parts if u.type_id == MULTIPOLYGON else [u])
+    return parts[0] if len(parts) == 1 else multipolygon(parts)
 
 
 def make_valid(geom: Geometry) -> Geometry:

@@ -207,16 +207,6 @@ def voronoi_polygons(geom: Geometry | None, tolerance: float = 0.0,
 # pole of inaccessibility / maximum inscribed circle
 # ---------------------------------------------------------------------------
 
-def _signed_dist_to_polygon(x: float, y: float, geom: Geometry) -> float:
-    """Positive inside, negative outside; magnitude = distance to boundary."""
-    rings = K._rings_of(geom)
-    segs = K._edges(geom)
-    d2 = K._seg_point_dist2(x, y, segs[:, 0], segs[:, 1], segs[:, 2], segs[:, 3])
-    d = math.sqrt(float(np.min(d2))) if len(segs) else 0.0
-    cls = K.points_in_rings_class(np.array([x]), np.array([y]), rings)[0]
-    return d if cls == K.INTERIOR else (0.0 if cls == K.BOUNDARY else -d)
-
-
 def polylabel(geom: Geometry, tolerance: float = 1.0) -> Geometry:
     """Pole of inaccessibility via quadtree refinement (reference:
     shapely/algorithms/polylabel.py:7 — same cell-queue algorithm).

@@ -768,46 +768,7 @@ def wkb_size_ngon(spark, sf_dir):
     return _geo_kernel_query(spark, sf_dir, "gid long, wkb_bytes long", fn).repartition(1).sortWithinPartitions("gid")
 
 
-# ---- text / dedup / quality (training-data pipeline ops) --------------------
-
-@q(
-    "dedup_exact",
-    """
-    SELECT min(doc_id) AS keeper_id, count(*) AS group_size, md5(text) AS fp
-    FROM documents GROUP BY text ORDER BY keeper_id
-    """,
-)
-def dedup_exact(spark, sf_dir):
-    """Exact dedup: hash-groupBy on content, keep min doc_id."""
-    d = _spread(_t(spark, sf_dir, "documents"))
-    return (
-        d.groupBy("text")
-        .agg(F.min("doc_id").alias("keeper_id"), F.count("*").alias("group_size"))
-        .select("keeper_id", "group_size", F.md5(F.encode(F.col("text"), "UTF-8")).alias("fp"))
-        .repartition(1).sortWithinPartitions("keeper_id")
-    )
-
-
-@q(
-    "dedup_prefix_groups",
-    """
-    SELECT array_to_string(string_split(text, ' ')[1:8], ' ') AS prefix,
-           min(doc_id) AS keeper_id, count(*) AS group_size
-    FROM documents GROUP BY prefix HAVING count(*) > 1 ORDER BY keeper_id
-    """,
-)
-def dedup_prefix_groups(spark, sf_dir):
-    """Near-dup families by 8-token prefix fingerprint (rolling-fingerprint
-    dedup at the cheap end; groups >1 are candidate duplicate clusters)."""
-    d = _spread(_t(spark, sf_dir, "documents"))
-    prefix = F.concat_ws(" ", F.slice(F.split(F.col("text"), " "), 1, 8))
-    return (
-        d.groupBy(prefix.alias("prefix"))
-        .agg(F.min("doc_id").alias("keeper_id"), F.count("*").alias("group_size"))
-        .where(F.col("group_size") > 1)
-        .repartition(1).sortWithinPartitions("keeper_id")
-    )
-
+# ---- text / quality (training-data pipeline ops) ---------------------------
 
 @q(
     "token_count",
@@ -821,22 +782,6 @@ def token_count(spark, sf_dir):
     return d.select(
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
-        F.length("text").cast("long").alias("n_chars2"),
-    ).repartition(1).sortWithinPartitions("doc_id")
-
-
-@q(
-    "doc_fingerprint",
-    """
-    SELECT doc_id, md5(text) AS fp, length(text) AS n_chars2
-    FROM documents ORDER BY doc_id
-    """,
-)
-def doc_fingerprint(spark, sf_dir):
-    d = _spread(_t(spark, sf_dir, "documents"))
-    return d.select(
-        "doc_id",
-        F.md5(F.encode(F.col("text"), "UTF-8")).alias("fp"),
         F.length("text").cast("long").alias("n_chars2"),
     ).repartition(1).sortWithinPartitions("doc_id")
 
@@ -873,200 +818,6 @@ def quality_score(spark, sf_dir):
         ).alias("stopword_ratio"),
         F.round(F.length("text").cast("double") / F.size(w), 4).alias("avg_token_len"),
     ).repartition(1).sortWithinPartitions("doc_id")
-
-
-@q(
-    "ngram_jaccard_pairs",
-    """
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(w) - 1),
-                    i -> w[i] || '\x01' || w[i+1] || '\x01' || w[i+2])) AS s
-      FROM toks
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ninter
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT doc_a, doc_b,
-           round(CAST(ninter AS DOUBLE) / (sa.n + sb.n - ninter), 4) AS jaccard
-    FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE CAST(ninter AS DOUBLE) / (sa.n + sb.n - ninter) >= 0.2
-    ORDER BY doc_a, doc_b
-    """,
-)
-def ngram_jaccard_pairs(spark, sf_dir):
-    """Near-dup detection: word-3-gram shingle Jaccard ≥ 0.2, EXACT on any
-    corpus. Two stages:
-      1. candidates — distinct hashed-shingle explode → self equi-join on
-         the xxhash64 longs (8-byte shuffle keys; strings never enter the
-         shuffle) → per-pair hash-jaccard. Every collision class —
-         inter-doc (inflates ninter) and intra-doc (shrinks a size) — can
-         only RAISE the hash-jaccard, so threshold survivors are a strict
-         superset of the true pairs on any corpus.
-      2. verify — the surviving pairs (tiny) re-compute intersection and
-         sizes on the STRING shingle arrays, so a 64-bit collision can
-         never leak into the output. minhash_lsh_candidates is the scale
-         path; at corpus scale persist the candidate set and semi-join
-         the verify arrays instead of joining the full table."""
-    from .text.dedup import shingles_col
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    hashed = F.array_distinct(
-        F.transform(shingles_col(F.col("text"), 3), lambda s: F.xxhash64(s))
-    )
-    sh = d.select("doc_id", F.explode(hashed).alias("s"))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("ninter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    jac_h = F.col("ninter").cast("double") / (F.col("na") + F.col("nb") - F.col("ninter"))
-    cand = (
-        inter.join(sa, "doc_a").join(sb, "doc_b")
-        .where(jac_h >= 0.2)
-        .select("doc_a", "doc_b")
-    )
-    # exact verify on string shingles (full-table arrays: the docs scan is
-    # cheap here; the candidate subtree executes once in the joined plan)
-    arrs = d.select(
-        "doc_id", F.array_distinct(shingles_col(F.col("text"), 3)).alias("arr")
-    )
-    va = arrs.select(F.col("doc_id").alias("doc_a"), F.col("arr").alias("arr_a"))
-    vb = arrs.select(F.col("doc_id").alias("doc_b"), F.col("arr").alias("arr_b"))
-    ninter = F.size(F.array_intersect("arr_a", "arr_b")).cast("double")
-    jac = ninter / (F.size("arr_a") + F.size("arr_b") - ninter)
-    return (
-        cand.join(va, "doc_a").join(vb, "doc_b")
-        .where(jac >= 0.2)
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-        .repartition(1).sortWithinPartitions("doc_a", "doc_b")
-    )
-
-
-# ---- dedup scale paths (sketch → verify, oracle = exact pairs) --------------
-# Contract oracle for the sketch paths: the sketch (MinHash-LSH / SimHash
-# bands) only PRUNES; an exact-Jaccard verify filters the candidates, so the
-# output is the exact near-dup pair set whenever sketch recall is 1 at the
-# checked SF. DuckDB computes the same exact pair set all-pairs; equality
-# both proves the verify math AND pins recall = 1.0 on the gate data.
-
-_EXACT_JACCARD_PAIRS_SQL = """
-WITH sh AS (
-  SELECT doc_id,
-         list_distinct([array_to_string(w[i:i+2], chr(1))
-                        for i in range(1, len(w) - 1)]) AS s
-  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-  WHERE len(w) >= 3
-),
-e AS (SELECT doc_id, unnest(s) AS g FROM sh),
-cand AS (
-  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-  FROM e a JOIN e b ON a.g = b.g AND a.doc_id < b.doc_id
-),
-p AS (
-  SELECT cand.da AS doc_a, cand.db AS doc_b,
-         round(len(list_intersect(sa.s, sb.s))::DOUBLE
-               / len(list_distinct(list_concat(sa.s, sb.s))), 4) AS jaccard
-  FROM cand
-  JOIN sh sa ON sa.doc_id = cand.da
-  JOIN sh sb ON sb.doc_id = cand.db
-)
-SELECT doc_a, doc_b, jaccard FROM p WHERE jaccard >= 0.2
-ORDER BY doc_a, doc_b
-"""
-
-
-@q("minhash_dedup_pairs", _EXACT_JACCARD_PAIRS_SQL)
-def minhash_dedup_pairs_q(spark, sf_dir):
-    from .text.dedup import minhash_dedup_pairs
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    return minhash_dedup_pairs(d, threshold=0.2).repartition(1).sortWithinPartitions("doc_a", "doc_b")
-
-
-@q("simhash_dedup_pairs", _EXACT_JACCARD_PAIRS_SQL)
-def simhash_dedup_pairs_q(spark, sf_dir):
-    from .text.dedup import simhash_dedup_pairs
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    return simhash_dedup_pairs(d, threshold=0.2).repartition(1).sortWithinPartitions("doc_a", "doc_b")
-
-
-@q(
-    "dedup_components_chain",
-    """
-    WITH RECURSIVE
-    edges AS (
-      SELECT a.doc_id AS u, b.doc_id AS v
-      FROM documents a JOIN documents b
-        ON b.doc_id = a.doc_id + 1 AND a.lang = b.lang
-    ),
-    sym AS (SELECT u, v FROM edges UNION SELECT v AS u, u AS v FROM edges),
-    reach(node, r) AS (
-      SELECT u, v FROM sym
-      UNION
-      SELECT reach.node, sym.v
-      FROM reach JOIN sym ON reach.r = sym.u AND sym.v <> reach.node
-    ),
-    labels AS (
-      SELECT node, least(node, min(r)) AS component FROM reach GROUP BY node
-    ),
-    all_nodes AS (
-      SELECT d.doc_id AS node, coalesce(l.component, d.doc_id) AS component,
-             d.n_chars
-      FROM documents d LEFT JOIN labels l ON l.node = d.doc_id
-    )
-    SELECT component AS keeper_id,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS sum_chars
-    FROM all_nodes GROUP BY component ORDER BY keeper_id
-    """,
-)
-def dedup_components_chain(spark, sf_dir):
-    """Near-dup cluster resolution: connected components over a chaining
-    pair graph (consecutive doc_ids sharing `lang` — pairs chain into
-    paths, so the engine must PROPAGATE labels, not just group cliques),
-    then per-cluster keeper stats. Engine side is the alternating
-    large-star/small-star operator (text/components.py, O(log n) shuffle
-    rounds); the DuckDB twin computes the same labeling by recursive-CTE
-    transitive closure — tractable only at oracle scale, which is exactly
-    why the star algorithm exists."""
-    from .text.components import connected_components
-
-    d = _t(spark, sf_dir, "documents")
-    nxt = d.select(
-        (F.col("doc_id") - 1).alias("a"),
-        F.col("doc_id").alias("b"),
-        F.col("lang").alias("lang_b"),
-    )
-    edges = (
-        d.join(nxt, d["doc_id"] == nxt["a"])
-        .where(F.col("lang") == F.col("lang_b"))
-        .select("a", "b")
-    )
-    cc = connected_components(edges)
-    labeled = d.join(cc, d["doc_id"] == cc["node"], "left").select(
-        F.coalesce(cc["component"], d["doc_id"]).alias("keeper_id"),
-        d["n_chars"],
-    )
-    return (
-        labeled.groupBy("keeper_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("sum_chars"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("keeper_id")
-    )
 
 
 @q(
@@ -1327,44 +1078,6 @@ def stratified_sample_langs(spark, sf_dir):
         F.min("doc_id").cast("long").alias("min_id"),
         F.max("doc_id").cast("long").alias("max_id"))
         .repartition(1).sortWithinPartitions("lang"))
-
-
-@q(
-    "decontaminate_eval_overlap",
-    """
-    WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    ev AS (SELECT toks[1:40] AS toks FROM d WHERE doc_id % 7 = 3),
-    eg AS (SELECT DISTINCT array_to_string(toks[i+1 : i+7], ' ') AS ngram
-           FROM (SELECT toks, unnest(range(0, len(toks))) AS i FROM ev) u
-           WHERE i + 7 <= len(toks)),
-    dg AS (SELECT DISTINCT doc_id, array_to_string(toks[i+1 : i+7], ' ') AS ngram
-           FROM (SELECT doc_id, toks, unnest(range(0, len(toks))) AS i
-                 FROM d WHERE doc_id % 7 <> 3) u
-           WHERE i + 7 <= len(toks))
-    SELECT doc_id, COUNT(*)::BIGINT AS n_hits
-    FROM dg JOIN eg USING (ngram)
-    GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def decontaminate_eval_overlap(spark, sf_dir):
-    """Benchmark decontamination (text/decontam.decontaminate, r4): the
-    GPT-3-appendix-C recipe — flag every training document sharing >= 1
-    word n-gram with a held-out eval set, reporting the DISTINCT matched
-    n-grams per doc. Eval set = first 40 tokens of every 7th document
-    (the synthetic corpus's duplicate groups make this non-trivial: 11
-    contaminated docs at sf0.01 with hit counts 17-34); n=7 here vs the
-    published n=13 because the synthetic vocabulary is tiny. Scale
-    shape: eval n-grams are broadcast (benchmarks are small), the
-    training side is one JVM explode + broadcast join + one partial-agg
-    shuffle — the corpus never shuffles on n-grams."""
-    from .text.decontam import decontaminate, eval_ngrams
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    ev = eval_ngrams(d.where(F.col("doc_id") % 7 == 3), n=7, max_tokens=40)
-    train = d.where(F.col("doc_id") % 7 != 3)
-    out = decontaminate(train, ev, n=7)
-    return (out.select("doc_id", F.col("n_hits").cast("long").alias("n_hits"))
-            .repartition(1).sortWithinPartitions("doc_id"))
 
 
 @q(
@@ -2301,43 +2014,6 @@ def snapshot_table_time_travel(spark, sf_dir):
 
 
 @q(
-    "bloom_decontaminate_counts",
-    """
-    WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    ev AS (SELECT toks[1:30] AS toks FROM d WHERE doc_id % 5 = 2),
-    eg AS (SELECT DISTINCT array_to_string(toks[i+1 : i+6], ' ') AS ngram
-           FROM (SELECT toks, unnest(range(0, len(toks))) AS i FROM ev) u
-           WHERE i + 6 <= len(toks)),
-    dg AS (SELECT DISTINCT doc_id, array_to_string(toks[i+1 : i+6], ' ') AS ngram
-           FROM (SELECT doc_id, toks, unnest(range(0, len(toks))) AS i
-                 FROM d WHERE doc_id % 5 <> 2) u
-           WHERE i + 6 <= len(toks))
-    SELECT doc_id, COUNT(*)::BIGINT AS n_hits
-    FROM dg JOIN eg USING (ngram)
-    GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def bloom_decontaminate_counts(spark, sf_dir):
-    """Bloom-prefiltered decontamination (text/decontam.
-    bloom_decontaminate, r4): same contract as decontaminate_eval_overlap
-    (distinct shared n-grams per training doc) through the two-stage
-    plan that survives an eval suite too big for an exact broadcast map —
-    xxhash64 JVM-side, Arrow-batched membership test against the ~1.2
-    byte/n-gram broadcast filter, then an exact verify join over only
-    the surviving candidates (true hits + ~fpp false positives), which
-    removes every FP. The oracle is the PLAIN exact n-gram join: the
-    gate proves the Bloom stage loses nothing and leaks nothing."""
-    from .text.decontam import bloom_decontaminate, eval_ngrams
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    ev = eval_ngrams(d.where(F.col("doc_id") % 5 == 2), n=6, max_tokens=30)
-    train = d.where(F.col("doc_id") % 5 != 2)
-    out = bloom_decontaminate(train, ev, n=6, fpp=0.01)
-    return (out.select("doc_id", F.col("n_hits").cast("long").alias("n_hits"))
-            .repartition(1).sortWithinPartitions("doc_id"))
-
-
-@q(
     "sequence_pack_chunks",
     """
     WITH t AS (SELECT doc_id,
@@ -2403,50 +2079,6 @@ def pack_chunk_occupancy(spark, sf_dir):
                        F.col("n_docs").cast("long").alias("n_docs"),
                        F.col("n_whole_docs").cast("long").alias("n_whole_docs"))
             .repartition(1).sortWithinPartitions("chunk_id"))
-
-
-@q(
-    "bm25_topk_docs",
-    """
-    WITH b2 AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS dl,
-                       string_split(text, ' ') AS w
-                FROM documents),
-    s AS (SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl FROM b2),
-    tf AS (SELECT doc_id, dl, word, count(*)::BIGINT AS tf
-           FROM (SELECT doc_id, dl, unnest(w) AS word FROM b2)
-           WHERE word IN ('hash', 'join', 'window', 'stream', 'vector')
-           GROUP BY doc_id, dl, word),
-    idf AS (SELECT word, ln((n - df + 0.5) / (df + 0.5) + 1.0) AS idf
-            FROM (SELECT word, count(*)::DOUBLE AS df FROM tf
-                  GROUP BY word), s),
-    sc AS (SELECT doc_id,
-                  CAST(round(sum(CAST(round(idf * ((tf * (1.2 + 1.0))
-                       / (tf + 1.2 * ((1.0 - 0.75)
-                                      + 0.75 * dl / avgdl))), 9)
-                       AS DECIMAL(20,9))), 6) AS DOUBLE) AS score
-           FROM tf JOIN idf USING (word), s GROUP BY doc_id),
-    top AS (SELECT doc_id, score FROM sc
-            ORDER BY score DESC, doc_id LIMIT 20)
-    SELECT row_number() OVER (ORDER BY score DESC, doc_id)::BIGINT AS rank,
-           doc_id, score
-    FROM top ORDER BY rank
-    """,
-)
-def bm25_topk_docs(spark, sf_dir):
-    """BM25 top-k retrieval (text/search.bm25_topk, r4): Okapi BM25
-    (k1=1.2, b=0.75, the Lucene default) for a 5-term bag-of-words
-    query, scored entirely with JVM expressions — corpus stats from one
-    aggregate, idf as a broadcast |terms|-row relation, top-k planned as
-    TakeOrderedAndProject (per-partition heaps, no global sort shuffle).
-    Scores rounded to 6 decimals and tie-broken by doc_id so the DuckDB
-    twin (identical arithmetic op order) selects the identical ranking."""
-    from .text.search import bm25_topk
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    out = bm25_topk(d, ["hash", "join", "window", "stream", "vector"], k=20)
-    return (out.select(F.col("rank").cast("long").alias("rank"),
-                       "doc_id", "score")
-            .repartition(1).sortWithinPartitions("rank"))
 
 
 @q(
@@ -2723,52 +2355,6 @@ def corpus_shuffle_head(spark, sf_dir):
 
 
 @q(
-    "paragraph_dedup_clean",
-    """
-    WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-    p AS (SELECT doc_id, i AS idx,
-                 array_to_string(w[i*10+1 : i*10+10], ' ') AS para
-          FROM (SELECT doc_id, w,
-                       unnest(range(0, CAST(ceil(len(w) / 10.0) AS BIGINT)))
-                         AS i
-                FROM d) u),
-    k AS (SELECT doc_id, idx, para,
-                 row_number() OVER (PARTITION BY para
-                                    ORDER BY doc_id, idx) = 1 AS keep
-          FROM p)
-    SELECT doc_id,
-           md5(coalesce(string_agg(para, ' ' ORDER BY idx)
-                          FILTER (WHERE keep), '')) AS clean_md5,
-           count(*)::BIGINT AS n_units,
-           (count(*) - sum(CASE WHEN keep THEN 1 ELSE 0 END))::BIGINT
-             AS n_removed
-    FROM k GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def paragraph_dedup_clean(spark, sf_dir):
-    """Cross-document unit dedup (text/dedup.paragraph_dedup, r4): the
-    RefinedWeb/Falcon paragraph dedup — only the FIRST corpus-wide
-    occurrence (by (doc_id, position)) of each repeated unit survives;
-    documents are reassembled in order. Units here are 10-token blocks
-    (this corpus has no structural separators; the sep:'\\n\\n' mode is
-    pytest-covered on real multi-paragraph strings) — the corpus's
-    shared prefixes guarantee cross-document removals. ONE min-struct
-    aggregate window keyed by unit (no sort, hot boilerplate costs its
-    row count) + ONE reassembly groupBy. Gate compares md5 of the
-    cleaned text plus unit/removal counts per document."""
-    from .text.dedup import paragraph_dedup
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    out = paragraph_dedup(d, unit="tokens:10")
-    return (out.select(
-                "doc_id",
-                F.md5(F.encode(F.col("clean_text"), "UTF-8"))
-                 .alias("clean_md5"),
-                "n_units", "n_removed")
-            .repartition(1).sortWithinPartitions("doc_id"))
-
-
-@q(
     "mixture_sample_counts",
     """
     WITH d AS (SELECT doc_id, source,
@@ -2810,115 +2396,6 @@ def mixture_sample_counts(spark, sf_dir):
                  F.sum(F.col("doc_id") + F.col("copy")).cast("long")
                   .alias("id_sum"))
             .repartition(1).sortWithinPartitions("source"))
-
-
-@q(
-    "training_pipeline_summary",
-    """
-    WITH base AS (SELECT doc_id, lang, text FROM documents
-                  WHERE doc_id % 7 <> 3),
-    w0 AS (SELECT doc_id, lang, text, string_split_regex(text, ' +') AS w
-           FROM base),
-    m AS (
-      SELECT doc_id, lang, text,
-             len(w) AS n_words,
-             list_sum(list_transform(w, x -> length(x)))::DOUBLE / len(w)
-               AS mean_len,
-             length(regexp_replace(text, '[^#…]', '', 'g'))::DOUBLE
-               / greatest(len(w), 1) AS sym_ratio,
-             len(list_distinct(list_filter(w, x -> list_contains(
-               ['the','a','of','and','to','in','is','on','for','with'], x))))
-               AS stop_hits,
-             len(list_filter(w, x -> NOT regexp_matches(x, '^[A-Za-z]')))::DOUBLE
-               / greatest(len(w), 1) AS nonalpha
-      FROM w0
-    ),
-    qpass AS (
-      SELECT doc_id, lang, text FROM m
-      WHERE n_words >= 50 AND n_words <= 100000
-        AND mean_len >= 3.0 AND mean_len <= 10.0
-        AND sym_ratio < 0.1 AND stop_hits >= 2 AND nonalpha < 0.3
-    ),
-    pk AS (
-      SELECT doc_id, lang, text,
-             array_to_string(string_split(text, ' ')[1:12], ' ') AS pfx
-      FROM qpass
-    ),
-    keep AS (
-      SELECT doc_id, lang, text FROM (
-        SELECT doc_id, lang, text,
-               min(doc_id) OVER (PARTITION BY pfx) AS kid
-        FROM pk)
-      WHERE doc_id = kid
-    ),
-    evt AS (SELECT string_split(text, ' ')[1:40] AS toks FROM documents
-            WHERE doc_id % 7 = 3),
-    eg AS (SELECT DISTINCT array_to_string(toks[i+1 : i+7], ' ') AS ngram
-           FROM (SELECT toks, unnest(range(0, len(toks))) AS i FROM evt) u
-           WHERE i + 7 <= len(toks)),
-    kt AS (SELECT doc_id, string_split(text, ' ') AS toks FROM keep),
-    dg AS (SELECT DISTINCT doc_id, array_to_string(toks[i+1 : i+7], ' ') AS ngram
-           FROM (SELECT doc_id, toks, unnest(range(0, len(toks))) AS i
-                 FROM kt) u
-           WHERE i + 7 <= len(toks)),
-    contam AS (SELECT DISTINCT doc_id FROM dg JOIN eg USING (ngram)),
-    clean AS (SELECT * FROM keep
-              WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
-    t AS (SELECT doc_id, lang,
-                 len(string_split(text, ' '))::BIGINT AS n_tokens FROM clean),
-    c AS (SELECT doc_id, lang, n_tokens,
-                 coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                      0)::BIGINT AS s
-          FROM t)
-    SELECT lang, COUNT(*)::BIGINT AS n_docs, SUM(n_tokens)::BIGINT AS sum_tokens,
-           SUM((s + n_tokens - 1) // 512 - s // 512 + 1)::BIGINT
-             AS sum_chunk_spans
-    FROM c GROUP BY lang ORDER BY lang
-    """,
-)
-def training_pipeline_summary(spark, sf_dir):
-    """End-to-end training-data pipeline as ONE composed DataFrame plan —
-    the workflow the engine exists for, each stage an operator gated
-    elsewhere on its own: (1) drop held-out eval docs, (2) Gopher
-    quality gates (text/quality.gopher_quality_flags — pure column
-    math, pushdown-able filter), (3) prefix dedup keeping the min-id doc
-    per 12-token prefix (the boilerplate-header key of
-    dedup_prefix_groups — this corpus has no EXACT dupes, so the prefix
-    key is what bites; one partitioned window, no join-back), (4) benchmark
-    decontamination via 7-gram collision with the broadcast eval set
-    (text/decontam.decontaminate, anti-join), (5) concat-and-chop
-    sequence packing of the survivors (text/packing.pack_sequences,
-    two-level prefix sum). Output: per-language survivor counts, token
-    totals, and packed chunk-span totals. Scale shape: two partial-agg
-    shuffles (text-group window, lang summary), one broadcast join, one
-    anti-join, the packing scan — nothing quadratic, nothing
-    single-partition over the corpus."""
-    from .text.decontam import decontaminate, eval_ngrams
-    from .text.packing import pack_sequences
-    from .text.quality import gopher_quality_flags
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    base = d.where(F.col("doc_id") % 7 != 3).select("doc_id", "lang", "text")
-    qpass = (gopher_quality_flags(base).where("gopher_pass")
-             .select("doc_id", "lang", "text"))
-    pfx = F.concat_ws(" ", F.slice(F.split(F.col("text"), " "), 1, 12))
-    wk = Window.partitionBy("__pfx")
-    keep = (qpass.withColumn("__pfx", pfx)
-            .withColumn("__kid", F.min("doc_id").over(wk))
-            .where(F.col("doc_id") == F.col("__kid"))
-            .drop("__pfx", "__kid"))
-    ev = eval_ngrams(d.where(F.col("doc_id") % 7 == 3), n=7, max_tokens=40)
-    contam = decontaminate(keep, ev, n=7).select("doc_id")
-    clean = keep.join(contam, "doc_id", "left_anti")
-    packed = pack_sequences(clean, seq_len=512, bucket=64)
-    lang_of = clean.select("doc_id", "lang")
-    return (packed.join(lang_of, "doc_id")
-            .groupBy("lang")
-            .agg(F.count("*").cast("long").alias("n_docs"),
-                 F.sum("n_tokens").cast("long").alias("sum_tokens"),
-                 F.sum("n_chunks").cast("long").alias("sum_chunk_spans"))
-            .repartition(1).sortWithinPartitions("lang"))
 
 
 @q(
@@ -4860,91 +4337,6 @@ def offset_curve_lengths(spark, sf_dir):
 
 
 @q(
-    "duplicate_spans_counts",
-    """
-    WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    u AS (SELECT doc_id, toks, unnest(range(0, len(toks))) AS i FROM d),
-    w AS (
-      SELECT doc_id, array_to_string(toks[i+1 : i+8], ' ') AS span
-      FROM u
-      WHERE i % 4 = 0 AND i + 8 <= len(toks)
-    )
-    SELECT span,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           CAST(count(*) AS BIGINT) AS n_occ
-    FROM w GROUP BY span HAVING count(*) >= 2
-    ORDER BY span
-    """,
-)
-def duplicate_spans_counts(spark, sf_dir):
-    """Duplicate-span counting over the documents table (text/dedup.py
-    duplicate_spans): 8-token windows at stride 4, global frequency with
-    countDistinct docs — the substring-dedup approximation. DuckDB
-    rebuilds the identical window set with per-row unnest(range(len))
-    list slicing — no token-length cap on either side (r4: the oracle
-    previously enumerated a fixed range(0,4000), silently bounding
-    documents to ~4004 tokens while the Spark side had no cap)."""
-    from .text.dedup import duplicate_spans
-
-    docs = _t(spark, sf_dir, "documents")
-    out = duplicate_spans(docs, window=8, stride=4, min_count=2)
-    return out.repartition(1).sortWithinPartitions("span")
-
-
-@q(
-    "remove_duplicate_spans_clean",
-    """
-    WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    u AS (SELECT doc_id, toks, unnest(range(0, len(toks))) AS i FROM d),
-    w AS (
-      SELECT doc_id, i AS s, array_to_string(toks[i+1 : i+8], ' ') AS span
-      FROM u WHERE i % 4 = 0 AND i + 8 <= len(toks)
-    ),
-    bad AS (SELECT span FROM w GROUP BY span HAVING count(DISTINCT doc_id) >= 2),
-    cov AS (
-      SELECT DISTINCT w.doc_id, unnest(range(s, s + 8)) AS idx
-      FROM w JOIN bad USING (span)
-    ),
-    kept AS (
-      SELECT u.doc_id, u.i, toks[u.i + 1] AS t
-      FROM u
-      WHERE NOT EXISTS (SELECT 1 FROM cov
-                        WHERE cov.doc_id = u.doc_id AND cov.idx = u.i)
-    ),
-    clean AS (
-      SELECT doc_id, string_agg(t, ' ' ORDER BY i) AS clean_text FROM kept
-      GROUP BY doc_id
-    ),
-    nrem AS (SELECT doc_id, count(*)::BIGINT AS n_removed FROM cov GROUP BY doc_id)
-    SELECT d.doc_id,
-           md5(COALESCE(clean.clean_text, '')) AS clean_md5,
-           COALESCE(nrem.n_removed, 0)::BIGINT AS n_removed
-    FROM d LEFT JOIN clean USING (doc_id) LEFT JOIN nrem USING (doc_id)
-    ORDER BY d.doc_id
-    """,
-)
-def remove_duplicate_spans_clean(spark, sf_dir):
-    """Duplicate-span EXCISION over the documents table (text/dedup.py
-    remove_duplicate_spans): every token position covered by an 8-token
-    window (stride 4) that occurs in >=2 distinct documents is dropped;
-    gate compares the md5 of the cleaned text plus the removed-position
-    count per doc. DuckDB rebuilds the same coverage with range-unnest
-    window enumeration and an anti-EXISTS token filter."""
-    from .text.dedup import remove_duplicate_spans
-
-    docs = _t(spark, sf_dir, "documents")
-    out = remove_duplicate_spans(docs, window=8, stride=4, min_docs=2)
-    return (
-        out.select(
-            "doc_id",
-            F.md5(F.col("clean_text").cast("binary")).alias("clean_md5"),
-            "n_removed",
-        )
-        .repartition(1).sortWithinPartitions("doc_id")
-    )
-
-
-@q(
     "buffer_polygon_ring_area",
     """
     WITH g AS (
@@ -5333,81 +4725,6 @@ def anchor_text_top_terms(spark, sf_dir):
             .repartition(1).sortWithinPartitions("dst_host"))
 
 
-_TOKS_SQL = """
-    toks AS MATERIALIZED (
-      SELECT doc_id,
-             unnest(string_split(text, ' ')) AS term,
-             unnest(range(0, len(string_split(text, ' ')))) AS pos
-      FROM documents)"""
-
-
-@q(
-    "phrase_search_hits",
-    f"""
-    WITH {_TOKS_SQL},
-    m1 AS (SELECT 'table hash' AS phrase, a.doc_id, a.pos
-           FROM toks a JOIN toks b
-             ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-           WHERE a.term = 'table' AND b.term = 'hash'),
-    m2 AS (SELECT 'table table' AS phrase, a.doc_id, a.pos
-           FROM toks a JOIN toks b
-             ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-           WHERE a.term = 'table' AND b.term = 'table'),
-    u AS (SELECT * FROM m1 UNION ALL SELECT * FROM m2)
-    SELECT phrase, doc_id, count(*)::BIGINT AS n_matches,
-           min(pos)::BIGINT AS first_pos
-    FROM u GROUP BY phrase, doc_id
-    ORDER BY phrase, doc_id
-    """,
-)
-def phrase_search_hits(spark, sf_dir):
-    """Positional phrase search over the inverted index (text/search.py
-    inverted_index + phrase_search, r4). Two phrases: 'table hash' (the
-    common bigram path) and 'table table' (a repeated-term phrase —
-    counts OVERLAPPING occurrences, the semantics substring replace()
-    gets wrong). The oracle recomputes both from a zipped-unnest token
-    relation with positional self-joins — n_matches AND the phrase START
-    offset must agree per document. The index is rebuilt per union
-    branch here (500-doc fixture; at scale it is a materialized
-    term-bucketed table read by both)."""
-    from .text.search import inverted_index, phrase_search
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    idx = inverted_index(d)
-    parts = [
-        phrase_search(idx, ph).withColumn("phrase", F.lit(ph))
-        for ph in ("table hash", "table table")
-    ]
-    out = parts[0].unionByName(parts[1])
-    return (out.select("phrase", "doc_id", "n_matches", "first_pos")
-            .repartition(1).sortWithinPartitions("phrase", "doc_id"))
-
-
-@q(
-    "inverted_index_topdf",
-    f"""
-    WITH {_TOKS_SQL},
-    td AS (SELECT term, doc_id, count(*)::BIGINT AS tf
-           FROM toks GROUP BY term, doc_id)
-    SELECT term, count(*)::BIGINT AS df, sum(tf)::BIGINT AS cf
-    FROM td GROUP BY term
-    ORDER BY df DESC, term LIMIT 15
-    """,
-)
-def inverted_index_topdf(spark, sf_dir):
-    """Index-dictionary gate (text/search.py inverted_index +
-    term_stats, r4): document frequency and collection frequency per
-    term, top 15 by (df desc, term asc — deterministic under df ties).
-    orderBy().limit() plans TakeOrderedAndProject (per-partition heaps,
-    no RangePartitioner sampling pass)."""
-    from .text.search import inverted_index, term_stats
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    stats = term_stats(inverted_index(d))
-    return (stats.orderBy(F.desc("df"), F.asc("term")).limit(15)
-            .select("term", "df", "cf"))
-
-
 # (moved to the shared-derivations section near the top)
 
 
@@ -5549,7 +4866,7 @@ def redirect_resolve_final(spark, sf_dir):
 _DRIVER_WINDOW = [
     # flagship plans (always driver-visible)
     "tpch_q1", "spatial_join_boxes", "knn_nearest_center",
-    "tile_agg_regions", "training_pipeline_summary",
+    "tile_agg_regions", "dwithin_pairs",
     # r5 rotation (r4 verdict item 5): the r4 driver sampled 50
     # previously-never-sampled queries, all green; this window rotates
     # the remaining never-driver-sampled queries in.
@@ -5564,13 +4881,13 @@ _DRIVER_WINDOW = [
     "spatial_join_contains_pairs",
     # remaining never-sampled text/crawl/temporal:
     "c4_clean_lines_counts", "latest_snapshot_urls",
-    "bpe_token_count", "corpus_shuffle_head", "decontaminate_eval_overlap",
-    "duplicate_spans_counts",
+    "bpe_token_count", "corpus_shuffle_head",
     "sequence_pack_chunks", "trigram_logprob_filter", "url_canonical_dedup",
     # geometry joins and overlay over the labelled arrangement:
     "spatial_join_ngon_pairs", "spatial_join_geom_boxes",
     "overlay_gc_intersection", "overlay_gc_difference", "relate_point_box",
-    "dissolve_union_by_key",
+    "dissolve_union_by_key", "make_valid_bowtie_area",
+    "overlay_symdifference_area",
     # never-sampled SQL + geometry singles (r2/r3 era):
     "tpch_q5", "tpch_q10_variant", "crosses_segments", "hausdorff_boxes",
     "frechet_segments", "oriented_envelope_area",

@@ -72,23 +72,6 @@ def haversine_col(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Col
     return F.lit(2.0 * EARTH_RADIUS_KM) * F.asin(F.sqrt(a))
 
 
-def planar_dist_col(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
-    """Cartesian distance (reference: shapely/measurement.py:54) for the
-    planar point-point case — JVM-side."""
-    return F.sqrt(F.pow(x2 - x1, 2) + F.pow(y2 - y1, 2))
-
-
-def bbox_contains_col(xmin: Column, ymin: Column, xmax: Column, ymax: Column,
-                      x: Column, y: Column) -> Column:
-    """Envelope test as a plain predicate — Catalyst pushes it into scans
-    (the Spark fate of the reference's bbox pre-filter, src/strtree.c:381)."""
-    return (x >= xmin) & (x <= xmax) & (y >= ymin) & (y <= ymax)
-
-
-def bbox_intersects_col(axmin, aymin, axmax, aymax, bxmin, bymin, bxmax, bymax) -> Column:
-    return (axmin <= bxmax) & (bxmin <= axmax) & (aymin <= bymax) & (bymin <= aymax)
-
-
 def salt_col(unique_col: Column, salts: int) -> Column:
     """Skew salt derived from a per-row unique column (deterministic):
     salt = pmod(xxhash64(col), S). Pair with exploding the small side

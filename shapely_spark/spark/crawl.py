@@ -155,10 +155,9 @@ def resolve_redirects(
     reached in min(2^k, dist-to-terminal) steps: one self equi-join per
     round with saturation (a row whose pointer has no outgoing edge
     keeps its pointer and step count), so ⌈log2(max_hops)⌉ shuffles
-    total — the transitive-closure shape of connected_components
-    (text/components.py), with per-round localCheckpoint lineage
-    truncation. After the last round any pointer that still has an
-    outgoing edge is unresolved → NULL.
+    total, with per-round localCheckpoint lineage truncation. After the
+    last round any pointer that still has an outgoing edge is
+    unresolved → NULL.
 
     At 10^10 redirect edges each round is one hash equi-join of the
     mapping with itself; real-world chains are short (≤10), so 5 rounds

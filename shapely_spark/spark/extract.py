@@ -50,23 +50,6 @@ def geotag_content(html: Column) -> Column:
     return F.substring_index(F.substring_index(decoded, _GEO_MARK, -1), '"', 1)
 
 
-def extract_geotag(html: Column) -> tuple[Column, Column]:
-    """(lat, lon) from the geo.position meta; NULL when absent/malformed.
-    String ops + try_cast instead of Java regex: a content part that isn't
-    a decimal casts to NULL (malformed geotags like 'not;a;coordinate'),
-    and a missing marker yields a non-numeric html fragment → NULL.
-    Matches extract_geotag_re on the corpus.
-
-    NOTE for plan authors: prefer with_geo(), which materializes the
-    content fragment as its own column — these expressions inline the
-    whole decode chain per use, and a filter pushed through the aliases
-    re-evaluates it per reference (observed 12× decode/row)."""
-    content = geotag_content(html)
-    lat = F.substring_index(content, ";", 1).try_cast("double")
-    lon = F.substring_index(content, ";", -1).try_cast("double")
-    return lat, lon
-
-
 def extract_geotag_re(html: Column) -> tuple[Column, Column]:
     """Regex variant pinning the strict decimal format."""
     decoded = F.decode(html, "UTF-8")

@@ -196,12 +196,6 @@ def parse_warc_record(rec: bytes) -> dict:
     return headers
 
 
-def _parse_ts(iso: str):
-    ts = pd.to_datetime(iso.rstrip("Z"), format="%Y-%m-%dT%H:%M:%S.%f"
-                        if "." in iso else "%Y-%m-%dT%H:%M:%S")
-    return ts
-
-
 # ---------------------------------------------------------------------------
 # Spark sink / source
 # ---------------------------------------------------------------------------

@@ -144,22 +144,6 @@ def foreach_batch_asof_join(right: DataFrame, on, left_ts: str = "ts",
     return fn
 
 
-def foreach_batch_decontaminate(eval_ngrams_df: DataFrame, n: int = 13):
-    """foreachBatch callback running benchmark decontamination
-    (text/decontam.decontaminate) per micro-batch of arriving documents.
-    The eval n-gram relation is stable across batches — persist it once
-    driver-side so each micro-batch pays only the broadcast probe, never
-    the eval-side scan. Per-doc hit counts are independent across
-    batches (no state), so the streaming union equals the batch result
-    partitioned by arrival."""
-    from ..text.decontam import decontaminate
-
-    def fn(batch_df: DataFrame, batch_id: int) -> DataFrame:
-        return decontaminate(batch_df, eval_ngrams_df, n=n)
-
-    return fn
-
-
 def foreach_batch_robots_filter(robots: DataFrame, agent: str = "*",
                                 **kwargs):
     """foreachBatch callback running the RFC 9309 crawl-politeness

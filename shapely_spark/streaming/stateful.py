@@ -98,140 +98,6 @@ def sessionize_stream(events: DataFrame, gap_minutes: int = 30,
     )
 
 
-def dedup_stream(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text", ts_col: str = "ts",
-                 watermark: str = "1 hour") -> DataFrame:
-    """Streaming exact dedup: emit each content fingerprint's FIRST
-    arrival, drop repeats — the continuous twin of text.dedup.exact_dedup.
-
-    State per fingerprint key is one boolean row (seen); Spark's own
-    dropDuplicates-with-watermark covers only event-time-bounded windows,
-    while this keeps the fingerprint alive for the state store's lifetime
-    and reports the duplicate count per key on eviction-free updates. Keys
-    are md5(content) so state size is O(distinct contents), independent of
-    document length. At cluster scale the groupBy(fp) shuffle is the
-    standard hash-partitioned state layout (RocksDB-backed per executor).
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = f"fp string, {id_col} long, n_dupes long"
-    state_schema = "keeper long, n long"
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        fp = key[0]
-        if state.exists:
-            keeper, n = state.get
-            first_emit = False
-        else:
-            keeper, n = None, 0
-            first_emit = True
-        for pdf in pdfs:
-            for i in pdf[id_col]:
-                n += 1
-                if keeper is None:
-                    keeper = int(i)  # first arrival in stream order wins
-        if keeper is not None:
-            state.update((int(keeper), int(n)))
-        if first_emit and keeper is not None:
-            yield pd.DataFrame({"fp": [fp], id_col: [int(keeper)],
-                                "n_dupes": [int(n)]})
-        else:
-            yield pd.DataFrame({"fp": [], id_col: [], "n_dupes": []}).astype(
-                {"fp": "object", id_col: "int64", "n_dupes": "int64"})
-
-    keyed = (
-        docs.withWatermark(ts_col, watermark)
-        .withColumn("__fp", F.md5(F.encode(F.col(text_col), "UTF-8")))
-        .groupBy("__fp")
-    )
-    return keyed.applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout,
-    )
-
-
-def neardup_candidates_stream(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ts_col: str = "ts",
-    n_hashes: int = 64,
-    n_bands: int = 16,
-    shingle_n: int = 3,
-    seed: int = 7,
-    max_bucket: int = 4096,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming MinHash-LSH near-dup candidates — the continuous twin of
-    text.dedup.minhash_lsh_candidates. The stateless front half IS the
-    batch pipeline (shingle → xxhash64 → 64-way signature → banded FNV
-    digests, same seeds, so stream and batch land in identical buckets);
-    the stateful half keeps, per band bucket, the ids seen so far and
-    emits (doc_a, doc_b) = (earlier, later) the moment the later doc
-    arrives — candidates surface incrementally instead of after a corpus
-    self-join.
-
-    Pairs may repeat across bands (the batch side dedups with ONE
-    dropDuplicates); dedup downstream with dropDuplicates within the
-    watermark or in the verify join. Bucket cap is PROSPECTIVE: once a
-    bucket has emitted against `max_bucket` members it saturates and
-    ignores later arrivals (a stream cannot retrospectively drop an
-    oversized bucket the way the batch generator does — run exact dedup
-    upstream so identical boilerplate never floods a bucket, same
-    contract as the batch path). State per bucket is O(min(members,
-    max_bucket)) longs."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..text.dedup import _bands_udf, _minhash_sig_udf, shingles_col
-
-    sig = _minhash_sig_udf(n_hashes, seed)
-    bands = _bands_udf(n_bands, n_hashes // n_bands)
-    base = F.transform(shingles_col(F.col(text_col), shingle_n),
-                       lambda s: F.xxhash64(s))
-    keyed = (
-        docs.withWatermark(ts_col, watermark)
-        .select(F.col(id_col), F.col(ts_col), sig(base).alias("__mh"))
-        .where(F.col("__mh").isNotNull())
-        .select(id_col, ts_col,
-                F.explode(bands(F.col("__mh"))).alias("bucket"))
-        .groupBy("bucket")
-    )
-    out_schema = "doc_a long, doc_b long"
-    state_schema = "ids array<long>, sat boolean"
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            ids0, sat = state.get
-            ids = [int(x) for x in ids0]
-            sat = bool(sat)
-        else:
-            ids, sat = [], False
-        chunks = [pdf[[ts_col, id_col]] for pdf in pdfs if len(pdf)]
-        pa: list[int] = []
-        pb: list[int] = []
-        if chunks and not sat:
-            arr = pd.concat(chunks).sort_values([ts_col, id_col])
-            for d in arr[id_col]:
-                d = int(d)
-                if sat or d in ids:
-                    continue  # replays/dupes of the same id are no-ops
-                for m in ids:
-                    pa.append(min(m, d))
-                    pb.append(max(m, d))
-                ids.append(d)
-                if len(ids) >= max_bucket:
-                    sat = True
-                    break
-        state.update((ids, sat))
-        yield pd.DataFrame({"doc_a": pd.Series(pa, dtype="int64"),
-                            "doc_b": pd.Series(pb, dtype="int64")})
-
-    return keyed.applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout,
-    )
-
-
 def revisit_stream(pages: DataFrame, url_col: str = "url",
                    ts_col: str = "warc_ts", content_col: str = "text",
                    watermark: str = "1 hour") -> DataFrame:

@@ -23,8 +23,9 @@ Scale shape (10^12 docs):
   to find the top pair (one row to the driver per round, like k-means
   centroids) and a pure-JVM ``aggregate`` fold that rewrites only the
   words containing the pair. ``localCheckpoint`` every few rounds
-  truncates the per-round lineage (the connected-components pattern,
-  text/components.py). Bit-identical merges to the collect tier.
+  truncates the per-round lineage (the pattern of
+  spark/crawl.resolve_redirects). Bit-identical merges to the collect
+  tier.
 - ``bpe_encode``: mapInPandas; the merge ranks broadcast in the closure,
   each distinct word in a batch is encoded once through a per-worker
   cache (web text repeats words heavily), output stays Arrow-batched.

@@ -60,8 +60,8 @@ def hashed_ngram_features(text_col, n_buckets: int = 8192,
                           hash_fn: str = "xxhash64"):
     """array<long> of hashed unigram+bigram bucket ids WITH multiplicity
     (DSIR scores a bag, not a set). Single-token docs contribute their
-    unigram only; the bigram slice is guarded exactly like
-    dedup.shingles_col (Spark 4 slice throws on negative lengths)."""
+    unigram only; the bigram slice is guarded because Spark 4 slice
+    throws on negative lengths."""
     w = F.split(text_col, " ")
     m = F.size(w) - 1
     bi = F.zip_with(F.slice(w, 1, m), F.slice(w, 2, m),

@@ -1,10 +1,8 @@
-"""Recrawl analytics (spark/crawl.py), anchor-text aggregation
-(spark/extract.py), and the positional inverted index / phrase search
-(text/search.py).
+"""Recrawl analytics (spark/crawl.py) and anchor-text aggregation
+(spark/extract.py).
 
 Reference semantics: WARC 1.1 revisit-by-payload-digest (crawl change
-detection), Lucene positional postings (phrase = consecutive token
-offsets, overlapping matches counted)."""
+detection)."""
 
 import datetime
 
@@ -17,7 +15,6 @@ from shapely_spark.spark.crawl import (
     version_changes,
 )
 from shapely_spark.spark.extract import anchor_text_summary
-from shapely_spark.text.search import inverted_index, phrase_search, term_stats
 
 
 def _ts(s):
@@ -99,41 +96,6 @@ def test_anchor_text_summary(spark):
     assert (t1.top_anchor, t1.top_anchor_n) == ("great page", 2)
     t2 = got["t2.example.org"]
     assert (t2.n_anchors, t2.n_src_hosts, t2.top_anchor) == (1, 1, "other")
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.createDataFrame(
-        [(0, "a a a b"), (1, "b a a b a a"), (2, "c b c")],
-        "doc_id long, text string")
-
-
-def test_inverted_index_positions(docs):
-    idx = {(r.term, r.doc_id): (r.tf, r.positions)
-           for r in inverted_index(docs).collect()}
-    assert idx[("a", 0)] == (3, [0, 1, 2])
-    assert idx[("b", 1)] == (2, [0, 3])
-    assert idx[("c", 2)] == (2, [0, 2])
-    stats = {r.term: (r.df, r.cf) for r in term_stats(inverted_index(docs)).collect()}
-    assert stats == {"a": (2, 7), "b": (3, 4), "c": (1, 2)}
-
-
-def test_phrase_search_overlapping(docs):
-    # "a a" in "a a a" overlaps: starts 0 and 1; doc 1 has starts 1 and 4.
-    got = {r.doc_id: (r.n_matches, r.first_pos)
-           for r in phrase_search(inverted_index(docs), "a a").collect()}
-    assert got == {0: (2, 0), 1: (2, 1)}
-
-
-def test_phrase_search_trigram_and_missing(docs):
-    idx = inverted_index(docs)
-    got = {r.doc_id: (r.n_matches, r.first_pos)
-           for r in phrase_search(idx, "a a b").collect()}
-    assert got == {0: (1, 1), 1: (1, 1)}
-    assert phrase_search(idx, "a z").count() == 0
-    assert phrase_search(idx, ["c", "b", "c"]).collect()[0].doc_id == 2
-    with pytest.raises(ValueError):
-        phrase_search(idx, [])
 
 
 class TestResolveRedirects:

@@ -249,46 +249,6 @@ def test_stateful_sessionize_stream_matches_batch(spark, tmp_path):
         assert truth[k][0] == v[0] and abs(truth[k][1] - v[1]) < 0.05, (k, v, truth[k])
 
 
-def test_stateful_dedup_stream(spark, tmp_path):
-    """Streaming exact dedup: one emitted row per distinct content (its
-    first arrival), duplicates dropped across microbatches."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from shapely_spark.streaming.stateful import dedup_stream
-
-    src = str(tmp_path / "docs_src")
-    rows = []
-    base = 1_700_000_000
-    for i in range(30):
-        text = f"content {i % 10}"  # 10 distinct contents, 3 copies each
-        rows.append((i, text, base + i))
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["doc_id", "text", "epoch"]),
-        "doc_id long, text string, epoch long",
-    ).withColumn("ts", F.col("epoch").cast("timestamp")).drop("epoch")
-    # 3 files in id order → duplicates arrive in later microbatches
-    df.repartitionByRange(3, "doc_id").sortWithinPartitions("doc_id").write.parquet(src)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = dedup_stream(stream)
-    q = (
-        out.writeStream.format("memory").queryName("dedup_out")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = spark.sql("select * from dedup_out").collect()
-    assert len(got) == 10  # one keeper per distinct content, duplicates dropped
-    # which copy wins depends on the file source's listing order; the
-    # invariant is one emission per content (doc_id % 10 identifies it)
-    assert sorted(r.doc_id % 10 for r in got) == list(range(10))
-    assert len({r.fp for r in got}) == 10
-
-
 def test_streaming_foreach_batch_dwithin_join(spark, tmp_path):
     """Streaming twin of the fixed-radius join (r4): readStream →
     with_geo → foreachBatch(dwithin_join) yields the same pair set as
@@ -325,54 +285,6 @@ def test_streaming_foreach_batch_dwithin_join(spark, tmp_path):
                                   targets, 500.0)
             .select("url", "target_id").collect()}
     assert results == want and len(want) > 0
-
-
-def test_streaming_foreach_batch_decontaminate(spark, tmp_path):
-    """Streaming twin of benchmark decontamination: readStream over doc
-    files -> foreachBatch(decontaminate vs a fixed eval n-gram set)
-    produces the same (doc_id, n_hits) set as the batch plan — hit
-    counts are per-doc, so micro-batch boundaries cannot change them."""
-    import numpy as np
-
-    from shapely_spark.streaming.pipeline import foreach_batch_decontaminate
-    from shapely_spark.text.decontam import decontaminate, eval_ngrams
-
-    rng = np.random.RandomState(11)
-    vocab = [f"w{i}" for i in range(150)]
-    rows = []
-    for i in range(120):
-        words = [vocab[j] for j in rng.randint(0, 150, 30)]
-        rows.append((i, " ".join(words)))
-    # plant eval overlaps: docs 200.. copy the tail of eval docs 0..4
-    for i in range(5):
-        rows.append((200 + i, rows[i][1] + " " + rows[i][1]))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    src = str(tmp_path / "docs_landing")
-    docs.where(F.col("doc_id") >= 10).repartition(4).write.mode(
-        "overwrite").parquet(src)
-    ev = eval_ngrams(docs.where(F.col("doc_id") < 5), n=6).persist()
-    ev.count()
-
-    fn = foreach_batch_decontaminate(ev, n=6)
-    results = []
-
-    def sink(batch_df, batch_id):
-        results.extend(
-            (r.doc_id, r.n_hits)
-            for r in fn(batch_df, batch_id).collect())
-
-    stream = (spark.readStream.schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = stream.writeStream.foreachBatch(sink).trigger(availableNow=True).start()
-    q.awaitTermination()
-
-    want = {(r.doc_id, r.n_hits)
-            for r in decontaminate(
-                spark.read.parquet(src), ev, n=6).collect()}
-    assert set(results) == want
-    assert {d for d, _ in results} >= {200 + i for i in range(5)}
-    ev.unpersist()
 
 
 def test_streaming_foreach_batch_asof_join(spark, tmp_path):
@@ -418,74 +330,6 @@ def test_streaming_foreach_batch_asof_join(spark, tmp_path):
             .select("url", "snap_val").collect()}
     assert results == want and len(want) > 0
     assert any(v is not None for _, v in want)
-
-
-def test_streaming_neardup_candidates_match_batch(spark, tmp_path):
-    """Streaming MinHash-LSH twin: same signatures/bands as the batch
-    generator, so the deduped candidate pair set must be identical."""
-    import datetime as dt
-
-    from shapely_spark.streaming.stateful import neardup_candidates_stream
-    from shapely_spark.text.dedup import (minhash_lsh_candidates,
-                                          minhash_signatures)
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = []
-    body = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
-            "lam mu nu xi omicron pi rho sigma tau upsilon").split()
-    did = 0
-    for c in range(3):                       # 3 near-dup clusters of 4
-        for v in range(4):
-            text = " ".join(body[:-1] + [f"c{c}v{v}"] + [f"cl{c}"] * 3)
-            rows.append((did, text, t0 + dt.timedelta(seconds=did)))
-            did += 1
-    for u in range(6):                       # singletons
-        rows.append((did, " ".join(f"u{u}w{j}" for j in range(25)),
-                     t0 + dt.timedelta(seconds=did)))
-        did += 1
-    d = spark.createDataFrame(rows, "doc_id long, text string, ts timestamp")
-
-    sigs = minhash_signatures(d)
-    batch = {(r.doc_a, r.doc_b)
-             for r in minhash_lsh_candidates(sigs).collect()}
-    assert batch, "fixture must produce near-dup candidates"
-
-    path = str(tmp_path / "nd_docs")
-    d.write.mode("overwrite").parquet(path)
-    stream = neardup_candidates_stream(
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .parquet(path))
-    q = (stream.writeStream.format("memory").queryName("nd_twin")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {(r.doc_a, r.doc_b)
-           for r in spark.sql("SELECT * FROM nd_twin").collect()}
-    assert got == batch
-
-
-def test_streaming_neardup_bucket_saturation(spark, tmp_path):
-    """Prospective cap: a bucket stops emitting once max_bucket members
-    have been admitted (boilerplate-flood guard, batch-contract analog)."""
-    import datetime as dt
-
-    from shapely_spark.streaming.stateful import neardup_candidates_stream
-
-    t0 = dt.datetime(2024, 1, 1)
-    text = " ".join(f"tok{j}" for j in range(30))  # identical docs
-    rows = [(i, text, t0 + dt.timedelta(seconds=i)) for i in range(8)]
-    d = spark.createDataFrame(rows, "doc_id long, text string, ts timestamp")
-    path = str(tmp_path / "sat_docs")
-    d.write.mode("overwrite").parquet(path)
-    stream = neardup_candidates_stream(
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .parquet(path), max_bucket=3)
-    q = (stream.writeStream.format("memory").queryName("nd_sat")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {(r.doc_a, r.doc_b)
-           for r in spark.sql("SELECT * FROM nd_sat").collect()}
-    # members admitted: 0,1,2 → pairs only among them
-    assert got == {(0, 1), (0, 2), (1, 2)}
 
 
 def _stamp_mtimes(src, step):

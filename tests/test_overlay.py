@@ -438,6 +438,18 @@ class TestRingNesting:
         assert round(K.area(out), 6) == 92.0  # 100 - 4 - 4
         assert len(out.rings) == 3
 
+    def test_build_area_dissolves_edge_groups_only(self):
+        # two squares share the edge x=1; the third meets them at (2, 1)
+        # only: the first two dissolve, the third stays its own part
+        mp = from_wkt("MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)),"
+                      " ((1 0, 2 0, 2 1, 1 1, 1 0)),"
+                      " ((2 1, 3 1, 3 2, 2 2, 2 1)))")
+        out = O.build_area(mp)
+        assert out.type_id == MULTIPOLYGON
+        assert sorted(round(K.area(p), 12) for p in out.parts) == [1.0, 2.0]
+        assert abs(K.area(out) - 3.0) < 1e-12
+        assert K.is_valid(out)
+
 
 class TestLineOverlay:
     """Line×line / line×polygon / mixed-dim set ops (reference:

@@ -230,110 +230,6 @@ def test_mixture_sample_partition_invariant_and_defaults(spark):
 
 
 # ---------------------------------------------------------------------------
-# cross-document paragraph dedup (RefinedWeb-style)
-# ---------------------------------------------------------------------------
-
-from shapely_spark.text.dedup import paragraph_dedup  # noqa: E402
-
-
-def test_paragraph_dedup_sep_mode_first_occurrence_wins(spark):
-    boiler = "accept our cookies to continue"
-    rows = [
-        (1, f"intro one\n\n{boiler}\n\nbody one"),
-        (2, f"{boiler}\n\nbody two"),
-        (3, "body three\n\n" + boiler),
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           paragraph_dedup(d, unit="sep:\n\n").collect()}
-    assert out[1].clean_text == rows[0][1]      # first occurrence intact
-    assert out[2].clean_text == "body two"
-    assert out[3].clean_text == "body three"
-    assert (out[1].n_removed, out[2].n_removed, out[3].n_removed) == (0, 1, 1)
-    assert out[2].n_units == 2
-
-
-def test_paragraph_dedup_min_tokens_exempts_short_units(spark):
-    rows = [(1, "Yes.\n\nlong paragraph body here"),
-            (2, "Yes.\n\nother body"),
-            (3, "long paragraph body here\n\nYes.")]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r.clean_text for r in
-           paragraph_dedup(d, unit="sep:\n\n", min_tokens=3).collect()}
-    assert out[2] == "Yes.\n\nother body"       # short dup kept
-    assert out[3] == "Yes."                     # long dup removed
-
-
-def test_paragraph_dedup_tokens_mode_roundtrips_unique_text(spark):
-    rows = [(i, " ".join(f"w{i}x{j}" for j in range(n)))
-            for i, n in enumerate([1, 3, 7, 10, 11])]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           paragraph_dedup(d, unit="tokens:3").collect()}
-    for i, t in rows:
-        assert out[i].clean_text == t           # chunks partition tokens
-        assert out[i].n_removed == 0
-
-
-def test_paragraph_dedup_fully_boilerplate_and_null(spark):
-    d = spark.createDataFrame(
-        [(1, "same same"), (2, "same same"), (3, None)],
-        "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           paragraph_dedup(d, unit="tokens:5").collect()}
-    assert out[1].clean_text == "same same"
-    assert out[2].clean_text == "" and out[2].n_removed == 1
-    assert out[3].n_units == 0 and out[3].clean_text == ""
-
-
-def test_paragraph_dedup_tokens_matches_pandas_reference(spark):
-    rows = [(i, " ".join(["common block of ten tokens padding out here now",
-                          f"tail{i}"][: 1 + i % 2])) for i in range(6)]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in
-           paragraph_dedup(d, unit="tokens:4").collect()}
-    seen, exp = set(), {}
-    for i, t in rows:
-        w = t.split(" ")
-        chunks = [" ".join(w[j:j + 4]) for j in range(0, len(w), 4)]
-        kept = []
-        for c in chunks:
-            if c not in seen:
-                seen.add(c); kept.append(c)
-        exp[i] = (" ".join(kept), len(chunks) - len(kept))
-    for i, (txt, rem) in exp.items():
-        assert got[i].clean_text == txt
-        assert got[i].n_removed == rem
-
-
-from hypothesis import given, settings, strategies as st  # noqa: E402
-
-_tok = st.sampled_from(["a", "b", "c", "dd"])  # tiny alphabet → collisions
-_doc = st.lists(_tok, min_size=1, max_size=12).map(" ".join)
-
-
-@settings(max_examples=15, deadline=None)
-@given(st.lists(_doc, min_size=1, max_size=8), st.integers(1, 4))
-def test_paragraph_dedup_property_vs_python_model(spark, docs, k):
-    d = spark.createDataFrame(list(enumerate(docs)),
-                              "doc_id long, text string")
-    got = {r.doc_id: r for r in
-           paragraph_dedup(d, unit=f"tokens:{k}").collect()}
-    seen = set()
-    for i, t in enumerate(docs):
-        w = t.split(" ")
-        chunks = [" ".join(w[j:j + k]) for j in range(0, len(w), k)]
-        kept = []
-        for c in chunks:
-            if c not in seen:
-                seen.add(c)
-                kept.append(c)
-        assert got[i].clean_text == " ".join(kept), (i, t, k)
-        assert got[i].n_units == len(chunks)
-        assert got[i].n_removed == len(chunks) - len(kept)
-
-
-# ---------------------------------------------------------------------------
 # deterministic corpus shuffle + streaming twins of the curation stage
 # ---------------------------------------------------------------------------
 

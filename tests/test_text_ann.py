@@ -1,65 +1,7 @@
-"""Tests for dedup (minhash/simhash), quality/langid and the text stack."""
+"""Tests for quality/langid, sequence packing and the rest of the text stack."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    """Synthetic corpus with planted near-duplicates."""
-    rng = np.random.RandomState(3)
-    vocab = [f"w{i}" for i in range(200)]
-    rows = []
-    for i in range(60):
-        words = [vocab[j] for j in rng.randint(0, 200, 40)]
-        rows.append((i, " ".join(words)))
-    # plant near-dups: docs 100.. are copies of 0..9 with one word changed
-    for i in range(10):
-        words = rows[i][1].split(" ")
-        words[5] = "CHANGED"
-        rows.append((100 + i, " ".join(words)))
-    # exact dup of doc 20
-    rows.append((200, rows[20][1]))
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_exact_dedup(docs):
-    from shapely_spark.text.dedup import exact_dedup
-
-    out = exact_dedup(docs).collect()
-    sizes = {r.keeper_id: r.group_size for r in out}
-    assert sizes[20] == 2  # doc 200 deduped onto 20
-    assert sum(r.group_size for r in out) == docs.count()
-
-
-def test_minhash_finds_planted_dups(docs):
-    from shapely_spark.text.dedup import minhash_dedup_pairs
-
-    pairs = {(r.doc_a, r.doc_b) for r in minhash_dedup_pairs(docs, threshold=0.5).collect()}
-    for i in range(10):
-        assert (i, 100 + i) in pairs, f"planted near-dup {i} missed"
-    assert (20, 200) in pairs
-    # jaccard verify keeps random pairs out
-    for a, b in pairs:
-        assert b == a + 100 or (a, b) == (20, 200)
-
-
-def test_minhash_signatures_shape(docs):
-    from shapely_spark.text.dedup import minhash_signatures
-
-    sig = minhash_signatures(docs).first()
-    assert len(sig.minhash) == 64
-
-
-def test_simhash_identical_and_near(docs):
-    from shapely_spark.text.dedup import simhash_64
-
-    sims = {r.doc_id: r.simhash for r in simhash_64(docs).collect()}
-    assert sims[20] == sims[200]  # identical text → identical simhash
-    for i in range(10):
-        ham = bin((sims[i] ^ sims[100 + i]) & ((1 << 64) - 1)).count("1")
-        assert ham <= 12, f"near-dup {i} hamming {ham}"
 
 
 def test_quality_and_langid(spark):
@@ -78,111 +20,6 @@ def test_quality_and_langid(spark):
     assert l[0] == "en"
     assert l[1] == "de"
     assert l[2] == "en"  # fallback
-
-
-def test_minhash_signature_family_independence(docs):
-    """Regression for the r1 salt bug (a 2-arg transform lambda binds the
-    array INDEX, collapsing all 64 positions to one hash function): two
-    docs sharing ~37/38 shingles must agree on ~sim·64 signature positions,
-    and the 64 positions of one signature must not all be equal."""
-    from shapely_spark.text.dedup import minhash_signatures
-
-    sigs = {r.doc_id: np.array(r.minhash) for r in minhash_signatures(docs).collect()}
-    a, b = sigs[0], sigs[100]  # planted near-dup pair (1 of 40 words changed)
-    agree = int((a == b).sum())
-    assert agree >= 48, f"near-dup signature agreement {agree}/64 too low"
-    assert len(set(a.tolist())) > 32, "signature positions are not independent"
-    # exact dup → identical signature
-    assert (sigs[20] == sigs[200]).all()
-
-
-def test_minhash_short_doc_null_signature(spark):
-    from shapely_spark.text.dedup import minhash_signatures
-
-    d = spark.createDataFrame([(1, "only two"), (2, "a b c d")], "doc_id long, text string")
-    out = {r.doc_id: r.minhash for r in minhash_signatures(d).collect()}
-    assert out[1] is None
-    assert out[2] is not None and len(out[2]) == 64
-
-
-def test_lsh_bucket_cap_bounds_adversarial_corpus(spark):
-    """A duplicate-heavy corpus (one boilerplate text repeated 300×) must
-    not emit O(n²) candidate pairs when the bucket cap is on, and the
-    audit helper must report the dropped buckets (no silent truncation)."""
-    from shapely_spark.text.dedup import (
-        minhash_band_buckets, minhash_lsh_candidates, minhash_signatures,
-        oversized_buckets,
-    )
-
-    boiler = " ".join(f"tok{i}" for i in range(30))
-    rows = [(i, boiler) for i in range(300)] + [
-        (1000 + i, " ".join(f"u{i}w{j}" for j in range(30))) for i in range(20)
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = minhash_signatures(d)
-    capped = minhash_lsh_candidates(sigs, max_bucket=50)
-    assert capped.count() == 0  # boilerplate bucket dropped, uniques don't collide
-    audit = oversized_buckets(minhash_band_buckets(sigs), max_bucket=50).collect()
-    assert len(audit) >= 1 and all(r.n_docs == 300 for r in audit)
-    uncapped = minhash_lsh_candidates(sigs, max_bucket=None)
-    assert uncapped.count() == 300 * 299 // 2
-
-
-def test_simhash_dedup_pairs_matches_exact(docs):
-    """SimHash candidates + exact verify finds exactly the planted pairs."""
-    from shapely_spark.text.dedup import simhash_dedup_pairs
-
-    pairs = {(r.doc_a, r.doc_b) for r in simhash_dedup_pairs(docs, threshold=0.5).collect()}
-    planted = {(i, 100 + i) for i in range(10)} | {(20, 200)}
-    assert pairs == planted
-
-
-def test_bucket_pairs_no_self_pairs_on_duplicate_rows(spark):
-    """A doc landing in the same bucket twice (band-digest collision across
-    bands) must not emit a (x, x) pair or duplicate (a, b) rows."""
-    from shapely_spark.text.dedup import _bucket_pairs
-
-    rows = [(1, 10), (1, 10), (2, 10), (2, 20), (1, 20)]
-    e = spark.createDataFrame(rows, "doc_id long, bucket long")
-    got = sorted((r.doc_a, r.doc_b) for r in _bucket_pairs(e, ["doc_id"], None).collect())
-    assert got == [(1, 2)]
-
-
-def test_bucket_pairs_pair_filter_prunes_inside_emission(spark):
-    """pair_filter sees both payloads and drops pairs as they are produced."""
-    from pyspark.sql import functions as F
-
-    from shapely_spark.text.dedup import _bucket_pairs
-
-    rows = [(1, 5, 100), (2, 6, 100), (3, 50, 100)]
-    e = spark.createDataFrame(rows, "doc_id long, v long, bucket long")
-    got = sorted(
-        (r.doc_a, r.doc_b)
-        for r in _bucket_pairs(
-            e, ["doc_id", "v"], None,
-            pair_filter=lambda a, b: F.abs(a["v"] - b["v"]) <= 10,
-        ).collect()
-    )
-    assert got == [(1, 2)]
-
-
-def test_bucket_pairs_hard_ceiling_with_none_cap(spark):
-    """max_bucket=None must still bound single-task bucket state: a bucket
-    above HARD_MAX_BUCKET is dropped (skew bug, not a dedup group)."""
-    from pyspark.sql import functions as F
-
-    from shapely_spark.text import dedup as D
-
-    orig = D.HARD_MAX_BUCKET
-    D.HARD_MAX_BUCKET = 8
-    try:
-        big = spark.range(20).select(F.col("id").alias("doc_id"), F.lit(1).alias("bucket"))
-        small = spark.range(3).select((F.col("id") + 100).alias("doc_id"), F.lit(2).alias("bucket"))
-        got = sorted((r.doc_a, r.doc_b)
-                     for r in D._bucket_pairs(big.union(small), ["doc_id"], None).collect())
-        assert got == [(100, 101), (100, 102), (101, 102)]
-    finally:
-        D.HARD_MAX_BUCKET = orig
 
 
 def test_redact_pii_and_canonical_url(spark):
@@ -344,45 +181,8 @@ def test_stratified_sample_small_stratum_kept_whole(spark):
 
 
 # ---------------------------------------------------------------------------
-# decontamination + sequence packing (r4)
+# sequence packing (r4)
 # ---------------------------------------------------------------------------
-
-
-def test_decontaminate_flags_planted_overlap(docs):
-    """Docs 100..109 are one-word edits of 0..9; using 0..9 as the eval
-    set, every edited copy must be flagged (long shared runs survive a
-    single substitution) and unrelated docs must be absent."""
-    from shapely_spark.text.decontam import decontaminate
-
-    ev = docs.where(F.col("doc_id") < 10)
-    train = docs.where(F.col("doc_id") >= 100)
-    out = {r.doc_id: r.n_hits for r in decontaminate(train, ev, n=5).collect()}
-    # word 5 changed -> grams fully inside tokens 0..4 or 6..39 still match
-    assert set(out) == {100 + i for i in range(10)}
-    # 40 tokens, n=5 -> 36 grams; the edit kills the 5 grams covering
-    # position 5; duplicates inside a doc can only reduce the count
-    assert all(1 <= v <= 31 for v in out.values())
-
-
-def test_decontaminate_distinct_hits_and_short_docs(spark):
-    from shapely_spark.text.decontam import decontaminate, eval_ngrams
-
-    ev = spark.createDataFrame([(0, "a b c d")], "doc_id long, text string")
-    train = spark.createDataFrame(
-        [
-            (1, "a b c d a b c d"),  # the eval 3-grams, repeated
-            (2, "x y z"),            # no overlap
-            (3, "a b"),              # shorter than n -> no grams
-        ],
-        "doc_id long, text string",
-    )
-    out = {r.doc_id: r.n_hits for r in decontaminate(train, ev, n=3).collect()}
-    # doc 1 matches 'a b c', 'b c d' (distinct!) plus wraparound grams
-    # 'c d a', 'd a b' which are NOT eval grams -> exactly 2
-    assert out == {1: 2}
-    # max_tokens truncation: only the first 3 tokens of the eval doc
-    evg = eval_ngrams(ev, n=3, max_tokens=3)
-    assert sorted(r.ngram for r in evg.collect()) == ["a b c"]
 
 
 def test_pack_sequences_matches_reference_cumsum(spark):
@@ -427,172 +227,6 @@ def test_chunk_occupancy_conserves_doc_chunk_incidence(spark):
     assert sorted(r.chunk_id for r in occ) == list(range(29))
     # a 37-token doc in 64-token chunks is whole iff it does not straddle
     assert all(0 <= r.n_whole_docs <= r.n_docs for r in occ)
-
-
-def test_remove_duplicate_spans_excises_planted_boilerplate(spark):
-    from shapely_spark.text.dedup import remove_duplicate_spans
-
-    boiler = " ".join(f"B{i}" for i in range(8))  # exactly one window
-    rows = [
-        (0, f"{boiler} alpha beta gamma delta epsilon zeta eta theta"),
-        (1, f"iota kappa lam mu nu xi omicron pi {boiler}"),
-        (2, "solo words only here nothing repeated across documents at all"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           remove_duplicate_spans(df, window=8, stride=4, min_docs=2).collect()}
-    # boilerplate window occurs in 2 docs -> excised from both
-    assert "B0" not in out[0].clean_text and "B0" not in out[1].clean_text
-    assert out[0].clean_text == "alpha beta gamma delta epsilon zeta eta theta"
-    # doc 1: boiler starts at token 8 (stride-aligned), fully covered
-    assert out[1].clean_text == "iota kappa lam mu nu xi omicron pi"
-    assert out[0].n_removed == 8 and out[1].n_removed == 8
-    # untouched doc round-trips byte-identically with zero removals
-    assert out[2].clean_text == rows[2][1] and out[2].n_removed == 0
-
-
-def test_remove_duplicate_spans_overlapping_windows_merge(spark):
-    from shapely_spark.text.dedup import remove_duplicate_spans
-
-    # 12 shared tokens -> windows at starts 0 and 4 both duplicated;
-    # covered set is their union (12 distinct positions, not 16)
-    shared = " ".join(f"S{i}" for i in range(12))
-    rows = [(0, f"{shared} tail0 tail1 tail2 tail3"),
-            (1, f"{shared} other0 other1 other2 other3")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           remove_duplicate_spans(df, window=8, stride=4, min_docs=2).collect()}
-    assert out[0].n_removed == 12
-    assert out[0].clean_text == "tail0 tail1 tail2 tail3"
-    assert out[1].clean_text == "other0 other1 other2 other3"
-
-
-def test_remove_duplicate_spans_short_docs_untouched(spark):
-    from shapely_spark.text.dedup import remove_duplicate_spans
-
-    rows = [(0, "tiny doc"), (1, "tiny doc")]  # < window tokens, even if equal
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = remove_duplicate_spans(df, window=8, stride=4, min_docs=2).collect()
-    assert all(r.n_removed == 0 for r in out)
-    assert {r.clean_text for r in out} == {"tiny doc"}
-
-
-def test_verify_prefilter_respects_rounded_threshold(spark):
-    """The size prefilter must keep pairs whose true Jaccard is just below
-    the threshold but whose ROUND(J, 4) meets it — the final filter
-    compares the rounded value (r4 review finding: a prefilter at the raw
-    threshold dropped J in [thr-5e-5, thr) that the oracle emits)."""
-    from shapely_spark.text.dedup import _verify_pairs
-
-    # 1-token shingles, A ⊂ B: J = |A|/|B| = 13999/20000 = 0.69995,
-    # which rounds to 0.7000 >= 0.7 — the pair must survive
-    toks_b = [f"t{i}" for i in range(20000)]
-    docs = spark.createDataFrame(
-        [(1, " ".join(toks_b[:13999])), (2, " ".join(toks_b))],
-        "doc_id long, text string",
-    )
-    cand = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    out = _verify_pairs(docs, cand, "text", "doc_id",
-                        threshold=0.7, shingle_n=1).collect()
-    assert len(out) == 1
-    assert out[0].jaccard == pytest.approx(0.7, abs=1e-9)
-
-
-# ---------------------------------------------------------------------------
-# BM25 retrieval (text/search.py)
-# ---------------------------------------------------------------------------
-
-
-def test_bm25_matches_numpy_reference(spark):
-    """bm25_topk must reproduce the textbook Okapi BM25 (Robertson &
-    Zaragoza 2009) computed directly with numpy on a small corpus."""
-    import math
-
-    from shapely_spark.text.search import bm25_topk
-
-    rows = [
-        (0, "spark join hash join shuffle"),
-        (1, "hash table scan scan scan filter"),
-        (2, "join join join join hash"),
-        (3, "window sort order by window"),
-        (4, "the quick brown fox"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    terms = ["join", "hash"]
-    k1, b = 1.2, 0.75
-
-    texts = {i: t.split(" ") for i, t in rows}
-    n = len(rows)
-    avgdl = sum(len(w) for w in texts.values()) / n
-    df = {t: sum(t in w for w in texts.values()) for t in terms}
-    want = {}
-    for i, w in texts.items():
-        s = 0.0
-        for t in terms:
-            tf = w.count(t)
-            if not tf:
-                continue
-            idf = math.log((n - df[t] + 0.5) / (df[t] + 0.5) + 1.0)
-            s += idf * (tf * (k1 + 1.0)) / (
-                tf + k1 * ((1.0 - b) + b * len(w) / avgdl))
-        if s > 0:
-            want[i] = round(s, 6)
-
-    out = bm25_topk(docs, terms, k=10, k1=k1, b=b).collect()
-    got = {r.doc_id: r.score for r in out}
-    assert got == pytest.approx(want)
-    # ranks dense from 1 by (score desc, doc_id)
-    order = sorted(want, key=lambda i: (-want[i], i))
-    assert [r.doc_id for r in sorted(out, key=lambda r: r.rank)] == order
-    assert sorted(r.rank for r in out) == list(range(1, len(want) + 1))
-
-
-def test_bm25_topk_limit_and_empty_terms(spark):
-    from shapely_spark.text.search import bm25_topk
-
-    docs = spark.createDataFrame(
-        [(i, "a b c" + " x" * i) for i in range(8)],
-        "doc_id long, text string")
-    out = bm25_topk(docs, ["a"], k=3).collect()
-    assert len(out) == 3
-    # shorter docs score higher for equal tf
-    assert [r.doc_id for r in sorted(out, key=lambda r: r.rank)] == [0, 1, 2]
-    with pytest.raises(ValueError):
-        bm25_topk(docs, [])
-
-
-# ---------------------------------------------------------------------------
-# Bloom-filter decontamination tier (text/decontam.py)
-# ---------------------------------------------------------------------------
-
-
-def test_bloom_no_false_negatives_and_fpp():
-    from shapely_spark.text.decontam import NgramBloom
-
-    keys = np.arange(-5000, 5000, dtype=np.int64) * 7919
-    b = NgramBloom.build(keys, fpp=0.01)
-    assert b.might_contain(keys).all()  # never a false negative
-    other = np.arange(10**7, 10**7 + 10**5, dtype=np.int64) * 104729
-    fp = b.might_contain(other).mean()
-    assert fp < 0.03, fp  # ~1% target with statistical slack
-
-
-def test_bloom_decontaminate_equals_exact(docs):
-    """The Bloom tier must return the exact decontaminate() rows — the
-    verify join removes every false positive. Run once at fpp=0.01 and
-    once at fpp=0.5 (a deliberately saturated filter, FPs guaranteed in
-    the candidate stream) to prove the verify stage, not filter luck."""
-    from shapely_spark.text.decontam import bloom_decontaminate, decontaminate
-
-    ev = docs.where(F.col("doc_id") < 10)
-    train = docs.where(F.col("doc_id") >= 100)
-    want = {(r.doc_id, r.n_hits)
-            for r in decontaminate(train, ev, n=5).collect()}
-    assert want  # planted near-dups must collide
-    for fpp in (0.01, 0.5):
-        got = {(r.doc_id, r.n_hits)
-               for r in bloom_decontaminate(train, ev, n=5, fpp=fpp).collect()}
-        assert got == want, fpp
 
 
 # ---------------------------------------------------------------------------

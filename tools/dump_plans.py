@@ -164,7 +164,6 @@ def main():
 
     from shapely_spark.spark.crawl import host_change_stats
     from shapely_spark.spark.extract import anchor_text_summary
-    from shapely_spark.text.search import inverted_index, phrase_search
 
     fetches = spark.createDataFrame(
         pd.DataFrame({
@@ -173,7 +172,6 @@ def main():
             "warc_ts": pd.to_datetime(1_700_000_000 + pd.Series(range(30)),
                                       unit="s"),
             "text": [f"body {i % 7}" for i in range(30)]}))
-    idx = inverted_index(docs)
     sections += [
         ("recrawl change stats: ONE hash exchange on url for the window "
          "(payload never moves — only its xxhash64 digest rides the "
@@ -185,11 +183,6 @@ def main():
          "partial-agg shuffles joined at host grain; top anchor is one "
          "bounded window",
          anchor_text_summary(lp)),
-        ("phrase search over the positional index: per-term posting "
-         "filters + k-1 equi-joins on doc; position math "
-         "(transform/array_intersect) is all JVM — no Python, no "
-         "explode of positions",
-         phrase_search(idx, "alpha beta")),
     ]
 
     out = ["# BENCH/PLANS — physical plans of the headline paths",

@@ -17,6 +17,7 @@ import argparse
 import os
 import sys
 import time
+import traceback
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -76,9 +77,13 @@ def main() -> int:
             runner()
             print(f"OK    {name}: {args.examples} examples "
                   f"[{time.time() - t0:.1f}s, seed={rnd}]")
-        except Exception as ex:  # falsifying example printed by hypothesis
+        except Exception as ex:
+            # str() of an AssertionError is empty: the traceback carries
+            # hypothesis's falsifying example
             failures += 1
-            print(f"FAIL  {name}: {ex}")
+            traceback.print_exc()
+            print(f"FAIL  {name}: {type(ex).__name__}: {ex} "
+                  f"[{time.time() - t0:.1f}s, seed={rnd}]")
     return 1 if failures else 0
 
 
