@@ -10,8 +10,8 @@ Headline workloads (the north-star engine paths, at $SPARK_GRAFT_SF_DIR):
   + prepared point-in-polygon refine) — reports pages/s and pairs/s
 - tile_agg_pages: per-cell rollup of the pages table — tile-assignments/sec
 - knn_pages: k=1 nearest of 1000 region centroids for every page
-- plus the oracle-checked battery on the driver tables (tpch, spatial,
-  geo kernels, text) for end-to-end coverage.
+- plus the oracle-checked battery over the sf-dir tables (spatial, geo
+  kernels, overlay, crawl and archive ops) for end-to-end coverage.
 
 Methodology: each headline plan runs once on a small slice first (untimed
 warmup — HotSpot compiles the generated whole-stage code; measured 30×

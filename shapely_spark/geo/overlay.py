@@ -790,7 +790,10 @@ def _nest_faces(rings: list[np.ndarray], tol: float) -> list[Geometry]:
     (discarded) or the boundary between a containing face and a nested
     component — assigned as a hole of the SMALLEST shell that strictly
     contains them (the immediate parent face; exactly one assignment, so
-    nothing is double-subtracted under deeper nesting)."""
+    nothing is double-subtracted under deeper nesting). A hole is smaller
+    than its shell, so shells no larger than the CW walk are skipped: a
+    split node a few ulps inside a face must not hang the component's own
+    outline on that face."""
     eps = tol * tol * 100
     shells, hole_rings = [], []
     for r in rings:
@@ -798,12 +801,12 @@ def _nest_faces(rings: list[np.ndarray], tol: float) -> list[Geometry]:
         if a > eps:
             shells.append((a, r))
         elif a < -eps:
-            hole_rings.append(r)
+            hole_rings.append((-a, r))
     shells.sort(key=lambda t: t[0])  # smallest-area-first → innermost parent
     rings_per_shell: list[list[np.ndarray]] = [[s] for _, s in shells]
-    for h in hole_rings:
-        for i, (_, s) in enumerate(shells):
-            if _ring_strictly_contains(s, h):
+    for ah, h in hole_rings:
+        for i, (a, s) in enumerate(shells):
+            if a > ah and _ring_strictly_contains(s, h):
                 rings_per_shell[i].append(h)  # CW walk is already hole-oriented
                 break
         # no strict container → the global unbounded face: discard
@@ -819,19 +822,23 @@ def polygonize(lines) -> Geometry:
     Each noded fragment is walked as two directed half-edges, faces to the
     left: every bounded face comes out once as a CCW ring (the unbounded
     face walks CW)."""
-    faces, _ = _faces(lines)
+    return _face_collection(_faces(lines)[0])
+
+
+def _face_collection(faces: list[Geometry]) -> Geometry:
     if not faces:
         return empty(GEOMETRYCOLLECTION)
     return Geometry(GEOMETRYCOLLECTION, parts=faces)
 
 
-def _faces(lines) -> tuple[list[Geometry], float]:
-    """(faces, tol): polygonize's faces and the noding tolerance."""
+def _faces(lines) -> tuple[list[Geometry], np.ndarray, float]:
+    """(faces, frags, tol): polygonize's faces, the noded fragments they
+    were walked from, and the noding tolerance."""
     frags, tol = _self_noded(lines)
     if not len(frags):
-        return [], tol
+        return [], frags, tol
     rings = _stitch(np.concatenate([frags, frags[:, [2, 3, 0, 1]]]), max(tol, 1e-11))
-    return _nest_faces(rings, tol), tol
+    return _nest_faces(rings, tol), frags, tol
 
 
 def _edge_groups(faces: list[Geometry], tol: float) -> list[list[int]]:
@@ -882,7 +889,7 @@ def build_area(geom: Geometry) -> Geometry:
     concentric squares → the holed annulus; three → annulus + filled core."""
     if geom is None or geom.is_empty:
         return empty(POLYGON)
-    faces, tol = _faces([geom])
+    faces, _, tol = _faces([geom])
     if not faces:
         return empty(POLYGON)
     from .constructive import point_on_surface
@@ -1147,9 +1154,8 @@ def polygonize_full(lines):
     empty here (noding repairs crossing rings before face extraction)."""
     from .geom import LINESTRING, MULTILINESTRING
 
-    faces = polygonize(lines)
-    # the same fragment set polygonize walked
-    frags, tol = _self_noded(lines)
+    face_list, frags, tol = _faces(lines)
+    faces = _face_collection(face_list)
     if not len(frags):
         return faces, Geometry(MULTILINESTRING, parts=[]), \
             Geometry(MULTILINESTRING, parts=[]), Geometry(MULTILINESTRING, parts=[])

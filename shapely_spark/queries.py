@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .index.cells import sql_cell_expr
-from .spark.columns import cell_col, haversine_col
+from .spark.columns import cell_col
 
 RES = 7  # cell grid resolution used by the oracle-checked spatial queries
 
@@ -190,100 +190,6 @@ def q(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-# ---- relational (TPC-H-ish; engine generality + bench headliners) ---------
-
-@q(
-    "tpch_q1",
-    """
-    SELECT l_returnflag, l_linestatus,
-           CAST(round(sum(CAST(l_quantity AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_qty,
-           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_base_price,
-           CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_disc_price,
-           round(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) / count(*), 4) AS avg_qty,
-           count(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= DATE '1998-09-02'
-    GROUP BY l_returnflag, l_linestatus
-    ORDER BY l_returnflag, l_linestatus
-    """,
-)
-def tpch_q1(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    return (
-        l.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("date"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum(F.col("l_quantity").cast("decimal(18,6)")), 2).cast("double").alias("sum_qty"),
-            F.round(F.sum(F.col("l_extendedprice").cast("decimal(18,6)")), 2).cast("double").alias("sum_base_price"),
-            F.round(F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")), 2)
-            .cast("double").alias("sum_disc_price"),
-            F.round(F.sum(F.col("l_quantity").cast("decimal(18,6)")).cast("double") / F.count("*"), 4)
-            .alias("avg_qty"),
-            F.count("*").alias("count_order"),
-        )
-        .repartition(1).sortWithinPartitions("l_returnflag", "l_linestatus")
-    )
-
-
-@q(
-    "tpch_q3",
-    """
-    SELECT o_orderkey,
-           CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
-           o_orderdate, o_orderpriority
-    FROM customer JOIN orders ON c_custkey = o_custkey
-                  JOIN lineitem ON l_orderkey = o_orderkey
-    WHERE c_mktsegment = 'BUILDING' AND o_orderdate < DATE '1998-03-15'
-      AND l_shipdate > DATE '1998-03-15'
-    GROUP BY o_orderkey, o_orderdate, o_orderpriority
-    ORDER BY revenue DESC, o_orderkey LIMIT 20
-    """,
-)
-def tpch_q3(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
-    return (
-        c.where(F.col("c_mktsegment") == "BUILDING")
-        .join(o, c.c_custkey == o.o_custkey)
-        .join(l, F.col("l_orderkey") == F.col("o_orderkey"))
-        .where(
-            (F.col("o_orderdate") < F.lit("1998-03-15").cast("date"))
-            & (F.col("l_shipdate") > F.lit("1998-03-15").cast("date"))
-        )
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")), 2)
-             .cast("double").alias("revenue"))
-        .select("o_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.desc("revenue"), "o_orderkey")  # + limit → TakeOrderedAndProject
-        .limit(20)
-    )
-
-
-@q(
-    "tpch_q6",
-    """
-    SELECT CAST(round(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
-    FROM lineitem
-    WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1997-01-01'
-      AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
-    """,
-)
-def tpch_q6(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    return (
-        l.where(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("date"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("date"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(F.round(F.sum((F.col("l_extendedprice") * F.col("l_discount")).cast("decimal(18,6)")), 2)
-             .cast("double").alias("revenue"))
-    )
 
 
 # ---- spatial: cell assignment / tiling -------------------------------------
@@ -768,508 +674,7 @@ def wkb_size_ngon(spark, sf_dir):
     return _geo_kernel_query(spark, sf_dir, "gid long, wkb_bytes long", fn).repartition(1).sortWithinPartitions("gid")
 
 
-# ---- text / quality (training-data pipeline ops) ---------------------------
-
-@q(
-    "token_count",
-    """
-    SELECT doc_id, len(string_split(text, ' ')) AS n_tokens, length(text) AS n_chars2
-    FROM documents ORDER BY doc_id
-    """,
-)
-def token_count(spark, sf_dir):
-    d = _spread(_t(spark, sf_dir, "documents"))
-    return d.select(
-        "doc_id",
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
-        F.length("text").cast("long").alias("n_chars2"),
-    ).repartition(1).sortWithinPartitions("doc_id")
-
-
-_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "with"]
-
-
-@q(
-    "quality_score",
-    f"""
-    WITH t AS (
-      SELECT doc_id, string_split(text, ' ') AS w, length(text) AS nc FROM documents
-    )
-    SELECT doc_id,
-           len(w) AS n_tokens,
-           round(CAST(len(list_filter(w, x -> list_contains({_STOPWORDS!r}, x))) AS DOUBLE)
-                 / len(w), 4) AS stopword_ratio,
-           round(CAST(nc AS DOUBLE) / len(w), 4) AS avg_token_len
-    FROM t ORDER BY doc_id
-    """,
-)
-def quality_score(spark, sf_dir):
-    """Quality heuristics: stopword ratio + mean token length (the engine's
-    language-quality scoring building blocks), all JVM-side."""
-    d = _spread(_t(spark, sf_dir, "documents"))
-    w = F.split(F.col("text"), " ")
-    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
-    return d.select(
-        "doc_id",
-        F.size(w).cast("long").alias("n_tokens"),
-        F.round(
-            F.size(F.filter(w, lambda x: F.array_contains(stop_arr, x))).cast("double")
-            / F.size(w), 4,
-        ).alias("stopword_ratio"),
-        F.round(F.length("text").cast("double") / F.size(w), 4).alias("avg_token_len"),
-    ).repartition(1).sortWithinPartitions("doc_id")
-
-
-@q(
-    "langid_heuristic",
-    """
-    WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-    m(lang, markers) AS (VALUES
-      ('en', ['the','and','of','to','is']),
-      ('de', ['der','die','und','das','ist']),
-      ('fr', ['le','la','les','et','est']),
-      ('es', ['el','la','los','que','es']),
-      ('pt', ['o','que','de','um','para']),
-      ('ru', ['i','v','ne','na','eto']),
-      ('zh', ['de','shi','le','zai','he']),
-      ('ja', ['no','ni','wa','wo','ga'])),
-    h AS (
-      SELECT t.doc_id, m.lang,
-             len(list_filter(t.w, x -> list_contains(m.markers, x))) AS hits
-      FROM t CROSS JOIN m
-    ),
-    b AS (SELECT doc_id, max({'hits': hits, 'lang': lang}) AS best
-          FROM h GROUP BY doc_id)
-    SELECT doc_id,
-           CASE WHEN best.hits > 0 THEN best.lang ELSE 'en' END AS pred_lang,
-           best.hits::BIGINT AS pred_hits
-    FROM b ORDER BY doc_id
-    """,
-)
-def langid_heuristic_q(spark, sf_dir):
-    """Marker-argmax language id. Deterministic pure column math; the
-    DuckDB twin mirrors the argmax tie-break (max over (hits, lang)
-    struct ordering — Spark array_max and DuckDB struct max both compare
-    field-lexicographically)."""
-    from .text.quality import langid_heuristic
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    return langid_heuristic(d).select("doc_id", "pred_lang", "pred_hits").repartition(1).sortWithinPartitions("doc_id")
-
-
-@q(
-    "bpe_token_count",
-    """
-    WITH t AS (
-      SELECT doc_id,
-             text || ' v' || doc_id % 10 || '.0, price: $19.99! (50% off)' AS txt
-      FROM documents
-    )
-    SELECT doc_id,
-           len(regexp_extract_all(txt, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))::BIGINT AS n_bpe,
-           len(string_split(txt, ' '))::BIGINT AS n_ws
-    FROM t ORDER BY doc_id
-    """,
-)
-def bpe_token_count(spark, sf_dir):
-    """BPE-ish pre-tokenizer count (text/quality.bpe_token_count_col, r4 —
-    the SURVEY's 'whitespace + BPE-ish regex' token-budget pair): letter
-    runs, digit runs, and single marks each count once. Docs get a
-    deterministic mixed tail (version number, price, punctuation) so the
-    two counters genuinely diverge; the DuckDB twin applies the same
-    lookaround-free pattern."""
-    from .text.quality import bpe_token_count_col, token_count_col
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    k = F.col("doc_id")
-    txt = F.concat(F.col("text"), F.lit(" v"), (k % 10).cast("string"),
-                   F.lit(".0, price: $19.99! (50% off)"))
-    return d.select(
-        "doc_id",
-        bpe_token_count_col(txt).alias("n_bpe"),
-        token_count_col(txt).alias("n_ws"),
-    ).repartition(1).sortWithinPartitions("doc_id")
-
-
-@q(
-    "c4_clean_lines_counts",
-    """
-    WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-    built AS (
-      SELECT doc_id,
-             [array_to_string(w[1:8], ' ') || '.',
-              'short line.',
-              'please accept cookie policy now ok.',
-              array_to_string(w[9:14], ' ')] AS lines
-      FROM d
-    ),
-    f AS (
-      SELECT doc_id, lines,
-             list_filter(lines, x ->
-               regexp_matches(x, '[.!?"'']$')
-               AND len(string_split_regex(trim(x), ' +')) >= 5
-               AND NOT contains(lower(x), 'cookie')
-               AND NOT contains(lower(x), 'javascript')
-               AND NOT contains(lower(x), 'terms of use')) AS kept
-      FROM built
-    )
-    SELECT doc_id, len(lines)::BIGINT AS n_lines, len(kept)::BIGINT AS n_kept,
-           md5(array_to_string(kept, chr(10))) AS cleaned_md5
-    FROM f ORDER BY doc_id
-    """,
-)
-def c4_clean_lines_counts(spark, sf_dir):
-    """C4-style line cleaning (text/quality.clean_lines, r4): docs are
-    recomposed into four lines — a punctuated 8-word sentence (kept), a
-    too-short line (dropped), a boilerplate 'cookie' line (dropped), and
-    an unpunctuated fragment (dropped) — and the keep-filter runs as one
-    JVM higher-order-function chain. The DuckDB twin applies the same
-    three rules with list_filter and both sides hash the cleaned text."""
-    from .text.quality import clean_lines
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    w = F.split(F.col("text"), " ")
-    text2 = F.concat_ws(
-        "\n",
-        F.concat(F.array_join(F.slice(w, 1, 8), " "), F.lit(".")),
-        F.lit("short line."),
-        F.lit("please accept cookie policy now ok."),
-        F.array_join(F.slice(w, 9, 6), " "),
-    )
-    out = clean_lines(d.select("doc_id", text2.alias("text")))
-    return out.select(
-        "doc_id", "n_lines", "n_kept",
-        F.md5(F.encode(F.col("cleaned"), "UTF-8")).alias("cleaned_md5"),
-    ).repartition(1).sortWithinPartitions("doc_id")
-
-
-@q(
-    "gopher_flags_counts",
-    """
-    WITH d AS (SELECT doc_id, text, string_split_regex(text, ' +') AS w
-               FROM documents),
-    m AS (
-      SELECT doc_id,
-             len(w) AS n_words,
-             list_sum(list_transform(w, x -> length(x)))::DOUBLE / len(w) AS mean_len,
-             length(regexp_replace(text, '[^#…]', '', 'g'))::DOUBLE
-               / greatest(len(w), 1) AS sym_ratio,
-             len(list_distinct(list_filter(w, x -> list_contains(
-               ['the','a','of','and','to','in','is','on','for','with'], x)))) AS stop_hits,
-             len(list_filter(w, x -> NOT regexp_matches(x, '^[A-Za-z]')))::DOUBLE
-               / greatest(len(w), 1) AS nonalpha
-      FROM d
-    )
-    SELECT doc_id,
-           (n_words >= 50 AND n_words <= 100000) AS ok_word_count,
-           (mean_len >= 3.0 AND mean_len <= 10.0) AS ok_mean_word_len,
-           (sym_ratio < 0.1) AS ok_symbol_ratio,
-           (stop_hits >= 2) AS ok_stopwords,
-           (nonalpha < 0.3) AS ok_alpha_start,
-           ((n_words >= 50 AND n_words <= 100000)
-            AND (mean_len >= 3.0 AND mean_len <= 10.0)
-            AND sym_ratio < 0.1 AND stop_hits >= 2
-            AND nonalpha < 0.3) AS gopher_pass
-    FROM m ORDER BY doc_id
-    """,
-)
-def gopher_flags_counts(spark, sf_dir):
-    """Gopher-style quality gates (text/quality.gopher_quality_flags, r4)
-    over the raw documents table: five boolean rule columns + the
-    aggregate pass flag, all pure column math; the DuckDB twin computes
-    the identical rules with list functions."""
-    from .text.quality import gopher_quality_flags
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    out = gopher_quality_flags(d)
-    return out.select(
-        "doc_id", "ok_word_count", "ok_mean_word_len", "ok_symbol_ratio",
-        "ok_stopwords", "ok_alpha_start", "gopher_pass",
-    ).repartition(1).sortWithinPartitions("doc_id")
-
-
-@q(
-    "gopher_repetition_flags",
-    """
-    WITH d AS (SELECT doc_id, regexp_replace(text, 'table', chr(10), 'g') AS t
-               FROM documents),
-    l AS (SELECT doc_id, t,
-                 list_filter(string_split(t, chr(10)), x -> trim(x) <> '') AS lines
-          FROM d),
-    m AS (SELECT doc_id, t,
-                 len(lines) AS nl,
-                 len(list_distinct(lines)) AS nd,
-                 coalesce(list_sum(list_transform(lines, x -> length(x))), 0) AS lc,
-                 coalesce(list_sum(list_transform(list_distinct(lines),
-                                                  x -> length(x))), 0) AS dc
-          FROM l),
-    w AS (SELECT doc_id, length(t) AS chars,
-                 list_filter(string_split_regex(lower(t), '\\s+'), x -> x <> '') AS ws
-          FROM d),
-    g AS (SELECT doc_id, chars, ws[i + 1] || ' ' || ws[i + 2] AS gram
-          FROM w, unnest(range(0, greatest(len(ws) - 1, 0))) t2(i)),
-    c AS (SELECT doc_id, chars, gram, COUNT(*) AS c FROM g GROUP BY 1, 2, 3),
-    top AS (SELECT doc_id, (c * length(gram)) / greatest(chars::DOUBLE, 1.0) AS frac,
-                   row_number() OVER (PARTITION BY doc_id
-                                      ORDER BY c DESC, gram DESC) AS rn
-            FROM c)
-    SELECT m.doc_id,
-           CASE WHEN nl > 0 THEN (nl - nd)::DOUBLE / nl ELSE 0.0 END AS dup_line_frac,
-           CASE WHEN lc > 0 THEN (lc - dc)::DOUBLE / lc ELSE 0.0 END AS dup_line_char_frac,
-           coalesce(top.frac, 0.0) AS top2gram_char_frac,
-           (CASE WHEN nl > 0 THEN (nl - nd)::DOUBLE / nl ELSE 0.0 END <= 0.30
-            AND CASE WHEN lc > 0 THEN (lc - dc)::DOUBLE / lc ELSE 0.0 END <= 0.20
-            AND coalesce(top.frac, 0.0) <= 0.20) AS rep_pass
-    FROM m LEFT JOIN top ON m.doc_id = top.doc_id AND top.rn = 1
-    ORDER BY m.doc_id
-    """,
-)
-def gopher_repetition_flags(spark, sf_dir):
-    """Gopher repetition-removal gates (text/quality.repetition_flags,
-    r4): duplicate-line fraction, duplicate-line CHAR fraction, and the
-    most-frequent word-2-gram's character coverage, with the combined
-    rep_pass flag. Line structure is synthesized deterministically by
-    turning every 'table' token into a newline (identical regexp_replace
-    on both engines; the synthetic corpus is single-line). Every per-doc
-    value is one integer-ratio division or (count×len)/chars with the
-    SAME operation order on both sides — bit-identical, no rounding
-    needed. The top-gram tie breaks to the lexicographically greatest
-    gram on both engines (max(struct) vs ORDER BY c DESC, gram DESC)."""
-    from .text.quality import repetition_flags
-
-    d = _spread(_t(spark, sf_dir, "documents")).withColumn(
-        "t2", F.regexp_replace("text", "table", "\n"))
-    out = repetition_flags(d, text_col="t2", id_col="doc_id")
-    return out.select(
-        "doc_id", "dup_line_frac", "dup_line_char_frac",
-        "top2gram_char_frac", "rep_pass",
-    ).repartition(1).sortWithinPartitions("doc_id")
-
-
-@q(
-    "stratified_sample_langs",
-    """
-    WITH r AS (
-      SELECT lang, doc_id,
-             row_number() OVER (PARTITION BY lang
-                 ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-      FROM documents)
-    SELECT lang, COUNT(*)::BIGINT AS n, SUM(doc_id)::BIGINT AS sum_ids,
-           MIN(doc_id)::BIGINT AS min_id, MAX(doc_id)::BIGINT AS max_id
-    FROM r WHERE rk <= 40 GROUP BY lang ORDER BY lang
-    """,
-)
-def stratified_sample_langs(spark, sf_dir):
-    """Deterministic per-language quota sampling
-    (text/quality.stratified_sample, r4): the 40 docs per lang with the
-    smallest md5(doc_id) — md5 of the decimal string is identical in
-    Spark and DuckDB, so the oracle reproduces the exact sample with a
-    plain window. The Spark side runs the skew-safe two-phase variant
-    (rank within (lang, salt) first, then over the ≤ salts×quota
-    survivors) and must select the SAME rows."""
-    from .text.quality import stratified_sample
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    s = stratified_sample(d, strata_col="lang", quota=40,
-                          order_col="doc_id", salts=8)
-    return (s.groupBy("lang").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("doc_id").cast("long").alias("sum_ids"),
-        F.min("doc_id").cast("long").alias("min_id"),
-        F.max("doc_id").cast("long").alias("max_id"))
-        .repartition(1).sortWithinPartitions("lang"))
-
-
-@q(
-    "unigram_logprob_filter",
-    """
-    WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-               FROM documents),
-    v0 AS (SELECT word, count(*)::BIGINT AS cnt FROM t GROUP BY word),
-    s AS (SELECT sum(cnt)::DOUBLE AS total FROM v0),
-    lp AS (SELECT word, ln(cnt / total) AS logp FROM v0, s WHERE cnt >= 100),
-    d AS (SELECT doc_id, count(*)::BIGINT AS n_tokens,
-                 round(avg(coalesce(logp, ln(0.5 / total))), 6) AS avg_logp
-          FROM t LEFT JOIN lp USING (word), s GROUP BY doc_id)
-    SELECT doc_id, n_tokens, avg_logp FROM d ORDER BY doc_id
-    """,
-)
-def unigram_logprob_filter(spark, sf_dir):
-    """Unigram-LM quality scoring (text/quality.unigram_logprob, r4):
-    the Catalyst stand-in for the CCNet/LLaMA KenLM perplexity filter —
-    mean token ln P(w) per document under a self-estimated unigram LM.
-    min_count=100 drops the corpus's rarest type ('dup', 26 occurrences
-    at sf0.01) from the vocab so the OOV half-count floor ln(0.5/total)
-    is exercised, not just defined. LM build is one partial-agg shuffle;
-    the (word, logp) relation broadcasts into the scoring join; identical
-    arithmetic op order on both engines, round-6 means."""
-    from .text.quality import unigram_logprob
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    out = unigram_logprob(d, min_count=100)
-    return (out.select("doc_id", "n_tokens", "avg_logp")
-            .repartition(1).sortWithinPartitions("doc_id"))
-
-
-@q(
-    "bigram_logprob_filter",
-    """
-    WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-                      unnest(range(0, len(string_split(text, ' ')))) AS pos
-               FROM documents),
-    t2 AS (SELECT doc_id, pos, word,
-                  lag(word) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-           FROM t),
-    v0 AS (SELECT word, count(*)::BIGINT AS cnt FROM t GROUP BY word),
-    s AS (SELECT sum(cnt)::DOUBLE AS total FROM v0),
-    uni AS (SELECT word, cnt, ln(cnt / total) AS logp
-            FROM v0, s WHERE cnt >= 100),
-    bg AS (SELECT prev, word, count(*)::BIGINT AS bcnt FROM t2
-           WHERE prev IS NOT NULL GROUP BY prev, word
-           HAVING count(*) >= 3),
-    sc AS (SELECT t2.doc_id,
-                  CASE WHEN t2.prev IS NULL
-                       THEN coalesce(u.logp, ln(0.5 / total))
-                       WHEN bg.bcnt IS NOT NULL AND pu.cnt IS NOT NULL
-                       THEN ln(bg.bcnt / pu.cnt)
-                       ELSE ln(0.4) + coalesce(u.logp, ln(0.5 / total))
-                  END AS lp
-           FROM t2
-           LEFT JOIN uni u ON t2.word = u.word
-           LEFT JOIN uni pu ON t2.prev = pu.word
-           LEFT JOIN bg ON t2.prev = bg.prev AND t2.word = bg.word, s)
-    SELECT doc_id, count(*)::BIGINT AS n_tokens,
-           round(avg(lp), 6) AS avg_logp
-    FROM sc GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def bigram_logprob_filter(spark, sf_dir):
-    """Bigram Stupid-Backoff LM scoring (text/quality.bigram_logprob,
-    r5 — the r4 verdict's KenLM-direction upgrade of the unigram
-    stand-in; Brants et al. 2007 §4): score(w|p) = count(p w)/count(p)
-    for seen bigrams, else 0.4·P_unigram(w) with the half-count OOV
-    floor; first token scores unigram. min_count=100 cuts the rare type
-    so the OOV floor bites; bigram_min_count=3 cuts tail bigrams so the
-    backoff path bites on REAL words too. The oracle replays the exact
-    count/backoff arithmetic via lag() windows; identical op order and
-    round-6 means on both engines."""
-    from .text.quality import bigram_logprob
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    out = bigram_logprob(d, min_count=100, bigram_min_count=3)
-    return (out.select("doc_id", "n_tokens", "avg_logp")
-            .repartition(1).sortWithinPartitions("doc_id"))
-
-
-# 1- and 2-token documents (negative ids, corpus vocabulary): positions
-# that can attempt only the unigram / bigram level of the trigram chain.
-_LM_SHORT_DOCS = [(-1, "join"), (-2, "join hash")]
-
-
-@q(
-    "trigram_logprob_filter",
-    f"""
-    WITH docs AS (SELECT doc_id, text FROM documents UNION ALL
-                  SELECT * FROM (VALUES {", ".join(f"({i}::BIGINT, '{t}')" for i, t in _LM_SHORT_DOCS)})
-                  v(doc_id, text)),
-    t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-                 unnest(range(0, len(string_split(text, ' ')))) AS pos
-          FROM docs),
-    t2 AS (SELECT doc_id, pos, word,
-                  lag(word) OVER w AS p1, lag(word, 2) OVER w AS p2
-           FROM t WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-    u0 AS (SELECT word, count(*)::BIGINT AS cnt FROM t GROUP BY word),
-    s AS (SELECT sum(cnt)::DOUBLE AS total FROM u0),
-    uni AS (SELECT word, cnt FROM u0 WHERE cnt >= 100),
-    bg AS (SELECT p1 || chr(31) || word AS key, count(*)::BIGINT AS cnt
-           FROM t2 WHERE p1 IS NOT NULL GROUP BY 1 HAVING count(*) >= 3),
-    tg AS (SELECT p2 || chr(31) || p1 || chr(31) || word AS key,
-                  count(*)::BIGINT AS cnt
-           FROM t2 WHERE p2 IS NOT NULL GROUP BY 1 HAVING count(*) >= 3),
-    av AS (SELECT *, CASE WHEN p2 IS NOT NULL THEN 3
-                          WHEN p1 IS NOT NULL THEN 2 ELSE 1 END AS avail
-           FROM t2),
-    sc AS (SELECT av.doc_id,
-                  CASE
-                    WHEN tg.cnt IS NOT NULL AND bgx.cnt IS NOT NULL
-                      THEN ln(0.4) * (avail - 3) + ln(tg.cnt / bgx.cnt)
-                    WHEN bg.cnt IS NOT NULL AND ux.cnt IS NOT NULL
-                      THEN ln(0.4) * (avail - 2) + ln(bg.cnt / ux.cnt)
-                    ELSE ln(0.4) * (avail - 1)
-                         + coalesce(ln(u.cnt / total), ln(0.5 / total))
-                  END AS lp
-           FROM av
-           LEFT JOIN uni u ON av.word = u.word
-           LEFT JOIN uni ux ON av.p1 = ux.word
-           LEFT JOIN bg ON bg.key = av.p1 || chr(31) || av.word
-           LEFT JOIN bg bgx ON bgx.key = av.p2 || chr(31) || av.p1
-           LEFT JOIN tg ON tg.key = av.p2 || chr(31) || av.p1
-                                    || chr(31) || av.word, s)
-    SELECT doc_id, count(*)::BIGINT AS n_tokens,
-           round(avg(lp), 6) AS avg_logp
-    FROM sc GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def trigram_logprob_filter(spark, sf_dir):
-    """Order-3 Stupid-Backoff LM scoring (text/quality.ngram_logprob,
-    r5 — the arbitrary-order generalization toward CCNet/LLaMA's KenLM
-    5-gram; Brants et al. 2007 §4): highest seen order wins, one α per
-    backed-off level, positions near the document start attempt only
-    their available levels, half-count OOV floor at the bottom.
-    min_count=100 / ngram_min_count=3 exercise every branch of the
-    chain on the synthetic corpus. The oracle replays the full backoff
-    CASE via two lag() windows and separator-joined keys — identical
-    arithmetic op order, round-6 means. The corpus carries the
-    `_LM_SHORT_DOCS` on both sides."""
-    from .text.quality import ngram_logprob
-
-    short = spark.createDataFrame(_LM_SHORT_DOCS, "doc_id long, text string")
-    d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text").unionByName(short))
-    out = ngram_logprob(d, order=3, min_count=100, ngram_min_count=3)
-    return (out.select("doc_id", "n_tokens", "avg_logp")
-            .repartition(1).sortWithinPartitions("doc_id"))
-
-
-@q(
-    "ccnet_bucket_tertiles",
-    """
-    WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-               FROM documents),
-    v0 AS (SELECT word, count(*)::BIGINT AS cnt FROM t GROUP BY word),
-    s AS (SELECT sum(cnt)::DOUBLE AS total FROM v0),
-    lp AS (SELECT word, ln(cnt / total) AS logp FROM v0, s WHERE cnt >= 100),
-    d AS (SELECT doc_id, count(*)::BIGINT AS n_tokens,
-                 round(avg(coalesce(logp, ln(0.5 / total))), 6) AS avg_logp
-          FROM t LEFT JOIN lp USING (word), s GROUP BY doc_id),
-    j AS (SELECT d.doc_id, doc.lang, d.n_tokens, d.avg_logp
-          FROM d JOIN documents doc USING (doc_id)),
-    b AS (SELECT doc_id, lang, n_tokens, avg_logp,
-                 ntile(3) OVER (PARTITION BY lang
-                                ORDER BY avg_logp DESC, doc_id) AS nt
-          FROM j)
-    SELECT doc_id, lang, n_tokens, avg_logp,
-           CASE nt WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
-                   ELSE 'tail' END AS bucket
-    FROM b ORDER BY doc_id
-    """,
-)
-def ccnet_bucket_tertiles(spark, sf_dir):
-    """CCNet-style per-language head/middle/tail bucketing
-    (text/quality.ccnet_bucket, r4; Wenzek et al. 2020 §4.4): unigram-LM
-    score per document, then exact NTILE(3) tertiles WITHIN each
-    language ordered by descending log-prob (doc_id tie-break) — the
-    deterministic gate twin of the production filter. min_count=100
-    matches unigram_logprob_filter so the OOV floor path stays
-    exercised. The approx method (percentile_approx cutoffs, no
-    per-language sort) is the 100-TB path, tested for agreement in
-    tests; the oracle pins the exact path verbatim."""
-    from .text.quality import ccnet_bucket
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    out = ccnet_bucket(d, min_count=100, method="ntile")
-    return (out.select("doc_id", "lang", "n_tokens", "avg_logp", "bucket")
-            .repartition(1).sortWithinPartitions("doc_id"))
-
+# ---- web archive, crawl and table-format ops -------------------------------
 
 @q(
     "warc_revisit_roundtrip",
@@ -1528,116 +933,6 @@ def robots_filter_flags(spark, sf_dir):
             .repartition(1).sortWithinPartitions("doc_id"))
 
 
-# static BPE merge table for the tokenizer gate: topologically ordered
-# (every non-char input is produced by an EARLIER merge), so the
-# rank-based production encoder and the oracle's sequential per-merge
-# fold are provably equivalent; chosen to exercise multi-level merges
-# (t+a, ta+b, tab+le → table) on the corpus vocabulary
-_BPE_GATE_MERGES = [
-    ("t", "a"), ("ta", "b"), ("l", "e"), ("tab", "le"),
-    ("a", "s"), ("f", "as"), ("fas", "t"),
-    ("t", "h"), ("th", "e"),
-    ("v", "a"), ("va", "l"), ("val", "u"), ("valu", "e"),
-]
-
-
-def _bpe_oracle_tok_expr() -> str:
-    """DuckDB expression: BPE-encode word `w` under _BPE_GATE_MERGES by
-    folding each merge left-to-right (list_reduce), sequentially in merge
-    order — Sennrich apply semantics for a topological merge list."""
-    e = "array_to_string(string_split(w, ''), ' ')"
-    for a, b in _BPE_GATE_MERGES:
-        e = (
-            f"list_reduce(string_split({e}, ' '), (acc, x) -> "
-            f"CASE WHEN regexp_extract(acc, '[^ ]*$') = '{a}' "
-            f"AND x = '{b}' "
-            f"THEN left(acc, len(acc) - {len(a)}) || '{a + b}' "
-            f"ELSE acc || ' ' || x END)"
-        )
-    return e
-
-
-@q(
-    "bpe_encode_checksums",
-    f"""
-    WITH d AS (SELECT doc_id,
-                      list_filter(string_split(text, ' '), w -> w <> '')
-                          AS ws
-               FROM documents),
-    e AS (SELECT doc_id,
-                 array_to_string(
-                     list_transform(ws, w -> {_bpe_oracle_tok_expr()}),
-                     ' ') AS ts
-          FROM d)
-    SELECT doc_id,
-           len(string_split(ts, ' '))::BIGINT AS n_tokens,
-           md5(ts) AS tokens_md5
-    FROM e ORDER BY doc_id
-    """,
-)
-def bpe_encode_checksums(spark, sf_dir):
-    """BPE tokenizer gate (text/bpe.py, r4): encode every document with
-    the production rank-based encoder (mapInPandas, per-worker word
-    cache, ranks in the closure) under the static topological merge
-    table, and check the FULL token stream — count + md5 of the
-    space-joined tokens — against DuckDB re-deriving BPE from scratch
-    as a per-merge left-to-right list_reduce fold. Training itself is
-    iterative (not SQL-expressible); it is pinned by tests instead:
-    collect-tier == distributed-tier merges bit-identically, and both
-    match a pure-python Sennrich reference (tests/test_bpe.py)."""
-    from .text.bpe import bpe_token_stats
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    out = bpe_token_stats(d, _BPE_GATE_MERGES)
-    return (out.select("doc_id", "n_tokens", "tokens_md5")
-            .repartition(1).sortWithinPartitions("doc_id"))
-
-
-@q(
-    "bpe_pack_pipeline",
-    f"""
-    WITH d AS (SELECT doc_id,
-                      list_filter(string_split(text, ' '), w -> w <> '')
-                          AS ws
-               FROM documents),
-    t AS (SELECT doc_id,
-                 len(string_split(array_to_string(
-                     list_transform(ws, w -> {_bpe_oracle_tok_expr()}),
-                     ' '), ' '))::BIGINT AS n_tokens
-          FROM d),
-    c AS (SELECT doc_id, n_tokens,
-                 coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                      0)::BIGINT AS start_tok
-          FROM t)
-    SELECT doc_id, n_tokens, start_tok,
-           (start_tok // 128)::BIGINT AS first_chunk,
-           ((start_tok + n_tokens - 1) // 128
-            - start_tok // 128 + 1)::BIGINT AS n_chunks
-    FROM c ORDER BY doc_id
-    """,
-)
-def bpe_pack_pipeline(spark, sf_dir):
-    """Composed tokenize→pack gate (r4): BPE-encode every document under
-    the static merge table (text/bpe.bpe_token_stats — the production
-    mapInPandas encoder), then lay the BPE token stream out into
-    seq_len=128 training chunks via the two-level prefix-sum packer
-    (text/packing.pack_sequences(n_tokens_col=...)) — tokenize → pack
-    as ONE plan, the real LM data-prep denomination. The oracle
-    re-derives the BPE token counts with the list_reduce fold and packs
-    them with the single-window cumsum the scale path must reproduce."""
-    from .text.bpe import bpe_token_stats
-    from .text.packing import pack_sequences
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    counts = bpe_token_stats(d, _BPE_GATE_MERGES)
-    out = pack_sequences(counts, seq_len=128, bucket=64,
-                         n_tokens_col="n_tokens")
-    return (out.select("doc_id", "n_tokens", "start_tok",
-                       "first_chunk", "n_chunks")
-            .repartition(1).sortWithinPartitions("doc_id"))
-
-
 @q(
     "geoparquet_roundtrip_filter",
     f"""
@@ -1844,9 +1139,8 @@ def crawl_schedule_topk(spark, sf_dir):
     → global top-40 by (score desc, url) as TakeOrderedAndProject.
     This is the next-fetch list a scheduler ships to the frontier; the
     oracle restates every stage closed form."""
-    from .spark.crawl import host_change_stats, latest_snapshot
+    from .spark.crawl import cap_per_key, host_change_stats, latest_snapshot
     from .spark.extract import host_of
-    from .text.quality import cap_per_key
     from .text.robots import robots_filter
 
     pages = _synth_recrawl_pages(spark, sf_dir)
@@ -2014,453 +1308,6 @@ def snapshot_table_time_travel(spark, sf_dir):
 
 
 @q(
-    "sequence_pack_chunks",
-    """
-    WITH t AS (SELECT doc_id,
-                      len(string_split(text, ' '))::BIGINT AS n_tokens
-               FROM documents),
-    c AS (SELECT doc_id, n_tokens,
-                 coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                      0)::BIGINT AS start_tok
-          FROM t)
-    SELECT doc_id, n_tokens, start_tok,
-           (start_tok // 512)::BIGINT AS first_chunk,
-           ((start_tok + n_tokens - 1) // 512
-            - start_tok // 512 + 1)::BIGINT AS n_chunks
-    FROM c ORDER BY doc_id
-    """,
-)
-def sequence_pack_chunks(spark, sf_dir):
-    """LM training-sequence packing (text/packing.pack_sequences, r4):
-    concat-and-chop layout — each doc's start offset in the global token
-    stream and the seq_len=512 chunks it spans. The Spark side runs the
-    scalable two-level prefix sum (bucket totals -> tiny exclusive scan
-    -> broadcast prefixes -> within-bucket window, bucket=64 so sf0.01
-    exercises ~8 buckets); the oracle is the single-window cumsum the
-    scale path must reproduce exactly."""
-    from .text.packing import pack_sequences
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    out = pack_sequences(d, seq_len=512, bucket=64)
-    return out.repartition(1).sortWithinPartitions("doc_id")
-
-
-@q(
-    "pack_chunk_occupancy",
-    """
-    WITH t AS (SELECT doc_id,
-                      len(string_split(text, ' '))::BIGINT AS n_tokens
-               FROM documents),
-    c AS (SELECT doc_id, n_tokens,
-                 coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                      0)::BIGINT AS start_tok
-          FROM t),
-    p AS (SELECT n_tokens, start_tok // 512 AS fc,
-                 (start_tok + n_tokens - 1) // 512 AS lc FROM c)
-    SELECT i::BIGINT AS chunk_id, COUNT(*)::BIGINT AS n_docs,
-           SUM(CASE WHEN lc > fc THEN 0 ELSE 1 END)::BIGINT AS n_whole_docs
-    FROM p, unnest(range(fc, lc + 1)) u(i)
-    GROUP BY i ORDER BY i
-    """,
-)
-def pack_chunk_occupancy(spark, sf_dir):
-    """Per training-chunk document occupancy (text/packing.
-    chunk_occupancy, r4): how many docs touch each 512-token chunk and
-    how many sit wholly inside it — the attention-mask accounting view
-    of the same packing. One JVM explode over the doc->chunk spans +
-    one partial-agg shuffle."""
-    from .text.packing import chunk_occupancy, pack_sequences
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    out = chunk_occupancy(pack_sequences(d, seq_len=512, bucket=64))
-    return (out.select(F.col("chunk_id").cast("long").alias("chunk_id"),
-                       F.col("n_docs").cast("long").alias("n_docs"),
-                       F.col("n_whole_docs").cast("long").alias("n_whole_docs"))
-            .repartition(1).sortWithinPartitions("chunk_id"))
-
-
-@q(
-    "dsir_select_topk",
-    """
-    WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-    uni AS (SELECT doc_id, unnest(w) AS g FROM d),
-    bi AS (SELECT doc_id, w[i+1] || ' ' || w[i+2] AS g
-           FROM (SELECT doc_id, w, unnest(range(0, len(w) - 1)) AS i
-                 FROM d) u),
-    feats AS (SELECT doc_id,
-                     ('0x' || substr(md5(g), 1, 15))::UBIGINT % 4096 AS b
-              FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi) a),
-    tc AS (SELECT b, count(*)::DOUBLE AS ct FROM feats
-           WHERE doc_id % 10 < 2 GROUP BY b),
-    rc AS (SELECT b, count(*)::DOUBLE AS cr FROM feats GROUP BY b),
-    tot AS (SELECT (SELECT sum(ct) FROM tc) AS tt,
-                   (SELECT sum(cr) FROM rc) AS rt),
-    ratio AS (SELECT bk.b,
-                     ln((coalesce(ct, 0) + 1.0) / (4096.0 + tt))
-                   - ln((coalesce(cr, 0) + 1.0) / (4096.0 + rt)) AS lr
-              FROM (SELECT unnest(range(0, 4096)) AS b) bk
-              LEFT JOIN tc USING (b) LEFT JOIN rc USING (b), tot),
-    sc AS (SELECT doc_id, count(*)::BIGINT AS n_feats,
-                  CAST(round(sum(CAST(round(lr, 9) AS DECIMAL(28,9))), 6)
-                       AS DOUBLE) AS logw
-           FROM feats JOIN ratio USING (b) GROUP BY doc_id),
-    gk AS (SELECT doc_id, n_feats, logw,
-                  logw - ln(-ln(((('0x' || substr(md5('dsir7:' ||
-                        CAST(doc_id AS VARCHAR)), 1, 13))::UBIGINT)::DOUBLE
-                        + 0.5) / 4503599627370496.0)) AS key
-           FROM sc),
-    top AS (SELECT doc_id, n_feats, logw, key FROM gk
-            ORDER BY key DESC, doc_id LIMIT 50)
-    SELECT doc_id, n_feats, logw, round(key, 6) AS key FROM top
-    ORDER BY doc_id
-    """,
-)
-def dsir_select_topk(spark, sf_dir):
-    """DSIR data selection (text/selection.dsir_resample, r4): the
-    public importance-resampling method of Xie et al. NeurIPS'23 —
-    hashed unigram+bigram bag features (4096 buckets), add-1-smoothed
-    target/raw bucket LMs fit in one partial-agg shuffle each, per-doc
-    importance log-weight via a broadcast 4096-row log-ratio join, then
-    Gumbel-top-k (deterministic salted-hash Gumbel noise) selects k=50
-    without replacement ∝ exp(logw). Target = doc_id % 10 < 2 slice of
-    the same corpus. hash_fn='md5' is the cross-engine verification
-    path (DuckDB reproduces the bucket ids exactly); exact_sum rides
-    the DECIMAL(28,9) carrier so the per-doc sum is order-independent.
-    The production path swaps in xxhash64 — identical plan shape."""
-    from .text.selection import dsir_resample
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    target = d.where(F.col("doc_id") % 10 < 2)
-    out = dsir_resample(d, target, 50, n_buckets=4096, seed=7,
-                        hash_fn="md5", exact_sum=True)
-    return (out.select("doc_id", "n_feats", "logw",
-                       F.round("key", 6).alias("key"))
-            .repartition(1).sortWithinPartitions("doc_id"))
-
-
-@q(
-    "domain_cap_keep",
-    """
-    SELECT doc_id, source,
-           row_number() OVER (PARTITION BY source
-                              ORDER BY n_chars DESC, doc_id)::BIGINT
-             AS keep_rank
-    FROM documents
-    QUALIFY keep_rank <= 3
-    ORDER BY source, keep_rank
-    """,
-)
-def domain_cap_keep(spark, sf_dir):
-    """Per-domain frequency capping (text/quality.cap_per_key, r4): keep
-    the best ≤3 documents per source domain (longest first, id
-    tie-break) so no single site dominates the training mixture — the
-    standard web-corpus cap. Two-phase salted windows: phase 1 ranks
-    within (source, salt) so a hot domain never pins one reducer, phase
-    2 ranks the ≤ salts×cap survivors. Exact: the oracle is the naive
-    single-window QUALIFY."""
-    from .text.quality import cap_per_key
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    out = cap_per_key(d, "source", cap=3)
-    return (out.select("doc_id", "source",
-                       F.col("keep_rank").cast("long").alias("keep_rank"))
-            .repartition(1).sortWithinPartitions("source", "keep_rank"))
-
-
-@q(
-    "hash_split_counts",
-    """
-    WITH s AS (
-      SELECT doc_id,
-             ('0x' || substr(md5('split7:' || CAST(doc_id AS VARCHAR)),
-                             1, 13))::UBIGINT % 1000000 AS b
-      FROM documents)
-    SELECT CASE WHEN b < 900000 THEN 'train'
-                WHEN b < 950000 THEN 'val' ELSE 'test' END AS split,
-           count(*)::BIGINT AS n_docs,
-           sum(doc_id)::BIGINT AS id_sum
-    FROM s GROUP BY 1 ORDER BY split
-    """,
-)
-def hash_split_counts(spark, sf_dir):
-    """Deterministic train/val/test split (text/quality.hash_split, r4):
-    a salted per-id hash bucketed into 10^6 cells, cut at the cumulative
-    fractions (90/5/5). Pure JVM column math, no shuffle for the
-    assignment itself; stable under repartitioning and re-runs, so eval
-    contamination is auditable. md5 hash path = the DuckDB-reproducible
-    twin; production uses xxhash64 (identical plan). Gate compares
-    per-split row counts and exact BIGINT id sums."""
-    from .text.quality import hash_split
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    out = hash_split(d, seed=7, hash_fn="md5")
-    return (out.groupBy("split")
-            .agg(F.count("*").cast("long").alias("n_docs"),
-                 F.sum("doc_id").cast("long").alias("id_sum"))
-            .repartition(1).sortWithinPartitions("split"))
-
-
-@q(
-    "blocklist_filter_flags",
-    """
-    SELECT doc_id,
-           coalesce(list_has_any(string_split(lower(text), ' '),
-                                 ['dup', 'spark']), FALSE) AS blocked_word,
-           (lower(source) = 'src3'
-            OR ends_with(lower(source), '.src3')
-            OR lower(source) = 'src7'
-            OR ends_with(lower(source), '.src7')) AS blocked_domain,
-           (coalesce(list_has_any(string_split(lower(text), ' '),
-                                  ['dup', 'spark']), FALSE)
-            OR lower(source) = 'src3'
-            OR ends_with(lower(source), '.src3')
-            OR lower(source) = 'src7'
-            OR ends_with(lower(source), '.src7')) AS blocked
-    FROM documents ORDER BY doc_id
-    """,
-)
-def blocklist_filter_flags(spark, sf_dir):
-    """C4-style blocklist filtering (text/quality.blocklist_filter, r4):
-    badword gate (arrays_overlap against a broadcast literal list — the
-    C4 'bad words' filter) + UT1-style domain blocklist (exact name or
-    .domain subdomain suffix). Map-side only: no shuffle, no UDF;
-    flag-don't-drop so removal rates are auditable. Blocked words here
-    are real corpus vocabulary ('dup', 'spark') and two blocked source
-    domains, so all three flags fire on real rows at sf0.01."""
-    from .text.quality import blocklist_filter
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    out = blocklist_filter(d, word_blocklist=["dup", "spark"],
-                           domain_blocklist=["src3", "src7"])
-    return (out.select("doc_id", "blocked_word", "blocked_domain", "blocked")
-            .repartition(1).sortWithinPartitions("doc_id"))
-
-
-def _logreg_cte(iters: int, lr: float) -> str:
-    """DuckDB CTE chain mirroring text/classifier.logreg_fit iteration
-    by iteration: identical feature quantization (round-4), identical z
-    op order (left-assoc b + c1*x1 + ...), per-row gradient terms
-    rounded to 9 decimals and summed on DECIMAL(28,9) (order-free), and
-    the identical IEEE update w - lr*g/n — so the whole weight
-    trajectory is bit-identical to the Spark fit."""
-    xs = ["x1", "x2", "x3", "x4", "x5"]
-    cs = ["b"] + [f"c{i}" for i in range(1, 6)]
-    parts = [f"""
-    f AS MATERIALIZED (
-      SELECT CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
-             round(CAST(len(list_filter(w, x ->
-                     list_contains({_STOPWORDS!r}, x))) AS DOUBLE)
-                   / CAST(len(w) AS DOUBLE), 4) AS x1,
-             round(CAST(nc AS DOUBLE) / CAST(len(w) AS DOUBLE) / 10.0, 4)
-               AS x2,
-             round(CAST(length(regexp_replace(text, '[^0-9]', '', 'g'))
-                        AS DOUBLE) / greatest(CAST(nc AS DOUBLE), 1.0), 4)
-               AS x3,
-             round(CAST(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-                        AS DOUBLE) / greatest(CAST(nc AS DOUBLE), 1.0), 4)
-               AS x4,
-             round(least(CAST(len(w) AS DOUBLE) / 64.0, 1.0), 4) AS x5
-      FROM (SELECT lang, text, string_split(text, ' ') AS w,
-                   length(text) AS nc
-            FROM documents WHERE text IS NOT NULL) t0),
-    nn AS MATERIALIZED (SELECT count(*)::DOUBLE AS n FROM f),
-    w0 AS (SELECT {', '.join(f'0.0 AS {c}' for c in cs)})"""]
-    z = "b + " + " + ".join(f"c{i}*x{i}" for i in range(1, 6))
-    for k in range(1, iters + 1):
-        gterms = ["CAST(sum(CAST(round(r, 9) AS DECIMAL(28,9))) AS DOUBLE)"
-                  " AS g0"]
-        gterms += [f"CAST(sum(CAST(round({x}*r, 9) AS DECIMAL(28,9)))"
-                   f" AS DOUBLE) AS g{i}" for i, x in enumerate(xs, 1)]
-        upd = [f"{c} - {lr!r}*g{i}/n AS {c}" for i, c in enumerate(cs)]
-        parts.append(f"""
-    r{k} AS (SELECT {', '.join(xs)},
-                    1.0/(1.0 + exp(-({z}))) - y AS r
-             FROM f, w{k-1}),
-    g{k} AS MATERIALIZED (SELECT {', '.join(gterms)} FROM r{k}),
-    w{k} AS MATERIALIZED (SELECT {', '.join(upd)} FROM g{k}, w{k-1}, nn)""")
-    names = ["b_intercept", "x1_stopword_ratio", "x2_scaled_token_len",
-             "x3_digit_ratio", "x4_upper_ratio", "x5_length_score"]
-    sel = " UNION ALL ".join(
-        f"SELECT '{nm}' AS feature, round({c}, 6) AS weight FROM w{iters}"
-        for nm, c in zip(names, cs))
-    return ("WITH" + ",".join(parts)
-            + f" SELECT * FROM ({sel}) ORDER BY feature")
-
-
-_LOGREG_ITERS, _LOGREG_LR = 8, 1.0
-
-
-@q("logreg_quality_weights", _logreg_cte(_LOGREG_ITERS, _LOGREG_LR))
-def logreg_quality_weights(spark, sf_dir):
-    """Distributed logistic-regression quality classifier
-    (text/classifier.logreg_fit, r4): the fasttext-style supervised
-    filter of the GPT-3/CCNet/RefinedWeb pipelines — label = (lang =
-    'en'), five round-4-quantized quality features, 8 full-batch GD
-    iterations where each gradient is ONE partial-agg shuffle with
-    per-row terms rounded to 9 decimals and summed on a DECIMAL(28,9)
-    carrier. The weight trajectory is therefore partition-order-free
-    and bit-identical to the DuckDB CTE-chain twin. Output: the fitted
-    weights, round-6."""
-    from .text.classifier import (QUALITY_FEATURES, logreg_fit,
-                                  quality_classifier_features)
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    feats = quality_classifier_features(d).withColumn(
-        "y", F.when(F.col("lang") == "en", 1.0).otherwise(0.0)).persist()
-    try:
-        w = logreg_fit(feats, "y", iters=_LOGREG_ITERS, lr=_LOGREG_LR)
-    finally:
-        feats.unpersist()
-    names = ["b_intercept"] + [f"x{i+1}_{c}" for i, c in
-                               enumerate(QUALITY_FEATURES)]
-    rows = [(nm, float(round(wi, 6))) for nm, wi in zip(names, w)]
-    return (spark.createDataFrame(rows, "feature string, weight double")
-            .repartition(1).sortWithinPartitions("feature"))
-
-
-@q(
-    "corpus_shuffle_head",
-    """
-    WITH s AS (SELECT doc_id,
-                      ('0x' || substr(md5('shuf7:' || CAST(doc_id AS VARCHAR)),
-                                      1, 13))::UBIGINT::BIGINT AS shuffle_key
-               FROM documents),
-    top AS (SELECT doc_id, shuffle_key FROM s
-            ORDER BY shuffle_key, doc_id LIMIT 20)
-    SELECT row_number() OVER (ORDER BY shuffle_key, doc_id)::BIGINT AS pos,
-           doc_id, shuffle_key
-    FROM top ORDER BY pos
-    """,
-)
-def corpus_shuffle_head(spark, sf_dir):
-    """Deterministic corpus shuffle (text/packing.shuffle_rows, r4): the
-    permutation step before concat-and-chop packing — sort key is a
-    salted per-id hash, a pure function of (id, seed), so the stream
-    order is reproducible and resumable. The gate takes the first 20
-    positions of the permutation: orderBy+limit plans as
-    TakeOrderedAndProject (per-partition heaps), so verifying the
-    prefix never pays the full global sort. md5 = DuckDB-reproducible
-    path; production uses xxhash64 (identical plan)."""
-    from .text.packing import shuffle_rows
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    out = shuffle_rows(d, seed=7, hash_fn="md5").limit(20)
-    w = Window.orderBy("shuffle_key", "doc_id")
-    return (out.select(
-                F.row_number().over(w).cast("long").alias("pos"),
-                "doc_id", "shuffle_key")
-            .repartition(1).sortWithinPartitions("pos"))
-
-
-@q(
-    "mixture_sample_counts",
-    """
-    WITH d AS (SELECT doc_id, source,
-                      ('0x' || substr(md5('mix7:' || CAST(doc_id AS VARCHAR)),
-                                      1, 13))::UBIGINT % 1000000 AS b
-               FROM documents),
-    r AS (SELECT *, CASE WHEN source = 'src0' THEN 2.5
-                         WHEN source = 'src1' THEN 0.25
-                         ELSE 1.0 END AS rate FROM d),
-    c AS (SELECT doc_id, source,
-                 floor(rate)::INT
-                   + CASE WHEN b < CAST(round((rate - floor(rate)) * 1000000)
-                                   AS BIGINT)
-                          THEN 1 ELSE 0 END AS n
-          FROM r),
-    e AS (SELECT doc_id, source, unnest(range(0, n)) AS copy
-          FROM c WHERE n > 0)
-    SELECT source, count(*)::BIGINT AS n_rows,
-           sum(doc_id + copy)::BIGINT AS id_sum
-    FROM e GROUP BY source ORDER BY source
-    """,
-)
-def mixture_sample_counts(spark, sf_dir):
-    """Mixture sampling with epoch rates (text/quality.mixture_sample,
-    r4): the published Pile/LLaMA sampling-proportions recipe — src0 at
-    2.5 epochs (2 full copies + deterministic 50% third), src1 down to
-    0.25, everything else 1.0. The Bernoulli is a salted per-id hash on
-    the same 10^6 grid as hash_split; pure JVM when-chain + sequence
-    explode, no shuffle for the assignment. md5 = DuckDB-reproducible
-    gate path; production uses xxhash64. Gate compares per-source row
-    counts and exact BIGINT (doc_id+copy) sums."""
-    from .text.quality import mixture_sample
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    out = mixture_sample(d, {"src0": 2.5, "src1": 0.25}, seed=7,
-                         hash_fn="md5", default_rate=1.0)
-    return (out.groupBy("source")
-            .agg(F.count("*").cast("long").alias("n_rows"),
-                 F.sum(F.col("doc_id") + F.col("copy")).cast("long")
-                  .alias("id_sum"))
-            .repartition(1).sortWithinPartitions("source"))
-
-
-@q(
-    "pii_redact_counts",
-    """
-    WITH t AS (
-      SELECT doc_id,
-             text
-             || CASE WHEN doc_id % 3 > 0
-                     THEN ' u' || doc_id || '.0@ex' || doc_id % 7 || '.org'
-                     ELSE '' END
-             || CASE WHEN doc_id % 3 > 1
-                     THEN ' u' || doc_id || '.1@ex' || doc_id % 7 || '.org'
-                     ELSE '' END
-             || CASE WHEN doc_id % 2 = 1
-                     THEN ' 555-123-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                     ELSE '' END
-             || CASE WHEN doc_id % 4 = 0
-                     THEN ' 10.' || doc_id % 256 || '.0.' || (doc_id * 7) % 256
-                     ELSE '' END AS txt
-      FROM documents
-    )
-    SELECT doc_id,
-           len(regexp_extract_all(txt, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))::BIGINT AS n_email,
-           (doc_id % 2)::BIGINT AS n_phone,
-           (CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END)::BIGINT AS n_ip,
-           md5(regexp_replace(regexp_replace(regexp_replace(txt,
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-               '\\+?[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g'),
-               '\\b([0-9]{1,3}\\.){3}[0-9]{1,3}\\b', '<IP>', 'g')) AS redacted_md5
-    FROM t ORDER BY doc_id
-    """,
-)
-def pii_redact_counts(spark, sf_dir):
-    """PII scrubbing (text/quality.redact_pii, r4): emails, dashed phone
-    numbers, and IPv4s redacted to typed placeholders — the scrub stage
-    of a web-corpus pipeline, pure JVM regex. PII is synthesized
-    deterministically per doc_id (like the geometry queries build
-    shapes from params); the oracle re-applies the same lookaround-free
-    patterns in DuckDB and both sides hash the redacted text. The
-    n_email count comes from the engine (regexp_count) and is checked
-    against the closed-form injection counts."""
-    from .text.quality import redact_pii
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    k = F.col("doc_id")
-    txt = F.concat(
-        F.col("text"),
-        F.when(k % 3 > 0, F.concat(F.lit(" u"), k.cast("string"), F.lit(".0@ex"),
-                                   (k % 7).cast("string"), F.lit(".org"))).otherwise(""),
-        F.when(k % 3 > 1, F.concat(F.lit(" u"), k.cast("string"), F.lit(".1@ex"),
-                                   (k % 7).cast("string"), F.lit(".org"))).otherwise(""),
-        F.when(k % 2 == 1, F.concat(F.lit(" 555-123-"),
-                                    F.lpad((k % 10000).cast("string"), 4, "0"))).otherwise(""),
-        F.when(k % 4 == 0, F.concat(F.lit(" 10."), (k % 256).cast("string"),
-                                    F.lit(".0."), ((k * 7) % 256).cast("string"))).otherwise(""),
-    )
-    out = redact_pii(d.select("doc_id", txt.alias("text")))
-    return out.select(
-        "doc_id", "n_email", "n_phone", "n_ip",
-        F.md5(F.encode(F.col("redacted"), "UTF-8")).alias("redacted_md5"),
-    ).repartition(1).sortWithinPartitions("doc_id")
-
-
-@q(
     "url_canonical_dedup",
     """
     WITH u AS (
@@ -2480,12 +1327,12 @@ def pii_redact_counts(spark, sf_dir):
     """,
 )
 def url_canonical_dedup(spark, sf_dir):
-    """URL canonicalization for dedup keys (text/quality.canonical_url_col,
+    """URL canonicalization for dedup keys (spark/crawl.canonical_url_col,
     r4): messy synthesized URLs — uppercase scheme/host, default ports,
     trailing slashes, unsorted query params, fragments — must collapse to
     the closed-form canonical the oracle constructs directly. The
     canonical key then drives a dedup groupBy (one shuffle, scale-safe)."""
-    from .text.quality import canonical_url_col
+    from .spark.crawl import canonical_url_col
 
     o = _spread(_t(spark, sf_dir, "orders"))
     k = F.col("o_orderkey")
@@ -3581,89 +2428,6 @@ def spatial_join_geom_boxes(spark, sf_dir):
     return (
         spatial_join_geom(left, right, predicate="intersects", left_id="gid")
         .repartition(1).sortWithinPartitions("gid", "region_id")
-    )
-
-
-@q(
-    "tpch_q5",
-    """
-    SELECT n_name,
-           CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
-    FROM customer
-      JOIN orders   ON c_custkey = o_custkey
-      JOIN lineitem ON l_orderkey = o_orderkey
-      JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-      JOIN nation   ON s_nationkey = n_nationkey
-      JOIN region   ON n_regionkey = r_regionkey
-    WHERE r_name = 'ASIA'
-      AND o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1997-01-01'
-    GROUP BY n_name ORDER BY revenue DESC, n_name
-    """,
-)
-def tpch_q5(spark, sf_dir):
-    """TPC-H Q5 (local-supplier revenue): the join-ordering workout —
-    Catalyst broadcast-joins the three dimension tables and shuffles only
-    the orders⋈lineitem fact join."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    return (
-        c.join(o, F.col("c_custkey") == F.col("o_custkey"))
-        .join(l, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(s, (F.col("l_suppkey") == F.col("s_suppkey"))
-              & (F.col("c_nationkey") == F.col("s_nationkey")))
-        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(r, F.col("n_regionkey") == F.col("r_regionkey"))
-        .where((F.col("r_name") == "ASIA")
-               & (F.col("o_orderdate") >= F.lit("1996-01-01").cast("date"))
-               & (F.col("o_orderdate") < F.lit("1997-01-01").cast("date")))
-        .groupBy("n_name")
-        .agg(F.round(F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")), 2)
-             .cast("double").alias("revenue"))
-        .repartition(1).sortWithinPartitions(F.desc("revenue"), "n_name")
-    )
-
-
-@q(
-    "tpch_q10_variant",
-    """
-    SELECT c_custkey, c_name,
-           -- outer CAST: DuckDB sum(BIGINT) is HUGEINT -> float64 in pandas
-           CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents,
-           n_name
-    FROM customer
-      JOIN orders   ON c_custkey = o_custkey
-      JOIN lineitem ON l_orderkey = o_orderkey
-      JOIN nation   ON c_nationkey = n_nationkey
-    WHERE o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1996-04-01'
-      AND l_returnflag = 'R'
-    GROUP BY c_custkey, c_name, n_name
-    ORDER BY revenue_cents DESC, c_custkey LIMIT 20
-    """,
-)
-def tpch_q10_variant(spark, sf_dir):
-    """TPC-H Q10 (returned-item reporting, columns restricted to the
-    synthetic schema): fact-fact join + top-k by aggregate."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
-    n = _t(spark, sf_dir, "nation")
-    return (
-        c.join(o, F.col("c_custkey") == F.col("o_custkey"))
-        .join(l, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(n, F.col("c_nationkey") == F.col("n_nationkey"))
-        .where((F.col("o_orderdate") >= F.lit("1996-01-01").cast("date"))
-               & (F.col("o_orderdate") < F.lit("1996-04-01").cast("date"))
-               & (F.col("l_returnflag") == "R"))
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.sum(F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + 0.5)
-                   .cast("bigint")).alias("revenue_cents"))
-        .select("c_custkey", "c_name", "revenue_cents", "n_name")
-        .orderBy(F.desc("revenue_cents"), "c_custkey")  # + limit → TakeOrderedAndProject
-        .limit(20)
     )
 
 
@@ -4865,37 +3629,36 @@ def redirect_resolve_final(spark, sf_dir):
 
 _DRIVER_WINDOW = [
     # flagship plans (always driver-visible)
-    "tpch_q1", "spatial_join_boxes", "knn_nearest_center",
+    "spatial_join_geom_boxes", "spatial_join_boxes", "knn_nearest_center",
     "tile_agg_regions", "dwithin_pairs",
     # r5 rotation (r4 verdict item 5): the r4 driver sampled 50
     # previously-never-sampled queries, all green; this window rotates
     # the remaining never-driver-sampled queries in.
     # verdict-named never-sampled set:
-    "robots_filter_flags", "sitemap_parse_stats", "gopher_flags_counts",
-    "gopher_repetition_flags", "stratified_sample_langs",
+    "robots_filter_flags", "sitemap_parse_stats",
     "warc_revisit_roundtrip", "range_join_error_windows",
-    "pack_chunk_occupancy",
-    # new in r5 (bigram backoff LM; touches/contains group-predicate
-    # joins over non-rect layers):
-    "bigram_logprob_filter", "spatial_join_touches_pairs",
-    "spatial_join_contains_pairs",
-    # remaining never-sampled text/crawl/temporal:
-    "c4_clean_lines_counts", "latest_snapshot_urls",
-    "bpe_token_count", "corpus_shuffle_head",
-    "sequence_pack_chunks", "trigram_logprob_filter", "url_canonical_dedup",
+    # touches/contains group-predicate joins over non-rect layers:
+    "spatial_join_touches_pairs", "spatial_join_contains_pairs",
+    # crawl, archive and table-format plans:
+    "latest_snapshot_urls", "url_canonical_dedup", "crawl_schedule_topk",
+    "charset_decode_md5", "warc_roundtrip_text", "warc_http_status_counts",
+    "geoparquet_roundtrip_filter", "snapshot_table_time_travel",
+    "outlink_host_edges_counts", "anchor_text_top_terms",
+    "recrawl_change_stats", "redirect_resolve_final",
     # geometry joins and overlay over the labelled arrangement:
-    "spatial_join_ngon_pairs", "spatial_join_geom_boxes",
+    "spatial_join_ngon_pairs",
     "overlay_gc_intersection", "overlay_gc_difference", "relate_point_box",
     "dissolve_union_by_key", "make_valid_bowtie_area",
-    "overlay_symdifference_area",
-    # never-sampled SQL + geometry singles (r2/r3 era):
-    "tpch_q5", "tpch_q10_variant", "crosses_segments", "hausdorff_boxes",
+    "overlay_symdifference_area", "overlay_line_clip_length",
+    # never-sampled geometry singles (r2/r3 era):
+    "crosses_segments", "hausdorff_boxes",
     "frechet_segments", "oriented_envelope_area",
     "segmentize_diag_npoints", "snap_point_tol", "line_merge_chain",
     "split_segment_pieces", "substring_frac_length",
     "geojson_roundtrip_area", "mbc_radius_ngon", "touches_overlaps_boxes",
     "inscribed_circle_box", "coverage_valid_grid", "skew_area_box",
     "offset_curve_lengths", "spatial_join_within",
+    "buffer_polygon_ring_area", "boundary_by_type",
 ]
 
 assert len(_DRIVER_WINDOW) == 50, len(_DRIVER_WINDOW)

@@ -9,7 +9,9 @@ the questions a crawl scheduler and a training-data curator both ask:
   revisit classification CDX "revisit" records encode, reference
   ecosystem: WARC 1.1 §6.7.2 revisit records keyed on payload digest);
 - how volatile is each host (`host_change_stats` — the signal behind
-  per-host recrawl frequency).
+  per-host recrawl frequency);
+- which url strings name the same page (`canonical_url_col`);
+- which few urls each host may put on the fetch list (`cap_per_key`).
 
 Scale design (10^12 fetches): every operator shuffles ONCE on url for
 the per-url window (content comparison is lag() over the url's fetch
@@ -30,11 +32,15 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .columns import salt_col
+
 __all__ = [
     "latest_snapshot",
     "version_changes",
     "host_change_stats",
     "resolve_redirects",
+    "canonical_url_col",
+    "cap_per_key",
 ]
 
 
@@ -198,3 +204,58 @@ def resolve_redirects(
                      F.lit(None).cast("long").alias("final_url"),
                      F.lit(None).cast("long").alias("hops")))
     return out.unionByName(nulls)
+
+
+def canonical_url_col(url: Column) -> Column:
+    """Canonical form for dedup keys: lowercase scheme+host, default :80/
+    :443 port stripped, fragment stripped, query parameters sorted,
+    trailing slash on a bare path stripped. Pure string expressions —
+    the canonical key feeds a groupBy at any scale."""
+    no_frag = F.regexp_replace(url, r"#.*$", "")
+    # scheme://host[:port] is case-insensitive; path/query are not
+    head = F.regexp_extract(no_frag, r"^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)", 1)
+    rest = F.substring(no_frag, F.length(head) + 1, F.lit(1 << 30))
+    head = F.lower(head)
+    head = F.regexp_replace(head, r"^(http://[^/?#:]*):80$", r"$1")
+    head = F.regexp_replace(head, r"^(https://[^/?#:]*):443$", r"$1")
+    query = F.regexp_extract(rest, r"^[^?]*\?(.*)$", 1)
+    # normalize: bare "" path -> "/", strip one trailing slash (not root)
+    p = F.regexp_extract(rest, r"^([^?]*)", 1)
+    p = F.when(p == "", F.lit("/")).otherwise(p)
+    p = F.regexp_replace(p, r"(.)/$", r"$1")
+    q = F.when(query == "", query).otherwise(
+        F.array_join(F.array_sort(F.split(query, "&")), "&"))
+    return F.concat(head, p, F.when(q == "", F.lit("")).otherwise(F.concat(F.lit("?"), q)))
+
+
+def cap_per_key(
+    docs: DataFrame,
+    key_col: str = "source",
+    cap: int = 3,
+    order_cols=None,
+    id_col: str = "doc_id",
+    salts: int = 32,
+) -> DataFrame:
+    """Frequency capping: keep at most `cap` rows per key (the standard
+    per-domain cap in crawl scheduling and web-corpus curation — a
+    handful of best pages per registrable domain so no single site
+    dominates), choosing by `order_cols` (default: longest first, id
+    tie-break).
+
+    A naive row_number over partitionBy(key) pins a hot domain onto ONE
+    reducer; phase 1 ranks within (key, salt) — bounded partitions — and
+    keeps the per-salt top `cap`; phase 2 ranks the ≤ salts×cap
+    survivors. Exact, not approximate (the global top-cap of any key is a
+    subset of its per-salt top-caps). Adds ``keep_rank`` (1-based within
+    key).
+    """
+    if order_cols is None:
+        order_cols = [F.col("n_chars").desc(), F.col(id_col)]
+    cand = docs.withColumn("__s", salt_col(F.col(id_col), salts))
+    w1 = Window.partitionBy(key_col, "__s").orderBy(*order_cols)
+    cand = (cand.withColumn("__r", F.row_number().over(w1))
+            .where(F.col("__r") <= cap))
+    w2 = Window.partitionBy(key_col).orderBy(*order_cols)
+    return (cand.withColumn("keep_rank", F.row_number().over(w2))
+            .where(F.col("keep_rank") <= cap)
+            .drop("__s", "__r"))

@@ -18,10 +18,6 @@ from pyspark.sql import functions as F
 from ..index.cells import DEFAULT_RES
 from .columns import cell_col
 
-_GEO_RE = r'<meta name="geo\.position" content="(-?[0-9]+\.[0-9]+);(-?[0-9]+\.[0-9]+)">'
-_TEXT_RE = r"(?s)<p>(.*)</p>"
-
-
 _GEO_MARK = '<meta name="geo.position" content="'
 
 
@@ -29,17 +25,12 @@ def extract_text(html: Column) -> Column:
     """Body text between the first <p> and the last </p>, byte-identical to
     the source payload. Implemented with substring_index/locate (not Java
     regex — ~10× cheaper per row in codegen); equals the greedy
-    regexp_extract(_TEXT_RE) on any document with one <p>…</p> block.
-    extract_text_re is the regex generalization for nested blocks."""
+    regexp_extract("(?s)<p>(.*)</p>") on any document with one <p>…</p>
+    block."""
     decoded = F.decode(html, "UTF-8")
     inner = F.substring_index(F.substring_index(decoded, "<p>", -1), "</p>", 1)
     has = (F.locate("<p>", decoded) > 0) & (F.locate("</p>", decoded) > 0)
     return F.when(has, inner).otherwise(F.lit(""))
-
-
-def extract_text_re(html: Column) -> Column:
-    """Regex variant (greedy first-<p>-to-last-</p>), for nested markup."""
-    return F.regexp_extract(F.decode(html, "UTF-8"), _TEXT_RE, 1)
 
 
 def geotag_content(html: Column) -> Column:
@@ -50,17 +41,7 @@ def geotag_content(html: Column) -> Column:
     return F.substring_index(F.substring_index(decoded, _GEO_MARK, -1), '"', 1)
 
 
-def extract_geotag_re(html: Column) -> tuple[Column, Column]:
-    """Regex variant pinning the strict decimal format."""
-    decoded = F.decode(html, "UTF-8")
-    lat_s = F.regexp_extract(decoded, _GEO_RE, 1)
-    lon_s = F.regexp_extract(decoded, _GEO_RE, 2)
-    lat = F.when(lat_s != "", lat_s.cast("double")).otherwise(F.lit(None).cast("double"))
-    lon = F.when(lon_s != "", lon_s.cast("double")).otherwise(F.lit(None).cast("double"))
-    return lat, lon
-
-
-def with_geo(pages: DataFrame, res: int = DEFAULT_RES, pin_extract: bool = True) -> DataFrame:
+def with_geo(pages: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """pages + (extracted_text, lat, lon, cell_id). The ingest derivation
     step of every spatial plan.
 
@@ -69,10 +50,10 @@ def with_geo(pages: DataFrame, res: int = DEFAULT_RES, pin_extract: bool = True)
     non-cheap alias with >1 reference as its own Project, so the
     decode+search chain runs ONCE per row instead of once per reference.
 
-    pin_extract=True additionally appends a no-op non-deterministic marker
-    (repeat('x', floor(rand)*0)) to the materialized fragment, which stops
-    PushDownPredicate from substituting the decode chain into downstream
-    filters on lat/lon/cell_id — without it a pushed `cell_id >= 0` filter
+    The fragment also carries a no-op non-deterministic marker
+    (repeat('x', floor(rand)*0)), which stops PushDownPredicate from
+    substituting the decode chain into downstream filters on
+    lat/lon/cell_id — without it a pushed `cell_id >= 0` filter
     re-derives the chain from html and costs ~1.5× the whole scan
     (measured; codegen CSE collapses the 6 textual copies inside the
     Filter, but the Filter + Project still decode twice). Cost of the
@@ -80,11 +61,10 @@ def with_geo(pages: DataFrame, res: int = DEFAULT_RES, pin_extract: bool = True)
     filters written AFTER with_geo on base columns (lang, fetched_at) no
     longer reach the parquet scan either — apply base-column filters to
     `pages` BEFORE with_geo (they prune at the scan there anyway)."""
-    content = geotag_content(F.col("html"))
-    if pin_extract:
-        content = F.concat(
-            content, F.repeat(F.lit("x"), (F.floor(F.rand(7)) * 0).cast("int"))
-        )
+    content = F.concat(
+        geotag_content(F.col("html")),
+        F.repeat(F.lit("x"), (F.floor(F.rand(7)) * 0).cast("int")),
+    )
     return (
         pages.withColumn("extracted_text", extract_text(F.col("html")))
         .withColumn("__geo_content", content)

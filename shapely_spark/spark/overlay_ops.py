@@ -18,36 +18,38 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 
+def _union_group(pdf: pd.DataFrame, key_col: str, wkb_col: str,
+                 parts_col: str | None = None) -> pd.DataFrame:
+    """One group's (key, wkb, n_parts): the union of its geometries.
+    NULL/empty geometries are dropped. n_parts counts the input
+    geometries, or sums `parts_col` when the group holds partial unions."""
+    from ..geo.overlay import union_all
+    from ..geo.wkb import from_wkb, to_wkb
+
+    geoms = [from_wkb(bytes(b), on_invalid="ignore")
+             for b in pdf[wkb_col] if b is not None]
+    geoms = [g for g in geoms if g is not None and not g.is_empty]
+    n = len(geoms) if parts_col is None else int(pdf[parts_col].sum())
+    return pd.DataFrame(
+        {key_col: pdf[key_col].iloc[:1], "wkb": [to_wkb(union_all(geoms))], "n_parts": [n]}
+    )
+
+
 def dissolve(df: DataFrame, key_col: str, wkb_col: str = "wkb") -> DataFrame:
     """df(key, wkb, …) → (key, wkb, n_parts): union of each key's
     geometries. NULL/empty geometries are dropped (reference skips None,
     shapely/set_operations.py:500 union_all ignore-missing semantics)."""
     key_type = dict(df.dtypes)[key_col]
     schema = f"{key_col} {key_type}, wkb binary, n_parts int"
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..geo.overlay import union_all
-        from ..geo.wkb import from_wkb, to_wkb
-
-        geoms = [from_wkb(bytes(b), on_invalid="ignore")
-                 for b in pdf[wkb_col] if b is not None]
-        geoms = [g for g in geoms if g is not None and not g.is_empty]
-        u = union_all(geoms)
-        return pd.DataFrame(
-            {
-                key_col: pdf[key_col].iloc[:1],
-                "wkb": [to_wkb(u)],
-                "n_parts": [len(geoms)],
-            }
-        )
-
-    return df.select(key_col, wkb_col).groupBy(key_col).applyInPandas(fn, schema)
+    return df.select(key_col, wkb_col).groupBy(key_col).applyInPandas(
+        lambda pdf: _union_group(pdf, key_col, wkb_col), schema)
 
 
 def dissolve_two_level(df: DataFrame, key_col: str, wkb_col: str = "wkb",
                        salts: int = 8) -> DataFrame:
     """Skew-safe dissolve: partial union on (key, salt) first, final union
-    on key — bounds any single task's group size by 1/salts."""
+    on key — bounds any single task's group size by 1/salts. n_parts is
+    the sum of the partial counts, the same as `dissolve`'s."""
     from pyspark.sql import functions as F
 
     salted = df.select(key_col, wkb_col).withColumn(
@@ -55,24 +57,10 @@ def dissolve_two_level(df: DataFrame, key_col: str, wkb_col: str = "wkb",
     )
     key_type = dict(df.dtypes)[key_col]
     schema = f"{key_col} {key_type}, wkb binary, n_parts int"
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..geo.overlay import union_all
-        from ..geo.wkb import from_wkb, to_wkb
-
-        geoms = [from_wkb(bytes(b), on_invalid="ignore")
-                 for b in pdf[wkb_col] if b is not None]
-        geoms = [g for g in geoms if g is not None and not g.is_empty]
-        u = union_all(geoms)
-        return pd.DataFrame(
-            {key_col: pdf[key_col].iloc[:1], "wkb": [to_wkb(u)], "n_parts": [len(geoms)]}
-        )
-
     partial = salted.groupBy(key_col, "__salt").applyInPandas(
-        lambda pdf: fn(pdf).assign(__salt=pdf["__salt"].iloc[0]),
-        f"{key_col} {key_type}, wkb binary, n_parts int, __salt bigint",
-    )
-    return partial.groupBy(key_col).applyInPandas(fn, schema)
+        lambda pdf: _union_group(pdf, key_col, wkb_col), schema)
+    return partial.groupBy(key_col).applyInPandas(
+        lambda pdf: _union_group(pdf, key_col, "wkb", parts_col="n_parts"), schema)
 
 
 def coverage_simplify_grouped(

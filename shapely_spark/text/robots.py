@@ -21,7 +21,7 @@ ONCE driver-side into regex alternations, broadcasts the {host: rules}
 dict, and evaluates pages with an Arrow-batched pandas UDF that groups
 each batch by host and runs ONE vectorized str.match per (host, rule
 list) — no per-row Python, no shuffle of the pages side, flag-don't-
-drop for auditable removal rates (the blocklist_filter discipline).
+drop for auditable removal rates.
 """
 
 from __future__ import annotations

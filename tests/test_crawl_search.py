@@ -1,5 +1,5 @@
-"""Recrawl analytics (spark/crawl.py) and anchor-text aggregation
-(spark/extract.py).
+"""Recrawl analytics, URL canonicalization and per-key capping
+(spark/crawl.py) and anchor-text aggregation (spark/extract.py).
 
 Reference semantics: WARC 1.1 revisit-by-payload-digest (crawl change
 detection)."""
@@ -10,6 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from shapely_spark.spark.crawl import (
+    canonical_url_col,
+    cap_per_key,
     host_change_stats,
     latest_snapshot,
     version_changes,
@@ -151,3 +153,51 @@ def test_latest_snapshot_content_tiebreak(spark):
         got = latest_snapshot(df.orderBy(F.rand()), content_col="text") \
             .collect()
         assert len(got) == 1 and got[0].text == want
+
+
+def test_canonical_url(spark):
+    """Canonical URL keys: case, default ports, fragments, param order,
+    trailing slash."""
+    import pandas as pd
+
+    urls = spark.createDataFrame(pd.DataFrame({"u": [
+        "HTTP://Example.COM:80/Path/?b=2&a=1#frag",
+        "http://example.com/Path?a=1&b=2",
+        "https://Example.com:443/",
+        "https://example.com",
+        "http://example.com:8080/x",      # non-default port kept
+        "https://example.com:80/x",       # mismatched default port kept
+    ]}), "u string")
+    got = [r.c for r in urls.select(canonical_url_col(F.col("u")).alias("c")).collect()]
+    assert got[0] == got[1] == "http://example.com/Path?a=1&b=2"
+    assert got[2] == got[3] == "https://example.com/"
+    assert got[4] == "http://example.com:8080/x"
+    assert got[5] == "https://example.com:80/x"
+
+
+@pytest.fixture(scope="module")
+def domains(spark):
+    rows = []
+    for i in range(300):
+        dom = "hot.example" if i % 3 == 0 else f"d{i % 7}.example"
+        rows.append((i, dom, (i * 37) % 101))  # n_chars with ties
+    return spark.createDataFrame(rows, "doc_id long, source string, n_chars long")
+
+
+def test_cap_per_key_matches_naive_window(spark, domains):
+    got = cap_per_key(domains, "source", cap=4).toPandas()
+    pdf = domains.toPandas().sort_values(
+        ["source", "n_chars", "doc_id"], ascending=[True, False, True])
+    pdf["rk"] = pdf.groupby("source").cumcount() + 1
+    exp = pdf[pdf.rk <= 4]
+    assert sorted(got.doc_id) == sorted(exp.doc_id)
+    m = got.set_index("doc_id").keep_rank
+    for _, r in exp.iterrows():
+        assert m[r.doc_id] == r.rk
+    assert got.groupby("source").size().max() <= 4
+
+
+def test_cap_per_key_salt_count_invariant(spark, domains):
+    a = cap_per_key(domains, "source", cap=2, salts=1).toPandas()
+    b = cap_per_key(domains, "source", cap=2, salts=64).toPandas()
+    assert sorted(a.doc_id) == sorted(b.doc_id)  # exact under any salting

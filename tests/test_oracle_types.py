@@ -22,9 +22,9 @@ import duckdb
 import pytest
 
 import __spark_entry__ as E
+from tools.check_oracles import TABLES
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = "region nation customer supplier part orders lineitem events documents".split()
 
 # Oracles whose round(sum(...)) argument is exact by construction (DuckDB
 # types the arithmetic DECIMAL via its decimal literals, or the summands are
@@ -86,10 +86,10 @@ def test_rounded_sums_ride_a_decimal_carrier():
 
 def test_oracle_pandas_dtypes_have_no_object_numbers(con):
     """A Decimal/HUGEINT column would surface as object or float64-from-int;
-    spot-check the four queries that historically emitted DECIMAL."""
+    spot-check the queries that historically emitted DECIMAL."""
     for name in ["geo_bounds_boxes", "dissolve_union_by_key",
                  "explode_multipolygon_parts", "offset_curve_lengths",
-                 "tile_agg_regions", "tpch_q10_variant"]:
+                 "tile_agg_regions"]:
         pdf = con.execute(E.oracle_sql()[name]).fetchdf()
         for c in pdf.columns:
             assert pdf[c].dtype != object or pdf[c].map(

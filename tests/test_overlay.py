@@ -193,7 +193,12 @@ class TestOverlaySpark:
                    for r in op(df, "k").collect()}
             assert got[0][0] == pytest.approx(5.5)
             assert got[1][0] == pytest.approx(2.0)
-            assert got[0][1] == 5 if op is dissolve else True
+            assert got[0][1] == 5
+            assert got[1][1] == 2
+        # the final stage reads the partial unions' own "wkb" column
+        renamed = df.withColumnRenamed("wkb", "g")
+        got = {r.k: r.n_parts for r in dissolve_two_level(renamed, "k", "g").collect()}
+        assert got == {0: 5, 1: 2}
 
     def test_point_on_surface_kernel(self):
         from shapely_spark.geo.constructive import point_on_surface
@@ -449,6 +454,30 @@ class TestRingNesting:
         assert sorted(round(K.area(p), 12) for p in out.parts) == [1.0, 2.0]
         assert abs(K.area(out) - 3.0) < 1e-12
         assert K.is_valid(out)
+
+    def test_make_valid_outline_not_hung_on_own_face(self):
+        # a split node a few ulps inside the 7-gon's face read INTERIOR and
+        # hung the pair's CW outline on that face as a hole (area 1.0949)
+        from shapely_spark.geo.geom import multipolygon, regular_ngon
+
+        a = regular_ngon(2.75538103607466, 1.9644398452171847,
+                         0.6322605218632715, 7, theta0=0.29962724046112654)
+        b = regular_ngon(1.3600121744118998, 1.9369023063599373,
+                         1.802555561716669, 3, theta0=0.33039174636170277)
+        mv = O.make_valid(multipolygon([a, b]))
+        assert K.area(mv) == pytest.approx(K.area(O.union(a, b)), rel=1e-12)
+        assert K.area(mv) == pytest.approx(4.9235763916, rel=1e-9)
+
+    def test_polygonize_ngon_pairs_no_negative_face(self):
+        from shapely_spark.geo.geom import multipolygon, regular_ngon
+
+        rng = np.random.default_rng(0)
+        for _ in range(40):
+            g = [regular_ngon(*rng.uniform(0, 3, 2), rng.uniform(0.3, 2.0),
+                              int(rng.integers(3, 9)), theta0=rng.uniform(0, 1))
+                 for _ in range(2)]
+            faces = O.polygonize([multipolygon(g)]).parts or []
+            assert all(K.area(f) > 0 for f in faces), [p.wkt for p in g]
 
 
 class TestLineOverlay:

@@ -107,22 +107,6 @@ def main():
                     bucket=16)),
     ]
 
-    from shapely_spark.text.selection import dsir_resample
-
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(100),
-                      "text": [f"alpha beta tok{i % 7}" for i in range(100)]})
-    )
-    sections += [
-        ("DSIR selection: model fit is two partial+final HashAggregates "
-         "(bucket histograms, ≤ n_buckets rows each); the log-ratio "
-         "relation broadcasts into the feature join; per-doc score is one "
-         "more partial agg; top-k plans as TakeOrderedAndProject — no "
-         "global sort shuffle, no UDF anywhere",
-         dsir_resample(docs, docs.where(F.col("doc_id") % 2 == 0), 10,
-                       n_buckets=256)),
-    ]
-
     from shapely_spark.spark.geoparquet import (bbox_filter_col,
                                                 read_geoparquet,
                                                 write_geoparquet)
