@@ -8,10 +8,10 @@ row-major cell ids ``cell = iy * 2^r + ix``.
 Why row-major and not Hilbert/Morton for the *id*: the id must be
 reproducible as a plain SQL arithmetic expression (both Spark Catalyst and
 the DuckDB oracle compute it bit-identically — see sql_cell_expr), and
-equi-join pruning only needs equality. A Hilbert key IS provided
-(hilbert_key) for data layout: sorting/range-partitioning the pages table by
-Hilbert order co-locates spatially-near cells in the same parquet files so
-min/max column stats prune scans at 100 TB.
+equi-join pruning only needs equality. The data layout uses the same id:
+pages.write_pages_clustered partitions the pages table by a cell-id prefix
+and sorts each partition by cell_id (row-major order), so parquet min/max
+column stats on cell_id prune scans.
 
 All functions are vectorized NumPy; the Spark-side builders that produce the
 equivalent Catalyst Column expressions live in shapely_spark/spark/columns.py.
@@ -127,19 +127,6 @@ def ring(cell: int, k: int, res: int = DEFAULT_RES) -> np.ndarray:
     return np.array([c for c in disk(cell, k, res).tolist() if c not in inner], dtype=np.int64)
 
 
-def cover_bbox(xmin, ymin, xmax, ymax, res: int = DEFAULT_RES) -> np.ndarray:
-    """All cells intersecting a lon/lat bbox (no wrap across antimeridian)."""
-    n = grid_n(res)
-    ix0 = int(np.clip(np.floor((xmin + 180.0) / 360.0 * n), 0, n - 1))
-    ix1 = int(np.clip(np.floor((xmax + 180.0) / 360.0 * n), 0, n - 1))
-    iy0 = int(np.clip(np.floor((ymin + 90.0) / 180.0 * n), 0, n - 1))
-    iy1 = int(np.clip(np.floor((ymax + 90.0) / 180.0 * n), 0, n - 1))
-    xs = np.arange(ix0, ix1 + 1)
-    ys = np.arange(iy0, iy1 + 1)
-    gx, gy = np.meshgrid(xs, ys)
-    return (gy.ravel() * n + gx.ravel()).astype(np.int64)
-
-
 _ORIGIN = np.array([180.0, 90.0, 180.0, 90.0])
 _SPAN = np.array([360.0, 180.0, 360.0, 180.0])
 
@@ -161,7 +148,8 @@ def _expand_ranges(x0, nx, y0, ny):
 
 
 def cover_bbox_batch(bounds: np.ndarray, res: int = DEFAULT_RES):
-    """Vectorized cover_bbox over a (m, 4) bounds matrix: returns
+    """All cells intersecting each lon/lat bbox row of a (m, 4) bounds
+    matrix (no wrap across the antimeridian): returns
     (cells, row_index) flat arrays — cells[k] belongs to input row
     row_index[k]. One pass of integer arithmetic for the whole batch;
     the per-geometry meshgrid loop was the cover stage's hot spot in the
@@ -184,11 +172,11 @@ def polygon_cover(geom, res: int = DEFAULT_RES):
 def polygon_cover_batch(geoms, res: int = DEFAULT_RES):
     """Exact cell covers of a batch of polygonal geometries: flat (cells,
     full, row) arrays, row[k] the index in `geoms` of cells[k] (as in
-    cover_bbox_batch), each geometry's cells in cover_bbox order. A cell is
-    kept iff its closed rectangle meets the polygon; ``full=True`` cells lie
-    inside it (the join skips their refine — the broadcast-side analog of
-    GEOS prepared containment). None, empty and non-polygonal geometries
-    get no cells. No per-cell Python, two ragged passes:
+    cover_bbox_batch), each geometry's cells in cover_bbox_batch order. A
+    cell is kept iff its closed rectangle meets the polygon; ``full=True``
+    cells lie inside it (the join skips their refine — the broadcast-side
+    analog of GEOS prepared containment). None, empty and non-polygonal
+    geometries get no cells. No per-cell Python, two ragged passes:
     - each bbox's grid vertices get their ray-cast parity (bit for bit as
       points_in_rings_class). An odd corner keeps its cell; four odd
       corners and no edge bbox touching the cell make it full;
@@ -242,37 +230,3 @@ def polygon_cover_batch(geoms, res: int = DEFAULT_RES):
         side = (sx2 - sx) * (y[[0, 0, 1, 1]] - sy) - (sy2 - sy) * (x[[0, 1, 1, 0]] - sx)
         keep[pos[t][~((side > 0).all(axis=0) | (side < 0).all(axis=0))]] = True
     return (cy * n + cx)[keep], (full & ~near)[keep], live[crow][keep]
-
-
-# ---------------------------------------------------------------------------
-# Hilbert key — data-layout locality (sort key, NOT the join key)
-# ---------------------------------------------------------------------------
-
-def hilbert_key(lat, lon, order: int = 16):
-    """Hilbert curve index of (lat, lon) at 2^order resolution, vectorized.
-    Used to cluster the pages table on write (repartitionByRange + sortWithin)
-    so parquet row-group min/max stats on cell_id prune at scale."""
-    n = 1 << order
-    lat = np.asarray(lat, dtype=np.float64)
-    lon = np.asarray(lon, dtype=np.float64)
-    x = np.clip(((lon + 180.0) / 360.0 * n).astype(np.int64), 0, n - 1)
-    y = np.clip(((lat + 90.0) / 180.0 * n).astype(np.int64), 0, n - 1)
-    rx = np.zeros_like(x)
-    ry = np.zeros_like(y)
-    d = np.zeros_like(x)
-    s = n >> 1
-    while s > 0:
-        rx = ((x & s) > 0).astype(np.int64)
-        ry = ((y & s) > 0).astype(np.int64)
-        d += s * s * ((3 * rx) ^ ry)
-        # rotate
-        swap = ry == 0
-        flip = swap & (rx == 1)
-        x_f, y_f = x.copy(), y.copy()
-        x = np.where(flip, s - 1 - x_f, x_f)
-        y = np.where(flip, s - 1 - y_f, y_f)
-        x2, y2 = x.copy(), y.copy()
-        x = np.where(swap, y2, x2)
-        y = np.where(swap, x2, y2)
-        s >>= 1
-    return d

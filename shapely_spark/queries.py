@@ -287,7 +287,7 @@ def spatial_join_within(spark, sf_dir):
     """,
 )
 def tile_agg_regions(spark, sf_dir):
-    from .spark.tiles import region_tile_weights, tile_counts
+    from .spark.tiles import region_tile_weights
 
     pts = _pts(spark, sf_dir).withColumn("cell_id", cell_col("lat", "lon", RES))
     counts = pts.groupBy("cell_id").agg(F.count("*").alias("n_points"))
@@ -1354,159 +1354,6 @@ def url_canonical_dedup(spark, sf_dir):
     return (o.select(canon.alias("canon"))
             .groupBy("canon").agg(F.count("*").cast("long").alias("n_dups"))
             .repartition(1).sortWithinPartitions("canon"))
-
-
-# ---- events: sessionization (window/state op) -------------------------------
-
-@q(
-    "events_sessionize",
-    """
-    WITH e AS (
-      SELECT user_id, ts, event_type, value,
-             CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       > INTERVAL 30 MINUTE OR
-                  lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                  THEN 1 ELSE 0 END AS new_session,
-             event_id
-      FROM events
-    ),
-    s AS (SELECT *, CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no FROM e)
-    SELECT user_id, session_no, count(*) AS n_events,
-           CAST(round(sum(CAST(value AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_value
-    FROM s GROUP BY user_id, session_no ORDER BY user_id, session_no
-    """,
-)
-def events_sessionize(spark, sf_dir):
-    """Session windows over the event stream (30-min gap) — the batch twin
-    of the streaming pipeline's session operator."""
-    from pyspark.sql import Window as W
-
-    e = _t(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    lag_ts = F.lag("ts").over(w)
-    # cast→double keeps microseconds (unix_timestamp truncates to seconds,
-    # which would disagree with the oracle's INTERVAL comparison at gaps of
-    # exactly 1800.xxx s)
-    gap = F.col("ts").cast("timestamp").cast("double") - lag_ts.cast("timestamp").cast("double")
-    new_s = F.when(lag_ts.isNull() | (gap > 1800), 1).otherwise(0)
-    s = e.withColumn("new_session", new_s).withColumn(
-        "session_no", F.sum("new_session").over(w.rowsBetween(W.unboundedPreceding, 0))
-    )
-    return (
-        s.groupBy("user_id", "session_no")
-        .agg(F.count("*").alias("n_events"), _dec_sum("value"))
-        .repartition(1).sortWithinPartitions("user_id", "session_no")
-    )
-
-
-@q(
-    "events_hourly_rollup",
-    """
-    SELECT date_trunc('hour', ts) AS bucket,
-           count(*) AS n_events,
-           count(DISTINCT user_id) AS n_users,
-           CAST(round(sum(CAST(value AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_value
-    FROM events
-    GROUP BY bucket ORDER BY bucket
-    """,
-)
-def events_hourly_rollup(spark, sf_dir):
-    """Tumbling-window rollup (the hypertable-style time aggregation;
-    batch twin of the streaming windowed-tile pipeline): groupBy
-    window(ts, 1 hour) with partial aggregation map-side, one shuffle on
-    the bucket key."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window(F.col("ts").cast("timestamp"), "1 hour").alias("w"))
-        .agg(F.count("*").alias("n_events"),
-             F.countDistinct("user_id").alias("n_users"),
-             _dec_sum("value"))
-        .select(F.col("w.start").alias("bucket"), "n_events", "n_users", "sum_value")
-        .repartition(1).sortWithinPartitions("bucket")
-    )
-
-
-@q(
-    "asof_join_purchases",
-    """
-    WITH l AS (SELECT event_id, user_id, ts FROM events
-               WHERE event_type <> 'purchase'),
-    r AS (SELECT user_id, ts, max(value) AS purchase_value FROM events
-          WHERE event_type = 'purchase' GROUP BY user_id, ts)
-    SELECT l.event_id, l.user_id, r.ts AS purchase_ts, r.purchase_value
-    FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-    ORDER BY l.event_id
-    """,
-)
-def asof_join_purchases(spark, sf_dir):
-    """AS-OF join (spark/temporal.py asof_join): every non-purchase
-    event picks up the user's most recent purchase at-or-before its
-    timestamp — the "latest snapshot per url as of T" primitive on the
-    Common-Crawl pages table, verified against DuckDB's native ASOF
-    LEFT JOIN. One sort shuffle: union-marker + last(ignorenulls)
-    running window, no inequality join anywhere in the plan."""
-    from .spark.temporal import asof_join
-
-    e = _t(spark, sf_dir, "events")
-    left = e.where(F.col("event_type") != "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    right = (
-        e.where(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("purchase_value"))
-    )
-    out = asof_join(left, right, on="user_id", left_ts="ts")
-    return (
-        out.select(
-            "event_id", "user_id",
-            F.col("__asof_ts").alias("purchase_ts"), "purchase_value",
-        )
-        .repartition(1).sortWithinPartitions("event_id")
-    )
-
-
-@q(
-    "range_join_error_windows",
-    """
-    WITH p AS (SELECT user_id, epoch_us(ts) AS pts, value FROM events
-               WHERE event_type = 'click'),
-    i AS (SELECT event_id, user_id, epoch_us(ts) AS s,
-                 epoch_us(ts) + 86400000000 AS e FROM events
-          WHERE event_type = 'error')
-    SELECT i.event_id, count(*) AS n_clicks,
-           CAST(round(sum(CAST(value AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_value
-    FROM i JOIN p ON p.user_id = i.user_id AND p.pts >= i.s AND p.pts < i.e
-    GROUP BY i.event_id ORDER BY i.event_id
-    """,
-)
-def range_join_error_windows(spark, sf_dir):
-    """Bucketed RANGE join (spark/temporal.py range_join): clicks
-    landing in the 24-hour window after each error event of the same
-    user, counted per window. The plan is the scale shape — intervals
-    explode to 10-min buckets, points live in ONE bucket, equi-join +
-    exact JVM predicate — while DuckDB verifies with a plain
-    inequality join."""
-    from .spark.temporal import range_join
-
-    e = _t(spark, sf_dir, "events").withColumn(
-        "us", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    points = e.where(F.col("event_type") == "click").select(
-        "user_id", F.col("us").alias("pts"), "value"
-    )
-    ivs = e.where(F.col("event_type") == "error").select(
-        "event_id", "user_id", F.col("us").alias("s"),
-        (F.col("us") + F.lit(86_400_000_000)).alias("e"),
-    )
-    j = range_join(points, ivs, point_ts="pts", start="s", end="e",
-                   on="user_id", bucket=21_600_000_000)
-    return (
-        j.groupBy("event_id")
-        .agg(F.count("*").alias("n_clicks"), _dec_sum("value"))
-        .repartition(1).sortWithinPartitions("event_id")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3630,13 +3477,12 @@ def redirect_resolve_final(spark, sf_dir):
 _DRIVER_WINDOW = [
     # flagship plans (always driver-visible)
     "spatial_join_geom_boxes", "spatial_join_boxes", "knn_nearest_center",
-    "tile_agg_regions", "dwithin_pairs",
+    "tile_agg_regions", "tile_rollup_pyramid", "dwithin_pairs",
     # r5 rotation (r4 verdict item 5): the r4 driver sampled 50
     # previously-never-sampled queries, all green; this window rotates
     # the remaining never-driver-sampled queries in.
     # verdict-named never-sampled set:
-    "robots_filter_flags", "sitemap_parse_stats",
-    "warc_revisit_roundtrip", "range_join_error_windows",
+    "robots_filter_flags", "sitemap_parse_stats", "warc_revisit_roundtrip",
     # touches/contains group-predicate joins over non-rect layers:
     "spatial_join_touches_pairs", "spatial_join_contains_pairs",
     # crawl, archive and table-format plans:

@@ -25,8 +25,6 @@ which is |pages| × O(k) rows, not |pages| × |targets|.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -35,6 +33,8 @@ from ..index.cells import DEFAULT_RES, grid_n
 from .columns import cell_col, haversine_col
 
 KM_PER_DEG_LAT = 110.574  # conservative minimum
+ESCALATE_RING = 4         # the one retry ring, as a multiple of k_ring
+ESCALATE_MIN_YIELD = 0.25  # retry only if the first pass certified this share
 
 
 def _neighbor_cells(cell, k_ring: int, res: int):
@@ -66,9 +66,7 @@ def knn_join(
     target_id: str = "target_id",
     point_cols: tuple[str, str] = ("lat", "lon"),
     target_cols: tuple[str, str] = ("t_lat", "t_lon"),
-    ring_growth: tuple[int, ...] = (4,),
     stats: dict | None = None,
-    escalate_min_yield: float = 0.25,
     small_layer_max: int | None = 65536,
 ) -> DataFrame:
     """points(point_id, lat, lon) × targets(target_id, t_lat, t_lon) →
@@ -77,26 +75,22 @@ def knn_join(
 
     Adversarial-density hardening (r3 verdict item 7): points the first
     disk pass cannot certify (sparse neighborhoods, or the shrinking
-    longitude guarantee near the poles) retry with each ring multiplier in
-    `ring_growth` (default: one retry at 4×k_ring) before the final
-    broadcast brute-force pass — so a target layer clustered at a pole
-    degrades to a wider disk join, not |points|×|targets| brute force.
-    Each escalation only re-joins the still-uncertified remainder.
+    longitude guarantee near the poles) retry once at
+    ESCALATE_RING × k_ring before the final broadcast brute-force pass —
+    so a target layer clustered at a pole degrades to a wider disk join,
+    not |points|×|targets| brute force. The retry only re-joins the
+    still-uncertified remainder.
 
     Escalation is YIELD-ADAPTIVE (r4): the remainder is persisted and
-    counted after each pass, and the next wider ring runs only while the
-    previous pass certified ≥ `escalate_min_yield` of the points that
-    entered it. Cell-disk passes certify points whose k-th neighbor is
-    provably local; when a pass certifies almost nothing (the sparse /
-    faraway-target regime), a 16×-area ring almost surely will not
-    either — measured 9.7 s → 2.7 s on the 25-target battery layer,
-    while a dense polar cluster (where pass 1 certifies its interior)
-    still escalates instead of brute-forcing. The counts make the plan
-    build partially EAGER (one count job per pass over the persisted
-    remainder); set escalate_min_yield=0.0 to force every configured
-    ring, or ring_growth=() to disable escalation — with stats=None that
-    also skips every count/persist and returns a fully LAZY plan (the
-    streaming twin runs this shape per micro-batch).
+    counted after each pass, and the wider ring runs only when the first
+    pass certified ≥ ESCALATE_MIN_YIELD of the points. Cell-disk passes
+    certify points whose k-th neighbor is provably local; when a pass
+    certifies almost nothing (the sparse / faraway-target regime), a
+    16×-area ring almost surely will not either — measured 9.7 s → 2.7 s
+    on the 25-target battery layer, while a dense polar cluster (where
+    pass 1 certifies its interior) still escalates instead of
+    brute-forcing. The counts make the plan build partially EAGER (one
+    count job per pass over the persisted remainder).
 
     Pass `stats={}` to also record `points` and `unsafe_fraction` for
     the first pass, plus `persisted`: the cached remainder DataFrames
@@ -108,16 +102,13 @@ def knn_join(
     limit+count, one cheap job), ties='break' routes STRAIGHT to
     `knn_join_broadcast` — the chord-matmul kernel answers dimension-
     sized layers in one mapInPandas with no candidate explosion, window,
-    certification aggregate, or escalation loop (the 25-target battery
-    fixture went ~4 s quiet → sub-second). The dispatch only runs when
-    the plan is already eager (ring_growth set or stats requested);
-    fully-lazy callers (the streaming twin) skip it, as does
-    small_layer_max=None."""
+    certification aggregate, or escalation (the 25-target battery
+    fixture went ~4 s quiet → sub-second). small_layer_max=None skips
+    the dispatch."""
     plat, plon = point_cols
     tlat, tlon = target_cols
 
-    if (ties == "break" and small_layer_max is not None
-            and (ring_growth or stats is not None)):
+    if ties == "break" and small_layer_max is not None:
         n_targets = targets.limit(small_layer_max + 1).count()
         if n_targets <= small_layer_max:
             if stats is not None:
@@ -211,33 +202,25 @@ def knn_join(
         return exact, unsafe
 
     out, remaining = disk_pass(base_pts, k_ring)
-    persisted: list[DataFrame] = []
-    if ring_growth or stats is not None:
-        # eager counts run ONLY when the yield gate or stats need them;
-        # ring_growth=() with stats=None builds a fully lazy plan (the
-        # streaming twin's per-micro-batch path)
-        n_points = base_pts.count()
+    n_points = base_pts.count()
+    remaining = remaining.persist()
+    persisted = [remaining]
+    n_unsafe = remaining.count()
+    if stats is not None:
+        stats["points"] = n_points
+        stats[f"unsafe_after_pass_{k_ring}"] = n_unsafe
+        stats["unsafe_fraction"] = round(n_unsafe / max(1, n_points), 6)
+    certified = n_points - n_unsafe
+    if n_unsafe and certified >= ESCALATE_MIN_YIELD * max(1, n_points):
+        # otherwise the first pass barely certified — a wider ring won't
+        wide = k_ring * ESCALATE_RING
+        exact, remaining = disk_pass(remaining, wide)
         remaining = remaining.persist()
         persisted.append(remaining)
         n_unsafe = remaining.count()
+        out = out.unionByName(exact)
         if stats is not None:
-            stats["points"] = n_points
-            stats[f"unsafe_after_pass_{k_ring}"] = n_unsafe
-            stats["unsafe_fraction"] = round(n_unsafe / max(1, n_points), 6)
-        certified = n_points - n_unsafe
-        entered = n_points
-        for mult in ring_growth:
-            if n_unsafe == 0 or certified < escalate_min_yield * max(1, entered):
-                break  # previous pass barely certified — wider rings won't
-            exact, remaining = disk_pass(remaining, k_ring * mult)
-            remaining = remaining.persist()
-            persisted.append(remaining)
-            entered = n_unsafe
-            n_unsafe = remaining.count()
-            certified = entered - n_unsafe
-            out = out.unionByName(exact)
-            if stats is not None:
-                stats[f"unsafe_after_pass_{k_ring * mult}"] = n_unsafe
+            stats[f"unsafe_after_pass_{wide}"] = n_unsafe
     if stats is not None:
         # the cached remainders stay in the returned plan's lineage (each
         # pass's exact rows read from them), so they cannot be unpersisted

@@ -61,35 +61,3 @@ def dissolve_two_level(df: DataFrame, key_col: str, wkb_col: str = "wkb",
         lambda pdf: _union_group(pdf, key_col, wkb_col), schema)
     return partial.groupBy(key_col).applyInPandas(
         lambda pdf: _union_group(pdf, key_col, "wkb", parts_col="n_parts"), schema)
-
-
-def coverage_simplify_grouped(
-    df: DataFrame, key_col: str, id_col: str, wkb_col: str = "wkb",
-    tolerance: float = 0.0, simplify_boundary: bool = True,
-) -> DataFrame:
-    """Per-group topology-preserving coverage simplification: each key's
-    polygons form one coverage (e.g. admin level, tile sheet); shared
-    chains are simplified ONCE per group so neighbors inside a group stay
-    exactly edge-matched (geo/coverage.py semantics, reference:
-    shapely/_coverage.py:101). Groups are independent → the groupBy
-    shuffle is the natural parallel unit; a group must fit one task
-    (coverage sheets are bounded by construction — a planet-wide coverage
-    should be keyed by tile)."""
-    key_type = dict(df.dtypes)[key_col]
-    id_type = dict(df.dtypes)[id_col]
-    schema = f"{key_col} {key_type}, {id_col} {id_type}, wkb binary"
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..geo.coverage import coverage_simplify
-        from ..geo.wkb import from_wkb, to_wkb
-
-        geoms = [None if b is None else from_wkb(bytes(b), on_invalid="ignore")
-                 for b in pdf[wkb_col]]
-        simp = coverage_simplify(geoms, tolerance, simplify_boundary=simplify_boundary)
-        return pd.DataFrame({
-            key_col: pdf[key_col],
-            id_col: pdf[id_col],
-            "wkb": [None if g is None else to_wkb(g) for g in simp],
-        })
-
-    return df.select(key_col, id_col, wkb_col).groupBy(key_col).applyInPandas(fn, schema)

@@ -212,7 +212,7 @@ def regions_df(spark: SparkSession, regions) -> DataFrame:
 def write_pages_clustered(pages_geo: DataFrame, path: str, prefix_shift: int = 12,
                           mode: str = "overwrite") -> None:
     """Write pages partitioned by cell prefix (cell_id >> prefix_shift) and
-    sorted by (cell_id, hilbert-ish order) within partitions.
+    sorted by cell_id (the grid's row-major id) within partitions.
 
     At 10^12 rows this is the layout contract that makes spatial queries
     cheap: directory-level partition pruning on cell_prefix (Catalyst

@@ -244,8 +244,8 @@ def compact_files(
     target_file_rows: int = 1_000_000,
 ) -> dict:
     """The Iceberg ``rewriteDataFiles`` analog: rewrite the current
-    snapshot's SMALL files (rows < ``small_file_rows`` — the debris a
-    per-micro-batch streaming ingest leaves behind) into files of
+    snapshot's SMALL files (rows < ``small_file_rows`` — the debris many
+    small appends leave behind) into files of
     ~``target_file_rows``, and commit a ``compact`` snapshot whose file
     list is (untouched big files) + (rewritten files). The row multiset
     is unchanged; per-file manifest stats (rows + bbox) are regenerated

@@ -256,9 +256,8 @@ def write_warc(
 
 
 def parse_warc_files(files: DataFrame) -> DataFrame:
-    """(path, content) file rows -> one row per ``response`` record.
-    Works identically on a batch ``binaryFile`` scan and a streaming
-    one (``read_warc_stream``) — the parse is stateless per file."""
+    """(path, content) file rows of a ``binaryFile`` scan -> one row per
+    ``response`` record. The parse is stateless per file."""
 
     def _parse(batches):
         for pdf in batches:
@@ -302,23 +301,6 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     if os.path.isdir(path):
         reader = reader.option("pathGlobFilter", "*.warc.gz")
     return parse_warc_files(reader.load(path))
-
-
-def read_warc_stream(spark: SparkSession, path: str,
-                     max_files: int = 10) -> DataFrame:
-    """Streaming twin of ``read_warc`` — the crawl landing zone: new
-    ``*.warc.gz`` files appearing under ``path`` stream in
-    (``binaryFile`` file source, ``maxFilesPerTrigger`` bounds batch
-    memory since each row holds one whole file) and run the SAME
-    stateless member-walk parse. Compose with foreachBatch for ingest
-    commits."""
-    files = (spark.readStream.format("binaryFile")
-             .schema("path string, modificationTime timestamp, "
-                     "length long, content binary")
-             .option("pathGlobFilter", "*.warc.gz")
-             .option("maxFilesPerTrigger", max_files)
-             .load(path))
-    return parse_warc_files(files)
 
 
 def cdx_index(warc_df: DataFrame) -> DataFrame:

@@ -87,21 +87,6 @@ def parse_robots(text: str, agent: str = "*") -> list[tuple[bool, str]]:
     return best or []
 
 
-def is_allowed(rules: list[tuple[bool, str]], path: str) -> bool:
-    """Most-specific-match decision for one path (reference semantics
-    for the vectorized filter; used by tests and tiny corpora)."""
-    verdict = True
-    best = -1
-    for allow, pat in rules:
-        if not pat:
-            continue  # empty Disallow == allow everything, matches nothing
-        if re.match(_pattern_to_regex(pat), path):
-            ln = len(pat)
-            if ln > best or (ln == best and allow and not verdict):
-                verdict, best = allow, ln
-    return verdict
-
-
 def _compile_host(rules: list[tuple[bool, str]]):
     """(compiled_regex, is_allow, pattern_len) triples, or None when the
     group cannot block anything (fast path: most hosts allow all)."""
@@ -328,32 +313,3 @@ def _robots_filter_join(
         joined.withColumn(flag_col, flag)
         .drop("__robots_host", rules_c, path_c)
     )
-
-
-def sitemap_urls(text: str) -> list[str]:
-    """The ``Sitemap:`` directives of a robots.txt (RFC 9309 §2.3 allows
-    non-group records; sitemaps.org specifies this discovery channel).
-    Group-independent per the spec — collected from the whole file, in
-    file order, case-insensitive key, absolute urls as given."""
-    out = []
-    for raw in (text or "").splitlines():
-        line = raw.split("#", 1)[0].strip()
-        if ":" not in line:
-            continue
-        key, _, val = line.partition(":")
-        if key.strip().lower() == "sitemap" and val.strip():
-            out.append(val.strip())
-    return out
-
-
-def sitemap_urls_col(robots_txt):
-    """JVM column twin of ``sitemap_urls``: array<string> of the
-    Sitemap: directive values (case-insensitive key, comments and
-    whitespace stripped) — feeds spark/sitemap.parse_sitemaps without a
-    UDF."""
-    lines = F.split(robots_txt, "\n")
-    vals = F.transform(
-        lines,
-        lambda ln: F.trim(F.regexp_extract(
-            ln, r"(?i)^\s*sitemap\s*:\s*([^#]*)", 1)))
-    return F.filter(vals, lambda v: v != "")

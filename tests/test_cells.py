@@ -92,7 +92,7 @@ def test_disk_clamps_at_pole_and_wraps_lon():
 
 def test_cover_bbox():
     res = 6
-    cs = cells.cover_bbox(-1.0, -1.0, 1.0, 1.0, res)
+    cs, _ = cells.cover_bbox_batch(np.array([[-1.0, -1.0, 1.0, 1.0]]), res)
     # must include the cells of all four corners
     for lat, lon in [(-1, -1), (-1, 1), (1, -1), (1, 1)]:
         assert int(cells.cell_of(lat, lon, res)) in cs.tolist()
@@ -136,7 +136,7 @@ def _assert_cover_exact(g, res):
     exmin, exmax = np.minimum(segs[:, 0], segs[:, 2]), np.maximum(segs[:, 0], segs[:, 2])
     eymin, eymax = np.minimum(segs[:, 1], segs[:, 3]), np.maximum(segs[:, 1], segs[:, 3])
     bb = K.bounds(g)
-    for c in cells.cover_bbox(*bb, res).tolist():
+    for c in cells.cover_bbox_batch(np.array([bb]), res)[0].tolist():
         xmin, ymin, xmax, ymax = cells.cell_bounds(c, res)
         assert (c in got) == K.intersects(g, box(xmin, ymin, xmax, ymax)), (c, res)
         if got.get(c):
@@ -216,14 +216,6 @@ def test_chunks_bound_the_weight_sum():
     sl = list(cells._chunks(w, 4))
     assert [(s.start, s.stop) for s in sl] == [(0, 2), (2, 3), (3, 6), (6, 7)]
     assert list(cells._chunks(np.zeros(0, dtype=np.int64))) == []
-
-
-def test_hilbert_key_locality():
-    # nearby points get nearby keys more often than far points (weak check)
-    k1 = cells.hilbert_key(10.0, 10.0)
-    k2 = cells.hilbert_key(10.001, 10.001)
-    k3 = cells.hilbert_key(-60.0, 150.0)
-    assert abs(int(k1) - int(k2)) < abs(int(k1) - int(k3))
 
 
 def test_cell_parent_matches_direct_assignment():

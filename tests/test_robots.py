@@ -1,10 +1,28 @@
 """robots.txt parsing + distributed crawl-politeness filter
 (text/robots.py). Semantics pinned to RFC 9309's own examples."""
 
+import re
+
 from pyspark.sql import functions as F
 
-from shapely_spark.text.robots import (is_allowed, parse_robots,
+from shapely_spark.text.robots import (_pattern_to_regex, parse_robots,
                                        robots_filter, url_path_col)
+
+
+def is_allowed(rules: list[tuple[bool, str]], path: str) -> bool:
+    """Most-specific-match decision for one path: the scalar reference
+    the vectorized filter is checked against."""
+    verdict = True
+    best = -1
+    for allow, pat in rules:
+        if not pat:
+            continue  # empty Disallow == allow everything, matches nothing
+        if re.match(_pattern_to_regex(pat), path):
+            ln = len(pat)
+            if ln > best or (ln == best and allow and not verdict):
+                verdict, best = allow, ln
+    return verdict
+
 
 EXAMPLE = """
 # comment line
@@ -160,20 +178,3 @@ def test_url_path_col_root_fallback(spark):
     got = [r.p for r in df.select(
         url_path_col(F.col("u")).alias("p")).collect()]
     assert got == ["/", "/p/q"]
-
-
-def test_sitemap_directive_extraction(spark):
-    from pyspark.sql import functions as F
-
-    from shapely_spark.text.robots import sitemap_urls, sitemap_urls_col
-
-    txt = ("User-agent: *\nDisallow: /private\n"
-           "Sitemap: https://a.example.org/sitemap.xml\n"
-           "sitemap:https://a.example.org/s2.xml  # comment\n"
-           "SITEMAP: \n"   # empty value: dropped
-           "NotSitemap: https://x\n")
-    want = ["https://a.example.org/sitemap.xml", "https://a.example.org/s2.xml"]
-    assert sitemap_urls(txt) == want
-    df = spark.createDataFrame([(txt,)], "t string")
-    got = df.select(sitemap_urls_col(F.col("t"))).collect()[0][0]
-    assert got == want

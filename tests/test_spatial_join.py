@@ -254,37 +254,6 @@ def test_spatial_join_geom_shuffle_mode_matches_broadcast(spark):
     assert a == b and len(a) > 0
 
 
-def test_coverage_simplify_grouped(spark):
-    """Grouped coverage simplify: within each key the shared wiggly edge is
-    simplified identically on both sides (edge-matched output), groups are
-    independent."""
-    import pandas as pd
-
-    from shapely_spark.geo import coverage_is_valid, from_wkt, from_wkb
-    from shapely_spark.geo import kernels as K
-    from shapely_spark.geo.wkb import to_wkb
-    from shapely_spark.spark.overlay_ops import coverage_simplify_grouped
-
-    p1 = from_wkt("POLYGON ((0 0, 2 0, 2 0.9, 2.05 1.0, 2 1.1, 2 2, 0 2, 0 0))")
-    p2 = from_wkt("POLYGON ((2 0, 4 0, 4 2, 2 2, 2 1.1, 2.05 1.0, 2 0.9, 2 0))")
-    rows = []
-    for grp in (0, 1):
-        rows.append((grp, 0, to_wkb(p1)))
-        rows.append((grp, 1, to_wkb(p2)))
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["grp", "gid", "wkb"]),
-        "grp int, gid int, wkb binary",
-    )
-    out = coverage_simplify_grouped(df, "grp", "gid", tolerance=0.2).collect()
-    assert len(out) == 4
-    for grp in (0, 1):
-        gs = sorted((r for r in out if r.grp == grp), key=lambda r: r.gid)
-        s1, s2 = (from_wkb(bytes(r.wkb)) for r in gs)
-        assert coverage_is_valid([s1, s2])
-        assert abs((K.area(s1) + K.area(s2)) - 8.0) < 1e-9
-        assert len(s1.rings[0]) < len(p1.rings[0])
-
-
 def _geom_df(spark, id_col, geoms):
     from shapely_spark.geo.wkb import to_wkb
 

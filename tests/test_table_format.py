@@ -128,42 +128,6 @@ def test_read_incremental_exact_file_diff(spark, tmp_path):
         read_incremental(spark, t, from_snapshot=2)
 
 
-def test_streaming_ingest_commits_match_batch(spark, tmp_path):
-    from shapely_spark.spark.table_format import read_incremental
-    from shapely_spark.streaming.pipeline import foreach_batch_commit_append
-
-    # landing zone with several small files so availableNow produces
-    # multiple micro-batches
-    src = str(tmp_path / "landing")
-    rows = [(i, to_wkb(box(float(i), 0.0, i + 1.0, 1.0))) for i in range(40)]
-    (spark.createDataFrame(rows, "id long, geometry binary")
-     .repartition(4).write.parquet(src))
-
-    table = str(tmp_path / "stream_tbl")
-    fn = foreach_batch_commit_append(table)
-    stream = (spark.readStream.format("parquet")
-              .schema("id long, geometry binary")
-              .option("maxFilesPerTrigger", 1).load(src))
-    q = (stream.writeStream.foreachBatch(fn)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    log = snapshot_log(table)
-    assert len(log) >= 2  # one snapshot per micro-batch
-    assert log[-1]["n_rows"] == 40
-    got = {r.id: bytes(r.geometry)
-           for r in read_snapshot(spark, table).collect()}
-    want = {r.id: bytes(r.geometry)
-            for r in spark.read.parquet(src).collect()}
-    assert got == want  # streaming ingest == batch content, bytes equal
-    # a consumer that processed through snapshot 0 resumes with exactly
-    # the rest
-    first = snapshot_log(table)[0]["n_rows"]
-    rest = read_incremental(spark, table, from_snapshot=0).count()
-    assert first + rest == 40
-
-
 # ---------------------------------------------------------------------------
 # maintenance: compaction, snapshot expiry, orphan cleanup
 # ---------------------------------------------------------------------------
@@ -172,7 +136,7 @@ def test_compact_merges_small_files_preserving_rows(spark, tmp_path):
     from shapely_spark.spark.table_format import compact_files
 
     t = str(tmp_path / "tbl")
-    for k in range(4):  # streaming-ingest debris: 4 commits × 2 tiny files
+    for k in range(4):  # small-append debris: 4 commits × 2 tiny files
         commit_append(_boxes(spark, 100 * k, 6), t)
     before = snapshot(t)
     assert len(before["files"]) == 8

@@ -166,28 +166,6 @@ def test_warc_and_wet_coexist_in_one_dir(spark, tmp_path):
         assert r.text == orig[r.url]
 
 
-def test_streaming_warc_ingest_matches_batch(spark, tmp_path):
-    """read_warc_stream: warc files landing as a stream parse to the
-    same record set as the batch read, one micro-batch per file."""
-    from shapely_spark.spark.warc import read_warc, read_warc_stream
-
-    landing = tmp_path / "landing"
-    write_warc(_pages(spark, n=18, parts=3), str(landing))
-
-    stream = read_warc_stream(spark, str(landing), max_files=1)
-    assert stream.isStreaming
-    q = (stream.writeStream.format("memory").queryName("warc_stream")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    got = {(r.url, r.warc_ts, bytes(r.html))
-           for r in spark.sql("SELECT * FROM warc_stream").collect()}
-    want = {(r.url, r.warc_ts, bytes(r.html))
-            for r in read_warc(spark, str(landing)).collect()}
-    assert got == want and len(got) == 18
-
-
 def test_http_envelope_status_mime_roundtrip(spark, tmp_path):
     """Non-200 statuses and non-html MIMEs survive the container
     roundtrip; defaults stay 200/text/html (byte-compatible writers)."""

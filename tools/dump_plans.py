@@ -84,29 +84,6 @@ def main():
              rdf, predicate="intersects")),
     ]
 
-    from shapely_spark.spark.temporal import asof_join, range_join
-
-    ev = spark.createDataFrame(
-        pd.DataFrame({"k": [1, 2], "ts": [10, 20], "v": [1.0, 2.0]})
-    )
-    rv = spark.createDataFrame(
-        pd.DataFrame({"k": [1, 2], "ts": [5, 15], "p": [9.0, 8.0]})
-    )
-    iv = spark.createDataFrame(
-        pd.DataFrame({"k": [1], "s": [0], "e": [100]})
-    )
-    sections += [
-        ("as-of join: ONE hash exchange on the key + ONE sort — the "
-         "union-marker/last(ignorenulls) window; no inequality join, no "
-         "per-row lookup anywhere",
-         asof_join(ev, rv, on="k", left_ts="ts")),
-        ("range join: intervals explode to buckets (Generate), points "
-         "compute ONE bucket, then a plain equi-join + exact filter — "
-         "no BroadcastNestedLoopJoin",
-         range_join(ev, iv, point_ts="ts", start="s", end="e", on="k",
-                    bucket=16)),
-    ]
-
     from shapely_spark.spark.geoparquet import (bbox_filter_col,
                                                 read_geoparquet,
                                                 write_geoparquet)
