@@ -59,7 +59,7 @@ def run_headline(spark, n_pages: int, n_regions: int, times: dict, extras: dict,
                  warmup_rows: int = 20_000, repeat: int = 3):
     from shapely_spark.spark.extract import with_geo
     from shapely_spark.spark.join import spatial_join
-    from shapely_spark.spark.knn import knn_join_broadcast
+    from shapely_spark.spark.knn import knn_join
     from shapely_spark.spark.pages import regions_df, synth_regions
     from shapely_spark.spark.session import get_spark  # noqa: F401
     from shapely_spark.spark.tiles import tile_counts
@@ -128,7 +128,7 @@ def run_headline(spark, n_pages: int, n_regions: int, times: dict, extras: dict,
         F.length("extracted_text") > 0).count()
     spatial_join(wpages, rdf, predicate="intersects").count()
     tile_counts(wpages).count()
-    knn_join_broadcast(wpages, targets, k=1, point_id="url").count()
+    knn_join(wpages, targets, k=1, point_id="url").count()
     wpages.unpersist()
 
     # ---- timed: steady state ---------------------------------------------
@@ -164,14 +164,12 @@ def run_headline(spark, n_pages: int, n_regions: int, times: dict, extras: dict,
     extras["tiles"] = tiles
 
     knn = timed("knn_pages",
-                lambda: knn_join_broadcast(pages, targets, k=1, point_id="url").count())
+                lambda: knn_join(pages, targets, k=1, point_id="url").count())
     extras["knn_rows_per_sec"] = round(knn / times["knn_pages"], 1)
 
     # audit the cell-ring scale path's safety guarantee on the same data
     # (r3 verdict item 7): what share of points the first disk pass cannot
     # certify and would escalate. Untimed — stats={} runs extra count jobs.
-    from shapely_spark.spark.knn import knn_join
-
     knn_stats: dict = {}
     knn_join(pages, targets, k=1, point_id="url", stats=knn_stats).count()
     extras["knn_cell_unsafe_fraction"] = knn_stats.get("unsafe_fraction")

@@ -16,7 +16,6 @@ def __getattr__(name):
         "spatial_join": ("shapely_spark.spark.join", "spatial_join"),
         "spatial_join_geom": ("shapely_spark.spark.join", "spatial_join_geom"),
         "knn_join": ("shapely_spark.spark.knn", "knn_join"),
-        "knn_join_broadcast": ("shapely_spark.spark.knn", "knn_join_broadcast"),
         "tile_counts": ("shapely_spark.spark.tiles", "tile_counts"),
         "dissolve": ("shapely_spark.spark.overlay_ops", "dissolve"),
         "with_geo": ("shapely_spark.spark.extract", "with_geo"),

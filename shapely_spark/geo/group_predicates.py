@@ -376,9 +376,11 @@ def _decide(pool: _Pool, pred: str, A, B) -> np.ndarray:
 
 def pair_predicate(predicate: str, lgeoms: list, rgeoms: list, li, ri) -> np.ndarray:
     """Evaluate ``predicate(lgeoms[li[k]], rgeoms[ri[k]])`` for every
-    candidate pair k in one call; pairs with a None or EMPTY side are
-    False. Pairs without a batched path (a GeometryCollection side;
-    beyond ``intersects``, no areal side) run the exact scalar kernel.
+    candidate pair k in one call; pairs with a None side are False, and
+    so are pairs with an EMPTY side, except ``equals`` of two EMPTYs,
+    which is True as in the scalar kernel. Pairs without a batched path
+    (a GeometryCollection side; beyond ``intersects``, no areal side) run
+    the exact scalar kernel.
     Raises ValueError for a predicate outside the supported set."""
     if predicate not in _SUPPORTED:
         raise ValueError(
@@ -409,6 +411,9 @@ def pair_predicate(predicate: str, lgeoms: list, rgeoms: list, li, ri) -> np.nda
         k = np.flatnonzero(sel)
         if len(k):
             out[k] = _decide(pool, pred, A[k], B[k])
+    if predicate == "equals":  # dim -1 is None or EMPTY
+        for k in np.flatnonzero((da < 0) & (db < 0)):
+            out[k] = pool.geoms[a[k]] is not None and pool.geoms[b[k]] is not None
     return out
 
 

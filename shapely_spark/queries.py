@@ -269,34 +269,42 @@ def spatial_join_within(spark, sf_dir):
       SELECT {sql_cell_expr('lat', 'lon', RES)} AS cell_id, count(*) AS n_points
       FROM pts GROUP BY cell_id
     ),
-    -- per-region cover of FULLY-contained cells (exact arithmetic: a cell
-    -- [cx0,cx1)x[cy0,cy1) is full iff inside the box), matching the engine's
-    -- full-cell fast path; partial boundary cells are excluded on both sides
+    -- every cell [cx0,cx1]x[cy0,cy1] against every box, with the
+    -- closed-form area of their overlap (exact: all bounds are dyadic)
+    pairs AS (
+      SELECT region_id, cell_id, n_points,
+             CAST(xmin AS DOUBLE) AS bx0, CAST(xmax AS DOUBLE) AS bx1,
+             CAST(ymin AS DOUBLE) AS by0, CAST(ymax AS DOUBLE) AS by1,
+             CAST((cell_id % {1 << RES}) * 360.0 / {1 << RES} - 180.0 AS DOUBLE) AS cx0,
+             CAST(((cell_id % {1 << RES}) + 1) * 360.0 / {1 << RES} - 180.0 AS DOUBLE) AS cx1,
+             CAST((cell_id // {1 << RES}) * 180.0 / {1 << RES} - 90.0 AS DOUBLE) AS cy0,
+             CAST(((cell_id // {1 << RES}) + 1) * 180.0 / {1 << RES} - 90.0 AS DOUBLE) AS cy1
+      FROM boxes, cells WHERE cell_id >= 0
+    ),
     cover AS (
-      SELECT region_id, cell_id FROM boxes, cells
-      WHERE (cell_id % {1 << RES}) * 360.0 / {1 << RES} - 180.0 > xmin
-        AND ((cell_id % {1 << RES}) + 1) * 360.0 / {1 << RES} - 180.0 < xmax
-        AND (cell_id // {1 << RES}) * 180.0 / {1 << RES} - 90.0 > ymin
-        AND ((cell_id // {1 << RES}) + 1) * 180.0 / {1 << RES} - 90.0 < ymax
+      SELECT region_id, n_points, (bx1 - bx0) * (by1 - by0) AS box_area,
+             greatest(least(cx1, bx1) - greatest(cx0, bx0), 0.0)
+               * greatest(least(cy1, by1) - greatest(cy0, by0), 0.0) AS overlap
+      FROM pairs
     )
     -- CAST: DuckDB sum(BIGINT) yields HUGEINT, which pandas materializes as
     -- float64 and the driver hashes as 3.0 != Spark's 3 (r1+r2 failure).
-    SELECT region_id, count(*) AS n_tiles, CAST(sum(n_points) AS BIGINT) AS n_pages
-    FROM cover JOIN cells USING (cell_id)
+    -- weighted_pages: the engine sums the same per-tile doubles in its own
+    -- order, so both sides round the sum through DECIMAL(18,6) to 2 places
+    SELECT region_id, count(*) AS n_tiles, CAST(sum(n_points) AS BIGINT) AS n_pages,
+           CAST(round(CAST(sum(n_points * (overlap / box_area)) AS DECIMAL(18,6)), 2)
+                AS DOUBLE) AS weighted_pages
+    FROM cover WHERE overlap > 0
     GROUP BY region_id ORDER BY region_id
     """,
 )
 def tile_agg_regions(spark, sf_dir):
-    from .spark.tiles import region_tile_weights
+    from .spark.tiles import raster_vector_aggregate
 
-    pts = _pts(spark, sf_dir).withColumn("cell_id", cell_col("lat", "lon", RES))
-    counts = pts.groupBy("cell_id").agg(F.count("*").alias("n_points"))
-    regions = _nation_regions_df(spark, sf_dir)
-    weights = region_tile_weights(regions, RES).where(F.col("full"))
+    out = raster_vector_aggregate(_pts(spark, sf_dir), _nation_regions_df(spark, sf_dir), RES)
     return (
-        counts.join(F.broadcast(weights), "cell_id")
-        .groupBy("region_id")
-        .agg(F.count("*").alias("n_tiles"), F.sum("n_points").alias("n_pages"))
+        out.select("region_id", "n_tiles", "n_pages", F.round(
+            F.col("weighted_pages").cast("decimal(18,6)"), 2).cast("double").alias("weighted_pages"))
         .repartition(1).sortWithinPartitions("region_id")
     )
 

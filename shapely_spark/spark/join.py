@@ -236,25 +236,37 @@ def spatial_join(
     return j.where(cond).select(*out_cols)
 
 
-def _pair_refine_batch(predicate: str, lwkb: pd.Series, rwkb: pd.Series) -> np.ndarray:
-    """Batch refine for candidate (left WKB, right WKB) pairs. Both sides
-    are factorized and each unique geometry is parsed ONCE per batch (and
-    cached per executor across batches); then ONE pair_predicate call
-    decides every candidate pair of the batch (geo/group_predicates.py
-    owns every evaluation choice, scalar fallbacks included). Rows with a
-    NULL side (rect×rect pairs the JVM already decided) are False. No bbox
-    mask here: the JVM bbox-overlap filter ran before the UDF and
-    pair_predicate gates on bboxes itself."""
+def _wkb_codes(col: pd.Series) -> tuple[np.ndarray, list]:
+    """A batch's WKB column factorized: per-row codes (-1 for NULL) into
+    its distinct geometries, each parsed once per executor through
+    _geom_from_wkb_cached (None where the WKB does not parse)."""
+    codes, uniq = pd.factorize(col)
+    return codes, [_geom_from_wkb_cached(bytes(w)) for w in uniq]
+
+
+def _pair_refine(predicate: str, left: tuple, right: tuple) -> np.ndarray:
+    """predicate per row over two _wkb_codes columns: ONE pair_predicate
+    call decides every row with both sides present (geo/group_predicates.py
+    owns every evaluation choice, scalar fallbacks included); a row with a
+    NULL side is False. The geometry join's refine and the SQL st_*
+    predicates both decide their pairs here."""
     from ..geo.group_predicates import pair_predicate
 
-    out = np.zeros(len(lwkb), dtype=bool)
-    lcodes, luniq = pd.factorize(lwkb)
-    rcodes, runiq = pd.factorize(rwkb)
+    (lcodes, lgeoms), (rcodes, rgeoms) = left, right
+    out = np.zeros(len(lcodes), dtype=bool)
     idx = np.flatnonzero((lcodes >= 0) & (rcodes >= 0))
-    out[idx] = pair_predicate(
-        predicate, [_geom_from_wkb_cached(bytes(w)) for w in luniq],
-        [_geom_from_wkb_cached(bytes(w)) for w in runiq], lcodes[idx], rcodes[idx])
+    out[idx] = pair_predicate(predicate, lgeoms, rgeoms, lcodes[idx], rcodes[idx])
     return out
+
+
+def _pair_refine_batch(predicate: str, lwkb: pd.Series, rwkb: pd.Series) -> np.ndarray:
+    """Batch refine for candidate (left WKB, right WKB) pairs: each unique
+    geometry of a side is parsed ONCE per batch (and cached per executor
+    across batches), then _pair_refine decides every pair. Rows with a
+    NULL side (rect×rect pairs the JVM already decided) are False. No
+    bbox mask here: the JVM bbox-overlap filter ran before the UDF and
+    pair_predicate gates on bboxes itself."""
+    return _pair_refine(predicate, _wkb_codes(lwkb), _wkb_codes(rwkb))
 
 
 # bbox interval tests over the two bbox column sets, as SQL

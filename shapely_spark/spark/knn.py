@@ -35,6 +35,11 @@ from .columns import cell_col, haversine_col
 KM_PER_DEG_LAT = 110.574  # conservative minimum
 ESCALATE_RING = 4         # the one retry ring, as a multiple of k_ring
 ESCALATE_MIN_YIELD = 0.25  # retry only if the first pass certified this share
+# knn_join(ties='break') answers layers of at most this many targets with
+# _knn_broadcast; read at call time, so a test can set it to 0 to send a
+# small layer through the cell-disk passes
+SMALL_LAYER_MAX = 65536
+TARGET_CHUNK = 4096  # targets per _knn_broadcast matmul block
 
 
 def _neighbor_cells(cell, k_ring: int, res: int):
@@ -67,7 +72,6 @@ def knn_join(
     point_cols: tuple[str, str] = ("lat", "lon"),
     target_cols: tuple[str, str] = ("t_lat", "t_lon"),
     stats: dict | None = None,
-    small_layer_max: int | None = 65536,
 ) -> DataFrame:
     """points(point_id, lat, lon) × targets(target_id, t_lat, t_lon) →
     (point_id, target_id, dist_km, knn_rank), k rows per point (more on
@@ -98,24 +102,23 @@ def knn_join(
     consuming the result in a long-lived session).
 
     Small-layer dispatch (r4 verdict item 5): when the target layer has
-    ≤ `small_layer_max` rows (checked with a short-circuiting
+    ≤ SMALL_LAYER_MAX rows (checked with a short-circuiting
     limit+count, one cheap job), ties='break' routes STRAIGHT to
-    `knn_join_broadcast` — the chord-matmul kernel answers dimension-
+    `_knn_broadcast` — the chord-matmul kernel answers dimension-
     sized layers in one mapInPandas with no candidate explosion, window,
     certification aggregate, or escalation (the 25-target battery
-    fixture went ~4 s quiet → sub-second). small_layer_max=None skips
-    the dispatch."""
+    fixture went ~4 s quiet → sub-second)."""
     plat, plon = point_cols
     tlat, tlon = target_cols
 
-    if ties == "break" and small_layer_max is not None:
-        n_targets = targets.limit(small_layer_max + 1).count()
-        if n_targets <= small_layer_max:
+    if ties == "break":
+        n_targets = targets.limit(SMALL_LAYER_MAX + 1).count()
+        if n_targets <= SMALL_LAYER_MAX:
             if stats is not None:
                 stats["dispatch"] = "broadcast"
                 stats["targets"] = n_targets
                 stats["persisted"] = []
-            return knn_join_broadcast(
+            return _knn_broadcast(
                 points, targets, k=k, max_distance_km=max_distance_km,
                 exclusive=exclusive, point_id=point_id, target_id=target_id,
                 point_cols=point_cols, target_cols=target_cols)
@@ -235,7 +238,7 @@ def knn_join(
     # (dist, target_id)) is identical by construction. ties='keep' needs
     # rank() semantics, which only the window form provides.
     if ties == "break":
-        fb_out = knn_join_broadcast(
+        fb_out = _knn_broadcast(
             remaining.select(point_id, plat, plon), targets, k=k,
             max_distance_km=max_distance_km, exclusive=exclusive,
             point_id=point_id, target_id=target_id,
@@ -328,7 +331,7 @@ def dwithin_join(
     )
 
 
-def knn_join_broadcast(
+def _knn_broadcast(
     points: DataFrame,
     targets: DataFrame,
     k: int = 1,
@@ -338,7 +341,6 @@ def knn_join_broadcast(
     target_id: str = "target_id",
     point_cols: tuple[str, str] = ("lat", "lon"),
     target_cols: tuple[str, str] = ("t_lat", "t_lon"),
-    target_chunk: int = 4096,
 ) -> DataFrame:
     """kNN for broadcastable target layers (≲100k rows): the whole target
     set ships to every executor once; each Arrow batch computes a vectorized
@@ -354,7 +356,7 @@ def knn_join_broadcast(
 
     plat, plon = point_cols
     tlat, tlon = target_cols
-    target_chunk = max(target_chunk, k)  # merge invariant: chunk ≥ k
+    target_chunk = max(TARGET_CHUNK, k)  # merge invariant: chunk ≥ k
     trows = targets.select(target_id, tlat, tlon).collect()
     t_ids = np.array([r[0] for r in trows], dtype=np.int64)
     t_lat = np.array([r[1] for r in trows], dtype=np.float64)

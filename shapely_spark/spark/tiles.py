@@ -23,15 +23,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.cells import DEFAULT_RES, cell_bounds, polygon_cover_batch
+from .columns import cell_col
 
 _WEIGHTS_SCHEMA = (
     "region_id long, cell_id long, full boolean, clip_area double, area_frac double"
 )
 
 
-def tile_counts(pages_geo: DataFrame, res: int = DEFAULT_RES, value_col: str | None = None) -> DataFrame:
-    """Per-cell page metrics (the rasterization step). pages_geo must carry
-    cell_id (see extract.with_geo). NULL-island (-1) is excluded."""
+def tile_counts(pages_geo: DataFrame, value_col: str | None = None) -> DataFrame:
+    """Per-cell page metrics (the rasterization step) at the resolution of
+    pages_geo's cell_id (see extract.with_geo). NULL-island (-1) is
+    excluded."""
     aggs = [F.count("*").alias("n_pages")]
     if value_col is not None:
         aggs.append(F.sum(value_col).alias("sum_value"))
@@ -77,12 +79,16 @@ def raster_vector_aggregate(
     res: int = DEFAULT_RES,
     value_col: str | None = None,
 ) -> DataFrame:
-    """Region rollup at tile granularity: pages → tile counts (partial agg),
-    ⋈ broadcast tile weights, → per-region area-weighted totals.
+    """Region rollup at tile granularity: pages keyed at `res` from their
+    lat/lon → tile counts (partial agg), ⋈ broadcast tile weights, →
+    per-region area-weighted totals. Any cell_id pages_geo carries is
+    replaced, so the pages and the weights always share one grid.
 
-    Output: region_id, n_tiles, n_pages (pages in covered tiles),
-    weighted_pages (area-fraction-weighted page estimate[, sum_value…])."""
-    counts = tile_counts(pages_geo, res, value_col)
+    Output: region_id, n_tiles (tiles with pages that meet the region in
+    positive area), n_pages (pages in those tiles), weighted_pages
+    (Σ n_pages × the tile's share of the region's area[, sum_value…])."""
+    counts = tile_counts(
+        pages_geo.withColumn("cell_id", cell_col("lat", "lon", res)), value_col)
     weights = F.broadcast(region_tile_weights(regions, res))
     j = counts.join(weights, "cell_id", "inner")
     aggs = [

@@ -17,11 +17,11 @@ Parser semantics per RFC 9309 (public spec; no reference-library code):
 Scale shape: the robots corpus is one small row per host (CC fetches
 ~10^8 robots files for 10^12 pages — but per-HOST it is tiny next to
 the page table). ``robots_filter`` compiles each host's selected group
-ONCE driver-side into regex alternations, broadcasts the {host: rules}
-dict, and evaluates pages with an Arrow-batched pandas UDF that groups
-each batch by host and runs ONE vectorized str.match per (host, rule
-list) — no per-row Python, no shuffle of the pages side, flag-don't-
-drop for auditable removal rates.
+ONCE, distributed, into regexes, left-joins the blocking hosts' rules to
+the pages on host, and evaluates the blocked-host rows with an
+Arrow-batched pandas UDF that groups each batch by ruleset and runs ONE
+vectorized str.match per rule — no per-row Python, nothing collected to
+the driver, flag-don't-drop for auditable removal rates.
 """
 
 from __future__ import annotations
@@ -151,7 +151,7 @@ def compiled_rules_df(
     ).mapInPandas(gen, schema).dropDuplicates(["h"])
 
 
-# executor-local compiled-ruleset cache for the join tier: a hot host's
+# executor-local compiled-ruleset cache for robots_filter: a hot host's
 # rules JSON recompiles once per executor, not once per Arrow batch.
 _RULES_BY_JSON: dict[str, list] = {}
 
@@ -184,7 +184,6 @@ def robots_filter(
     text_col: str = "robots_txt",
     agent: str = "*",
     flag_col: str = "robots_allowed",
-    tier: str = "join",
 ) -> DataFrame:
     """pages + a boolean ``robots_allowed`` column. ``robots`` is one
     row per host (host, robots_txt); hosts with no row — or a group
@@ -192,89 +191,17 @@ def robots_filter(
     Flag-don't-drop: filter on the flag downstream, keep the removal
     rate auditable.
 
-    Tiers (the ANN/BPE tiering discipline):
-
-    - ``tier="join"`` (default, the 100-TB path): rules compile
-      DISTRIBUTED via ``compiled_rules_df`` (allow-all hosts drop out
-      map-side), then equi-join pages on host — Catalyst/AQE broadcasts
-      the compiled relation when it is small and shuffle-joins it when
-      it is not (10^7–10^8 robots hosts at Common-Crawl scale). Pages
-      whose host has no blocking group get a NULL rules column from the
-      left join and are allowed pure-JVM; only blocked-host rows enter
-      the Arrow refine, which factorizes the (executor-cached) ruleset
-      per batch and runs one vectorized str.match per rule. Nothing is
-      ever collected to the driver and no |hosts|-sized literal enters
-      the plan.
-    - ``tier="driver"``: the original tiny-relation path — compile on
-      the driver, broadcast a dict, prefilter with an in-plan host set.
-      Only sensible when the robots relation is interactive-small
-      (≲10^4 hosts): the collect is O(|hosts|) driver memory and the
-      host-set literal is an O(|hosts|) expression tree.
+    Plan: rules compile DISTRIBUTED via ``compiled_rules_df``
+    (allow-all hosts drop out map-side), then pages ⟕ compiled rules ON
+    lower(host) — Catalyst/AQE broadcasts the compiled relation when it
+    is small and shuffle-joins it when it is not (10^7–10^8 robots hosts
+    at Common-Crawl scale). Pages whose host has no blocking group get a
+    NULL rules column from the left join and are allowed pure-JVM; only
+    blocked-host rows enter the Arrow refine, which factorizes the
+    (executor-cached) ruleset per batch and runs one vectorized
+    str.match per rule. Nothing is ever collected to the driver and no
+    |hosts|-sized literal enters the plan.
     """
-    if tier == "join":
-        return _robots_filter_join(
-            pages, robots, url_col, host_col, text_col, agent, flag_col)
-    if tier != "driver":
-        raise ValueError(f"tier must be 'join' or 'driver', got {tier!r}")
-    rows = robots.select(F.lower(F.col(host_col)).alias("h"),
-                         F.col(text_col).alias("t")).collect()
-    compiled = {}
-    for r in rows:
-        c = _compile_host(parse_robots(r.t, agent))
-        if c is not None:
-            compiled[r.h] = c
-    if not compiled:
-        return pages.withColumn(flag_col, F.lit(True))
-    spark = pages.sparkSession
-    bc = spark.sparkContext.broadcast(
-        {h: [(rx.pattern, allow, ln) for rx, allow, ln in c]
-         for h, c in compiled.items()})
-    blocked_hosts = F.array(*[F.lit(h) for h in sorted(compiled)])
-
-    host = F.lower(F.parse_url(F.col(url_col), F.lit("HOST")))
-    path = url_path_col(F.col(url_col))
-
-    @F.pandas_udf("boolean")
-    def _allowed(host_s: pd.Series, path_s: pd.Series) -> pd.Series:
-        cache: dict = {}
-        out = pd.Series(True, index=host_s.index)
-        for h in host_s.dropna().unique():
-            spec = bc.value.get(h)
-            if spec is None:
-                continue
-            rules = cache.get(h)
-            if rules is None:
-                rules = [(re.compile(p), allow, ln) for p, allow, ln in spec]
-                cache[h] = rules
-            mask = host_s == h
-            verdict = _match_paths(rules, path_s[mask])
-            # masked Series-to-Series assignment trips pandas' dtype
-            # deprecation even for bool values — assign a plain ndarray
-            # through .loc (verdict's index IS the masked index)
-            out.loc[mask] = verdict.astype(bool).to_numpy()
-        return out
-
-    # JVM prefilter: only urls whose host HAS a blocking group reach the
-    # UDF; everything else is allowed map-side (when() NULLs the input,
-    # the UDF's first move is the unique() over non-null hosts)
-    gated = F.array_contains(blocked_hosts, host)
-    flag = F.when(~gated | host.isNull(), F.lit(True)).otherwise(
-        _allowed(F.when(gated, host), F.when(gated, path)))
-    return pages.withColumn(flag_col, flag)
-
-
-def _robots_filter_join(
-    pages: DataFrame,
-    robots: DataFrame,
-    url_col: str,
-    host_col: str,
-    text_col: str,
-    agent: str,
-    flag_col: str,
-) -> DataFrame:
-    """Join tier of ``robots_filter`` (see its docstring). Plan:
-    pages ⟕ compiled_rules ON lower(host); NULL rules ⇒ allowed JVM-side;
-    non-NULL rows refine in one Arrow UDF grouped by ruleset."""
     compiled = compiled_rules_df(robots, host_col, text_col, agent)
     host = F.lower(F.parse_url(F.col(url_col), F.lit("HOST")))
     path = url_path_col(F.col(url_col))

@@ -48,7 +48,6 @@ PUBLIC = {
     "spark/ragged.py:wkb_to_ragged": _COV + "to/from_ragged_array (GeoArrow layout)",
     "spark/ragged.py:ragged_to_wkb": _COV + "to/from_ragged_array (GeoArrow layout)",
     "spark/overlay_ops.py:dissolve_two_level": _COV + "dissolve, skew-safe two-level",
-    "spark/tiles.py:raster_vector_aggregate": _COV + "tile aggregation (raster-vector)",
     "spark/table_format.py:snapshot_log": _COV + "snapshot-committed table format",
     "spark/table_format.py:read_incremental": _COV + "incremental (changed-data) scan",
     "spark/table_format.py:compact_files": _COV + "snapshot-table maintenance",

@@ -251,16 +251,51 @@ def test_unknown_predicate_raises():
 # ---------------------------------------------------------------------------
 # pair_predicate: many rights per call
 
+EMPTY_WKTS = [
+    "POINT EMPTY", "LINESTRING EMPTY", "POLYGON EMPTY", "MULTIPOINT EMPTY",
+    "MULTILINESTRING EMPTY", "MULTIPOLYGON EMPTY", "GEOMETRYCOLLECTION EMPTY",
+]
+
+# 19 geometries whose pairs meet in every way the predicates tell apart:
+# equal, nested, overlapping, edge-touching, crossing and far, with a hole,
+# multi-part and mixed-collection members and four EMPTYs
+FIXTURE_WKTS = [
+    "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))",
+    "POLYGON ((4 4, 0 4, 0 0, 4 0, 4 4))",
+    "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (3 3, 7 3, 7 7, 3 7, 3 3))",
+    "POLYGON ((2 2, 6 2, 6 6, 2 6, 2 2))",
+    "POLYGON ((4 0, 8 0, 8 4, 4 4, 4 0))",
+    "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)), ((2 2, 3 2, 3 3, 2 3, 2 2)))",
+    "POINT (1 1)",
+    "POINT (4 2)",
+    "POINT (5 5)",
+    "LINESTRING (-1 2, 5 2)",
+    "LINESTRING (1 1, 3 3)",
+    "LINESTRING (4 0, 4 4)",
+    "MULTIPOINT ((1 1), (6 6))",
+    "MULTILINESTRING ((0 0, 2 2), (5 5, 6 7))",
+    "GEOMETRYCOLLECTION (POLYGON ((5 5, 6 5, 6 6, 5 6, 5 5)), LINESTRING (0 0, 3 1))",
+    "POLYGON EMPTY",
+    "POINT EMPTY",
+    "LINESTRING EMPTY",
+    "GEOMETRYCOLLECTION EMPTY",
+]
+
+
 @st.composite
 def pair_geoms(draw):
     """The predicate zoo (tests.test_predicate_consistency.geoms: point,
     segment, polyline, box, holed box, n-gon, multipoint, multiline,
     multipolygon, rotated n-gon, corner-touching multipolygon) plus mixed
-    GeometryCollections and a holed diamond whose triangular hole touches
-    the shell at one node through ulp-noisy fp vertices."""
-    kind = draw(st.sampled_from(["zoo", "zoo", "zoo", "zoo", "gc", "node_hole"]))
+    GeometryCollections, an EMPTY of each type and a holed diamond whose
+    triangular hole touches the shell at one node through ulp-noisy fp
+    vertices."""
+    kind = draw(st.sampled_from(
+        ["zoo", "zoo", "zoo", "zoo", "gc", "empty", "node_hole"]))
     if kind == "zoo":
         return draw(pr.geoms())
+    if kind == "empty":
+        return from_wkt(draw(st.sampled_from(EMPTY_WKTS)))
     if kind == "gc":
         return geometrycollection(draw(st.lists(pr.geoms(), min_size=1, max_size=2)))
     x, y = draw(pr.coord), draw(pr.coord)
@@ -322,6 +357,22 @@ def test_pair_batches_equal_scalar_and_alone(seed):
     rights = [_rand_right(rng) for _ in range(9)] + [None]
     lefts.append(rights[0])
     _check_pairs(lefts, rights)
+
+
+def test_equals_of_two_empties_is_true():
+    """kernels.equals holds for two EMPTYs of any types; pair_predicate
+    answers the same, and every other predicate stays False on them."""
+    empties = [from_wkt(w) for w in EMPTY_WKTS]
+    n = len(empties)
+    li, ri = np.repeat(np.arange(n), n), np.tile(np.arange(n), n)
+    assert pair_predicate("equals", empties, empties, li, ri).all()
+    assert all(K.equals(a, b) for a in empties for b in empties)
+    _check_pairs(empties + [None], empties + [_box(0, 0, 1, 1), None])
+
+
+def test_fixture_pairs_equal_scalar():
+    geoms = [from_wkt(w) for w in FIXTURE_WKTS]
+    _check_pairs(geoms, geoms)
 
 
 @settings(max_examples=25, deadline=None)

@@ -69,7 +69,7 @@ def test_knn_max_distance(spark, pages, targets):
 
 
 def test_tile_counts_match_groupby(spark, pages):
-    tc = tile_counts(pages, RES)
+    tc = tile_counts(pages)
     direct = pages.where(F.col("cell_id") >= 0).groupBy("cell_id").count()
     j = tc.join(direct, "cell_id", "full")
     bad = j.where((F.col("n_pages") != F.col("count")) | F.col("n_pages").isNull() | F.col("count").isNull()).count()
@@ -100,15 +100,36 @@ def test_raster_vector_aggregate_runs(spark, pages):
         assert r.weighted_pages <= r.n_pages + 1e-9
 
 
-def test_knn_broadcast_equals_cell_path(spark, pages, targets):
-    from shapely_spark.spark.knn import knn_join_broadcast
+def test_raster_vector_aggregate_keys_pages_at_its_res(spark):
+    """Pages stored at res 9 aggregate at res 7 exactly as pages stored at
+    res 7: the pages and the tile weights share raster_vector_aggregate's
+    grid whatever cell_id the pages carry."""
+    raw = synth_pages(spark, 2000)
+    rdf = regions_df(spark, synth_regions(30, seed=7))
 
-    a = knn_join_broadcast(pages, targets, k=1, point_id="url")
-    # small_layer_max=None keeps the 10-target layer off the broadcast
+    def rows(store_res):
+        return {r.region_id: r for r in raster_vector_aggregate(
+            with_geo(raw, res=store_res), rdf, res=7).collect()}
+
+    got, want = rows(9), rows(7)
+    assert len(want) > 0 and set(got) == set(want)
+    for rid, w in want.items():
+        assert (got[rid].n_tiles, got[rid].n_pages) == (w.n_tiles, w.n_pages), rid
+        assert got[rid].weighted_pages == pytest.approx(w.weighted_pages, rel=1e-12)
+
+
+def test_knn_broadcast_equals_cell_path(spark, pages, targets, monkeypatch):
+    from shapely_spark.spark import knn
+
+    a_stats = {}
+    a = knn_join(pages, targets, k=1, point_id="url", stats=a_stats)
+    assert a_stats["dispatch"] == "broadcast"
+    # SMALL_LAYER_MAX=0 keeps the 10-target layer off the broadcast
     # dispatch, so b runs the cell-disk passes
+    monkeypatch.setattr(knn, "SMALL_LAYER_MAX", 0)
     stats = {}
     b = knn_join(pages, targets, k=1, k_ring=2, point_id="url", ties="break",
-                 small_layer_max=None, stats=stats)
+                 stats=stats)
     pa = {(r.url, r.target_id, round(r.dist_km, 9)) for r in a.collect()}
     pb = {(r.url, r.target_id, round(r.dist_km, 9)) for r in b.collect()}
     assert pa == pb
@@ -117,13 +138,13 @@ def test_knn_broadcast_equals_cell_path(spark, pages, targets):
     assert "unsafe_after_pass_8" in stats  # and the yield gate escalated
 
 
-def test_knn_exclusive_self_join(spark):
+def test_knn_exclusive_self_join(spark, monkeypatch):
     """query_nearest(exclusive=True) semantics (shapely/strtree.py:409):
     a point's nearest neighbor among the targets is never itself."""
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from shapely_spark.spark.knn import knn_join, knn_join_broadcast
+    from shapely_spark.spark import knn
 
     pdf = pd.DataFrame({
         "pid": list(range(6)),
@@ -133,29 +154,29 @@ def test_knn_exclusive_self_join(spark):
     pts = spark.createDataFrame(pdf, "pid long, lat double, lon double")
     tgts = pts.select(F.col("pid").alias("target_id"),
                       F.col("lat").alias("t_lat"), F.col("lon").alias("t_lon"))
-    for fn in (knn_join_broadcast,):
-        got = {r.pid: r.target_id for r in fn(
-            pts, tgts, k=1, exclusive=True, point_id="pid").collect()}
-        assert all(got[p] != p for p in got), got
-        assert got[0] == 1  # (0,0) → nearest other is (0,1)
+    # six targets: both calls take the broadcast dispatch
+    got = {r.pid: r.target_id for r in knn_join(
+        pts, tgts, k=1, exclusive=True, point_id="pid").collect()}
+    assert all(got[p] != p for p in got), got
+    assert got[0] == 1  # (0,0) → nearest other is (0,1)
     # inclusive: nearest is itself at distance 0
-    inc = {r.pid: r.target_id for r in knn_join_broadcast(
+    inc = {r.pid: r.target_id for r in knn_join(
         pts, tgts, k=1, exclusive=False, point_id="pid").collect()}
     assert all(inc[p] == p for p in inc)
     # cell-ring variant agrees: at res 7 (cells ~155 km tall) the first
     # disk pass certifies the five clustered points, so their answers come
     # through the disk pass's own dist_km > 0 filter
+    monkeypatch.setattr(knn, "SMALL_LAYER_MAX", 0)
     stats = {}
     got2 = {r.pid: r.target_id for r in knn_join(
         pts, tgts, k=1, res=7, exclusive=True, point_id="pid",
-        small_layer_max=None, stats=stats).collect()}
-    assert got2 == {r.pid: r.target_id for r in knn_join_broadcast(
-        pts, tgts, k=1, exclusive=True, point_id="pid").collect()}
+        stats=stats).collect()}
+    assert got2 == got
     assert "dispatch" not in stats
     assert stats["unsafe_after_pass_2"] < stats["points"]
 
 
-def test_knn_polar_cluster(spark):
+def test_knn_polar_cluster(spark, monkeypatch):
     """Adversarial density (r3 verdict item 7): a target layer clustered at
     the pole makes the longitude guarantee collapse, so the first disk
     pass certifies no point. The yield gate must then skip the wider ring
@@ -175,9 +196,12 @@ def test_knn_polar_cluster(spark):
         pd.DataFrame({"target_id": list(range(40)), "t_lat": tl, "t_lon": tn}),
         "target_id long, t_lat double, t_lon double",
     )
+    from shapely_spark.spark import knn
+
+    monkeypatch.setattr(knn, "SMALL_LAYER_MAX", 0)
     stats = {}
     got = knn_join(pts, tgts, k=2, res=RES, k_ring=2, point_id="pid",
-                   ties="break", small_layer_max=None, stats=stats).collect()
+                   ties="break", stats=stats).collect()
     assert "dispatch" not in stats
     assert stats["unsafe_after_pass_2"] == stats["points"] == n
     assert "unsafe_after_pass_8" not in stats  # no escalation
@@ -199,15 +223,13 @@ def test_knn_broadcast_exclusive_duplicate_targets(spark):
     """≥2 targets coinciding with the query point must still yield k
     neighbors in exclusive mode (regression: one reserved slot was eaten
     by the second zero-distance duplicate)."""
-    from shapely_spark.spark.knn import knn_join_broadcast
-
     pts = spark.createDataFrame([(1, 10.0, 20.0)], "pid long, lat double, lon double")
     tgts = spark.createDataFrame(
         [(100, 10.0, 20.0), (101, 10.0, 20.0), (102, 10.0, 20.0),
          (200, 10.5, 20.0), (201, 11.0, 20.0), (202, 11.5, 20.0)],
         "tid long, lat double, lon double",
     )
-    out = knn_join_broadcast(
+    out = knn_join(
         pts, tgts, k=2, point_id="pid", target_id="tid",
         point_cols=("lat", "lon"), target_cols=("lat", "lon"), exclusive=True,
     ).collect()
@@ -255,7 +277,7 @@ def test_tile_rollup_equals_direct_coarse_counts(spark, pages):
     from shapely_spark.spark.columns import cell_col
     from shapely_spark.spark.tiles import tile_rollup
 
-    fine = tile_counts(pages, res=RES)
+    fine = tile_counts(pages)
     rolled = tile_rollup(fine, res=RES, parent_res=RES - 2)
     direct = (
         pages.where(F.col("cell_id") >= 0)
@@ -273,7 +295,7 @@ def test_tile_rollup_equals_direct_coarse_counts(spark, pages):
 def test_tile_rollup_chaining_preserves_base_tile_count(spark, pages):
     from shapely_spark.spark.tiles import tile_rollup
 
-    fine = tile_counts(pages, res=RES)
+    fine = tile_counts(pages)
     one = tile_rollup(fine, res=RES, parent_res=RES - 1)
     two_step = tile_rollup(one, res=RES - 1, parent_res=RES - 3)
     one_shot = tile_rollup(fine, res=RES, parent_res=RES - 3)

@@ -106,51 +106,36 @@ def test_robots_filter_matches_scalar_reference(spark):
     assert out["https://norobots.org/anything"] is True
 
 
-def test_filter_without_blocking_hosts_is_pure_jvm(spark):
-    # driver tier: with no blocking hosts the whole filter folds to a
-    # literal True and no Python ever enters the pages plan
-    robots = spark.createDataFrame(
-        [("open.org", "User-agent: *\nAllow: /\n")],
-        "host string, robots_txt string")
-    pages = spark.createDataFrame([("https://open.org/x",)], "url string")
-    out = robots_filter(pages, robots, tier="driver")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert out.collect()[0].robots_allowed is True
-
-
 def test_join_tier_matches_driver_tier(spark):
+    # the join plan is now the only one; the answers the removed
+    # driver-side plan gave on these URLs are pinned as literals
     robots = spark.createDataFrame(
         [("blocked.org", EXAMPLE),
          ("open.org", "User-agent: *\nDisallow:\n")],
         "host string, robots_txt string")
-    urls = [
-        "https://blocked.org/private/secret.html",
-        "https://blocked.org/private/public.html",
-        "https://blocked.org/docs/x.pdf",
-        "https://blocked.org/ok/page",
-        "https://open.org/private/secret.html",
-        "https://norobots.org/anything",
-        "https://BLOCKED.org/tmp/y",
-    ]
+    driver_answers = {
+        "https://blocked.org/private/secret.html": False,
+        "https://blocked.org/private/public.html": True,
+        "https://blocked.org/docs/x.pdf": False,
+        "https://blocked.org/ok/page": True,
+        "https://open.org/private/secret.html": True,
+        "https://norobots.org/anything": True,
+        "https://BLOCKED.org/tmp/y": False,
+    }
+    urls = list(driver_answers)
     pages = spark.createDataFrame([(u,) for u in urls], "url string")
     a = {r.url: r.robots_allowed
-         for r in robots_filter(pages, robots, tier="join").collect()}
-    b = {r.url: r.robots_allowed
-         for r in robots_filter(pages, robots, tier="driver").collect()}
-    assert a == b
-    assert a["https://blocked.org/private/secret.html"] is False
-    assert a["https://blocked.org/private/public.html"] is True
-    # join tier preserves pages columns and row count
-    out = robots_filter(pages, robots, tier="join")
+         for r in robots_filter(pages, robots).collect()}
+    assert a == driver_answers
+    # the join plan preserves pages columns and row count
+    out = robots_filter(pages, robots)
     assert out.columns == ["url", "robots_allowed"]
     assert out.count() == len(urls)
 
 
 def test_join_tier_scales_without_host_literal(spark):
-    # 10^5 synthetic hosts: the driver tier would inline a 10^5-element
-    # array literal into the plan; the join tier's plan size must stay
-    # independent of |hosts| (rules ride a join relation, not the plan).
+    # 10^5 synthetic hosts: the plan size must stay independent of
+    # |hosts| (rules ride a join relation, not an in-plan literal).
     n = 100_000
     robots = spark.range(n).select(
         F.concat(F.lit("h"), F.col("id"), F.lit(".example.org")).alias("host"),
@@ -162,7 +147,7 @@ def test_join_tier_scales_without_host_literal(spark):
          ("https://h6.example.org/priv6/x",),       # 6 % 7 == 6 -> blocked
          ("https://unknown.example.org/priv0/x",)],
         "url string")
-    out = robots_filter(pages, robots, tier="join")
+    out = robots_filter(pages, robots)
     plan = out._jdf.queryExecution().analyzed().toString()
     assert len(plan) < 100_000, f"plan grew with |hosts|: {len(plan)} chars"
     got = {r.url: r.robots_allowed for r in out.collect()}

@@ -114,7 +114,7 @@ def test_sql_null_and_invalid(spark, shapes):
     rows = {r.id: r for r in spark.sql(
         "SELECT id, st_is_empty(g) AS e, st_area(g) AS a FROM geoms"
     ).collect()}
-    assert rows[5].e is True  # NULL wkt → NULL geom → empty
+    assert rows[5].e is None  # NULL wkt → NULL geom → NULL, never EMPTY
     r = spark.sql("SELECT st_area(st_geomfromtext('NOT A WKT')) AS a").first()
     assert r.a is None or math.isnan(r.a)
 
@@ -171,3 +171,56 @@ def test_st_cell_and_parent(register, spark):
     assert row.p7 == int(cell_of(48.85, 2.35, 7))
     assert row.p7 == int(cell_parent(np.int64(row.c9), 9, 7))
     assert row.bad == -1
+
+
+def test_st_cell_answers_each_resolution_of_a_batch(register, spark):
+    from shapely_spark.index.cells import cell_of, cell_parent
+
+    rows = [(i, 48.85, 2.35, r, p) for i, (r, p) in enumerate([(9, 7), (7, 3), (9, 5), (5, 5)])]
+    df = spark.createDataFrame(rows, "i int, lat double, lon double, r int, p int").coalesce(1)
+    got = sorted(df.selectExpr(
+        "i", "st_cell(lat, lon, r) AS c", "st_cell_parent(st_cell(lat, lon, r), r, p) AS pc"
+    ).collect())
+    for (i, lat, lon, r, p), row in zip(rows, got):
+        assert row.c == int(cell_of(lat, lon, r)), (i, r)
+        assert row.pc == int(cell_parent(np.int64(row.c), r, p)) == int(cell_of(lat, lon, p))
+
+
+def _registry():
+    from shapely_spark.spark.geometry_cols import REGISTRY
+
+    return REGISTRY
+
+
+@pytest.mark.parametrize("name", sorted(_registry()))
+def test_all_null_arguments_give_null(register, spark, name):
+    """The NULL rule: every function, on a row whose arguments are all
+    NULL, completes and returns NULL."""
+    text_in = name in ("st_geomfromtext", "st_geomfromgeojson")
+    args = ", ".join("CAST(NULL AS BINARY)" if k == "g" else
+                     "CAST(NULL AS STRING)" if text_in else "CAST(NULL AS DOUBLE)"
+                     for k in _registry()[name].args)
+    assert spark.sql(f"SELECT {name}({args}) AS r").first().r is None
+
+
+_PREDICATES = ["intersects", "contains", "within", "covers", "touches",
+               "crosses", "overlaps", "equals", "disjoint"]
+
+
+def test_sql_predicates_equal_scalar_kernels(register, spark):
+    """The nine SQL predicates over every pair of the 19-geometry fixture
+    (EMPTYs and a GeometryCollection included), in one query, equal the
+    scalar kernels pair for pair."""
+    from shapely_spark.geo import kernels as K
+    from shapely_spark.geo.wkt import from_wkt
+    from tests.test_group_predicates import FIXTURE_WKTS
+
+    geoms = [from_wkt(w) for w in FIXTURE_WKTS]
+    df = spark.createDataFrame(list(enumerate(FIXTURE_WKTS)), "i int, w string")
+    df.selectExpr("i", "st_geomfromtext(w) AS g").createOrReplaceTempView("fixture")
+    cols = ", ".join(f"st_{p}(a.g, b.g) AS {p}" for p in _PREDICATES)
+    rows = spark.sql(f"SELECT a.i AS a, b.i AS b, {cols} FROM fixture a, fixture b").collect()
+    assert len(rows) == len(geoms) ** 2
+    bad = [(r.a, r.b, p) for r in rows for p in _PREDICATES
+           if r[p] is None or r[p] != bool(getattr(K, p)(geoms[r.a], geoms[r.b]))]
+    assert not bad, bad

@@ -32,7 +32,7 @@ def main():
 
     from shapely_spark.spark.extract import with_geo
     from shapely_spark.spark.join import spatial_join, spatial_join_geom
-    from shapely_spark.spark.knn import dwithin_join, knn_join_broadcast
+    from shapely_spark.spark.knn import dwithin_join, knn_join
     from shapely_spark.spark.pages import regions_df, synth_pages, synth_regions
     from shapely_spark.spark.session import get_spark
     from shapely_spark.spark.tiles import tile_counts
@@ -65,9 +65,9 @@ def main():
         ("tile aggregation: partial+final HashAggregate (map-side combine) "
          "— the only shuffle is the final per-cell merge",
          tile_counts(pages)),
-        ("kNN broadcast: single mapInPandas over slim columns — no join, "
-         "no shuffle, no window",
-         knn_join_broadcast(pages, targets, k=1, point_id="url")),
+        ("kNN, small target layer: one mapInPandas over slim columns — no "
+         "join, no shuffle, no window (plus the layer-size count job)",
+         knn_join(pages, targets, k=1, point_id="url")),
         ("dwithin (fixed-radius) join: per-target adaptive cell rings "
          "explode JVM-side, ONE BroadcastHashJoin on cell + exact haversine "
          "filter — no window, no certification aggregate, points never "

@@ -130,7 +130,7 @@ def main() -> None:
 
     from shapely_spark.spark.extract import with_geo
     from shapely_spark.spark.join import spatial_join
-    from shapely_spark.spark.knn import knn_join_broadcast
+    from shapely_spark.spark.knn import knn_join
     from shapely_spark.spark.pages import regions_df, synth_regions
     from shapely_spark.spark.tiles import tile_counts
 
@@ -157,7 +157,7 @@ def main() -> None:
             F.sum(F.when(F.col("cell_id") >= 0, 1).otherwise(0))).collect()[0][0],
         "spatial_join": lambda df: spatial_join(df, rdf, predicate="intersects").count(),
         "tile_agg": lambda df: tile_counts(df).count(),
-        "knn": lambda df: knn_join_broadcast(df, targets, k=1, point_id="url").count(),
+        "knn": lambda df: knn_join(df, targets, k=1, point_id="url").count(),
     }
     wanted = list(jobs) if args.job == "all" else [args.job]
 
