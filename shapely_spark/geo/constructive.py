@@ -20,6 +20,7 @@ from .geom import (
     MULTIPOLYGON,
     POINT,
     POLYGON,
+    TYPE_NAMES,
     Geometry,
     box as make_box,
     empty,
@@ -186,10 +187,11 @@ def buffer(
         return None
     if geom.is_empty or distance == 0:
         return geom
+    # every path below draws a quarter circle in quad_segs >= 1 steps
+    quad_segs = max(1, int(quad_segs))
+    n = 4 * quad_segs
     if single_sided or cap != "round" or join != "round":
-        return _styled_buffer(geom, distance, max(4, 4 * quad_segs),
-                              cap, join, mitre_limit, single_sided)
-    n = max(4, 4 * quad_segs)
+        return _styled_buffer(geom, distance, n, cap, join, mitre_limit, single_sided)
     if geom.type_id == POINT:
         cx, cy = geom.coords[0, 0], geom.coords[0, 1]
         ang = 2.0 * math.pi * np.arange(n) / n
@@ -438,7 +440,7 @@ def _buffer_general(geom: Geometry, distance: float, quad_segs: int) -> Geometry
     """
     from . import overlay as O
 
-    n = max(4, 4 * quad_segs)
+    n = 4 * quad_segs
     tid = geom.type_id
     if tid in (LINESTRING, LINEARRING, MULTILINESTRING):
         if distance < 0:
@@ -689,6 +691,10 @@ def simplify(geom: Geometry | None, tolerance: float, preserve_topology: bool = 
 # ---------------------------------------------------------------------------
 
 def segmentize(geom: Geometry | None, max_segment_length: float) -> Geometry | None:
+    """reference: shapely/constructive.py:1244 (max_segment_length must be
+    greater than 0)."""
+    if not max_segment_length > 0:
+        raise ValueError(f"max_segment_length must be greater than 0, got {max_segment_length}")
     if geom is None or geom.is_empty:
         return geom
 
@@ -1145,7 +1151,14 @@ def snap(geom: Geometry | None, reference: Geometry | None, tolerance: float) ->
 # ---------------------------------------------------------------------------
 
 def substring(line: Geometry, start_dist: float, end_dist: float, normalized: bool = False) -> Geometry:
-    """Sub-linestring between two distances along the line."""
+    """Sub-linestring between two distances along the line (reference:
+    shapely/ops.py:553, LineString input only)."""
+    if line is None:
+        return None
+    if line.type_id != LINESTRING:
+        raise TypeError(f"substring takes a LineString, got {TYPE_NAMES[line.type_id]}")
+    if line.is_empty:
+        return line
     c = np.asarray(line.coords)[:, :2]
     seg = np.sqrt((np.diff(c, axis=0) ** 2).sum(axis=1))
     total = float(seg.sum())

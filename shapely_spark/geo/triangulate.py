@@ -19,7 +19,9 @@ from .geom import (
     GEOMETRYCOLLECTION,
     LINESTRING,
     MULTILINESTRING,
+    MULTIPOLYGON,
     POLYGON,
+    TYPE_NAMES,
     Geometry,
     empty,
     point as make_point,
@@ -292,7 +294,15 @@ def _polylabel_with_distance(geom: Geometry, tolerance: float = 1.0):
 
 def maximum_inscribed_circle(geom: Geometry, tolerance: float | None = None) -> Geometry:
     """Center→boundary 2-point linestring, like GEOS (reference:
-    shapely/constructive.py:1473). Radius = polylabel distance."""
+    shapely/constructive.py:1473). Radius = polylabel distance. EMPTY
+    gives LINESTRING EMPTY; a non-polygonal input raises ValueError."""
+    if geom is None:
+        return None
+    if geom.is_empty:
+        return empty(LINESTRING)
+    if geom.type_id not in (POLYGON, MULTIPOLYGON):
+        raise ValueError("maximum_inscribed_circle requires a polygon, "
+                         f"got {TYPE_NAMES[geom.type_id]}")
     if tolerance is None:
         b = K.bounds(geom)
         tolerance = max(b[2] - b[0], b[3] - b[1]) / 1000.0
@@ -316,8 +326,6 @@ def constrained_delaunay_triangles(geom: Geometry | None) -> Geometry | None:
     clipping over the shell with holes bridged in, then Lawson edge flips
     toward the Delaunay criterion where flips keep triangles inside.
     Returns a GeometryCollection of triangles whose union is the input."""
-    from .geom import MULTIPOLYGON
-
     if geom is None:
         return None
     if geom.is_empty:

@@ -24,10 +24,11 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .index.cells import sql_cell_expr
+from .spark import geometry_cols as G
 from .spark.columns import cell_col
 
 RES = 7  # cell grid resolution used by the oracle-checked spatial queries
@@ -81,26 +82,24 @@ FROM nation
 
 def _nation_regions_df(spark, sf_dir) -> DataFrame:
     """The nation boxes as a WKB regions DataFrame — the engine-side layer."""
-    from .geo.geom import box as make_box
-    from .geo.wkb import to_wkb
-
-    pdf = _nation_boxes_pdf(spark, sf_dir)
-    rows = [
-        (int(r.region_id), f"nation_{int(r.region_id)}",
-         to_wkb(make_box(r.xmin, r.ymin, r.xmax, r.ymax)), "box")
-        for r in pdf.itertuples()
-    ]
-    return spark.createDataFrame(rows, "region_id long, name string, wkb binary, kind string")
+    k = F.col("n_nationkey")
+    xmin = -180.0 + k * 14.0
+    ymin = -85.0 + (k * 37) % 160
+    return _t(spark, sf_dir, "nation").select(
+        k.cast("long").alias("region_id"),
+        F.concat(F.lit("nation_"), k).alias("name"),
+        _box(xmin, ymin, xmin + 12.0, ymin + 9.0).alias("wkb"),
+        F.lit("box").alias("kind"))
 
 
-# part-derived geometry parameters (shared by the geo_* kernel queries)
+# part-derived geometry parameters (shared by the geo_* queries)
 def _spread(df: DataFrame) -> DataFrame:
     """Fan a SMALL param table out to the session's parallelism before a
-    heavy per-row Python kernel. The derived tables here come from tiny
-    parquet files (one input split), so without this every
-    mapInPandas-backed kernel query runs on ONE core — measured 36.9 s →
-    ~2 s for the box-pair overlay battery at sf0.1 on local[32]. The
-    round-robin shuffle moves a few hundred KB; the kernel is the cost.
+    heavy Python UDF stage. The derived tables here come from tiny
+    parquet files (one input split), so without this every st_* geometry
+    query runs on ONE core — measured 36.9 s → ~2 s for the box-pair
+    overlay battery at sf0.1 on local[32]. The round-robin shuffle moves
+    a few hundred KB; the kernel is the cost.
 
     Companion pattern: every query's FINAL sort is
     `.repartition(1).sortWithinPartitions(...)`, not `.orderBy(...)` — a
@@ -162,16 +161,86 @@ _RECRAWL_SQL = """
       FROM f)"""
 
 
-def _geo_kernel_query(spark, sf_dir, out_schema: str, fn) -> DataFrame:
-    """Run a per-row geometry kernel over the part-derived parameters via
-    mapInPandas (Arrow-batched; geometry built + kernel run in NumPy)."""
-    params = _part_params(spark, sf_dir)
+# ---------------------------------------------------------------------------
+# geometry fixtures: WKT text built in Spark SQL, parsed by st_geomfromtext.
+# Every geometry query below runs its operation as nested st_* column
+# expressions (spark/geometry_cols.py), the one UDF layer of the ST_* surface.
+# ---------------------------------------------------------------------------
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield fn(pdf)
+def _cols(names: str) -> list[Column]:
+    return [F.col(c) for c in names.split()]
 
-    return params.mapInPandas(gen, out_schema)
+
+def _text(template: str, *vals) -> Column:
+    """format_string(template, *vals): one %s per value (a Column or a
+    number). Spark prints a double as the shortest digits that read back
+    as the same double, so a parsed coordinate is bit-identical to the
+    column value."""
+    return F.format_string(template, *(
+        (v if isinstance(v, Column) else F.lit(v)).cast("string") for v in vals))
+
+
+def _wkt_geom(*parts) -> Column:
+    """st_geomfromtext of the concatenated text parts (str or Column)."""
+    return G.st_geomfromtext(F.concat(*(F.lit(p) if isinstance(p, str) else p for p in parts)))
+
+
+def _geom(template: str, *vals) -> Column:
+    return _wkt_geom(_text(template, *vals))
+
+
+def _xys(n: int) -> str:
+    """A template for n 'x y' coordinates."""
+    return ", ".join(["%s %s"] * n)
+
+
+def _xy(x, y) -> Column:
+    return _text("%s %s", x, y)
+
+
+def _point(x, y) -> Column:
+    return _geom("POINT (%s %s)", x, y)
+
+
+def _line(*xy) -> Column:
+    return _geom(f"LINESTRING ({_xys(len(xy) // 2)})", *xy)
+
+
+def _box_xy(x0, y0, x1, y1, reverse: bool = False) -> tuple:
+    """The closed ring of geo.geom.box(x0, y0, x1, y1), flat x, y pairs."""
+    ring = [(x1, y0), (x1, y1), (x0, y1), (x0, y0), (x1, y0)]
+    return tuple(v for xy in (ring[::-1] if reverse else ring) for v in xy)
+
+
+def _box(x0, y0, x1, y1) -> Column:
+    return _geom(f"POLYGON (({_xys(5)}))", *_box_xy(x0, y0, x1, y1))
+
+
+def _joined(n: Column, fmt: Callable[[Column], Column]) -> Column:
+    """fmt(i) for i = 0 .. n - 1, joined by ', ' (n an int Column)."""
+    return F.array_join(F.transform(F.sequence(F.lit(0), n - 1), fmt), ", ")
+
+
+def _ngon_vertex(cx, cy, r, n, ph=0.0) -> Callable[[Column], Column]:
+    """'x y' of vertex i of geo.geom.regular_ngon(cx, cy, r, n, ph): the
+    angle ph + 2π·i/n in the same operation order."""
+    def fmt(i: Column) -> Column:
+        a = ph + 2.0 * math.pi * i / n
+        return _xy(cx + r * F.cos(a), cy + r * F.sin(a))
+
+    return fmt
+
+
+def _ngon(cx, cy, r, n, ph=0.0) -> Column:
+    """geo.geom.regular_ngon as a geometry column; vertex n closes the ring
+    on vertex 0."""
+    vertex = _ngon_vertex(cx, cy, r, n, ph)
+    return _wkt_geom("POLYGON ((", _joined(n + 1, lambda i: vertex(i % n)), "))")
+
+
+def _by_gid(df: DataFrame, *cols: Column) -> DataFrame:
+    """gid and cols, in gid order (the final sort of _spread's docstring)."""
+    return df.select("gid", *cols).repartition(1).sortWithinPartitions("gid")
 
 
 # ---------------------------------------------------------------------------
@@ -417,9 +486,9 @@ def dwithin_pairs(spark, sf_dir):
     return out.select("pid", "target_id", F.round("dist_km", 4).alias("dist_km")).repartition(1).sortWithinPartitions("pid", "target_id")
 
 # ---- geometry kernel queries (closed-form oracles) --------------------------
-# Each builds real geometries row-by-row inside an Arrow batch and runs the
-# NumPy kernel; the oracle recomputes the value from the closed-form formula
-# for that constructed shape. This pins kernel semantics (area/length/
+# Each builds real geometries as SQL WKT and runs st_* column expressions;
+# the oracle recomputes the value from the closed-form formula for that
+# constructed shape. This pins kernel semantics (area/length/
 # centroid/buffer/clip/convex-hull/simplify/WKB framing) to independent math.
 
 @q(
@@ -431,17 +500,9 @@ def dwithin_pairs(spark, sf_dir):
     """,
 )
 def geo_area_ngon(spark, sf_dir):
-    def fn(pdf):
-        from .geo import kernels as K
-        from .geo.geom import regular_ngon
-
-        areas = [
-            K.area(regular_ngon(cx, cy, r, int(n)))
-            for cx, cy, r, n in zip(pdf.cx, pdf.cy, pdf.r, pdf.n)
-        ]
-        return pd.DataFrame({"gid": pdf.gid, "area": np.round(areas, 4)})
-
-    return _geo_kernel_query(spark, sf_dir, "gid long, area double", fn).repartition(1).sortWithinPartitions("gid")
+    cx, cy, r, n = _cols("cx cy r n")
+    return _by_gid(_part_params(spark, sf_dir),
+                   F.round(G.st_area(_ngon(cx, cy, r, n)), 4).alias("area"))
 
 
 @q(
@@ -453,17 +514,9 @@ def geo_area_ngon(spark, sf_dir):
     """,
 )
 def geo_perimeter_ngon(spark, sf_dir):
-    def fn(pdf):
-        from .geo import kernels as K
-        from .geo.geom import regular_ngon
-
-        per = [
-            K.length(regular_ngon(cx, cy, r, int(n)))
-            for cx, cy, r, n in zip(pdf.cx, pdf.cy, pdf.r, pdf.n)
-        ]
-        return pd.DataFrame({"gid": pdf.gid, "perimeter": np.round(per, 4)})
-
-    return _geo_kernel_query(spark, sf_dir, "gid long, perimeter double", fn).repartition(1).sortWithinPartitions("gid")
+    cx, cy, r, n = _cols("cx cy r n")
+    return _by_gid(_part_params(spark, sf_dir),
+                   F.round(G.st_length(_ngon(cx, cy, r, n)), 4).alias("perimeter"))
 
 
 @q(
@@ -475,20 +528,11 @@ def geo_perimeter_ngon(spark, sf_dir):
     """,
 )
 def geo_centroid_ngon(spark, sf_dir):
-    def fn(pdf):
-        from .geo.constructive import centroid
-        from .geo.geom import regular_ngon
-
-        cents = [
-            centroid(regular_ngon(cx, cy, r, int(n))).coords[0]
-            for cx, cy, r, n in zip(pdf.cx, pdf.cy, pdf.r, pdf.n)
-        ]
-        c = np.array(cents)
-        return pd.DataFrame(
-            {"gid": pdf.gid, "cent_x": np.round(c[:, 0], 4), "cent_y": np.round(c[:, 1], 4)}
-        )
-
-    return _geo_kernel_query(spark, sf_dir, "gid long, cent_x double, cent_y double", fn).repartition(1).sortWithinPartitions("gid")
+    cx, cy, r, n = _cols("cx cy r n")
+    c = _part_params(spark, sf_dir).select(
+        "gid", G.st_centroid(_ngon(cx, cy, r, n)).alias("c"))
+    return _by_gid(c, F.round(G.st_x("c"), 4).alias("cent_x"),
+                   F.round(G.st_y("c"), 4).alias("cent_y"))
 
 
 @q(
@@ -500,18 +544,9 @@ def geo_centroid_ngon(spark, sf_dir):
     """,
 )
 def geo_buffer_area(spark, sf_dir):
-    def fn(pdf):
-        from .geo import kernels as K
-        from .geo.constructive import buffer
-        from .geo.geom import point as make_point
-
-        areas = [
-            K.area(buffer(make_point(cx, cy), r, quad_segs=8))
-            for cx, cy, r in zip(pdf.cx, pdf.cy, pdf.r)
-        ]
-        return pd.DataFrame({"gid": pdf.gid, "buf_area": np.round(areas, 4)})
-
-    return _geo_kernel_query(spark, sf_dir, "gid long, buf_area double", fn).repartition(1).sortWithinPartitions("gid")
+    cx, cy, r = _cols("cx cy r")
+    return _by_gid(_part_params(spark, sf_dir), F.round(G.st_area(
+        G.st_buffer(G.st_point(cx, cy), r, F.lit(8))), 4).alias("buf_area"))
 
 
 @q(
@@ -525,22 +560,10 @@ def geo_buffer_area(spark, sf_dir):
 )
 def geo_bounds_boxes(spark, sf_dir):
     """WKB parse → bounds kernel (measurement.py:85) over the region layer."""
-    regions = _nation_regions_df(spark, sf_dir)
-
-    def gen(batches):
-        from .geo import kernels as K
-        from .geo.wkb import from_wkb
-
-        for pdf in batches:
-            bs = np.array([K.bounds(from_wkb(bytes(w))) for w in pdf.wkb])
-            yield pd.DataFrame(
-                {"region_id": pdf.region_id, "bxmin": bs[:, 0], "bymin": bs[:, 1],
-                 "bxmax": bs[:, 2], "bymax": bs[:, 3]}
-            )
-
-    return regions.mapInPandas(
-        gen, "region_id long, bxmin double, bymin double, bxmax double, bymax double"
-    ).repartition(1).sortWithinPartitions("region_id")
+    b = _nation_regions_df(spark, sf_dir).select("region_id", G.st_bounds("wkb").alias("b"))
+    return (b.select("region_id", *(F.col("b")[i].alias(c) for i, c in enumerate(
+                ("bxmin", "bymin", "bxmax", "bymax"))))
+            .repartition(1).sortWithinPartitions("region_id"))
 
 
 @q(
@@ -556,15 +579,9 @@ def geo_bounds_boxes(spark, sf_dir):
 def geo_distance_box(spark, sf_dir):
     """Cartesian distance kernel (measurement.py:54): point vs fixed box
     polygon (0 inside), vs the classic point-to-rect closed form."""
-    def fn(pdf):
-        from .geo import kernels as K
-        from .geo.geom import box as make_box, point as make_point
-
-        B = make_box(-50.0, -40.0, 50.0, 40.0)
-        ds = [K.distance(make_point(cx, cy), B) for cx, cy in zip(pdf.cx, pdf.cy)]
-        return pd.DataFrame({"gid": pdf.gid, "dist": np.round(ds, 4)})
-
-    return _geo_kernel_query(spark, sf_dir, "gid long, dist double", fn).repartition(1).sortWithinPartitions("gid")
+    cx, cy = _cols("cx cy")
+    return _by_gid(_part_params(spark, sf_dir), F.round(G.st_distance(
+        G.st_point(cx, cy), _box(-50.0, -40.0, 50.0, 40.0)), 4).alias("dist"))
 
 
 @q(
@@ -579,21 +596,10 @@ def geo_distance_box(spark, sf_dir):
 )
 def geo_clip_area(spark, sf_dir):
     """clip_by_rect (constructive.py:380) + area vs rect-overlap arithmetic."""
-    regions = _nation_regions_df(spark, sf_dir)
-
-    def gen(batches):
-        from .geo import kernels as K
-        from .geo.constructive import clip_by_rect
-        from .geo.wkb import from_wkb
-
-        for pdf in batches:
-            a = [
-                K.area(clip_by_rect(from_wkb(bytes(w)), -100.0, -60.0, 100.0, 60.0))
-                for w in pdf.wkb
-            ]
-            yield pd.DataFrame({"region_id": pdf.region_id, "clip_area": np.round(a, 4)})
-
-    return regions.mapInPandas(gen, "region_id long, clip_area double").repartition(1).sortWithinPartitions("region_id")
+    clip = G.st_clip_by_rect("wkb", *map(F.lit, (-100.0, -60.0, 100.0, 60.0)))
+    return (_nation_regions_df(spark, sf_dir)
+            .select("region_id", F.round(G.st_area(clip), 4).alias("clip_area"))
+            .repartition(1).sortWithinPartitions("region_id"))
 
 
 @q(
@@ -609,28 +615,21 @@ def geo_clip_area(spark, sf_dir):
 def geo_convexhull_star(spark, sf_dir):
     """convex_hull (constructive.py:467): hull of a 2m-vertex star with
     alternating radii (r, r/3) is the m-gon of the outer vertices."""
-    def fn(pdf):
-        from .geo import kernels as K
-        from .geo.constructive import convex_hull
-        from .geo.geom import multipoint
+    cx, cy, r, n = _cols("cx cy r n")
+    m = n % 8 + 3
 
-        areas, npts = [], []
-        for cx, cy, r, n in zip(pdf.cx, pdf.cy, pdf.r, pdf.n):
-            m = int(n) % 8 + 3
-            ang = 2.0 * math.pi * np.arange(2 * m) / (2 * m)
-            rad = np.where(np.arange(2 * m) % 2 == 0, r, r / 3.0)
-            pts = np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
-            h = convex_hull(multipoint([tuple(p) for p in pts]))
-            areas.append(K.area(h))
-            npts.append(len(h.rings[0]))
-        return pd.DataFrame(
-            {"gid": pdf.gid, "hull_area": np.round(areas, 4),
-             "hull_npoints": pd.Series(npts, dtype="int32")}
-        )
+    def vertex(i):
+        a = 2.0 * math.pi * i / (2 * m)
+        rad = F.when(i % 2 == 0, r).otherwise(r / 3.0)
+        return _xy(cx + rad * F.cos(a), cy + rad * F.sin(a))
 
-    return _geo_kernel_query(
-        spark, sf_dir, "gid long, hull_area double, hull_npoints int", fn
-    ).repartition(1).sortWithinPartitions("gid")
+    # Spark inlines a UDF alias into each consumer, so st_area and
+    # st_npoints would each run the hull; the shuffle makes it run once
+    # (sf0.1, local[4]: 11.4 → 7.3 s)
+    h = _spread(_part_params(spark, sf_dir).select("gid", G.st_convexhull(
+        _wkt_geom("MULTIPOINT (", _joined(2 * m, vertex), ")")).alias("h")))
+    return _by_gid(h, F.round(G.st_area("h"), 4).alias("hull_area"),
+                   G.st_npoints("h").alias("hull_npoints"))
 
 
 @q(
@@ -644,18 +643,10 @@ def geo_convexhull_star(spark, sf_dir):
 def geo_simplify_count(spark, sf_dir):
     """simplify/Douglas-Peucker (constructive.py:1118): 3-point spike line
     keeps the apex iff its offset exceeds the tolerance."""
-    def fn(pdf):
-        from .geo.constructive import simplify
-        from .geo.geom import linestring
-
-        ns = []
-        for gid in pdf.gid:
-            a = (int(gid) % 20) / 10.0
-            s = simplify(linestring([(0.0, 0.0), (2.0, a), (4.0, 0.0)]), 0.95)
-            ns.append(len(s.coords))
-        return pd.DataFrame({"gid": pdf.gid, "n_points": pd.Series(ns, dtype="int32")})
-
-    return _geo_kernel_query(spark, sf_dir, "gid long, n_points int", fn).repartition(1).sortWithinPartitions("gid")
+    a = (F.col("gid") % 20) / 10.0
+    line = _line(0.0, 0.0, 2.0, a, 4.0, 0.0)
+    return _by_gid(_part_params(spark, sf_dir),
+                   G.st_npoints(G.st_simplify(line, F.lit(0.95))).alias("n_points"))
 
 
 @q(
@@ -669,17 +660,9 @@ def geo_simplify_count(spark, sf_dir):
 def wkb_size_ngon(spark, sf_dir):
     """WKB writer framing (io.py:119): polygon = 1+4+4 header + ring
     (4 + (n+1)*16) bytes."""
-    def fn(pdf):
-        from .geo.geom import regular_ngon
-        from .geo.wkb import to_wkb
-
-        sizes = [
-            len(to_wkb(regular_ngon(cx, cy, r, int(n))))
-            for cx, cy, r, n in zip(pdf.cx, pdf.cy, pdf.r, pdf.n)
-        ]
-        return pd.DataFrame({"gid": pdf.gid, "wkb_bytes": pd.Series(sizes, dtype="int64")})
-
-    return _geo_kernel_query(spark, sf_dir, "gid long, wkb_bytes long", fn).repartition(1).sortWithinPartitions("gid")
+    cx, cy, r, n = _cols("cx cy r n")
+    return _by_gid(_part_params(spark, sf_dir),
+                   F.octet_length(_ngon(cx, cy, r, n)).cast("long").alias("wkb_bytes"))
 
 
 # ---- web archive, crawl and table-format ops -------------------------------
@@ -969,18 +952,9 @@ def geoparquet_roundtrip_filter(spark, sf_dir):
     from .spark.geoparquet import (bbox_filter_col, read_geoparquet,
                                    write_geoparquet)
 
-    params = _part_params(spark, sf_dir)
-
-    def gen(batches):
-        from .geo.geom import box as make_box
-        from .geo.wkb import to_wkb
-
-        for pdf in batches:
-            wkbs = [to_wkb(make_box(cx - r, cy - r, cx + r, cy + r))
-                    for cx, cy, r in zip(pdf.cx, pdf.cy, pdf.r)]
-            yield pd.DataFrame({"gid": pdf.gid, "geometry": wkbs})
-
-    boxes = params.mapInPandas(gen, "gid long, geometry binary")
+    cx, cy, r = _cols("cx cy r")
+    boxes = _part_params(spark, sf_dir).select(
+        "gid", _box(cx - r, cy - r, cx + r, cy + r).alias("geometry"))
     path = tempfile.mkdtemp(prefix="shapely_spark_gpq_")
     write_geoparquet(boxes, path, geometry_col="geometry")
     back, _meta = read_geoparquet(spark, path)
@@ -1277,19 +1251,9 @@ def snapshot_table_time_travel(spark, sf_dir):
     from .spark.table_format import (commit_append, pruned_file_count,
                                      read_snapshot)
 
-    params = _part_params(spark, sf_dir)
-
-    def gen(batches):
-        from .geo.geom import box as make_box
-        from .geo.wkb import to_wkb
-
-        for pdf in batches:
-            wkbs = [to_wkb(make_box(cx - r, cy - r, cx + r, cy + r))
-                    for cx, cy, r in zip(pdf.cx, pdf.cy, pdf.r)]
-            yield pd.DataFrame(
-                {"gid": pdf.gid, "cx": pdf.cx, "geometry": wkbs})
-
-    boxes = params.mapInPandas(gen, "gid long, cx double, geometry binary")
+    cx, cy, r = _cols("cx cy r")
+    boxes = _part_params(spark, sf_dir).select(
+        "gid", "cx", _box(cx - r, cy - r, cx + r, cy + r).alias("geometry"))
     # hash-cluster on an x-band so file bboxes are spatially tight
     # (repartitionByRange would sample — re-executing the upstream)
     boxes = boxes.withColumn(
@@ -1404,26 +1368,10 @@ def _box_pairs(spark, sf_dir) -> DataFrame:
     ))
 
 
-def _overlay_area_query(spark, sf_dir, op_name: str, col_name: str) -> DataFrame:
-    pairs = _box_pairs(spark, sf_dir)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo import overlay as O
-        from .geo.geom import box
-
-        op = getattr(O, op_name)
-        for pdf in batches:
-            vals = []
-            for x1, y1, w1, h1, x2, y2, w2, h2 in zip(
-                pdf.x1, pdf.y1, pdf.w1, pdf.h1, pdf.x2, pdf.y2, pdf.w2, pdf.h2
-            ):
-                a = box(x1, y1, x1 + w1, y1 + h1)
-                b = box(x2, y2, x2 + w2, y2 + h2)
-                vals.append(K.area(op(a, b)))
-            yield pd.DataFrame({"gid": pdf.gid, col_name: np.round(vals, 6)})
-
-    return pairs.mapInPandas(gen, f"gid long, {col_name} double").repartition(1).sortWithinPartitions("gid")
+def _box_pair() -> tuple[Column, Column]:
+    """The two boxes of a _box_pairs row."""
+    x1, y1, w1, h1, x2, y2, w2, h2 = _cols("x1 y1 w1 h1 x2 y2 w2 h2")
+    return _box(x1, y1, x1 + w1, y1 + h1), _box(x2, y2, x2 + w2, y2 + h2)
 
 
 @q(
@@ -1437,7 +1385,8 @@ def _overlay_area_query(spark, sf_dir, op_name: str, col_name: str) -> DataFrame
 def overlay_intersection_area(spark, sf_dir):
     """Boolean intersection of box pairs (reference:
     shapely/set_operations.py:114) vs DuckDB min/max closed form."""
-    return _overlay_area_query(spark, sf_dir, "intersection", "inter_area")
+    return _by_gid(_box_pairs(spark, sf_dir), F.round(
+        G.st_area(G.st_intersection(*_box_pair())), 6).alias("inter_area"))
 
 
 @q(
@@ -1450,7 +1399,8 @@ def overlay_intersection_area(spark, sf_dir):
 )
 def overlay_union_area(spark, sf_dir):
     """Boolean union (reference: shapely/set_operations.py:395)."""
-    return _overlay_area_query(spark, sf_dir, "union", "union_area")
+    return _by_gid(_box_pairs(spark, sf_dir), F.round(
+        G.st_area(G.st_union(*_box_pair())), 6).alias("union_area"))
 
 
 @q(
@@ -1463,7 +1413,8 @@ def overlay_union_area(spark, sf_dir):
 )
 def overlay_difference_area(spark, sf_dir):
     """Boolean difference (reference: shapely/set_operations.py:41)."""
-    return _overlay_area_query(spark, sf_dir, "difference", "diff_area")
+    return _by_gid(_box_pairs(spark, sf_dir), F.round(
+        G.st_area(G.st_difference(*_box_pair())), 6).alias("diff_area"))
 
 
 @q(
@@ -1476,7 +1427,8 @@ def overlay_difference_area(spark, sf_dir):
 )
 def overlay_symdifference_area(spark, sf_dir):
     """Symmetric difference (reference: shapely/set_operations.py:247)."""
-    return _overlay_area_query(spark, sf_dir, "symmetric_difference", "xor_area")
+    return _by_gid(_box_pairs(spark, sf_dir), F.round(
+        G.st_area(G.st_symdifference(*_box_pair())), 6).alias("xor_area"))
 
 
 # --- heterogeneous GEOMETRYCOLLECTION overlay -------------------------------
@@ -1497,7 +1449,12 @@ FROM part
 """
 
 
-def _gc_overlay_query(spark, sf_dir, op_name: str) -> DataFrame:
+def _gc_overlay_query(spark, sf_dir, op: Callable[[Column, Column], Column]) -> DataFrame:
+    """op(GC, rect) per row. The result's parts are exploded
+    (spark/parts.get_parts_df) so its point parts can be counted; area and
+    length are summed over the parts."""
+    from .spark.parts import get_parts_df
+
     p = _t(spark, sf_dir, "part")
     k = F.col("p_partkey")
     params = _spread(p.select(
@@ -1508,46 +1465,20 @@ def _gc_overlay_query(spark, sf_dir, op_name: str) -> DataFrame:
         (1 + k % 9).cast("double").alias("px"),
         (3 + k % 7).cast("double").alias("x2"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo import overlay as O
-        from .geo.geom import (
-            GEOMETRYCOLLECTION, LINESTRING, MULTIPOINT, POINT, Geometry,
-            box, point,
-        )
-
-        op = getattr(O, op_name)
-        for pdf in batches:
-            areas, lens, npts = [], [], []
-            for w1, h1, ll, px, x2 in zip(pdf.w1, pdf.h1, pdf.ll, pdf.px, pdf.x2):
-                gc = Geometry(GEOMETRYCOLLECTION, parts=[
-                    point(px, 7.0),
-                    Geometry(LINESTRING,
-                             coords=np.array([[0.0, -1.0], [ll, -1.0]])),
-                    box(0.0, 0.0, w1, h1),
-                ])
-                out = op(gc, box(1.0, -3.0, x2, 10.0))
-                areas.append(K.area(out))
-                lens.append(K.length(out))
-                parts = out.parts or [out]
-                n = 0
-                for g in parts:
-                    if g.type_id == POINT and not g.is_empty:
-                        n += 1
-                    elif g.type_id == MULTIPOINT:
-                        n += len(g.parts or [])
-                npts.append(n)
-            yield pd.DataFrame({
-                "gid": pdf.gid,
-                "area": np.round(areas, 6),
-                "length": np.round(lens, 6),
-                "npts": pd.Series(npts, dtype="int32"),
-            })
-
-    return params.mapInPandas(
-        gen, "gid long, area double, length double, npts int"
-    ).repartition(1).sortWithinPartitions("gid")
+    w1, h1, ll, px, x2 = _cols("w1 h1 ll px x2")
+    gc = _geom("GEOMETRYCOLLECTION (POINT (%s 7.0), LINESTRING (0.0 -1.0, %s -1.0), "
+               f"POLYGON (({_xys(5)})))", px, ll, *_box_xy(0.0, 0.0, w1, h1))
+    out = params.select("gid", op(gc, _box(1.0, -3.0, x2, 10.0)).alias("wkb"))
+    part = F.col("wkb")
+    parts = get_parts_df(out, "gid").select(
+        "gid", G.st_area(part).alias("a"), G.st_length(part).alias("l"),
+        F.when(G.st_geometrytype(part).isin("POINT", "MULTIPOINT"),
+               G.st_numgeometries(part)).otherwise(0).alias("n"))
+    return (parts.groupBy("gid").agg(
+        F.round(F.sum("a"), 6).alias("area"),
+        F.round(F.sum("l"), 6).alias("length"),
+        F.sum("n").cast("int").alias("npts"))
+        .repartition(1).sortWithinPartitions("gid"))
 
 
 @q(
@@ -1566,7 +1497,7 @@ def overlay_gc_intersection(spark, sf_dir):
     (reference: shapely/set_operations.py:114 — GEOS overlayng treats the
     collection as the union of its parts): per-dimension clip vs closed
     forms for all three dimensions."""
-    return _gc_overlay_query(spark, sf_dir, "intersection")
+    return _gc_overlay_query(spark, sf_dir, G.st_intersection)
 
 
 @q(
@@ -1588,7 +1519,7 @@ def overlay_gc_difference(spark, sf_dir):
     x ∈ [1, x2], leaving the unit-wide left strips plus (when x2 < w1 /
     ll) the right-side leftovers, and the point iff it lies right of the
     rect. length sums polygon perimeters + line lengths (GEOS length)."""
-    return _gc_overlay_query(spark, sf_dir, "difference")
+    return _gc_overlay_query(spark, sf_dir, G.st_difference)
 
 
 @q(
@@ -1618,25 +1549,10 @@ def relate_point_box(spark, sf_dir):
         (2 + k % 4).cast("double").alias("h"),
         (k % 3).cast("int").alias("regime"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.geom import box, point
-
-        for pdf in batches:
-            out = []
-            for x1, y1, w, h, reg in zip(pdf.x1, pdf.y1, pdf.w, pdf.h, pdf.regime):
-                bx = box(x1, y1, x1 + w, y1 + h)
-                if reg == 0:
-                    pt = point(x1 + w / 2.0, y1 + h / 2.0)
-                elif reg == 1:
-                    pt = point(x1, y1 + h / 2.0)
-                else:
-                    pt = point(x1 - 1.0, y1)
-                out.append(K.relate(pt, bx))
-            yield pd.DataFrame({"gid": pdf.gid, "de9im": out})
-
-    return src.mapInPandas(gen, "gid long, de9im string").repartition(1).sortWithinPartitions("gid")
+    x1, y1, w, h, regime = _cols("x1 y1 w h regime")
+    px = F.when(regime == 0, x1 + w / 2.0).when(regime == 1, x1).otherwise(x1 - 1.0)
+    py = F.when(regime == 2, y1).otherwise(y1 + h / 2.0)
+    return _by_gid(src, G.st_relate(_point(px, py), _box(x1, y1, x1 + w, y1 + h)).alias("de9im"))
 
 
 @q(
@@ -1671,24 +1587,9 @@ def overlay_line_clip_length(spark, sf_dir):
         (k % 29).cast("double").alias("y1"),
         (5 + k % 11).cast("double").alias("L"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo import overlay as O
-        from .geo.geom import LINESTRING, Geometry, box
-
-        B = box(10.0, 5.0, 40.0, 25.0)
-        for pdf in batches:
-            vals = []
-            for x1, y1, L in zip(pdf.x1, pdf.y1, pdf.L):
-                line = Geometry(
-                    LINESTRING,
-                    coords=np.array([[x1, y1], [x1 + L, y1 + L]], dtype=np.float64),
-                )
-                vals.append(K.length(O.intersection(line, B)))
-            yield pd.DataFrame({"gid": pdf.gid, "clip_len": np.round(vals, 6)})
-
-    return src.mapInPandas(gen, "gid long, clip_len double").repartition(1).sortWithinPartitions("gid")
+    x1, y1, L = _cols("x1 y1 L")
+    clip = G.st_intersection(_line(x1, y1, x1 + L, y1 + L), _box(10.0, 5.0, 40.0, 25.0))
+    return _by_gid(src, F.round(G.st_length(clip), 6).alias("clip_len"))
 
 
 @q(
@@ -1721,22 +1622,9 @@ def overlay_line_line_length(spark, sf_dir):
         (k % 37 + k % 13 - 6).cast("double").alias("bx"),
         (2 + k % 7).cast("double").alias("bl"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo import overlay as O
-        from .geo.geom import LINESTRING, Geometry
-
-        for pdf in batches:
-            vals = []
-            for ax, al, bx, bl in zip(pdf.ax, pdf.al, pdf.bx, pdf.bl):
-                y = 1.0
-                a = Geometry(LINESTRING, coords=np.array([[ax, y], [ax + al, y]]))
-                b = Geometry(LINESTRING, coords=np.array([[bx, y], [bx + bl, y]]))
-                vals.append(K.length(O.intersection(a, b)))
-            yield pd.DataFrame({"gid": pdf.gid, "shared_len": np.round(vals, 6)})
-
-    return src.mapInPandas(gen, "gid long, shared_len double").repartition(1).sortWithinPartitions("gid")
+    ax, al, bx, bl = _cols("ax al bx bl")
+    shared = G.st_intersection(_line(ax, 1.0, ax + al, 1.0), _line(bx, 1.0, bx + bl, 1.0))
+    return _by_gid(src, F.round(G.st_length(shared), 6).alias("shared_len"))
 
 
 @q(
@@ -1765,37 +1653,12 @@ def dissolve_union_by_key(spark, sf_dir):
         (2 + k % 5).cast("double").alias("w"),
         (2 + k % 4).cast("double").alias("h"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo.geom import box
-        from .geo.wkb import to_wkb
-
-        for pdf in batches:
-            wkbs = [
-                to_wkb(box(10.0 * s, 0.0, 10.0 * s + w, h))
-                for s, w, h in zip(pdf.slot, pdf.w, pdf.h)
-            ]
-            yield pd.DataFrame({"region_key": pdf.region_key, "wkb": wkbs})
-
-    bdf = boxes.mapInPandas(gen, "region_key bigint, wkb binary")
-    d = dissolve(bdf, "region_key")
-
-    def area_gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.wkb import from_wkb
-
-        for pdf in batches:
-            areas = [K.area(from_wkb(bytes(b))) for b in pdf.wkb]
-            yield pd.DataFrame(
-                {
-                    "region_key": pdf.region_key,
-                    "union_area": np.round(areas, 6),
-                    "n_parts": pdf.n_parts.astype("int64"),
-                }
-            )
-
-    return d.mapInPandas(area_gen, "region_key bigint, union_area double, n_parts long") \
-        .repartition(1).sortWithinPartitions("region_key")
+    slot, w, h = _cols("slot w h")
+    d = dissolve(boxes.select(
+        "region_key", _box(10.0 * slot, 0.0, 10.0 * slot + w, h).alias("wkb")), "region_key")
+    return (d.select("region_key", F.round(G.st_area("wkb"), 6).alias("union_area"),
+                     F.col("n_parts").cast("long").alias("n_parts"))
+            .repartition(1).sortWithinPartitions("region_key"))
 
 
 # ---------------------------------------------------------------------------
@@ -1819,35 +1682,16 @@ def dissolve_union_by_key(spark, sf_dir):
 def line_interpolate_locate(spark, sf_dir):
     """line_interpolate_point (shapely/linear.py:26, normalized) and
     line_locate_point (:78, normalized) on a 2-segment polyline."""
-    params = _part_params(spark, sf_dir)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo.constructive import line_interpolate_point, line_locate_point
-        from .geo.geom import linestring, point
-
-        for pdf in batches:
-            ixs, iys, fracs = [], [], []
-            for gid, cx, cy in zip(pdf.gid, pdf.cx, pdf.cy):
-                line = linestring([(cx, cy), (cx + 3.0, cy), (cx + 3.0, cy + 4.0)])
-                f = (gid % 10) / 10.0
-                ip = line_interpolate_point(line, f, normalized=True)
-                ixs.append(ip.coords[0, 0])
-                iys.append(ip.coords[0, 1])
-                # locate the point (cx + min(3, gid%4), cy): lies on segment 1
-                px = cx + min(3.0, float(gid % 4))
-                fracs.append(line_locate_point(line, point(px, cy), normalized=True))
-            yield pd.DataFrame(
-                {
-                    "gid": pdf.gid,
-                    "ix": np.round(ixs, 6),
-                    "iy": np.round(iys, 6),
-                    "locate_frac": np.round(fracs, 6),
-                }
-            )
-
-    return params.mapInPandas(
-        gen, "gid long, ix double, iy double, locate_frac double"
-    ).repartition(1).sortWithinPartitions("gid")
+    cx, cy, gid = _cols("cx cy gid")
+    g = _part_params(spark, sf_dir).select(
+        "gid", _line(cx, cy, cx + 3.0, cy, cx + 3.0, cy + 4.0).alias("line"),
+        # the point (cx + min(3, gid % 4), cy) lies on the first segment
+        _point(cx + F.least(F.lit(3.0), (gid % 4).cast("double")), cy).alias("p"))
+    g = g.select("gid", "line", "p",
+                 G.st_lineinterpolatepoint("line", (gid % 10) / 10.0).alias("ip"))
+    return _by_gid(g, F.round(G.st_x("ip"), 6).alias("ix"),
+                   F.round(G.st_y("ip"), 6).alias("iy"),
+                   F.round(G.st_linelocatepoint("line", "p"), 6).alias("locate_frac"))
 
 
 @q(
@@ -1862,24 +1706,12 @@ def point_on_surface_holed(spark, sf_dir):
     shapely/constructive.py:822): the representative point must fall in the
     interior and OUTSIDE the hole — verified by re-testing containment with
     the predicate kernel, so the oracle is the constant 1."""
-    params = _part_params(spark, sf_dir)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.constructive import point_on_surface
-        from .geo.geom import Geometry, POLYGON, box
-
-        for pdf in batches:
-            ok = []
-            for cx, cy, r in zip(pdf.cx, pdf.cy, pdf.r):
-                outer = box(cx - 2 * r, cy - 2 * r, cx + 2 * r, cy + 2 * r)
-                hole = box(cx - r, cy - r, cx + r, cy + r)
-                holed = Geometry(POLYGON, rings=[outer.rings[0], hole.rings[0][::-1]])
-                p = point_on_surface(holed)
-                ok.append(1 if K.contains(holed, p) else 0)
-            yield pd.DataFrame({"gid": pdf.gid, "inside": pd.Series(ok, dtype="int32")})
-
-    return params.mapInPandas(gen, "gid long, inside int").repartition(1).sortWithinPartitions("gid")
+    cx, cy, r = _cols("cx cy r")
+    holed = _geom(f"POLYGON (({_xys(5)}), ({_xys(5)}))",
+                  *_box_xy(cx - 2 * r, cy - 2 * r, cx + 2 * r, cy + 2 * r),
+                  *_box_xy(cx - r, cy - r, cx + r, cy + r, reverse=True))
+    h = _part_params(spark, sf_dir).select("gid", holed.alias("h"))
+    return _by_gid(h, G.st_contains("h", G.st_pointonsurface("h")).cast("int").alias("inside"))
 
 
 # ---------------------------------------------------------------------------
@@ -1904,20 +1736,8 @@ def explode_coordinates_ngon(spark, sf_dir):
     zero, so sum(x) = n·cx + (closing vertex cx + r), sum(y) = (n+1)·cy."""
     from .spark.parts import get_coordinates_df
 
-    params = _part_params(spark, sf_dir)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo.geom import regular_ngon
-        from .geo.wkb import to_wkb
-
-        for pdf in batches:
-            wkbs = [
-                to_wkb(regular_ngon(cx, cy, r, int(n)))
-                for cx, cy, r, n in zip(pdf.cx, pdf.cy, pdf.r, pdf.n)
-            ]
-            yield pd.DataFrame({"gid": pdf.gid, "wkb": wkbs})
-
-    geoms = params.mapInPandas(gen, "gid long, wkb binary")
+    cx, cy, r, n = _cols("cx cy r n")
+    geoms = _part_params(spark, sf_dir).select("gid", _ngon(cx, cy, r, n).alias("wkb"))
     coords = get_coordinates_df(geoms, "gid")
     return (
         coords.groupBy("gid")
@@ -1951,32 +1771,14 @@ def explode_multipolygon_parts(spark, sf_dir):
         (k % 3 + 1).cast("int").alias("nparts"),
         (1.0 + k % 4).cast("double").alias("w"),
     ))
+    w = F.col("w")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo.geom import box, multipolygon
-        from .geo.wkb import to_wkb
+    def part(j):
+        return _text(f"(({_xys(5)}))", *_box_xy(10.0 * j, 0.0, 10.0 * j + w, 1.0))
 
-        for pdf in batches:
-            wkbs = [
-                to_wkb(multipolygon([box(10.0 * j, 0.0, 10.0 * j + w, 1.0)
-                                     for j in range(int(np_))]))
-                for np_, w in zip(pdf.nparts, pdf.w)
-            ]
-            yield pd.DataFrame({"gid": pdf.gid, "wkb": wkbs})
-
-    geoms = params.mapInPandas(gen, "gid long, wkb binary")
-    parts = get_parts_df(geoms, "gid")
-
-    def area_gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.wkb import from_wkb
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"gid": pdf.gid, "area": [K.area(from_wkb(bytes(b))) for b in pdf.wkb]}
-            )
-
-    areas = parts.mapInPandas(area_gen, "gid long, area double")
+    geoms = params.select("gid", _wkt_geom(
+        "MULTIPOLYGON (", _joined(F.col("nparts"), part), ")").alias("wkb"))
+    areas = get_parts_df(geoms, "gid").select("gid", G.st_area("wkb").alias("area"))
     return (
         areas.groupBy("gid")
         .agg(F.count("*").cast("int").alias("n_parts"),
@@ -2012,26 +1814,10 @@ def collect_multipoint_bounds(spark, sf_dir):
         ((F.col("o_orderkey") * 37 % 360000) / 1000.0 - 180.0).alias("x"),
         (((F.col("o_custkey") * 7919 + F.col("o_orderkey")) % 170000) / 1000.0 - 85.0).alias("y"),
     )
-    mp = collect_multipoints(pts, "grp")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.wkb import from_wkb
-
-        for pdf in batches:
-            rows = []
-            for grp, b, n in zip(pdf.grp, pdf.wkb, pdf.n_points):
-                g = from_wkb(bytes(b))
-                bb = K.bounds(g)
-                rows.append((grp, int(n), round(bb[0], 6), round(bb[1], 6),
-                             round(bb[2], 6), round(bb[3], 6)))
-            yield pd.DataFrame(
-                rows, columns=["grp", "n_points", "xmin", "ymin", "xmax", "ymax"]
-            ).astype({"n_points": "int32"})
-
-    return mp.mapInPandas(
-        gen, "grp bigint, n_points int, xmin double, ymin double, xmax double, ymax double"
-    ).repartition(1).sortWithinPartitions("grp")
+    b = collect_multipoints(pts, "grp").select("grp", "n_points", G.st_bounds("wkb").alias("b"))
+    return (b.select("grp", "n_points", *(F.round(F.col("b")[i], 6).alias(c) for i, c in enumerate(
+                ("xmin", "ymin", "xmax", "ymax"))))
+            .repartition(1).sortWithinPartitions("grp"))
 
 
 # ---------------------------------------------------------------------------
@@ -2051,24 +1837,12 @@ def collect_multipoint_bounds(spark, sf_dir):
 def delaunay_hull_area(spark, sf_dir):
     """Delaunay triangulation of an n-gon's vertices + centroid: the
     triangle areas sum to the hull (= n-gon) area, closed-form
-    n·r²·sin(2π/n)/2. Exercises Bowyer–Watson under mapInPandas."""
-    params = _part_params(spark, sf_dir)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.geom import Geometry, MULTIPOINT, point, regular_ngon
-        from .geo.triangulate import delaunay_triangles
-
-        for pdf in batches:
-            vals = []
-            for cx, cy, r, n in zip(pdf.cx, pdf.cy, pdf.r, pdf.n):
-                ngon = regular_ngon(cx, cy, r, int(n))
-                pts = [point(x, y) for x, y in ngon.rings[0][:-1]] + [point(cx, cy)]
-                dt = delaunay_triangles(Geometry(MULTIPOINT, parts=pts))
-                vals.append(sum(K.area(t) for t in dt.parts))
-            yield pd.DataFrame({"gid": pdf.gid, "hull_area": np.round(vals, 6)})
-
-    return params.mapInPandas(gen, "gid long, hull_area double").repartition(1).sortWithinPartitions("gid")
+    n·r²·sin(2π/n)/2. Exercises Bowyer–Watson through st_delaunaytriangles."""
+    cx, cy, r, n = _cols("cx cy r n")
+    pts = _wkt_geom("MULTIPOINT (", _joined(n, _ngon_vertex(cx, cy, r, n)), ", ",
+                    _xy(cx, cy), ")")
+    return _by_gid(_part_params(spark, sf_dir),
+                   F.round(G.st_area(G.st_delaunaytriangles(pts)), 6).alias("hull_area"))
 
 
 @q(
@@ -2137,16 +1911,8 @@ def minimum_clearance_box(spark, sf_dir):
         (2 + k % 5).cast("double").alias("w"),
         (1 + k % 7).cast("double").alias("h"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo.constructive import minimum_clearance
-        from .geo.geom import box
-
-        for pdf in batches:
-            vals = [minimum_clearance(box(0, 0, w, h)) for w, h in zip(pdf.w, pdf.h)]
-            yield pd.DataFrame({"gid": pdf.gid, "clearance": np.round(vals, 6)})
-
-    return params.mapInPandas(gen, "gid long, clearance double").repartition(1).sortWithinPartitions("gid")
+    w, h = _cols("w h")
+    return _by_gid(params, F.round(G.st_minimumclearance(_box(0.0, 0.0, w, h)), 6).alias("clearance"))
 
 
 @q(
@@ -2170,21 +1936,10 @@ def shortest_line_gap(spark, sf_dir):
         (k % 4).cast("double").alias("gx"),
         (k % 3).cast("double").alias("gy"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.constructive import shortest_line
-        from .geo.geom import box
-
-        for pdf in batches:
-            vals = []
-            for gx, gy in zip(pdf.gx, pdf.gy):
-                a = box(0.0, 0.0, 1.0, 1.0)
-                b = box(2.0 + gx, 1.0 + gy, 3.0 + gx, 2.0 + gy)
-                vals.append(K.length(shortest_line(a, b)))
-            yield pd.DataFrame({"gid": pdf.gid, "gap": np.round(vals, 6)})
-
-    return params.mapInPandas(gen, "gid long, gap double").repartition(1).sortWithinPartitions("gid")
+    gx, gy = _cols("gx gy")
+    line = G.st_shortestline(_box(0.0, 0.0, 1.0, 1.0),
+                             _box(2.0 + gx, 1.0 + gy, 3.0 + gx, 2.0 + gy))
+    return _by_gid(params, F.round(G.st_length(line), 6).alias("gap"))
 
 
 @q(
@@ -2209,20 +1964,9 @@ def buffer_line_capsule_area(spark, sf_dir):
         ((1 + k % 4) / 2.0).alias("d"),
         (5.0 + k % 7).cast("double").alias("L"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.constructive import buffer
-        from .geo.geom import linestring
-
-        for pdf in batches:
-            vals = [
-                K.area(buffer(linestring([(0.0, 0.0), (L, 0.0)]), d, 8))
-                for d, L in zip(pdf.d, pdf.L)
-            ]
-            yield pd.DataFrame({"gid": pdf.gid, "buf_area": np.round(vals, 6)})
-
-    return params.mapInPandas(gen, "gid long, buf_area double").repartition(1).sortWithinPartitions("gid")
+    d, L = _cols("d L")
+    buf = G.st_buffer(_line(0.0, 0.0, L, 0.0), d, F.lit(8))
+    return _by_gid(params, F.round(G.st_area(buf), 6).alias("buf_area"))
 
 
 @q(
@@ -2266,19 +2010,8 @@ def spatial_join_geom_boxes(spark, sf_dir):
         (2 + k % 5).cast("double").alias("w"),
         (2 + k % 4).cast("double").alias("h"),
     ))
-
-    def lgen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo.geom import box
-        from .geo.wkb import to_wkb
-
-        for pdf in batches:
-            wkbs = [
-                to_wkb(box(x, y, x + w, y + h))
-                for x, y, w, h in zip(pdf.x1, pdf.y1, pdf.w, pdf.h)
-            ]
-            yield pd.DataFrame({"gid": pdf.gid, "wkb": wkbs})
-
-    left = lparams.mapInPandas(lgen, "gid long, wkb binary")
+    x1, y1, w, h = _cols("x1 y1 w h")
+    left = lparams.select("gid", _box(x1, y1, x1 + w, y1 + h).alias("wkb"))
     right = _nation_regions_df(spark, sf_dir)
     return (
         spatial_join_geom(left, right, predicate="intersects", left_id="gid")
@@ -2321,21 +2054,9 @@ def crosses_segments(spark, sf_dir):
         (k % 13).cast("double").alias("cx"), (k % 11 + 3).cast("double").alias("cy"),
         (k % 13 + 5).cast("double").alias("dx"), (k % 11).cast("double").alias("dy"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.geom import linestring
-
-        for pdf in batches:
-            vals = [
-                bool(K.crosses(linestring([(ax, ay), (bx, by)]),
-                               linestring([(cx, cy), (dx, dy)])))
-                for ax, ay, bx, by, cx, cy, dx, dy in zip(
-                    pdf.ax, pdf.ay, pdf.bx, pdf.by, pdf.cx, pdf.cy, pdf.dx, pdf.dy)
-            ]
-            yield pd.DataFrame({"gid": pdf.gid, "crosses": pd.Series(vals, dtype="bool")})
-
-    return params.mapInPandas(gen, "gid long, crosses boolean").repartition(1).sortWithinPartitions("gid")
+    ax, ay, bx, by, cx, cy, dx, dy = _cols("ax ay bx by cx cy dx dy")
+    return _by_gid(params, G.st_crosses(_line(ax, ay, bx, by),
+                                        _line(cx, cy, dx, dy)).alias("crosses"))
 
 
 # ---- round-2 widening: oracle rows for ops previously test-only -----------
@@ -2366,19 +2087,9 @@ def hausdorff_boxes(spark, sf_dir):
         ((k % 3) * 0.5).alias("dx"),
         ((k % 2) * 0.5).alias("dy"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.geom import box
-
-        for pdf in batches:
-            vals = [
-                K.hausdorff_distance(box(0, 0, w, h), box(dx, dy, dx + w, dy + h))
-                for w, h, dx, dy in zip(pdf.w, pdf.h, pdf.dx, pdf.dy)
-            ]
-            yield pd.DataFrame({"gid": pdf.gid, "hd": np.round(vals, 6)})
-
-    return params.mapInPandas(gen, "gid long, hd double").repartition(1).sortWithinPartitions("gid")
+    w, h, dx, dy = _cols("w h dx dy")
+    hd = G.st_hausdorffdistance(_box(0.0, 0.0, w, h), _box(dx, dy, dx + w, dy + h))
+    return _by_gid(params, F.round(hd, 6).alias("hd"))
 
 
 @q(
@@ -2402,20 +2113,9 @@ def frechet_segments(spark, sf_dir):
         (1 + k % 4).cast("double").alias("e0"),
         (1 + k % 3).cast("double").alias("e1"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.geom import linestring
-
-        for pdf in batches:
-            vals = [
-                K.frechet_distance(linestring([(0.0, 0.0), (L, 0.0)]),
-                                   linestring([(0.0, e0), (L, e1)]))
-                for L, e0, e1 in zip(pdf.L, pdf.e0, pdf.e1)
-            ]
-            yield pd.DataFrame({"gid": pdf.gid, "fd": np.round(vals, 6)})
-
-    return params.mapInPandas(gen, "gid long, fd double").repartition(1).sortWithinPartitions("gid")
+    L, e0, e1 = _cols("L e0 e1")
+    fd = G.st_frechetdistance(_line(0.0, 0.0, L, 0.0), _line(0.0, e0, L, e1))
+    return _by_gid(params, F.round(fd, 6).alias("fd"))
 
 
 @q(
@@ -2438,20 +2138,9 @@ def make_valid_bowtie_area(spark, sf_dir):
         (2 + k % 6).cast("double").alias("w"),
         (1 + k % 5).cast("double").alias("h"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo import overlay as O
-        from .geo.geom import Geometry, POLYGON
-
-        for pdf in batches:
-            vals = []
-            for w, h in zip(pdf.w, pdf.h):
-                ring = np.array([[0, 0], [w, h], [w, 0], [0, h], [0, 0]], dtype=float)
-                vals.append(K.area(O.make_valid(Geometry(POLYGON, rings=[ring]))))
-            yield pd.DataFrame({"gid": pdf.gid, "fixed_area": np.round(vals, 6)})
-
-    return params.mapInPandas(gen, "gid long, fixed_area double").repartition(1).sortWithinPartitions("gid")
+    w, h = _cols("w h")
+    bowtie = _geom(f"POLYGON (({_xys(5)}))", 0.0, 0.0, w, h, w, 0.0, 0.0, h, 0.0, 0.0)
+    return _by_gid(params, F.round(G.st_area(G.st_makevalid(bowtie)), 6).alias("fixed_area"))
 
 
 @q(
@@ -2475,22 +2164,12 @@ def oriented_envelope_area(spark, sf_dir):
         (1 + k % 4).cast("double").alias("h"),
         ((k % 12) * math.pi / 12.0).alias("theta"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.constructive import oriented_envelope
-        from .geo.geom import Geometry, POLYGON
-
-        for pdf in batches:
-            vals = []
-            for w, h, th in zip(pdf.w, pdf.h, pdf.theta):
-                c, s = math.cos(th), math.sin(th)
-                base = np.array([[0, 0], [w, 0], [w, h], [0, h], [0, 0]], dtype=float)
-                rot = base @ np.array([[c, s], [-s, c]])
-                vals.append(K.area(oriented_envelope(Geometry(POLYGON, rings=[rot]))))
-            yield pd.DataFrame({"gid": pdf.gid, "env_area": np.round(vals, 6)})
-
-    return params.mapInPandas(gen, "gid long, env_area double").repartition(1).sortWithinPartitions("gid")
+    w, h, theta = _cols("w h theta")
+    c, s = F.cos(theta), F.sin(theta)
+    rot = [v for x, y in ((0.0, 0.0), (w, 0.0), (w, h), (0.0, h), (0.0, 0.0))
+           for v in (x * c - y * s, x * s + y * c)]
+    env = G.st_orientedenvelope(_geom(f"POLYGON (({_xys(5)}))", *rot))
+    return _by_gid(params, F.round(G.st_area(env), 6).alias("env_area"))
 
 
 @q(
@@ -2509,20 +2188,9 @@ def segmentize_diag_npoints(spark, sf_dir):
     p = _t(spark, sf_dir, "part")
     k = F.col("p_partkey")
     params = _spread(p.select(k.alias("gid"), (1 + k % 9).cast("double").alias("a")))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo.constructive import segmentize
-        from .geo.geom import linestring
-
-        for pdf in batches:
-            vals = [
-                len(segmentize(linestring([(0.0, 0.0), (a, a)]), 1.0).coords)
-                for a in pdf.a
-            ]
-            yield pd.DataFrame({"gid": pdf.gid,
-                                "npoints": pd.Series(vals, dtype="int64")})
-
-    return params.mapInPandas(gen, "gid long, npoints long").repartition(1).sortWithinPartitions("gid")
+    a = F.col("a")
+    seg = G.st_segmentize(_line(0.0, 0.0, a, a), F.lit(1.0))
+    return _by_gid(params, G.st_npoints(seg).cast("long").alias("npoints"))
 
 
 @q(
@@ -2546,19 +2214,9 @@ def snap_point_tol(spark, sf_dir):
         (k % 30).cast("double").alias("y"),
         F.when(k % 2 == 0, 0.2).otherwise(0.9).alias("delta"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo.constructive import snap
-        from .geo.geom import point
-
-        for pdf in batches:
-            vals = [
-                float(snap(point(x + d, y), point(x, y), 0.5).coords[0, 0])
-                for x, y, d in zip(pdf.x, pdf.y, pdf.delta)
-            ]
-            yield pd.DataFrame({"gid": pdf.gid, "sx": np.round(vals, 6)})
-
-    return params.mapInPandas(gen, "gid long, sx double").repartition(1).sortWithinPartitions("gid")
+    x, y, delta = _cols("x y delta")
+    snapped = G.st_snap(_point(x + delta, y), _point(x, y), F.lit(0.5))
+    return _by_gid(params, F.round(G.st_x(snapped), 6).alias("sx"))
 
 
 @q(
@@ -2578,26 +2236,13 @@ def line_merge_chain(spark, sf_dir):
     k = F.col("p_partkey")
     params = _spread(p.select(k.alias("gid"), (3 + k % 5).cast("int").alias("n")))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.constructive import line_merge
-        from .geo.geom import linestring, multilinestring
+    def seg(i):  # (i, i % 2) → (i + 1, (i + 1) % 2)
+        return _text("(%s %s, %s %s)", i, i % 2, i + 1, (i + 1) % 2)
 
-        for pdf in batches:
-            nps, lens = [], []
-            for n in pdf.n:
-                pts = [(float(i), float(i % 2)) for i in range(int(n) + 1)]
-                parts = [linestring([pts[i], pts[i + 1]]) for i in range(int(n))]
-                merged = line_merge(multilinestring(parts))
-                nps.append(len(merged.coords))
-                lens.append(K.length(merged))
-            yield pd.DataFrame({
-                "gid": pdf.gid,
-                "npoints": pd.Series(nps, dtype="int64"),
-                "total_len": np.round(lens, 6),
-            })
-
-    return params.mapInPandas(gen, "gid long, npoints long, total_len double").repartition(1).sortWithinPartitions("gid")
+    merged = params.select("gid", G.st_linemerge(_wkt_geom(
+        "MULTILINESTRING (", _joined(F.col("n"), seg), ")")).alias("m"))
+    return _by_gid(merged, G.st_npoints("m").cast("long").alias("npoints"),
+                   F.round(G.st_length("m"), 6).alias("total_len"))
 
 
 @q(
@@ -2625,31 +2270,15 @@ def split_segment_pieces(spark, sf_dir):
         (5 + k % 7).cast("double").alias("L"),
         (1 + k % 4).cast("double").alias("c"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.overlay import split
-        from .geo.geom import linestring
-
-        for pdf in batches:
-            n_out, mn, mx = [], [], []
-            for L, c in zip(pdf.L, pdf.c):
-                res = split(linestring([(0.0, 0.0), (L, 0.0)]),
-                            linestring([(c, -1.0), (c, 1.0)]))
-                lens = sorted(K.length(g) for g in (res.parts or []))
-                n_out.append(len(lens))
-                mn.append(lens[0] if lens else 0.0)
-                mx.append(lens[-1] if lens else 0.0)
-            yield pd.DataFrame({
-                "gid": pdf.gid,
-                "n_pieces": pd.Series(n_out, dtype="int32"),
-                "min_len": np.round(mn, 6),
-                "max_len": np.round(mx, 6),
-            })
-
-    return params.mapInPandas(
-        gen, "gid long, n_pieces int, min_len double, max_len double"
-    ).repartition(1).sortWithinPartitions("gid")
+    L, c = _cols("L c")
+    pieces = params.select("gid", G.st_split(
+        _line(0.0, 0.0, L, 0.0), _line(c, -1.0, c, 1.0)).alias("s"))
+    lens = pieces.select("gid", G.st_numgeometries("s").alias("n"), *(
+        G.st_length(G.st_geometryn("s", F.lit(i))).alias(f"l{i}") for i in (0, 1)))
+    l0, l1 = _cols("l0 l1")
+    return _by_gid(lens, F.col("n").alias("n_pieces"),
+                   F.round(F.least(l0, l1), 6).alias("min_len"),
+                   F.round(F.greatest(l0, l1), 6).alias("max_len"))
 
 
 @q(
@@ -2673,21 +2302,9 @@ def substring_frac_length(spark, sf_dir):
         (0.1 * (k % 4).cast("double")).alias("s"),
         (0.5 + 0.1 * (k % 5).cast("double")).alias("e"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.constructive import substring
-        from .geo.geom import linestring
-
-        for pdf in batches:
-            vals = [
-                K.length(substring(linestring([(0.0, 0.0), (L, 0.0)]), s, e,
-                                   normalized=True))
-                for L, s, e in zip(pdf.L, pdf.s, pdf.e)
-            ]
-            yield pd.DataFrame({"gid": pdf.gid, "sub_len": np.round(vals, 6)})
-
-    return params.mapInPandas(gen, "gid long, sub_len double").repartition(1).sortWithinPartitions("gid")
+    L, s, e = _cols("L s e")
+    sub = G.st_substring(_line(0.0, 0.0, L, 0.0), s, e)
+    return _by_gid(params, F.round(G.st_length(sub), 6).alias("sub_len"))
 
 
 @q(
@@ -2702,18 +2319,9 @@ def geojson_roundtrip_area(spark, sf_dir):
     """to_geojson → from_geojson (reference: shapely/io.py:77,342)
     roundtrip preserves the n-gon exactly (17 sig digits); area keeps the
     closed form n·r²·sin(2π/n)/2."""
-    def fn(pdf):
-        from .geo import kernels as K
-        from .geo.geojson import from_geojson, to_geojson
-        from .geo.geom import regular_ngon
-
-        areas = [
-            K.area(from_geojson(to_geojson(regular_ngon(cx, cy, r, int(n)))))
-            for cx, cy, r, n in zip(pdf.cx, pdf.cy, pdf.r, pdf.n)
-        ]
-        return pd.DataFrame({"gid": pdf.gid, "area": np.round(areas, 4)})
-
-    return _geo_kernel_query(spark, sf_dir, "gid long, area double", fn).repartition(1).sortWithinPartitions("gid")
+    cx, cy, r, n = _cols("cx cy r n")
+    back = G.st_geomfromgeojson(G.st_asgeojson(_ngon(cx, cy, r, n)))
+    return _by_gid(_part_params(spark, sf_dir), F.round(G.st_area(back), 4).alias("area"))
 
 
 @q(
@@ -2727,17 +2335,9 @@ def geojson_roundtrip_area(spark, sf_dir):
 def mbc_radius_ngon(spark, sf_dir):
     """minimum_bounding_radius (reference: shapely/measurement.py:326) of a
     regular n-gon is its circumradius r."""
-    def fn(pdf):
-        from .geo.kernels import minimum_bounding_radius
-        from .geo.geom import regular_ngon
-
-        vals = [
-            minimum_bounding_radius(regular_ngon(cx, cy, r, int(n)))
-            for cx, cy, r, n in zip(pdf.cx, pdf.cy, pdf.r, pdf.n)
-        ]
-        return pd.DataFrame({"gid": pdf.gid, "radius": np.round(vals, 6)})
-
-    return _geo_kernel_query(spark, sf_dir, "gid long, radius double", fn).repartition(1).sortWithinPartitions("gid")
+    cx, cy, r, n = _cols("cx cy r n")
+    return _by_gid(_part_params(spark, sf_dir), F.round(
+        G.st_minimumboundingradius(_ngon(cx, cy, r, n)), 6).alias("radius"))
 
 
 @q(
@@ -2761,39 +2361,14 @@ def touches_overlaps_boxes(spark, sf_dir):
         (2 + k % 4).cast("double").alias("h"),
         (k % 3).cast("int").alias("regime"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.geom import box
-
-        # 60 distinct (w, h, regime) combos across 200k rows: evaluate the
-        # kernels once per combo and map back (memo lives for the task)
-        memo: dict[tuple, tuple[bool, bool]] = {}
-
-        def val(key: tuple) -> tuple[bool, bool]:
-            if key not in memo:
-                w, h, reg = key
-                a = box(0, 0, w, h)
-                if reg == 0:
-                    b = box(w, 0, 2 * w, h)          # shares the x=w edge
-                elif reg == 1:
-                    b = box(w + 1, 0, 2 * w + 1, h)  # unit gap
-                else:
-                    b = box(w - 1, 0, 2 * w - 1, h)  # partial overlap
-                memo[key] = (bool(K.touches(a, b)), bool(K.overlaps(a, b)))
-            return memo[key]
-
-        for pdf in batches:
-            pairs = [val(key) for key in zip(pdf.w, pdf.h, pdf.regime)]
-            yield pd.DataFrame({
-                "gid": pdf.gid,
-                "touches": pd.Series([t for t, _ in pairs], dtype="bool"),
-                "overlaps": pd.Series([o for _, o in pairs], dtype="bool"),
-            })
-
-    return params.mapInPandas(
-        gen, "gid long, touches boolean, overlaps boolean"
-    ).repartition(1).sortWithinPartitions("gid")
+    w, h, regime = _cols("w h regime")
+    # b = a shifted right by w + off: shares the x=w edge (off 0), leaves a
+    # unit gap (1) or overlaps a unit strip (-1)
+    off = F.when(regime == 0, 0.0).when(regime == 1, 1.0).otherwise(-1.0)
+    ab = params.select("gid", _box(0.0, 0.0, w, h).alias("a"),
+                       _box(w + off, 0.0, 2 * w + off, h).alias("b"))
+    return _by_gid(ab, G.st_touches("a", "b").alias("touches"),
+                   G.st_overlaps("a", "b").alias("overlaps"))
 
 
 @q(
@@ -2817,28 +2392,9 @@ def inscribed_circle_box(spark, sf_dir):
         k.alias("gid"),
         (2 + k % 5).cast("double").alias("w"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.geom import box
-        from .geo.triangulate import maximum_inscribed_circle
-
-        # only 5 distinct widths across 200k rows: evaluate the quadtree
-        # once per distinct param and map back (memo lives for the task)
-        memo: dict[float, float] = {}
-
-        def val(w: float) -> float:
-            if w not in memo:
-                memo[w] = float(np.round(
-                    K.length(maximum_inscribed_circle(box(0, 0, w, w), tolerance=1e-4)), 2
-                ))
-            return memo[w]
-
-        for pdf in batches:
-            yield pd.DataFrame({"gid": pdf.gid,
-                                "radius": pdf.w.map(val).astype("float64")})
-
-    return params.mapInPandas(gen, "gid long, radius double").repartition(1).sortWithinPartitions("gid")
+    w = F.col("w")
+    mic = G.st_maximuminscribedcircle(_box(0.0, 0.0, w, w))
+    return _by_gid(params, F.round(G.st_length(mic), 2).alias("radius"))
 
 
 @q(
@@ -2900,20 +2456,9 @@ def skew_area_box(spark, sf_dir):
         (1 + k % 4).cast("double").alias("h"),
         (5.0 + (k % 7).cast("double") * 10.0).alias("xs_deg"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.constructive import skew
-        from .geo.geom import box
-
-        for pdf in batches:
-            vals = [
-                K.area(skew(box(0, 0, w, h), xs=xs))
-                for w, h, xs in zip(pdf.w, pdf.h, pdf.xs_deg)
-            ]
-            yield pd.DataFrame({"gid": pdf.gid, "area": np.round(vals, 6)})
-
-    return params.mapInPandas(gen, "gid long, area double").repartition(1).sortWithinPartitions("gid")
+    w, h, xs = _cols("w h xs_deg")
+    skewed = G.st_skew(_box(0.0, 0.0, w, h), xs, F.lit(0.0))
+    return _by_gid(params, F.round(G.st_area(skewed), 6).alias("area"))
 
 
 @q(
@@ -2933,26 +2478,11 @@ def offset_curve_lengths(spark, sf_dir):
     p = _t(spark, sf_dir, "part")
     k = F.col("p_partkey")
     params = _spread(p.select(k.alias("gid"), (2 + k % 5).cast("double").alias("w")))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.constructive import offset_curve
-        from .geo.geom import Geometry, LINESTRING
-
-        for pdf in batches:
-            il, ol = [], []
-            for w in pdf.w:
-                line = Geometry(LINESTRING, coords=np.array(
-                    [[0.0, 0.0], [w, 0.0], [w, w]]))
-                il.append(K.length(offset_curve(line, 1.0)))
-                ol.append(K.length(offset_curve(line, -1.0)))
-            yield pd.DataFrame({"gid": pdf.gid,
-                                "inner_len": np.round(il, 6),
-                                "outer_len": np.round(ol, 6)})
-
-    return params.mapInPandas(
-        gen, "gid long, inner_len double, outer_len double"
-    ).repartition(1).sortWithinPartitions("gid")
+    w = F.col("w")
+    path = params.select("gid", _line(0.0, 0.0, w, 0.0, w, w).alias("l"))
+    return _by_gid(path, *(
+        F.round(G.st_length(G.st_offsetcurve("l", F.lit(d))), 6).alias(name)
+        for d, name in ((1.0, "inner_len"), (-1.0, "outer_len"))))
 
 
 @q(
@@ -2998,20 +2528,9 @@ def buffer_polygon_ring_area(spark, sf_dir):
         ((key % 300) - 150 + 0.5).cast("double").alias("cx"),
         ((key % 160) - 80 + 0.25).cast("double").alias("cy"),
     ))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.constructive import buffer
-        from .geo.geom import regular_ngon
-
-        for pdf in batches:
-            areas = [
-                K.area(buffer(regular_ngon(cx, cy, r, int(n)), d, quad_segs=8))
-                for n, r, d, cx, cy in zip(pdf.n, pdf.r, pdf.d, pdf.cx, pdf.cy)
-            ]
-            yield pd.DataFrame({"gid": pdf.gid, "buf_area": np.round(areas, 4)})
-
-    return params.mapInPandas(gen, "gid long, buf_area double").repartition(1).sortWithinPartitions("gid")
+    cx, cy, r, n, d = _cols("cx cy r n d")
+    buf = G.st_buffer(_ngon(cx, cy, r, n), d, F.lit(8))
+    return _by_gid(params, F.round(G.st_area(buf), 4).alias("buf_area"))
 
 
 @q(
@@ -3035,43 +2554,20 @@ def boundary_by_type(spark, sf_dir):
     n·2r·sin(π/n)), and an open segment (boundary is the endpoint
     MULTIPOINT; x-sum = 2cx + r). Per CLAUDE.md gate-per-path rule each
     dispatch branch is pinned by its own closed form."""
-    params = _part_params(spark, sf_dir)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo import kernels as K
-        from .geo.constructive import boundary
-        from .geo.geom import MULTILINESTRING, MULTIPOINT, box, linestring, polygon, regular_ngon
-
-        for pdf in batches:
-            holed_len, ngon_len, xsum, nparts = [], [], [], []
-            for cx, cy, r, n in zip(pdf.cx, pdf.cy, pdf.r, pdf.n):
-                h = r / 2.0
-                holed = polygon(
-                    [[cx - r, cy - r], [cx + r, cy - r], [cx + r, cy + r],
-                     [cx - r, cy + r], [cx - r, cy - r]],
-                    [[[cx - h, cy - h], [cx + h, cy - h], [cx + h, cy + h],
-                      [cx - h, cy + h], [cx - h, cy - h]]])
-                hb = boundary(holed)
-                assert hb.type_id == MULTILINESTRING
-                holed_len.append(K.length(hb))
-                nparts.append(len(hb.parts))
-                ngon_len.append(K.length(boundary(regular_ngon(cx, cy, r, int(n)))))
-                sb = boundary(linestring([[cx, cy], [cx + r, cy]]))
-                assert sb.type_id == MULTIPOINT
-                xsum.append(sum(p.coords[0][0] for p in sb.parts))
-            yield pd.DataFrame({
-                "gid": pdf.gid,
-                "holed_len": np.round(holed_len, 4),
-                "ngon_len": np.round(ngon_len, 4),
-                "seg_endpoint_xsum": np.round(xsum, 4),
-                "holed_parts": np.asarray(nparts, dtype=np.int32),
-            })
-
-    return params.mapInPandas(
-        gen,
-        "gid long, holed_len double, ngon_len double,"
-        " seg_endpoint_xsum double, holed_parts int",
-    ).repartition(1).sortWithinPartitions("gid")
+    cx, cy, r, n = _cols("cx cy r n")
+    h = r / 2.0
+    holed = _geom(f"POLYGON (({_xys(5)}), ({_xys(5)}))",
+                  cx - r, cy - r, cx + r, cy - r, cx + r, cy + r, cx - r, cy + r, cx - r, cy - r,
+                  cx - h, cy - h, cx + h, cy - h, cx + h, cy + h, cx - h, cy + h, cx - h, cy - h)
+    b = _part_params(spark, sf_dir).select(
+        "gid", G.st_boundary(holed).alias("hb"),
+        G.st_length(G.st_boundary(_ngon(cx, cy, r, n))).alias("ngon_len"),
+        G.st_boundary(_line(cx, cy, cx + r, cy)).alias("sb"))
+    end_x = [G.st_x(G.st_geometryn("sb", F.lit(i))) for i in (0, 1)]
+    return _by_gid(b, F.round(G.st_length("hb"), 4).alias("holed_len"),
+                   F.round("ngon_len", 4).alias("ngon_len"),
+                   F.round(end_x[0] + end_x[1], 4).alias("seg_endpoint_xsum"),
+                   G.st_numgeometries("hb").alias("holed_parts"))
 
 
 @q(
@@ -3093,41 +2589,12 @@ def xyzm_line_interpolate(spark, sf_dir):
     linearly (reference shapely/linear.py:26 / tests/test_linear.py).
     Line (cx,cy,0)→(cx+3r,cy+4r,10r) has XY length 5r, so the point at
     normalized t is (cx+3rt, cy+4rt, 10rt)."""
-    params = _part_params(spark, sf_dir).select(
-        "gid",
-        F.format_string(
-            "LINESTRING Z (%s %s 0, %s %s %s)",
-            F.col("cx").cast("string"), F.col("cy").cast("string"),
-            (F.col("cx") + 3 * F.col("r")).cast("string"),
-            (F.col("cy") + 4 * F.col("r")).cast("string"),
-            (10 * F.col("r")).cast("string"),
-        ).alias("wkt"),
-        (((F.col("gid") % 5) + 1) / 10.0).alias("t"),
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo.constructive import line_interpolate_point
-        from .geo.wkb import from_wkb, to_wkb
-        from .geo.wkt import from_wkt
-
-        for pdf in batches:
-            px, py, pz = [], [], []
-            for wkt_s, t in zip(pdf.wkt, pdf.t):
-                g = from_wkb(to_wkb(from_wkt(wkt_s)))
-                assert g.has_z
-                p = line_interpolate_point(g, float(t), normalized=True)
-                assert p.has_z
-                px.append(p.coords[0][0])
-                py.append(p.coords[0][1])
-                pz.append(p.coords[0][2])
-            yield pd.DataFrame({
-                "gid": pdf.gid, "px": np.round(px, 4),
-                "py": np.round(py, 4), "pz": np.round(pz, 4),
-            })
-
-    return params.mapInPandas(
-        gen, "gid long, px double, py double, pz double"
-    ).repartition(1).sortWithinPartitions("gid")
+    cx, cy, r, gid = _cols("cx cy r gid")
+    line = _geom("LINESTRING Z (%s %s 0, %s %s %s)", cx, cy, cx + 3 * r, cy + 4 * r, 10 * r)
+    ip = _part_params(spark, sf_dir).select("gid", G.st_lineinterpolatepoint(
+        line, ((gid % 5) + 1) / 10.0).alias("p"))
+    return _by_gid(ip, *(F.round(f("p"), 4).alias(c) for f, c in (
+        (G.st_x, "px"), (G.st_y, "py"), (G.st_z, "pz"))))
 
 
 @q(
@@ -3162,50 +2629,28 @@ def spatial_join_ngon_pairs(spark, sf_dir):
         (5 + k % 5).cast("int").alias("n"),
         (0.2 * (k % 9)).cast("double").alias("ph"),
     ))
-
-    def lgen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .geo.geom import regular_ngon
-        from .geo.wkb import to_wkb
-
-        for pdf in batches:
-            wkbs = [
-                to_wkb(regular_ngon(cx, cy, r, int(n), ph))
-                for cx, cy, r, n, ph in zip(pdf.cx, pdf.cy, pdf.r, pdf.n, pdf.ph)
-            ]
-            yield pd.DataFrame({"gid": pdf.gid, "wkb": wkbs})
-
-    left = lparams.mapInPandas(lgen, "gid long, wkb binary")
-
-    from .geo.geom import regular_ngon as _ngon
-    from .geo.wkb import to_wkb as _to_wkb
-
-    rows = [
-        (r, _to_wkb(_ngon((r % 5) * 24 - 48, (r // 5) * 24 - 48,
-                          5 + r % 3, 7 + r % 4, 0.1 * r)))
-        for r in range(25)
-    ]
-    right = spark.createDataFrame(rows, "region_id long, wkb binary")
+    left = lparams.select("gid", _ngon(*_cols("cx cy r n ph")).alias("wkb"))
+    i = F.col("id")
+    right = spark.range(25).select(i.alias("region_id"), _ngon(
+        (i % 5) * 24 - 48, F.expr("id div 5") * 24 - 48, 5 + i % 3, 7 + i % 4,
+        0.1 * i).alias("wkb"))
     return (
         spatial_join_geom(left, right, predicate="intersects", left_id="gid")
         .repartition(1).sortWithinPartitions("gid", "region_id")
     )
 
 
-def _diamond_wkb(cx: float, cy: float, r: float) -> bytes:
+def _diamond(cx, cy, r) -> Column:
     """Axis-diagonal square (L1 ball) with EXACT integer-fp vertices —
     non-rectangular on purpose (the JVM rect closed form must not fire)
     and corner coordinates that coincide bit-exactly across neighbors
     (trig-built n-gons put cos(π/2)≈6e-17 jitter on the corners, which
     would turn exact corner touches into near-misses)."""
-    from .geo.geom import POLYGON, Geometry
-    from .geo.wkb import to_wkb
-
-    ring = np.array([[cx + r, cy], [cx, cy + r], [cx - r, cy],
-                     [cx, cy - r], [cx + r, cy]], dtype=np.float64)
-    return to_wkb(Geometry(POLYGON, rings=[ring]))
+    return _geom(f"POLYGON (({_xys(5)}))",
+                 cx + r, cy, cx, cy + r, cx - r, cy, cx, cy - r, cx + r, cy)
 
 
-def _diamond_lattice_left(spark, sf_dir, r_expr):
+def _lattice_diamonds(spark, sf_dir, r_expr) -> DataFrame:
     """part → left layer: one diamond per p_partkey centered EXACTLY on
     its 5×5 lattice point (spacing 24), half-diagonal r_expr(gid)."""
     p = _t(spark, sf_dir, "part")
@@ -3216,16 +2661,15 @@ def _diamond_lattice_left(spark, sf_dir, r_expr):
         ((F.floor(k / 5) % 5) * 24 - 48).cast("double").alias("cy"),
         r_expr(k).cast("double").alias("r"),
     ))
+    return params.select("gid", _diamond(*_cols("cx cy r")).alias("wkb"))
 
-    def lgen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "gid": pdf.gid,
-                "wkb": [_diamond_wkb(cx, cy, r)
-                        for cx, cy, r in zip(pdf.cx, pdf.cy, pdf.r)],
-            })
 
-    return params.mapInPandas(lgen, "gid long, wkb binary")
+def _region_diamonds(spark, dx, dy, r) -> DataFrame:
+    """The 25-region right layer: region i's diamond, half-diagonal r, at
+    its lattice point (i % 5, i div 5) shifted by (dx, dy)."""
+    i = F.col("id")
+    return spark.range(25).select(i.alias("region_id"), _diamond(
+        (i % 5) * 24 - 48 + dx, F.expr("id div 5") * 24 - 48 + dy, r).alias("wkb"))
 
 
 @q(
@@ -3254,10 +2698,8 @@ def spatial_join_touches_pairs(spark, sf_dir):
     Reference semantics: shapely/predicates.py:968 touches."""
     from .spark.join import spatial_join_geom
 
-    left = _diamond_lattice_left(spark, sf_dir, lambda k: F.lit(12))
-    rows = [(r, _diamond_wkb((r % 5) * 24 - 48, (r // 5) * 24 - 48, 12.0))
-            for r in range(25)]
-    right = spark.createDataFrame(rows, "region_id long, wkb binary")
+    left = _lattice_diamonds(spark, sf_dir, lambda k: F.lit(12))
+    right = _region_diamonds(spark, 0, 0, 12.0)
     # res 5: these lattice diamonds are continent-sized (24 degrees) so
     # the default sub-degree cover would fan each left into ~2400 cells;
     # the coarser cover keeps the candidate relation proportional to the
@@ -3288,11 +2730,8 @@ def spatial_join_contains_pairs(spark, sf_dir):
     pairs. Reference semantics: shapely/predicates.py:556 contains."""
     from .spark.join import spatial_join_geom
 
-    left = _diamond_lattice_left(spark, sf_dir, lambda k: 8 + k % 3)
-    rows = [(r, _diamond_wkb((r % 5) * 24 - 48 + 3.0,
-                             (r // 5) * 24 - 48 + 1.0, 2.0))
-            for r in range(25)]
-    right = spark.createDataFrame(rows, "region_id long, wkb binary")
+    left = _lattice_diamonds(spark, sf_dir, lambda k: 8 + k % 3)
+    right = _region_diamonds(spark, 3.0, 1.0, 2.0)
     return (
         spatial_join_geom(left, right, predicate="contains", left_id="gid",
                           res=5)

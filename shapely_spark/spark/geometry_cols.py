@@ -22,8 +22,9 @@ Its batch evaluator, `_evaluate`, owns everything but the kernel:
 - a kernel that raises NotImplementedError gives NULL;
 - geometry results are encoded as WKB.
 
-Row entries run their scalar kernel once per non-NULL row. Batch entries
-take the whole non-NULL part of the batch: the nine predicates decide all
+Row entries run their scalar kernel once per distinct non-NULL argument
+tuple of the batch. Batch entries (non-geometry results only) take the
+whole non-NULL part of the batch: the nine predicates decide all
 its pairs in one pair_predicate call through join._pair_refine, the
 function the geometry join's refine calls.
 """
@@ -56,9 +57,9 @@ class Entry(NamedTuple):
     # one letter per argument: "g" a WKB geometry, "v" a value, "n" a
     # value passed on to the kernel even when NULL
     args: str
-    # False: kernel(*row) per non-NULL row, geometries parsed. True:
-    # kernel(*columns) once over the non-NULL rows, a geometry column as
-    # (codes, distinct geometries) and a value column as an array
+    # False: kernel(*row) per distinct non-NULL row, geometries parsed.
+    # True: kernel(*columns) once over the non-NULL rows, a geometry column
+    # as (codes, distinct geometries) and a value column as an array
     batch: bool = False
 
 
@@ -110,6 +111,8 @@ REGISTRY: dict[str, Entry] = {
     "st_bounds": Entry(lambda g: K.bounds(g).tolist(), "array<double>", "g"),
     "st_distance": Entry(K.distance, "double", "gg"),
     "st_hausdorffdistance": Entry(K.hausdorff_distance, "double", "gg"),
+    "st_frechetdistance": Entry(K.frechet_distance, "double", "gg"),
+    "st_minimumboundingradius": Entry(K.minimum_bounding_radius, "double", "g"),
     "st_minimumclearance": Entry(C.minimum_clearance, "double", "g"),
     # ---- predicates (reference: shapely/predicates.py) -----------------------
     **{f"st_{p}": _pred(p) for p in (
@@ -147,6 +150,8 @@ REGISTRY: dict[str, Entry] = {
     "st_clip_by_rect": Entry(lambda g, *r: C.clip_by_rect(g, *map(float, r)), "binary", "gvvvv"),
     "st_segmentize": Entry(lambda g, m: C.segmentize(g, float(m)), "binary", "gv"),
     "st_snap": Entry(lambda g, h, t: C.snap(g, h, float(t)), "binary", "ggv"),
+    # reference: shapely/affinity.py:204 (degrees, about the bbox center)
+    "st_skew": Entry(lambda g, xs, ys: C.skew(g, float(xs), float(ys)), "binary", "gvv"),
     # ---- overlay and validity (reference: shapely/set_operations.py,
     # validation.py:30 make_valid, constructive.py:654 build_area, :884
     # polygonize per row, :850 node, :431 concave_hull, ops.py:311 split,
@@ -177,12 +182,20 @@ REGISTRY: dict[str, Entry] = {
     "st_numgeometries": Entry(get_num_geometries, "int", "g"),
     "st_geometryn": Entry(lambda g, i: g.get_geometry(int(i)), "binary", "gv"),
     "st_geometrytype": Entry(lambda g: TYPE_NAMES[g.type_id], "string", "g"),
-    # ---- linear referencing (reference: shapely/linear.py:26, :78) -----------
+    # ---- linear referencing (reference: shapely/linear.py:26, :78,
+    # ops.py:553 substring), all normalized to the line's length -------------
     "st_lineinterpolatepoint": Entry(lambda g, t: C.line_interpolate_point(
         g, float(t), normalized=True), "binary", "gv"),
     "st_linelocatepoint": Entry(lambda g, p: C.line_locate_point(
         g, p, normalized=True), "double", "gg"),
+    "st_substring": Entry(lambda g, s, e: C.substring(
+        g, float(s), float(e), normalized=True), "binary", "gvv"),
 }
+
+
+def _bits(a: np.ndarray) -> np.ndarray:
+    """A value column as hashable keys that tell -0.0 from 0.0."""
+    return a.view(f"i{a.itemsize}") if a.dtype.kind == "f" else a
 
 
 def _evaluate(e: Entry, cols) -> pd.Series:
@@ -207,15 +220,18 @@ def _evaluate(e: Entry, cols) -> pd.Series:
     if e.batch:
         if len(live):
             out[live] = e.kernel(*args)
-    else:
-        rows = [[a[1][c] for c in a[0]] if k == "g" else a for a, k in zip(args, e.args)]
-        for i, row in zip(live, zip(*rows)):
+        return pd.Series(out)
+    memo: dict = {}
+    keys = zip(*(a[0] if k == "g" else _bits(a) for a, k in zip(args, e.args)))
+    for j, key in enumerate(keys):
+        if key not in memo:
+            row = [a[1][a[0][j]] if k == "g" else a[j] for a, k in zip(args, e.args)]
             try:
-                out[i] = e.kernel(*row)
+                r = e.kernel(*row)
             except NotImplementedError:
-                pass
-    if e.type == "binary":
-        out = [None if r is None else to_wkb(r) for r in out]
+                r = None
+            memo[key] = to_wkb(r) if e.type == "binary" and r is not None else r
+        out[live[j]] = memo[key]
     return pd.Series(out)
 
 

@@ -318,6 +318,23 @@ def test_segmentize():
     assert K.length(s) == 10.0
 
 
+@pytest.mark.parametrize("max_len", [0, -1])
+def test_segmentize_rejects_a_non_positive_length(max_len):
+    # reference: the length "must be greater than 0"; 0 divided by zero and
+    # -1 returned the input unchanged
+    with pytest.raises(ValueError, match="max_segment_length"):
+        C.segmentize(linestring([(0, 0), (10, 0)]), max_len)
+
+
+@pytest.mark.parametrize("g", [box(0, 0, 3, 2), linestring([(0, 0), (4, 1), (4, 5)])],
+                         ids=["box", "line"])
+def test_buffer_quad_segs_zero_is_one(g):
+    # the polygon fast path divided by quad_segs; every path clamps to >= 1
+    zero, one = C.buffer(g, 0.5, quad_segs=0), C.buffer(g, 0.5, quad_segs=1)
+    assert K.equals(zero, one)
+    assert K.area(zero) == K.area(one)
+
+
 def test_orient_and_reverse():
     cw = polygon([(0, 0), (0, 2), (2, 2), (2, 0), (0, 0)])
     assert K.signed_ring_area(cw.rings[0]) < 0

@@ -224,3 +224,49 @@ def test_sql_predicates_equal_scalar_kernels(register, spark):
     bad = [(r.a, r.b, p) for r in rows for p in _PREDICATES
            if r[p] is None or r[p] != bool(getattr(K, p)(geoms[r.a], geoms[r.b]))]
     assert not bad, bad
+
+
+def _wkbs(*wkts):
+    import pandas as pd
+
+    from shapely_spark.geo.wkb import to_wkb
+    from shapely_spark.geo.wkt import from_wkt
+
+    return pd.Series([None if w is None else to_wkb(from_wkt(w)) for w in wkts])
+
+
+def test_maximum_inscribed_circle_of_empty_and_non_polygon():
+    """EMPTY in gives LINESTRING EMPTY (it raised IndexError); a POINT
+    raises a ValueError that names the polygon requirement (it raised
+    'argmin of an empty sequence')."""
+    from shapely_spark.geo.wkb import from_wkb
+    from shapely_spark.geo.wkt import to_wkt
+    from shapely_spark.spark.geometry_cols import REGISTRY, _evaluate
+
+    e = REGISTRY["st_maximuminscribedcircle"]
+    out = _evaluate(e, [_wkbs("POLYGON EMPTY", None, "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")])
+    assert to_wkt(from_wkb(out[0])) == "LINESTRING EMPTY"
+    assert out[1] is None
+    assert to_wkt(from_wkb(out[2])) == "LINESTRING (2 2, 2 0)"
+    with pytest.raises(ValueError, match="requires a polygon"):
+        _evaluate(e, [_wkbs("POINT (1 1)")])
+
+
+def test_row_kernel_runs_once_per_distinct_argument_tuple():
+    """A row entry's kernel runs once per distinct (geometry, value) tuple
+    of a batch; -0.0 and 0.0 are distinct values."""
+    import pandas as pd
+
+    from shapely_spark.spark.geometry_cols import Entry, _evaluate
+
+    calls = []
+
+    def kernel(g, d):
+        calls.append((g.type_id, d))
+        return math.copysign(1.0, d)
+
+    e = Entry(kernel, "double", "gv")
+    out = _evaluate(e, [_wkbs("POINT (1 1)", "POINT (1 1)", "POINT (1 1)", "POINT (2 2)", None),
+                        pd.Series([0.0, 0.0, -0.0, 0.0, 0.0])])
+    assert list(out[:4]) == [1.0, 1.0, -1.0, 1.0] and out[4] is None
+    assert len(calls) == 3
