@@ -95,9 +95,9 @@ def run_headline(spark, n_pages: int, n_regions: int, times: dict, extras: dict,
         return with_geo(spark.read.parquet(path)).select("url", "lat", "lon", "cell_id")
 
     regions = synth_regions(n_regions, seed=42)
-    # covers_df fans out via mapInPandas over THIS layer: a handful of
-    # partitions suffices at 1000 regions, but the 100k-region regime needs
-    # the cover generation spread across every core
+    # the broadcast join collects this layer and covers it on the driver;
+    # the partitions spread only the collect (and, in the shuffle mode,
+    # covers_df's mapInPandas fan-out) across the cores
     rparts = max(4, min(spark.sparkContext.defaultParallelism, n_regions // 250))
     rdf = regions_df(spark, regions).repartition(rparts).cache()
     rdf.count()

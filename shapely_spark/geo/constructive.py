@@ -129,18 +129,25 @@ def convex_hull(geom: Geometry | None) -> Geometry | None:
         return linestring(pts)
     order = np.lexsort((pts[:, 1], pts[:, 0]))
     p = pts[order]
+    xs, ys = p[:, 0].tolist(), p[:, 1].tolist()
 
-    def half(points):
-        h: list[np.ndarray] = []
-        for pt in points:
-            while len(h) >= 2 and np.cross(h[-1] - h[-2], pt - h[-2]) <= 0:
+    def half(idx):
+        # monotone chain; the turn test is np.cross's 2-D product
+        # a0·b1 − a1·b0 in its operation order, on Python floats
+        h: list[int] = []
+        for i in idx:
+            x, y = xs[i], ys[i]
+            while len(h) >= 2:
+                ax, ay = xs[h[-2]], ys[h[-2]]
+                if (xs[h[-1]] - ax) * (y - ay) - (ys[h[-1]] - ay) * (x - ax) > 0:
+                    break
                 h.pop()
-            h.append(pt)
+            h.append(i)
         return h
 
-    lower = half(p)
-    upper = half(p[::-1])
-    ring = np.array(lower[:-1] + upper[:-1])
+    lower = half(range(len(p)))
+    upper = half(range(len(p) - 1, -1, -1))
+    ring = p[lower[:-1] + upper[:-1]]
     if len(ring) < 3:  # collinear
         return linestring(np.array([p[0], p[-1]]))
     ring = np.vstack([ring, ring[:1]])

@@ -59,7 +59,7 @@ import numpy as np
 from . import kernels as K
 from .geom import GEOMETRYCOLLECTION, POLYGON
 from .kernels import (
-    _NO_SEGS, BOUNDARY, EXTERIOR, INTERIOR, RaggedPolygonLayer, _chunks, _dim,
+    _NO_CROSS, _NO_SEGS, BOUNDARY, EXTERIOR, INTERIOR, RaggedPolygonLayer, _chunks, _dim,
     _edges, _expand, _hole_rings, _holes_clear_of, _owner_segments, _points_of,
     _ragged, _ragged_bounds, _segments_meet,
 )
@@ -95,7 +95,7 @@ class _Pool:
         self.gc = np.zeros(n, dtype=bool)
         self.holed = np.zeros(n, dtype=bool)
         verts, edges = [np.zeros((0, 2))] * n, [np.zeros((0, 4))] * n
-        self._segs = [(_NO_SEGS, _NO_SEGS)] * n
+        self._segs = [(_NO_SEGS, _NO_CROSS)] * n
         for k, g in enumerate(geoms):
             if g is None or g.is_empty:
                 continue
@@ -106,7 +106,7 @@ class _Pool:
             # the layer's boundary segments of a polygon or a line are its
             # edges; a point's are zero-length and a collection's areal only
             self._segs[k] = _owner_segments(g)
-            edges[k] = (self._segs[k][1] if self.dim[k] >= 1 and not self.gc[k]
+            edges[k] = (self._segs[k][0] if self.dim[k] >= 1 and not self.gc[k]
                         else _edges(g))
         self.vstart, self.vxy = _ragged(verts, 2)
         self.estart, self.eseg = _ragged(edges, 4)

@@ -262,11 +262,12 @@ def _expand(start: np.ndarray, ids: np.ndarray):
     if total == 0:
         return np.zeros(0, np.int64), np.zeros(0, np.int64)
     row = np.repeat(np.arange(len(ids), dtype=np.int64), cnt)
-    offs = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-    return row, start[ids][row] + offs
+    return row, np.arange(total, dtype=np.int64) + np.repeat(
+        start[ids] - (np.cumsum(cnt) - cnt), cnt)
 
 
 _NO_SEGS = np.zeros((0, 4))
+_NO_CROSS = np.zeros(0, dtype=bool)
 
 
 def _ragged(arrays: list, width: int):
@@ -305,15 +306,16 @@ class RaggedPolygonLayer:
     NumPy ops over the expanded (candidate, segment) pairs, in chunks of
     bounded size — identical FLOPs, no per-region dispatch.
 
-    Owners of any type:
+    One segment array holds every owner's boundary; a per-segment flag
+    marks the ones the ray-cast counts. Owners of any type:
     - areal (Polygon, MultiPolygon; a GeometryCollection counts its
-      polygon members only, the cell cover's rule) give crossing and
-      boundary segments. Semantics are bit-identical to
+      polygon members only, the cell cover's rule) give ring edges, all
+      flagged crossing. Semantics are bit-identical to
       points_in_rings_class: half-open even-odd crossing parity XOR-ed
       across rings == parity of total crossings over all non-degenerate
       ring edges; the on-segment boundary test overrides; degenerate
-      rings (<4 pts) give boundary segments only;
-    - lineal owners give boundary segments only, and puntal owners
+      rings (<4 pts) give unflagged (boundary-only) edges;
+    - lineal owners give unflagged edges, and puntal owners unflagged
       zero-length segments, so at eps=0 their on-segment test is exact
       vertex equality. They answer closure membership only: BOUNDARY
       means on the geometry, never INTERIOR.
@@ -321,8 +323,7 @@ class RaggedPolygonLayer:
     Built ONCE per layer (the broadcast join builds it driver side and
     ships plain arrays): workers pay zero per-owner construction."""
 
-    __slots__ = ("n", "bbox", "cross_start", "cross_seg",
-                 "bnd_start", "bnd_seg")
+    __slots__ = ("n", "bbox", "start", "seg", "cross", "ylo", "yhi")
 
     def __init__(self, geoms_by_id: dict[int, "Geometry"]):
         """Owner ids index the layer's arrays: each must be >= 0, and ids
@@ -331,51 +332,83 @@ class RaggedPolygonLayer:
             raise ValueError(f"RaggedPolygonLayer owner ids must be >= 0, "
                              f"got {min(geoms_by_id)}")
         n = (max(geoms_by_id) + 1) if geoms_by_id else 0
-        segs = [(_NO_SEGS, _NO_SEGS)] * n
+        segs = [(_NO_SEGS, _NO_CROSS)] * n
         for rid, g in geoms_by_id.items():
             segs[rid] = _owner_segments(g)
         self._build(segs)
 
     @classmethod
     def from_owner_segments(cls, segs: list) -> "RaggedPolygonLayer":
-        """The layer of owners 0..n-1 from each one's (crossing, boundary)
-        segment arrays, as _owner_segments gives them."""
+        """The layer of owners 0..n-1 from each one's (segments, crossing
+        flags) arrays, as _owner_segments gives them."""
         layer = cls.__new__(cls)
         layer._build(segs)
         return layer
 
     def _build(self, segs: list) -> None:
         self.n = n = len(segs)
-        self.cross_start, self.cross_seg = _ragged([c for c, _ in segs], 4)
-        self.bnd_start, self.bnd_seg = _ragged([b for _, b in segs], 4)
-        # per-owner bbox of its boundary segments (every crossing segment
-        # is one too); owners without segments keep NaN: nothing is on them
+        self.start, self.seg = _ragged([s for s, _ in segs], 4)
+        self.cross = np.concatenate([c for _, c in segs] + [_NO_CROSS])
+        # each segment's y-range: the pass gates on it before gathering x
+        self.ylo = np.minimum(self.seg[:, 1], self.seg[:, 3])
+        self.yhi = np.maximum(self.seg[:, 1], self.seg[:, 3])
+        # per-owner bbox of its segments; owners without segments keep
+        # NaN: nothing is on them
         self.bbox = np.full((n, 4), np.nan)
-        has = np.diff(self.bnd_start) > 0
-        if len(self.bnd_seg):
-            s, at = self.bnd_seg, self.bnd_start[:-1][has]
+        has = np.diff(self.start) > 0
+        if len(self.seg):
+            s, at = self.seg, self.start[:-1][has]
             self.bbox[has, :2] = np.minimum.reduceat(np.minimum(s[:, :2], s[:, 2:]), at)
             self.bbox[has, 2:] = np.maximum.reduceat(np.maximum(s[:, :2], s[:, 2:]), at)
 
+    def _pass(self, rids, px, py, eps, boundary: bool):
+        """One (point, segment) pass: (odd, on) with odd[i] the half-open
+        crossing parity of point i vs owner rids[i] (bit for bit as
+        points_in_rings_class) and, if `boundary`, on[i] whether the point
+        lies on one of its owner's segments within eps. The expansion runs
+        in _chunks-bounded slices and gathers only y first: a pair whose
+        segment y-range, widened by eps, misses the point can neither
+        cross its ray nor hold it, so x is gathered for the rest only."""
+        odd = np.zeros(len(rids), dtype=bool)
+        on = np.zeros(len(rids), dtype=bool)
+        count = self.start[1:] - self.start[:-1]
+        for s in _chunks(count[rids]):
+            k = count[rids[s]]
+            end = np.cumsum(k)
+            if not end[-1]:
+                continue
+            # pair i is (point row, segment e[i]); only y is gathered here
+            e = np.arange(end[-1]) + np.repeat(self.start[rids[s]] - (end - k), k)
+            y, lo, hi = np.repeat(py[s], k), self.ylo[e], self.yhi[e]
+            if boundary:
+                ep = np.repeat(eps[s], k) if eps.ndim else eps
+                i = np.flatnonzero((lo - ep <= y) & (y <= hi + ep))
+                if eps.ndim:
+                    ep = ep[i]
+            else:
+                i = np.flatnonzero((lo <= y) & (y < hi))
+            row, e, y = np.searchsorted(end, i, "right"), e[i], y[i]
+            x = px[s][row]
+            x1, y1, x2, y2 = self.seg[e].T
+            c = self.cross[e] & ((y1 > y) != (y2 > y))
+            hit = x[c] < x1[c] + (y[c] - y1[c]) * (x2[c] - x1[c]) / (y2[c] - y1[c])
+            odd[s] = np.bincount(row[c][hit], minlength=len(k)) % 2 == 1
+            if boundary:
+                on[s] = np.bincount(row[_on_segment(x, y, x1, y1, x2, y2, ep)],
+                                    minlength=len(k)) > 0
+        return odd, on
+
     def odd_crossings(self, rids, px, py) -> np.ndarray:
         """Half-open even-odd ray-cast parity of point i vs region rids[i]
-        (True = odd crossing count), bit for bit as points_in_rings_class;
-        the (point, edge) expansion runs in _chunks-bounded slices."""
-        odd = np.zeros(len(rids), dtype=bool)
-        for s in _chunks((self.cross_start[1:] - self.cross_start[:-1])[rids]):
-            p, e = _expand(self.cross_start, rids[s])
-            seg, y = self.cross_seg[e], py[s][p]
-            c = (seg[:, 1] > y) != (seg[:, 3] > y)
-            p, (x1, y1, x2, y2), y = p[c], seg[c].T, y[c]
-            hit = px[s][p] < x1 + (y - y1) * (x2 - x1) / (y2 - y1)
-            odd[s] = np.bincount(p[hit], minlength=s.stop - s.start) % 2 == 1
-        return odd
+        (True = odd crossing count), bit for bit as points_in_rings_class."""
+        return self._pass(np.asarray(rids, dtype=np.int64), np.asarray(px, dtype=np.float64),
+                          np.asarray(py, dtype=np.float64), None, False)[0]
 
     def classify_many(self, rids, px, py, eps: float = 0.0) -> np.ndarray:
         """0 exterior / 1 boundary / 2 interior of point i vs owner
         rids[i] — one vectorized pass for the whole heterogeneous batch.
-        `eps` (a scalar, or one per point) loosens the on-boundary test
-        exactly as points_on_segments(eps=) (fp-noded probes need it);
+        `eps` (>= 0, a scalar or one per point) loosens the on-boundary
+        test exactly as points_on_segments(eps=) (fp-noded probes need it);
         points outside their owner's bbox widened by eps are EXTERIOR
         unexamined, and so is every point of an owner not in the layer."""
         rids = np.asarray(rids, dtype=np.int64)
@@ -392,32 +425,25 @@ class RaggedPolygonLayer:
         if not live.any():
             return out
         li = np.nonzero(live)[0]
-        r, x, y = rids[li], px[li], py[li]
-        if eps.ndim:
-            eps = eps[li]
-        out[li[self.odd_crossings(r, x, y)]] = INTERIOR
-        for s in _chunks((self.bnd_start[1:] - self.bnd_start[:-1])[r]):
-            row, eidx = _expand(self.bnd_start, r[s])
-            x1, y1, x2, y2 = self.bnd_seg[eidx].T
-            onb = _on_segment(x[s][row], y[s][row], x1, y1, x2, y2,
-                              eps[s][row] if eps.ndim else eps)
-            out[li[s][row[onb]]] = BOUNDARY
+        odd, on = self._pass(rids[li], px[li], py[li], eps[li] if eps.ndim else eps, True)
+        out[li[odd]] = INTERIOR
+        out[li[on]] = BOUNDARY
         return out
 
 
 def _owner_segments(g) -> tuple:
-    """(crossing, boundary) segments of g for RaggedPolygonLayer: polygon
-    rings give both (rings of <4 points boundary only), lineal edges and
-    puntal zero-length segments boundary only. Members of a multi or a
-    collection count only if areal."""
+    """(segments, crossing flags) of g for RaggedPolygonLayer: polygon
+    rings give crossing segments (rings of <4 points boundary-only ones),
+    lineal edges and puntal zero-length segments boundary-only ones.
+    Members of a multi or a collection count only if areal."""
+    segs: list[np.ndarray] = []
     cross: list[np.ndarray] = []
-    bnd: list[np.ndarray] = []
-    _append_segments(g, cross, bnd)
-    return (np.concatenate(cross) if cross else _NO_SEGS,
-            np.concatenate(bnd) if bnd else _NO_SEGS)
+    _append_segments(g, segs, cross)
+    return (np.concatenate(segs) if segs else _NO_SEGS,
+            np.concatenate(cross) if cross else _NO_CROSS)
 
 
-def _append_segments(g, cross: list, bnd: list, areal_only: bool = False) -> None:
+def _append_segments(g, segs: list, cross: list, areal_only: bool = False) -> None:
     if g is None or g.is_empty:
         return
     tid = g.type_id
@@ -425,20 +451,18 @@ def _append_segments(g, cross: list, bnd: list, areal_only: bool = False) -> Non
         for r in g.rings or []:
             c = np.asarray(r)[:, :2]
             if len(c) >= 2:
-                seg = np.column_stack([c[:-1], c[1:]])
-                bnd.append(seg)
-                if len(c) >= 4:
-                    cross.append(seg)
+                segs.append(np.column_stack([c[:-1], c[1:]]))
+                cross.append(np.full(len(c) - 1, len(c) >= 4))
     elif tid in (MULTIPOLYGON, GEOMETRYCOLLECTION):
         for p in g.parts or []:
-            _append_segments(p, cross, bnd, True)
+            _append_segments(p, segs, cross, True)
     elif areal_only:
         return
-    elif tid in (POINT, MULTIPOINT):
-        p = _points_of(g)
-        bnd.append(np.hstack([p, p]))
     else:
-        bnd.append(_edges(g))
+        seg = (np.hstack([_points_of(g)] * 2) if tid in (POINT, MULTIPOINT)
+               else _edges(g))
+        segs.append(seg)
+        cross.append(np.zeros(len(seg), dtype=bool))
 
 
 def _predicate_xy(geom: Geometry | None, x, y, predicate: str, scalar) -> np.ndarray:

@@ -187,14 +187,24 @@ def polygon_cover_batch(geoms, res: int = DEFAULT_RES):
       axes), so a cell strictly inside a hole is dropped.
     Both expansions run in bounded chunks: a continent-sized polygon never
     allocates a dense cells × edges matrix."""
-    n = grid_n(res)
-    w, h = 360.0 / n, 180.0 / n
-    # the layer takes owners of any type: hand it the polygonal ones only
-    # (of a collection it keeps the polygon members)
-    layer = RaggedPolygonLayer({
+    return layer_cover(areal_layer(geoms), res)
+
+
+def areal_layer(geoms) -> RaggedPolygonLayer:
+    """The point locator of geoms[i] as owner i, polygonal ones only (of
+    a collection it keeps the polygon members): the layer takes owners of
+    any type, and the cover covers areas."""
+    return RaggedPolygonLayer({
         i: g for i, g in enumerate(geoms) if g is not None
         and g.type_id in (POLYGON, MULTIPOLYGON, GEOMETRYCOLLECTION)})
-    n_bnd = layer.bnd_start[1:] - layer.bnd_start[:-1]
+
+
+def layer_cover(layer: RaggedPolygonLayer, res: int = DEFAULT_RES):
+    """polygon_cover_batch over an areal_layer: its owners' (cells, full,
+    owner) cover. A caller that also probes the layer builds it once."""
+    n = grid_n(res)
+    w, h = 360.0 / n, 180.0 / n
+    n_bnd = np.diff(layer.start)
     ok = ~np.isnan(layer.bbox[:, 0]) & (n_bnd > 0)
     live = np.flatnonzero(ok)
     ix0, iy0, ix1, iy1 = _grid_index(layer.bbox[live], n)
@@ -208,7 +218,7 @@ def polygon_cover_batch(geoms, res: int = DEFAULT_RES):
     corner = odd[np.stack([v, v + 1, v + nx[crow] + 1, v + nx[crow] + 2])]
     keep, full = corner.any(axis=0), corner.all(axis=0)
     # pass 2: (cell, edge) pairs over each edge's own cell range
-    seg = layer.bnd_seg[np.repeat(ok, n_bnd)]
+    seg = layer.seg[np.repeat(ok, n_bnd)]
     eg = np.repeat(np.arange(len(live), dtype=np.int64), n_bnd[live])
     eb = np.hstack([np.minimum(seg[:, :2], seg[:, 2:]), np.maximum(seg[:, :2], seg[:, 2:])])
     ex0, ey0, ex1, ey1 = _grid_index(eb, n)

@@ -5,28 +5,34 @@ semantics (shapely/strtree.py:229-266): output = every (point, region) pair
 satisfying the predicate; points with NULL coordinates drop out (the
 reference skips None/empty inputs, strtree.py:376).
 
-The Spark plan (SURVEY.md §3.3):
+The broadcast plan (SURVEY.md §3.3), the default:
 
-  regions ──mapInPandas──▶ covers(region_id, cell_id, full)          [fan-out]
-  pages ──withColumn(cell_id)──▶ ⋈ covers ON cell_id                 [equi-join,
-                                                                 broadcast or shuffle]
-  full cells ──▶ emit directly (cell entirely inside the polygon —
-                 the broadcast-side analog of prepared-containment)
-  partial cells ──▶ ONE pandas-UDF refine: one vectorized point-in-polygon
-                    ray-cast per Arrow batch (RaggedPolygonLayer.classify_many);
-                    the region layer is built ONCE driver-side and rides one
-                    sc.broadcast (the Spark analog of GEOS prepared
-                    geometries, shapely/creation.py:735) — the join itself
-                    moves only (region_id, cell_id, full) ints, never
-                    geometry bytes.
+  driver: regions ──collect──▶ parse ──▶ RaggedPolygonLayer + its cell
+          cover (one layer_cover pass), sorted by cell ──▶ ONE sc.broadcast
+  points ──ArrowEvalPython(match(lon, lat))──▶ explode ──▶ (point…, region_id)
 
-At scale: the covers table is tiny relative to pages (|regions| × avg-cover),
-so Catalyst picks a broadcast hash join — the pages side is never shuffled.
-For region layers too big to broadcast, pass broadcast=False: the covers
-table (with WKB inlined for partial cells) shuffles both sides on cell_id
-with AQE skew splitting; the refine builds the same RaggedPolygonLayer per
-Arrow batch from the batch's distinct partial-cell WKBs (parsed once per
-executor through _geom_from_wkb_cached).
+  match, per Arrow batch of points: cell_of (bit for bit as cell_sql) →
+  binary search of the sorted cover → full cells emit their region
+  directly (the broadcast-side analog of prepared containment; touches
+  never) → the partial ones get ONE classify_many ray-cast → an
+  array<long> of region ids per point.
+
+The region layer is built ONCE driver side (the Spark analog of GEOS
+prepared geometries, shapely/creation.py:735) and probed per batch, like
+knn._knn_broadcast: no join node, no exchange, no candidate rows. Only
+the points' (lon, lat) cross Arrow, once.
+
+For region layers too big to collect, pass broadcast=False: the shuffle
+plan
+
+  regions ──mapInPandas──▶ covers(region_id, cell_id, full, wkb)    [fan-out]
+  points ──withColumn(cell)──▶ ⋈ covers ON cell                   [shuffle]
+  full cells ──▶ emit; partial cells ──▶ ONE pandas-UDF refine per batch
+
+shuffles both sides on the cell with AQE skew splitting; the partial
+cells carry their region WKB, and the refine builds a RaggedPolygonLayer
+per Arrow batch from the batch's distinct WKBs (parsed once per executor
+through _geom_from_wkb_cached).
 
 Geometry×geometry (spatial_join_geom) is one plan in both modes:
 
@@ -47,10 +53,14 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index.cells import DEFAULT_RES, cover_bbox_batch, polygon_cover_batch
+from ..geo.kernels import RaggedPolygonLayer, _chunks, _expand
+from ..index.cells import (
+    DEFAULT_RES, areal_layer, cell_of, cover_bbox_batch, layer_cover, polygon_cover_batch,
+)
 from .columns import cell_col, cell_sql
 
 # Map engine predicates (evaluated as predicate(point, region), matching
@@ -63,23 +73,20 @@ _FULL_OK = {"intersects", "within", "covered_by"}  # full cell ⊂ interior
 
 # Join-time cover resolution, finer than the storage grid (DEFAULT_RES=9):
 # at res 11 (0.18°×0.09° cells) 54% of cover cells are fully interior for
-# the synthetic region mix vs 13% at res 9, so most candidate rows take the
-# full-cell fast path and never reach the Python refine. The cover stays
-# broadcastable (~60k rows per 1000 regions) and cheap to build: one
-# polygon_cover_batch pass per Arrow batch, no per-cell Python. Result set
-# is res-invariant — res only moves work between prune and refine.
+# the synthetic region mix vs 13% at res 9, so most candidates take the
+# full-cell fast path and are never classified. The cover stays small
+# (~60k rows per 1000 regions) and cheap to build: one layer_cover pass,
+# no per-cell Python. Result set is res-invariant — res only moves work
+# between prune and refine.
 JOIN_RES = DEFAULT_RES + 2
 
 
-def covers_df(regions: DataFrame, res: int = DEFAULT_RES, with_wkb: bool = False) -> DataFrame:
-    """regions(region_id, wkb) → exploded cell cover. Distributed fan-out
-    (mapInPandas): one polygon_cover_batch call per Arrow batch.
-    with_wkb=True inlines the region WKB on partial cells (shuffle-join
-    mode, where no driver broadcast of geometry exists)."""
-    schema = "region_id long, cell_id long, full boolean" + (
-        ", wkb binary" if with_wkb else ""
-    )
-
+def covers_df(regions: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
+    """regions(region_id, wkb) → exploded cell cover (region_id, cell_id,
+    full, wkb), the region WKB inlined on partial cells only: the shuffle
+    join's build side, where no driver broadcast of geometry exists.
+    Distributed fan-out (mapInPandas): one polygon_cover_batch call per
+    Arrow batch."""
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..geo.wkb import from_wkb
 
@@ -87,16 +94,15 @@ def covers_df(regions: DataFrame, res: int = DEFAULT_RES, with_wkb: bool = False
             wkbs = pdf["wkb"].to_numpy(dtype=object)
             cells, full, row = polygon_cover_batch(
                 [None if w is None else from_wkb(bytes(w)) for w in wkbs], res)
-            data = {
+            yield pd.DataFrame({
                 "region_id": pd.Series(pdf["region_id"].to_numpy()[row], dtype="int64"),
                 "cell_id": cells,
                 "full": full,
-            }
-            if with_wkb:
-                data["wkb"] = np.where(full, None, wkbs[row])
-            yield pd.DataFrame(data)
+                "wkb": np.where(full, None, wkbs[row]),
+            })
 
-    return regions.select("region_id", "wkb").mapInPandas(gen, schema)
+    return regions.select("region_id", "wkb").mapInPandas(
+        gen, "region_id long, cell_id long, full boolean, wkb binary")
 
 
 _GEOM_BY_WKB: dict[bytes, object] = {}
@@ -124,6 +130,72 @@ def _classify_to_bool(cls: np.ndarray, predicate: str) -> np.ndarray:
     return cls == 1  # touches
 
 
+def _region_index(regions: DataFrame, res: int) -> tuple:
+    """The broadcast join's region index, built driver side in one pass
+    over the collected rows: (ids, layer, cells, start, full, owner).
+    Owner k of the layer is the k-th row with a geometry and ids[k] its
+    region id, so an id of any value (negative, or 2^40) sizes nothing
+    and a repeated id matches each of its rows, as in the shuffle join.
+    The cover rows are sorted by cell: cell cells[j] owns rows
+    start[j]:start[j + 1] of (full, owner)."""
+    from ..geo.wkb import from_wkb
+
+    rows = [r for r in regions.select("region_id", "wkb").collect() if r.wkb is not None]
+    ids = np.array([r.region_id for r in rows], dtype=np.int64)
+    layer = areal_layer([from_wkb(bytes(r.wkb)) for r in rows])
+    cell, full, owner = layer_cover(layer, res)
+    order = np.argsort(cell, kind="stable")
+    cells, start = np.unique(cell[order], return_index=True)
+    return (ids, layer, cells, np.append(start, len(order)).astype(np.int64),
+            full[order], owner[order])
+
+
+def _match(index: tuple, predicate: str, res: int, x: np.ndarray, y: np.ndarray):
+    """(row, region id) of every pair of point (x[row], y[row]) and an
+    index region satisfying the predicate, in row order: the point's
+    cell_of cell finds its cover rows by binary search; a full cell is a
+    hit (never, for touches), and the partial ones are classified in one
+    classify_many call per _chunks-bounded slice, so a hot cell shared by
+    many regions cannot allocate without bound."""
+    ids, layer, cells, start, full, owner = index
+    if not len(cells):
+        return np.zeros(0, np.int64), np.zeros(0, np.int64)
+    pc = cell_of(y, x, res)
+    at = np.minimum(np.searchsorted(cells, pc), len(cells) - 1)
+    pts = np.flatnonzero(cells[at] == pc)
+    rows, regs = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    for s in _chunks((start[1:] - start[:-1])[at[pts]]):
+        row, j = _expand(start, at[pts[s]])
+        row = pts[s][row]
+        hit = full[j] if predicate in _FULL_OK else np.zeros(len(j), dtype=bool)
+        part = np.flatnonzero(~full[j])
+        hit[part] = _classify_to_bool(layer.classify_many(
+            owner[j[part]], x[row[part]], y[row[part]]), predicate)
+        rows.append(row[hit])
+        regs.append(ids[owner[j[hit]]])
+    return np.concatenate(rows), np.concatenate(regs)
+
+
+def _probe_join(points: DataFrame, regions: DataFrame, predicate: str, res: int,
+                lat_c: str, lon_c: str) -> DataFrame:
+    """broadcast=True: the region index rides one broadcast, and ONE Arrow
+    UDF over the points' (lon, lat) probes it per batch; explode turns its
+    per-point region-id lists into pairs. No join node, no cover job, no
+    exchange: the only rows that cross Arrow are the points, once."""
+    bc = points.sparkSession.sparkContext.broadcast(_region_index(regions, res))
+
+    @F.arrow_udf("array<long>")
+    def match(lon: pa.Array, lat: pa.Array) -> pa.Array:
+        row, reg = _match(bc.value, predicate, res,
+                          lon.to_numpy(zero_copy_only=False),
+                          lat.to_numpy(zero_copy_only=False))
+        offsets = np.searchsorted(row, np.arange(len(lon) + 1)).astype(np.int32)
+        return pa.ListArray.from_arrays(pa.array(offsets), pa.array(reg, pa.int64()))
+
+    return points.select(*[points[c] for c in points.columns], F.explode(match(
+        F.col(lon_c).cast("double"), F.col(lat_c).cast("double"))).alias("region_id"))
+
+
 def spatial_join(
     points: DataFrame,
     regions: DataFrame,
@@ -131,104 +203,61 @@ def spatial_join(
     res: int = JOIN_RES,
     broadcast: bool = True,
     point_cols: tuple[str, str] = ("lat", "lon"),
-    cell_col_name: str = "__jcell",
 ) -> DataFrame:
     """points(…, lat, lon) ⋈ regions(region_id, wkb) → all point columns +
-    region_id, one row per qualifying pair. The join key cell is always
-    derived fresh from (lat, lon) at `res` (pure Catalyst arithmetic) so it
-    never depends on — or clashes with — a storage-resolution cell column."""
+    region_id, one row per qualifying pair. A point's cell is always
+    derived fresh from (lat, lon) at `res`, so it never depends on — or
+    clashes with — a storage-resolution cell column."""
     if predicate not in _PREDICATES:
         raise ValueError(
             f"predicate {predicate!r} is not a valid option for point-in-region "
             f"spatial_join; valid: {sorted(_PREDICATES)}"
         )
     lat_c, lon_c = point_cols
-    drop_cell = cell_col_name not in points.columns
-    if drop_cell:
-        points = points.withColumn(cell_col_name, cell_col(lat_c, lon_c, res))
-
-    from ..geo.kernels import RaggedPolygonLayer
-
     if broadcast:
-        # the whole region layer rides ONE torrent broadcast as a prebuilt
-        # ragged edge structure (flat arrays + per-region offsets), built
-        # driver-side from the rows we must collect anyway: workers pay zero
-        # per-region construction, and the refine is one vectorized ray-cast
-        # over every (candidate, edge) pair — no per-region Python dispatch.
-        # The layer is keyed by dense code, so a region id of any value
-        # (negative, or 2^40) sizes nothing; the refine finds an id's code
-        # by binary search over the sorted ids.
-        from ..geo.wkb import from_wkb
+        return _probe_join(points, regions, predicate, res, lat_c, lon_c)
 
-        by_id = {int(r.region_id): r.wkb
-                 for r in regions.select("region_id", "wkb").collect()
-                 if r.wkb is not None}
-        ids = np.array(sorted(by_id), dtype=np.int64)
-        bc = points.sparkSession.sparkContext.broadcast((ids, RaggedPolygonLayer({
-            k: from_wkb(bytes(by_id[i])) for k, i in enumerate(ids.tolist())})))
-        covers = F.broadcast(covers_df(regions, res).select(
-            "region_id", F.col("cell_id").alias("__cover_cell"),
-            F.col("full").alias("__full")))
-        key_col = "region_id"
-
-        def layer_of(keys: pd.Series):
-            ids, layer = bc.value
-            return layer, np.searchsorted(ids, keys.to_numpy(dtype=np.int64))
-    else:
-        # no driver collect: partial cells carry their region WKB through
-        # the shuffle, and each Arrow batch builds a layer over its own
-        # distinct WKBs (each parsed once per executor)
-        covers = covers_df(regions, res, with_wkb=True).select(
-            "region_id", F.col("cell_id").alias("__cover_cell"),
-            F.col("full").alias("__full"), F.col("wkb").alias("__wkb"))
-        key_col = "__wkb"
-
-        def layer_of(keys: pd.Series):
-            codes, uniq = pd.factorize(keys)
-            return RaggedPolygonLayer({
-                i: _geom_from_wkb_cached(bytes(w)) for i, w in enumerate(uniq)
-            }), codes
+    # shuffle join on cell_id: no driver collect; partial cells carry their
+    # region WKB through the shuffle, and each Arrow batch builds a layer
+    # over its own distinct WKBs (each parsed once per executor)
+    covers = covers_df(regions, res).select(
+        "region_id", F.col("cell_id").alias("__cover_cell"),
+        F.col("full").alias("__full"), F.col("wkb").alias("__wkb"))
 
     @F.pandas_udf("boolean")
-    def refine(key: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        # full-cell rows arrive with key NULL-masked JVM-side (see the
+    def refine(wkb: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
+        # full-cell rows arrive with wkb NULL-masked JVM-side (see the
         # single-plan filter below): first move is one vectorized null
         # mask, so bypass rows cost no kernel work and no dispatch.
-        mask = key.notna().to_numpy()
-        out = np.zeros(len(key), dtype=bool)
+        mask = wkb.notna().to_numpy()
+        out = np.zeros(len(wkb), dtype=bool)
         if mask.any():
-            layer, rids = layer_of(key[mask])
+            codes, uniq = pd.factorize(wkb[mask])
+            layer = RaggedPolygonLayer({
+                i: _geom_from_wkb_cached(bytes(w)) for i, w in enumerate(uniq)})
             cls = layer.classify_many(
-                rids,
+                codes,
                 lon[mask].to_numpy(dtype=np.float64),
                 lat[mask].to_numpy(dtype=np.float64),
             )
             out[mask] = _classify_to_bool(cls, predicate)
         return pd.Series(out)
 
-    j = points.join(covers, points[cell_col_name] == covers["__cover_cell"], "inner")
-    refine_call = refine(
-        F.when(~F.col("__full"), F.col(key_col)), F.col(lon_c), F.col(lat_c))
+    pts = points.withColumn("__jcell", cell_col(lat_c, lon_c, res))
+    j = pts.join(covers, pts["__jcell"] == covers["__cover_cell"], "inner")
+    refine_call = refine(F.when(~F.col("__full"), F.col("__wkb")), F.col(lon_c), F.col(lat_c))
 
     # ONE plan, ONE pages scan. An earlier two-branch full/partial Union
     # re-ran the pages scan + geotag extraction once PER BRANCH (the
-    # "union branches re-execute their whole upstream" trap — at 100 TB
-    # that doubles the dominant scan cost). Instead full-cell rows bypass
-    # via `__full | refine(NULL-fed args)`: the refine UDF's first move is
-    # a vectorized null mask, so the bypass rows cost one Arrow transfer of
-    # nulls, and the upstream runs once.
-    #
-    # Tradeoff, named: Spark evaluates a Python UDF for every row of the
-    # filter's input (ExtractPythonUDFs hoists it out of the when-chain),
-    # so full-cell candidates now ride the Arrow transfer (~24 B/row of
-    # dense buffers even when null) where the old union emitted them pure
-    # JVM. That is the right trade at scale — the duplicated scan+extract
-    # the union paid grows with page SIZE (decode + regex over html),
-    # while the bypass traffic is a fixed few bytes per candidate pair —
-    # and it is why the benchmark leg got faster at every level while its
-    # parallel fraction (and thus the naive speedup ratio) compressed.
-    keep_cols = [c for c in points.columns if not (drop_cell and c == cell_col_name)]
-    out_cols = [points[c] for c in keep_cols] + [covers["region_id"]]
+    # "union branches re-execute their whole upstream" trap). Instead
+    # full-cell rows bypass via `__full | refine(NULL-fed args)`: the
+    # refine UDF's first move is a vectorized null mask, so the bypass
+    # rows cost one Arrow transfer of nulls, and the upstream runs once.
+    # Spark evaluates a Python UDF for every row of the filter's input
+    # (ExtractPythonUDFs hoists it out of the when-chain), so full-cell
+    # candidates ride the Arrow transfer (~24 B/row of dense buffers even
+    # when null); the broadcast mode has no candidate rows at all.
+    out_cols = [pts[c] for c in points.columns] + [covers["region_id"]]
     if predicate in _FULL_OK:
         cond = F.col("__full") | refine_call
     else:  # touches: full-interior cells can never touch the boundary

@@ -763,3 +763,100 @@ class TestArrangementRelate:
             fixed = make_valid(g)
             assert K.is_valid(fixed) and abs(K.area(fixed) - want) < 1e-12
         assert make_valid(corner) is corner
+
+
+class TestRaggedLayerPass:
+    """RaggedPolygonLayer's one y-gated (point, segment) pass against the
+    per-geometry references: points_in_rings_class for areal owners,
+    points_on_segments for closure membership."""
+
+    @staticmethod
+    def _probes(geoms, rng, n=60):
+        rids, px, py = [], [], []
+        for rid, g in geoms.items():
+            v = g.all_coords()[:, :2]
+            pts = np.concatenate([v, (v[:-1] + v[1:]) / 2, rng.uniform(-1.5, 5.5, (n, 2)),
+                                  rng.randint(-1, 6, (n, 2)).astype(float)])
+            rids += [rid] * len(pts)
+            px.append(pts[:, 0])
+            py.append(pts[:, 1])
+        return np.array(rids), np.concatenate(px), np.concatenate(py)
+
+    def test_valid_ring_mixed_with_degenerate_ring(self):
+        """A degenerate (< 4 point) ring is boundary only: its edges hold
+        points but never flip the crossing parity."""
+        from shapely_spark.geo.kernels import (
+            RaggedPolygonLayer, _rings_of, points_in_rings_class,
+        )
+
+        shell = np.array([(0, 0), (4, 0), (4, 4), (0, 4), (0, 0)], dtype=float)
+        sliver = np.array([(1, 1), (3, 2), (1, 1)], dtype=float)  # 3 points
+        g = Geometry(POLYGON, rings=[shell, sliver])
+        layer = RaggedPolygonLayer({0: g})
+        assert layer.cross.tolist() == [True] * 4 + [False] * 2
+        rids, px, py = self._probes({0: g}, np.random.RandomState(1))
+        rings = _rings_of(g)
+        want = points_in_rings_class(px, py, rings)
+        np.testing.assert_array_equal(layer.classify_many(rids, px, py), want)
+        odd = np.zeros(len(px), dtype=bool)
+        for r in rings:
+            if len(r) >= 4:
+                odd ^= points_in_rings_class(px, py, [r]) == 2
+        on = points_in_rings_class(px, py, rings) == 1
+        # parity is the ray-cast's, before the boundary test overrides it
+        np.testing.assert_array_equal(layer.odd_crossings(rids, px, py)[~on], odd[~on])
+        assert set(want) == {0, 1, 2}
+        # on the sliver's edge, inside the shell: boundary, not interior
+        assert layer.classify_many([0], [2.0], [1.5]).tolist() == [1]
+
+    def test_lineal_and_puntal_owners_never_cross(self):
+        from shapely_spark.geo.kernels import (
+            BOUNDARY, EXTERIOR, RaggedPolygonLayer, _edges, _points_of, points_on_segments,
+        )
+
+        geoms = {0: linestring([(0, 0), (2, 1), (2, 3), (5, 3)]),
+                 1: multilinestring([[(0, 0), (0, 4)], [(-1, 2), (3, 2)]]),
+                 2: multipoint([(0, 0), (1.25, -0.5), (3, 3)]),
+                 3: point(1.5, 2.5)}
+        layer = RaggedPolygonLayer(geoms)
+        assert not layer.cross.any()
+        rids, px, py = self._probes(geoms, np.random.RandomState(2))
+        assert not layer.odd_crossings(rids, px, py).any()
+        want = np.zeros(len(rids), dtype=np.int8)
+        for rid, g in geoms.items():
+            m = rids == rid
+            segs = _edges(g) if rid < 2 else np.hstack([_points_of(g)] * 2)
+            want[m] = np.where(points_on_segments(px[m], py[m], segs), BOUNDARY, EXTERIOR)
+        np.testing.assert_array_equal(layer.classify_many(rids, px, py), want)
+        assert set(want) == {EXTERIOR, BOUNDARY}
+
+    def test_per_point_eps(self):
+        """eps given per point widens each point's own y-gate and
+        on-segment test, as points_on_segments(eps=) point by point."""
+        from shapely_spark.geo.kernels import (
+            BOUNDARY, RaggedPolygonLayer, _edges, _rings_of, points_in_rings_class,
+            points_on_segments,
+        )
+
+        geoms = {0: polygon([(0, 0), (4, 0), (4, 4), (0, 4)], [[(1, 1), (1, 3), (3, 3), (3, 1)]]),
+                 1: linestring([(0, 0), (2, 1), (2, 3), (5, 3)])}
+        layer = RaggedPolygonLayer(geoms)
+        rng = np.random.RandomState(3)
+        rids, px, py = self._probes(geoms, rng)
+        # nudge every probe off its spot by up to 1e-3 in y, so only a
+        # large enough eps puts it back on a segment
+        py = py + rng.uniform(-1e-3, 1e-3, len(py))
+        eps = rng.choice([0.0, 1e-4, 2e-3], len(py))
+        got = layer.classify_many(rids, px, py, eps)
+        want = np.zeros(len(rids), dtype=np.int8)
+        for i, (r, x, y, e) in enumerate(zip(rids, px, py, eps)):
+            g = geoms[r]
+            bb = layer.bbox[r]
+            if not (bb[0] - e <= x <= bb[2] + e and bb[1] - e <= y <= bb[3] + e):
+                continue
+            if r == 0:
+                want[i] = points_in_rings_class([x], [y], _rings_of(g))[0]
+            if points_on_segments([x], [y], _edges(g), eps=e)[0]:
+                want[i] = BOUNDARY
+        np.testing.assert_array_equal(got, want)
+        assert (got[eps == 2e-3] == BOUNDARY).sum() > (got[eps == 0.0] == BOUNDARY).sum()

@@ -88,11 +88,57 @@ def test_null_coords_never_join(spark, pages, regions):
     assert joined.where(F.col("lat").isNull()).count() == 0
 
 
+def _plan_tree(df) -> list[tuple[str, list[str]]]:
+    """(node name, child node names) of every operator of df's executed
+    plan, descending through AdaptiveSparkPlan."""
+    out = []
+
+    def walk(p):
+        if p.nodeName() == "AdaptiveSparkPlan":
+            return walk(p.executedPlan())
+        kids = [p.children().apply(i) for i in range(p.children().size())]
+        out.append((p.nodeName(), [k.nodeName() for k in kids]))
+        for k in kids:
+            walk(k)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def _assert_probe_plan(points, joined):
+    """The broadcast-mode plan: no exchange and no join node, and exactly
+    one ArrowEvalPython, reading the points' own plan."""
+    tree = _plan_tree(joined)
+    names = [n for n, _ in tree]
+    assert not [n for n in names if "Exchange" in n or "Join" in n or "Cartesian" in n], names
+    evals = [kids for n, kids in tree if n == "ArrowEvalPython"]
+    root = points._jdf.queryExecution().executedPlan().nodeName()
+    assert evals == [[root]], tree
+
+
+def _assert_shuffle_plan(spark, points, regions):
+    """broadcast=False plans a shuffle join of both sides on the cell.
+    Auto-broadcast is off for the check: at test size Spark would
+    broadcast the small side of the join itself."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        tree = _plan_tree(spatial_join(points, regions, res=RES, broadcast=False))
+    finally:
+        spark.conf.set(key, old)
+    joins = [kids for n, kids in tree if n in ("SortMergeJoin", "ShuffledHashJoin")]
+    assert len(joins) == 1, tree
+    assert sum(n == "Exchange" for n, _ in tree) >= 2, tree
+
+
 def test_broadcast_plan_is_broadcast(spark, pages, regions):
-    """The covers side must broadcast — no shuffle of the pages side."""
+    """broadcast=True probes the region index from ONE Arrow UDF over the
+    points: no exchange, no join node, so the pages side never shuffles
+    and no candidate row exists; broadcast=False keeps its shuffle join."""
     rdf = regions_df(spark, regions)
-    plan = spatial_join(pages, rdf, res=RES)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+    _assert_probe_plan(pages, spatial_join(pages, rdf, res=RES))
+    _assert_shuffle_plan(spark, pages, rdf)
 
 
 def test_shuffle_mode_same_result(spark, pages, regions):
@@ -139,11 +185,9 @@ def test_spatial_join_geom_matches_bruteforce(spark):
 
 
 def test_spatial_join_plan_is_broadcast_no_pages_shuffle(spark):
-    """Plan guard: the covers side must broadcast — the points side of the
-    join never shuffles (the engine's core scale property)."""
-    import io
-    from contextlib import redirect_stdout
-
+    """Plan guard on an uncached points frame, every predicate: the
+    points side of the join never shuffles (the engine's core scale
+    property) and never meets a join node."""
     import pandas as pd
 
     from shapely_spark.spark.join import spatial_join
@@ -153,10 +197,9 @@ def test_spatial_join_plan_is_broadcast_no_pages_shuffle(spark):
         pd.DataFrame({"url": ["a", "b"], "lat": [40.7, 51.5], "lon": [-74.0, -0.1]})
     )
     rdf = regions_df(spark, synth_regions(20, seed=42))
-    plan = spatial_join(pts, rdf)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    # no sort-merge/shuffled-hash join of the points side
-    assert "SortMergeJoin" not in plan
+    for predicate in ("intersects", "within", "covered_by", "touches"):
+        _assert_probe_plan(pts, spatial_join(pts, rdf, predicate))
+    _assert_shuffle_plan(spark, pts, rdf)
 
 
 def test_clustered_write_prunes_partitions(spark, tmp_path):
@@ -800,11 +843,12 @@ def test_ragged_layer_rejects_negative_owner_id():
         RaggedPolygonLayer({0: box(0, 0, 1, 1), -1: box(10, 10, 11, 11)})
 
 
-@pytest.mark.parametrize("ids", [[-1, 0, 5, 2 ** 40], [-7, -2]])
+@pytest.mark.parametrize("ids", [[-1, 0, 5, 2 ** 40], [-7, -2], [3, 3]])
 def test_spatial_join_region_ids_of_any_value(spark, ids):
     """Both spatial_join modes give the same (point, region) pairs
-    whatever the region ids: negative, zero, sparse or 2^40, and a layer
-    of negative ids only. Boundary points take the refine path."""
+    whatever the region ids: negative, zero, sparse or 2^40, a layer of
+    negative ids only, and a repeated id, which matches each of its
+    rows. Boundary points take the refine path."""
     import pandas as pd
 
     from shapely_spark.geo import box
@@ -816,6 +860,7 @@ def test_spatial_join_region_ids_of_any_value(spark, ids):
         "region_id": pd.Series(ids, dtype="int64"), "wkb": [to_wkb(b) for b in boxes]}))
     pts = [(0, 5.0, 5.0), (1, 5.0, 10.0), (2, 0.0, 10.0), (3, 3.0, 20.0)]
     pts += [(4 + k, 5.0, 10.0 * k + 5.0) for k in range(len(ids))]
+    pts.append((100, 5.0, 0.0))  # on the first box's edge only
     points = spark.createDataFrame(pd.DataFrame(pts, columns=["pid", "lat", "lon"]))
     want = {(p, r) for p, lat, lon in pts for r, b in zip(ids, boxes)
             if K.intersects(point(lon, lat), b)}
@@ -823,3 +868,163 @@ def test_spatial_join_region_ids_of_any_value(spark, ids):
     for broadcast in (True, False):
         got = spatial_join(points, regions, "intersects", broadcast=broadcast)
         assert {(r.pid, r.region_id) for r in got.collect()} == want, broadcast
+
+
+# --- the broadcast join's probe UDF against the shuffle join and scalar kernels
+
+_POINT_PREDICATES = ("intersects", "within", "touches", "covered_by")
+
+
+def _point_join(spark, regions, pts, predicate, broadcast):
+    """spatial_join pairs {(pid, region_id)} of pts [(pid, lat, lon)] and
+    regions [(region_id, geometry or None)]."""
+    import pandas as pd
+
+    from shapely_spark.geo.wkb import to_wkb
+
+    rdf = spark.createDataFrame(pd.DataFrame({
+        "region_id": pd.Series([r for r, _ in regions], dtype="int64"),
+        "wkb": [None if g is None else to_wkb(g) for _, g in regions]}),
+        "region_id long, wkb binary")
+    pdf = spark.createDataFrame(pts, "pid long, lat double, lon double")
+    got = spatial_join(pdf, rdf, predicate, broadcast=broadcast)
+    return {(r.pid, r.region_id) for r in got.collect()}
+
+
+def _scalar_pairs(regions, pts, predicate):
+    from shapely_spark.geo import kernels as K
+
+    fn = getattr(K, predicate)
+    return {(p, r) for p, lat, lon in pts
+            if lat is not None and lon is not None and not np.isnan(lat) and not np.isnan(lon)
+            for r, g in regions if g is not None and not g.is_empty and fn(point(lon, lat), g)}
+
+
+def _check_point_join(spark, regions, pts):
+    """Both modes equal the scalar kernel loop under every predicate;
+    returns the intersects pairs."""
+    for predicate in _POINT_PREDICATES:
+        want = _scalar_pairs(regions, pts, predicate)
+        for broadcast in (True, False):
+            assert _point_join(spark, regions, pts, predicate, broadcast) == want, (
+                predicate, broadcast)
+    return _scalar_pairs(regions, pts, "intersects")
+
+
+def test_probe_join_null_and_empty_layer(spark):
+    """A layer of NULL and EMPTY geometries has no cover: nothing joins."""
+    from shapely_spark.geo.geom import POLYGON, empty
+
+    regions = [(0, None), (1, empty(POLYGON)), (2, None)]
+    pts = [(0, 0.0, 0.0), (1, 40.7, -74.0)]
+    assert _check_point_join(spark, regions, pts) == set()
+
+
+def test_probe_join_full_cells_only(spark):
+    """A grid-aligned box at JOIN_RES: every probe lands in a full cell,
+    so the pairs come from the cover alone and no point is classified."""
+    from shapely_spark.geo import box
+    from shapely_spark.index.cells import cell_of, polygon_cover
+    from shapely_spark.spark.join import JOIN_RES
+
+    w, h = 360.0 / 2 ** JOIN_RES, 180.0 / 2 ** JOIN_RES
+    g = box(-180.0 + 1000 * w, -90.0 + 1500 * h, -180.0 + 1006 * w, -90.0 + 1505 * h)
+    # full cells touch no edge of the box: columns 1001-1004, rows 1501-1503
+    rng = np.random.RandomState(5)
+    lon = -180.0 + (1001.0 + 3.99 * rng.uniform(size=50)) * w
+    lat = -90.0 + (1501.0 + 2.99 * rng.uniform(size=50)) * h
+    cells, full = polygon_cover(g, JOIN_RES)
+    assert np.isin(cell_of(lat, lon, JOIN_RES), cells[full]).all()
+    pts = [(i, float(a), float(o)) for i, (a, o) in enumerate(zip(lat, lon))]
+    assert len(_check_point_join(spark, [(3, g)], pts)) == 50
+
+
+def test_probe_join_edge_cases(spark):
+    """Region ids -7 and 2^40, a holed polygon and a MultiPolygon beside a
+    NULL region; points with NULL and NaN coordinates, on a cell line, on
+    a vertex, in a hole, and left of every region edge in their cell
+    (once outside the region, once inside it)."""
+    from shapely_spark.geo.geom import multipolygon, polygon
+    from shapely_spark.spark.join import JOIN_RES
+
+    w, h = 360.0 / 2 ** JOIN_RES, 180.0 / 2 ** JOIN_RES
+    holed = polygon([(10, 10), (12, 10), (12, 12), (10, 12)],
+                    [[(10.5, 10.5), (10.5, 11.5), (11.5, 11.5), (11.5, 10.5)]])
+    # a cell line x0 = -180 + k·w runs through the two squares' shared gap
+    x0 = -180.0 + 1200 * w
+    multi = multipolygon([[(x0 - 0.5, 20), (x0, 20), (x0, 21), (x0 - 0.5, 21)],
+                          [(x0 + 0.1, 20), (x0 + 0.6, 20), (x0 + 0.6, 21), (x0 + 0.1, 21)]])
+    regions = [(-7, holed), (2 ** 40, multi), (5, None)]
+    # left of every edge in its cell: the left edge x = 10 of `holed`
+    # crosses the cell holding (lat 11, lon 10 - w / 4); the right edge
+    # x = 12 crosses the cell holding (lat 11, lon 12 - w / 4)
+    pts = [
+        (0, None, 11.0), (1, 11.0, None), (2, float("nan"), 11.0), (3, 11.0, float("nan")),
+        (4, 11.0, 10.0),            # on the left edge
+        (5, 10.0, 10.0),            # on a vertex
+        (6, 11.0, 11.0),            # in the hole
+        (7, 10.5, 10.5),            # on a hole vertex
+        (8, 10.25, 11.0),           # interior
+        (9, 11.0, 10.0 - w / 4),    # left of the cell's edges, outside
+        (10, 11.0, 12.0 - w / 4),   # left of the cell's edges, inside
+        (11, 20.5, x0),             # on the cell line, on the first square's edge
+        (12, 20.5, x0 + 0.05),      # on the cell line's cell, in the gap
+        (13, 20.5, x0 + 0.3),       # in the second square
+        (14, -90.0 + 1255 * h, x0 - 0.25),  # on a horizontal cell line, inside
+    ]
+    got = _check_point_join(spark, regions, pts)
+    assert got == {(4, -7), (5, -7), (7, -7), (8, -7), (10, -7),
+                   (11, 2 ** 40), (13, 2 ** 40), (14, 2 ** 40)}
+
+
+def test_probe_join_hot_cell_spans_several_chunks(spark):
+    """About 500 regions overlap inside one cell: every probe there has
+    500 partial candidates, so its expansion runs in several _chunks
+    slices. Both modes agree per region on (pairs, sum of point ids), and
+    equal points_in_rings_class per region and the scalar kernel on a
+    seeded sample of pairs."""
+    import pandas as pd
+
+    from shapely_spark.geo import kernels as K
+    from shapely_spark.geo.geom import regular_ngon
+    from shapely_spark.geo.kernels import _chunks, points_in_rings_class
+    from shapely_spark.geo.wkb import to_wkb
+    from shapely_spark.index.cells import cell_bounds, cell_of, polygon_cover_batch
+    from shapely_spark.spark.join import JOIN_RES
+
+    n_reg, n_pts = 500, 4500
+    x0, y0, x1, y1 = cell_bounds(cell_of(40.7, -74.0, JOIN_RES), JOIN_RES)
+    cx, cy = (x0 + x1) / 2, (y0 + y1) / 2
+    rng = np.random.RandomState(11)
+    geoms = [regular_ngon(cx + rng.uniform(-0.03, 0.03), cy + rng.uniform(-0.01, 0.01),
+                          rng.uniform(0.005, 0.03), 6, rng.uniform(0, 1)) for _ in range(n_reg)]
+    cells, full, _ = polygon_cover_batch(geoms, JOIN_RES)
+    hot = cell_of(cy, cx, JOIN_RES)
+    assert (cells == hot).sum() == n_reg and not full[cells == hot].any()
+    lon = rng.uniform(x0, x1, n_pts)
+    lat = rng.uniform(y0, y1, n_pts)
+    assert (cell_of(lat, lon, JOIN_RES) == hot).all()
+    assert len(list(_chunks(np.full(n_pts, n_reg)))) >= 3
+
+    rdf = spark.createDataFrame(pd.DataFrame({
+        "region_id": pd.Series(np.arange(n_reg) * 3 - 100, dtype="int64"),
+        "wkb": [to_wkb(g) for g in geoms]}))
+    pdf = spark.createDataFrame(pd.DataFrame({"pid": np.arange(n_pts), "lat": lat, "lon": lon}))
+
+    def per_region(broadcast):
+        j = spatial_join(pdf, rdf, "intersects", broadcast=broadcast)
+        return {r[0]: (r[1], r[2]) for r in
+                j.groupBy("region_id").agg(F.count("*"), F.sum("pid")).collect()}
+
+    got = per_region(True)
+    assert got == per_region(False)
+    want = {}
+    for k, g in enumerate(geoms):
+        inside = np.flatnonzero(points_in_rings_class(lon, lat, K._rings_of(g)) >= 1)
+        if len(inside):
+            want[k * 3 - 100] = (len(inside), int(inside.sum()))
+    assert got == want and sum(c for c, _ in got.values()) > n_pts
+    # the vectorized reference against the scalar kernel on a sample
+    for k, i in zip(rng.randint(0, n_reg, 300), rng.randint(0, n_pts, 300)):
+        assert K.intersects(point(lon[i], lat[i]), geoms[k]) == bool(
+            points_in_rings_class(lon[i:i + 1], lat[i:i + 1], K._rings_of(geoms[k]))[0])

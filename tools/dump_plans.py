@@ -1,10 +1,9 @@
 """Dump .explain('formatted') for the engine's headline plans → BENCH/PLANS.md.
 
 Evidence for the scale claims: column pruning + filter pushdown reach the
-parquet scan (PushedFilters / ReadSchema), the covers join is a
-BroadcastHashJoin (pages never shuffle), extraction stays inside
-WholeStageCodegen, and the refine is a single ArrowEvalPython over slim
-columns.
+parquet scan (PushedFilters / ReadSchema), the point join is one
+ArrowEvalPython over the pages' (lon, lat) with no join node or exchange
+(pages never shuffle), and extraction stays inside WholeStageCodegen.
 
 Usage: python tools/dump_plans.py
 """
@@ -58,9 +57,9 @@ def main():
         ("slim projection WITHOUT geo columns: note `html` is pruned from "
          "ReadSchema entirely (never decoded)",
          spark.read.parquet(path).select("url", "lang").where(F.col("lang") == "en")),
-        ("spatial join: BroadcastHashJoin on the cell cover (pages side "
-         "never shuffles); refine is one ArrowEvalPython over "
-         "(region_id, lon, lat) only",
+        ("spatial join: ONE ArrowEvalPython over (lon, lat) probes the "
+         "broadcast region index, then Generate explodes each page's "
+         "region ids — no join node, no exchange, no candidate rows",
          spatial_join(pages, rdf, predicate="intersects")),
         ("tile aggregation: partial+final HashAggregate (map-side combine) "
          "— the only shuffle is the final per-cell merge",
